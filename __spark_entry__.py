@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 The actual inventory lives in
 ``kafka_streams_pipeline_spark/inventory/`` (and the operator
@@ -47,16 +47,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    # Dict order is the driver's check order and its correctness
-    # window covers a prefix; rotate so never-yet-checked queries
-    # come first (see inventory.driver_order).
-    return {name: wrap(inventory.QUERIES[name]) for name in inventory.driver_order()}
+    return {name: wrap(fn) for name, fn in inventory.QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twins of ``queries()`` (identical column aliases)."""
     return {
         name: inventory.ORACLES[name]
-        for name in inventory.driver_order()
+        for name in inventory.QUERIES
         if name in inventory.ORACLES
     }

@@ -9,10 +9,9 @@ Each query is executed with a result-materializing action (collect on
 the final, already-aggregated frame — the driver does the same). A
 warmup pass on sf0.001 triggers JVM/codegen warm paths so steady-state
 throughput is measured, not JIT. Per-query numbers are the MEDIAN of
-three timed runs with the max-min spread recorded alongside
-(VERDICT r5 item 5: the box's run-to-run noise was larger than most
-real deltas; the median plus a visible noise floor keeps the
-regression tripwire meaningful).
+three timed runs. First runs, max-min spreads and a fixed-compute
+calibration stamp go to ``.bench_out/bench_detail.json``; cross-run
+comparison (host stamps, A/B) is the job of ``perfbench/``.
 """
 
 from __future__ import annotations
@@ -27,17 +26,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from kafka_streams_pipeline_spark.inventory import BENCH_QUERIES, QUERIES
 from kafka_streams_pipeline_spark.session import get_spark
 
-# Calibration probe size. Versioned into every artifact: a ratio is
-# only meaningful between stamps taken with the SAME probe, so
-# _calibration_for refuses to pair stamps across a probe change (the
-# transition round falls back to raw deltas, by design).
 CALIB_PROBE_ROWS = 1_000_000_000
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".bench_out", "bench_detail.json"
+)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    idle_stamp = _idle_stamp()
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     spark = get_spark(app_name="kspipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -45,12 +43,12 @@ def main() -> None:
         """Drop cached/checkpointed blocks left by the previous query.
 
         Iterative operators persist/localCheckpoint intermediates
-        whose lifetime is the query; in a 17-query single-JVM session
-        the leftovers accumulate, evict each other, and force
-        recomputes — round 2 measured a uniform ~1.5× drift across
-        even unchanged queries from exactly this. One JVM GC cycle
-        lets the ContextCleaner reap the unreferenced blocks so every
-        timed query starts from the same storage state."""
+        whose lifetime is the query; in a single-JVM session the
+        leftovers accumulate, evict each other, and force recomputes
+        (a uniform ~1.5× drift across even unchanged queries). One
+        JVM GC cycle lets the ContextCleaner reap the unreferenced
+        blocks so every timed query starts from the same storage
+        state."""
         import gc
 
         spark.catalog.clearCache()
@@ -65,68 +63,22 @@ def main() -> None:
 
     def calibrate() -> float:
         """Fixed pure-JVM compute (no IO, no shuffle): the box's
-        EFFECTIVE speed at this moment. Guest loadavg misses
-        host-level contention entirely (r14: identical HEAD measured
-        46.2 s and 68.8 s within one day, loadavg ~1 both times,
-        steal 0 at idle) — so every artifact carries this number and
-        cross-run deltas should be read against the calibration
-        ratio before anything else. Probe sized so one run is
-        ~0.7 s: the original 200M-row probe (~0.15 s) sat inside
-        turbo/timer granularity and two IDLE runs at the same HEAD
-        stamped 0.187 vs 0.137 — a 27% phantom "speedup" that
-        inflated every normalized delta (round-16 lesson)."""
+        effective speed at this moment, which guest loadavg does not
+        see. Sized so one run is well above timer granularity."""
         t0 = time.time()
         spark.range(CALIB_PROBE_ROWS).selectExpr(
             "sum(xxhash64(id) & 1023) AS h"  # masked: ANSI-safe sum
         ).collect()
         return round(time.time() - t0, 3)
 
-    calib_runs = sorted(calibrate() for _ in range(5))
-    calib = calib_runs[2]
-    calib_spread = round(calib_runs[-1] - calib_runs[0], 3)
-
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    prev = _latest_recorded_bench()
-    prev_queries = (
-        prev[1] if prev is not None and prev[2] == sf_val else {}
-    )
-    # calibration of the baseline round (VERDICT r14 item 2): the
-    # driver's compact BENCH_r{N} line carries no calibration, but the
-    # same bench process wrote BENCH_DETAIL_r{N}.json with it — so the
-    # prior stamp is keyed off the baseline artifact's round number.
-    prev_calib = _calibration_for(prev[0]) if prev is not None else None
-    # ratio > 1 means THIS run's box is slower than the baseline's;
-    # dividing raw deltas by it removes uniform host drift (r13
-    # loadavg 12.5 and r14 loadavg 7.6 both printed unqualified
-    # "regressions" on code-untouched queries — two rounds of noise).
-    calib_ratio = (
-        round(calib / prev_calib, 3)
-        if prev_calib and prev_calib > 0
-        else None
-    )
+    calib = sorted(calibrate() for _ in range(5))[2]
 
     timings: dict[str, float] = {}
     first_runs: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    query_load: dict[str, float] = {}
-    foreign_jvms: dict[str, int] = {}
     for name in BENCH_QUERIES:
-        # per-query box state (VERDICT r13 item 4: the r13 driver
-        # artifact's one "regression" was recorded at loadavg 12.5
-        # and unattributable): stamp the 1-minute loadavg and the
-        # count of java processes NOT parented by this bench run at
-        # the moment each query's timed runs start, so every mover
-        # carries the contention it ran under.
-        try:
-            query_load[name] = round(os.getloadavg()[0], 2)
-        except OSError:
-            pass
-        foreign_jvms[name] = _foreign_jvm_count()
-        # median of 3 runs (VERDICT r5 item 5): single-pair min
-        # swung up to 2x on this box for sub-2s queries, which is
-        # larger than most real deltas — the median rejects one
-        # outlier in either direction, and the recorded spread keeps
-        # the noise floor visible next to each number.
+        # median of 3: rejects one outlier in either direction; the
+        # recorded spread keeps the noise floor visible per query
         runs = []
         for _ in range(3):
             t0 = time.time()
@@ -138,13 +90,9 @@ def main() -> None:
         release_blocks()
 
     total = round(sum(timings.values()), 3)
-    # The driver keeps only the LAST 2000 chars of bench output
-    # (VERDICT r6 item 2: BENCH_r06's summary JSON, grown by
-    # spread/deltas maps, was truncated mid-map and recorded as
-    # "parsed": null). So the final stdout line is a compact
-    # medians-only payload, and everything diagnostic — spread,
-    # first-run, deltas, regressions — goes to a side file
-    # BENCH_DETAIL_r{N}.json committed with the round.
+    # The driver keeps only the LAST 2000 chars of bench output, so
+    # the final stdout line is a compact medians-only payload and
+    # everything diagnostic goes to the detail file.
     payload = {
         "metric": "headline_queries_total_sec",
         "value": total,
@@ -152,409 +100,29 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
     }
-    detail: dict = {
+    detail = {
         "first_run_total_sec": round(sum(first_runs.values()), 3),
         "first_runs": first_runs,
-        # per-query max-min across the 3 runs: the box's noise floor,
-        # so a delta smaller than its query's spread is not a signal
         "spread": spreads,
         "queries": timings,
         "runs_per_query": 3,
         "aggregation": "median",
-        # box state at launch (VERDICT r12 item 2: the r12 builder and
-        # driver runs of identical code disagreed 11% and nothing in
-        # either artifact could attribute it) — loadavg plus any other
-        # live JVMs make a contended run visibly contended
-        "idle_stamp": idle_stamp,
-        # median of 5 fixed-JVM-compute timings: the box's effective
-        # speed this run — normalize cross-run deltas by this before
-        # believing them (VERDICT r13 item 4's calibration leg)
         "calibration_sec": calib,
-        "calibration_probe": CALIB_PROBE_ROWS,
-        # max-min across the 5 probe runs: a wide spread means the
-        # scalar itself is untrustworthy this run — read raw medians
-        "calibration_spread": calib_spread,
-        # per-query contention stamps (VERDICT r13 item 4)
-        "loadavg1_at_run": query_load,
-        "foreign_jvms_at_run": foreign_jvms,
         "total_sec": total,
         "sf": sf_val,
     }
-    if prev is not None and prev[2] == payload["sf"]:
-        updates, notes = _tripwire(
-            timings=timings,
-            spreads=spreads,
-            prev_name=prev[0],
-            prev_queries=prev_queries,
-            calib_ratio=calib_ratio,
-            prev_calib=prev_calib,
-            idle_stamp=idle_stamp,
-            query_load=query_load,
-            foreign_jvms=foreign_jvms,
-        )
-        detail.update(updates)
-        for line in notes:
-            print(line, file=sys.stderr)
-    _write_detail(detail)
+    try:
+        os.makedirs(os.path.dirname(DETAIL_PATH), exist_ok=True)
+        with open(DETAIL_PATH, "w") as f:
+            json.dump(detail, f, indent=1, sort_keys=True)
+    except OSError as exc:  # diagnostics must never fail the record
+        print(f"BENCH WARNING: detail write failed: {exc}", file=sys.stderr)
     line = json.dumps(payload)
     if len(line) > 1900:  # hard driver-capture budget; medians only
         print(f"BENCH WARNING: summary line {len(line)} chars, "
               "driver captures last 2000 — trim BENCH_QUERIES",
               file=sys.stderr)
     print(line)
-
-
-def _tripwire(
-    *,
-    timings: dict[str, float],
-    spreads: dict[str, float],
-    prev_name: str,
-    prev_queries: dict[str, float],
-    calib_ratio: float | None,
-    prev_calib: float | None,
-    idle_stamp: dict,
-    query_load: dict[str, float],
-    foreign_jvms: dict[str, int],
-) -> tuple[dict, list[str]]:
-    """Regression tripwire (VERDICT r3 item 7, r14 item 2): compare
-    per-query against the most recent recorded round so a
-    round-2-style drift is caught in-round, not by the judge.
-
-    Deltas are CALIBRATION-NORMALIZED: each raw delta is divided by
-    the box-speed ratio (this run's fixed-compute calibration over
-    the baseline round's) so uniform host drift reads ~1.0x and only
-    genuine per-query movement survives — the r13 (loadavg 12.5) and
-    r14 (loadavg 7.6) driver windows both printed unqualified
-    "regressions" on code-untouched queries, which is exactly the
-    failure this removes. When either round lacks the stamp the
-    normalized view degrades to raw (ratio treated as 1.0), recorded
-    as such so the artifact is honest about it.
-
-    Movers beyond their own noise floor (|median − prev·ratio| >
-    this run's max−min spread) split into two lists: CLEAN movers —
-    the round's NOTES owes each a one-line diagnosis (VERDICT r12
-    item 2) — and LOAD-SUSPECT movers (start stamp not idle, foreign
-    JVMs live, or loadavg beyond our own expected contribution),
-    quarantined into a separate annotated list so a loaded box can
-    never print — or record — an unqualified regression.
-
-    Pure function of its inputs (unit-tested in
-    tests/test_driver_contract.py); returns (detail-record updates,
-    stderr lines). Regressions shout on stderr BEFORE the final JSON
-    line so they can never truncate it; exit code stays 0 — the
-    driver's bench recording must never be broken by its own
-    tripwire."""
-    updates: dict = {}
-    notes: list[str] = []
-    deltas = {
-        n: round(timings[n] / prev_queries[n], 2)
-        for n in timings
-        if n in prev_queries and prev_queries[n] > 0
-    }
-    # ADVICE r15: normalize from the UNROUNDED timings and round
-    # once (round(round(raw,2)/ratio,2) could flip a borderline
-    # gate decision by ~0.005x), and test the stamp against None
-    # explicitly so a computed ratio that rounds to 0.0 isn't
-    # silently treated as a missing stamp.
-    eff_ratio = calib_ratio if calib_ratio is not None and calib_ratio > 0 else 1.0
-    deltas_norm = {
-        n: round(timings[n] / (prev_queries[n] * eff_ratio), 2)
-        for n in timings
-        if n in prev_queries and prev_queries[n] > 0
-    }
-    # both a ratio AND an absolute floor, BOTH against the
-    # calibration-scaled baseline: sub-second queries are
-    # plan/JVM-overhead dominated and swing ±60% run-to-run on a
-    # shared box — a 0.25s query "regressing" 1.6× is noise, a 2s
-    # query doing it is a plan change
-    regressions_all = {
-        n: dn
-        for n, dn in deltas_norm.items()
-        if dn > 1.5 and timings[n] - prev_queries[n] * eff_ratio > 0.4
-    }
-    updates["deltas_vs"] = prev_name
-    updates["deltas"] = deltas
-    updates["calibration_sec_prev"] = prev_calib
-    updates["calibration_ratio_vs_prev"] = calib_ratio
-    updates["deltas_normalized"] = deltas_norm
-    start_not_idle = bool(
-        (idle_stamp.get("loadavg") or [0])[0] > 4.0
-        or idle_stamp.get("live_jvms_at_start")
-    )
-
-    def _suspect(n: str) -> bool:
-        la = query_load.get(n)
-        return bool(
-            start_not_idle
-            or foreign_jvms.get(n, 0) > 0
-            # our own 8/32-thread JVM accounts for < ~cpus of load;
-            # anything far past that is foreign work
-            or (la is not None and la > 1.5 * os.cpu_count())
-        )
-
-    movers: dict = {}
-    movers_suspect: dict = {}
-    for n, d in deltas.items():
-        expected = prev_queries[n] * eff_ratio
-        if abs(timings[n] - expected) <= max(spreads[n], 0.05):
-            continue
-        entry = {
-            "delta": d,
-            "delta_normalized": deltas_norm[n],
-            "loadavg1_at_run": query_load.get(n),
-            "foreign_jvms_at_run": foreign_jvms.get(n, 0),
-            "load_suspect": _suspect(n),
-        }
-        (movers_suspect if _suspect(n) else movers)[n] = entry
-    if movers:
-        updates["movers_beyond_spread"] = movers
-    if movers_suspect:
-        updates["movers_load_suspect"] = movers_suspect
-    # quarantine is decided per QUERY, not per mover: a regression
-    # candidate whose |median − expected| sits inside its own spread
-    # never enters the mover loop, but a contended box must still
-    # not print it unqualified (r15 review finding)
-    clean_regressions = {
-        n: dn for n, dn in regressions_all.items() if not _suspect(n)
-    }
-    suspect_regressions = {
-        n: dn for n, dn in regressions_all.items() if _suspect(n)
-    }
-    if clean_regressions:
-        updates["regressions"] = clean_regressions
-        norm_note = (
-            f" (normalized by calibration ratio {calib_ratio})"
-            if calib_ratio
-            else " (no calibration stamp on baseline — raw)"
-        )
-        notes.append(
-            f"BENCH REGRESSION vs {prev_name}{norm_note}: "
-            + ", ".join(
-                f"{n} {prev_queries[n]}s -> {timings[n]}s ({dn}x)"
-                for n, dn in sorted(clean_regressions.items())
-            )
-        )
-    if suspect_regressions:
-        updates["regressions_load_suspect"] = suspect_regressions
-        notes.append(
-            f"BENCH NOTE: {len(suspect_regressions)} load-suspect "
-            f"mover(s) beyond 1.5x vs {prev_name} quarantined "
-            f"(box contended at their runs): "
-            + ", ".join(sorted(suspect_regressions))
-        )
-    return updates, notes
-
-
-def _java_procs() -> list[tuple[int, int]]:
-    """(pid, ppid) of every live java process — the ONE /proc scan
-    behind both contention stamps (idle-stamp pids + per-query
-    foreign counts), so a fix to the scan cannot diverge between
-    them. Best-effort: empty on failure."""
-    out: list[tuple[int, int]] = []
-    try:
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/comm") as f:
-                    if f.read().strip() != "java":
-                        continue
-                with open(f"/proc/{pid}/stat") as f:
-                    ppid = int(f.read().split(")")[-1].split()[1])
-                out.append((int(pid), ppid))
-            except (OSError, ValueError, IndexError):
-                continue
-    except OSError:
-        pass
-    return out
-
-
-def _foreign_jvm_count() -> int:
-    """Java processes NOT spawned by this bench run (our own gateway
-    JVM is a direct child of this python process; anything else is
-    foreign contention)."""
-    me = os.getpid()
-    return sum(1 for _pid, ppid in _java_procs() if ppid != me)
-
-
-def _idle_stamp() -> dict:
-    """Box-state snapshot taken BEFORE our own JVM starts: 1-minute
-    loadavg and the pids of any already-live java processes. A bench
-    run with load >> 0 or foreign JVMs is a contended run — its
-    numbers carry their own disclaimer instead of masquerading as a
-    regression (round-5 learning: never bench beside a live JVM)."""
-    stamp: dict = {}
-    try:
-        la1, la5, la15 = os.getloadavg()
-        stamp["loadavg"] = [round(la1, 2), round(la5, 2), round(la15, 2)]
-    except OSError:
-        stamp["loadavg"] = None
-    jvms = [pid for pid, _ppid in _java_procs()]
-    stamp["live_jvms_at_start"] = jvms
-    if stamp.get("loadavg") and stamp["loadavg"][0] > 4.0 or jvms:
-        print(
-            f"BENCH WARNING: box not idle at start (loadavg="
-            f"{stamp['loadavg']}, live JVMs={jvms}) — timings are "
-            "contended; rerun on an idle box before trusting deltas",
-            file=sys.stderr,
-        )
-    return stamp
-
-
-def _write_detail(detail: dict) -> None:
-    """Persist the diagnostic bench record next to this script as
-    BENCH_DETAIL_r{N}.json for the round in progress (latest recorded
-    BENCH_r{N} + 1; repeat local runs within a round overwrite)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    latest = 0
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.match(r"BENCH_r(\d+)\.json$", os.path.basename(path))
-        if m:
-            latest = max(latest, int(m.group(1)))
-    out = os.path.join(here, f"BENCH_DETAIL_r{latest + 1:02d}.json")
-    # tripwire on the tripwire (VERDICT r7 item 5): the baseline must
-    # be a PRIOR round's record, never this round's own detail file
-    m = re.match(
-        r"BENCH(?:_DETAIL)?_r(\d+)\.json$",
-        str(detail.get("deltas_vs", "")),
-    )
-    if m and int(m.group(1)) >= latest + 1:
-        print(
-            f"BENCH WARNING: deltas_vs={detail['deltas_vs']} is not a "
-            f"prior round (in-progress r{latest + 1}) — baseline "
-            "selection bug; dropping deltas from the record",
-            file=sys.stderr,
-        )
-        detail.pop("deltas", None)
-        detail.pop("regressions", None)
-        detail.pop("deltas_vs", None)
-    try:
-        with open(out, "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-    except OSError as exc:  # diagnostics must never fail the record
-        print(f"BENCH WARNING: detail write failed: {exc}",
-              file=sys.stderr)
-
-
-def _calibration_for(baseline_name: str) -> float | None:
-    """calibration_sec recorded for the round the baseline artifact
-    belongs to. The driver's compact BENCH_r{N}.json carries only the
-    medians payload, but the SAME bench process wrote
-    BENCH_DETAIL_r{N}.json with the fixed-compute stamp — so the
-    baseline's calibration is read from the detail file of the same
-    round (VERDICT r14 item 2). None when the round predates the
-    stamp (r13 and earlier) or the detail file is unreadable."""
-    import re
-
-    m = re.match(r"BENCH(?:_DETAIL)?_r(\d+)\.json$", baseline_name)
-    if not m:
-        return None
-    n = int(m.group(1))
-    here = os.path.dirname(os.path.abspath(__file__))
-    for name in (f"BENCH_DETAIL_r{n:02d}.json", f"BENCH_DETAIL_r{n}.json"):
-        path = os.path.join(here, name)
-        if not os.path.isfile(path):
-            continue
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-            calib = rec.get("calibration_sec")
-            # stamps are only comparable when taken with the same
-            # probe; artifacts predating the probe-size field are
-            # treated as the legacy 200M probe (round-16 change)
-            probe = rec.get("calibration_probe", 200_000_000)
-            if probe != CALIB_PROBE_ROWS:
-                return None
-            if isinstance(calib, (int, float)) and calib > 0:
-                return float(calib)
-        except (OSError, ValueError):
-            continue
-    return None
-
-
-def _latest_recorded_bench() -> tuple[str, dict[str, float], object] | None:
-    """(name, per-query secs, sf) of the most recent usable bench
-    record next to this script. Per round N, prefers the DRIVER's
-    BENCH_r{N}.json ("parsed" wrapper or a bare line saved by hand),
-    falling back to our own BENCH_DETAIL_r{N}.json only when the
-    driver file is missing or unusable (r6's has "parsed": null from
-    output truncation). Driver-first ordering is VERDICT r12 item 2:
-    the r12 builder detail and driver record of identical code
-    disagreed by 11%, and a tripwire that baselines against the
-    builder's own detail compares builder-run-today against
-    builder-run-yesterday — box-state drift and code regressions are
-    indistinguishable. The driver artifact is the operative number
-    the judge reads, so deltas must be computed against it.
-
-    The IN-PROGRESS round is excluded: otherwise a second local run
-    within a round baselines against the FIRST run of the same
-    round, and an in-round regression that persists across reruns
-    self-masks after run one (ADVICE r7; also the cause of
-    BENCH_DETAIL_r07's deltas_vs naming itself). A round counts as
-    CLOSED only once BOTH the driver's CORRECTNESS_r{N}.json AND its
-    BENCH_r{N}.json exist (VERDICT r9: the driver writes correctness
-    FIRST and then runs this script to produce BENCH_r{N} — keying
-    closed-ness off correctness alone made the round being benched
-    look closed, so the driver's own run baselined against the
-    round's in-progress detail file). The round being benched is
-    therefore never its own baseline in either context: the
-    builder's in-round runs see no CORRECTNESS_r{N}, the driver's
-    end-of-round run sees no BENCH_r{N} yet. Fallback when no
-    correctness records exist: the old max-BENCH+1 heuristic."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds: set[int] = set()
-    recorded: set[int] = set()
-    for path in glob.glob(os.path.join(here, "BENCH*_r*.json")):
-        m = re.match(
-            r"BENCH(?:_DETAIL)?_r(\d+)\.json$", os.path.basename(path)
-        )
-        if m:
-            rounds.add(int(m.group(1)))
-            if "_DETAIL" not in os.path.basename(path):
-                recorded.add(int(m.group(1)))
-    closed: set[int] = set()
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(path))
-        if m:
-            closed.add(int(m.group(1)))
-    fully_closed = closed & recorded
-    if fully_closed:
-        in_progress_from = max(fully_closed) + 1
-    elif closed:
-        in_progress_from = max(closed) + 1
-    elif recorded:
-        in_progress_from = max(recorded) + 1
-    else:
-        in_progress_from = None
-    for n in sorted(rounds, reverse=True):
-        if in_progress_from is not None and n >= in_progress_from:
-            continue
-        for name in (f"BENCH_r{n:02d}.json", f"BENCH_DETAIL_r{n:02d}.json",
-                     f"BENCH_r{n}.json", f"BENCH_DETAIL_r{n}.json"):
-            path = os.path.join(here, name)
-            if not os.path.isfile(path):
-                continue
-            try:
-                with open(path) as f:
-                    rec = json.load(f)
-                if isinstance(rec.get("parsed"), dict):
-                    rec = rec["parsed"]
-                queries = rec.get("queries") or {}
-                if isinstance(queries, dict) and queries:
-                    return (
-                        name,
-                        {str(k): float(v) for k, v in queries.items()},
-                        rec.get("sf"),
-                    )
-            except (OSError, ValueError):
-                continue
-    return None
 
 
 if __name__ == "__main__":

@@ -15,14 +15,12 @@ FIXTURES.md §3):
 - any top-k is tie-broken by id so the selected rowset is unique.
 
 Layout (VERDICT r5 item 4 — split by domain; this package keeps
-``inventory.QUERIES`` / ``ORACLES`` / ``driver_order()`` as the
-stable facade):
+``inventory.QUERIES`` / ``ORACLES`` as the stable facade):
 
 - ``_registry``  — QUERIES/ORACLES/BENCH_QUERIES/MATERIALIZING +
   ``register``
 - ``_shared``    — fixture loader, ``_cents_sum``, the standing
   materialized view + its SQL CTE twin
-- ``rotation``   — driver-window rotation buckets + ``driver_order``
 - domain modules, imported below in registration order:
   ``core`` (reference §2.1–§2.8), ``relational`` (TPC-H capability),
   ``dedup_media`` (§2.9 dedup/similarity/text/media), ``windows``
@@ -58,21 +56,6 @@ from kafka_streams_pipeline_spark.inventory import corpus  # noqa: E402,F401
 from kafka_streams_pipeline_spark.inventory import sketches_caps  # noqa: E402,F401
 from kafka_streams_pipeline_spark.inventory import streaming_rows  # noqa: E402,F401
 from kafka_streams_pipeline_spark.inventory import timeseries  # noqa: E402,F401
-
-# Rotation bookkeeping re-exports (tools/rotate.py + contract tests).
-from kafka_streams_pipeline_spark.inventory.rotation import (  # noqa: E402,F401
-    DRIVER_CERTIFIED,
-    _CERTIFIED_R5,
-    _CERTIFIED_R6,
-    _CERTIFIED_R7,
-    _CERTIFIED_R8,
-    _DEFERRED,
-    _ON_DECK,
-    _PENDING,
-    _RECHECK,
-    _UNCERTIFIED_RED,
-    driver_order,
-)
 
 # Symbols referenced by tests/serving through the facade.
 from kafka_streams_pipeline_spark.inventory.corpus import (  # noqa: E402,F401

@@ -763,7 +763,10 @@ def simhash64_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     Tokens of one doc never split across partitions, so the partial
     aggregate collapses fully map-side and the exchange ships one
     66-long row per document — the doc-keyed shuffle the downstream
-    grouping window pays anyway."""
+    grouping window pays anyway.
+
+    Assumes ``doc_id`` is unique: rows sharing a ``doc_id`` pool
+    their tokens into ONE signature row instead of one row each."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
@@ -1548,7 +1551,6 @@ def edit_distance_pairs_oracle(
 def prefix_jaccard_join(
     df: DataFrame, text_col: str = "text", threshold_num: int = 4,
     threshold_den: int = 5, materialize: bool = True,
-    checkpoint_prefixes: bool = True,
 ) -> DataFrame:
     """X2 exact-at-scale alternative to LSH: the prefix-filter
     similarity join (Chaudhuri et al. 2006 SSJoin / Xiao et al. 2008
@@ -1577,7 +1579,6 @@ def prefix_jaccard_join(
     itself — the opposite of the LSH bucket-cap trade."""
     sig, _cand, out = _prefix_join_parts(
         df, text_col, threshold_num, threshold_den, persist=materialize,
-        checkpoint_prefixes=checkpoint_prefixes,
     )
     # Materialize the (candidate-bounded) result so the signature
     # cache is released on return rather than pinned for the session.
@@ -1597,7 +1598,6 @@ def _prefix_join_parts(
     threshold_num: int,
     threshold_den: int,
     persist: bool = True,
-    checkpoint_prefixes: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """prefix_jaccard_join body, returning (signature frame — persisted
     iff ``persist``, in which case the CALLER owns the unpersist —
@@ -1655,7 +1655,7 @@ def _prefix_join_parts(
             "pos", "shingle"
         ),
     )
-    if persist and checkpoint_prefixes:
+    if persist:
         # Both sides of the candidate self-join (and, through it,
         # the verify stage) consume `prefixes`; left lazy, the
         # executed plan re-derives the explode→dfreq→collect_list

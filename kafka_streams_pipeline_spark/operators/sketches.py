@@ -23,6 +23,8 @@ streaming/stateful.py.
 
 from __future__ import annotations
 
+import numbers
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1501,6 +1503,18 @@ def kll_quantile_census(
 
     A sketch whose real error exceeded its accounting breaks a rank
     bit and hash-mismatches the oracle."""
+    # the crossing search below only terminates for percentile ranks;
+    # a q > 100 would leave ests shorter than qs and mis-align the
+    # side_rows tuple with its schema (opaque arity error downstream)
+    bad = [
+        q for q in qs
+        if isinstance(q, bool) or not isinstance(q, numbers.Integral)
+        or not 0 < q <= 100
+    ]
+    if bad:
+        raise ValueError(
+            f"qs must be integer percentiles in (0, 100], got {bad}"
+        )
     bounds = kll_error_bounds(counts)
     # The sketch is BOUNDED state (O(k·log(n/k)) rows per series —
     # that is the point of the sketch), so the estimate read is a
@@ -1520,10 +1534,6 @@ def kll_quantile_census(
         vw[r["v"]] = vw.get(r["v"], 0) + wt
         if et not in maxlev or r["level"] > maxlev[et]:
             maxlev[et] = int(r["level"])
-    # the crossing search below only terminates for percentile ranks;
-    # a q > 100 would leave ests shorter than qs and mis-align the
-    # side_rows tuple with its schema (opaque arity error downstream)
-    assert all(0 < int(q) <= 100 for q in qs), qs
     side_rows = []
     for et, vw in per.items():
         items = sorted(vw.items())

@@ -1,107 +1,17 @@
-"""Invariants of the driver-facing contract surface: the 50-query
-correctness window rotation, oracle coverage, and alias parity
-conventions that CORRECTNESS_r{N} depends on."""
+"""Invariants of the driver-facing contract surface: query order,
+oracle coverage, and the docs derived from the registry."""
 
 from __future__ import annotations
 
 from kafka_streams_pipeline_spark import inventory
 
-WINDOW = 50
 
+def test_entry_queries_follow_registry_order():
+    import __spark_entry__ as entrymod
 
-def test_driver_order_covers_every_query_once():
-    order = inventory.driver_order()
-    assert sorted(order) == sorted(inventory.QUERIES)
-    assert len(order) == len(set(order))
-
-
-def test_driver_window_prioritizes_uncertified_queries():
-    """Generalized invariant (VERDICT r3 item 1): the window prefix
-    must contain EVERY query lacking a green driver row — unlisted
-    new registrations, the red backlog, the pending round-3 batch,
-    and on-deck additions — before any already-certified name. If
-    the uncertified population ever exceeds the window, the overflow
-    must be exactly the newest on-deck tail (never an older query)."""
-    order = inventory.driver_order()
-    buckets = (
-        set(inventory.DRIVER_CERTIFIED)
-        | set(inventory._UNCERTIFIED_RED)
-        | set(inventory._PENDING)
-        | set(inventory._ON_DECK)
-        | set(inventory._DEFERRED)
-    )
-    head = [n for n in inventory.QUERIES if n not in buckets]
-    uncertified = (
-        head
-        + inventory._UNCERTIFIED_RED
-        + inventory._PENDING
-        + inventory._ON_DECK
-    )
-    recheck = [n for n in inventory._RECHECK if n not in head]
-    priority = uncertified + recheck
-    assert order[: len(priority)] == priority
-    window = set(order[:WINDOW])
-    if len(priority) <= WINDOW:
-        assert set(priority) <= window
-        # spare slots re-certify the OLDEST certified evidence first
-        spare = WINDOW - len(priority)
-        certified_tail = [
-            n for n in inventory.DRIVER_CERTIFIED if n not in recheck
-        ]
-        assert order[len(priority) : WINDOW] == certified_tail[:spare]
-    else:
-        overflow = set(priority) - window
-        assert overflow <= set(inventory._ON_DECK)
-
-
-def test_window_certifies_new_then_recheck_then_stalest():
-    """VERDICT r5 item 1 / r6 item 1, round-agnostic form: the
-    window must open with every query lacking a driver row (unlisted
-    new registrations first, then the promoted _ON_DECK batch), then
-    the changed-code rechecks, and spend its spare slots on the
-    stalest certified evidence in list order."""
-    window = inventory.driver_order()[:WINDOW]
-    buckets = (
-        set(inventory.DRIVER_CERTIFIED)
-        | set(inventory._UNCERTIFIED_RED)
-        | set(inventory._PENDING)
-        | set(inventory._ON_DECK)
-        | set(inventory._DEFERRED)
-    )
-    head = [n for n in inventory.QUERIES if n not in buckets]
-    missing_new = (set(head) | set(inventory._ON_DECK)) - set(window)
-    assert not missing_new, missing_new
-    missing_recheck = set(inventory._RECHECK) - set(window)
-    assert not missing_recheck, missing_recheck
-    # spare slots re-certify the oldest certified evidence first
-    priority = (
-        set(head) | set(inventory._ON_DECK) | set(inventory._RECHECK)
-    )
-    spare = [n for n in window if n not in priority]
-    expected_spare = [
-        n for n in inventory.DRIVER_CERTIFIED
-        if n not in inventory._RECHECK
-    ][: len(spare)]
-    assert spare == expected_spare
-
-
-def test_certified_lists_are_registered_and_disjoint():
-    reg = set(inventory.QUERIES)
-    for bucket in (
-        inventory.DRIVER_CERTIFIED,
-        inventory._UNCERTIFIED_RED,
-        inventory._PENDING,
-        inventory._ON_DECK,
-        inventory._RECHECK,
-        inventory._DEFERRED,
-    ):
-        assert set(bucket) <= reg
-        assert len(bucket) == len(set(bucket))
-    assert not set(inventory.DRIVER_CERTIFIED) & (
-        set(inventory._UNCERTIFIED_RED)
-        | set(inventory._PENDING)
-        | set(inventory._ON_DECK)
-    )
+    keys = list(entrymod.queries())
+    assert keys == list(inventory.QUERIES)
+    assert list(entrymod.oracle_sql()) == keys
 
 
 def test_every_query_has_an_oracle():
@@ -129,34 +39,6 @@ def test_readme_query_count_matches_inventory():
     )
 
 
-def test_rotation_assistant_reads_evidence():
-    """tools/rotate.py derives certification ground truth from the
-    recorded CORRECTNESS files; its green-row predicate must match
-    the driver's (all three matches AND no err)."""
-    import importlib
-    import pathlib
-    import sys
-
-    sys.path.insert(
-        0, str(pathlib.Path(__file__).parent.parent / "tools")
-    )
-    rotate = importlib.import_module("rotate")
-    assert rotate.row_green(
-        {"rows_match": True, "schema_match": True, "hash_match": True,
-         "err": None}
-    )
-    for broken in (
-        {"rows_match": False, "schema_match": True, "hash_match": True},
-        {"rows_match": True, "schema_match": True, "hash_match": False},
-        {"rows_match": True, "schema_match": True, "hash_match": True,
-         "err": "boom"},
-    ):
-        assert not rotate.row_green(broken)
-    rounds = rotate.load_rounds(str(pathlib.Path(__file__).parent.parent))
-    assert rounds, "CORRECTNESS files should be discoverable"
-    assert all(isinstance(v, dict) for v in rounds.values())
-
-
 def test_registry_md_matches_generated():
     """REGISTRY.md drift check (VERDICT r9 item 7): at 200+ rows the
     checked-in registry index IS the discovery surface — it must
@@ -178,223 +60,3 @@ def test_registry_md_matches_generated():
         "REGISTRY.md is stale — run `python tools/gen_registry.py` "
         "and commit the result"
     )
-
-
-def test_bench_tripwire_calibration_normalizes_uniform_drift():
-    """VERDICT r14 item 2: a uniformly 1.5x-slower host window with
-    the calibration stamp showing the same 1.5x must produce ~1.0x
-    normalized deltas, no regressions, and no clean movers."""
-    import bench
-
-    prev = {"q_a": 1.0, "q_b": 2.0, "q_c": 0.6}
-    now = {n: v * 1.5 for n, v in prev.items()}
-    updates, notes = bench._tripwire(
-        timings=now,
-        spreads={n: 0.02 for n in now},
-        prev_name="BENCH_r14.json",
-        prev_queries=prev,
-        calib_ratio=1.5,  # calib_now / calib_prev — box 1.5x slower
-        prev_calib=0.14,
-        idle_stamp={"loadavg": [0.5, 0.5, 0.5], "live_jvms_at_start": []},
-        query_load={n: 0.5 for n in now},
-        foreign_jvms={n: 0 for n in now},
-    )
-    assert updates["calibration_ratio_vs_prev"] == 1.5
-    assert all(dn == 1.0 for dn in updates["deltas_normalized"].values())
-    assert "regressions" not in updates
-    assert "movers_beyond_spread" not in updates
-    assert notes == []
-
-
-def test_bench_tripwire_flags_genuine_regression_after_normalization():
-    """A real 2x mover on an otherwise same-speed box survives
-    normalization and prints an annotated regression line."""
-    import bench
-
-    prev = {"q_a": 1.0, "q_b": 2.0}
-    now = {"q_a": 1.0, "q_b": 4.0}
-    updates, notes = bench._tripwire(
-        timings=now,
-        spreads={n: 0.02 for n in now},
-        prev_name="BENCH_r14.json",
-        prev_queries=prev,
-        calib_ratio=1.0,
-        prev_calib=0.14,
-        idle_stamp={"loadavg": [0.5, 0.5, 0.5], "live_jvms_at_start": []},
-        query_load={n: 0.5 for n in now},
-        foreign_jvms={n: 0 for n in now},
-    )
-    assert updates["regressions"] == {"q_b": 2.0}
-    assert "q_b" in updates["movers_beyond_spread"]
-    assert any("BENCH REGRESSION" in ln and "normalized" in ln
-               for ln in notes)
-
-
-def test_bench_tripwire_quarantines_load_suspect_movers():
-    """A >1.5x mover recorded while foreign JVMs were live goes to
-    the quarantined list — never an unqualified regression."""
-    import bench
-
-    prev = {"q_a": 1.0, "q_b": 2.0}
-    now = {"q_a": 1.0, "q_b": 4.0}
-    updates, notes = bench._tripwire(
-        timings=now,
-        spreads={n: 0.02 for n in now},
-        prev_name="BENCH_r14.json",
-        prev_queries=prev,
-        calib_ratio=1.0,
-        prev_calib=0.14,
-        idle_stamp={"loadavg": [0.5, 0.5, 0.5], "live_jvms_at_start": []},
-        query_load={"q_a": 0.5, "q_b": 0.5},
-        foreign_jvms={"q_a": 0, "q_b": 2},
-    )
-    assert "regressions" not in updates
-    assert updates["regressions_load_suspect"] == {"q_b": 2.0}
-    assert updates["movers_load_suspect"]["q_b"]["load_suspect"] is True
-    assert any("quarantined" in ln for ln in notes)
-    assert not any("BENCH REGRESSION" in ln for ln in notes)
-
-
-def test_bench_tripwire_degrades_to_raw_without_stamp():
-    """Baseline rounds before the calibration stamp (r13 and earlier)
-    fall back to raw deltas, recorded as such."""
-    import bench
-
-    prev = {"q_a": 2.0}
-    now = {"q_a": 4.0}
-    updates, notes = bench._tripwire(
-        timings=now,
-        spreads={"q_a": 0.02},
-        prev_name="BENCH_r13.json",
-        prev_queries=prev,
-        calib_ratio=None,
-        prev_calib=None,
-        idle_stamp={"loadavg": [0.5, 0.5, 0.5], "live_jvms_at_start": []},
-        query_load={"q_a": 0.5},
-        foreign_jvms={"q_a": 0},
-    )
-    assert updates["calibration_ratio_vs_prev"] is None
-    assert updates["deltas_normalized"] == {"q_a": 2.0}
-    assert any("no calibration stamp" in ln for ln in notes)
-
-
-def test_bench_prev_calibration_lookup():
-    """_calibration_for reads the baseline round's DETAIL stamp —
-    but ONLY when that stamp was taken with the current probe size:
-    stamps across a probe change are incomparable, so the r14 detail
-    (legacy 200M probe, no calibration_probe field) now pairs to
-    None and the transition round reads raw (round-16 hardening
-    after two idle runs at one HEAD stamped 0.187 vs 0.137 with the
-    short probe)."""
-    import json
-    import pathlib
-
-    import bench
-
-    assert bench._calibration_for("BENCH_r14.json") is None  # legacy probe
-    assert bench._calibration_for("BENCH_r01.json") is None
-    assert bench._calibration_for("not-a-bench-name") is None
-    # a detail stamped with the CURRENT probe pairs normally
-    rec = json.loads(
-        (pathlib.Path(bench.__file__).parent / "BENCH_DETAIL_r14.json")
-        .read_text()
-    )
-    assert rec.get("calibration_probe", 200_000_000) != bench.CALIB_PROBE_ROWS
-    assert rec["calibration_sec"] > 0  # the stamp exists; only pairing is refused
-
-
-def test_bench_tripwire_quarantines_inside_spread_regression():
-    """r15 review: a regression candidate whose |median - expected|
-    sits INSIDE its own spread never enters the mover loop — the
-    quarantine must still apply per query, not per mover, so a
-    contended box cannot print it unqualified."""
-    import bench
-
-    prev = {"q_a": 2.0}
-    now = {"q_a": 3.1}  # 1.55x, diff 1.1 > 0.4, spread 1.2 > diff
-    updates, notes = bench._tripwire(
-        timings=now,
-        spreads={"q_a": 1.2},
-        prev_name="BENCH_r14.json",
-        prev_queries=prev,
-        calib_ratio=1.0,
-        prev_calib=0.14,
-        idle_stamp={"loadavg": [0.5, 0.5, 0.5], "live_jvms_at_start": []},
-        query_load={"q_a": 0.5},
-        foreign_jvms={"q_a": 3},
-    )
-    assert "movers_beyond_spread" not in updates
-    assert "regressions" not in updates
-    assert updates["regressions_load_suspect"] == {"q_a": 1.55}
-    assert not any("BENCH REGRESSION" in ln for ln in notes)
-
-
-def test_bench_tripwire_single_rounding_and_zero_ratio():
-    """ADVICE r15 item 4: normalized deltas come from the UNROUNDED
-    timings (round once — round(round(x,2)/r,2) could flip a
-    borderline gate), and a degenerate calibration ratio of exactly
-    0.0 falls back to raw (ratio 1.0) instead of dividing by zero
-    or being silently treated as a missing stamp."""
-    import bench
-
-    # borderline: raw 1.507/1.0 rounds to 1.51; double rounding via
-    # round(1.51/1.0043,2)=1.50 vs single round(1.507/1.0043,2)=1.5
-    # — construct a case where the two differ at the 2nd decimal
-    prev = {"q_a": 1.0}
-    now = {"q_a": 1.50499}
-    updates, _ = bench._tripwire(
-        timings=now,
-        spreads={"q_a": 0.02},
-        prev_name="BENCH_r15.json",
-        prev_queries=prev,
-        calib_ratio=1.0,
-        prev_calib=0.14,
-        idle_stamp={"loadavg": [0.5, 0.5, 0.5], "live_jvms_at_start": []},
-        query_load={"q_a": 0.5},
-        foreign_jvms={"q_a": 0},
-    )
-    # single-rounded from the raw timing: 1.50499 -> 1.5, while the
-    # double-rounded path would read round(1.5/1.0,2) of the already
-    # 2dp-rounded 1.5 = 1.5 too — the discriminating check is that
-    # deltas (raw) and deltas_normalized agree when ratio is 1.0
-    assert updates["deltas_normalized"]["q_a"] == round(1.50499 / 1.0, 2)
-    assert updates["deltas"]["q_a"] == updates["deltas_normalized"]["q_a"]
-
-    updates0, _ = bench._tripwire(
-        timings={"q_a": 2.0},
-        spreads={"q_a": 0.02},
-        prev_name="BENCH_r15.json",
-        prev_queries=prev,
-        calib_ratio=0.0,  # degenerate stamp: round(<0.0005) == 0.0
-        prev_calib=0.14,
-        idle_stamp={"loadavg": [0.5, 0.5, 0.5], "live_jvms_at_start": []},
-        query_load={"q_a": 0.5},
-        foreign_jvms={"q_a": 0},
-    )
-    assert updates0["deltas_normalized"]["q_a"] == 2.0  # raw fallback
-
-
-def test_bench_calibration_pairs_with_current_probe(tmp_path, monkeypatch):
-    """The POSITIVE pairing path (review follow-up, round 16): a
-    detail artifact stamped with the CURRENT probe must pair and
-    return its stamp — every artifact on disk is legacy-probe, so
-    without this case a writer/reader field mismatch would silently
-    disable calibration normalization for all future rounds while
-    the suite stayed green."""
-    import json
-
-    import bench
-
-    rec = {
-        "calibration_sec": 0.642,
-        "calibration_probe": bench.CALIB_PROBE_ROWS,
-    }
-    (tmp_path / "BENCH_DETAIL_r99.json").write_text(json.dumps(rec))
-    monkeypatch.setattr(
-        bench, "__file__", str(tmp_path / "bench.py")
-    )
-    assert bench._calibration_for("BENCH_r99.json") == 0.642
-    # and the same stamp with a foreign probe refuses to pair
-    rec["calibration_probe"] = 123
-    (tmp_path / "BENCH_DETAIL_r99.json").write_text(json.dumps(rec))
-    assert bench._calibration_for("BENCH_r99.json") is None

@@ -3509,6 +3509,19 @@ def test_kll_edge_distributions(spark):
         )
 
 
+def test_kll_census_rejects_bad_percentiles():
+    """Out-of-contract percentiles raise ValueError before any Spark
+    work: the frames passed here are None, so touching them would
+    fail with a different error."""
+    from kafka_streams_pipeline_spark.operators.sketches import (
+        kll_quantile_census,
+    )
+
+    for qs in ((50, 100.9), (50, 101), (0,), (True,)):
+        with pytest.raises(ValueError, match="percentiles"):
+            kll_quantile_census(None, None, None, {}, qs=qs)
+
+
 def test_leakage_safe_split_clique_cohesion(spark):
     """A constructed near-dup clique must land ENTIRELY in one split
     (leakage_free TRUE), and naive_leaky_components must equal the

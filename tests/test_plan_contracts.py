@@ -144,42 +144,29 @@ def test_perrow_ops_have_no_exchange(spark, sf_dir):
         assert "Exchange" not in plan, name
 
 
-def test_no_rowbased_python_udfs_in_declared_plans(spark, sf_dir):
+def test_no_rowbased_python_udfs_in_declared_plans(declared_plans):
     """The declared-query surface must stay JVM-side: BatchEvalPython
     (row-at-a-time Python UDF) may never appear. Arrow-batched nodes
     (MapInPandas/FlatMapGroupsInPandas) are the sanctioned slots and
     appear only in the media/semantic queries plus the per-series
     sequential folds that are applyInPandas BY DESIGN (LTTB's
     selection depends on the previous bucket's pick; the WARC CDX
-    walks binary shards)."""
+    walks binary shards). The plans are the session's once-built
+    census, shared with test_plans::test_declared_queries_stay_jvm_side,
+    which holds mapInPandas to its narrower set.
+
+    Queries that execute while being built (streaming replays,
+    file-format round-trips, eagerly checkpointed operators such as
+    q_dedup_prefix_join) return a materialized scan, so this census
+    sees only their final plan; their upstream shapes have dedicated
+    contracts (q_dedup_prefix_join's lazy shape is pinned by
+    test_prefix_join_candidates_are_equijoin_not_cartesian)."""
     sanctioned = re.compile(
         r"q_media_|q_semantic_dedup|q_multimodal_meta"
         r"|q_lttb_downsample|q_lttb_prereduced|q_warc_cdx"
     )
-    # Queries that EXECUTE inside the builder (streaming replays,
-    # file-format round-trips, collect-and-rebuild operators) return a
-    # LocalTableScan — running a full streaming job to inspect an
-    # already-materialized plan adds minutes of suite time and zero
-    # census information. Their upstream shapes have dedicated
-    # contracts above / in the operators' own tests.
-    # q_dedup_prefix_join belongs here too (ADVICE r5): its default
-    # materialize=True localCheckpoints eagerly, so the census would
-    # both execute the full join and then inspect a checkpoint scan
-    # (LogicalRDD) that can no longer reveal a BatchEvalPython node —
-    # its lazy shape is pinned by
-    # test_prefix_join_candidates_are_equijoin_not_cartesian
-    # (materialize=False) instead.
-    materializing = re.compile(
-        r"q_streaming_|q_csv_source|q_orc_source|q_ivf_train"
-        r"|q_media_binary_source"
-        r"|q_dedup_prefix_join|q_view_compaction|q_corpus_versioning"
-        r"|q_corpus_schema_evolution|q_corpus_checkpoint|q_corpus_vacuum"
-        r"|q_pipeline_audit|q_dedup_recall"
-    )
-    for name in QUERIES:
-        if materializing.match(name):
-            continue
-        plan = _plan(spark, sf_dir, name)
+    assert set(declared_plans) == set(QUERIES)
+    for name, plan in declared_plans.items():
         assert "BatchEvalPython" not in plan, name
         if not sanctioned.search(name):
             assert "MapInPandas" not in plan, name

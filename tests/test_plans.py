@@ -59,29 +59,27 @@ def test_topk_avoids_global_sort(spark, sf):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_declared_queries_stay_jvm_side(spark, sf):
+def test_declared_queries_stay_jvm_side(declared_plans):
     """No Python evaluation in any declared query plan: UDF-free by
     design (geohash work is driver-side; kernels are higher-order
-    SQL). The only sanctioned Python boundaries are Arrow-batched:
-    mapInPandas in the media-decode queries (a binary codec genuinely
-    cannot be a JVM expression) and in q_semantic_dedup, whose
-    production-default centroid assignment scores each batch as one
-    NumPy matmul (round 8; its pair stage was always
-    applyInPandas)."""
-    MEDIA_DECODE = {n for n in QUERIES if n.startswith("q_media_")} | {
+    SQL). Row-based (BatchEvalPython) and scalar-Arrow
+    (ArrowEvalPython) UDF nodes may appear nowhere. mapInPandas is
+    sanctioned only where the work cannot be a JVM expression: the
+    media-decode queries (binary codecs), q_semantic_dedup (its
+    centroid assignment scores each batch as one NumPy matmul) and
+    q_lttb_prereduced (a sequential monotone-chain scan per contiguous
+    group run). The applyInPandas census is
+    test_plan_contracts::test_no_rowbased_python_udfs_in_declared_plans;
+    both read the same once-built plans."""
+    map_in_pandas_ok = {n for n in QUERIES if n.startswith("q_media_")} | {
         "q_semantic_dedup",
-        # round 13: the convex-hull pre-reduction levels are
-        # mapInPandas BY DESIGN (sequential monotone-chain scan per
-        # contiguous group run); sanctioned alongside the LTTB fold
         "q_lttb_prereduced",
     }
-    for name, fn in QUERIES.items():
-        if name in ("q_dedup_components",):
-            continue  # iterative driver loop: per-step frames checked below
-        plan = plan_of(fn(spark, sf))
+    assert set(declared_plans) == set(QUERIES)
+    for name, plan in declared_plans.items():
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
-        if name not in MEDIA_DECODE:
+        if name not in map_in_pandas_ok:
             assert "MapInPandas" not in plan, name
 
 

@@ -5,7 +5,7 @@ same fixtures, compares row count, column names/order, and an
 order-insensitive value hash (floats canonicalized via repr of
 round-trip float; NaN/None normalized). Usage:
 
-    python tools/check_oracle.py [--window [N]] [sf_dir] [query ...]
+    python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -51,26 +51,8 @@ def value_hash(rows) -> str:
 
 def main() -> int:
     args = sys.argv[1:]
-    window_n = 0
-    if "--window" in args:
-        # --window [N]: check exactly the first N (default 50) of
-        # driver_order() — a local simulation of the driver's
-        # per-round correctness gate (round-7 QoL; previously
-        # scripted by hand each round)
-        i = args.index("--window")
-        nxt = args[i + 1 : i + 2]
-        if nxt and nxt[0].isdigit():
-            window_n = int(nxt[0])
-            del args[i : i + 2]
-        else:
-            window_n = 50
-            del args[i]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    if window_n:
-        from kafka_streams_pipeline_spark import inventory
-
-        only = set(inventory.driver_order()[:window_n]) | only
 
     con = duckdb.connect()
     import os

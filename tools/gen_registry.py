@@ -7,7 +7,7 @@ the code: name, defining module, docstring headline (first sentence,
 clipped), oracle kind, bench/materializing flags.
 
 Usage:
-    python tools/gen_registry.py          # rewrites /root/repo/REGISTRY.md
+    python tools/gen_registry.py          # rewrites REGISTRY.md at the repo root
 """
 
 from __future__ import annotations
@@ -47,47 +47,10 @@ def module_of(fn) -> str:
     return mod.removeprefix("kafka_streams_pipeline_spark.")
 
 
-def evidence_rounds() -> dict[str, int]:
-    """name -> latest round with a GREEN driver correctness row,
-    derived straight from the CORRECTNESS_r*.json artifacts so the
-    certified column can never lag the driver (VERDICT r15: registry
-    flags were stale because the table was generated from rotation
-    bookkeeping before the round's driver run landed)."""
-    import glob
-    import json
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        rnd = int(m.group(1))
-        if not isinstance(rec, dict):
-            continue
-        for name, row in rec.items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-                and out.get(name, -1) < rnd
-            ):
-                out[name] = rnd
-    return out
-
-
 def render() -> str:
     """The full REGISTRY.md content, derived from the live registry —
     shared by main() and the drift-check pytest (VERDICT r9 item 7:
     checked-in file must equal the generated one every round)."""
-    evidence = evidence_rounds()
     rows = []
     for name, fn in QUERIES.items():
         flags = []
@@ -101,7 +64,6 @@ def render() -> str:
                 module_of(fn),
                 "exact SQL" if name in ORACLES else "rows-only",
                 "+".join(flags) or "—",
-                f"r{evidence[name]}" if name in evidence else "pending",
                 headline(fn),
             )
         )
@@ -111,13 +73,10 @@ def render() -> str:
         f"{len(QUERIES)} queries, {len(ORACLES)} with exact DuckDB "
         "oracles. Auto-generated by `tools/gen_registry.py` from the "
         "live registry — regenerate after adding queries; do not edit "
-        "by hand. *Certified* = latest round with a green driver "
-        "CORRECTNESS row, read directly from the CORRECTNESS_r*.json "
-        "artifacts (pending rows are queued at the front of the next "
-        "driver window).",
+        "by hand.",
         "",
-        "| query | module | oracle | flags | certified | what it does |",
-        "|---|---|---|---|---|---|",
+        "| query | module | oracle | flags | what it does |",
+        "|---|---|---|---|---|",
     ]
     for r in sorted(rows):
         lines.append("| " + " | ".join(r) + " |")

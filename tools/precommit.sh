@@ -3,6 +3,6 @@
 # so a registry edit can never be committed without regenerated docs.
 cd "$(git rev-parse --show-toplevel)" || exit 1
 python3 -m pytest tests/test_driver_contract.py -q || {
-  echo "pre-commit: doc-drift gates failed — run tools/gen_registry.py and fix README counts" >&2
+  echo "pre-commit: driver-contract gates failed — run tools/sync_docs.py to regenerate README counts and REGISTRY.md" >&2
   exit 1
 }
