@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kafka_streams_pipeline_spark import inventory  # noqa: E402
+from kafka_streams_pipeline_spark import inventory, session  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -40,7 +40,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # JVM-start-only ones)
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
+            spark.conf.set(
+                "spark.sql.shuffle.partitions",
+                str(session.DEFAULT_SHUFFLE_PARTITIONS),
+            )
             spark.conf.set("spark.sql.adaptive.enabled", "true")
             spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
             return fn(spark, sf_dir)

@@ -17,181 +17,30 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 # Names of queries bench.py treats as the headline set.
 BENCH_QUERIES: list[str] = []
-# Queries that EXECUTE heavyweight work at build time rather than
-# returning a lazy plan: streaming replays (full checkpointed
-# availableNow jobs), file-format round-trips that write/delete temp
-# dirs server-side, and iterative collect-and-rebuild trainers. The
-# REST registry route excludes these by default (ADVICE r5: an
-# unauthenticated GET must not be able to pin the Spark session for
-# minutes); serve(..., allow_materializing=...) opts back in.
-MATERIALIZING: frozenset[str] = frozenset({
-    "q_streaming_dedup",
-    "q_streaming_hll",
-    "q_streaming_view",
-    "q_streaming_totals",
-    "q_streaming_alerts",
-    "q_streaming_cms",
-    "q_streaming_join",
-    "q_streaming_sessions",
-    "q_streaming_restart",
-    "q_csv_source",
-    "q_orc_source",
-    "q_ivf_train",
-    "q_view_compaction",
-    "q_streaming_late_update",
-    "q_streaming_late_drop",
-    "q_corpus_versioning",
-    # round-8 rows that also write/replay server-side at build time
-    "q_corpus_checkpoint",
-    "q_corpus_vacuum",
-    "q_corpus_schema_evolution",
-    "q_media_binary_source",
-    # round-9: full store lifecycle (writes + vacuums a temp store)
-    "q_store_history",
-    # round-9: availableNow stream-stream outer-join replay
-    "q_streaming_outer_join",
-    # round-9: merge-on-read lifecycle (writes + compacts a temp store)
-    "q_corpus_upsert",
-    # round-9: z-order layout rewrite (writes a temp parquet layout)
-    "q_zorder_layout",
-    # round-9: incremental sketch maintenance (temp store + checkpoint)
-    "q_hll_incremental",
-    # round-9: bloom secondary index (temp store + index build)
-    "q_store_bloom_index",
-    # round-9: exactly-once stream->store ingest replay
-    "q_streaming_store_ingest",
-    # round-9: min/max range index (temp store + index build)
-    "q_store_minmax_index",
-    # round-9: incremental CMS maintenance (temp store + checkpoint)
-    "q_cms_incremental",
-    # round-9: quality-gated commit lifecycle (temp store writes)
-    "q_gated_ingest",
-    # round-9: tar shard round-trip (writes temp shard files)
-    "q_media_tar_shards",
-    # round-9: gzip JSONL round-trip (writes temp compressed files)
-    "q_gzip_source",
-    # round-9: incremental histogram maintenance (temp store + checkpoint)
-    "q_histogram_incremental",
-    # round-10: stream-static join replay (writes temp chunks)
-    "q_streaming_decontaminate",
-    # round-10: tag lifecycle (writes + vacuums a temp store)
-    "q_store_tags",
-    # round-10: per-micro-batch profile replay (writes temp chunks)
-    "q_streaming_drift",
-    # round-9: availableNow streaming histogram replay
-    "q_streaming_histogram",
-    # round-9: avro OCF round-trip (writes temp container files)
-    "q_avro_source",
-    # round-11: availableNow stateful OHLC replay
-    "q_streaming_ohlc",
-    # round-11: availableNow stateful TWA replay
-    "q_streaming_twa",
-    # round-11: availableNow stateful CUSUM replay
-    "q_streaming_cusum",
-    # round-11: WARC shard round-trip (writes temp shard files)
-    "q_media_warc_shards",
-    # round-11: positional index lifecycle (temp store + index build)
-    "q_store_phrase_search",
-    # round-11: ZIP shard round-trip (writes temp shard files)
-    "q_media_zip_shards",
-    # round-11: availableNow stateful counter replay
-    "q_streaming_counter",
-    # round-11: partition-evolution lifecycle (temp store writes)
-    "q_store_partition_evolution",
-    # rounds 11-13 backfill (gap caught in r13): every row below
-    # writes temp dirs / runs replays or store lifecycles during
-    # plan CONSTRUCTION, so the unauthenticated REST surface must
-    # exclude them exactly like their older siblings above.
-    "q_media_warc_gz",
-    "q_warc_cdx",
-    "q_store_text_index",
-    "q_streaming_semi_join",
-    "q_store_version_diff",
-    "q_streaming_neardup",
-    "q_ivm_join",
-    "q_ivm_join_retract",
-    "q_streaming_ivm_join",
-    "q_ivm_agg",
-    "q_streaming_ivm_agg",
-    "q_streaming_table_join",
-    "q_streaming_full_join",
-    "q_streaming_skyline",
-    "q_store_retention",
-    # round-13: the bucketed skyline scan executes its range
-    # aggregate + per-band summary jobs (the cross-band carry)
-    # inside the builder — small, but still server-side execution
-    "q_skyline",
-    # round-13: availableNow CDC replay (online entity resolution)
-    "q_streaming_record_linkage",
-    # round-13: availableNow replay with retroactive span maintenance
-    "q_streaming_span_dedup",
-    # round-13 (deferred to r14 window): MG-merge replay + verify
-    "q_streaming_heavy_hitters",
-    # round-13 (deferred): collects linkage pairs for the closure
-    "q_entity_golden",
-    # round-14: forced-distributed closure (checkpoints the pair set)
-    "q_entity_golden_alt",
-    # round-14: availableNow replay (incremental all-pairs cosine)
-    "q_streaming_cosine_pairs",
-    # round-15: availableNow replay (epoch-boundary TF-IDF refresh)
-    "q_streaming_cosine_refresh",
-    # round-14: availableNow replay (sufficient-statistics ACF)
-    "q_streaming_acf",
-    # round-15: availableNow replay (append-only pair-delta Theil-Sen)
-    "q_streaming_theil_sen",
-    # round-15: availableNow replay (bounded-window join-state CCF)
-    "q_streaming_ccf",
-    # round-16: availableNow replay (mergeable KLL level-list fold)
-    "q_streaming_kll",
-    # round-16: availableNow replay (state-bounded privacy audit)
-    "q_streaming_privacy",
-    # round-16: availableNow replay (sliding-window windowed Theil-Sen)
-    "q_streaming_theil_sen_windowed",
-    # round-16: availableNow replay (bounded tail-buffer seasonal IVM)
-    "q_streaming_seasonal",
-    # round-16: availableNow replay (joint-distribution t-closeness)
-    "q_streaming_t_closeness",
-    # round-16: availableNow replay (bounded-buffer EWMA emission)
-    "q_streaming_ewma",
-    # round-16: availableNow replay (rolling-origin backtest moments)
-    "q_streaming_backtest",
-    # round-13 (deferred): availableNow replay with union-find state
-    "q_streaming_entity_golden",
-    # round-13 (deferred): chained stateful aggregation replay
-    "q_streaming_sliding_distinct",
-    # round-14 (ADVICE r13 item 1): the guard now scans ONE level into
-    # called operators, surfacing builders that execute via them —
-    # the cached-per-sf_dir temp view-store build (_served_view)...
-    "q_history",
-    "q_history_ordered",
-    "q_history_interval",
-    "q_snapshot",
-    "q_snapshot_ring",
-    "q_daily_rollup",
-    "q_gapfill",
-    "q_precision_reagg",
-    # ...iterative/bounded-collect operators (each runs real jobs at
-    # plan construction even though every collect is bounded)...
-    "q_dedup_components",
-    "q_dedup_components_alt",
-    "q_dedup_best_keeper",
-    "q_component_sizes",
-    "q_semantic_dedup",
-    "q_bpe_train",
-    "q_heavy_hitters_exact",
-    # ...and availableNow replay helpers reached indirectly.
-    "q_streaming_event_pattern",
-    "q_streaming_gaps",
-})
+# Names registered with ``materializes=True``.
+MATERIALIZING: set[str] = set()
 
 
-def register(name: str, oracle: str | None = None, bench: bool = False):
+def register(
+    name: str,
+    oracle: str | None = None,
+    bench: bool = False,
+    materializes: bool = False,
+):
+    # ``materializes``: the builder launches Spark jobs while the
+    # DataFrame is being built (streaming replays, temp-store writes,
+    # eager checkpoints, driver collects). The REST registry never
+    # serves such queries, because an unauthenticated GET must not run
+    # jobs (ADVICE r5); tests/test_serving.py checks the flag against
+    # the jobs each builder is measured to launch.
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
         if bench:
             BENCH_QUERIES.append(name)
+        if materializes:
+            MATERIALIZING.add(name)
         return fn
 
     return deco

@@ -174,6 +174,7 @@ _HIST_CELLS = [EVENT_TYPE_GEOHASH["click"][:6], EVENT_TYPE_GEOHASH["purchase"][:
     GROUP BY window_start
     """,
     bench=True,
+    materializes=True,
 )
 def q_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/O1: history roll-up — time-series of `avg` over two cells
@@ -207,6 +208,7 @@ def q_history(spark: SparkSession, sf_dir: str) -> DataFrame:
            "timestamp", avg
     FROM h
     """,
+    materializes=True,
 )
 def q_history_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/O2 ordering certification: q_history plus an explicit
@@ -248,6 +250,7 @@ def q_history_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND window_start <= m
     GROUP BY window_start
     """,
+    materializes=True,
 )
 def q_history_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: spatio-temporal history, range = [to − 1week, to], `to`
@@ -276,6 +279,7 @@ _SNAP_BBOX_S, _SNAP_BBOX_W, _SNAP_BBOX_N, _SNAP_BBOX_E = geo.decode_bbox("u155")
     GROUP BY gh
     """,
     bench=True,
+    materializes=True,
 )
 def q_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6/P5/P6/O2: snapshot — per-cell `avg` at the hour window
@@ -340,6 +344,7 @@ def q_reagg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v
     GROUP BY gh, date_trunc('day', window_start)
     """,
+    materializes=True,
 )
 def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup cascade: the daily view derived from the HOURLY
@@ -387,6 +392,7 @@ def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN (SELECT * FROM v WHERE gh = 'u155mz') v
            ON v.window_start = spine.hour_ts
     """,
+    materializes=True,
 )
 def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap filling: dense hourly spine (sequence+explode,
@@ -432,6 +438,7 @@ def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v
     GROUP BY 1, 2
     """,
+    materializes=True,
 )
 def q_precision_reagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-time gh_precision re-aggregation: the precision-6 store

@@ -59,7 +59,11 @@ def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup.edit_distance_pairs(_t(spark, sf_dir, "documents"))
 
 
-@register("q_dedup_components_alt", oracle=_dedup.components_oracle(0.8))
+@register(
+    "q_dedup_components_alt",
+    oracle=_dedup.components_oracle(0.8),
+    materializes=True,
+)
 def q_dedup_components_alt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: the same duplicate-group clustering as q_dedup_components,
     computed by the alternating large-star/small-star algorithm
@@ -135,7 +139,7 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_ivf_train", oracle=_sim.ivf_train_oracle(2), bench=True)
+@register("q_ivf_train", oracle=_sim.ivf_train_oracle(2), bench=True, materializes=True)
 def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 (index training): two k-means Lloyd iterations for the IVF
     coarse quantizer in exact micro-unit integer arithmetic —
@@ -156,7 +160,12 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sim.quantize_embeddings(_t(spark, sf_dir, "embeddings"))
 
 
-@register("q_semantic_dedup", oracle=_sim.semantic_dedup_oracle(), bench=True)
+@register(
+    "q_semantic_dedup",
+    oracle=_sim.semantic_dedup_oracle(),
+    bench=True,
+    materializes=True,
+)
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2/X3 SemDeDup-shaped semantic dedup: coarse-quantizer cells
     (broadcast-centroid assignment), then an in-cell cosine self-join
@@ -365,6 +374,7 @@ def q_bigram_surprisal_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM packed
         GROUP BY lang
     """,
+    materializes=True,
 )
 def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star flagship: the full training-corpus pipeline as ONE
@@ -402,6 +412,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_tokenizer_pipeline",
     bench=True,
     oracle=_text.tokenizer_pipeline_oracle(),
+    materializes=True,
 )
 def q_tokenizer_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star flagship (round 9): the tokenizer-prep chain
@@ -1390,6 +1401,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 4, 'train_split',
                CAST((SELECT count(*) FROM train) AS BIGINT)
     """,
+    materializes=True,
 )
 def q_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline lineage: per-stage row-count attrition for the
@@ -1639,7 +1651,7 @@ def q_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 from kafka_streams_pipeline_spark.operators.graph import textrank_oracle as _textrank_oracle
 
 
-@register("q_textrank", oracle=_textrank_oracle(), bench=True)
+@register("q_textrank", oracle=_textrank_oracle(), bench=True, materializes=True)
 def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph centrality (X11): TextRank keyword salience — weighted
     PageRank over the token co-occurrence graph (Mihalcea & Tarau
@@ -1656,7 +1668,7 @@ def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textrank(_t(spark, sf_dir, "documents"))
 
 
-@register("q_bpe_train", oracle=_text.bpe_train_oracle(), bench=True)
+@register("q_bpe_train", oracle=_text.bpe_train_oracle(), bench=True, materializes=True)
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer LEARNING (X5s): distributed BPE merge-rule training
     (Sennrich et al. 2016) — 8 rounds of frequency-weighted pair
@@ -1702,6 +1714,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS clustering_ppm
         FROM w, ne, t
     """,
+    materializes=True,
 )
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics (X11b): exact triangle census + global
@@ -1824,6 +1837,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS clustering_ppm
         FROM deg LEFT JOIN t ON deg.n = t.node
     """,
+    materializes=True,
 )
 def q_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics (X11c): PER-NODE triangle counts and local
@@ -1938,6 +1952,7 @@ def q_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_negative_sampling",
     oracle=_corpus.negative_samples_oracle(),
+    materializes=True,
 )
 def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 contrastive-training support: K deterministic pseudo-random
@@ -2115,7 +2130,12 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _corpus.shard_balance(_t(spark, sf_dir, "documents"))
 
 
-@register("q_boilerplate_scrub", oracle=_text.boilerplate_scrub_oracle(), bench=True)
+@register(
+    "q_boilerplate_scrub",
+    oracle=_text.boilerplate_scrub_oracle(),
+    bench=True,
+    materializes=True,
+)
 def q_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5af boilerplate-span removal (round 11): every 3-token span
     appearing in >=3 distinct docs is scrubbed from all docs, unique
@@ -2142,7 +2162,7 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _corpus.budget_select(_t(spark, sf_dir, "documents"))
 
 
-@register("q_ngram_diversity", oracle=_text.ngram_diversity_oracle())
+@register("q_ngram_diversity", oracle=_text.ngram_diversity_oracle(), materializes=True)
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5ai per-source n-gram diversity audit (round 11): bigram
     type-token ratio in integer ppm per source — the self-repetition
@@ -2220,7 +2240,7 @@ def _kcore_oracle() -> str:
     """
 
 
-@register("q_kcore", oracle=_kcore_oracle())
+@register("q_kcore", oracle=_kcore_oracle(), materializes=True)
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics (X11e, round 12 — deferred cert → r13 window):
     k-core decomposition over the SimHash Hamming near-dup graph
@@ -2288,7 +2308,7 @@ def q_token_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _text.token_cooccurrence(_t(spark, sf_dir, "documents"))
 
 
-@register("q_entity_golden", oracle=_dedup.entity_golden_oracle())
+@register("q_entity_golden", oracle=_dedup.entity_golden_oracle(), materializes=True)
 def q_entity_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 MDM completion (round 13, deferred cert → r14 window):
     end-to-end entity resolution — blocked linkage pairs →
@@ -2302,7 +2322,11 @@ def q_entity_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup.entity_golden(_t(spark, sf_dir, "customer"))
 
 
-@register("q_entity_golden_alt", oracle=_dedup.entity_golden_oracle())
+@register(
+    "q_entity_golden_alt",
+    oracle=_dedup.entity_golden_oracle(),
+    materializes=True,
+)
 def q_entity_golden_alt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 MDM, distributed branch (round 14, VERDICT r13 item 7): the
     same entity resolution as q_entity_golden with the transitive

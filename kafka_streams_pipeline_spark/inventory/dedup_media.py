@@ -50,7 +50,12 @@ def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup.normalized_dedup(_t(spark, sf_dir, "documents"))
 
 
-@register("q_dedup_minhash", oracle=_dedup.minhash_pairs_oracle(0.8), bench=True)
+@register(
+    "q_dedup_minhash",
+    oracle=_dedup.minhash_pairs_oracle(0.8),
+    bench=True,
+    materializes=True,
+)
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: MinHash+LSH near-dup pairs (shingle→minhash→band→bucket
     join→exact-Jaccard verify, threshold 0.8)."""
@@ -64,7 +69,12 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
 
 
-@register("q_dedup_components", oracle=_dedup.components_oracle(0.8), bench=True)
+@register(
+    "q_dedup_components",
+    oracle=_dedup.components_oracle(0.8),
+    bench=True,
+    materializes=True,
+)
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: duplicate-group clustering — connected components over the
     MinHash pair graph by iterative min-label propagation; the oracle
@@ -75,6 +85,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_leakage_safe_split",
     oracle=_dedup.leakage_safe_split_oracle(0.8),
+    materializes=True,
 )
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2m (round 16): leakage-safe train/val/test split — the split
@@ -118,6 +129,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                quality AS keeper_quality
         FROM ranked WHERE rn = 1
     """,
+    materializes=True,
 )
 def q_dedup_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 quality-aware dedup keeper selection: within each near-dup
@@ -164,7 +176,12 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup.simhash_signatures(_t(spark, sf_dir, "documents"))
 
 
-@register("q_dedup_hamming", oracle=_dedup.simhash_hamming_oracle(), bench=True)
+@register(
+    "q_dedup_hamming",
+    oracle=_dedup.simhash_hamming_oracle(),
+    bench=True,
+    materializes=True,
+)
 def q_dedup_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2m SimHash near-dup JOIN (round 11): all pairs within
     Hamming distance 3 over a 64-bit signature (two seeded 32-bit
@@ -809,6 +826,7 @@ def q_media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM samples
         GROUP BY doc_id, n
     """,
+    materializes=True,
 )
 def q_media_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1b for raw media: Spark's native ``binaryFile`` source — THE
@@ -887,6 +905,7 @@ def q_media_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                        AND lsh.id_b = exact.id_b) * 1.0
                      / (SELECT count(*) FROM exact), 6) AS recall
     """,
+    materializes=True,
 )
 def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 quality certification: MinHash-LSH recall measured against
@@ -970,6 +989,7 @@ def q_media_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                md5(text) AS payload_md5
         FROM documents WHERE doc_id < 200
     """,
+    materializes=True,
 )
 def q_media_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset-style shard ingestion (round 9): documents packed
@@ -1054,6 +1074,7 @@ def q_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_dedup_containment",
     oracle=_dedup.containment_pairs_oracle(),
+    materializes=True,
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2j one-sided near-dup: shingle-set CONTAINMENT pairs — the
@@ -1109,6 +1130,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                md5(text) AS payload_md5
         FROM documents WHERE doc_id < 200
     """,
+    materializes=True,
 )
 def q_media_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4k WARC shard ingestion (round 11): documents packed into
@@ -1178,6 +1200,7 @@ def q_media_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                md5(text) AS payload_md5
         FROM documents WHERE doc_id < 200
     """,
+    materializes=True,
 )
 def q_media_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4m gzip-member WARC ingestion (VERDICT r11 item 3): the same
@@ -1251,6 +1274,7 @@ def q_media_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
                TRUE AS seek_ok
         FROM documents WHERE doc_id < 200
     """,
+    materializes=True,
 )
 def q_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4n CDX random-access index over .warc.gz (round 12): the
@@ -1317,6 +1341,7 @@ def q_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
                md5(text) AS payload_md5
         FROM documents WHERE doc_id < 200
     """,
+    materializes=True,
 )
 def q_media_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4l ZIP shard ingestion (round 11): documents packed into

@@ -1319,6 +1319,7 @@ def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_size",
         "p_partkey",
     ),
+    materializes=True,
 )
 def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 OLAP extension (round 13): Pareto frontier / SKYLINE OF

@@ -583,6 +583,7 @@ def q_window_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_dedup_prefix_join",
     oracle=_dedup.prefix_jaccard_join_oracle(),
     bench=True,
+    materializes=True,
 )
 def q_dedup_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 EXACT similarity join at scale: prefix-filtered Jaccard
@@ -679,7 +680,12 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_kll_quantiles", bench=True, oracle=_sk.kll_quantiles_oracle())
+@register(
+    "q_kll_quantiles",
+    bench=True,
+    oracle=_sk.kll_quantiles_oracle(),
+    materializes=True,
+)
 def q_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6h (sketch family, round 16 — VERDICT r15 item 4): mergeable
     guaranteed-error quantile sketch, the domain-free member the
@@ -733,6 +739,7 @@ def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_heavy_hitters_exact",
     oracle=_sk.heavy_hitters_twopass_oracle(),
+    materializes=True,
 )
 def q_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 exact leg (round 13): two-pass exact heavy hitters over the

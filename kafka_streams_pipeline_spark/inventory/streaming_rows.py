@@ -192,6 +192,7 @@ def _replay_readings_stream(
                CAST(timestamp AS BIGINT) AS ts_ms
         FROM readings
     """,
+    materializes=True,
 )
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2g (streaming exact dedup): watermark-bounded dropDuplicates
@@ -258,7 +259,7 @@ def _streaming_hll_oracle() -> str:
     """
 
 
-@register("q_streaming_hll", oracle=_streaming_hll_oracle())
+@register("q_streaming_hll", oracle=_streaming_hll_oracle(), materializes=True)
 def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7d (streaming HLL state): per-geohash-cell HyperLogLog
     registers maintained across micro-batches via
@@ -289,7 +290,7 @@ def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_bm25", oracle=_text.bm25_topk_oracle())
+@register("q_bm25", oracle=_text.bm25_topk_oracle(), materializes=True)
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 (retrieval scoring): Okapi BM25 top-25 for a fixed query
     term set with rational k1/b, pure-integer bit-length IDF, and a
@@ -329,7 +330,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skew.skew_report(_t(spark, sf_dir, "lineitem"), "l_suppkey")
 
 
-@register("q_streaming_view", oracle=ORACLES["q_hourly_view"])
+@register("q_streaming_view", oracle=ORACLES["q_hourly_view"], materializes=True)
 def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1-T6 as ONE driver row: the reference's full continuous
     topology — file-source replay → PERMISSIVE decode shape →
@@ -401,6 +402,7 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM readings WHERE tempVal IS NOT NULL
         GROUP BY sensorId
     """,
+    materializes=True,
 )
 def q_streaming_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5-adjacent driver row: per-sensor running {count, sum, avg}
@@ -447,6 +449,7 @@ def q_streaming_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM readings WHERE tempVal IS NOT NULL
         GROUP BY sensorId
     """,
+    materializes=True,
 )
 def q_streaming_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5-adjacent driver row: the latching alert detector — counts
@@ -506,7 +509,7 @@ def _source_agg(df: DataFrame) -> DataFrame:
     )
 
 
-@register("q_csv_source", oracle=_SOURCE_AGG_ORACLE)
+@register("q_csv_source", oracle=_SOURCE_AGG_ORACLE, materializes=True)
 def q_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S2 source-format breadth: the events table round-tripped
     through CSV with the engine's lenient-decode contract — explicit
@@ -572,7 +575,7 @@ def q_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema_out)
 
 
-@register("q_orc_source", oracle=_SOURCE_AGG_ORACLE)
+@register("q_orc_source", oracle=_SOURCE_AGG_ORACLE, materializes=True)
 def q_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 source-format breadth: the same aggregate through an ORC
     round-trip — Spark's second columnar format, exercised with
@@ -756,6 +759,7 @@ def q_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         GROUP BY n_members
     """,
+    materializes=True,
 )
 def q_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 dedup telemetry: the near-dup component size histogram —
@@ -869,6 +873,7 @@ _RING_CELLS_EXPECTED = [
           ({', '.join(f"'{c}'" for c in _RING_CELLS_EXPECTED)})
       AND window_start = TIMESTAMP '2024-01-07 10:00:00'
     """,
+    materializes=True,
 )
 def q_snapshot_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7/A6 variant: per-cell snapshot over a geohash RING — the
@@ -937,7 +942,7 @@ def _streaming_cms_oracle() -> str:
     """
 
 
-@register("q_streaming_cms", oracle=_streaming_cms_oracle())
+@register("q_streaming_cms", oracle=_streaming_cms_oracle(), materializes=True)
 def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7-family streaming CMS, driver-certified (VERDICT r5 item 9):
     per-geohash-cell Count-Min cell matrices maintained across
@@ -1029,6 +1034,7 @@ def _write_event_chunks(
          AND c.ts >= p.ts - INTERVAL 10 MINUTE
          AND c.ts <  p.ts
     """,
+    materializes=True,
 )
 def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM inner join as a driver row (the
@@ -1176,6 +1182,7 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(value), 6)  AS sum_value
         FROM s GROUP BY user_id, sid
     """,
+    materializes=True,
 )
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING session windows as a driver row (the streaming twin
@@ -1287,7 +1294,11 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_streaming_restart", oracle=ORACLES["q_streaming_totals"])
+@register(
+    "q_streaming_restart",
+    oracle=ORACLES["q_streaming_totals"],
+    materializes=True,
+)
 def q_streaming_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 (fault tolerance) as a driver row: the running-totals
     pipeline processes the FIRST THIRD of the stream, STOPS (query
@@ -1367,7 +1378,7 @@ def q_streaming_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_view_compaction", oracle=ORACLES["q_hourly_view"])
+@register("q_view_compaction", oracle=ORACLES["q_hourly_view"], materializes=True)
 def q_view_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 maintenance as a driver row: the fragmented-store →
     compaction lifecycle of the standing view. The full hourly view
@@ -1417,7 +1428,7 @@ def q_view_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-@register("q_streaming_late_update", oracle=ORACLES["q_hourly_view"])
+@register("q_streaming_late_update", oracle=ORACLES["q_hourly_view"], materializes=True)
 def q_streaming_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 (late data within the watermark grace) as a driver row: the
     hourly windowed aggregate replayed with DELIBERATE local disorder
@@ -1548,6 +1559,7 @@ def q_streaming_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(s / cnt, 6)       AS avg_val
         FROM v
     """,
+    materializes=True,
 )
 def q_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3's DROP side, deterministic: rows from the stream's FIRST
@@ -1647,6 +1659,7 @@ def q_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(n_chars) AS BIGINT) AS chars_total
         FROM documents
     """,
+    materializes=True,
 )
 def q_corpus_versioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset reproducibility: the versioned corpus store
@@ -1709,6 +1722,7 @@ def q_corpus_versioning(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(doc_id) AS BIGINT) AS id_checksum
         FROM documents
     """,
+    materializes=True,
 )
 def q_corpus_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest checkpointing (round 8): after two append commits
@@ -1766,6 +1780,7 @@ def q_corpus_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(doc_id) AS BIGINT) AS id_checksum
         FROM documents
     """,
+    materializes=True,
 )
 def q_corpus_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention (round 8): the full store lifecycle ending in
@@ -1829,6 +1844,7 @@ def q_corpus_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT)          AS sum_q
         FROM documents
     """,
+    materializes=True,
 )
 def q_corpus_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive schema evolution UNDER time travel (round 8): batch 1
@@ -1920,6 +1936,7 @@ def q_corpus_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT 'post', 4, 2, 1, 'sevens', n_all + n_sev FROM c, s
     """,
+    materializes=True,
 )
 def q_store_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Commit-log introspection (round 9): ``store_history`` — the
@@ -1985,6 +2002,7 @@ def q_store_history(spark: SparkSession, sf_dir: str) -> DataFrame:
          AND c.ts >= p.ts - INTERVAL 10 MINUTE
          AND c.ts <  p.ts
     """,
+    materializes=True,
 )
 def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM LEFT OUTER join (round 9): the
@@ -2173,6 +2191,7 @@ def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(doc_id) AS BIGINT)
         FROM fin GROUP BY doc_id % 3
     """,
+    materializes=True,
 )
 def q_corpus_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO, merge-on-read (round 9): the store's missing
@@ -2360,7 +2379,7 @@ def _zorder_oracle() -> str:
     """
 
 
-@register("q_zorder_layout", oracle=_zorder_oracle())
+@register("q_zorder_layout", oracle=_zorder_oracle(), materializes=True)
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering (round 9): OPTIMIZE ZORDER BY for the
     training-data lake. documents(doc_id, n_chars) is rewritten as 8
@@ -2421,6 +2440,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_hll_incremental",
     oracle=_sk.hll_distinct_oracle("events", "user_id"),
+    materializes=True,
 )
 def q_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sketch maintenance (round 9): distinct-user stats
@@ -2519,7 +2539,7 @@ def _bloom_index_oracle() -> str:
     """
 
 
-@register("q_store_bloom_index", oracle=_bloom_index_oracle())
+@register("q_store_bloom_index", oracle=_bloom_index_oracle(), materializes=True)
 def q_store_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Secondary index (round 9): per-batch Bloom pruning for point
     lookups on the versioned store — the file-skipping move for keys
@@ -2581,6 +2601,7 @@ def q_store_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT 'meta', 'versions', CAST(6 AS BIGINT), CAST(0 AS BIGINT)
     """,
+    materializes=True,
 )
 def q_streaming_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once streaming ingest into the versioned store (round
@@ -2715,6 +2736,7 @@ def q_streaming_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST((SELECT count(*) FROM mm) AS BIGINT)
         FROM mm, p WHERE mm.lo <= phi AND plo <= mm.hi
     """,
+    materializes=True,
 )
 def q_store_minmax_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range index (round 9): per-batch min/max column stats — the
@@ -2765,6 +2787,7 @@ def q_store_minmax_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_cms_incremental",
     oracle=_sk.cms_heavy_hitters_oracle("events", "event_type"),
+    materializes=True,
 )
 def q_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental frequency maintenance (round 9): the CMS twin of
@@ -2833,6 +2856,7 @@ def q_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(n_chars) AS BIGINT)
         FROM documents
     """,
+    materializes=True,
 )
 def q_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Governed ingest (round 9): commit-time quality gating on the
@@ -2897,7 +2921,7 @@ def q_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "phase string, a long, b long")
 
 
-@register("q_gzip_source", oracle=_SOURCE_AGG_ORACLE)
+@register("q_gzip_source", oracle=_SOURCE_AGG_ORACLE, materializes=True)
 def q_gzip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1b source breadth (round 9): gzip-compressed JSON-lines —
     the wire format most web-scale text corpora actually arrive in
@@ -2989,7 +3013,7 @@ def _hist_inc_oracle() -> str:
     """
 
 
-@register("q_histogram_incremental", oracle=_hist_inc_oracle())
+@register("q_histogram_incremental", oracle=_hist_inc_oracle(), materializes=True)
 def q_histogram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental rank maintenance (round 9): the third leg of the
     mergeable-state trio (HLL distincts, CMS frequencies, histogram
@@ -3069,7 +3093,7 @@ def _streaming_hist_oracle() -> str:
     """
 
 
-@register("q_streaming_histogram", oracle=_streaming_hist_oracle())
+@register("q_streaming_histogram", oracle=_streaming_hist_oracle(), materializes=True)
 def q_streaming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming histogram state (round 9): per-cell value histogram
     via applyInPandasWithState, replayed with availableNow — the
@@ -3100,7 +3124,7 @@ def q_streaming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_avro_source", oracle=_SOURCE_AGG_ORACLE)
+@register("q_avro_source", oracle=_SOURCE_AGG_ORACLE, materializes=True)
 def q_avro_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1b source breadth (round 9): Avro Object Container Files —
     the leg previously environment-blocked (no spark-avro DataSource
@@ -3200,6 +3224,7 @@ def _decon_bench_pred_sql() -> str:
 @register(
     "q_streaming_decontaminate",
     oracle=None,  # set right below (needs the operator's oracle builder)
+    materializes=True,
 )
 def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest decontamination — the STREAM-STATIC broadcast
@@ -3338,6 +3363,7 @@ ORACLES["q_streaming_decontaminate"] = _text.decontaminate_oracle(
                CAST(sum(doc_id) AS BIGINT) AS id_checksum
         FROM documents
     """,
+    materializes=True,
 )
 def q_store_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named refs (round 10): Iceberg/Delta-style TAGS over the
@@ -3431,7 +3457,7 @@ def _streaming_drift_oracle() -> str:
     return " UNION ALL ".join(legs)
 
 
-@register("q_streaming_drift", oracle=_streaming_drift_oracle())
+@register("q_streaming_drift", oracle=_streaming_drift_oracle(), materializes=True)
 def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DRIFT MONITOR (round 10): per-micro-batch column
     profiles computed inside foreachBatch (each batch is one
@@ -3561,6 +3587,7 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT 'prune', scanned, CAST(8 AS BIGINT) FROM cand
     """,
+    materializes=True,
 )
 def q_store_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted text index over the versioned store (round 10): the
@@ -3632,6 +3659,7 @@ def q_store_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
               AND c.ts <  p.ts
         )
     """,
+    materializes=True,
 )
 def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT SEMI join (round 10), completing the
@@ -3772,6 +3800,7 @@ def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM cls WHERE change_type IS NOT NULL
         GROUP BY change_type ORDER BY change_type
     """,
+    materializes=True,
 )
 def q_store_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5ah store version diff (round 11): semantic added / removed /
@@ -3885,7 +3914,7 @@ def _neardup_oracle_sql() -> str:
     """
 
 
-@register("q_streaming_neardup", oracle=None)  # set below
+@register("q_streaming_neardup", oracle=None, materializes=True)  # set below
 def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7j streaming ingest near-dup flagging (round 11): incoming
     documents (odd doc_ids, 4 time-ordered micro-batches) compute
@@ -4076,6 +4105,7 @@ ORACLES["q_streaming_neardup"] = _neardup_oracle_sql()
         GROUP BY j.source, counters.n_delta_a, counters.n_delta_b,
                  counters.n_delta_view
     """,
+    materializes=True,
 )
 def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9a Incremental view maintenance for a JOIN (round 12 —
@@ -4205,6 +4235,7 @@ def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY j.source, counters.n_rescored, counters.n_takedowns,
                  counters.n_view_upserts
     """,
+    materializes=True,
 )
 def q_ivm_join_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9b Retraction-aware join IVM (round 12 — deferred cert → r13
@@ -4342,6 +4373,7 @@ def q_ivm_join_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY j.source, counters.n_delta_a, counters.n_delta_b,
                  counters.n_delta_view
     """,
+    materializes=True,
 )
 def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9c Streaming join-IVM twin (VERDICT r12 item 4): the SAME
@@ -4550,6 +4582,7 @@ _IVM_AGG_ORACLE_COUNTERS = """
         FROM live, counters
         GROUP BY live.source, counters.n_inserts, counters.n_retracts
     """,
+    materializes=True,
 )
 def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9d Aggregate view maintenance with retractions (round 13):
@@ -4648,6 +4681,7 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM live, counters
         GROUP BY live.source, counters.n_inserts, counters.n_retracts
     """,
+    materializes=True,
 )
 def q_streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9e Streaming twin of q_ivm_agg: the linear Z-set maintenance
@@ -4803,6 +4837,7 @@ def q_streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM eff
         GROUP BY 1, 2
     """,
+    materializes=True,
 )
 def q_streaming_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-TABLE temporal join (round 13) — the Kafka Streams
@@ -4956,6 +4991,7 @@ def q_streaming_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
          AND c.ts >= p.ts - INTERVAL 10 MINUTE
          AND c.ts <  p.ts
     """,
+    materializes=True,
 )
 def q_streaming_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM FULL OUTER join (round 13):
@@ -5105,6 +5141,7 @@ def q_streaming_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
               AND (q.x < p.x OR q.y > p.y)
         )
     """,
+    materializes=True,
 )
 def q_streaming_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_skyline (round 13): incremental Pareto-
@@ -5225,6 +5262,7 @@ def q_streaming_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_record_linkage",
     oracle=_dedup.record_linkage_oracle(),
+    materializes=True,
 )
 def q_streaming_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_record_linkage (round 13): ONLINE entity
@@ -5354,6 +5392,7 @@ def q_streaming_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_span_dedup",
     oracle=_dedup.duplicated_spans_oracle(),
+    materializes=True,
 )
 def q_streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_span_dedup (round 13): incremental
@@ -5525,6 +5564,7 @@ def q_streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_heavy_hitters",
     oracle=_sk.heavy_hitters_twopass_oracle(),
+    materializes=True,
 )
 def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_heavy_hitters_exact (round 13, deferred
@@ -5645,6 +5685,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_entity_golden",
     oracle=_dedup.entity_golden_oracle(),
+    materializes=True,
 )
 def q_streaming_entity_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_entity_golden (round 13, deferred cert →
@@ -5784,6 +5825,7 @@ def q_streaming_entity_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
         FROM x GROUP BY window_ms
     """,
+    materializes=True,
 )
 def q_streaming_sliding_distinct(
     spark: SparkSession, sf_dir: str
@@ -5888,6 +5930,7 @@ def q_streaming_sliding_distinct(
 @register(
     "q_streaming_cosine_pairs",
     oracle=_sim.tf_cosine_pairs_oracle(),
+    materializes=True,
 )
 def q_streaming_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the all-pairs similarity family (round 14):
@@ -5983,6 +6026,7 @@ def q_streaming_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_cosine_refresh",
     oracle=_sim.cosine_pairs_oracle(),
+    materializes=True,
 )
 def q_streaming_cosine_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch-boundary TF-IDF refresh for the streaming all-pairs
@@ -6095,6 +6139,7 @@ def q_streaming_cosine_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_theil_sen",
     oracle=_ts_ops.theil_sen_trend_oracle(),
+    materializes=True,
 )
 def q_streaming_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_theil_sen (round 15): robust trend
@@ -6234,6 +6279,7 @@ def q_streaming_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_ccf",
     oracle=_ts_ops.ccf_by_series_oracle(),
+    materializes=True,
 )
 def q_streaming_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_ccf (round 15): cross-correlation
@@ -6387,6 +6433,7 @@ def q_streaming_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_acf",
     oracle=_ts_ops.acf_by_series_oracle(),
+    materializes=True,
 )
 def q_streaming_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_acf (round 14): autocorrelation maintained
@@ -6519,6 +6566,7 @@ def q_streaming_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_kll",
     oracle=_sk.kll_quantiles_oracle(),
+    materializes=True,
 )
 def q_streaming_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_kll_quantiles (round 16 — VERDICT r15
@@ -6662,7 +6710,7 @@ def _streaming_privacy_oracle() -> str:
     return " UNION ALL ".join(legs)
 
 
-@register("q_streaming_privacy", oracle=_streaming_privacy_oracle())
+@register("q_streaming_privacy", oracle=_streaming_privacy_oracle(), materializes=True)
 def q_streaming_privacy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PRIVACY MONITOR (round 16 — VERDICT r15 item 8):
     per-micro-batch k-anonymity + distinct-l-diversity audit over
@@ -6807,6 +6855,7 @@ def q_streaming_privacy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_theil_sen_windowed",
     oracle=_ts_ops.theil_sen_trend_windowed_oracle(),
+    materializes=True,
 )
 def q_streaming_theil_sen_windowed(
     spark: SparkSession, sf_dir: str
@@ -6949,6 +6998,7 @@ def q_streaming_theil_sen_windowed(
 @register(
     "q_streaming_seasonal",
     oracle=_ts_ops.seasonal_decompose_oracle(),
+    materializes=True,
 )
 def q_streaming_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12ag (round 16): streaming twin of q_seasonal_decompose —
@@ -7131,7 +7181,9 @@ def _streaming_t_closeness_oracle() -> str:
 
 
 @register(
-    "q_streaming_t_closeness", oracle=_streaming_t_closeness_oracle()
+    "q_streaming_t_closeness",
+    oracle=_streaming_t_closeness_oracle(),
+    materializes=True,
 )
 def q_streaming_t_closeness(
     spark: SparkSession, sf_dir: str
@@ -7284,7 +7336,7 @@ def q_streaming_t_closeness(
         shutil.rmtree(base, ignore_errors=True)
 
 
-@register("q_streaming_ewma", oracle=_ts_ops.ewma_by_series_oracle())
+@register("q_streaming_ewma", oracle=_ts_ops.ewma_by_series_oracle(), materializes=True)
 def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12aj (round 16): streaming twin of q_ewma — the truncated
     dyadic smoother is DESIGNED for incremental maintenance: each
@@ -7386,6 +7438,7 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_backtest",
     oracle=_ts_ops.seasonal_naive_backtest_oracle(),
+    materializes=True,
 )
 def q_streaming_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12ak-s (round 16): streaming twin of the seasonal-naive

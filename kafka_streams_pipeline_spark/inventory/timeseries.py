@@ -82,7 +82,12 @@ def q_anomaly_mad_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ts.mad_outliers_approx(_t(spark, sf_dir, "events"))
 
 
-@register("q_rrf_fusion", bench=True, oracle=_sim.rrf_fusion_oracle())
+@register(
+    "q_rrf_fusion",
+    bench=True,
+    oracle=_sim.rrf_fusion_oracle(),
+    materializes=True,
+)
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3n (hybrid retrieval): reciprocal-rank fusion of the certified
     BM25 lexical top-50 and cosine dense top-50 (doc_id ≡ vec_id),
@@ -141,7 +146,7 @@ def _streaming_ohlc_oracle() -> str:
     """
 
 
-@register("q_streaming_ohlc", oracle=_streaming_ohlc_oracle())
+@register("q_streaming_ohlc", oracle=_streaming_ohlc_oracle(), materializes=True)
 def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12e (streaming TSDB): per (geohash-6 cell × hour) OHLC candle
     maintained across micro-batches via applyInPandasWithState — the
@@ -229,7 +234,7 @@ def _streaming_twa_oracle() -> str:
     """
 
 
-@register("q_streaming_twa", oracle=_streaming_twa_oracle())
+@register("q_streaming_twa", oracle=_streaming_twa_oracle(), materializes=True)
 def q_streaming_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12g (streaming TSDB): per-sensor LOCF time-weighted average
     maintained across micro-batches as SEQUENTIAL state (the held
@@ -307,7 +312,7 @@ def _gapfill_locf_oracle() -> str:
     """
 
 
-@register("q_gapfill_locf", oracle=_gapfill_locf_oracle())
+@register("q_gapfill_locf", oracle=_gapfill_locf_oracle(), materializes=True)
 def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12h (TSDB serving): LOCF gap filling — the dense hourly spine
     left-joins the sparse materialized view (same shape as
@@ -412,7 +417,7 @@ def _streaming_cusum_oracle() -> str:
     """
 
 
-@register("q_streaming_cusum", oracle=_streaming_cusum_oracle())
+@register("q_streaming_cusum", oracle=_streaming_cusum_oracle(), materializes=True)
 def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12i (streaming TSDB): per-sensor CUSUM changepoint state
     across micro-batches — the clamped recurrence runs NATIVELY in
@@ -509,6 +514,7 @@ def q_sensor_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 'verify', cd, (SELECT CAST(count(*) AS BIGINT) FROM m)
         FROM candd
     """,
+    materializes=True,
 )
 def q_store_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5ak (store IR): exact PHRASE search through a positional
@@ -646,7 +652,7 @@ def _streaming_counter_oracle() -> str:
     """
 
 
-@register("q_streaming_counter", oracle=_streaming_counter_oracle())
+@register("q_streaming_counter", oracle=_streaming_counter_oracle(), materializes=True)
 def q_streaming_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12l (streaming TSDB): per-sensor reset-corrected counter
     increase across micro-batches — the streaming twin of
@@ -747,6 +753,7 @@ def q_event_pattern_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT 'spec', CAST(4 AS BIGINT), CAST(8 AS BIGINT)
     """,
+    materializes=True,
 )
 def q_store_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5al (lake): Iceberg-style PARTITION-SPEC EVOLUTION — batches
@@ -844,6 +851,7 @@ def q_store_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                (SELECT CAST(count(*) AS BIGINT) FROM c) AS tag_rows
         FROM per_bucket GROUP BY grain
     """,
+    materializes=True,
 )
 def q_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12p (TSDB lifecycle, VERDICT r11 item 7): the TimescaleDB
@@ -1029,7 +1037,9 @@ def _replay_events_stream(
 
 
 @register(
-    "q_streaming_event_pattern", oracle=_ts.event_pattern_funnel_oracle()
+    "q_streaming_event_pattern",
+    oracle=_ts.event_pattern_funnel_oracle(),
+    materializes=True,
 )
 def q_streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12q (streaming CEP): the skip-gap funnel run NATIVELY as a
@@ -1060,7 +1070,7 @@ def q_streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_streaming_gaps", oracle=_ts.sensor_gaps_oracle())
+@register("q_streaming_gaps", oracle=_ts.sensor_gaps_oracle(), materializes=True)
 def q_streaming_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12u (streaming TSDB, round 12 — deferred cert → r13 window):
     dead-man/heartbeat gap census maintained across micro-batches —

@@ -54,12 +54,6 @@ class QueryHandler(BaseHTTPRequestHandler):
     # (spark, sf_dir) for the generic /api/queries registry surface;
     # None disables that route (reference-parity-only serving)
     registry_ctx: tuple | None = None
-    # Materializing queries (streaming replays, temp-dir format
-    # round-trips — inventory.MATERIALIZING) opted back into the
-    # served registry; empty by default (ADVICE r5: a single
-    # unauthenticated GET must not pin the session for minutes —
-    # limit=N only truncates an already-computed result).
-    allow_materializing: frozenset = frozenset()
 
     def log_message(self, fmt, *args):  # quiet by default
         pass
@@ -78,27 +72,26 @@ class QueryHandler(BaseHTTPRequestHandler):
         parts = [p for p in url.path.split("/") if p]
         try:
             # Generic registry surface (beyond-reference): every
-            # declared query is servable, so a reference user gains
-            # the full engine over the same wire format.
+            # declared query whose builder launches no job
+            # (QUERIES - MATERIALIZING) is servable, so a reference
+            # user gains the engine over the same wire format.
             #   GET /api/queries            → {"queries": [names...]}
             #   GET /api/queries/{name}[?limit=N]
             if parts[:2] == ["api", "queries"] and self.registry_ctx:
                 spark, sf_dir = self.registry_ctx
                 from kafka_streams_pipeline_spark import inventory
 
-                servable = set(inventory.QUERIES) - (
-                    inventory.MATERIALIZING - self.allow_materializing
-                )
+                servable = set(inventory.QUERIES) - inventory.MATERIALIZING
                 if len(parts) == 2:
                     self._reply(200, {"queries": sorted(servable)})
                     return
                 name = parts[2]
                 # GET /api/queries/{name}/explain[?mode=formatted] —
-                # the OBSERVABILITY route: returns the physical plan
-                # WITHOUT executing anything (explain is pure plan
-                # compilation, so it is safe even for expensive
-                # queries — only MATERIALIZING ones stay excluded
-                # because their plan CONSTRUCTION runs jobs).
+                # the OBSERVABILITY route: returns the physical plan.
+                # Only unflagged queries can be explained, and their
+                # builders launch no job beyond parquet schema
+                # inference (tests/test_serving.py measures this);
+                # explain itself is plan compilation only.
                 if len(parts) == 4 and parts[3] == "explain":
                     if name not in servable:
                         self._reply(
@@ -190,7 +183,6 @@ def serve(
     port: int = 7070,
     spark=None,
     sf_dir: str | None = None,
-    allow_materializing: frozenset = frozenset(),
 ) -> ThreadingHTTPServer:
     """Start the API over a view DataFrame (default port mirrors the
     reference's Docker default, Dockerfile:26-27). Returns the server;
@@ -200,19 +192,16 @@ def serve(
     query registry at ``/api/queries[/{name}?limit=N]`` — the
     beyond-reference serving surface. Every request EXECUTES the
     query server-side (limit=N truncates the result, not the
-    compute); materializing queries (``inventory.MATERIALIZING`` —
-    streaming replays, temp-dir format round-trips, iterative
-    trainers) are therefore excluded unless explicitly allowlisted
-    via ``allow_materializing``."""
+    compute). Queries registered with ``materializes=True``
+    (``inventory.MATERIALIZING``: builders that launch Spark jobs,
+    such as streaming replays, temp-store writes and iterative
+    trainers) are neither listed nor served, and their ``/explain``
+    returns 404."""
     ctx = (spark, sf_dir) if spark is not None and sf_dir else None
     handler = type(
         "BoundHandler",
         (QueryHandler,),
-        {
-            "view": view,
-            "registry_ctx": ctx,
-            "allow_materializing": frozenset(allow_materializing),
-        },
+        {"view": view, "registry_ctx": ctx},
     )
     server = ThreadingHTTPServer((host, port), handler)
     threading.Thread(target=server.serve_forever, daemon=True).start()

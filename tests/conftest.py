@@ -4,10 +4,11 @@ import os
 import sys
 
 import pytest
+from pyspark.sql.readwriter import DataFrameReader
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_streams_pipeline_spark.inventory import QUERIES  # noqa: E402
+from kafka_streams_pipeline_spark.inventory import QUERIES, _shared  # noqa: E402
 from kafka_streams_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -26,14 +27,46 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
-def declared_plans(spark, sf_dir) -> dict[str, str]:
-    """Formatted physical plan of every registered query, built once
-    per session and shared by the plan guards that census the whole
-    declared surface (building all of them takes minutes)."""
+def declared_builds(spark, sf_dir) -> dict[str, tuple[str, int]]:
+    """Every registered query built once per session (building all of
+    them takes minutes), as name -> (formatted physical plan, Spark
+    jobs its builder launched). Jobs are counted on the scheduler's
+    job-id sequence, which also sees streaming-query threads; the jobs
+    of parquet schema inference inside ``DataFrameReader.parquet`` are
+    left out. Each builder starts with an empty shared view store, so
+    a builder that reuses a store written by an earlier one is still
+    measured cold. No stream may be running, or its jobs would be
+    counted."""
+    assert not spark.streams.active, "a stream from another test is running"
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    schema_jobs = 0
+    read_parquet = DataFrameReader.parquet
+
+    def counted_parquet(self, *paths, **options):
+        nonlocal schema_jobs
+        start = scheduler.nextJobId()
+        try:
+            return read_parquet(self, *paths, **options)
+        finally:
+            schema_jobs += scheduler.nextJobId() - start
+
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    return {
-        name: fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
-        for name, fn in QUERIES.items()
-    }
+    builds = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameReader, "parquet", counted_parquet)
+        for name, fn in QUERIES.items():
+            mp.setattr(_shared, "_VIEW_STORE", {})
+            start, schema_start = scheduler.nextJobId(), schema_jobs
+            df = fn(spark, sf_dir)
+            jobs = scheduler.nextJobId() - start - (schema_jobs - schema_start)
+            builds[name] = (df._jdf.queryExecution().explainString(mode), jobs)
+    return builds
+
+
+@pytest.fixture(scope="session")
+def declared_plans(declared_builds) -> dict[str, str]:
+    """Formatted physical plan of every registered query, shared by the
+    plan guards that census the whole declared surface."""
+    return {name: plan for name, (plan, _) in declared_builds.items()}

@@ -132,22 +132,23 @@ def test_registry_listing(registry_api):
     code, msg = _get(f"{registry_api}/api/queries")
     assert code == 200
     assert "q_hourly_view" in msg["queries"]
-    assert "q_dedup_minhash" in msg["queries"]
+    assert "q_dedup_ngram" in msg["queries"]
     assert len(msg["queries"]) == len(inventory.QUERIES) - len(
         inventory.MATERIALIZING
     )
 
 
 def test_registry_excludes_materializing_by_default(registry_api):
-    """ADVICE r5: a single unauthenticated GET must not be able to
-    pin the session for minutes — materializing queries (streaming
-    replays, temp-dir format round-trips) are not listed and return
-    404 unless explicitly allowlisted at serve() time."""
+    """ADVICE r5: a single unauthenticated GET must not run Spark
+    jobs — queries registered with materializes=True (streaming
+    replays, temp-store writes, eager checkpoints) are not listed and
+    return 404."""
     from kafka_streams_pipeline_spark import inventory
 
     code, msg = _get(f"{registry_api}/api/queries")
     assert code == 200
     assert not set(msg["queries"]) & inventory.MATERIALIZING
+    assert not {"q_kcore", "q_textrank"} & set(msg["queries"])
     code, _ = _get(f"{registry_api}/api/queries/q_streaming_view")
     assert code == 404
 
@@ -172,35 +173,6 @@ def test_registry_disabled_without_context(api):
     the registry route."""
     code, _ = _get(f"{api}/api/queries")
     assert code == 404
-
-
-def test_registry_materializing_allowlist_opt_in(spark, sf_dir):
-    """serve(allow_materializing=...) restores exactly the allowlisted
-    materializing queries to the served registry."""
-    from kafka_streams_pipeline_spark import inventory
-
-    events = load_table(spark, sf_dir, "events")
-    view = build_view(readings_from_events(events))
-    server = serve(
-        view,
-        host="127.0.0.1",
-        port=17072,
-        spark=spark,
-        sf_dir=sf_dir,
-        allow_materializing=frozenset({"q_ivf_train"}),
-    )
-    try:
-        code, msg = _get("http://127.0.0.1:17072/api/queries")
-        assert code == 200
-        assert "q_ivf_train" in msg["queries"]
-        assert "q_streaming_view" not in msg["queries"]
-        assert set(msg["queries"]) == (
-            set(inventory.QUERIES)
-            - inventory.MATERIALIZING
-            | {"q_ivf_train"}
-        )
-    finally:
-        server.shutdown()
 
 
 def test_explain_route_returns_plan_without_executing(spark, sf_dir):
@@ -237,7 +209,11 @@ def test_explain_route_returns_plan_without_executing(spark, sf_dir):
 
         for bad in (
             "/api/queries/q_nope/explain",
-            "/api/queries/q_streaming_view/explain",  # materializing
+            # materializing: a streaming replay, and two builders whose
+            # eager checkpoints run jobs one call deep
+            "/api/queries/q_streaming_view/explain",
+            "/api/queries/q_kcore/explain",
+            "/api/queries/q_textrank/explain",
         ):
             try:
                 urllib.request.urlopen(base + bad)
@@ -255,72 +231,26 @@ def test_explain_route_returns_plan_without_executing(spark, sf_dir):
         server.shutdown()
 
 
-def test_materializing_set_covers_every_buildtime_executor():
-    """Round-13 regression guard: any registered query whose builder
-    writes temp dirs, runs a streaming replay, or executes a store
-    lifecycle during plan CONSTRUCTION must be listed in
-    inventory.MATERIALIZING, or the unauthenticated REST surface can
-    be made to pin the session for minutes (ADVICE r5). Rounds 11-13
-    added 15 such rows without extending the set; this test greps
-    the builder source for the execution markers so the next
-    addition fails loudly here instead of shipping servable."""
-    import ast
-    import inspect
-    import textwrap
-
+def test_every_buildtime_job_launcher_is_flagged(declared_builds):
+    """A query is registered with ``materializes=True`` exactly when
+    its builder launches Spark jobs while its DataFrame is being
+    built. An unflagged launcher would let an unauthenticated GET on
+    the REST registry run those jobs (ADVICE r5); a flag no
+    measurement supports would hide a servable query. The jobs are
+    measured during the shared build pass, so jobs started deep
+    inside called operators, eager checkpoints and stream threads all
+    count."""
     from kafka_streams_pipeline_spark import inventory
 
-    markers = (
-        "writeStream", "mkdtemp", "upsert_corpus", ".collect()",
-        ".first()", ".isEmpty()",
-    )
-
-    def called_operator_sources(fn) -> list[str]:
-        """Sources of package functions the builder calls — ONE level
-        of recursion (ADVICE r13: builders that execute via called
-        operators, e.g. q_skyline's collect inside pareto.skyline_2d,
-        were invisible to the own-source grep)."""
-        try:
-            src = textwrap.dedent(inspect.getsource(fn))
-            tree = ast.parse(src)
-        except (OSError, SyntaxError):
-            return []
-        out = []
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call):
-                continue
-            f = node.func
-            target = None
-            if isinstance(f, ast.Name):
-                target = fn.__globals__.get(f.id)
-            elif isinstance(f, ast.Attribute) and isinstance(
-                f.value, ast.Name
-            ):
-                mod = fn.__globals__.get(f.value.id)
-                target = getattr(mod, f.attr, None)
-            if (
-                callable(target)
-                and str(getattr(target, "__module__", "")).startswith(
-                    "kafka_streams_pipeline_spark"
-                )
-            ):
-                try:
-                    out.append(inspect.getsource(target))
-                except (OSError, TypeError):
-                    continue
-        return out
-
-    missing = []
-    for name, fn in inventory.QUERIES.items():
-        sources = [inspect.getsource(fn)]
-        sources.extend(called_operator_sources(fn))
-        executes = any(
-            marker in src for src in sources for marker in markers
-        )
-        if executes and name not in inventory.MATERIALIZING:
-            missing.append(name)
-    assert not missing, (
-        "builders that execute at construction time (directly or via "
-        "a called operator) but are missing from MATERIALIZING: "
-        f"{missing}"
+    launchers = {name: jobs for name, (_, jobs) in declared_builds.items() if jobs}
+    unflagged = {
+        name: jobs
+        for name, jobs in launchers.items()
+        if name not in inventory.MATERIALIZING
+    }
+    stale = sorted(inventory.MATERIALIZING - set(launchers))
+    assert not unflagged and not stale, (
+        "builders that launch Spark jobs at construction time but are "
+        f"not registered with materializes=True (name: jobs): {unflagged}; "
+        f"registered with materializes=True but launch no job: {stale}"
     )

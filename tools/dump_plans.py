@@ -1,9 +1,8 @@
-"""Dump .explain("formatted") for bench queries to plans/<round>/.
+"""Dump .explain("formatted") for bench queries to .bench_out/plans/.
 
 Usage: python tools/dump_plans.py <suffix> [query ...]
-(round dir from $SPARK_GRAFT_PLANS_ROUND, default r17)
 
-Writes plans/<round>/<query>_<suffix>.txt for each named bench query
+Writes .bench_out/plans/<query>_<suffix>.txt for each named bench query
 (default: all BENCH_QUERIES) at sf0.1 — the optimization round's
 plan-shape evidence (guide §1: capture the plan before and after
 every substantive change).
@@ -26,8 +25,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".bench_out",
         "plans",
-        os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r17"),
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="kspipeline-plans")

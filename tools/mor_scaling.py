@@ -10,7 +10,7 @@ rewrite cost and the second-dimension scan-skipping ratio from
 runtime FileSourceScan metrics.
 
 Usage:
-    python tools/mor_scaling.py [--rows 2000000] [--out MOR_SCALING_r09.json]
+    python tools/mor_scaling.py [--rows 2000000] [--out .bench_out/mor_scaling.json]
 
 Synthetic (k, v) rows — nothing under /root/testdata is touched;
 stores and layouts go to a temp dir.
@@ -79,7 +79,7 @@ def scan_rows_out(df) -> int:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=2_000_000)
-    ap.add_argument("--out", default="MOR_SCALING_r09.json")
+    ap.add_argument("--out", default=".bench_out/mor_scaling.json")
     args = ap.parse_args()
 
     spark = get_spark(app_name="kspipeline-mor-scaling")
@@ -205,6 +205,7 @@ def main() -> None:
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
     with open(args.out, "w") as f:
         json.dump(result, f, indent=1)
     print(json.dumps(result))

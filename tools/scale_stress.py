@@ -15,7 +15,7 @@ union-find cap (SMALL_COMPONENTS_MAX_EDGES), where the alternating
 large-star/small-star solver must run.
 
 Usage:
-    python tools/scale_stress.py [--mults 1,2,5,10] [--out SCALE_SWEEP_r06.json]
+    python tools/scale_stress.py [--mults 1,2,5,10] [--out .bench_out/scale_stress.json]
 
 Writes one JSON file with the sweep table; nothing in /root/testdata
 is touched (generated parquet goes to a temp dir).
@@ -672,7 +672,7 @@ def F_ts_cast(spark, col):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mults", default="1,2,5,10")
-    ap.add_argument("--out", default="SCALE_SWEEP_r08.json")
+    ap.add_argument("--out", default=".bench_out/scale_stress.json")
     ap.add_argument(
         "--ts-only", action="store_true",
         help="run only the timeseries events sweep and merge the "
@@ -749,6 +749,7 @@ def main() -> None:
         "theil_sen_range": tsrange,
         "cosine_ceiling": cos,
     }
+    os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
     with open(args.out, "w") as f:
         json.dump(payload, f, indent=2)
     print(json.dumps({"wrote": args.out, "big_graph_ok": big["label_mismatches"] == 0}))

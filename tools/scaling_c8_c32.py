@@ -13,7 +13,7 @@ parallelism, which is exactly what this artifact must measure).
 
 Usage:
     python tools/scaling_c8_c32.py [--mult 10] [--runs 3]
-        [--out SCALING_SF1_r17.json]
+        [--out .bench_out/scaling_c8_c32.json]
     python tools/scaling_c8_c32.py --child <dir> <cpus> <runs>  (internal)
 """
 
@@ -80,7 +80,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mult", type=int, default=10)
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--out", default="SCALING_SF1_r17.json")
+    ap.add_argument("--out", default=".bench_out/scaling_c8_c32.json")
     ap.add_argument("--child", nargs=3, metavar=("DIR", "CPUS", "RUNS"))
     args = ap.parse_args()
     if args.child:
@@ -142,6 +142,7 @@ def main() -> None:
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
     with open(args.out, "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)
     print(json.dumps(result))

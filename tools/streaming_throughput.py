@@ -17,7 +17,7 @@ oracle. Two modes bracket the deployment envelope:
 
 Usage:
     python tools/streaming_throughput.py [--chunks 20] \
-        [--out STREAM_THROUGHPUT_r08.json]
+        [--out .bench_out/streaming_throughput.json]
 """
 
 from __future__ import annotations
@@ -117,7 +117,7 @@ def run_mode(spark, rows: list, n_chunks: int, label: str, **knobs) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--chunks", type=int, default=20)
-    ap.add_argument("--out", default="STREAM_THROUGHPUT_r08.json")
+    ap.add_argument("--out", default=".bench_out/streaming_throughput.json")
     args = ap.parse_args()
 
     spark = get_spark(app_name="kspipeline-stream-tput")
@@ -153,6 +153,7 @@ def main() -> None:
             "(BASELINE.md)"
         ),
     }
+    os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
     with open(args.out, "w") as f:
         json.dump(payload, f, indent=2)
     print(json.dumps({"wrote": args.out,
