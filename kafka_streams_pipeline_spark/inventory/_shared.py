@@ -1,15 +1,21 @@
 """Helpers shared by every inventory domain module: fixture table
-loading, the exact-integer money sum convention, and the standing
+loading, the exact-integer money sum convention, the standing
 materialized view (built once per (process, fixture dir) and served
-from a ws_date-partitioned parquet store) with its DuckDB CTE twin.
+from a ws_date-partitioned parquet store) with its DuckDB CTE twin,
+and the replay harness every streaming replay row runs through.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import shutil
 import tempfile
+import time
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_pipeline_spark.operators.view import build_view
@@ -19,6 +25,7 @@ from kafka_streams_pipeline_spark.sources.readings import (
 )
 from kafka_streams_pipeline_spark.sources.sinks import read_view, write_view
 from kafka_streams_pipeline_spark.sources.tables import load_table
+from kafka_streams_pipeline_spark.streaming.pipeline import await_replay
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -75,3 +82,142 @@ v AS (
     GROUP BY 1, 2
 )
 """
+
+
+def _sorted_replay_rows(spark: SparkSession, sf_dir: str) -> list:
+    """The fixture's sensor readings in replay order."""
+    return sorted(
+        readings_from_events(_t(spark, sf_dir, "events")).collect(),
+        key=lambda r: (r["timestamp"], r["sensorId"]),
+    )
+
+
+def _readings_chunks(
+    spark: SparkSession, sf_dir: str, inject_dups: bool = False
+) -> list:
+    """The sorted readings cut into 3 time-ordered replay chunks. Time
+    order keeps every row inside the 24 h watermark grace. With
+    ``inject_dups``, deterministic duplicates repeat every 7th row
+    within the SAME chunk and every 7th row of the previous chunk's
+    tail in the NEXT one (cross-batch state hit; a repeat beyond the
+    watermark is dropped as late — either path preserves DISTINCT
+    semantics, and duplicates are idempotent for the HLL register
+    max). Replays that count every physical row leave it off."""
+    rows = _sorted_replay_rows(spark, sf_dir)
+    per = -(-len(rows) // 3)
+    chunks = [rows[c * per : (c + 1) * per] for c in range(3)]
+    if inject_dups:
+        # clamp the tail start: a negative start would resolve from
+        # the list END at small scale factors, silently injecting no
+        # cross-batch duplicates
+        chunks = [
+            ch + ch[::7] + rows[max(0, c * per - 200) : c * per : 7]
+            for c, ch in enumerate(chunks)
+        ]
+    return chunks
+
+
+def _readings_ts(stream: DataFrame) -> DataFrame:
+    """A replayed readings stream with its event-time column."""
+    return stream.withColumn("ts", F.timestamp_millis(F.col("timestamp")))
+
+
+# --- Replay harness --------------------------------------------------------
+# A streaming row replays a bounded stream deterministically:
+# one JSONL file per micro-batch (maxFilesPerTrigger=1), files in
+# ascending modification time (the file source replays in MTIME
+# order, and back-to-back writes tie — an arbitrary tie-break can run
+# a later chunk first, advance the watermark and silently late-drop
+# every earlier chunk), an availableNow trigger, and a wait that fails
+# loudly. Rows supply only the chunks, the stream plan and the sink.
+
+
+@contextlib.contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A fresh ``kspipeline-<prefix>-`` temp directory, removed on exit
+    whether or not the body raised."""
+    base = tempfile.mkdtemp(prefix=f"kspipeline-{prefix}-")
+    try:
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _write_chunks(src: str, chunks: list) -> int:
+    """Write each non-empty chunk (a list of dicts or Rows) as one JSONL
+    file with a strictly ascending mtime, continuing after any files
+    already in ``src`` so a second write replays after the first.
+    Returns the number of files written."""
+    os.makedirs(src, exist_ok=True)
+    old = [os.path.join(src, f) for f in os.listdir(src)]
+    mtime = max(map(os.path.getmtime, old), default=time.time() - 86_400)
+    n = 0
+    for chunk in chunks:
+        if not chunk:
+            continue
+        mtime += 1
+        path = os.path.join(src, f"chunk{len(old) + n:03d}.json")
+        with open(path, "w") as f:
+            for r in chunk:
+                f.write(json.dumps(r.asDict() if isinstance(r, Row) else r))
+                f.write("\n")
+        os.utime(path, (mtime, mtime))
+        n += 1
+    return n
+
+
+def _replay(
+    spark: SparkSession,
+    base: str,
+    chunks: list,
+    schema,
+    build: Callable[[DataFrame], DataFrame],
+    sink: Callable[[DataFrame, int], None],
+    output_mode: str | None = None,
+) -> None:
+    """Write ``chunks`` under ``base`` and replay them through
+    ``build(stream)`` into ``foreachBatch(sink)`` with availableNow,
+    one file per micro-batch, checkpointed under ``base``. A second
+    call on the same ``base`` resumes from that checkpoint (the
+    restart case). Raises the query's own error or a timeout from
+    ``await_replay``, and RuntimeError unless this run planned exactly
+    one data micro-batch per file it wrote (a batch re-run from an
+    uncommitted offset is not new; a trailing no-data batch that only
+    advances the watermark reads no file)."""
+    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    n_files = _write_chunks(src, chunks)
+    offsets = os.path.join(ckpt, "offsets")
+    logged = os.listdir(offsets) if os.path.isdir(offsets) else []
+    planned = max((int(f) for f in logged if f.isdigit()), default=-1)
+    writer = build(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
+    ).writeStream
+    if output_mode:
+        writer = writer.outputMode(output_mode)
+    q = (
+        writer.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        await_replay(q)
+    finally:
+        # termination and the active-queries map update are not atomic:
+        # a restart on the same checkpoint right after this returns can
+        # die with "multiple streaming queries are concurrently using"
+        for _ in range(100):
+            if all(a.id != q.id for a in spark.streams.active):
+                break
+            time.sleep(0.1)
+    # a data batch advances the source offset (one file each); a
+    # no-data batch that only moves the watermark leaves it in place
+    made = sum(
+        1 for p in q.recentProgress
+        if p["batchId"] > planned
+        and p["sources"][0]["startOffset"] != p["sources"][0]["endOffset"]
+    )
+    if made != n_files:
+        raise RuntimeError(
+            f"replay planned {made} data micro-batches for {n_files} files"
+        )

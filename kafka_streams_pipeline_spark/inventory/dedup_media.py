@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_pipeline_spark.inventory._registry import ORACLES, register
-from kafka_streams_pipeline_spark.inventory._shared import _t
+from kafka_streams_pipeline_spark.inventory._shared import _scratch, _t
 from kafka_streams_pipeline_spark.operators import dedup as _dedup
 from kafka_streams_pipeline_spark.operators import multimodal as _mm
 from kafka_streams_pipeline_spark.operators import similarity as _sim
@@ -847,16 +847,13 @@ def q_media_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan (payloads never shuffle: decode emits typed columns
     partition-locally)."""
     import os
-    import shutil
-    import tempfile
 
     docs = (
         _t(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 200)
         .select("doc_id")
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-binsrc-")
-    try:
+    with _scratch("binsrc") as base:
         for r in _mm.wav_from_documents(docs).collect():
             with open(
                 os.path.join(base, f"a{int(r['asset_id']):06d}.wav"), "wb"
@@ -883,8 +880,6 @@ def q_media_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -1008,8 +1003,6 @@ def q_media_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     every media decode). See operators/multimodal.py
     build_tar_shard/parse_tar_members/untar_members."""
     import os
-    import shutil
-    import tempfile
 
     docs = (
         _t(spark, sf_dir, "documents")
@@ -1022,8 +1015,7 @@ def q_media_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         shards.setdefault(r["doc_id"] // 25, []).append(
             (f"{r['doc_id']:08d}.txt", r["text"].encode())
         )
-    base = tempfile.mkdtemp(prefix="kspipeline-tarshard-")
-    try:
+    with _scratch("tarshard") as base:
         for sid, members in shards.items():
             with open(
                 os.path.join(base, f"shard{sid:05d}.tar"), "wb"
@@ -1040,8 +1032,6 @@ def q_media_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -1149,8 +1139,6 @@ def q_media_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary). See operators/multimodal.py build_warc_shard/
     parse_warc_records/unwarc_records."""
     import os
-    import shutil
-    import tempfile
 
     docs = (
         _t(spark, sf_dir, "documents")
@@ -1166,8 +1154,7 @@ def q_media_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                 r["text"].encode(),
             )
         )
-    base = tempfile.mkdtemp(prefix="kspipeline-warcshard-")
-    try:
+    with _scratch("warcshard") as base:
         for sid, records in shards.items():
             with open(
                 os.path.join(base, f"shard{sid:05d}.warc"), "wb"
@@ -1184,8 +1171,6 @@ def q_media_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -1220,8 +1205,6 @@ def q_media_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytests in test_extensions. See operators/multimodal.py
     build_warc_gz_shard/parse_warc_gz_records/unwarc_gz_records."""
     import os
-    import shutil
-    import tempfile
 
     docs = (
         _t(spark, sf_dir, "documents")
@@ -1237,8 +1220,7 @@ def q_media_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
                 r["text"].encode(),
             )
         )
-    base = tempfile.mkdtemp(prefix="kspipeline-warcgz-")
-    try:
+    with _scratch("warcgz") as base:
         for sid, records in shards.items():
             with open(
                 os.path.join(base, f"shard{sid:05d}.warc.gz"), "wb"
@@ -1257,8 +1239,6 @@ def q_media_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -1290,8 +1270,6 @@ def q_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     range flips the pinned-TRUE bit. See operators/multimodal.py
     warc_gz_cdx/_warc_gz_members."""
     import os
-    import shutil
-    import tempfile
 
     docs = (
         _t(spark, sf_dir, "documents")
@@ -1307,8 +1285,7 @@ def q_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
                 r["text"].encode(),
             )
         )
-    base = tempfile.mkdtemp(prefix="kspipeline-warccdx-")
-    try:
+    with _scratch("warccdx") as base:
         for sid, records in shards.items():
             with open(
                 os.path.join(base, f"shard{sid:05d}.warc.gz"), "wb"
@@ -1327,8 +1304,6 @@ def q_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -1356,8 +1331,6 @@ def q_media_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     Payloads never shuffle. See operators/multimodal.py
     build_zip_shard/parse_zip_members/unzip_members."""
     import os
-    import shutil
-    import tempfile
 
     docs = (
         _t(spark, sf_dir, "documents")
@@ -1370,8 +1343,7 @@ def q_media_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         shards.setdefault(r["doc_id"] // 25, []).append(
             (f"{r['doc_id']:08d}.txt", r["text"].encode())
         )
-    base = tempfile.mkdtemp(prefix="kspipeline-zipshard-")
-    try:
+    with _scratch("zipshard") as base:
         for sid, members in shards.items():
             with open(
                 os.path.join(base, f"shard{sid:05d}.zip"), "wb"
@@ -1388,8 +1360,6 @@ def q_media_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 

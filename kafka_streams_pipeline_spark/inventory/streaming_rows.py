@@ -7,7 +7,6 @@ windows, and the geohash-ring snapshot.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,8 +18,14 @@ from kafka_streams_pipeline_spark.inventory._registry import ORACLES, register
 from kafka_streams_pipeline_spark.inventory._shared import (
     VIEW_CTE,
     _cents_sum,
+    _readings_chunks,
+    _readings_ts,
+    _replay,
+    _scratch,
     _served_view,
+    _sorted_replay_rows,
     _t,
+    _write_chunks,
 )
 from kafka_streams_pipeline_spark.operators import dedup as _dedup
 from kafka_streams_pipeline_spark.operators import similarity as _sim
@@ -29,12 +34,28 @@ from kafka_streams_pipeline_spark.operators import skew as _skew
 from kafka_streams_pipeline_spark.operators import text as _text
 from kafka_streams_pipeline_spark.operators import timeseries as _ts_ops
 from kafka_streams_pipeline_spark.operators.view import build_view
+from kafka_streams_pipeline_spark.schema import READING_SCHEMA
 from kafka_streams_pipeline_spark.sources.readings import (
     EVENT_TYPE_GEOHASH,
     readings_from_events,
     readings_from_events_sql,
 )
 from kafka_streams_pipeline_spark.sources.sinks import read_view, write_view
+
+
+_HOURLY_SCHEMA = "event_type string, h_ms long, c long"
+
+
+def _hourly_rows(spark: SparkSession, sf_dir: str) -> list:
+    """The shared hourly_cents_series as (event_type, h_ms, c) tuples
+    in (h_ms, event_type) order."""
+    hourly = _ts_ops.hourly_cents_series(
+        _t(spark, sf_dir, "events")
+    ).orderBy("h_ms", "event_type")
+    return [
+        (r["event_type"], int(r["h_ms"]), int(r["c"]))
+        for r in hourly.collect()
+    ]
 
 
 def _hour_chunk_split(rows: list) -> list:
@@ -48,31 +69,12 @@ def _hour_chunk_split(rows: list) -> list:
         )
     hours = sorted({h for _, h, _ in rows})
     cut1, cut2 = hours[len(hours) // 3], hours[2 * len(hours) // 3]
-    return [
-        [r for r in rows if r[1] < cut1],
-        [r for r in rows if cut1 <= r[1] < cut2],
-        [r for r in rows if cut2 <= r[1]],
-    ]
-
-
-def _write_hour_chunks(rows: list, src: str) -> None:
-    """Write the 3 hour-contiguous chunks as JSONL replay files with
-    ASCENDING mtimes — file-stream replay order is mtime order, and
-    back-to-back writes tie (the round-6 lesson: an arbitrary
-    tie-break advances the watermark and silently late-drops earlier
-    chunks). ONE shared writer so a fix to the replay discipline
-    cannot miss a copy (review finding, round 16)."""
-    import json as _json
-    import time as _time
-
-    mtime0 = _time.time() - 86_400
-    for i, chunk in enumerate(_hour_chunk_split(rows)):
-        path = os.path.join(src, f"hours{i}.json")
-        with open(path, "w") as f:
-            for et, h, c in chunk:
-                f.write(_json.dumps(
-                    {"event_type": et, "h_ms": h, "c": c}) + "\n")
-        os.utime(path, (mtime0 + i, mtime0 + i))
+    chunks: list = [[], [], []]
+    for et, h, c in rows:
+        chunks[(h >= cut1) + (h >= cut2)].append(
+            {"event_type": et, "h_ms": h, "c": c}
+        )
+    return chunks
 
 
 # --- Streaming driver rows (VERDICT r4 item 8) -----------------------------
@@ -80,108 +82,9 @@ def _write_hour_chunks(rows: list, src: str) -> None:
 # differentials (X2g streaming dedup, X7d streaming HLL state) gain
 # DuckDB-oracle driver rows here: each query replays the readings
 # stream through a REAL availableNow structured-streaming job (file
-# source, one file per micro-batch, checkpointed) and returns the
-# collected emissions as a batch frame the oracle can hash-compare.
-
-
-def _sorted_replay_rows(spark: SparkSession, sf_dir: str) -> list:
-    return sorted(
-        readings_from_events(_t(spark, sf_dir, "events")).collect(),
-        key=lambda r: (r["timestamp"], r["sensorId"]),
-    )
-
-
-def _write_replay_chunks(
-    rows: list, src: str, n_chunks: int = 3, inject_dups: bool = True
-) -> None:
-    """Write time-ordered JSON chunks (one file = one micro-batch
-    under maxFilesPerTrigger=1). Time order keeps every row inside
-    the 24 h watermark grace — the same replay discipline as
-    tests/test_streaming.py. With ``inject_dups``, deterministic
-    duplicates repeat every 7th row within the SAME chunk and every
-    7th row of the previous chunk's tail in the NEXT one (cross-batch
-    state hit; a repeat beyond the watermark is dropped as late —
-    either path preserves DISTINCT semantics, and duplicates are
-    idempotent for the HLL register max). Replays that must count
-    every physical row (the windowed view) pass inject_dups=False."""
-    import json as _json
-    import time as _time
-
-    os.makedirs(src, exist_ok=True)
-    per = (len(rows) + n_chunks - 1) // n_chunks
-    mtime0 = _time.time() - 86_400
-    for c in range(n_chunks):
-        chunk = rows[c * per : (c + 1) * per]
-        dups: list = []
-        if inject_dups:
-            dups = chunk[::7]
-            if c > 0:
-                # ADVICE r5: clamp the start — a negative start would
-                # resolve from the list END at small scale factors,
-                # silently injecting no cross-batch duplicates.
-                dups = dups + rows[max(0, c * per - 200) : c * per : 7]
-        path = os.path.join(src, f"chunk{c}.json")
-        with open(path, "w") as f:
-            for r in chunk + dups:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        # The file source orders micro-batches by MODIFICATION TIME,
-        # and files written back-to-back tie — an arbitrary tie-break
-        # can process a later-timestamped chunk first, advancing the
-        # watermark past the earlier chunks and silently dropping
-        # their rows as late (caught when a 21-chunk session replay
-        # lost 40% of its sessions nondeterministically). Explicit
-        # ascending mtimes make the replay order deterministic.
-        os.utime(path, (mtime0 + c, mtime0 + c))
-
-
-def _replay_readings_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    op,
-    output_mode: str,
-    inject_dups: bool = True,
-) -> list:
-    """Run ``op`` over an availableNow file stream of the replay
-    chunks (one file per micro-batch so state genuinely crosses batch
-    boundaries) and return the per-batch collected emissions.
-    ``inject_dups=False`` for ops that count physical rows."""
-    import shutil
-
-    from kafka_streams_pipeline_spark.schema import READING_SCHEMA
-
-    base = tempfile.mkdtemp(prefix="kspipeline-replay-")
-    src = os.path.join(base, "src")
-    _write_replay_chunks(
-        _sorted_replay_rows(spark, sf_dir), src, inject_dups=inject_dups
-    )
-    batches: list = []
-
-    def sink(batch_df: DataFrame, _epoch_id: int) -> None:
-        batches.append(batch_df.collect())
-
-    stream = (
-        spark.readStream.schema(READING_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("timestamp")))
-    )
-    q = (
-        op(stream)
-        .writeStream.outputMode(output_mode)
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # ADVICE r5: surface a timeout as a clear error instead of
-    # collecting partial emissions and deleting the source/checkpoint
-    # out from under a still-running query.
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("availableNow replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
-    return batches
+# source, one file per micro-batch, checkpointed — see _shared._replay)
+# and returns the collected emissions as a batch frame the oracle can
+# hash-compare.
 
 
 @register(
@@ -208,18 +111,21 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_dedup,
     )
 
-    batches = _replay_readings_stream(
-        spark,
-        sf_dir,
-        lambda s: streaming_dedup(
-            s, keys=("sensorId", "timestamp"), grace="24 hours"
-        ).select(
-            F.col("sensorId").alias("sensor_id"),
-            F.col("timestamp").alias("ts_ms"),
-        ),
-        "append",
-    )
-    rows = [(r["sensor_id"], r["ts_ms"]) for b in batches for r in b]
+    rows: list = []
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir, inject_dups=True),
+            READING_SCHEMA,
+            lambda s: streaming_dedup(
+                _readings_ts(s), keys=("sensorId", "timestamp"),
+                grace="24 hours",
+            ).select(
+                F.col("sensorId").alias("sensor_id"),
+                F.col("timestamp").alias("ts_ms"),
+            ),
+            lambda df, _e: rows.extend(tuple(r) for r in df.collect()),
+            "append",
+        )
     return spark.createDataFrame(rows, "sensor_id string, ts_ms bigint")
 
 
@@ -274,18 +180,18 @@ def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_sensor_distinct,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, hll_sensor_distinct, "update"
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["gh"]] = (
-                r["n_registers_used"],
-                r["register_checksum"],
-            )
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir, inject_dups=True),
+            READING_SCHEMA,
+            lambda s: hll_sensor_distinct(_readings_ts(s)),
+            lambda df, _e: final.update((r["gh"], r) for r in df.collect()),
+            "update",
+        )
     return spark.createDataFrame(
-        [(k, n, c) for k, (n, c) in final.items()],
+        [(k, r["n_registers_used"], r["register_checksum"])
+         for k, r in final.items()],
         "gh string, n_registers_used bigint, register_checksum bigint",
     )
 
@@ -352,40 +258,29 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointing — so the driver oracle certifies the exact
     deployed path. See streaming/pipeline.py
     start_file_stream_pipeline."""
-    import shutil
-
     from kafka_streams_pipeline_spark.streaming.pipeline import (
+        await_replay,
         read_view as _stream_read_view,
         start_file_stream_pipeline,
     )
 
-    base = tempfile.mkdtemp(prefix="kspipeline-sview-")
-    src = os.path.join(base, "src")
-    view_dir = os.path.join(base, "view")
-    ckpt = os.path.join(base, "ckpt")
-    _write_replay_chunks(
-        _sorted_replay_rows(spark, sf_dir), src, inject_dups=False
-    )
-    q = start_file_stream_pipeline(
-        spark, src, view_dir, ckpt,
-        available_now=True, max_files_per_trigger=1,
-        state_partitions=8, rocksdb_state=True,
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("streaming-view replay timed out after 300 s")
-    out = _stream_read_view(spark, view_dir).select(
-        "gh",
-        F.unix_millis("window_start").alias("ws_ms"),
-        F.col("count").alias("cnt"),
-        F.round("sum", 6).alias("sum_val"),
-        F.round("avg", 6).alias("avg_val"),
-    )
-    rows = out.collect()
-    schema = out.schema
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    with _scratch("sview") as base:
+        src = os.path.join(base, "src")
+        view_dir = os.path.join(base, "view")
+        _write_chunks(src, _readings_chunks(spark, sf_dir))
+        await_replay(start_file_stream_pipeline(
+            spark, src, view_dir, os.path.join(base, "ckpt"),
+            available_now=True, max_files_per_trigger=1,
+            state_partitions=8, rocksdb_state=True,
+        ))
+        out = _stream_read_view(spark, view_dir).select(
+            "gh",
+            F.unix_millis("window_start").alias("ws_ms"),
+            F.col("count").alias("cnt"),
+            F.round("sum", 6).alias("sum_val"),
+            F.round("avg", 6).alias("avg_val"),
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -417,15 +312,22 @@ def q_streaming_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_sensor_totals,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, running_sensor_totals, "update", inject_dups=False
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["sensorId"]] = (r["count"], r["sum"], r["avg"])
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: running_sensor_totals(_readings_ts(s)),
+            lambda df, _e: final.update(
+                (r["sensorId"], r) for r in df.collect()
+            ),
+            "update",
+        )
+    return _sensor_totals(spark, final)
+
+
+def _sensor_totals(spark: SparkSession, final: dict) -> DataFrame:
     out = spark.createDataFrame(
-        [(k, c, s, a) for k, (c, s, a) in final.items()],
+        [(k, r["count"], r["sum"], r["avg"]) for k, r in final.items()],
         "sensorId string, n_readings long, sum_raw double, avg_raw double",
     )
     return out.select(
@@ -465,19 +367,19 @@ def q_streaming_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold_alert_latch,
     )
 
-    batches = _replay_readings_stream(
-        spark,
-        sf_dir,
-        lambda s: threshold_alert_latch(s, threshold=150.0),
-        "update",
-        inject_dups=False,
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["sensorId"]] = (r["n_alerts"], r["latched"])
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: threshold_alert_latch(_readings_ts(s), threshold=150.0),
+            lambda df, _e: final.update(
+                (r["sensorId"], r) for r in df.collect()
+            ),
+            "update",
+        )
     return spark.createDataFrame(
-        [(k, n, 1 if l else 0) for k, (n, l) in final.items()],
+        [(k, r["n_alerts"], 1 if r["latched"] else 0)
+         for k, r in final.items()],
         "sensorId string, n_alerts long, latched long",
     )
 
@@ -520,8 +422,6 @@ def q_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     row proves: CSV write/read fidelity for long/double/string
     columns AND that corrupt rows cannot leak into an aggregate —
     the oracle aggregates the clean parquet directly."""
-    import shutil
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -530,16 +430,6 @@ def q_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    base = tempfile.mkdtemp(prefix="kspipeline-csv-")
-    path = os.path.join(base, "events_csv")
-    events = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    events.write.mode("overwrite").csv(path)
-    # inject malformed lines the PERMISSIVE parse must reject
-    with open(os.path.join(path, "zz_corrupt.csv"), "w") as f:
-        f.write("not_a_long,alpha\n")
-        f.write('12,34,"unterminated,NaNff\n')
     schema = StructType(
         [
             StructField("event_id", LongType()),
@@ -549,30 +439,36 @@ def q_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("_corrupt", StringType()),
         ]
     )
-    decoded = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(path)
-        .where(
-            F.col("_corrupt").isNull()
-            # required-field validity guard (the with_event_time
-            # policy): a row that parsed but lost a required field —
-            # e.g. an unterminated quote swallowing the tail of the
-            # line — is as invalid as a corrupt one. The fixture has
-            # zero legitimate nulls in these columns (asserted by the
-            # oracle matching count(*)).
-            & F.col("event_id").isNotNull()
-            & F.col("event_type").isNotNull()
-            & F.col("value").isNotNull()
+    with _scratch("csv") as base:
+        path = os.path.join(base, "events_csv")
+        _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        ).write.mode("overwrite").csv(path)
+        # inject malformed lines the PERMISSIVE parse must reject
+        with open(os.path.join(path, "zz_corrupt.csv"), "w") as f:
+            f.write("not_a_long,alpha\n")
+            f.write('12,34,"unterminated,NaNff\n')
+        decoded = (
+            spark.read.schema(schema)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt")
+            .csv(path)
+            .where(
+                F.col("_corrupt").isNull()
+                # required-field validity guard (the with_event_time
+                # policy): a row that parsed but lost a required field
+                # — e.g. an unterminated quote swallowing the tail of
+                # the line — is as invalid as a corrupt one. The
+                # fixture has zero legitimate nulls in these columns
+                # (asserted by the oracle matching count(*)).
+                & F.col("event_id").isNotNull()
+                & F.col("event_type").isNotNull()
+                & F.col("value").isNotNull()
+            )
+            .drop("_corrupt")
         )
-        .drop("_corrupt")
-    )
-    out = _source_agg(decoded)
-    rows = out.collect()
-    schema_out = out.schema
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema_out)
+        out = _source_agg(decoded)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register("q_orc_source", oracle=_SOURCE_AGG_ORACLE, materializes=True)
@@ -582,18 +478,13 @@ def q_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate-capable typed columns. Proves the engine's source layer
     is format-agnostic: parquet (everywhere), CSV (q_csv_source),
     JSON (streaming replays + q_json_extract), ORC (here)."""
-    import shutil
-
-    base = tempfile.mkdtemp(prefix="kspipeline-orc-")
-    path = os.path.join(base, "events_orc")
-    _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    ).write.mode("overwrite").orc(path)
-    out = _source_agg(spark.read.orc(path))
-    rows = out.collect()
-    schema_out = out.schema
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema_out)
+    with _scratch("orc") as base:
+        path = os.path.join(base, "events_orc")
+        _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        ).write.mode("overwrite").orc(path)
+        out = _source_agg(spark.read.orc(path))
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -962,13 +853,16 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_cell_state,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, cms_cell_state, "update", inject_dups=False
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["gh"]] = r["cells"]
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: cms_cell_state(_readings_ts(s)),
+            lambda df, _e: final.update(
+                (r["gh"], r["cells"]) for r in df.collect()
+            ),
+            "update",
+        )
     sensors = (
         readings_from_events(_t(spark, sf_dir, "events"))
         .where(F.col("sensorId").isNotNull())
@@ -989,37 +883,107 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _write_event_chunks(
-    rows: list, src: str, cuts: list[int], max_chunks: int = 24
-) -> None:
-    """Write time-ordered event JSON chunks (one file = one
-    micro-batch under maxFilesPerTrigger=1), split at the given
-    sorted row indexes — the events-shaped twin of
-    _write_replay_chunks. Time order keeps every row inside the 24 h
-    watermark grace; the caller picks ``cuts`` so the property under
-    test (e.g. a join match spanning two micro-batches) actually
-    occurs instead of depending on where an even split lands."""
-    import json as _json
-    import time as _time
+_EVENT_SCHEMA = "event_id long, ts_ms long, user_id long, event_type string"
 
-    os.makedirs(src, exist_ok=True)
+
+def _cut_chunks(rows: list, cuts: list[int], max_chunks: int = 24) -> list:
+    """Split time-ordered rows at the given row indexes (the first
+    ``max_chunks`` − 1 of them, sorted) — the caller picks ``cuts`` so
+    the property under test (e.g. a join match spanning two
+    micro-batches) actually occurs instead of depending on where an
+    even split lands."""
     bounds = [0] + sorted(set(cuts))[: max_chunks - 1] + [len(rows)]
-    mtime0 = _time.time() - 86_400
-    seq = 0
-    for c in range(len(bounds) - 1):
-        lo, hi = bounds[c], bounds[c + 1]
-        if lo >= hi:
-            continue
-        path = os.path.join(src, f"chunk{c:03d}.json")
-        with open(path, "w") as f:
-            for r in rows[lo:hi]:
-                f.write(_json.dumps(r) + "\n")
-        # ascending mtimes: the file source orders micro-batches by
-        # modification time and same-instant writes tie arbitrarily —
-        # an out-of-order chunk advances the watermark and late-drops
-        # every earlier chunk's rows (see _write_replay_chunks).
-        os.utime(path, (mtime0 + seq, mtime0 + seq))
-        seq += 1
+    return [rows[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
+
+
+def _purchase_click_rows(spark: SparkSession, sf_dir: str) -> tuple:
+    """Purchase and click events as time-ordered replay rows, plus a
+    cut right before every purchase some click of the same user
+    precedes by under 10 minutes (a tiny ids-only batch pre-join), so
+    each such match's click arrives in an earlier micro-batch and must
+    be served from the join STATE STORE."""
+    ev = (
+        _t(spark, sf_dir, "events")
+        .select(
+            "event_id",
+            F.unix_millis("ts").alias("ts_ms"),
+            "user_id",
+            "event_type",
+        )
+        .where(F.col("event_type").isin("purchase", "click"))
+        .collect()
+    )
+    rows = sorted(
+        (r.asDict() for r in ev), key=lambda r: (r["ts_ms"], r["event_id"])
+    )
+    ev_df = spark.createDataFrame(rows, _EVENT_SCHEMA)
+    pp = ev_df.where(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("p_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts_ms").alias("p_ms"),
+    )
+    cc = ev_df.where(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user"), F.col("ts_ms").alias("c_ms")
+    )
+    matched = (
+        pp.join(
+            cc,
+            (F.col("c_user") == F.col("p_user"))
+            & (F.col("c_ms") >= F.col("p_ms") - 600_000)
+            & (F.col("c_ms") < F.col("p_ms")),
+        )
+        .select("p_id")
+        .distinct()
+        .collect()
+    )
+    idx = {r["event_id"]: i for i, r in enumerate(rows)}
+    return rows, [idx[r["p_id"]] for r in matched]
+
+
+def _purchase_click_join(stream: DataFrame, how: str) -> DataFrame:
+    """The streaming interval join of purchases (p_id, user_id, p_ts)
+    to the same user's clicks (c_id, c_user, c_ts) in the preceding 10
+    minutes, both sides from ONE replayed event stream with 24 h
+    watermarks."""
+    stream = stream.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
+    p = (
+        stream.where(F.col("event_type") == "purchase")
+        .withWatermark("ts", "24 hours")
+        .select(
+            F.col("event_id").alias("p_id"),
+            "user_id",
+            F.col("ts").alias("p_ts"),
+        )
+    )
+    c = (
+        stream.where(F.col("event_type") == "click")
+        .withWatermark("ts", "24 hours")
+        .select(
+            F.col("event_id").alias("c_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+        )
+    )
+    return p.join(
+        c,
+        (F.col("c_user") == F.col("user_id"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
+        & (F.col("c_ts") < F.col("p_ts")),
+        how,
+    )
+
+
+def _sentinels(rows: list) -> list:
+    """Append one far-future row per side (48 h past the last event:
+    with a 24 h grace the final watermark lands 24 h past every real
+    row). user_id -1 matches nothing; callers filter the ids < 0."""
+    sentinel_ms = rows[-1]["ts_ms"] + 48 * 3_600_000
+    return rows + [
+        {"event_id": -1, "ts_ms": sentinel_ms,
+         "user_id": -1, "event_type": "click"},
+        {"event_id": -2, "ts_ms": sentinel_ms,
+         "user_id": -1, "event_type": "purchase"},
+    ]
 
 
 @register(
@@ -1053,103 +1017,20 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle runs. The pytest twin
     (tests/test_streaming.py::test_streaming_join_crosses_batches)
     asserts the cross-batch property itself."""
-    import shutil
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.unix_millis("ts").alias("ts_ms"),
-            "user_id",
-            "event_type",
+    rows, cuts = _purchase_click_rows(spark, sf_dir)
+    out: list = []
+    with _scratch("sjoin") as base:
+        _replay(
+            spark, base, _cut_chunks(rows, cuts), _EVENT_SCHEMA,
+            lambda s: _purchase_click_join(s, "inner").select(
+                "p_id",
+                "user_id",
+                F.unix_millis("p_ts").alias("p_ts_ms"),
+                F.unix_millis("c_ts").alias("c_ts_ms"),
+            ),
+            lambda df, _e: out.extend(tuple(r) for r in df.collect()),
+            "append",
         )
-        .where(F.col("event_type").isin("purchase", "click"))
-        .collect()
-    )
-    rows = sorted(
-        (r.asDict() for r in ev), key=lambda r: (r["ts_ms"], r["event_id"])
-    )
-    # Batch pre-join (tiny: ids only) to find matched purchases, so
-    # chunk boundaries can be cut right before each one.
-    ev_df = spark.createDataFrame(
-        rows, "event_id long, ts_ms long, user_id long, event_type string"
-    )
-    pp = ev_df.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts_ms").alias("p_ms"),
-    )
-    cc = ev_df.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts_ms").alias("c_ms")
-    )
-    matched = (
-        pp.join(
-            cc,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("c_ms") >= F.col("p_ms") - 600_000)
-            & (F.col("c_ms") < F.col("p_ms")),
-        )
-        .select("p_id")
-        .distinct()
-        .collect()
-    )
-    matched_ids = {r["p_id"] for r in matched}
-    idx = {r["event_id"]: i for i, r in enumerate(rows)}
-    cuts = [idx[p] for p in matched_ids]
-    base = tempfile.mkdtemp(prefix="kspipeline-sjoin-")
-    src = os.path.join(base, "src")
-    _write_event_chunks(rows, src, cuts)
-
-    schema = "event_id long, ts_ms long, user_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    )
-    p = (
-        stream.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    c = (
-        stream.where(F.col("event_type") == "click")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
-        )
-    )
-    joined = p.join(
-        c,
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") < F.col("p_ts")),
-    ).select(
-        "p_id",
-        "user_id",
-        F.unix_millis("p_ts").alias("p_ts_ms"),
-        F.unix_millis("c_ts").alias("c_ts_ms"),
-    )
-
-    batches: list = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _e: batches.append(df.collect()))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("stream-stream join replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
-    out = [(r["p_id"], r["user_id"], r["p_ts_ms"], r["c_ts_ms"])
-           for b in batches for r in b]
     return spark.createDataFrame(
         out, "p_id long, user_id long, p_ts_ms long, c_ts_ms long"
     )
@@ -1204,8 +1085,6 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The emitted set then equals the batch gaps-and-islands rewrite,
     which is what the oracle runs."""
-    import shutil
-
     ev = (
         _t(spark, sf_dir, "events")
         .select(
@@ -1240,54 +1119,41 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value": 0.0,
         }
     ]
-    base = tempfile.mkdtemp(prefix="kspipeline-ssess-")
-    src = os.path.join(base, "src")
-    # sentinel goes in its own final chunk: cut right before it
-    _write_event_chunks(rows_s, src, cuts + [len(rows)], max_chunks=24)
 
-    schema = "event_id long, ts_ms long, user_id long, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-        .withWatermark("ts", "1 hour")
-    )
-    agg = (
-        stream.groupBy(
-            F.session_window(F.col("ts"), "30 minutes").alias("w"),
-            F.col("user_id"),
+    def build(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
+            .withWatermark("ts", "1 hour")
+            .groupBy(
+                F.session_window(F.col("ts"), "30 minutes").alias("w"),
+                F.col("user_id"),
+            )
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_events"),
+                F.round(F.sum("value"), 6).alias("sum_value"),
+            )
+            .select(
+                "user_id",
+                F.unix_millis(F.col("w.start")).alias("session_start_ms"),
+                "n_events",
+                "sum_value",
+            )
         )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
+
+    out: list = []
+    with _scratch("ssess") as base:
+        _replay(
+            spark, base,
+            # sentinel goes in its own final chunk: cut right before it
+            _cut_chunks(rows_s, cuts + [len(rows)]),
+            "event_id long, ts_ms long, user_id long, value double",
+            build,
+            lambda df, _e: out.extend(
+                tuple(r) for r in df.collect()
+                if r["user_id"] != SENTINEL_USER
+            ),
+            "append",
         )
-        .select(
-            "user_id",
-            F.unix_millis(F.col("w.start")).alias("session_start_ms"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    batches: list = []
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _e: batches.append(df.collect()))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("session replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
-    out = [
-        (r["user_id"], r["session_start_ms"], r["n_events"], r["sum_value"])
-        for b in batches
-        for r in b
-        if r["user_id"] != SENTINEL_USER
-    ]
     return spark.createDataFrame(
         out,
         "user_id long, session_start_ms long, n_events long, sum_value double",
@@ -1310,72 +1176,29 @@ def q_streaming_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_streaming_totals: the restart must be INVISIBLE in the result.
     See streaming/stateful.py running_sensor_totals and the pytest
     twin tests/test_stateful.py::test_running_totals_survive_restart."""
-    import json as _json
-    import shutil
-    import time as _time
-
-    from kafka_streams_pipeline_spark.schema import READING_SCHEMA
     from kafka_streams_pipeline_spark.streaming.stateful import (
         running_sensor_totals,
     )
 
     rows = _sorted_replay_rows(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="kspipeline-restart-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
     third = max(1, len(rows) // 3)
-    mtime0 = _time.time() - 86_400
-
-    def write_chunk(idx: int, chunk_rows: list) -> None:
-        path = os.path.join(src, f"chunk{idx}.json")
-        with open(path, "w") as f:
-            for r in chunk_rows:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        os.utime(path, (mtime0 + idx, mtime0 + idx))
-
-    batches: list = []
-
-    def run_once() -> None:
-        q = (
-            running_sensor_totals(
-                spark.readStream.schema(READING_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .json(src)
-                .withColumn("ts", F.timestamp_millis(F.col("timestamp")))
-            )
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda df, _e: batches.append(df.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            shutil.rmtree(base, ignore_errors=True)
-            raise RuntimeError("restart replay timed out after 300 s")
-
-    write_chunk(0, rows[:third])
-    run_once()  # incarnation 1: first third only
-    write_chunk(1, rows[third : 2 * third])
-    write_chunk(2, rows[2 * third :])
-    run_once()  # incarnation 2: resumes from checkpoint
-
-    shutil.rmtree(base, ignore_errors=True)
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["sensorId"]] = (r["count"], r["sum"], r["avg"])
-    out = spark.createDataFrame(
-        [(k, c, s, a) for k, (c, s, a) in final.items()],
-        "sensorId string, n_readings long, sum_raw double, avg_raw double",
-    )
-    return out.select(
-        "sensorId",
-        "n_readings",
-        F.round("sum_raw", 6).alias("sum_val"),
-        F.round("avg_raw", 6).alias("avg_val"),
-    )
+
+    def run_once(base: str, chunks: list) -> None:
+        _replay(
+            spark, base, chunks, READING_SCHEMA,
+            lambda s: running_sensor_totals(_readings_ts(s)),
+            lambda df, _e: final.update(
+                (r["sensorId"], r) for r in df.collect()
+            ),
+            "update",
+        )
+
+    with _scratch("restart") as base:
+        run_once(base, [rows[:third]])  # incarnation 1: first third only
+        # incarnation 2: resumes from the checkpoint
+        run_once(base, [rows[third : 2 * third], rows[2 * third :]])
+    return _sensor_totals(spark, final)
 
 
 @register("q_view_compaction", oracle=ORACLES["q_hourly_view"], materializes=True)
@@ -1392,40 +1215,33 @@ def q_view_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     row FAILS LOUDLY if compaction removed no files, and the
     compacted store read back must hash-match the batch hourly-view
     oracle — maintenance must be invisible in the data."""
-    import shutil
-
     from kafka_streams_pipeline_spark.functions.hashing import md5_long
     from kafka_streams_pipeline_spark.sources.sinks import compact_view
 
-    base = tempfile.mkdtemp(prefix="kspipeline-compact-")
-    view_dir = os.path.join(base, "view")
-    full = build_view(
-        readings_from_events(_t(spark, sf_dir, "events"))
-    ).withColumn("_slice", md5_long(F.col("gh")) % 2)
-    write_view(full.where(F.col("_slice") == 0).drop("_slice"), view_dir)
-    write_view(
-        full.where(F.col("_slice") != 0).drop("_slice"),
-        view_dir,
-        mode="append",
-    )
-    removed = compact_view(spark, view_dir)
-    if removed < 1:
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError(
-            "compaction removed no files — the sliced writes did not "
-            "produce the fragmented state this row certifies"
+    with _scratch("compact") as base:
+        view_dir = os.path.join(base, "view")
+        full = build_view(
+            readings_from_events(_t(spark, sf_dir, "events"))
+        ).withColumn("_slice", md5_long(F.col("gh")) % 2)
+        write_view(full.where(F.col("_slice") == 0).drop("_slice"), view_dir)
+        write_view(
+            full.where(F.col("_slice") != 0).drop("_slice"),
+            view_dir,
+            mode="append",
         )
-    out = read_view(spark, view_dir).select(
-        "gh",
-        F.unix_millis("window_start").alias("ws_ms"),
-        F.col("count").alias("cnt"),
-        F.round("sum", 6).alias("sum_val"),
-        F.round("avg", 6).alias("avg_val"),
-    )
-    rows = out.collect()
-    schema = out.schema
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        if compact_view(spark, view_dir) < 1:
+            raise RuntimeError(
+                "compaction removed no files — the sliced writes did not "
+                "produce the fragmented state this row certifies"
+            )
+        out = read_view(spark, view_dir).select(
+            "gh",
+            F.unix_millis("window_start").alias("ws_ms"),
+            F.col("count").alias("cnt"),
+            F.round("sum", 6).alias("sum_val"),
+            F.round("avg", 6).alias("avg_val"),
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register("q_streaming_late_update", oracle=ORACLES["q_hourly_view"], materializes=True)
@@ -1444,21 +1260,12 @@ def q_streaming_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     it; the LAST emission per key must equal the batch hourly view
     exactly. Same oracle as q_hourly_view: in-grace lateness must be
     invisible in the result."""
-    import json as _json
-    import shutil
-    import time as _time
-
-    from kafka_streams_pipeline_spark.schema import READING_SCHEMA
-
     rows = _sorted_replay_rows(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="kspipeline-late-")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
     n_chunks = 3
     per = (len(rows) + n_chunks - 1) // n_chunks
     half_grace_ms = 12 * 3600 * 1000
     held: list = []
-    mtime0 = _time.time() - 86_400
+    chunks = []
     for c in range(n_chunks):
         chunk = rows[c * per : (c + 1) * per]
         # local disorder: reverse 50-row blocks (bounded, ≪ grace)
@@ -1474,54 +1281,35 @@ def q_streaming_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             i for i, r in enumerate(jumbled) if r["timestamp"] >= cutoff
         ]
         hold = set(tail_idx[::2])
-        arriving = held + [
+        chunks.append(held + [
             r for i, r in enumerate(jumbled) if i not in hold
-        ]
+        ])
         held = [r for i, r in enumerate(jumbled) if i in hold]
-        path = os.path.join(src, f"chunk{c}.json")
-        with open(path, "w") as f:
-            for r in arriving:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        os.utime(path, (mtime0 + c, mtime0 + c))
-    # final chunk: the tail of held-back rows
-    path = os.path.join(src, f"chunk{n_chunks}.json")
-    with open(path, "w") as f:
-        for r in held:
-            f.write(_json.dumps(r.asDict()) + "\n")
-    os.utime(path, (mtime0 + n_chunks, mtime0 + n_chunks))
+    chunks.append(held)  # final chunk: the tail of held-back rows
+    return _view_replay(spark, "late", chunks)
 
+
+def _view_replay(spark: SparkSession, prefix: str, chunks: list) -> DataFrame:
+    """Replay readings chunks through the hourly windowed view
+    aggregate in update mode; the LAST emission per (gh, window) is
+    the final view row."""
     from kafka_streams_pipeline_spark.streaming.pipeline import (
         streaming_view_aggregate,
     )
 
-    batches: list = []
-    stream = (
-        spark.readStream.schema(READING_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("timestamp")))
-    )
-    q = (
-        streaming_view_aggregate(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, _e: batches.append(df.collect()))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("late-update replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[(r["gh"], r["window_start"])] = (
-                r["count"], r["sum"], r["avg"],
-            )
+    with _scratch(prefix) as base:
+        _replay(
+            spark, base, chunks, READING_SCHEMA,
+            lambda s: streaming_view_aggregate(_readings_ts(s)),
+            lambda df, _e: final.update(
+                ((r["gh"], r["window_start"]), r) for r in df.collect()
+            ),
+            "update",
+        )
     out = spark.createDataFrame(
-        [(gh, ws, c, s, a) for (gh, ws), (c, s, a) in final.items()],
+        [(gh, ws, r["count"], r["sum"], r["avg"])
+         for (gh, ws), r in final.items()],
         "gh string, window_start timestamp, cnt long, sum_raw double, avg_raw double",
     )
     return out.select(
@@ -1575,73 +1363,17 @@ def q_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge, which is why the construction evicts first (the
     mirror-image discipline of q_streaming_late_update's
     grace/2 bound)."""
-    import json as _json
-    import shutil
-    import time as _time
-
-    from kafka_streams_pipeline_spark.schema import READING_SCHEMA
-    from kafka_streams_pipeline_spark.streaming.pipeline import (
-        streaming_view_aggregate,
-    )
-
     rows = _sorted_replay_rows(spark, sf_dir)
     cutoff_ms = rows[0]["timestamp"] + 2 * 3600 * 1000
     withheld = [r for r in rows if r["timestamp"] < cutoff_ms]
     on_time = [r for r in rows if r["timestamp"] >= cutoff_ms]
     if not withheld:
         raise RuntimeError("fixture has no rows in its first two hours")
-    base = tempfile.mkdtemp(prefix="kspipeline-latedrop-")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
     n_chunks = 3
     per = (len(on_time) + n_chunks - 1) // n_chunks
-    mtime0 = _time.time() - 86_400
     chunks = [on_time[c * per : (c + 1) * per] for c in range(n_chunks)]
     chunks.append(withheld)  # beyond-grace arrivals, delivered last
-    for c, chunk in enumerate(chunks):
-        path = os.path.join(src, f"chunk{c}.json")
-        with open(path, "w") as f:
-            for r in chunk:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        os.utime(path, (mtime0 + c, mtime0 + c))
-
-    batches: list = []
-    stream = (
-        spark.readStream.schema(READING_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("timestamp")))
-    )
-    q = (
-        streaming_view_aggregate(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, _e: batches.append(df.collect()))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("late-drop replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
-    final: dict = {}
-    for b in batches:
-        for r in b:
-            final[(r["gh"], r["window_start"])] = (
-                r["count"], r["sum"], r["avg"],
-            )
-    out = spark.createDataFrame(
-        [(gh, ws, c, s, a) for (gh, ws), (c, s, a) in final.items()],
-        "gh string, window_start timestamp, cnt long, sum_raw double, avg_raw double",
-    )
-    return out.select(
-        "gh",
-        F.unix_millis("window_start").alias("ws_ms"),
-        "cnt",
-        F.round("sum_raw", 6).alias("sum_val"),
-        F.round("avg_raw", 6).alias("avg_val"),
-    )
+    return _view_replay(spark, "latedrop", chunks)
 
 
 @register(
@@ -1672,31 +1404,28 @@ def q_corpus_versioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes over the corresponding doc_id slices. A training run
     pinning v1 gets byte-identical inputs after any number of later
     commits — the property this row certifies."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="kspipeline-versions-")
-    store = os.path.join(base, "corpus")
-    v1 = commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even half")
-    v2 = commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd half")
-    out_rows = []
-    for v in (v1, v2):
-        snap = read_corpus(spark, store, v).agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_checksum"),
-            F.sum("n_chars").cast("long").alias("chars_total"),
-        ).collect()[0]
-        out_rows.append((v, snap["n_docs"], snap["id_checksum"], snap["chars_total"]))
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        out_rows,
-        "version int, n_docs long, id_checksum long, chars_total long",
-    )
+    with _scratch("versions") as base:
+        store = os.path.join(base, "corpus")
+        v1 = commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even half")
+        v2 = commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd half")
+        out_rows = []
+        for v in (v1, v2):
+            snap = read_corpus(spark, store, v).agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("doc_id").cast("long").alias("id_checksum"),
+                F.sum("n_chars").cast("long").alias("chars_total"),
+            ).collect()[0]
+            out_rows.append((v, snap["n_docs"], snap["id_checksum"], snap["chars_total"]))
+        return spark.createDataFrame(
+            out_rows,
+            "version int, n_docs long, id_checksum long, chars_total long",
+        )
 
 
 @register(
@@ -1737,7 +1466,6 @@ def q_corpus_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointing never disturbs a pinned old version.
     See sources/versioned.checkpoint_corpus."""
     import json as _json
-    import shutil
 
     from kafka_streams_pipeline_spark.sources.versioned import (
         _manifest_path,
@@ -1747,28 +1475,27 @@ def q_corpus_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="kspipeline-ckpt-")
-    store = os.path.join(base, "corpus")
-    commit_corpus(docs.where(F.col("doc_id") % 3 == 0), store, "third 0")
-    commit_corpus(docs.where(F.col("doc_id") % 3 == 1), store, "third 1")
-    checkpoint_corpus(spark, store)
-    commit_corpus(docs.where(F.col("doc_id") % 3 == 2), store, "third 2")
-    out_rows = []
-    for v in (1, 2, 3, 4):
-        with open(_manifest_path(store, v)) as f:
-            n_batches = len(_json.load(f)["batches"])
-        snap = read_corpus(spark, store, v).agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_checksum"),
-        ).collect()[0]
-        out_rows.append(
-            (v, n_batches, snap["n_docs"], snap["id_checksum"])
+    with _scratch("ckpt") as base:
+        store = os.path.join(base, "corpus")
+        commit_corpus(docs.where(F.col("doc_id") % 3 == 0), store, "third 0")
+        commit_corpus(docs.where(F.col("doc_id") % 3 == 1), store, "third 1")
+        checkpoint_corpus(spark, store)
+        commit_corpus(docs.where(F.col("doc_id") % 3 == 2), store, "third 2")
+        out_rows = []
+        for v in (1, 2, 3, 4):
+            with open(_manifest_path(store, v)) as f:
+                n_batches = len(_json.load(f)["batches"])
+            snap = read_corpus(spark, store, v).agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("doc_id").cast("long").alias("id_checksum"),
+            ).collect()[0]
+            out_rows.append(
+                (v, n_batches, snap["n_docs"], snap["id_checksum"])
+            )
+        return spark.createDataFrame(
+            out_rows,
+            "version int, n_batches long, n_docs long, id_checksum long",
         )
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        out_rows,
-        "version int, n_batches long, n_docs long, id_checksum long",
-    )
 
 
 @register(
@@ -1791,8 +1518,6 @@ def q_corpus_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). Manifests are removed before batches, so a crash
     mid-vacuum can orphan files but never leave a manifest pointing
     at deleted data. See sources/versioned.vacuum_corpus."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         checkpoint_corpus,
         commit_corpus,
@@ -1801,27 +1526,26 @@ def q_corpus_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="kspipeline-vacuum-")
-    store = os.path.join(base, "corpus")
-    commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even")
-    commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd")
-    v3 = checkpoint_corpus(spark, store)
-    stats = vacuum_corpus(store, v3)
-    snap = read_corpus(spark, store, v3).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("doc_id").cast("long").alias("id_checksum"),
-    ).collect()[0]
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        [(
-            stats["batches_removed"],
-            stats["manifests_removed"],
-            snap["n_docs"],
-            snap["id_checksum"],
-        )],
-        "batches_removed long, manifests_removed long, "
-        "n_docs long, id_checksum long",
-    )
+    with _scratch("vacuum") as base:
+        store = os.path.join(base, "corpus")
+        commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even")
+        commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd")
+        v3 = checkpoint_corpus(spark, store)
+        stats = vacuum_corpus(store, v3)
+        snap = read_corpus(spark, store, v3).agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("id_checksum"),
+        ).collect()[0]
+        return spark.createDataFrame(
+            [(
+                stats["batches_removed"],
+                stats["manifests_removed"],
+                snap["n_docs"],
+                snap["id_checksum"],
+            )],
+            "batches_removed long, manifests_removed long, "
+            "n_docs long, id_checksum long",
+        )
 
 
 @register(
@@ -1858,57 +1582,54 @@ def q_corpus_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes all four from the documents slices, so a
     mis-merged schema, a null-padding error, or a leaked column into
     v1 all flip the hash. See sources/versioned.read_corpus."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="kspipeline-schevo-")
-    store = os.path.join(base, "corpus")
-    v1 = commit_corpus(
-        docs.where(F.col("doc_id") < 300).select("doc_id", "n_chars"),
-        store,
-        "original schema",
-    )
-    v2 = commit_corpus(
-        docs.where(F.col("doc_id") >= 300).select(
-            "doc_id",
-            "n_chars",
-            (F.col("n_chars") % 100).cast("long").alias("qscore"),
-        ),
-        store,
-        "adds qscore",
-    )
-    out_rows = []
-    for v in (v1, v2):
-        snap = read_corpus(spark, store, v, merge_schema=True)
-        n_cols = len(snap.columns)
-        agg = snap.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            (
-                F.count("qscore") if "qscore" in snap.columns else F.lit(0)
-            )
-            .cast("long")
-            .alias("n_q_present"),
-            (
-                F.sum(F.coalesce(F.col("qscore"), F.lit(0)))
-                if "qscore" in snap.columns
-                else F.lit(0)
-            )
-            .cast("long")
-            .alias("sum_q"),
-        ).collect()[0]
-        out_rows.append(
-            (v, agg["n_docs"], n_cols, agg["n_q_present"], agg["sum_q"])
+    with _scratch("schevo") as base:
+        store = os.path.join(base, "corpus")
+        v1 = commit_corpus(
+            docs.where(F.col("doc_id") < 300).select("doc_id", "n_chars"),
+            store,
+            "original schema",
         )
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        out_rows,
-        "version int, n_docs long, n_cols long, n_q_present long, sum_q long",
-    )
+        v2 = commit_corpus(
+            docs.where(F.col("doc_id") >= 300).select(
+                "doc_id",
+                "n_chars",
+                (F.col("n_chars") % 100).cast("long").alias("qscore"),
+            ),
+            store,
+            "adds qscore",
+        )
+        out_rows = []
+        for v in (v1, v2):
+            snap = read_corpus(spark, store, v, merge_schema=True)
+            n_cols = len(snap.columns)
+            agg = snap.agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                (
+                    F.count("qscore") if "qscore" in snap.columns else F.lit(0)
+                )
+                .cast("long")
+                .alias("n_q_present"),
+                (
+                    F.sum(F.coalesce(F.col("qscore"), F.lit(0)))
+                    if "qscore" in snap.columns
+                    else F.lit(0)
+                )
+                .cast("long")
+                .alias("sum_q"),
+            ).collect()[0]
+            out_rows.append(
+                (v, agg["n_docs"], n_cols, agg["n_q_present"], agg["sum_q"])
+            )
+        return spark.createDataFrame(
+            out_rows,
+            "version int, n_docs long, n_cols long, n_q_present long, sum_q long",
+        )
 
 
 @register(
@@ -1951,8 +1672,6 @@ def q_store_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata log to the data it describes. O(versions) manifest
     reads, never a data scan, for the history itself.
     See sources/versioned.store_history."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         checkpoint_corpus,
         commit_corpus,
@@ -1962,32 +1681,31 @@ def q_store_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="kspipeline-history-")
-    store = os.path.join(base, "corpus")
-    commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even half")
-    commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd half")
-    v3 = checkpoint_corpus(spark, store)
-    commit_corpus(docs.where(F.col("doc_id") % 7 == 0), store, "sevens")
+    with _scratch("history") as base:
+        store = os.path.join(base, "corpus")
+        commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even half")
+        commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd half")
+        v3 = checkpoint_corpus(spark, store)
+        commit_corpus(docs.where(F.col("doc_id") % 7 == 0), store, "sevens")
 
-    out_rows = []
+        out_rows = []
 
-    def _snapshot(phase: str) -> None:
-        for h in store_history(spark, store).collect():
-            n_docs = read_corpus(spark, store, h["version"]).count()
-            out_rows.append((
-                phase, h["version"], h["n_batches"],
-                h["batches_added"], h["note"], n_docs,
-            ))
+        def _snapshot(phase: str) -> None:
+            for h in store_history(spark, store).collect():
+                n_docs = read_corpus(spark, store, h["version"]).count()
+                out_rows.append((
+                    phase, h["version"], h["n_batches"],
+                    h["batches_added"], h["note"], n_docs,
+                ))
 
-    _snapshot("pre")
-    vacuum_corpus(store, v3)
-    _snapshot("post")
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        out_rows,
-        "phase string, version int, n_batches long, "
-        "batches_added long, note string, n_docs long",
-    )
+        _snapshot("pre")
+        vacuum_corpus(store, v3)
+        _snapshot("post")
+        return spark.createDataFrame(
+            out_rows,
+            "phase string, version int, n_batches long, "
+            "batches_added long, note string, n_docs long",
+        )
 
 
 @register(
@@ -2020,116 +1738,23 @@ def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join state store, so BOTH emission paths (state-served matches,
     watermark-evicted NULL rows) are certified against the one batch
     LEFT JOIN oracle."""
-    import shutil
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.unix_millis("ts").alias("ts_ms"),
-            "user_id",
-            "event_type",
+    rows, cuts = _purchase_click_rows(spark, sf_dir)
+    out: list = []
+    with _scratch("sojoin") as base:
+        _replay(
+            spark, base, _cut_chunks(_sentinels(rows), cuts), _EVENT_SCHEMA,
+            lambda s: _purchase_click_join(s, "left_outer").select(
+                "p_id",
+                "user_id",
+                F.unix_millis("p_ts").alias("p_ts_ms"),
+                F.unix_millis("c_ts").alias("c_ts_ms"),
+            ),
+            # sentinels are harness plumbing
+            lambda df, _e: out.extend(
+                tuple(r) for r in df.collect() if r["p_id"] >= 0
+            ),
+            "append",
         )
-        .where(F.col("event_type").isin("purchase", "click"))
-        .collect()
-    )
-    rows = sorted(
-        (r.asDict() for r in ev), key=lambda r: (r["ts_ms"], r["event_id"])
-    )
-    ev_df = spark.createDataFrame(
-        rows, "event_id long, ts_ms long, user_id long, event_type string"
-    )
-    pp = ev_df.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts_ms").alias("p_ms"),
-    )
-    cc = ev_df.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts_ms").alias("c_ms")
-    )
-    matched = (
-        pp.join(
-            cc,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("c_ms") >= F.col("p_ms") - 600_000)
-            & (F.col("c_ms") < F.col("p_ms")),
-        )
-        .select("p_id")
-        .distinct()
-        .collect()
-    )
-    matched_ids = {r["p_id"] for r in matched}
-    idx = {r["event_id"]: i for i, r in enumerate(rows)}
-    cuts = [idx[p] for p in matched_ids]
-    # Sentinels: one per side, 48 h past the last event (24 h grace
-    # → final watermark lands 24 h past every real row). user_id -1
-    # matches nothing; both are filtered from the emitted result.
-    sentinel_ms = rows[-1]["ts_ms"] + 48 * 3_600_000
-    rows.append({"event_id": -1, "ts_ms": sentinel_ms,
-                 "user_id": -1, "event_type": "click"})
-    rows.append({"event_id": -2, "ts_ms": sentinel_ms,
-                 "user_id": -1, "event_type": "purchase"})
-    base = tempfile.mkdtemp(prefix="kspipeline-sojoin-")
-    src = os.path.join(base, "src")
-    _write_event_chunks(rows, src, cuts)
-
-    schema = "event_id long, ts_ms long, user_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    )
-    p = (
-        stream.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    c = (
-        stream.where(F.col("event_type") == "click")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
-        )
-    )
-    joined = p.join(
-        c,
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") < F.col("p_ts")),
-        "left_outer",
-    ).select(
-        "p_id",
-        "user_id",
-        F.unix_millis("p_ts").alias("p_ts_ms"),
-        F.unix_millis("c_ts").alias("c_ts_ms"),
-    )
-
-    batches: list = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _e: batches.append(df.collect()))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError(
-            "stream-stream outer join replay timed out after 300 s"
-        )
-    shutil.rmtree(base, ignore_errors=True)
-    out = [
-        (r["p_id"], r["user_id"], r["p_ts_ms"], r["c_ts_ms"])
-        for b in batches
-        for r in b
-        if r["p_id"] >= 0  # sentinels are harness plumbing
-    ]
     return spark.createDataFrame(
         out, "p_id long, user_id long, p_ts_ms long, c_ts_ms long"
     )
@@ -2211,8 +1836,6 @@ def q_corpus_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted structurally via store_history n_batches==1).
     See sources/versioned.py upsert_corpus/read_corpus_latest/
     read_corpus_changes/compact_corpus."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         TOMBSTONE,
         commit_corpus,
@@ -2222,141 +1845,139 @@ def q_corpus_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    base = tempfile.mkdtemp(prefix="kspipeline-upsert-")
-    store = os.path.join(base, "corpus")
-    commit_corpus(docs, store, "base corpus")
-    upsert_corpus(
-        docs.where(F.col("doc_id") % 5 == 0)
-        .withColumn("n_chars", F.col("n_chars") + 1000)
-        .unionByName(
-            docs.where(F.col("doc_id") % 9 == 0).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"),
-                (F.col("n_chars") * 2).alias("n_chars"),
+    with _scratch("upsert") as base:
+        store = os.path.join(base, "corpus")
+        commit_corpus(docs, store, "base corpus")
+        upsert_corpus(
+            docs.where(F.col("doc_id") % 5 == 0)
+            .withColumn("n_chars", F.col("n_chars") + 1000)
+            .unionByName(
+                docs.where(F.col("doc_id") % 9 == 0).select(
+                    (F.col("doc_id") + 1000000).alias("doc_id"),
+                    (F.col("n_chars") * 2).alias("n_chars"),
+                )
+            ),
+            store,
+            "doc_id",
+            "rescore fives, insert nines",
+        )
+        upsert_corpus(
+            docs.where((F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 10 != 0))
+            .withColumn("n_chars", F.lit(7777).cast("long"))
+            .withColumn(TOMBSTONE, F.lit(False))
+            .unionByName(
+                docs.where(F.col("doc_id") % 10 == 0).select(
+                    "doc_id",
+                    F.lit(0).cast("long").alias("n_chars"),
+                    F.lit(True).alias(TOMBSTONE),
+                )
+            ),
+            store,
+            "doc_id",
+            "rescore sevens, retract tens",
+        )
+
+        def _bucketed(df: DataFrame, phase: str) -> DataFrame:
+            return df.groupBy(
+                (F.col("doc_id") % 3).cast("long").alias("bucket")
+            ).agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("n_chars").cast("long").alias("chars_sum"),
+                F.sum("doc_id").cast("long").alias("id_sum"),
+            ).select(F.lit(phase).alias("phase"), "*")
+
+        # The three pre-compaction reads (merged head, merged AS OF v2,
+        # CDC v1→v3) all resolve over the SAME v3 batch log, so compute
+        # them in ONE pass: one log scan, one key-hash window shuffle
+        # annotating each row with the newest _seq per key (overall and
+        # within the v2 prefix), then each row emits the (phase, bucket)
+        # groups it belongs to and a single aggregation produces all
+        # phase rows. A union of the three per-read API calls costs
+        # three scans and two key shuffles for the same answer (Catalyst
+        # re-plans each branch separately — measured, not assumed).
+        # Equal to the per-read API calls because (a) keys are unique
+        # within every batch here, so "_seq == max(_seq) over key" IS
+        # the window top-1, and (b) v2's batch list is a prefix of v3's,
+        # so the as-of merge is the same max over the _seq <= 1 sub-log
+        # and the CDC feed is _seq >= 1.
+        from pyspark.sql import Window
+
+        from kafka_streams_pipeline_spark.sources.versioned import (
+            _SEQ,
+            read_corpus_log,
+        )
+
+        log = read_corpus_log(spark, store)
+        kw = Window.partitionBy("doc_id")
+        live = ~F.coalesce(F.col(TOMBSTONE), F.lit(False))
+        ann = log.withColumn("m_all", F.max(_SEQ).over(kw)).withColumn(
+            "m_v2",
+            F.max(F.when(F.col(_SEQ) <= 1, F.col(_SEQ))).over(kw),
+        )
+        phase_groups = F.array_compact(
+            F.array(
+                F.when(
+                    (F.col(_SEQ) == F.col("m_all")) & live,
+                    F.struct(
+                        F.lit("final").alias("phase"),
+                        (F.col("doc_id") % 3).cast("long").alias("bucket"),
+                    ),
+                ),
+                F.when(
+                    # & live: the read API's tombstone filter applies to
+                    # the as-of merge too (a no-op on this fixture — the
+                    # v2 prefix holds no true tombstones — but the fused
+                    # form must not silently assume that)
+                    (F.col(_SEQ) == F.col("m_v2")) & live,
+                    F.struct(
+                        F.lit("asof_v2").alias("phase"),
+                        F.lit(-1).cast("long").alias("bucket"),
+                    ),
+                ),
+                F.when(
+                    F.col(_SEQ) >= 1,
+                    F.struct(
+                        F.lit("changes_v1_v3").alias("phase"),
+                        F.lit(-1).cast("long").alias("bucket"),
+                    ),
+                ),
             )
-        ),
-        store,
-        "doc_id",
-        "rescore fives, insert nines",
-    )
-    upsert_corpus(
-        docs.where((F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 10 != 0))
-        .withColumn("n_chars", F.lit(7777).cast("long"))
-        .withColumn(TOMBSTONE, F.lit(False))
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 0).select(
-                "doc_id",
-                F.lit(0).cast("long").alias("n_chars"),
-                F.lit(True).alias(TOMBSTONE),
+        )
+        rows = (
+            ann.select(
+                "doc_id", "n_chars", F.explode(phase_groups).alias("pb")
             )
-        ),
-        store,
-        "doc_id",
-        "rescore sevens, retract tens",
-    )
-
-    def _bucketed(df: DataFrame, phase: str) -> DataFrame:
-        return df.groupBy(
-            (F.col("doc_id") % 3).cast("long").alias("bucket")
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("chars_sum"),
-            F.sum("doc_id").cast("long").alias("id_sum"),
-        ).select(F.lit(phase).alias("phase"), "*")
-
-    # The three pre-compaction reads (merged head, merged AS OF v2,
-    # CDC v1→v3) all resolve over the SAME v3 batch log, so compute
-    # them in ONE pass: one log scan, one key-hash window shuffle
-    # annotating each row with the newest _seq per key (overall and
-    # within the v2 prefix), then each row emits the (phase, bucket)
-    # groups it belongs to and a single aggregation produces all
-    # phase rows. A union of the three per-read API calls costs
-    # three scans and two key shuffles for the same answer (Catalyst
-    # re-plans each branch separately — measured, not assumed).
-    # Equal to the per-read API calls because (a) keys are unique
-    # within every batch here, so "_seq == max(_seq) over key" IS
-    # the window top-1, and (b) v2's batch list is a prefix of v3's,
-    # so the as-of merge is the same max over the _seq <= 1 sub-log
-    # and the CDC feed is _seq >= 1.
-    from pyspark.sql import Window
-
-    from kafka_streams_pipeline_spark.sources.versioned import (
-        _SEQ,
-        read_corpus_log,
-    )
-
-    log = read_corpus_log(spark, store)
-    kw = Window.partitionBy("doc_id")
-    live = ~F.coalesce(F.col(TOMBSTONE), F.lit(False))
-    ann = log.withColumn("m_all", F.max(_SEQ).over(kw)).withColumn(
-        "m_v2",
-        F.max(F.when(F.col(_SEQ) <= 1, F.col(_SEQ))).over(kw),
-    )
-    phase_groups = F.array_compact(
-        F.array(
-            F.when(
-                (F.col(_SEQ) == F.col("m_all")) & live,
-                F.struct(
-                    F.lit("final").alias("phase"),
-                    (F.col("doc_id") % 3).cast("long").alias("bucket"),
-                ),
-            ),
-            F.when(
-                # & live: the read API's tombstone filter applies to
-                # the as-of merge too (a no-op on this fixture — the
-                # v2 prefix holds no true tombstones — but the fused
-                # form must not silently assume that)
-                (F.col(_SEQ) == F.col("m_v2")) & live,
-                F.struct(
-                    F.lit("asof_v2").alias("phase"),
-                    F.lit(-1).cast("long").alias("bucket"),
-                ),
-            ),
-            F.when(
-                F.col(_SEQ) >= 1,
-                F.struct(
-                    F.lit("changes_v1_v3").alias("phase"),
-                    F.lit(-1).cast("long").alias("bucket"),
-                ),
-            ),
+            .groupBy(F.col("pb.phase").alias("phase"), F.col("pb.bucket").alias("bucket"))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("n_chars").cast("long").alias("chars_sum"),
+                F.sum("doc_id").cast("long").alias("id_sum"),
+            )
+            .collect()
         )
-    )
-    rows = (
-        ann.select(
-            "doc_id", "n_chars", F.explode(phase_groups).alias("pb")
-        )
-        .groupBy(F.col("pb.phase").alias("phase"), F.col("pb.bucket").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("chars_sum"),
-            F.sum("doc_id").cast("long").alias("id_sum"),
-        )
-        .collect()
-    )
 
-    compact_corpus(spark, store, "doc_id")
-    # the lineage-length assertion is a manifest fact — read it on
-    # the driver instead of collecting a one-row Spark frame
-    from kafka_streams_pipeline_spark.sources.versioned import (
-        store_history_rows,
-    )
-
-    head = max(store_history_rows(store), key=lambda r: r[0])
-    if head[1] != 1:
-        shutil.rmtree(base, ignore_errors=True)
-        raise AssertionError(
-            f"compact_corpus left {head[1]} batches in lineage"
+        compact_corpus(spark, store, "doc_id")
+        # the lineage-length assertion is a manifest fact — read it on
+        # the driver instead of collecting a one-row Spark frame
+        from kafka_streams_pipeline_spark.sources.versioned import (
+            store_history_rows,
         )
-    rows += _bucketed(
-        read_corpus_latest(spark, store, "doc_id"), "compacted"
-    ).collect()
-    shutil.rmtree(base, ignore_errors=True)
-    from kafka_streams_pipeline_spark.session import local_rows_df
 
-    return local_rows_df(
-        spark,
-        [tuple(r) for r in rows],
-        "phase string, bucket long, n_docs long, chars_sum long, id_sum long",
-    )
+        head = max(store_history_rows(store), key=lambda r: r[0])
+        if head[1] != 1:
+            raise AssertionError(
+                f"compact_corpus left {head[1]} batches in lineage"
+            )
+        rows += _bucketed(
+            read_corpus_latest(spark, store, "doc_id"), "compacted"
+        ).collect()
+        from kafka_streams_pipeline_spark.session import local_rows_df
+
+        return local_rows_df(
+            spark,
+            [tuple(r) for r in rows],
+            "phase string, bucket long, n_docs long, chars_sum long, id_sum long",
+        )
 
 
 def _zorder_oracle() -> str:
@@ -2396,8 +2017,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, from per-file stats, regardless of sampled boundaries).
     One range shuffle; the key never persists.
     See operators/layout.py."""
-    import shutil
-
     from kafka_streams_pipeline_spark.operators.layout import (
         morton_key,
         overlapping_file_pairs,
@@ -2406,35 +2025,34 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    base = tempfile.mkdtemp(prefix="kspipeline-zorder-")
-    out = os.path.join(base, "layout")
-    zorder_write(docs, out, "doc_id", "n_chars", n_files=8)
-    back = spark.read.parquet(out)
-    content = back.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("doc_id").cast("long").alias("id_sum"),
-        F.sum("n_chars").cast("long").alias("chars_sum"),
-        F.sum(morton_key(F.col("doc_id"), F.col("n_chars")))
-        .cast("long")
-        .alias("z_sum"),
-    ).collect()[0]
-    overlaps = overlapping_file_pairs(
-        zorder_file_stats(spark, out, "doc_id", "n_chars")
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        [
-            (
-                "readback",
-                content["n_docs"],
-                content["id_sum"],
-                content["chars_sum"],
-                content["z_sum"],
-            ),
-            ("disjoint_files", overlaps, 0, 0, 0),
-        ],
-        "phase string, n_docs long, id_sum long, chars_sum long, z_sum long",
-    )
+    with _scratch("zorder") as base:
+        out = os.path.join(base, "layout")
+        zorder_write(docs, out, "doc_id", "n_chars", n_files=8)
+        back = spark.read.parquet(out)
+        content = back.agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("id_sum"),
+            F.sum("n_chars").cast("long").alias("chars_sum"),
+            F.sum(morton_key(F.col("doc_id"), F.col("n_chars")))
+            .cast("long")
+            .alias("z_sum"),
+        ).collect()[0]
+        overlaps = overlapping_file_pairs(
+            zorder_file_stats(spark, out, "doc_id", "n_chars")
+        )
+        return spark.createDataFrame(
+            [
+                (
+                    "readback",
+                    content["n_docs"],
+                    content["id_sum"],
+                    content["chars_sum"],
+                    content["z_sum"],
+                ),
+                ("disjoint_files", overlaps, 0, 0, 0),
+            ],
+            "phase string, n_docs long, id_sum long, chars_sum long, z_sum long",
+        )
 
 
 @register(
@@ -2458,8 +2076,6 @@ def q_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces. n_exact comes from the merged store read — also the
     union. See operators/sketches.py hll_registers/
     hll_merge_registers and sources/versioned.read_corpus_changes."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus,
@@ -2467,34 +2083,33 @@ def q_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    base_dir = tempfile.mkdtemp(prefix="kspipeline-hllinc-")
-    store = os.path.join(base_dir, "events")
-    sketch_dir = os.path.join(base_dir, "sketch-v1")
-    commit_corpus(ev.where(F.col("event_id") % 10 < 7), store, "base")
-    _sk.hll_registers(read_corpus(spark, store, 1), "user_id").write.parquet(
-        sketch_dir
-    )
-    commit_corpus(ev.where(F.col("event_id") % 10 >= 7), store, "delta")
-    merged = _sk.hll_merge_registers(
-        spark.read.parquet(sketch_dir),
-        _sk.hll_registers(
-            read_corpus_changes(spark, store, 1, 2), "user_id"
-        ),
-    )
-    out = _sk.hll_estimate_from_registers(merged).crossJoin(
-        F.broadcast(
-            read_corpus(spark, store, 2).agg(
-                F.countDistinct("user_id").cast("long").alias("n_exact")
+    with _scratch("hllinc") as base_dir:
+        store = os.path.join(base_dir, "events")
+        sketch_dir = os.path.join(base_dir, "sketch-v1")
+        commit_corpus(ev.where(F.col("event_id") % 10 < 7), store, "base")
+        _sk.hll_registers(read_corpus(spark, store, 1), "user_id").write.parquet(
+            sketch_dir
+        )
+        commit_corpus(ev.where(F.col("event_id") % 10 >= 7), store, "delta")
+        merged = _sk.hll_merge_registers(
+            spark.read.parquet(sketch_dir),
+            _sk.hll_registers(
+                read_corpus_changes(spark, store, 1, 2), "user_id"
+            ),
+        )
+        out = _sk.hll_estimate_from_registers(merged).crossJoin(
+            F.broadcast(
+                read_corpus(spark, store, 2).agg(
+                    F.countDistinct("user_id").cast("long").alias("n_exact")
+                )
             )
         )
-    )
-    rows = out.collect()
-    shutil.rmtree(base_dir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "hll_estimate double, n_registers_used long, "
-        "register_checksum long, n_exact long",
-    )
+        rows = out.collect()
+        return spark.createDataFrame(
+            rows,
+            "hll_estimate double, n_registers_used long, "
+            "register_checksum long, n_exact long",
+        )
 
 
 def _bloom_index_oracle() -> str:
@@ -2556,8 +2171,6 @@ def q_store_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable batches mean an index file is forever valid and each
     maintenance call scans new batches only.
     See sources/bloom_index.py."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.bloom_index import (
         build_bloom_index,
         lookup_corpus,
@@ -2565,27 +2178,25 @@ def q_store_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_pipeline_spark.sources.versioned import commit_corpus
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    base = tempfile.mkdtemp(prefix="kspipeline-bloomidx-")
-    store = os.path.join(base, "corpus")
-    for i in range(8):
-        commit_corpus(
-            docs.where(F.col("doc_id") % 8 == i), store, f"residue {i}"
+    with _scratch("bloomidx") as base:
+        store = os.path.join(base, "corpus")
+        for i in range(8):
+            commit_corpus(
+                docs.where(F.col("doc_id") % 8 == i), store, f"residue {i}"
+            )
+        n_built = build_bloom_index(spark, store, "doc_id")
+        if n_built != 8 or build_bloom_index(spark, store, "doc_id") != 0:
+            raise AssertionError("index build not incremental as claimed")
+        probes = [1, 2, 3, 12, 9999991, 9999993]
+        found, stats = lookup_corpus(spark, store, "doc_id", probes)
+        rows = [
+            ("row", r["doc_id"], r["n_chars"])
+            for r in found.select("doc_id", "n_chars").collect()
+        ]
+        rows.append(
+            ("prune", stats["batches_scanned"], stats["batches_total"])
         )
-    n_built = build_bloom_index(spark, store, "doc_id")
-    if n_built != 8 or build_bloom_index(spark, store, "doc_id") != 0:
-        shutil.rmtree(base, ignore_errors=True)
-        raise AssertionError("index build not incremental as claimed")
-    probes = [1, 2, 3, 12, 9999991, 9999993]
-    found, stats = lookup_corpus(spark, store, "doc_id", probes)
-    rows = [
-        ("row", r["doc_id"], r["n_chars"])
-        for r in found.select("doc_id", "n_chars").collect()
-    ]
-    rows.append(
-        ("prune", stats["batches_scanned"], stats["batches_total"])
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "phase string, a long, b long")
+        return spark.createDataFrame(rows, "phase string, a long, b long")
 
 
 @register(
@@ -2619,11 +2230,6 @@ def q_streaming_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip path actually fired (stats['skipped'] >= 1) — the replay
     is constructed, not hoped for.
     See streaming/store_sink.py."""
-    import json as _json
-    import shutil
-    import time as _time
-
-    from kafka_streams_pipeline_spark.schema import READING_SCHEMA
     from kafka_streams_pipeline_spark.sources.versioned import (
         latest_version,
         read_corpus,
@@ -2633,84 +2239,54 @@ def q_streaming_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     rows = _sorted_replay_rows(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="kspipeline-ingest-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    store = os.path.join(base, "store")
-    os.makedirs(src)
-    n_chunks = 6
-    per = (len(rows) + n_chunks - 1) // n_chunks
-    mtime0 = _time.time() - 86_400
-    for i in range(n_chunks):
-        path = os.path.join(src, f"chunk{i}.json")
-        with open(path, "w") as f:
-            for r in rows[i * per : (i + 1) * per]:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        os.utime(path, (mtime0 + i, mtime0 + i))
-
+    per = (len(rows) + 5) // 6
     stats: dict = {}
-    sink = make_store_commit_sink(store, "ingest", stats)
+    with _scratch("ingest") as base:
+        store = os.path.join(base, "store")
+        sink = make_store_commit_sink(store, "ingest", stats)
 
-    def run_once() -> None:
-        q = (
-            spark.readStream.schema(READING_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .where(F.col("tempVal").isNotNull())
-            .select("sensorId", "timestamp", "tempVal")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            shutil.rmtree(base, ignore_errors=True)
-            raise RuntimeError("store-ingest replay timed out after 300 s")
-        # termination and the active-queries map update are not
-        # atomic: a back-to-back restart on the same checkpoint can
-        # race the cleanup and die with "multiple streaming queries
-        # are concurrently using <ckpt>" — drain before returning
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
+        def run_once(chunks: list) -> None:
+            _replay(
+                spark, base, chunks, READING_SCHEMA,
+                lambda s: s.where(F.col("tempVal").isNotNull()).select(
+                    "sensorId", "timestamp", "tempVal"
+                ),
+                sink,
+            )
 
-    # incarnation 1 — then crash in the worst window: the last
-    # micro-batch's store commit landed but its checkpoint commit
-    # marker did not
-    run_once()
-    commits = os.path.join(ckpt, "commits")
-    newest = max(
-        (f for f in os.listdir(commits) if f.isdigit()), key=int
-    )
-    os.unlink(os.path.join(commits, newest))
-    # the local ChecksumFs keeps a .N.crc sidecar; leaving it makes
-    # the replay's rename-based rewrite die with FileAlreadyExists
-    # (surfaced as a bogus "multiple streaming queries" error)
-    crc = os.path.join(commits, f".{newest}.crc")
-    if os.path.exists(crc):
-        os.unlink(crc)
-    run_once()  # incarnation 2: replays that batch + any new chunks
+        # incarnation 1 — then crash in the worst window: the last
+        # micro-batch's store commit landed but its checkpoint commit
+        # marker did not
+        run_once([rows[i * per : (i + 1) * per] for i in range(6)])
+        commits = os.path.join(base, "ckpt", "commits")
+        newest = max(
+            (f for f in os.listdir(commits) if f.isdigit()), key=int
+        )
+        os.unlink(os.path.join(commits, newest))
+        # the local ChecksumFs keeps a .N.crc sidecar; leaving it makes
+        # the replay's rename-based rewrite die with FileAlreadyExists
+        # (surfaced as a bogus "multiple streaming queries" error)
+        crc = os.path.join(commits, f".{newest}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)
+        run_once([])  # incarnation 2: re-runs that batch, no new chunks
 
-    if stats["skipped"] < 1:
-        shutil.rmtree(base, ignore_errors=True)
-        raise AssertionError(
-            f"replay path not exercised: {stats} — crash simulation broken"
+        if stats["skipped"] < 1:
+            raise AssertionError(
+                f"replay path not exercised: {stats} — crash simulation broken"
+            )
+        n_versions = latest_version(store)
+        agg = (
+            read_corpus(spark, store)
+            .groupBy("sensorId")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.sum(F.round(F.col("tempVal") * 1000000).cast("long"))
+                .cast("long")
+                .alias("sum_micros"),
+            )
+            .collect()
         )
-    n_versions = latest_version(store)
-    agg = (
-        read_corpus(spark, store)
-        .groupBy("sensorId")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.round(F.col("tempVal") * 1000000).cast("long"))
-            .cast("long")
-            .alias("sum_micros"),
-        )
-        .collect()
-    )
-    shutil.rmtree(base, ignore_errors=True)
     out = [("sensor", r["sensorId"], r["n"], r["sum_micros"]) for r in agg]
     out.append(("meta", "versions", n_versions, 0))
     return spark.createDataFrame(
@@ -2750,8 +2326,6 @@ def q_store_minmax_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from per-bucket min/max in SQL — index stats that drifted from
     the data would flip either the scanned count or the row set.
     See sources/bloom_index.py build_minmax_index/range_scan_corpus."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.bloom_index import (
         build_minmax_index,
         range_scan_corpus,
@@ -2760,28 +2334,26 @@ def q_store_minmax_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     width = docs.agg(F.max("doc_id") + 1).collect()[0][0]
-    base = tempfile.mkdtemp(prefix="kspipeline-minmax-")
-    store = os.path.join(base, "corpus")
-    for i in range(6):
-        commit_corpus(
-            docs.where(F.expr(f"(doc_id * 6) div {width}") == i),
-            store,
-            f"range {i}",
+    with _scratch("minmax") as base:
+        store = os.path.join(base, "corpus")
+        for i in range(6):
+            commit_corpus(
+                docs.where(F.expr(f"(doc_id * 6) div {width}") == i),
+                store,
+                f"range {i}",
+            )
+        n_built = build_minmax_index(spark, store, "doc_id")
+        if n_built != 6 or build_minmax_index(spark, store, "doc_id") != 0:
+            raise AssertionError("minmax index build not incremental")
+        found, stats = range_scan_corpus(
+            spark, store, "doc_id", width // 3, width // 2
         )
-    n_built = build_minmax_index(spark, store, "doc_id")
-    if n_built != 6 or build_minmax_index(spark, store, "doc_id") != 0:
-        shutil.rmtree(base, ignore_errors=True)
-        raise AssertionError("minmax index build not incremental")
-    found, stats = range_scan_corpus(
-        spark, store, "doc_id", width // 3, width // 2
-    )
-    rows = [
-        ("row", r["doc_id"], r["n_chars"])
-        for r in found.select("doc_id", "n_chars").collect()
-    ]
-    rows.append(("prune", stats["batches_scanned"], stats["batches_total"]))
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "phase string, a long, b long")
+        rows = [
+            ("row", r["doc_id"], r["n_chars"])
+            for r in found.select("doc_id", "n_chars").collect()
+        ]
+        rows.append(("prune", stats["batches_scanned"], stats["batches_total"]))
+        return spark.createDataFrame(rows, "phase string, a long, b long")
 
 
 @register(
@@ -2802,8 +2374,6 @@ def q_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     overcount must come out identical to the rescan it replaces.
     See operators/sketches.py cms_sketch/cms_merge/cms_probe_keys
     and sources/versioned.read_corpus_changes."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus,
@@ -2811,31 +2381,30 @@ def q_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type")
-    base_dir = tempfile.mkdtemp(prefix="kspipeline-cmsinc-")
-    store = os.path.join(base_dir, "events")
-    sketch_dir = os.path.join(base_dir, "sketch-v1")
-    commit_corpus(ev.where(F.col("event_id") % 10 < 7), store, "base")
-    _sk.cms_sketch(
-        read_corpus(spark, store, 1), "event_type"
-    ).write.parquet(sketch_dir)
-    commit_corpus(ev.where(F.col("event_id") % 10 >= 7), store, "delta")
-    merged = _sk.cms_merge(
-        spark.read.parquet(sketch_dir),
+    with _scratch("cmsinc") as base_dir:
+        store = os.path.join(base_dir, "events")
+        sketch_dir = os.path.join(base_dir, "sketch-v1")
+        commit_corpus(ev.where(F.col("event_id") % 10 < 7), store, "base")
         _sk.cms_sketch(
-            read_corpus_changes(spark, store, 1, 2), "event_type"
-        ),
-    )
-    keys = (
-        read_corpus(spark, store, 2)
-        .where(F.col("event_type").isNotNull())
-        .groupBy(F.col("event_type").alias("key"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
-    )
-    rows = _sk.cms_probe_keys(merged, keys).collect()
-    shutil.rmtree(base_dir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key string, cms_estimate long, n_exact long, overcount long"
-    )
+            read_corpus(spark, store, 1), "event_type"
+        ).write.parquet(sketch_dir)
+        commit_corpus(ev.where(F.col("event_id") % 10 >= 7), store, "delta")
+        merged = _sk.cms_merge(
+            spark.read.parquet(sketch_dir),
+            _sk.cms_sketch(
+                read_corpus_changes(spark, store, 1, 2), "event_type"
+            ),
+        )
+        keys = (
+            read_corpus(spark, store, 2)
+            .where(F.col("event_type").isNotNull())
+            .groupBy(F.col("event_type").alias("key"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
+        )
+        rows = _sk.cms_probe_keys(merged, keys).collect()
+        return spark.createDataFrame(
+            rows, "key string, cms_estimate long, n_exact long, overcount long"
+        )
 
 
 @register(
@@ -2870,8 +2439,6 @@ def q_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. The violation COUNT itself is oracle-recomputed, so the
     gate's arithmetic — not just its verdict — is hash-bound.
     See sources/versioned.commit_corpus_checked."""
-    import shutil
-
     from kafka_streams_pipeline_spark.operators.quality import Check
     from kafka_streams_pipeline_spark.sources.versioned import (
         CommitRejectedError,
@@ -2885,39 +2452,39 @@ def q_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         Check("chars_positive", "in_range", "n_chars", lo=1),
         Check("doc_id_not_null", "not_null", "doc_id"),
     ]
-    base = tempfile.mkdtemp(prefix="kspipeline-gated-")
-    store = os.path.join(base, "corpus")
-    rows: list = []
+    with _scratch("gated") as base:
+        store = os.path.join(base, "corpus")
+        rows: list = []
 
-    commit_corpus_checked(
-        docs.where(F.col("doc_id") % 2 == 0), store, checks, "evens"
-    )
-    rows.append(("commit1", 1, 0))
+        commit_corpus_checked(
+            docs.where(F.col("doc_id") % 2 == 0), store, checks, "evens"
+        )
+        rows.append(("commit1", 1, 0))
 
-    poisoned = docs.where(F.col("doc_id") % 2 != 0).withColumn(
-        "n_chars",
-        F.when(F.col("doc_id") % 5 == 0, F.lit(-5).cast("long")).otherwise(
-            F.col("n_chars")
-        ),
-    )
-    try:
-        commit_corpus_checked(poisoned, store, checks, "odds poisoned")
-        shutil.rmtree(base, ignore_errors=True)
-        raise AssertionError("poisoned batch passed the gate")
-    except CommitRejectedError as exc:
-        rows.append(("commit2", 0, exc.violations.get("chars_positive", -1)))
+        poisoned = docs.where(F.col("doc_id") % 2 != 0).withColumn(
+            "n_chars",
+            F.when(F.col("doc_id") % 5 == 0, F.lit(-5).cast("long")).otherwise(
+                F.col("n_chars")
+            ),
+        )
+        try:
+            commit_corpus_checked(poisoned, store, checks, "odds poisoned")
+            raise AssertionError("poisoned batch passed the gate")
+        except CommitRejectedError as exc:
+            rows.append(
+                ("commit2", 0, exc.violations.get("chars_positive", -1))
+            )
 
-    commit_corpus_checked(
-        docs.where(F.col("doc_id") % 2 != 0), store, checks, "odds clean"
-    )
-    rows.append(("commit3", 1, 0))
-    rows.append(("store_versions", latest_version(store), 0))
-    content = read_corpus(spark, store).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("n_chars").cast("long").alias("s"),
-    ).collect()[0]
-    rows.append(("store_content", content["n"], content["s"]))
-    shutil.rmtree(base, ignore_errors=True)
+        commit_corpus_checked(
+            docs.where(F.col("doc_id") % 2 != 0), store, checks, "odds clean"
+        )
+        rows.append(("commit3", 1, 0))
+        rows.append(("store_versions", latest_version(store), 0))
+        content = read_corpus(spark, store).agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("n_chars").cast("long").alias("s"),
+        ).collect()[0]
+        rows.append(("store_content", content["n"], content["s"]))
     return spark.createDataFrame(rows, "phase string, a long, b long")
 
 
@@ -2936,7 +2503,6 @@ def q_gzip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode drift or a leaked corrupt row flips the hash."""
     import gzip
     import json as _json
-    import shutil
 
     from pyspark.sql.types import (
         DoubleType,
@@ -2946,52 +2512,51 @@ def q_gzip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    base = tempfile.mkdtemp(prefix="kspipeline-gz-")
-    events = (
-        _t(spark, sf_dir, "events")
-        .select("event_id", "user_id", "event_type", "value")
-        .collect()
-    )
-    rows = sorted(events, key=lambda r: r["event_id"])
-    half = len(rows) // 2
-    for i, (chunk, level) in enumerate(
-        [(rows[:half], 1), (rows[half:], 9)]
-    ):
-        with gzip.open(
-            os.path.join(base, f"part{i}.jsonl.gz"),
-            "wt",
-            compresslevel=level,
-        ) as f:
-            for r in chunk:
-                f.write(_json.dumps(r.asDict()) + "\n")
-            if i == 0:
-                f.write('{"event_id": "oops", not json\n')
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    decoded = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(base + "/*.jsonl.gz")
-        .where(
-            F.col("_corrupt").isNull()
-            & F.col("event_id").isNotNull()
-            & F.col("event_type").isNotNull()
-            & F.col("value").isNotNull()
+    with _scratch("gz") as base:
+        events = (
+            _t(spark, sf_dir, "events")
+            .select("event_id", "user_id", "event_type", "value")
+            .collect()
         )
-    )
-    out = _source_agg(decoded)
-    result = out.collect()
-    schema_out = out.schema
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(result, schema_out)
+        rows = sorted(events, key=lambda r: r["event_id"])
+        half = len(rows) // 2
+        for i, (chunk, level) in enumerate(
+            [(rows[:half], 1), (rows[half:], 9)]
+        ):
+            with gzip.open(
+                os.path.join(base, f"part{i}.jsonl.gz"),
+                "wt",
+                compresslevel=level,
+            ) as f:
+                for r in chunk:
+                    f.write(_json.dumps(r.asDict()) + "\n")
+                if i == 0:
+                    f.write('{"event_id": "oops", not json\n')
+        schema = StructType(
+            [
+                StructField("event_id", LongType()),
+                StructField("user_id", LongType()),
+                StructField("event_type", StringType()),
+                StructField("value", DoubleType()),
+                StructField("_corrupt", StringType()),
+            ]
+        )
+        decoded = (
+            spark.read.schema(schema)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt")
+            .json(base + "/*.jsonl.gz")
+            .where(
+                F.col("_corrupt").isNull()
+                & F.col("event_id").isNotNull()
+                & F.col("event_type").isNotNull()
+                & F.col("value").isNotNull()
+            )
+        )
+        out = _source_agg(decoded)
+        result = out.collect()
+        schema_out = out.schema
+        return spark.createDataFrame(result, schema_out)
 
 
 def _hist_inc_oracle() -> str:
@@ -3028,8 +2593,6 @@ def q_histogram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     path must reproduce both the distribution and its quantile reads
     exactly. See operators/sketches.py histogram_sketch/
     histogram_merge/histogram_quantile_bins."""
-    import shutil
-
     from kafka_streams_pipeline_spark.operators.sketches import (
         histogram_merge,
         histogram_quantile_bins,
@@ -3042,29 +2605,28 @@ def q_histogram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    base_dir = tempfile.mkdtemp(prefix="kspipeline-histinc-")
-    store = os.path.join(base_dir, "docs")
-    sketch_dir = os.path.join(base_dir, "sketch-v1")
-    commit_corpus(docs.where(F.col("doc_id") % 10 < 7), store, "base")
-    histogram_sketch(
-        read_corpus(spark, store, 1), "n_chars", 0, 1024, 32
-    ).write.parquet(sketch_dir)
-    commit_corpus(docs.where(F.col("doc_id") % 10 >= 7), store, "delta")
-    merged = histogram_merge(
-        spark.read.parquet(sketch_dir),
+    with _scratch("histinc") as base_dir:
+        store = os.path.join(base_dir, "docs")
+        sketch_dir = os.path.join(base_dir, "sketch-v1")
+        commit_corpus(docs.where(F.col("doc_id") % 10 < 7), store, "base")
         histogram_sketch(
-            read_corpus_changes(spark, store, 1, 2), "n_chars", 0, 1024, 32
-        ),
-    )
-    bins = [("bin", r["bin"], r["cnt"]) for r in merged.collect()]
-    qs = [
-        ("quantile", r["q"], r["bin"])
-        for r in histogram_quantile_bins(merged, [25, 50, 75, 95]).collect()
-    ]
-    shutil.rmtree(base_dir, ignore_errors=True)
-    return spark.createDataFrame(
-        bins + qs, "phase string, a long, b long"
-    )
+            read_corpus(spark, store, 1), "n_chars", 0, 1024, 32
+        ).write.parquet(sketch_dir)
+        commit_corpus(docs.where(F.col("doc_id") % 10 >= 7), store, "delta")
+        merged = histogram_merge(
+            spark.read.parquet(sketch_dir),
+            histogram_sketch(
+                read_corpus_changes(spark, store, 1, 2), "n_chars", 0, 1024, 32
+            ),
+        )
+        bins = [("bin", r["bin"], r["cnt"]) for r in merged.collect()]
+        qs = [
+            ("quantile", r["q"], r["bin"])
+            for r in histogram_quantile_bins(merged, [25, 50, 75, 95]).collect()
+        ]
+        return spark.createDataFrame(
+            bins + qs, "phase string, a long, b long"
+        )
 
 
 def _streaming_hist_oracle() -> str:
@@ -3111,15 +2673,16 @@ def q_streaming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_cell_state,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, histogram_cell_state, "update", inject_dups=False
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["gh"]] = (r["n_values"], r["chk1"], r["chk2"])
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: histogram_cell_state(_readings_ts(s)),
+            lambda df, _e: final.update((r["gh"], r) for r in df.collect()),
+            "update",
+        )
     return spark.createDataFrame(
-        [(k, n, c1, c2) for k, (n, c1, c2) in final.items()],
+        [(k, r["n_values"], r["chk1"], r["chk2"]) for k, r in final.items()],
         "gh string, n_values long, chk1 long, chk2 long",
     )
 
@@ -3138,8 +2701,6 @@ def q_avro_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing sync marker (truncation/splice fails loudly). Zigzag
     varints are pinned to the spec's own example vectors in pytest.
     Same clean-parquet aggregate oracle as the CSV/ORC/gzip rows."""
-    import shutil
-
     from kafka_streams_pipeline_spark.operators.multimodal import (
         avro_ocf_bytes,
         decode_avro_events,
@@ -3160,29 +2721,28 @@ def q_avro_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ),
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-avro-")
-    third = (len(rows) + 2) // 3
-    for i in range(3):
-        shard = rows[i * third : (i + 1) * third]
-        with open(os.path.join(base, f"events{i}.avro"), "wb") as f:
-            f.write(
-                avro_ocf_bytes(
-                    schema_json,
-                    shard,
-                    sync=bytes([i] * 16),
-                    rows_per_block=200,
+    with _scratch("avro") as base:
+        third = (len(rows) + 2) // 3
+        for i in range(3):
+            shard = rows[i * third : (i + 1) * third]
+            with open(os.path.join(base, f"events{i}.avro"), "wb") as f:
+                f.write(
+                    avro_ocf_bytes(
+                        schema_json,
+                        shard,
+                        sync=bytes([i] * 16),
+                        rows_per_block=200,
+                    )
                 )
-            )
-    decoded = decode_avro_events(
-        spark.read.format("binaryFile")
-        .load(base + "/*.avro")
-        .select(F.col("content").alias("payload"))
-    )
-    out = _source_agg(decoded)
-    result = out.collect()
-    schema_out = out.schema
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(result, schema_out)
+        decoded = decode_avro_events(
+            spark.read.format("binaryFile")
+            .load(base + "/*.avro")
+            .select(F.col("content").alias("payload"))
+        )
+        out = _source_agg(decoded)
+        result = out.collect()
+        schema_out = out.schema
+        return spark.createDataFrame(result, schema_out)
 
 
 def _hist_by_oracle() -> str:
@@ -3239,10 +2799,6 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the same oracle — as batch q_decontaminate. See
     operators/text.decontaminate for the batch twin and scale
     notes."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.operators.dedup import (
         _spark_hash,
         spark_shingles_expr,
@@ -3273,54 +2829,29 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    base = tempfile.mkdtemp(prefix="kspipeline-decon-")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    rows = docs.collect()
-    n_chunks, m0 = 4, _time.time() - 86_400
-    per = (len(rows) + n_chunks - 1) // n_chunks
-    for c in range(n_chunks):
-        p = os.path.join(src, f"chunk{c}.json")
-        with open(p, "w") as f:
-            for r in rows[c * per : (c + 1) * per]:
-                f.write(_json.dumps({"doc_id": r["doc_id"], "text": r["text"]}) + "\n")
-        os.utime(p, (m0 + c, m0 + c))  # ascending mtimes (round-6 lesson)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    corpus_ngrams = (
-        stream.withColumn("toks", F.split("text", " "))
-        .withColumn("ngs", F.expr(sh))
-        .select(
-            "doc_id",
-            F.expr("size(ngs)").cast("long").alias("total_ngrams"),
-            F.explode_outer("ngs").alias("ng_str"),
+    def hits(stream: DataFrame) -> DataFrame:
+        corpus_ngrams = (
+            stream.withColumn("toks", F.split("text", " "))
+            .withColumn("ngs", F.expr(sh))
+            .select(
+                "doc_id",
+                F.expr("size(ngs)").cast("long").alias("total_ngrams"),
+                F.explode_outer("ngs").alias("ng_str"),
+            )
+            .where(F.col("ng_str").isNotNull())
+            .select("doc_id", "total_ngrams", F.expr(h).alias("ng"))
         )
-        .where(F.col("ng_str").isNotNull())
-        .select("doc_id", "total_ngrams", F.expr(h).alias("ng"))
-    )
-    hits = corpus_ngrams.join(F.broadcast(bench_ngrams), "ng")
+        return corpus_ngrams.join(F.broadcast(bench_ngrams), "ng")
 
+    rows = docs.collect()
+    per = (len(rows) + 3) // 4
     emissions: list = []
-
-    def sink(batch_df: DataFrame, _epoch_id: int) -> None:
-        emissions.extend(batch_df.collect())
-
-    q = (
-        hits.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("availableNow replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
+    with _scratch("decon") as base:
+        _replay(
+            spark, base, [rows[c * per : (c + 1) * per] for c in range(4)],
+            "doc_id long, text string", hits,
+            lambda df, _e: emissions.extend(df.collect()), "append",
+        )
 
     out = spark.createDataFrame(
         emissions, "ng long, doc_id long, total_ngrams long, eval_id long"
@@ -3377,8 +2908,6 @@ def q_store_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-checksum) into the oracle. Retag without force must refuse;
     the whole probe-and-write runs under the commit lock, so tags
     can never race a vacuum. See sources/versioned.tag_corpus."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus_tag,
@@ -3387,35 +2916,36 @@ def q_store_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="kspipeline-tags-")
-    store = os.path.join(base, "corpus")
-    commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even half")
-    tag_corpus(store, "baseline")
-    commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd half")
-    tag_corpus(store, "prod")
-    # retention safety: dropping v1 while 'baseline' pins it must fail
-    try:
-        vacuum_corpus(store, keep_from_version=2)
-        raise AssertionError("vacuum ignored a tag pin")
-    except ValueError:
-        pass
-    # immutability: silent retag must refuse
-    try:
-        tag_corpus(store, "baseline", version=2)
-        raise AssertionError("retag without force succeeded")
-    except ValueError:
-        pass
-    out_rows = []
-    for tag, version in (("baseline", 1), ("prod", 2)):
-        snap = read_corpus_tag(spark, store, tag).agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_checksum"),
-        ).collect()[0]
-        out_rows.append((tag, version, snap["n_docs"], snap["id_checksum"]))
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        out_rows, "tag string, version int, n_docs long, id_checksum long"
-    )
+    with _scratch("tags") as base:
+        store = os.path.join(base, "corpus")
+        commit_corpus(docs.where(F.col("doc_id") % 2 == 0), store, "even half")
+        tag_corpus(store, "baseline")
+        commit_corpus(docs.where(F.col("doc_id") % 2 != 0), store, "odd half")
+        tag_corpus(store, "prod")
+        # retention safety: dropping v1 while 'baseline' pins it must fail
+        try:
+            vacuum_corpus(store, keep_from_version=2)
+            raise AssertionError("vacuum ignored a tag pin")
+        except ValueError:
+            pass
+        # immutability: silent retag must refuse
+        try:
+            tag_corpus(store, "baseline", version=2)
+            raise AssertionError("retag without force succeeded")
+        except ValueError:
+            pass
+        out_rows = []
+        for tag, version in (("baseline", 1), ("prod", 2)):
+            snap = read_corpus_tag(spark, store, tag).agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("doc_id").cast("long").alias("id_checksum"),
+            ).collect()[0]
+            out_rows.append(
+                (tag, version, snap["n_docs"], snap["id_checksum"])
+            )
+        return spark.createDataFrame(
+            out_rows, "tag string, version int, n_docs long, id_checksum long"
+        )
 
 
 def _drift_slice_profile_sql(mod: int, cols: list[str]) -> str:
@@ -3470,41 +3000,14 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch_seq, col_name, rows, non-null/distinct drift ppm,
     min/max movement) for each consecutive pair. See
     operators/quality.table_profile / profile_drift."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.operators.quality import (
         profile_drift,
         table_profile,
     )
 
-    docs = _t(spark, sf_dir, "documents").select(
+    rows = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
-    )
-    base = tempfile.mkdtemp(prefix="kspipeline-sdrift-")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    rows = docs.collect()
-    m0 = _time.time() - 86_400
-    for c in range(4):
-        p = os.path.join(src, f"chunk{c}.json")
-        with open(p, "w") as f:
-            for r in rows:
-                if r["doc_id"] % 4 == c:
-                    f.write(
-                        _json.dumps(
-                            {
-                                "doc_id": r["doc_id"],
-                                "lang": r["lang"],
-                                "source": r["source"],
-                                "n_chars": r["n_chars"],
-                            }
-                        )
-                        + "\n"
-                    )
-        os.utime(p, (m0 + c, m0 + c))
-
+    ).collect()
     profiles: list = []  # (batch_id, profile rows)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -3513,22 +3016,13 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
         profiles.append((batch_id, prof))
 
-    q = (
-        spark.readStream.schema(
-            "doc_id long, lang string, source string, n_chars long"
+    with _scratch("sdrift") as base:
+        _replay(
+            spark, base,
+            [[r for r in rows if r["doc_id"] % 4 == c] for c in range(4)],
+            "doc_id long, lang string, source string, n_chars long",
+            lambda s: s, sink,
         )
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("availableNow replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
 
     profiles.sort(key=lambda t: t[0])
     schema = (
@@ -3603,8 +3097,6 @@ def q_store_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_ids from postings alone, and (3) fetch payloads from the
     candidate batch only. Incremental build asserted (second call
     indexes 0 batches). See sources/text_index.py."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.text_index import (
         build_text_index,
         search_text_index,
@@ -3621,9 +3113,8 @@ def q_store_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lower(F.col("text")))
         .alias("text"),
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-textidx-")
-    store = os.path.join(base, "corpus")
-    try:
+    with _scratch("textidx") as base:
+        store = os.path.join(base, "corpus")
         for i in range(8):
             commit_corpus(
                 docs.where(F.col("doc_id") % 8 == i), store, f"residue {i}"
@@ -3641,8 +3132,6 @@ def q_store_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             ("prune", stats["batches_scanned"], stats["batches_total"])
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "phase string, a long, b long")
 
 
@@ -3674,104 +3163,19 @@ def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (EXISTS) shape — a double emission would flip the row count.
     With time-ordered chunks nothing crosses the 24 h grace, so the
     emitted set equals the batch semi join exactly."""
-    import shutil
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.unix_millis("ts").alias("ts_ms"),
-            "user_id",
-            "event_type",
+    rows, cuts = _purchase_click_rows(spark, sf_dir)
+    out: list = []
+    with _scratch("ssemi") as base:
+        _replay(
+            spark, base, _cut_chunks(rows, cuts), _EVENT_SCHEMA,
+            lambda s: _purchase_click_join(s, "left_semi").select(
+                "p_id",
+                "user_id",
+                F.unix_millis("p_ts").alias("p_ts_ms"),
+            ),
+            lambda df, _e: out.extend(tuple(r) for r in df.collect()),
+            "append",
         )
-        .where(F.col("event_type").isin("purchase", "click"))
-        .collect()
-    )
-    rows = sorted(
-        (r.asDict() for r in ev), key=lambda r: (r["ts_ms"], r["event_id"])
-    )
-    ev_df = spark.createDataFrame(
-        rows, "event_id long, ts_ms long, user_id long, event_type string"
-    )
-    pp = ev_df.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts_ms").alias("p_ms"),
-    )
-    cc = ev_df.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts_ms").alias("c_ms")
-    )
-    matched = (
-        pp.join(
-            cc,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("c_ms") >= F.col("p_ms") - 600_000)
-            & (F.col("c_ms") < F.col("p_ms")),
-        )
-        .select("p_id")
-        .distinct()
-        .collect()
-    )
-    matched_ids = {r["p_id"] for r in matched}
-    idx = {r["event_id"]: i for i, r in enumerate(rows)}
-    cuts = [idx[p] for p in matched_ids]
-    base = tempfile.mkdtemp(prefix="kspipeline-ssemi-")
-    src = os.path.join(base, "src")
-    _write_event_chunks(rows, src, cuts)
-
-    schema = "event_id long, ts_ms long, user_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    )
-    p = (
-        stream.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    c = (
-        stream.where(F.col("event_type") == "click")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
-        )
-    )
-    joined = p.join(
-        c,
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") < F.col("p_ts")),
-        "left_semi",
-    ).select(
-        "p_id",
-        "user_id",
-        F.unix_millis("p_ts").alias("p_ts_ms"),
-    )
-
-    batches: list = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _e: batches.append(df.collect()))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("stream-stream semi join replay timed out")
-    shutil.rmtree(base, ignore_errors=True)
-    out = [
-        (r["p_id"], r["user_id"], r["p_ts_ms"])
-        for b in batches
-        for r in b
-    ]
     return spark.createDataFrame(out, "p_id long, user_id long, p_ts_ms long")
 
 
@@ -3813,8 +3217,6 @@ def q_store_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses the wire; key_checksum pins per-class membership. The
     oracle derives the same classes arithmetically from the modulus
     construction. See sources/versioned.version_diff."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         TOMBSTONE,
         upsert_corpus,
@@ -3822,33 +3224,32 @@ def q_store_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="kspipeline-vdiff-")
-    store = os.path.join(base, "corpus")
-    upsert_corpus(
-        docs.where(F.col("doc_id") % 3 != 0), store, "doc_id", "base slice"
-    )
-    upsert_corpus(
-        docs.where(F.col("doc_id") % 5 == 0).withColumn("lang", F.lit("xx")),
-        store,
-        "doc_id",
-        "rescore fives",
-    )
-    upsert_corpus(
-        docs.where(F.col("doc_id") % 7 == 0)
-        .select("doc_id")
-        .withColumn("text", F.lit(None).cast("string"))
-        .withColumn("lang", F.lit(None).cast("string"))
-        .withColumn("source", F.lit(None).cast("string"))
-        .withColumn("n_chars", F.lit(None).cast("long"))
-        .withColumn(TOMBSTONE, F.lit(True)),
-        store,
-        "doc_id",
-        "takedown sevens",
-    )
-    out = version_diff(spark, store, "doc_id", 1, 3)
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with _scratch("vdiff") as base:
+        store = os.path.join(base, "corpus")
+        upsert_corpus(
+            docs.where(F.col("doc_id") % 3 != 0), store, "doc_id", "base slice"
+        )
+        upsert_corpus(
+            docs.where(F.col("doc_id") % 5 == 0).withColumn("lang", F.lit("xx")),
+            store,
+            "doc_id",
+            "rescore fives",
+        )
+        upsert_corpus(
+            docs.where(F.col("doc_id") % 7 == 0)
+            .select("doc_id")
+            .withColumn("text", F.lit(None).cast("string"))
+            .withColumn("lang", F.lit(None).cast("string"))
+            .withColumn("source", F.lit(None).cast("string"))
+            .withColumn("n_chars", F.lit(None).cast("long"))
+            .withColumn(TOMBSTONE, F.lit(True)),
+            store,
+            "doc_id",
+            "takedown sevens",
+        )
+        out = version_diff(spark, store, "doc_id", 1, 3)
+        out = out.localCheckpoint(eager=True)
+        return out
 
 
 def _neardup_oracle_sql() -> str:
@@ -3932,10 +3333,6 @@ def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the reference band index is the store-maintained artifact
     (sources/text_index analogue); each micro-batch shuffles only
     (band-key, doc_id) pairs against it."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.operators.dedup import (
         SHINGLE_N,
         minhash_signatures,
@@ -3954,57 +3351,30 @@ def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    base = tempfile.mkdtemp(prefix="kspipeline-neardup-")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
     rows = docs.where(F.col("doc_id") % 2 == 1).collect()
-    n_chunks, m0 = 4, _time.time() - 86_400
-    per = (len(rows) + n_chunks - 1) // n_chunks
-    for c in range(n_chunks):
-        p = os.path.join(src, f"chunk{c}.json")
-        with open(p, "w") as f:
-            for r in rows[c * per : (c + 1) * per]:
-                f.write(
-                    _json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-                    + "\n"
-                )
-        os.utime(p, (m0 + c, m0 + c))  # ascending mtimes (round-6 lesson)
-
+    per = (len(rows) + 3) // 4
     mh_array = "array(" + ", ".join(spark_minhash_exprs("shh")) + ")"
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    stream_bands = (
-        stream.withColumn("toks", F.split("text", " "))
-        .where(F.expr("size(toks)") >= SHINGLE_N)
-        .withColumn("shh", F.expr(spark_hashed_shingles_expr("toks")))
-        .withColumn("mhs", F.expr(mh_array))
-        .select(
-            "doc_id",
-            F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk"),
+
+    def hits(stream: DataFrame) -> DataFrame:
+        stream_bands = (
+            stream.withColumn("toks", F.split("text", " "))
+            .where(F.expr("size(toks)") >= SHINGLE_N)
+            .withColumn("shh", F.expr(spark_hashed_shingles_expr("toks")))
+            .withColumn("mhs", F.expr(mh_array))
+            .select(
+                "doc_id",
+                F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk"),
+            )
         )
-    )
-    hits = stream_bands.join(ref_bands, "bk").select("doc_id", "ref_id")
+        return stream_bands.join(ref_bands, "bk").select("doc_id", "ref_id")
 
     emissions: list = []
-
-    def sink(batch_df: DataFrame, _epoch_id: int) -> None:
-        emissions.extend(batch_df.collect())
-
-    q = (
-        hits.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError("availableNow replay timed out after 300 s")
-    shutil.rmtree(base, ignore_errors=True)
+    with _scratch("neardup") as base:
+        _replay(
+            spark, base, [rows[c * per : (c + 1) * per] for c in range(4)],
+            "doc_id long, text string", hits,
+            lambda df, _e: emissions.extend(df.collect()), "append",
+        )
 
     cand = spark.createDataFrame(
         emissions, "doc_id long, ref_id long"
@@ -4126,8 +3496,6 @@ def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/versioned.read_corpus_changes; same lifecycle discipline
     as q_cms_incremental (sketch IVM) — this row extends IVM from
     linear sketches to joins."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus,
@@ -4138,11 +3506,10 @@ def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars"
     )
     embs = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
-    base = tempfile.mkdtemp(prefix="kspipeline-ivm-")
-    a_store = os.path.join(base, "a")
-    b_store = os.path.join(base, "b")
-    v_store = os.path.join(base, "view")
-    try:
+    with _scratch("ivm") as base:
+        a_store = os.path.join(base, "a")
+        b_store = os.path.join(base, "b")
+        v_store = os.path.join(base, "view")
         commit_corpus(docs.where(F.col("doc_id") % 10 < 7), a_store, "A1")
         commit_corpus(embs.where(F.col("vec_id") % 10 < 5), b_store, "B1")
         a1 = read_corpus(spark, a_store, 1)
@@ -4193,8 +3560,6 @@ def q_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -4255,8 +3620,6 @@ def q_ivm_join_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rescored/takedowns/view-upserts) bound into the hash. See
     sources/versioned.upsert_corpus/read_corpus_changes/
     read_corpus_latest."""
-    import shutil
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         TOMBSTONE,
         commit_corpus,
@@ -4270,10 +3633,9 @@ def q_ivm_join_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", (F.col("n_chars") % 100).cast("long").alias("score")
     )
     embs = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
-    base = tempfile.mkdtemp(prefix="kspipeline-ivmret-")
-    a_store = os.path.join(base, "a")
-    v_store = os.path.join(base, "view")
-    try:
+    with _scratch("ivmret") as base:
+        a_store = os.path.join(base, "a")
+        v_store = os.path.join(base, "view")
         commit_corpus(docs, a_store, "A base")
         a1 = read_corpus(spark, a_store, 1)
         j1 = a1.join(embs, a1["doc_id"] == embs["vec_id"]).select(
@@ -4339,8 +3701,6 @@ def q_ivm_join_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -4405,10 +3765,6 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the hash via the modulus construction. Crash/replay
     idempotence is q_streaming_store_ingest's row, not re-simulated
     here."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus,
@@ -4418,14 +3774,10 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     embs = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("label").cast("long").alias("label")
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-sivm-")
-    a_store = os.path.join(base, "a")
-    b_store = os.path.join(base, "b")
-    v_store = os.path.join(base, "view")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
+    with _scratch("sivm") as base:
+        a_store = os.path.join(base, "a")
+        b_store = os.path.join(base, "b")
+        v_store = os.path.join(base, "view")
         commit_corpus(docs.where(F.col("doc_id") % 10 < 5), a_store, "A1")
         commit_corpus(embs.where(F.col("vec_id") % 10 < 3), b_store, "B1")
         a1 = read_corpus(spark, a_store, 1)
@@ -4445,18 +3797,6 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("A", docs.where(F.col("doc_id") % 10 >= 7)),
             ("B", embs.where(F.col("vec_id") % 10 >= 6)),
         ]
-        mtime0 = _time.time() - 86_400
-        for i, (side, df) in enumerate(chunks):
-            path = os.path.join(src, f"cdc{i}.json")
-            with open(path, "w") as f:
-                for r in df.collect():
-                    d = {"side": side}
-                    d.update(r.asDict())
-                    f.write(_json.dumps(d) + "\n")
-            # back-to-back writes tie on mtime and the file-stream
-            # replay order is MTIME order (round-6 lesson)
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
         stats: dict = {"batches": [], "n_delta_a": 0, "n_delta_b": 0,
                        "n_delta_view": 0}
 
@@ -4498,30 +3838,14 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats["n_delta_b"] += n_db
             stats["n_delta_view"] += n_dj
 
-        q = (
-            spark.readStream.schema(
-                "side string, doc_id long, source string, n_chars long, "
-                "vec_id long, label long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base,
+            [[{"side": side, **r.asDict()} for r in df.collect()]
+             for side, df in chunks],
+            "side string, doc_id long, source string, n_chars long, "
+            "vec_id long, label long",
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("CDC IVM replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if len(stats["batches"]) != 4:
-            raise AssertionError(
-                f"CDC replay did not micro-batch per chunk: {stats}"
-            )
         # constructed cross-batch property: dB1 (batch index 1) must
         # have matched keys %10 = 5 that exist A-side only via dA1
         # (batch index 0) — state genuinely crossed the batch boundary
@@ -4550,10 +3874,7 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("n_delta_view"),
             )
         )
-        rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 _IVM_AGG_ORACLE_COUNTERS = """
@@ -4599,8 +3920,6 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference anchor: ingestion/KafkaStreamsAggregator.java:98-105
     (the per-record-maintained count/sum/avg view), generalized with
     retractions."""
-    import shutil
-
     from kafka_streams_pipeline_spark.operators.ivm import agg_view_apply
     from kafka_streams_pipeline_spark.sources.versioned import (
         TOMBSTONE,
@@ -4612,10 +3931,9 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-ivmagg-")
-    a_store = os.path.join(base, "a")
-    v_store = os.path.join(base, "view")
-    try:
+    with _scratch("ivmagg") as base:
+        a_store = os.path.join(base, "a")
+        v_store = os.path.join(base, "view")
         a1 = docs.where(F.col("doc_id") % 10 <= 7)
         upsert_corpus(a1, a_store, "doc_id", "A1")
         v1 = a1.groupBy("source").agg(
@@ -4653,8 +3971,6 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_retracts).cast("long").alias("n_retracts"),
         )
         rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
@@ -4696,10 +4012,6 @@ def q_streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(Δ) aggregate + one O(touched-groups) view upsert via
     operators/ivm.agg_view_apply. Certified against the same
     full-recompute oracle shape as the batch row."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.operators.ivm import agg_view_apply
     from kafka_streams_pipeline_spark.sources.versioned import (
         TOMBSTONE,
@@ -4710,12 +4022,8 @@ def q_streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-sivmagg-")
-    v_store = os.path.join(base, "view")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
+    with _scratch("sivmagg") as base:
+        v_store = os.path.join(base, "view")
         # base = %10 <= 7 (includes the %10=3 rows batch 1 retracts)
         a1 = docs.where(F.col("doc_id") % 10 <= 7)
         v1 = a1.groupBy("source").agg(
@@ -4739,14 +4047,6 @@ def q_streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         ]
-        mtime0 = _time.time() - 86_400
-        for i, df in enumerate(chunks):
-            path = os.path.join(src, f"cdc{i}.json")
-            with open(path, "w") as f:
-                for r in df.collect():
-                    f.write(_json.dumps(r.asDict()) + "\n")
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
         stats: dict = {"batches": [], "n_inserts": 0, "n_retracts": 0}
 
         def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
@@ -4764,29 +4064,11 @@ def q_streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats["n_inserts"] += n_ins
             stats["n_retracts"] += n_ret
 
-        q = (
-            spark.readStream.schema(
-                "doc_id long, source string, n_chars long, _deleted boolean"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, [df.collect() for df in chunks],
+            "doc_id long, source string, n_chars long, _deleted boolean",
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("CDC agg-IVM replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if len(stats["batches"]) != 3:
-            raise AssertionError(
-                f"CDC replay did not micro-batch per chunk: {stats}"
-            )
         # constructed cross-batch property: micro-batch 2 retracted
         # rows that only ever existed via micro-batch 0's inserts
         if stats["batches"][2][1] < 1:
@@ -4801,10 +4083,7 @@ def q_streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(stats["n_inserts"]).cast("long").alias("n_inserts"),
             F.lit(stats["n_retracts"]).cast("long").alias("n_retracts"),
         )
-        rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -4863,10 +4142,6 @@ def q_streaming_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     98-105); semantics follow the Kafka Streams KTable join
     (processing-time enrichment), re-expressed as foreachBatch +
     broadcast over the versioned store."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         latest_version,
         read_corpus_latest,
@@ -4884,12 +4159,8 @@ def q_streaming_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("us", "event_id")
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-stj-")
-    dim_store = os.path.join(base, "dim")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
+    with _scratch("stj") as base:
+        dim_store = os.path.join(base, "dim")
         users = (
             _t(spark, sf_dir, "events").select("user_id").distinct()
         ).localCheckpoint(eager=True)
@@ -4901,18 +4172,12 @@ def q_streaming_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = events.collect()
         n = len(rows)
-        mtime0 = _time.time() - 86_400
-        for c in range(4):
-            lo, hi = (n * c + 3) // 4, (n * (c + 1) + 3) // 4
-            # chunk boundaries mirror the oracle's (rn*4)//n split:
-            # row i belongs to chunk (i*4)//n, i.e. chunk c holds
-            # i in [ceil(n*c/4), ceil(n*(c+1)/4))
-            path = os.path.join(src, f"chunk{c}.json")
-            with open(path, "w") as f:
-                for r in rows[lo:hi]:
-                    f.write(_json.dumps(r.asDict()) + "\n")
-            os.utime(path, (mtime0 + c, mtime0 + c))
-
+        # chunk boundaries mirror the oracle's (rn*4)//n split: row i
+        # belongs to chunk (i*4)//n, i.e. chunk c holds i in
+        # [ceil(n*c/4), ceil(n*(c+1)/4))
+        chunks = [
+            rows[(n * c + 3) // 4 : (n * (c + 1) + 3) // 4] for c in range(4)
+        ]
         agg_rows: list = []
 
         def enrich(batch_df: DataFrame, _epoch_id: int) -> None:
@@ -4940,38 +4205,18 @@ def q_streaming_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"dim v{v}",
                 )
 
-        q = (
-            spark.readStream.schema(
-                "user_id long, event_id long, us long, cents long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, chunks,
+            "user_id long, event_id long, us long, cents long",
+            lambda s: s, enrich,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("stream-table replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if len(agg_rows) != 4:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {len(agg_rows)}"
-            )
         if latest_version(dim_store) != 4:
             raise AssertionError("dimension did not advance to v4")
-        out_rows = [
-            (c, r["tier"], r["n_events"], r["cents_sum"], r["id_checksum"])
-            for c, batch in enumerate(agg_rows)
-            for r in batch
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    out_rows = [
+        (c, r["tier"], r["n_events"], r["cents_sum"], r["id_checksum"])
+        for c, batch in enumerate(agg_rows)
+        for r in batch
+    ]
     return spark.createDataFrame(
         out_rows,
         "chunk long, tier long, n_events long, cents_sum long, "
@@ -5005,119 +4250,27 @@ def q_streaming_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (filtered from the result) flush the tail evictions, and the one
     batch FULL JOIN oracle certifies all three emission paths
     (state-served matches, purchase-side NULLs, click-side NULLs)."""
-    import shutil
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.unix_millis("ts").alias("ts_ms"),
-            "user_id",
-            "event_type",
+    rows, cuts = _purchase_click_rows(spark, sf_dir)
+    out: list = []
+    with _scratch("sfjoin") as base:
+        _replay(
+            spark, base, _cut_chunks(_sentinels(rows), cuts), _EVENT_SCHEMA,
+            lambda s: _purchase_click_join(s, "full_outer").select(
+                "p_id",
+                "c_id",
+                F.col("user_id").alias("p_user"),
+                "c_user",
+                F.unix_millis("p_ts").alias("p_ts_ms"),
+                F.unix_millis("c_ts").alias("c_ts_ms"),
+            ),
+            # sentinels are harness plumbing
+            lambda df, _e: out.extend(
+                tuple(r) for r in df.collect()
+                if (r["p_id"] is None or r["p_id"] >= 0)
+                and (r["c_id"] is None or r["c_id"] >= 0)
+            ),
+            "append",
         )
-        .where(F.col("event_type").isin("purchase", "click"))
-        .collect()
-    )
-    rows = sorted(
-        (r.asDict() for r in ev), key=lambda r: (r["ts_ms"], r["event_id"])
-    )
-    ev_df = spark.createDataFrame(
-        rows, "event_id long, ts_ms long, user_id long, event_type string"
-    )
-    pp = ev_df.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts_ms").alias("p_ms"),
-    )
-    cc = ev_df.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts_ms").alias("c_ms")
-    )
-    matched = (
-        pp.join(
-            cc,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("c_ms") >= F.col("p_ms") - 600_000)
-            & (F.col("c_ms") < F.col("p_ms")),
-        )
-        .select("p_id")
-        .distinct()
-        .collect()
-    )
-    matched_ids = {r["p_id"] for r in matched}
-    idx = {r["event_id"]: i for i, r in enumerate(rows)}
-    cuts = [idx[p] for p in matched_ids]
-    sentinel_ms = rows[-1]["ts_ms"] + 48 * 3_600_000
-    rows.append({"event_id": -1, "ts_ms": sentinel_ms,
-                 "user_id": -1, "event_type": "click"})
-    rows.append({"event_id": -2, "ts_ms": sentinel_ms,
-                 "user_id": -1, "event_type": "purchase"})
-    base = tempfile.mkdtemp(prefix="kspipeline-sfjoin-")
-    src = os.path.join(base, "src")
-    _write_event_chunks(rows, src, cuts)
-
-    schema = "event_id long, ts_ms long, user_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    )
-    p = (
-        stream.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    c = (
-        stream.where(F.col("event_type") == "click")
-        .withWatermark("ts", "24 hours")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    joined = p.join(
-        c,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") < F.col("p_ts")),
-        "full_outer",
-    ).select(
-        "p_id",
-        "c_id",
-        "p_user",
-        "c_user",
-        F.unix_millis("p_ts").alias("p_ts_ms"),
-        F.unix_millis("c_ts").alias("c_ts_ms"),
-    )
-
-    batches: list = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _e: batches.append(df.collect()))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError(
-            "stream-stream full join replay timed out after 300 s"
-        )
-    shutil.rmtree(base, ignore_errors=True)
-    out = [
-        (r["p_id"], r["c_id"], r["p_user"], r["c_user"],
-         r["p_ts_ms"], r["c_ts_ms"])
-        for b in batches
-        for r in b
-        if (r["p_id"] is None or r["p_id"] >= 0)
-        and (r["c_id"] is None or r["c_id"] >= 0)
-    ]
     return spark.createDataFrame(
         out,
         "p_id long, c_id long, p_user long, c_user long, "
@@ -5160,10 +4313,6 @@ def q_streaming_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     .skyline_2d plan the batch row certifies; the final frontier
     hash-matches the quadratic dominance oracle over ALL rows,
     proving no eviction was wrong and no dominated point survived."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.operators.pareto import skyline_2d
 
     part = _t(spark, sf_dir, "part").select(
@@ -5192,71 +4341,38 @@ def q_streaming_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "point dominates a batch-0 frontier member"
         )
 
-    base = tempfile.mkdtemp(prefix="kspipeline-sskyline-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i, chunk in enumerate(chunks):
-            path = os.path.join(src, f"pts{i}.json")
-            with open(path, "w") as f:
-                for key, x, y in chunk:
-                    f.write(_json.dumps({"key": key, "x": x, "y": y}) + "\n")
-            os.utime(path, (mtime0 + i, mtime0 + i))
+    state: dict = {"frontier": [], "evictions": 0}
 
-        state: dict = {"frontier": [], "evictions": 0, "batches": 0}
-
-        def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
-            batch_pts = [
-                (r["key"], r["x"], r["y"])
-                for r in batch_df.select("key", "x", "y").collect()
-            ]
-            uni = spark.createDataFrame(
-                state["frontier"] + batch_pts, "key long, x long, y long"
-            )
-            new_frontier = [
-                (r["key"], r["x"], r["y"])
-                for r in skyline_2d(uni, "x", "y", "key", n_buckets=32)
-                .collect()
-            ]
-            kept = {p[0] for p in new_frontier}
-            state["evictions"] += sum(
-                1 for p in state["frontier"] if p[0] not in kept
-            )
-            state["frontier"] = new_frontier
-            state["batches"] += 1
-
-        q = (
-            spark.readStream.schema("key long, x long, y long")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
+        batch_pts = [
+            (r["key"], r["x"], r["y"])
+            for r in batch_df.select("key", "x", "y").collect()
+        ]
+        uni = spark.createDataFrame(
+            state["frontier"] + batch_pts, "key long, x long, y long"
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("skyline replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if state["batches"] != k:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {state['batches']}"
-            )
-        if state["evictions"] < 1:
-            raise AssertionError(
-                "no cross-batch eviction despite the constructed property"
-            )
-        return spark.createDataFrame(
-            state["frontier"], "key long, x long, y long"
+        new_frontier = [
+            (r["key"], r["x"], r["y"])
+            for r in skyline_2d(uni, "x", "y", "key", n_buckets=32)
+            .collect()
+        ]
+        kept = {p[0] for p in new_frontier}
+        state["evictions"] += sum(
+            1 for p in state["frontier"] if p[0] not in kept
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        state["frontier"] = new_frontier
+
+    with _scratch("sskyline") as base:
+        _replay(
+            spark, base,
+            [[{"key": key, "x": x, "y": y} for key, x, y in c] for c in chunks],
+            "key long, x long, y long", lambda s: s, maintain,
+        )
+    if state["evictions"] < 1:
+        raise AssertionError(
+            "no cross-batch eviction despite the constructed property"
+        )
+    return spark.createDataFrame(state["frontier"], "key long, x long, y long")
 
 
 @register(
@@ -5281,10 +4397,6 @@ def q_streaming_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental ≡ recomputed IS the certificate, matching the join-
     IVM rows' method. At 100 TB the state side is a blocked store:
     only Δ's blocks are ever read (block-key partition pruning)."""
-    import json as _json
-    import shutil
-    import time as _time
-
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
@@ -5321,25 +4433,12 @@ def q_streaming_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "straddles the custkey%3 batches"
         )
 
-    base = tempfile.mkdtemp(prefix="kspipeline-slinkage-")
-    src = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i, chunk in enumerate(chunks):
-            path = os.path.join(src, f"cust{i}.json")
-            with open(path, "w") as f:
-                for r in chunk:
-                    f.write(_json.dumps(r) + "\n")
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
-        sink: dict = {"pairs": [], "cross": 0, "batches": 0}
-        schema = (
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_mktsegment string"
-        )
+    sink: dict = {"pairs": [], "cross": 0, "batches": 0}
+    schema = (
+        "c_custkey long, c_name string, c_nationkey int, c_mktsegment string"
+    )
+    with _scratch("slinkage") as base:
+        state_dir = os.path.join(base, "state")
 
         def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
             delta = batch_df.localCheckpoint(eager=True)
@@ -5355,38 +4454,16 @@ def q_streaming_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta.write.mode("append").parquet(state_dir)
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(spark, base, chunks, schema, lambda s: s, maintain)
+    if sink["cross"] < 1:
+        raise AssertionError(
+            "no pair flowed through the Δ×state leg despite the "
+            "constructed straddle"
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("linkage replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if sink["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {sink['batches']}"
-            )
-        if sink["cross"] < 1:
-            raise AssertionError(
-                "no pair flowed through the Δ×state leg despite the "
-                "constructed straddle"
-            )
-        return spark.createDataFrame(
-            sink["pairs"],
-            "id_a long, id_b long, name_dist long, fields_agree long",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        sink["pairs"],
+        "id_a long, id_b long, name_dist long, fields_agree long",
+    )
 
 
 @register(
@@ -5414,10 +4491,6 @@ def q_streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     1→≥2 crossing counter is asserted ≥1 in batches after the
     first. Final maintained view hash-matches the one-shot batch
     oracle over ALL documents: incremental ≡ recomputed."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.operators.dedup import (
         positional_grams,
         positions_to_spans,
@@ -5428,26 +4501,10 @@ def q_streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="kspipeline-sspan-")
-    src = os.path.join(base, "src")
-    occ_dir = os.path.join(base, "occ")
-    dup_dir = os.path.join(base, "dup")
-    spans_store = os.path.join(base, "spans")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i in range(3):
-            chunk = docs.where(F.col("doc_id") % 3 == i)
-            path = os.path.join(src, f"docs{i}.json")
-            with open(path, "w") as f:
-                for r in chunk.collect():
-                    f.write(
-                        _json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-                        + "\n"
-                    )
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
+    with _scratch("sspan") as base:
+        occ_dir = os.path.join(base, "occ")
+        dup_dir = os.path.join(base, "dup")
+        spans_store = os.path.join(base, "spans")
         stats: dict = {"batches": 0, "retro_crossings": 0}
         occ_schema = "doc_id long, pos long, gram string"
 
@@ -5520,27 +4577,11 @@ def q_streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta_occ.write.mode("append").parquet(occ_dir)
             stats["batches"] += 1
 
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base,
+            [docs.where(F.col("doc_id") % 3 == i).collect() for i in range(3)],
+            "doc_id long, text string", lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("span-dedup replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if stats["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {stats['batches']}"
-            )
         if stats["retro_crossings"] < 1:
             raise AssertionError(
                 "no retroactive 1→≥2 gram crossing despite the mod-3 "
@@ -5555,10 +4596,7 @@ def q_streaming_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("s.span_len").alias("span_len"),
             )
         )
-        rows, schema = out.collect(), out.schema
-        return spark.createDataFrame(rows, schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -5583,32 +4621,11 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflowed k-1 counters must have decremented (at small SFs the
     vocabulary fits the summary and counts stay exact — also
     legitimate)."""
-    import json as _json
-    import shutil
-    import time as _time
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     k = _sk.HH_K
-    base = tempfile.mkdtemp(prefix="kspipeline-shh-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i in range(3):
-            chunk = docs.where(F.col("doc_id") % 3 == i)
-            path = os.path.join(src, f"docs{i}.json")
-            with open(path, "w") as f:
-                for r in chunk.collect():
-                    f.write(
-                        _json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-                        + "\n"
-                    )
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
+    with _scratch("shh") as base:
         state: dict = {}
         stats: dict = {
-            "batches": 0,
             "n_total": 0,
             "decrement_rounds": 0,
             "overflows": 0,
@@ -5631,29 +4648,12 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) or any(t not in merged for t in before):
                 stats["decrement_rounds"] += 1
             stats["n_total"] += n_batch
-            stats["batches"] += 1
 
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base,
+            [docs.where(F.col("doc_id") % 3 == i).collect() for i in range(3)],
+            "doc_id long, text string", lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("heavy-hitter replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if stats["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {stats['batches']}"
-            )
         # invariant, not vocabulary assumption: a merge whose combined
         # candidate set exceeded k-1 counters MUST have decremented;
         # a corpus whose vocabulary never overflows the summary keeps
@@ -5667,7 +4667,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         replayed = (
             spark.read.schema("doc_id long, text string")
-            .json(src)
+            .json(os.path.join(base, "src"))
             .select(F.explode(F.split("text", " ")).alias("tok"))
         )
         out = (
@@ -5676,10 +4676,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("freq"))
             .where(F.col("freq") * k > F.lit(stats["n_total"]))
         )
-        rows, schema = out.collect(), out.schema
-        return spark.createDataFrame(rows, schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -5706,46 +4703,30 @@ def q_streaming_entity_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental ≡ recomputed. At 100 TB the union-find state is one
     entry per MATCHED record (matched sets are sparse), not per
     record; the blocked store bounds each Δ×S probe."""
-    import json as _json
-    import shutil
-    import time as _time
-
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
     rows = [r.asDict() for r in cust.collect()]
     chunks = [[r for r in rows if r["c_custkey"] % 3 == i] for i in range(3)]
 
-    base = tempfile.mkdtemp(prefix="kspipeline-segolden-")
-    src = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i, chunk in enumerate(chunks):
-            path = os.path.join(src, f"cust{i}.json")
-            with open(path, "w") as f:
-                for r in chunk:
-                    f.write(_json.dumps(r) + "\n")
-            os.utime(path, (mtime0 + i, mtime0 + i))
+    parent: dict = {}
+    members: dict = {}
+    stats: dict = {"batches": 0, "bridges": 0}
+    seen: set = set()
+    schema = (
+        "c_custkey long, c_name string, c_nationkey int, c_mktsegment string"
+    )
 
-        parent: dict = {}
-        members: dict = {}
-        stats: dict = {"batches": 0, "bridges": 0}
-        seen: set = set()
-        schema = (
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_mktsegment string"
-        )
+    def find(x: int) -> int:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:
+            parent[x], x = root, parent[x]
+        return root
 
-        def find(x: int) -> int:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:
-                parent[x], x = root, parent[x]
-            return root
+    with _scratch("segolden") as base:
+        state_dir = os.path.join(base, "state")
 
         def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
             delta = batch_df.localCheckpoint(eager=True)
@@ -5773,40 +4754,16 @@ def q_streaming_entity_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             stats["batches"] += 1
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(spark, base, chunks, schema, lambda s: s, maintain)
+    if stats["bridges"] < 1:
+        raise AssertionError(
+            "no retroactive entity merge despite the mod-3 split"
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("entity replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if stats["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {stats['batches']}"
-            )
-        if stats["bridges"] < 1:
-            raise AssertionError(
-                "no retroactive entity merge despite the mod-3 split"
-            )
-        assigned = [
-            (r["c_custkey"], find(r["c_custkey"])) for r in rows
-        ]
-        return spark.createDataFrame(
-            [(k, e, 1 if k == e else 0) for k, e in assigned],
-            "id long, entity_id long, is_survivor long",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    assigned = [(r["c_custkey"], find(r["c_custkey"])) for r in rows]
+    return spark.createDataFrame(
+        [(k, e, 1 if k == e else 0) for k, e in assigned],
+        "id long, entity_id long, is_survivor long",
+    )
 
 
 @register(
@@ -5845,10 +4802,6 @@ def q_streaming_sliding_distinct(
     Hash-matched against the SAME exact oracle as the batch row:
     the two-level streaming state (per-(window,user) counts → per-
     window distinct totals) reproduces the one-shot recompute."""
-    import json as _json
-    import shutil
-    import time as _time
-
     ev = _t(spark, sf_dir, "events").select(
         F.unix_millis("ts").alias("t_ms"), "user_id"
     )
@@ -5857,74 +4810,44 @@ def q_streaming_sliding_distinct(
     )
     max_ms = rows[-1][0]
     sentinel_ms = max_ms + 40 * 86_400_000  # far past every real window
-    base = tempfile.mkdtemp(prefix="kspipeline-ssdist-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        n = len(rows)
-        chunks = [rows[: n // 3], rows[n // 3 : 2 * n // 3], rows[2 * n // 3 :]]
-        chunks[2] = chunks[2] + [(sentinel_ms, -1)]
-        mtime0 = _time.time() - 86_400
-        for i, chunk in enumerate(chunks):
-            path = os.path.join(src, f"ev{i}.json")
-            with open(path, "w") as f:
-                for t_ms, uid in chunk:
-                    f.write(
-                        _json.dumps({"t_ms": t_ms, "user_id": uid}) + "\n"
-                    )
-            os.utime(path, (mtime0 + i, mtime0 + i))
+    n = len(rows)
+    chunks = [rows[: n // 3], rows[n // 3 : 2 * n // 3], rows[2 * n // 3 :]]
+    chunks[2] = chunks[2] + [(sentinel_ms, -1)]
 
-        emitted: list = []
-
-        def sink(batch_df: DataFrame, _epoch_id: int) -> None:
-            emitted.extend(batch_df.collect())
-
-        stream = (
-            spark.readStream.schema("t_ms long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .withColumn("ts", F.timestamp_millis(F.col("t_ms")))
+    def per_window(stream: DataFrame) -> DataFrame:
+        per_user = (
+            stream.withColumn("ts", F.timestamp_millis(F.col("t_ms")))
             .withWatermark("ts", "24 hours")
+            .groupBy(F.window("ts", "3 hours", "1 hour").alias("w"), "user_id")
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        per_user = stream.groupBy(
-            F.window("ts", "3 hours", "1 hour").alias("w"), "user_id"
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        per_window = per_user.groupBy("w").agg(
+        return per_user.groupBy("w").agg(
             F.count(F.lit(1)).cast("long").alias("n_users"),
             F.sum("cnt").cast("long").alias("n_events"),
         )
-        q = (
-            per_window.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("sliding-distinct replay timed out")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
 
-        out = [
-            (
-                int(r["w"]["start"].timestamp() * 1000),
-                r["n_events"],
-                r["n_users"],
-            )
-            for r in emitted
-            if int(r["w"]["start"].timestamp() * 1000) <= max_ms
-        ]
-        if len(out) < 3:
-            raise AssertionError(f"too few emitted windows: {len(out)}")
-        return spark.createDataFrame(
-            out, "window_ms long, n_events long, n_users long"
+    emitted: list = []
+    with _scratch("ssdist") as base:
+        _replay(
+            spark, base,
+            [[{"t_ms": t_ms, "user_id": uid} for t_ms, uid in c] for c in chunks],
+            "t_ms long, user_id long", per_window,
+            lambda df, _e: emitted.extend(df.collect()), "append",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    out = [
+        (
+            int(r["w"]["start"].timestamp() * 1000),
+            r["n_events"],
+            r["n_users"],
+        )
+        for r in emitted
+        if int(r["w"]["start"].timestamp() * 1000) <= max_ms
+    ]
+    if len(out) < 3:
+        raise AssertionError(f"too few emitted windows: {len(out)}")
+    return spark.createDataFrame(
+        out, "window_ms long, n_events long, n_users long"
+    )
 
 
 @register(
@@ -5951,30 +4874,14 @@ def q_streaming_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥ 1 so the cross-batch leg provably executed. At 100 TB the
     state side is shingle-keyed postings: only Δ's shingles are ever
     joined (inverted-index partition pruning)."""
-    import json as _json
-    import shutil
-    import time as _time
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     rows = [r.asDict() for r in docs.collect()]
     chunks = [[r for r in rows if r["doc_id"] % 3 == i] for i in range(3)]
 
-    base = tempfile.mkdtemp(prefix="kspipeline-scospairs-")
-    src = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i, chunk in enumerate(chunks):
-            path = os.path.join(src, f"docs{i}.json")
-            with open(path, "w") as f:
-                for r in chunk:
-                    f.write(_json.dumps(r) + "\n")
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
-        sink: dict = {"pairs": [], "cross": 0, "batches": 0}
-        schema = "doc_id long, text string"
+    sink: dict = {"pairs": [], "cross": 0, "batches": 0}
+    schema = "doc_id long, text string"
+    with _scratch("scospairs") as base:
+        state_dir = os.path.join(base, "state")
 
         def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
             delta = batch_df.localCheckpoint(eager=True)
@@ -5990,37 +4897,15 @@ def q_streaming_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta.write.mode("append").parquet(state_dir)
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(spark, base, chunks, schema, lambda s: s, maintain)
+    if sink["cross"] < 1:
+        raise AssertionError(
+            "no cross-batch pair despite mod-3 split — the Δ×S "
+            "leg never executed"
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("cosine replay timed out after 300 s")
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if sink["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {sink['batches']}"
-            )
-        if sink["cross"] < 1:
-            raise AssertionError(
-                "no cross-batch pair despite mod-3 split — the Δ×S "
-                "leg never executed"
-            )
-        return spark.createDataFrame(
-            sink["pairs"], "doc_a long, doc_b long, dot long"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        sink["pairs"], "doc_a long, doc_b long, dot long"
+    )
 
 
 @register(
@@ -6047,30 +4932,15 @@ def q_streaming_cosine_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. At 100 TB the postings state is shingle-keyed
     parquet and the refresh is a scan + one aggregate + the same
     bounded inverted-index join the batch row runs."""
-    import json as _json
     import shutil
-    import time as _time
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     rows = [r.asDict() for r in docs.collect()]
     chunks = [[r for r in rows if r["doc_id"] % 3 == i] for i in range(3)]
 
-    base = tempfile.mkdtemp(prefix="kspipeline-scosrefresh-")
-    src = os.path.join(base, "src")
-    postings_dir = os.path.join(base, "postings")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i, chunk in enumerate(chunks):
-            path = os.path.join(src, f"docs{i}.json")
-            with open(path, "w") as f:
-                for r in chunk:
-                    f.write(_json.dumps(r) + "\n")
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
-        sink: dict = {"batches": 0, "appended": []}
-        schema = "doc_id long, text string"
+    appended: list = []
+    with _scratch("scosrefresh") as base:
+        postings_dir = os.path.join(base, "postings")
 
         def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
             # per-batch work is the EXPENSIVE per-doc part only:
@@ -6083,44 +4953,23 @@ def q_streaming_cosine_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             postings = _sim._shingle_tf(
                 delta, "text", "doc_id"
             ).localCheckpoint(eager=True)
-            n = postings.count()
+            appended.append(postings.count())
             postings.write.mode("append").parquet(postings_dir)
-            sink["appended"].append(n)
-            sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, chunks, "doc_id long, text string",
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "cosine refresh replay timed out after 300 s"
-            )
-        for _ in range(100):
-            if all(aq.id != q.id for aq in spark.streams.active):
-                break
-            _time.sleep(0.1)
-
-        if sink["batches"] != 3:
+        if min(appended) < 1:
             raise AssertionError(
-                f"replay did not micro-batch per chunk: {sink['batches']}"
-            )
-        if min(sink["appended"]) < 1:
-            raise AssertionError(
-                f"a micro-batch appended no postings: {sink['appended']}"
+                f"a micro-batch appended no postings: {appended}"
             )
         # epoch boundary: df refresh + pair regeneration from the
         # postings STATE. The source chunks are DELETED first, so
         # "the refresh consumed the store, never the source" is
         # enforced by construction, not just documented (r15 review:
         # the docstring claimed a check that didn't exist)
-        shutil.rmtree(src)
+        shutil.rmtree(os.path.join(base, "src"))
         state = spark.read.schema(
             "doc_id long, term string, tf long"
         ).parquet(postings_dir)
@@ -6128,12 +4977,8 @@ def q_streaming_cosine_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             tuple(r)
             for r in _sim.tfidf_pairs_from_postings(state).collect()
         ]
-        _sim.release()
-        return spark.createDataFrame(
-            out, "doc_a long, doc_b long, dot long"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    _sim.release()
+    return spark.createDataFrame(out, "doc_a long, doc_b long, dot long")
 
 
 @register(
@@ -6159,27 +5004,12 @@ def q_streaming_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared theil_sen_median. At 100 TB the slope store is
     series-partitioned parquet and each batch's work is bounded by
     Δ-hours × state-hours, never recomputed from scratch."""
-    import shutil
+    rows = _hourly_rows(spark, sf_dir)
 
-    hourly = _ts_ops.hourly_cents_series(
-        _t(spark, sf_dir, "events")
-    ).orderBy("h_ms", "event_type")
-    rows = [
-        (r["event_type"], int(r["h_ms"]), int(r["c"]))
-        for r in hourly.collect()
-    ]
-
-    base = tempfile.mkdtemp(prefix="kspipeline-stheilsen-")
-    src = os.path.join(base, "src")
-    buckets_dir = os.path.join(base, "buckets")
-    slopes_dir = os.path.join(base, "slopes")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        _write_hour_chunks(rows, src)
-
+    with _scratch("stheilsen") as base:
+        buckets_dir = os.path.join(base, "buckets")
+        slopes_dir = os.path.join(base, "slopes")
         sink = {"batches": 0, "cross_pairs": 0}
-        bucket_schema = "event_type string, h_ms long, c long"
         slope_expr = (
             "CAST(c_b - c_a AS DOUBLE) /"
             " CAST((h_b - h_a) div 3600000 AS DOUBLE)"
@@ -6206,7 +5036,7 @@ def q_streaming_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             new_pairs = within
             if sink["batches"] > 0:
-                state = spark.read.schema(bucket_schema).parquet(
+                state = spark.read.schema(_HOURLY_SCHEMA).parquet(
                     buckets_dir
                 )
                 # hour-contiguous chunks: every state hour precedes
@@ -6241,23 +5071,10 @@ def q_streaming_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta.write.mode("append").parquet(buckets_dir)
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema(bucket_schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _hour_chunk_split(rows), _HOURLY_SCHEMA,
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("theil-sen replay timed out after 300 s")
-
-        if sink["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {sink['batches']}"
-            )
         if sink["cross_pairs"] < 1:
             raise AssertionError(
                 "no Δ×state pair despite hour-contiguous chunking — "
@@ -6272,8 +5089,6 @@ def q_streaming_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, n_pairs bigint,"
             " slope_cents_per_hour double",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -6298,25 +5113,11 @@ def q_streaming_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded moments alone hash-matches the SAME oracle as the batch
     q_ccf (maintained ≡ recomputed). At 100 TB the window state is
     max_lag hours × series — independent of stream length."""
-    import shutil
-
     max_lag = _ts_ops.CCF_MAX_LAG
     hour_ms = _ts_ops.HOUR_MS
-    hourly = _ts_ops.hourly_cents_series(
-        _t(spark, sf_dir, "events")
-    ).orderBy("h_ms", "event_type")
-    rows = [
-        (r["event_type"], int(r["h_ms"]), int(r["c"]))
-        for r in hourly.collect()
-    ]
+    rows = _hourly_rows(spark, sf_dir)
 
-    base = tempfile.mkdtemp(prefix="kspipeline-sccf-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        _write_hour_chunks(rows, src)
-
+    with _scratch("sccf") as base:
         # recent[(et, h_ms)] = (c, batch_folded_in); pruned below
         # current_hour − max_lag once per fold step
         recent: dict = {}
@@ -6364,23 +5165,10 @@ def q_streaming_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     del recent[(et2, h2)]
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema("event_type string, h_ms long, c long")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _hour_chunk_split(rows), _HOURLY_SCHEMA,
+            lambda s: s, fold,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("ccf replay timed out after 300 s")
-
-        if sink["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {sink['batches']}"
-            )
         if sink["cross_pairs"] < 1:
             raise AssertionError(
                 "no matched pair crossed a batch boundary — the "
@@ -6426,8 +5214,6 @@ def q_streaming_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
                        AS DOUBLE))), 6)
                END AS ccf_r""",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -6455,26 +5241,12 @@ def q_streaming_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the folded stats alone and hash-matches the SAME batch-window
     oracle as q_acf: maintained ≡ recomputed. Cross-batch lag
     products (P_k touching two chunks) asserted ≥ 1."""
-    import shutil
-
     max_lag = _ts_ops.ACF_MAX_LAG
-    hourly = _ts_ops.hourly_cents_series(
-        _t(spark, sf_dir, "events")
-    ).orderBy("h_ms", "event_type")
-    rows = [
-        (r["event_type"], int(r["h_ms"]), int(r["c"]))
-        for r in hourly.collect()
-    ]
+    rows = _hourly_rows(spark, sf_dir)
 
-    base = tempfile.mkdtemp(prefix="kspipeline-sacf-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        _write_hour_chunks(rows, src)
-
+    with _scratch("sacf") as base:
         state: dict = {}
-        sink = {"batches": 0, "cross_products": 0}
+        sink = {"cross_products": 0}
 
         def fold(batch_df: DataFrame, _epoch_id: int) -> None:
             batch = sorted(
@@ -6503,27 +5275,13 @@ def q_streaming_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if len(st["head"]) < max_lag:
                     st["head"].append(c)
                 st["tail"] = (st["tail"] + [c])[-max_lag:]
-            sink["batches"] += 1
             sink["start_n"] = {et: st["n"] for et, st in state.items()}
 
         sink["start_n"] = {}
-        q = (
-            spark.readStream.schema("event_type string, h_ms long, c long")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _hour_chunk_split(rows), _HOURLY_SCHEMA,
+            lambda s: s, fold,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("acf replay timed out after 300 s")
-
-        if sink["batches"] != 3:
-            raise AssertionError(
-                f"replay did not micro-batch per chunk: {sink['batches']}"
-            )
         if sink["cross_products"] < 1:
             raise AssertionError(
                 "no lag product crossed a batch boundary — the "
@@ -6559,8 +5317,6 @@ def q_streaming_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             out, "event_type string, lag long, n_pairs long, acf_micro long"
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -6589,9 +5345,7 @@ def q_streaming_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(k·levels) per series — independent of stream length — and the
     per-batch work is one level-partitioned compaction cascade over
     Δ ∪ state. See operators/sketches.kll_compact."""
-    import json as _json
     import shutil
-    import time as _time
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -6603,28 +5357,17 @@ def q_streaming_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("ts", "event_id")
     )
-    rows = [(r["event_type"], int(r["c"])) for r in ev.collect()]
+    rows = [
+        {"event_type": r["event_type"], "c": int(r["c"])}
+        for r in ev.collect()
+    ]
     n_total = len(rows)
-    n_chunks = 4
     chunks = [
-        rows[(i * n_total) // n_chunks : ((i + 1) * n_total) // n_chunks]
-        for i in range(n_chunks)
+        rows[(i * n_total) // 4 : ((i + 1) * n_total) // 4] for i in range(4)
     ]
 
-    base = tempfile.mkdtemp(prefix="kspipeline-skll-")
-    src = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        mtime0 = _time.time() - 86_400
-        for i, chunk in enumerate(chunks):
-            path = os.path.join(src, f"vals{i}.json")
-            with open(path, "w") as f:
-                for et, c in chunk:
-                    f.write(_json.dumps({"event_type": et, "c": c}) + "\n")
-            os.utime(path, (mtime0 + i, mtime0 + i))
-
+    with _scratch("skll") as base:
+        state_dir = os.path.join(base, "state")
         counts: dict = {}
         sink: dict = {"batches": 0, "state_rows": []}
         item_schema = "event_type string, level int, v long"
@@ -6648,29 +5391,20 @@ def q_streaming_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink["state_rows"].append(state.count())
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema("event_type string, c long")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, chunks, "event_type string, c long",
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise AssertionError("streaming KLL replay timed out")
-        assert sink["batches"] == n_chunks, sink
         # the fold genuinely crossed batches: once any compaction
         # fired, the state is strictly smaller than the input (at
         # tiny SFs where no cell ever exceeds k the sketch is
         # legitimately exact and keeps everything — B = 0)
-        if counts:
-            assert sink["state_rows"][-1] < n_total, sink
-        else:
-            assert sink["state_rows"][-1] == n_total, sink
+        if counts and sink["state_rows"][-1] >= n_total:
+            raise AssertionError(f"compactions fired, no row dropped: {sink}")
+        if not counts and sink["state_rows"][-1] != n_total:
+            raise AssertionError(f"no compaction, yet rows dropped: {sink}")
 
-        shutil.rmtree(src)
+        shutil.rmtree(os.path.join(base, "src"))
         state = spark.read.schema(item_schema).parquet(state_dir)
         values = _t(spark, sf_dir, "events").select(
             "event_type",
@@ -6682,14 +5416,26 @@ def q_streaming_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, values, state, counts
             ).collect()
         ]
-        return spark.createDataFrame(
-            out,
-            "event_type string, n bigint, med2 bigint,"
-            " weight_ok boolean, bound_ok boolean, q10_ok boolean,"
-            " q50_ok boolean, q90_ok boolean, q99_ok boolean",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        out,
+        "event_type string, n bigint, med2 bigint,"
+        " weight_ok boolean, bound_ok boolean, q10_ok boolean,"
+        " q50_ok boolean, q90_ok boolean, q99_ok boolean",
+    )
+
+
+def _class_chunks(rows: list) -> list:
+    """Customer (segment, nation, balance-thousand) rows as 4
+    deterministic custkey-mod replay chunks."""
+    return [
+        [
+            {"seg": r["c_mktsegment"], "nat": r["c_nationkey"],
+             "bal_k": r["bal_k"]}
+            for r in rows
+            if r["c_custkey"] % 4 == c
+        ]
+        for c in range(4)
+    ]
 
 
 def _streaming_privacy_oracle() -> str:
@@ -6730,10 +5476,6 @@ def q_streaming_privacy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data seen so far). At 100 TB the state is classes ×
     sensitive domain and the audit is O(state). See
     operators/quality.l_diversity / k_anonymity."""
-    import json as _json
-    import shutil
-    import time as _time
-
     K_T, L_T = 10, 5
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -6742,30 +5484,8 @@ def q_streaming_privacy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(floor(c_acctbal / 1000) AS BIGINT)").alias("bal_k"),
     )
     rows = cust.collect()
-    base = tempfile.mkdtemp(prefix="kspipeline-sprivacy-")
-    src = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        m0 = _time.time() - 86_400
-        for c in range(4):
-            p = os.path.join(src, f"chunk{c}.json")
-            with open(p, "w") as f:
-                for r in rows:
-                    if r["c_custkey"] % 4 == c:
-                        f.write(
-                            _json.dumps(
-                                {
-                                    "seg": r["c_mktsegment"],
-                                    "nat": r["c_nationkey"],
-                                    "bal_k": r["bal_k"],
-                                }
-                            )
-                            + "\n"
-                        )
-            os.utime(p, (m0 + c, m0 + c))
-
+    with _scratch("sprivacy") as base:
+        state_dir = os.path.join(base, "state")
         sink: dict = {"batches": 0, "audits": []}
         state_schema = "seg string, nat long, bal_k long, cnt long"
 
@@ -6803,19 +5523,10 @@ def q_streaming_privacy(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink["audits"].append(audit)
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema("seg string, nat long, bal_k long")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _class_chunks(rows), "seg string, nat long, bal_k long",
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise AssertionError("streaming privacy replay timed out")
-        assert sink["batches"] == 4, sink
 
         out = []
         prev_risk: dict = {}
@@ -6828,8 +5539,10 @@ def q_streaming_privacy(spark: SparkSession, sf_dir: str) -> DataFrame:
                     pk, pl = prev_risk[key]
                     # append-only monotonicity: cleared flags never
                     # re-arm (class_size and diversity only grow)
-                    assert not (k_risk and not pk), (seq, key)
-                    assert not (l_risk and not pl), (seq, key)
+                    if (k_risk and not pk) or (l_risk and not pl):
+                        raise AssertionError(
+                            f"a cleared risk flag re-armed: {(seq, key)}"
+                        )
                 prev_risk[key] = (k_risk, l_risk)
                 out.append(
                     (
@@ -6848,8 +5561,6 @@ def q_streaming_privacy(spark: SparkSession, sf_dir: str) -> DataFrame:
             " class_size bigint, n_distinct_sensitive bigint,"
             " k_at_risk boolean, l_at_risk boolean",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -6878,30 +5589,15 @@ def q_streaming_theil_sen_windowed(
     store; the final rank-selected median via the shared
     theil_sen_median hash-matches the SAME oracle as the batch
     windowed row."""
-    import shutil
-
     W = _ts_ops.TS_WINDOW_HOURS
     HOUR = _ts_ops.HOUR_MS
-    hourly = _ts_ops.hourly_cents_series(
-        _t(spark, sf_dir, "events")
-    ).orderBy("h_ms", "event_type")
-    rows = [
-        (r["event_type"], int(r["h_ms"]), int(r["c"]))
-        for r in hourly.collect()
-    ]
+    rows = _hourly_rows(spark, sf_dir)
     n_series = len({et for et, _, _ in rows})
 
-    base = tempfile.mkdtemp(prefix="kspipeline-stheilsenw-")
-    src = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    slopes_dir = os.path.join(base, "slopes")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        _write_hour_chunks(rows, src)
-
+    with _scratch("stheilsenw") as base:
+        state_dir = os.path.join(base, "state")
+        slopes_dir = os.path.join(base, "slopes")
         sink = {"batches": 0, "cross_pairs": 0, "max_state": 0}
-        bucket_schema = "event_type string, h_ms long, c long"
         slope_expr = (
             "CAST(c_b - c_a AS DOUBLE) /"
             " CAST((h_b - h_a) div 3600000 AS DOUBLE)"
@@ -6910,7 +5606,7 @@ def q_streaming_theil_sen_windowed(
         def maintain(batch_df: DataFrame, _epoch_id: int) -> None:
             delta = batch_df.localCheckpoint(eager=True)
             if sink["batches"] > 0:
-                state = spark.read.schema(bucket_schema).parquet(
+                state = spark.read.schema(_HOURLY_SCHEMA).parquet(
                     state_dir
                 )
                 all_b = state.withColumn(
@@ -6959,26 +5655,19 @@ def q_streaming_theil_sen_windowed(
             )
             n_state = new_state.count()
             sink["max_state"] = max(sink["max_state"], n_state)
-            assert n_state <= (W + 1) * n_series, (n_state, W, n_series)
+            if n_state > (W + 1) * n_series:
+                raise AssertionError(
+                    f"window state outgrew its bound: {(n_state, W, n_series)}"
+                )
             new_state.write.mode("overwrite").parquet(state_dir)
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema(bucket_schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _hour_chunk_split(rows), _HOURLY_SCHEMA,
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise AssertionError(
-                "streaming windowed theil-sen replay timed out"
-            )
-        assert sink["batches"] == 3, sink
-        assert sink["cross_pairs"] >= 1, sink
+        if sink["cross_pairs"] < 1:
+            raise AssertionError(f"no Δ×state pair crossed a batch: {sink}")
 
         pairs = spark.read.schema(
             "event_type string, h_a long, h_b long, slope double"
@@ -6991,8 +5680,6 @@ def q_streaming_theil_sen_windowed(
             "event_type string, n_pairs bigint,"
             " slope_cents_per_hour double",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -7022,29 +5709,15 @@ def q_streaming_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch are counted and asserted >= 1, so the cross-batch buffer
     hand-off is genuinely exercised. See
     operators/timeseries.seasonal_decompose."""
-    import shutil
-
     period = _ts_ops.SEASONAL_PERIOD
     half = period // 2
     full = period + 1
     scale = 2 * period
-    hourly = _ts_ops.hourly_cents_series(
-        _t(spark, sf_dir, "events")
-    ).orderBy("h_ms", "event_type")
-    rows = [
-        (r["event_type"], int(r["h_ms"]), int(r["c"]))
-        for r in hourly.collect()
-    ]
+    rows = _hourly_rows(spark, sf_dir)
 
-    base = tempfile.mkdtemp(prefix="kspipeline-sseas-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        _write_hour_chunks(rows, src)
-
+    with _scratch("sseas") as base:
         state: dict = {}
-        sink = {"batches": 0, "cross_windows": 0, "start_n": {}}
+        sink = {"cross_windows": 0, "start_n": {}}
 
         def fold(batch_df: DataFrame, _epoch_id: int) -> None:
             batch = sorted(
@@ -7078,33 +5751,19 @@ def q_streaming_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if st["n"] - period <= sink["start_n"].get(et, 0):
                         sink["cross_windows"] += 1
                     st["buf"] = st["buf"][1:]
-            sink["batches"] += 1
             sink["start_n"] = {
                 et: st["n"] for et, st in state.items()
             }
 
-        q = (
-            spark.readStream.schema(
-                "event_type string, h_ms long, c long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _hour_chunk_split(rows), _HOURLY_SCHEMA,
+            lambda s: s, fold,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "seasonal replay timed out after 300 s"
+        if sink["cross_windows"] < 1:
+            raise AssertionError(
+                "no completed window spanned a batch boundary — the "
+                "tail-buffer hand-off was never exercised"
             )
-
-        assert sink["batches"] == 3, sink
-        assert sink["cross_windows"] >= 1, (
-            "no completed window spanned a batch boundary — the "
-            "tail-buffer hand-off was never exercised"
-        )
 
         out = []
         for et, st in state.items():
@@ -7120,8 +5779,6 @@ def q_streaming_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, hod long, n_obs long,"
             " seasonal_milli long, msr_cents2 long",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _streaming_t_closeness_oracle() -> str:
@@ -7209,10 +5866,6 @@ def q_streaming_t_closeness(
     slices — exact hash match on all 4 batches. At 100 TB the state
     is classes × sensitive domain; per-batch work is O(state), raw
     history never rescanned."""
-    import json as _json
-    import shutil
-    import time as _time
-
     from kafka_streams_pipeline_spark.operators.quality import (
         t_closeness_from_cells,
     )
@@ -7226,30 +5879,8 @@ def q_streaming_t_closeness(
         ).alias("bal_k"),
     ).where(F.col("bal_k").isNotNull())
     rows = cust.collect()
-    base = tempfile.mkdtemp(prefix="kspipeline-stclose-")
-    src = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        m0 = _time.time() - 86_400
-        for c in range(4):
-            p = os.path.join(src, f"chunk{c}.json")
-            with open(p, "w") as f:
-                for r in rows:
-                    if r["c_custkey"] % 4 == c:
-                        f.write(
-                            _json.dumps(
-                                {
-                                    "seg": r["c_mktsegment"],
-                                    "nat": r["c_nationkey"],
-                                    "bal_k": r["bal_k"],
-                                }
-                            )
-                            + "\n"
-                        )
-            os.utime(p, (m0 + c, m0 + c))
-
+    with _scratch("stclose") as base:
+        state_dir = os.path.join(base, "state")
         sink: dict = {"batches": 0, "audits": []}
         state_schema = "seg string, nat long, bal_k long, cnt long"
 
@@ -7282,23 +5913,10 @@ def q_streaming_t_closeness(
             sink["audits"].append(audit)
             sink["batches"] += 1
 
-        q = (
-            spark.readStream.schema(
-                "seg string, nat long, bal_k long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _class_chunks(rows), "seg string, nat long, bal_k long",
+            lambda s: s, maintain,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming t-closeness replay timed out"
-            )
-        assert sink["batches"] == 4, sink
 
         # the audit must be maintained, not constant: some class's
         # EMD moved between consecutive batches (new rows shift the
@@ -7310,7 +5928,8 @@ def q_streaming_t_closeness(
                 k = (r["seg"], r["nat"])
                 if k in pa and pa[k] != r["emd_num"]:
                     moved = True
-        assert moved, "EMD never moved across batches"
+        if not moved:
+            raise AssertionError("EMD never moved across batches")
 
         out = []
         for seq, audit in enumerate(sink["audits"]):
@@ -7332,8 +5951,6 @@ def q_streaming_t_closeness(
             " c_nationkey bigint, class_size bigint,"
             " domain_size bigint, emd_num bigint, at_risk boolean",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register("q_streaming_ewma", oracle=_ts_ops.ewma_by_series_oracle(), materializes=True)
@@ -7354,26 +5971,12 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     union of all emissions hash-matches the batch oracle: maintained
     ≡ recomputed. At 100 TB: O(W) state per series, O(W) work per
     event. See operators/timeseries.ewma_by_series."""
-    import shutil
-
     w = _ts_ops.EWMA_W
-    hourly = _ts_ops.hourly_cents_series(
-        _t(spark, sf_dir, "events")
-    ).orderBy("h_ms", "event_type")
-    rows = [
-        (r["event_type"], int(r["h_ms"]), int(r["c"]))
-        for r in hourly.collect()
-    ]
+    rows = _hourly_rows(spark, sf_dir)
 
-    base = tempfile.mkdtemp(prefix="kspipeline-sewma-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        _write_hour_chunks(rows, src)
-
+    with _scratch("sewma") as base:
         state: dict = {}
-        sink: dict = {"batches": 0, "emit": [], "cross": 0,
+        sink: dict = {"emit": [], "cross": 0,
                       "start_n": {}}
 
         def fold(batch_df: DataFrame, _epoch_id: int) -> None:
@@ -7402,37 +6005,23 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if st["n"] - m < sink["start_n"].get(et, 0):
                     sink["cross"] += 1
                 st["buf"] = vals[-(w - 1):]
-            sink["batches"] += 1
             sink["start_n"] = {
                 et: st["n"] for et, st in state.items()
             }
 
-        q = (
-            spark.readStream.schema(
-                "event_type string, h_ms long, c long"
+        _replay(
+            spark, base, _hour_chunk_split(rows), _HOURLY_SCHEMA,
+            lambda s: s, fold,
+        )
+        if sink["cross"] < 1:
+            raise AssertionError(
+                "no emission's window spanned a batch boundary — the "
+                "buffer hand-off was never exercised"
             )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("ewma replay timed out after 300 s")
-
-        assert sink["batches"] == 3, sink
-        assert sink["cross"] >= 1, (
-            "no emission's window spanned a batch boundary — the "
-            "buffer hand-off was never exercised"
-        )
         return spark.createDataFrame(
             sink["emit"],
             "event_type string, h_ms long, ewma_milli long",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -7454,26 +6043,12 @@ def q_streaming_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed); evaluations whose 24-back value was buffered in an
     EARLIER batch are counted and asserted ≥ 1. See
     operators/timeseries.seasonal_naive_backtest."""
-    import shutil
-
     period = _ts_ops.SEASONAL_PERIOD
-    hourly = _ts_ops.hourly_cents_series(
-        _t(spark, sf_dir, "events")
-    ).orderBy("h_ms", "event_type")
-    rows = [
-        (r["event_type"], int(r["h_ms"]), int(r["c"]))
-        for r in hourly.collect()
-    ]
+    rows = _hourly_rows(spark, sf_dir)
 
-    base = tempfile.mkdtemp(prefix="kspipeline-sbacktest-")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    try:
-        _write_hour_chunks(rows, src)
-
+    with _scratch("sbacktest") as base:
         state: dict = {}
-        sink: dict = {"batches": 0, "cross_evals": 0, "start_n": {}}
+        sink: dict = {"cross_evals": 0, "start_n": {}}
 
         def fold(batch_df: DataFrame, _epoch_id: int) -> None:
             batch = sorted(
@@ -7500,32 +6075,19 @@ def q_streaming_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if st["n"] - period <= sink["start_n"].get(et, 0):
                         sink["cross_evals"] += 1
                 st["buf"] = (st["buf"] + [c])[-period:]
-            sink["batches"] += 1
             sink["start_n"] = {
                 et: st["n"] for et, st in state.items()
             }
 
-        q = (
-            spark.readStream.schema(
-                "event_type string, h_ms long, c long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            spark, base, _hour_chunk_split(rows), _HOURLY_SCHEMA,
+            lambda s: s, fold,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "backtest replay timed out after 300 s"
+        if sink["cross_evals"] < 1:
+            raise AssertionError(
+                "no evaluation's 24-back value crossed a batch "
+                "boundary — the buffer hand-off was never exercised"
             )
-        assert sink["batches"] == 3, sink
-        assert sink["cross_evals"] >= 1, (
-            "no evaluation's 24-back value crossed a batch "
-            "boundary — the buffer hand-off was never exercised"
-        )
 
         out = []
         for et, st in state.items():
@@ -7544,5 +6106,3 @@ def q_streaming_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, n_eval long, mae_seasonal_num long,"
             " mae_naive_num long, mase_milli long",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

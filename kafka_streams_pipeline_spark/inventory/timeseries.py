@@ -15,10 +15,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_pipeline_spark.inventory._registry import register
-from kafka_streams_pipeline_spark.inventory._shared import _t
+from kafka_streams_pipeline_spark.inventory._shared import (
+    _readings_chunks,
+    _readings_ts,
+    _replay,
+    _scratch,
+    _t,
+)
 from kafka_streams_pipeline_spark.operators import similarity as _sim
 from kafka_streams_pipeline_spark.operators import text as _text
 from kafka_streams_pipeline_spark.operators import timeseries as _ts
+from kafka_streams_pipeline_spark.schema import READING_SCHEMA
 
 
 @register("q_counter_rate", oracle=_ts.counter_rate_oracle())
@@ -158,20 +165,20 @@ def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-boundary-independent and the batch window oracle
     recomputes it exactly. Duplicate injection OFF — candles count
     physical rows. See streaming/stateful.py ohlc_cell_state."""
-    from kafka_streams_pipeline_spark.inventory.streaming_rows import (
-        _replay_readings_stream,
-    )
     from kafka_streams_pipeline_spark.streaming.stateful import (
         ohlc_cell_state,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, ohlc_cell_state, "update", inject_dups=False
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[(r["gh"], r["hour_ms"])] = r
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: ohlc_cell_state(_readings_ts(s)),
+            lambda df, _e: final.update(
+                ((r["gh"], r["hour_ms"]), r) for r in df.collect()
+            ),
+            "update",
+        )
     rows = [
         (
             r["gh"],
@@ -246,20 +253,20 @@ def q_streaming_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     injection OFF. See streaming/stateful.py twa_sensor_state."""
     from pyspark.sql import functions as F
 
-    from kafka_streams_pipeline_spark.inventory.streaming_rows import (
-        _replay_readings_stream,
-    )
     from kafka_streams_pipeline_spark.streaming.stateful import (
         twa_sensor_state,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, twa_sensor_state, "update", inject_dups=False
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["sensorId"]] = r
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: twa_sensor_state(_readings_ts(s)),
+            lambda df, _e: final.update(
+                (r["sensorId"], r) for r in df.collect()
+            ),
+            "update",
+        )
     rows = [
         (r["sensorId"], r["n_samples"], r["span_ms"], r["wsum"])
         for r in final.values()
@@ -426,20 +433,20 @@ def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computes (the same identity q_cusum_alarms certifies
     batch-side). Duplicate injection OFF. See streaming/stateful.py
     cusum_sensor_state."""
-    from kafka_streams_pipeline_spark.inventory.streaming_rows import (
-        _replay_readings_stream,
-    )
     from kafka_streams_pipeline_spark.streaming.stateful import (
         cusum_sensor_state,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, cusum_sensor_state, "update", inject_dups=False
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["sensorId"]] = r
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: cusum_sensor_state(_readings_ts(s)),
+            lambda df, _e: final.update(
+                (r["sensorId"], r) for r in df.collect()
+            ),
+            "update",
+        )
     rows = [
         (
             r["sensorId"],
@@ -533,8 +540,6 @@ def q_store_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified, not asserted. Incremental build asserted. See
     sources/text_index.py build_positional_index/search_phrase."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -558,9 +563,8 @@ def q_store_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lower(F.col("text")))
         .alias("text"),
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-phraseidx-")
-    store = os.path.join(base, "corpus")
-    try:
+    with _scratch("phraseidx") as base:
+        store = os.path.join(base, "corpus")
         for i in range(8):
             commit_corpus(
                 docs.where(F.col("doc_id") % 8 == i), store, f"residue {i}"
@@ -581,8 +585,6 @@ def q_store_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             ("verify", stats["candidate_docs"], stats["matched_docs"])
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "phase string, a long, b long")
 
 
@@ -662,20 +664,20 @@ def q_streaming_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (OHLC lattice fold, TWA and counter sequential folds, CUSUM
     recurrence). Duplicate injection OFF. See streaming/stateful.py
     counter_sensor_state."""
-    from kafka_streams_pipeline_spark.inventory.streaming_rows import (
-        _replay_readings_stream,
-    )
     from kafka_streams_pipeline_spark.streaming.stateful import (
         counter_sensor_state,
     )
 
-    batches = _replay_readings_stream(
-        spark, sf_dir, counter_sensor_state, "update", inject_dups=False
-    )
     final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["sensorId"]] = r
+    with _scratch("replay") as base:
+        _replay(
+            spark, base, _readings_chunks(spark, sf_dir), READING_SCHEMA,
+            lambda s: counter_sensor_state(_readings_ts(s)),
+            lambda df, _e: final.update(
+                (r["sensorId"], r) for r in df.collect()
+            ),
+            "update",
+        )
     rows = [
         (r["sensorId"], r["n_samples"], r["n_resets"], r["increase_fp"])
         for r in final.values()
@@ -770,8 +772,6 @@ def q_store_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/versioned.py commit_corpus_partitioned /
     read_corpus_pruned."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -783,9 +783,8 @@ def q_store_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-partevo-")
-    store = os.path.join(base, "corpus")
-    try:
+    with _scratch("partevo") as base:
+        store = os.path.join(base, "corpus")
         for i in range(8):
             spec = ["source"] if i < 4 else ["source", "lang"]
             commit_corpus_partitioned(
@@ -803,8 +802,6 @@ def q_store_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         rows.append(("prune", stats["dirs_scanned"], stats["dirs_total"]))
         rows.append(("spec", 4, 8))
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "phase string, a long, b long")
 
 
@@ -872,8 +869,6 @@ def q_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuum). See sources/versioned.py retention_rollup /
     vacuum_corpus / tag_corpus."""
     import os
-    import shutil
-    import tempfile
 
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
@@ -903,9 +898,8 @@ def q_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cents").alias("min_cents"),
         F.col("cents").alias("max_cents"),
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-retention-")
-    store = os.path.join(base, "sensor")
-    try:
+    with _scratch("retention") as base:
+        store = os.path.join(base, "sensor")
         commit_corpus(
             raw.where(F.col("bucket_us") < day_cut), store, "oldest third"
         )
@@ -960,25 +954,14 @@ def q_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 
 
-def _replay_events_stream(
-    spark: SparkSession, sf_dir: str, op, n_chunks: int = 5
-) -> dict:
-    """Run ``op`` over an availableNow file stream of the events
-    table in (us, event_id) order (one file per micro-batch so state
-    genuinely crosses batch boundaries; ascending mtimes — the file
-    source replays in MODIFICATION-TIME order) and return the LAST
-    update-mode emission per user_id."""
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-    import time as _time
+_USER_EVENT_SCHEMA = "user_id long, event_id long, us long, event_type string"
 
+
+def _user_event_chunks(spark: SparkSession, sf_dir: str) -> list:
+    """The events table in (us, event_id) order as 5 replay chunks."""
     rows = sorted(
         _t(spark, sf_dir, "events")
         .select(
@@ -990,50 +973,8 @@ def _replay_events_stream(
         .collect(),
         key=lambda r: (r["us"], r["event_id"]),
     )
-    base = tempfile.mkdtemp(prefix="kspipeline-evreplay-")
-    src = os.path.join(base, "src")
-    os.makedirs(src, exist_ok=True)
-    per = (len(rows) + n_chunks - 1) // n_chunks
-    mtime0 = _time.time() - 86_400
-    for c in range(n_chunks):
-        path = os.path.join(src, f"chunk{c}.json")
-        with open(path, "w") as f:
-            for r in rows[c * per : (c + 1) * per]:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        os.utime(path, (mtime0 + c, mtime0 + c))
-    batches: list = []
-
-    def sink(batch_df: DataFrame, _epoch_id: int) -> None:
-        batches.append(batch_df.collect())
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, us long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    q = (
-        op(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "availableNow events replay timed out after 300 s"
-            )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    final: dict = {}
-    for b in batches:
-        for r in b:
-            final[r["user_id"]] = r
-    return final
+    per = (len(rows) + 4) // 5
+    return [rows[c * per : (c + 1) * per] for c in range(5)]
 
 
 @register(
@@ -1058,7 +999,17 @@ def q_streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
         funnel_user_state,
     )
 
-    final = _replay_events_stream(spark, sf_dir, funnel_user_state)
+    final: dict = {}
+    with _scratch("evreplay") as base:
+        _replay(
+            spark, base, _user_event_chunks(spark, sf_dir),
+            _USER_EVENT_SCHEMA, funnel_user_state,
+            # the LAST update-mode emission per user is its final state
+            lambda df, _e: final.update(
+                (r["user_id"], r) for r in df.collect()
+            ),
+            "update",
+        )
     out = [
         (r["user_id"], r["n_matches"], r["first_match_event_id"])
         for r in final.values()
@@ -1084,7 +1035,17 @@ def q_streaming_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         gap_user_state,
     )
 
-    final = _replay_events_stream(spark, sf_dir, gap_user_state)
+    final: dict = {}
+    with _scratch("evreplay") as base:
+        _replay(
+            spark, base, _user_event_chunks(spark, sf_dir),
+            _USER_EVENT_SCHEMA, gap_user_state,
+            # the LAST update-mode emission per user is its final state
+            lambda df, _e: final.update(
+                (r["user_id"], r) for r in df.collect()
+            ),
+            "update",
+        )
     out = [
         (
             r["user_id"],

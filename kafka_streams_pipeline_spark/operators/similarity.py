@@ -655,7 +655,10 @@ def ivf_train(df: DataFrame, iters: int = 2) -> DataFrame:
 
 
 def ivf_train_oracle(iters: int = 2, dim: int = 64) -> str:
-    assert iters == 2, "oracle unrolls exactly 2 Lloyd iterations"
+    if iters != 2:
+        raise ValueError(
+            f"oracle unrolls exactly 2 Lloyd iterations, got iters={iters}"
+        )
     return f"""
         WITH xf AS (
             SELECT vec_id, d,

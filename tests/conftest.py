@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import pytest
 from pyspark.sql.readwriter import DataFrameReader
@@ -27,7 +28,9 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
-def declared_builds(spark, sf_dir) -> dict[str, tuple[str, int]]:
+def declared_builds(
+    spark, sf_dir, tmp_path_factory
+) -> dict[str, tuple[str, int]]:
     """Every registered query built once per session (building all of
     them takes minutes), as name -> (formatted physical plan, Spark
     jobs its builder launched). Jobs are counted on the scheduler's
@@ -36,7 +39,9 @@ def declared_builds(spark, sf_dir) -> dict[str, tuple[str, int]]:
     left out. Each builder starts with an empty shared view store, so
     a builder that reuses a store written by an earlier one is still
     measured cold. No stream may be running, or its jobs would be
-    counted."""
+    counted. Temp directories made during the pass (those fresh view
+    stores included) go under a pytest-managed directory, not the
+    system temp dir."""
     assert not spark.streams.active, "a stream from another test is running"
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     schema_jobs = 0
@@ -56,6 +61,7 @@ def declared_builds(spark, sf_dir) -> dict[str, tuple[str, int]]:
     builds = {}
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(DataFrameReader, "parquet", counted_parquet)
+        mp.setattr(tempfile, "tempdir", str(tmp_path_factory.mktemp("builds")))
         for name, fn in QUERIES.items():
             mp.setattr(_shared, "_VIEW_STORE", {})
             start, schema_start = scheduler.nextJobId(), schema_jobs

@@ -3522,6 +3522,20 @@ def test_kll_census_rejects_bad_percentiles():
             kll_quantile_census(None, None, None, {}, qs=qs)
 
 
+def test_ivf_train_oracle_rejects_other_iteration_counts():
+    """The oracle unrolls exactly 2 Lloyd iterations; any other count
+    raises ValueError (never a bare assert that ``python -O`` strips
+    into a silently 2-iteration oracle)."""
+    from kafka_streams_pipeline_spark.operators.similarity import (
+        ivf_train_oracle,
+    )
+
+    assert "WITH xf AS" in ivf_train_oracle(2)
+    for iters in (1, 3):
+        with pytest.raises(ValueError, match="2 Lloyd iterations"):
+            ivf_train_oracle(iters)
+
+
 def test_leakage_safe_split_clique_cohesion(spark):
     """A constructed near-dup clique must land ENTIRELY in one split
     (leakage_free TRUE), and naive_leaky_components must equal the

@@ -494,8 +494,11 @@ def test_streaming_join_crosses_batches(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
+    from kafka_streams_pipeline_spark.inventory._shared import (
+        _write_chunks as write_chunks,
+    )
     from kafka_streams_pipeline_spark.inventory.streaming_rows import (
-        _write_event_chunks,
+        _cut_chunks,
     )
     from tests.conftest import ORACLE_SF_DIR
     from kafka_streams_pipeline_spark.sources.tables import load_table
@@ -541,7 +544,7 @@ def test_streaming_join_crosses_batches(spark, tmp_path):
     idx = {r["event_id"]: i for i, r in enumerate(rows)}
     cuts = [idx[r["p_id"]] for r in {m["p_id"]: m for m in matches}.values()]
     src = str(tmp_path / "src")
-    _write_event_chunks(rows, src, cuts)
+    write_chunks(src, _cut_chunks(rows, cuts))
 
     # layout property: every match's click chunk < purchase chunk
     bounds = []
@@ -964,8 +967,8 @@ def test_streaming_semi_join_emits_once_from_state(spark, tmp_path):
     """Left-semi stream-stream join: a purchase matched by TWO
     in-window clicks (both buffered in an earlier micro-batch) emits
     exactly ONCE; an unmatched purchase never emits."""
-    from kafka_streams_pipeline_spark.inventory.streaming_rows import (
-        _write_event_chunks,
+    from kafka_streams_pipeline_spark.inventory._shared import (
+        _write_chunks as write_chunks,
     )
     from kafka_streams_pipeline_spark.streaming.pipeline import await_replay
 
@@ -981,7 +984,7 @@ def test_streaming_semi_join_emits_once_from_state(spark, tmp_path):
          "event_type": "purchase"},
     ]
     src = str(tmp_path / "src")
-    _write_event_chunks(rows, src, cuts=[2])  # clicks | purchases
+    write_chunks(src, [rows[:2], rows[2:]])  # clicks | purchases
 
     schema = "event_id long, ts_ms long, user_id long, event_type string"
     stream = (
@@ -1102,3 +1105,86 @@ def test_resolve_state_partitions_hint(tmp_path):
     assert _resolve_state_partitions(None, None, ckpt) == (
         default_state_partitions()
     )
+
+
+def _kspipeline_dirs() -> set:
+    import tempfile
+
+    root = tempfile.gettempdir()
+    return {d for d in os.listdir(root) if d.startswith("kspipeline-")}
+
+
+def test_replay_runs_same_second_chunks_in_list_order(spark):
+    """Three chunks written back to back (well inside one second)
+    replay in list order, one micro-batch each: the harness gives each
+    file its own ascending mtime, so the file source cannot tie-break
+    them into another order."""
+    from kafka_streams_pipeline_spark.inventory._shared import (
+        _replay,
+        _scratch,
+    )
+
+    seen: list = []
+    with _scratch("test-order") as base:
+        _replay(
+            spark, base, [[{"k": 3}], [{"k": 1}, {"k": 4}], [{"k": 2}]],
+            "k long", lambda s: s,
+            lambda df, epoch: seen.append(
+                (epoch, sorted(r["k"] for r in df.collect()))
+            ),
+        )
+        mtimes = [
+            os.path.getmtime(os.path.join(base, "src", f))
+            for f in sorted(os.listdir(os.path.join(base, "src")))
+        ]
+    assert mtimes == sorted(set(mtimes)) and len(mtimes) == 3
+    assert seen == [(0, [3]), (1, [1, 4]), (2, [2])]
+
+
+def test_replay_reraises_sink_error_and_cleans_up(spark):
+    """A sink that fails on the second micro-batch fails the replay
+    with the sink's own error; no query is left running and the
+    scratch directory is gone."""
+    from pyspark.errors import StreamingQueryException
+
+    from kafka_streams_pipeline_spark.inventory._shared import (
+        _replay,
+        _scratch,
+    )
+
+    before = _kspipeline_dirs()
+
+    def sink(df, epoch):
+        if epoch == 1:
+            raise ValueError("sink refused batch 2")
+
+    with pytest.raises(StreamingQueryException, match="sink refused batch 2"):
+        with _scratch("test-fail") as base:
+            _replay(
+                spark, base, [[{"k": 1}], [{"k": 2}], [{"k": 3}]],
+                "k long", lambda s: s, sink,
+            )
+    assert not spark.streams.active
+    assert not os.path.exists(base)
+    assert _kspipeline_dirs() <= before
+
+
+def test_replay_rejects_batch_count_mismatch(spark):
+    """A file the run did not write (here: one left in the source by
+    an earlier write) becomes an extra micro-batch, so the run's batch
+    count no longer matches its file count and the replay raises."""
+    from kafka_streams_pipeline_spark.inventory._shared import (
+        _replay,
+        _scratch,
+        _write_chunks as write_chunks,
+    )
+
+    seen: list = []
+    with _scratch("test-count") as base:
+        write_chunks(os.path.join(base, "src"), [[{"k": 1}]])
+        with pytest.raises(RuntimeError, match="2 data micro-batches for 1"):
+            _replay(
+                spark, base, [[{"k": 2}]], "k long", lambda s: s,
+                lambda df, epoch: seen.append(epoch),
+            )
+    assert seen == [0, 1]

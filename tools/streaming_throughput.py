@@ -25,9 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -71,34 +69,34 @@ def _progress_breakdown(q) -> dict:
 
 
 def run_mode(spark, rows: list, n_chunks: int, label: str, **knobs) -> dict:
-    from kafka_streams_pipeline_spark.inventory.streaming_rows import (
-        _write_replay_chunks,
+    from kafka_streams_pipeline_spark.inventory._shared import (
+        _scratch,
+        _write_chunks,
     )
     from kafka_streams_pipeline_spark.streaming.pipeline import (
+        await_replay,
         read_view,
         start_file_stream_pipeline,
     )
 
-    base = tempfile.mkdtemp(prefix=f"kspipeline-tput-{label}-")
-    src = os.path.join(base, "src")
-    view_dir = os.path.join(base, "view")
-    ckpt = os.path.join(base, "ckpt")
-    _write_replay_chunks(rows, src, n_chunks=n_chunks, inject_dups=False)
-    t0 = time.time()
-    q = start_file_stream_pipeline(
-        spark, src, view_dir, ckpt,
-        available_now=True,
-        max_files_per_trigger=1 if n_chunks > 1 else None,
-        **knobs,
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise RuntimeError(f"{label} replay timed out")
-    sec = time.time() - t0
-    breakdown = _progress_breakdown(q)
-    n_view = read_view(spark, view_dir).count()
-    shutil.rmtree(base, ignore_errors=True)
+    per = -(-len(rows) // n_chunks)
+    with _scratch(f"tput-{label}") as base:
+        src = os.path.join(base, "src")
+        view_dir = os.path.join(base, "view")
+        _write_chunks(
+            src, [rows[c * per : (c + 1) * per] for c in range(n_chunks)]
+        )
+        t0 = time.time()
+        q = start_file_stream_pipeline(
+            spark, src, view_dir, os.path.join(base, "ckpt"),
+            available_now=True,
+            max_files_per_trigger=1 if n_chunks > 1 else None,
+            **knobs,
+        )
+        await_replay(q, 600)
+        sec = time.time() - t0
+        breakdown = _progress_breakdown(q)
+        n_view = read_view(spark, view_dir).count()
     out = {
         "events": len(rows),
         "chunks": n_chunks,
@@ -122,7 +120,7 @@ def main() -> None:
 
     spark = get_spark(app_name="kspipeline-stream-tput")
     spark.sparkContext.setLogLevel("ERROR")
-    from kafka_streams_pipeline_spark.inventory.streaming_rows import (
+    from kafka_streams_pipeline_spark.inventory._shared import (
         _sorted_replay_rows,
     )
 
