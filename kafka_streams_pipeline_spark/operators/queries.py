@@ -20,14 +20,23 @@ never average the averages (Aggregator.java:20).
 Scale posture: every query filters the view on (gh, window_start)
 BEFORE aggregating, so with the view written partitioned by
 window_start date (see streaming/pipeline.py) the scan partition-
-prunes on time and min/max-skips on gh; the groupBy shuffles only the
-filtered slice, whose size is bounded by cells × windows.
+prunes on time and min/max-skips on gh. The scan and the partial
+aggregation run at full parallelism; the one exchange per query is
+the shuffle into the final aggregate. The merged result is ordered on
+one partition instead of by a global sort (which would add a
+range-partition sampling job and a second exchange). That is bounded
+by construction: a history result holds at most one row per window in
+the requested range, a snapshot result at most one row per stored
+cell under a cover of ≤64 prefixes (geo.cover_bbox_adaptive), and the
+serving layer collects the result to the driver anyway.
 """
 
 from __future__ import annotations
 
 import calendar
 import datetime as dt
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +46,7 @@ from kafka_streams_pipeline_spark.plans.validation import (
     validate_aggregate_op,
     validate_geohashes,
     validate_interval,
+    validate_precision,
     validate_time_range,
 )
 
@@ -69,45 +79,79 @@ def _utc_lit(t: dt.datetime) -> Column:
     return F.timestamp_millis(F.lit(ms))
 
 
-def _with_partition_bounds(
+def _partition_bounds(
     view: DataFrame,
     from_ts: dt.datetime | None,
     to_ts: dt.datetime | None,
-) -> DataFrame:
+) -> list[Column]:
     """Materialized views carry a ws_date partition column
     (sources/sinks.write_view). Spark cannot infer ws_date bounds from
     window_start predicates, so derive them here — this is what turns
-    a time-range query into a partition-pruned scan. No-op for
+    a time-range query into a partition-pruned scan. Empty for
     in-memory views."""
     if "ws_date" not in view.columns:
-        return view
+        return []
+    conds = []
     if from_ts is not None:
-        view = view.where(F.col("ws_date") >= F.lit(from_ts.date().isoformat()))
+        conds.append(F.col("ws_date") >= F.lit(from_ts.date().isoformat()))
     if to_ts is not None:
-        view = view.where(F.col("ws_date") <= F.lit(to_ts.date().isoformat()))
-    return view
+        conds.append(F.col("ws_date") <= F.lit(to_ts.date().isoformat()))
+    return conds
 
 
-def _merged_aggs() -> list[Column]:
+def _cell_predicate(cells: list[str], precision: int) -> Column:
+    """Cell predicate: cells at least ``precision`` long are truncated
+    to it and matched exactly (one ``isin``, like the store-key lookups
+    at querying/QueryingController.java:48-50); shorter ones are
+    prefixes matching all their stored completions via ``startswith``
+    (the documented generalization of SURVEY.md §2.2 P4). Both push
+    down to the parquet scan."""
+    gh = F.col("gh")
+    exact = sorted({c[:precision] for c in cells if len(c) >= precision})
+    cond = gh.isin(exact) if exact else F.lit(False)
+    for p in sorted({c for c in cells if len(c) < precision}):
+        cond = cond | gh.startswith(p)
+    return cond
+
+
+def _merged(op: str) -> Column:
     """Algebraic merge of partial aggregates (Aggregator.java:17-30).
 
     View sums are exact micros multiples (operators/view.build_view),
     so the merge recovers each group's micros-integer and re-sums as
     exact longs — order-independent like the view build itself; the
     divide back to double happens once, after the merge."""
-    su = F.sum(F.round(F.col("sum") * 1000000).cast("long"))
-    return [
-        F.sum("count").alias("count"),
-        (su / F.lit(1000000.0)).alias("sum"),
-        (su / F.lit(1000000.0) / F.sum("count")).alias("avg"),
-    ]
+    if op == "count":
+        return F.sum("count")
+    su = F.sum(F.round(F.col("sum") * 1000000).cast("long")) / F.lit(1000000.0)
+    return su if op == "sum" else su / F.sum("count")
 
 
-def _project_op(df: DataFrame, key: str, op: str) -> DataFrame:
-    """Response projection: (key, <op>) — QueryingService.java:205-229
-    picks one field of the aggregate triple (by reflection there; a
-    first-class column reference here, §2.7 F9)."""
-    return df.select(F.col(key), F.col(op))
+def _merged_aggs() -> list[Column]:
+    """All three merged aggregates, for re-keyed views."""
+    return [_merged(op).alias(op) for op in AGGREGATE_OPS]
+
+
+def _rollup(
+    view: DataFrame, conds: list[Column], by: str, key: Column, name: str, op: str
+) -> DataFrame:
+    """Shared tail of the query family: one filter, the merge of the
+    requested aggregate per ``by`` group, and the response projection
+    (name, <op>) — QueryingService.java:205-229 picks one field of the
+    aggregate triple (by reflection there; a first-class column
+    reference here, §2.7 F9) — ascending by ``name`` (O1/O2).
+
+    The merged result is small (see "Scale posture"), so it is ordered
+    on one partition: no range-partition sampling job, no second
+    exchange, and ``limit(n)`` still takes the first n keys."""
+    return (
+        view.where(functools.reduce(operator.and_, conds))
+        .groupBy(by)
+        .agg(_merged(op).alias(op))
+        .select(key.alias(name), op)
+        .coalesce(1)
+        .sortWithinPartitions(name)
+    )
 
 
 def history(
@@ -121,31 +165,25 @@ def history(
     """History roll-up (A4): per window_start, merge the aggregates of
     all requested cells; ascending time order (O1).
 
-    Cells are truncated to the view precision and matched exactly,
-    like the store-key lookups at querying/QueryingController.java:48-50
-    (prefixes shorter than the precision match via startswith — the
-    documented generalization of SURVEY.md §2.2 P4).
+    Cells are truncated to the view precision and matched exactly;
+    shorter ones match as prefixes (``_cell_predicate``).
 
     Columns: (timestamp BIGINT epoch-millis, <op>) — the envelope
     shape of QueryingService.java:118-121.
     """
     validate_aggregate_op(op)
+    validate_precision(precision)
     cells = validate_geohashes(geohashes)
     validate_time_range(from_ts, to_ts)
-    exact = [c[:precision] for c in cells if len(c) >= precision]
-    prefixes = [c for c in cells if len(c) < precision]
-    cond = F.col("gh").isin(exact) if exact else F.lit(False)
-    for p in prefixes:
-        cond = cond | F.col("gh").startswith(p)
-    filtered = _with_partition_bounds(view, from_ts, to_ts).where(cond)
+    conds = _partition_bounds(view, from_ts, to_ts)
+    conds.append(_cell_predicate(cells, precision))
     if from_ts is not None:
-        filtered = filtered.where(F.col("window_start") >= _utc_lit(from_ts))
+        conds.append(F.col("window_start") >= _utc_lit(from_ts))
     if to_ts is not None:
-        filtered = filtered.where(F.col("window_start") <= _utc_lit(to_ts))
-    merged = filtered.groupBy("window_start").agg(*_merged_aggs())
-    return _project_op(
-        merged.withColumn("timestamp", F.unix_millis("window_start")), "timestamp", op
-    ).orderBy("timestamp")
+        conds.append(F.col("window_start") <= _utc_lit(to_ts))
+    return _rollup(
+        view, conds, "window_start", F.unix_millis("window_start"), "timestamp", op
+    )
 
 
 def history_interval(
@@ -165,6 +203,8 @@ def history_interval(
     """
     validate_aggregate_op(op)
     validate_interval(interval)
+    validate_precision(precision)
+    cells = validate_geohashes(geohashes)
     if to_ts is None:
         # derive "now" as tz-free epoch millis (collecting a
         # timestamp would round-trip through the OS timezone)
@@ -183,19 +223,14 @@ def history_interval(
         lower_ts = to_ts - _lower
     except OverflowError:  # "all" near the epoch — clamp, don't crash
         lower_ts = dt.datetime(1, 1, 1)
-    filtered = _with_partition_bounds(view, lower_ts, to_ts).where(
-        (F.col("window_start") >= from_col) & (F.col("window_start") <= to_col)
+    conds = _partition_bounds(view, lower_ts, to_ts) + [
+        F.col("window_start") >= from_col,
+        F.col("window_start") <= to_col,
+        _cell_predicate(cells, precision),
+    ]
+    return _rollup(
+        view, conds, "window_start", F.unix_millis("window_start"), "timestamp", op
     )
-    cells = validate_geohashes(geohashes)
-    exact = [c[:precision] for c in cells if len(c) >= precision]
-    prefixes = [c for c in cells if len(c) < precision]
-    cond = F.col("gh").isin(exact) if exact else F.lit(False)
-    for p in prefixes:
-        cond = cond | F.col("gh").startswith(p)
-    merged = filtered.where(cond).groupBy("window_start").agg(*_merged_aggs())
-    return _project_op(
-        merged.withColumn("timestamp", F.unix_millis("window_start")), "timestamp", op
-    ).orderBy("timestamp")
 
 
 def snapshot(
@@ -221,23 +256,15 @@ def snapshot(
     Columns: (geohash, <op>), ascending by geohash (O2).
     """
     validate_aggregate_op(op)
+    validate_precision(precision)
     north, west, south, east = bbox
     hour = ts.replace(minute=0, second=0, microsecond=0)
-    prefixes = geo.cover_bbox_adaptive(north, west, south, east, max_precision=precision)
-    prefixes = sorted({p[:precision] for p in prefixes})
-    exact = [p for p in prefixes if len(p) >= precision]
-    cond = F.col("gh").isin(exact) if exact else F.lit(False)
-    for p in (p for p in prefixes if len(p) < precision):
-        cond = cond | F.col("gh").startswith(p)
-    merged = (
-        _with_partition_bounds(view, hour, hour)
-        .where((F.col("window_start") == _utc_lit(hour)) & cond)
-        .groupBy("gh")
-        .agg(*_merged_aggs())
-    )
-    return _project_op(merged.withColumnRenamed("gh", "geohash"), "geohash", op).orderBy(
-        "geohash"
-    )
+    cover = geo.cover_bbox_adaptive(north, west, south, east, max_precision=precision)
+    conds = _partition_bounds(view, hour, hour) + [
+        F.col("window_start") == _utc_lit(hour),
+        _cell_predicate(cover, precision),
+    ]
+    return _rollup(view, conds, "gh", F.col("gh"), "geohash", op)
 
 
 def reaggregate_precision(view: DataFrame, precision: int) -> DataFrame:
@@ -255,8 +282,7 @@ def reaggregate_precision(view: DataFrame, precision: int) -> DataFrame:
     view (already ~10^6× smaller than raw), and the shuffle is keyed
     by the coarser (gh, window) with map-side partial merge.
     """
-    if not 1 <= precision <= 12:
-        raise ValueError(f"precision must be in [1, 12], got {precision}")
+    validate_precision(precision)
     return (
         view.withColumn("gh", F.substring(F.col("gh"), 1, precision))
         .groupBy("gh", "window_start")

@@ -4,6 +4,7 @@ from kafka_streams_pipeline_spark.plans.validation import (  # noqa: F401
     validate_bbox,
     validate_geohashes,
     validate_interval,
+    validate_precision,
     validate_time_range,
 )
 from kafka_streams_pipeline_spark.plans.envelope import to_message  # noqa: F401

@@ -3,8 +3,9 @@
 Mirrors the rejection rules of querying/QueryingService.java:46-101,
 111-117,131-196: empty geohash list, unsupported aggregate op, bad
 numbers, future `from`, from ≥ to, missing/invalid ts, missing bbox,
-invalid interval. Raised BEFORE any plan is built, like the
-reference's HTTP-400 paths (model/ErrorMessage.java:3-14).
+invalid interval, gh_precision outside [1, 12]. Raised BEFORE any
+plan is built, like the reference's HTTP-400 paths
+(model/ErrorMessage.java:3-14).
 """
 
 from __future__ import annotations
@@ -67,6 +68,18 @@ def validate_interval(interval: str) -> str:
             f"invalid interval {interval!r}; expected one of {INTERVALS}"
         )
     return interval
+
+
+def validate_precision(precision: int) -> int:
+    """gh_precision must be an integer geohash length in [1, 12]
+    (QueryingService.java:58-60 takes it as an int store selector)."""
+    if isinstance(precision, bool) or not isinstance(precision, int):
+        raise QueryValidationError(
+            f"gh_precision must be an integer, got {precision!r}"
+        )
+    if not 1 <= precision <= 12:
+        raise QueryValidationError(f"gh_precision must be in [1, 12], got {precision}")
+    return precision
 
 
 def validate_bbox(bbox: tuple[float, float, float, float] | str) -> tuple[float, float, float, float]:

@@ -100,6 +100,12 @@ def test_snapshot_local_param_still_truncates(api):
         "/api/temperature/aggregate/avg/snapshot?bbox=1,2,3,4",  # missing ts
         "/api/temperature/aggregate/avg/snapshot?ts=1704622200000",  # missing bbox
         "/api/temperature/aggregate/avg/snapshot?ts=1704622200000&bbox=91,0,92,1",
+        # gh_precision outside [1, 12]
+        "/api/temperature/aggregate/avg/history?geohashes=u155&gh_precision=0",
+        "/api/temperature/aggregate/avg/history?geohashes=u155&gh_precision=-2",
+        "/api/temperature/aggregate/avg/history?geohashes=u155&gh_precision=13",
+        "/api/temperature/aggregate/avg/snapshot?ts=1704622200000"
+        "&bbox=51.328125,4.21875,51.15234375,4.5703125&gh_precision=0",
     ],
 )
 def test_validation_400s(api, path):

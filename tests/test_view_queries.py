@@ -166,10 +166,46 @@ def test_snapshot_bbox(view, duck):
 
 
 def test_envelope_shape(view):
+    full = history(view, "count", ["u155"], None, None).collect()
     msg = to_message(history(view, "count", ["u155"], None, None).limit(3))
     assert msg["columns"] == ["timestamp", "count"]
     assert all(len(row) == 2 for row in msg["data"])
     assert msg["metadata"] == {"metric": "temperature"}
+    # limit over the one-partition sort keeps the smallest keys
+    assert len(full) > 3
+    assert msg["data"] == [list(r) for r in full[:3]]
+
+
+def test_stored_view_queries_run_in_two_jobs(spark, view, tmp_path):
+    """A history/snapshot request over a ws_date store is one shuffle
+    into the final aggregate plus the result stage: the merged result
+    is ordered on one partition, so no range-partition sampling job
+    or second exchange runs."""
+    from kafka_streams_pipeline_spark.sources.sinks import read_view, write_view
+
+    write_view(view, str(tmp_path / "view"))
+    stored = read_view(spark, str(tmp_path / "view"))
+    cells = [EVENT_TYPE_GEOHASH["click"][:6], EVENT_TYPE_GEOHASH["view"][:6]]
+    s, w, n, e = geo.decode_bbox("u155")
+    to_ts = dt.datetime(2024, 1, 10)
+    requests = {
+        "history": history(stored, "avg", cells, dt.datetime(2024, 1, 5), to_ts),
+        "history_interval": history_interval(
+            stored, "sum", ["u155"], "1week", to_ts=to_ts
+        ),
+        "snapshot": snapshot(
+            stored, "count", dt.datetime(2024, 1, 7, 10, 30), (n, w, s, e)
+        ),
+    }
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    for kind, df in requests.items():
+        start = scheduler.nextJobId()
+        msg = to_message(df)
+        jobs = scheduler.nextJobId() - start
+        assert jobs <= 2, (kind, jobs)
+        keys = [row[0] for row in msg["data"]]  # timestamp or geohash
+        assert keys, kind
+        assert keys == sorted(keys), kind
 
 
 def test_validation_errors(view):
@@ -186,3 +222,10 @@ def test_validation_errors(view):
         )
     with pytest.raises(QueryValidationError):
         history_interval(view, "avg", ["u155"], "2weeks")
+    for p in (0, -2, 13):
+        with pytest.raises(QueryValidationError):
+            history(view, "avg", ["u155"], None, None, precision=p)
+        with pytest.raises(QueryValidationError):
+            history_interval(view, "avg", ["u155"], "1week", precision=p)
+        with pytest.raises(QueryValidationError):
+            snapshot(view, "avg", dt.datetime(2024, 1, 7), (51.3, 4.2, 51.1, 4.5), p)
