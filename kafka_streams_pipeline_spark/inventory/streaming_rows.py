@@ -250,14 +250,11 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch rebuild EXACTLY, not approximately (the pytest twin is
     tests/test_streaming.py::test_stream_matches_batch_view; this row
     makes the driver certify it). Duplicate injection is OFF — the
-    view counts every physical reading. Round 9: the row runs the
-    PRODUCTION micro-batch configuration — state partitions sized to
-    the standing key cardinality (8; every batch commits every state
-    partition, so this is the per-batch fixed-cost lever measured in
-    STREAM_THROUGHPUT_r09) and the RocksDB provider with changelog
-    checkpointing — so the driver oracle certifies the exact
-    deployed path. See streaming/pipeline.py
-    start_file_stream_pipeline."""
+    view counts every physical reading. The row runs the deployed
+    micro-batch configuration — the default state-partition count
+    (one per core) and the RocksDB provider with changelog
+    checkpointing — so the driver oracle certifies that path. See
+    streaming/pipeline.py start_file_stream_pipeline."""
     from kafka_streams_pipeline_spark.streaming.pipeline import (
         await_replay,
         read_view as _stream_read_view,
@@ -271,7 +268,7 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         await_replay(start_file_stream_pipeline(
             spark, src, view_dir, os.path.join(base, "ckpt"),
             available_now=True, max_files_per_trigger=1,
-            state_partitions=8, rocksdb_state=True,
+            rocksdb_state=True,
         ))
         out = _stream_read_view(spark, view_dir).select(
             "gh",

@@ -23,6 +23,19 @@ Design notes (100 TB posture, tested on local[32]):
   the perfbench serve store (4 vCPU, 20 requests per kind, one
   process) the build p50 of history / history_interval / snapshot is
   49 / 60 / 117 ms with it and 31 / 34 / 42 ms without.
+- File listing on the driver
+  (spark.sql.sources.parallelPartitionDiscovery.threshold at its
+  maximum): above the threshold (stock 32 root paths, or 32
+  subdirectories) InMemoryFileIndex lists in a Spark job with one task
+  per path. The master here is local[N], so that job runs the same
+  stat calls in the driver's JVM plus task scheduling. A file-stream
+  micro-batch hands each new file to the index as its own root path,
+  and perfbench ingest_mixed's batches carry 60-130 files. A 100-file
+  availableNow batch (4 vCPU, 5 runs) spent a median 489 ms in
+  getBatch with the listing job and 17 ms without it. The conf must
+  be on the caller's session: the file source lists through it, and
+  the same value set only while the stream starts (its cloned
+  session) left getBatch at 403 ms, listing job included.
 """
 
 from __future__ import annotations
@@ -66,6 +79,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1))
         # driver fixtures use parquet TIMESTAMP(NANOS) (events.ts);
         # Spark 4 rejects it unless read as long (normalized in
         # sources/tables.py back to TimestampType at µs precision,

@@ -31,9 +31,6 @@ is the drop-in upgrade when available.
 
 from __future__ import annotations
 
-import logging
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -115,8 +112,10 @@ def upsert_view_batch(view_dir: str):
         merged = batch_df
         existing_parts = _existing_partition_paths(spark, view_dir, dates)
         if existing_parts:
-            existing = spark.read.option("basePath", view_dir).parquet(
-                *existing_parts
+            existing = (
+                spark.read.schema(batch_df.schema)
+                .option("basePath", view_dir)
+                .parquet(*existing_parts)
             )
             survivors = existing.join(
                 batch_df.select("gh", "window_start"),
@@ -145,77 +144,6 @@ ROCKSDB_PROVIDER = (
     "RocksDBStateStoreProvider"
 )
 
-# Standing state-key cardinality of the view topology: distinct
-# geohash cells × live 1-hour windows inside the 24 h grace at the
-# gate scale factor (~120 cells × 24 windows ≈ 2,880 — measured, and
-# flat across sf0.01/sf0.1 because the cell grid, not the event
-# volume, bounds it). The state-partition default derives from THIS,
-# not from data volume: every micro-batch commits every state
-# partition whether or not a key hashed into it, so partitions ≫
-# standing keys buy nothing and pay a per-batch commit each
-# (STREAM_THROUGHPUT_r13: 3.0k events/s at the session's 200 vs 5.7k
-# at 8 — a 1.9× default-knob waste, VERDICT r13 item 5).
-VIEW_TOPOLOGY_STANDING_KEYS = 2880
-# Target standing keys per state partition. Each partition's
-# per-batch fixed cost (task launch + store open/commit/snapshot) is
-# amortized over its keys; a few hundred keys per partition keeps the
-# fixed cost noise while single partitions stay trivially small
-# (state rows are ~100 B — 400 keys ≈ 40 KB, nowhere near memory
-# pressure even at 1000× the cell grid).
-KEYS_PER_STATE_PARTITION = 400
-
-
-def default_state_partitions(
-    standing_keys: int = VIEW_TOPOLOGY_STANDING_KEYS,
-) -> int:
-    """State/shuffle partition count for a stateful streaming query,
-    derived from its standing key cardinality: one partition per
-    KEYS_PER_STATE_PARTITION keys, floored at 8 (keep a multi-core
-    box busy), capped at 200 (the stock Spark default — beyond it
-    the per-batch commit fan-out is pure overhead for any topology
-    this engine ships)."""
-    return max(8, min(200, -(-standing_keys // KEYS_PER_STATE_PARTITION)))
-
-
-def _resolve_state_partitions(
-    state_partitions: int | None,
-    standing_keys_hint: int | None,
-    checkpoint_dir: str,
-) -> int:
-    """Explicit count wins; otherwise derive from the caller's
-    standing-key hint, falling back to the view topology's ~2,880
-    only when no hint is given (ADVICE r14: the bare default
-    silently pinned 8 partitions into EVERY caller's checkpoint
-    forever — Spark refuses to change the count on restart — even
-    for topologies with far more standing keys). The derived value
-    is logged at what is likely the FIRST start (no checkpoint dir
-    yet) so the pinned knob is visible in the record."""
-    if state_partitions is not None:
-        return state_partitions
-    keys = (
-        standing_keys_hint
-        if standing_keys_hint is not None
-        else VIEW_TOPOLOGY_STANDING_KEYS
-    )
-    derived = default_state_partitions(keys)
-    try:
-        first_start = not os.path.isdir(checkpoint_dir)
-    except OSError:
-        first_start = False
-    if first_start:
-        logging.getLogger(__name__).info(
-            "state partitions derived: %d (from %s standing keys%s) "
-            "— pinned into checkpoint %s at first start",
-            derived,
-            keys,
-            "" if standing_keys_hint is not None
-            else " — VIEW TOPOLOGY DEFAULT; pass standing_keys_hint "
-                 "for other topologies",
-            checkpoint_dir,
-        )
-    return derived
-
-
 def start_file_stream_pipeline(
     spark: SparkSession,
     source_dir: str,
@@ -227,7 +155,6 @@ def start_file_stream_pipeline(
     max_files_per_trigger: int | None = None,
     processing_time: str = "10 seconds",
     state_partitions: int | None = None,
-    standing_keys_hint: int | None = None,
     rocksdb_state: bool = False,
 ) -> StreamingQuery:
     """File-source replay of the ingest topology (json files of
@@ -236,24 +163,11 @@ def start_file_stream_pipeline(
     identical.
 
     ``state_partitions``: number of shuffle/state-store partitions
-    for the stateful aggregate. Every micro-batch commits EVERY
-    state partition (a task + a store commit each, even for
-    partitions no batch key hashes into), so at a 10 s cadence this
-    is the per-batch fixed cost lever: size it to the standing KEY
-    cardinality (cells × live windows), not to the bulk-replay data
-    volume — the two differ by orders of magnitude. Fixed at the
-    stream's FIRST start and pinned by the checkpoint thereafter
-    (Spark refuses to restart with a different value). Default None
-    derives it from ``standing_keys_hint`` when given, else from the
-    view topology's standing key cardinality via
-    ``default_state_partitions`` (VERDICT r13 item 5: the session's
-    200 wasted a measured 1.9× of micro-batch throughput against
-    ~2,880 standing keys; ADVICE r14: a caller replaying a topology
-    with far more standing keys should pass the hint, because the
-    derived count is pinned into the checkpoint forever). The
-    derived value is logged at first start so the pinned knob is
-    visible. Results are partition-count-independent, only the
-    per-batch fixed cost moves.
+    for the stateful aggregate; default one per core
+    (``defaultParallelism``). Every micro-batch commits every state
+    partition, data or not, so this count is the per-batch commit
+    cost. Pinned by the checkpoint at the stream's first start;
+    results do not depend on it.
 
     ``rocksdb_state``: use the RocksDB state-store provider with
     changelog checkpointing (per-batch delta uploads instead of full
@@ -285,11 +199,11 @@ def start_file_stream_pipeline(
     # StreamExecution clones the session at start(), freezing the
     # confs below into the query; restoring afterwards keeps the
     # caller's session untouched.
-    overrides: dict[str, str | None] = {}
-    state_partitions = _resolve_state_partitions(
-        state_partitions, standing_keys_hint, checkpoint_dir
-    )
-    overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
+    overrides: dict[str, str | None] = {
+        "spark.sql.shuffle.partitions": str(
+            state_partitions or spark.sparkContext.defaultParallelism
+        )
+    }
     if rocksdb_state:
         overrides["spark.sql.streaming.stateStore.providerClass"] = (
             ROCKSDB_PROVIDER

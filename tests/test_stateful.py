@@ -683,7 +683,7 @@ def test_funnel_state_matches_batch_across_boundaries(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120)
+    await_replay(q, 120)
     final = {}
     for b in batches:
         for r in b:
@@ -753,7 +753,7 @@ def test_gap_state_tiebreak_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120)
+    await_replay(q, 120)
     final = {r["user_id"]: r for b in batches for r in b}
     r = final[1]
     assert r["n_gaps"] == 2
@@ -817,7 +817,7 @@ def test_funnel_state_four_step_pattern(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120)
+    await_replay(q, 120)
     final = {r["user_id"]: (r["n_matches"], r["first_match_event_id"])
              for b in batches for r in b}
     streaming = {u: v for u, v in final.items() if v[0] > 0}

@@ -1023,20 +1023,58 @@ def test_streaming_semi_join_emits_once_from_state(spark, tmp_path):
     assert [(r["p_id"], r["user_id"]) for r in emitted] == [(3, 1)]
 
 
-def test_default_state_partitions_derivation():
-    """State-partition default derives from standing key cardinality
-    (VERDICT r13 item 5): one partition per ~400 keys, floor 8,
-    cap 200 — and the view topology's ~2,880 standing keys land on
-    8, the measured 1.9x-throughput knob."""
-    from kafka_streams_pipeline_spark.streaming.pipeline import (
-        VIEW_TOPOLOGY_STANDING_KEYS,
-        default_state_partitions,
-    )
+def _job_descriptions(spark, first_job: int) -> list[str]:
+    """Descriptions of the Spark jobs launched since job id
+    ``first_job`` (stream threads included), read from the status
+    store once the listener bus has delivered their events."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    out = []
+    for job_id in range(first_job, sc.dagScheduler().nextJobId()):
+        desc = store.job(job_id).description()
+        out.append(desc.get() if desc.isDefined() else "")
+    return out
 
-    assert default_state_partitions(VIEW_TOPOLOGY_STANDING_KEYS) == 8
-    assert default_state_partitions(1) == 8          # floor
-    assert default_state_partitions(400 * 50) == 50  # linear middle
-    assert default_state_partitions(10**9) == 200    # cap
+
+def test_many_file_batch_lists_on_the_driver(spark, readings_rows, tmp_path):
+    """A file-stream micro-batch passes each new file to the file index
+    as its own root path; above Spark's parallel-discovery threshold
+    (stock 32) the index re-lists them in a Spark job with one task per
+    file. The session keeps listing on the driver, so a 40-file batch
+    launches no such job."""
+    src, view, ckpt = (str(tmp_path / d) for d in ("src", "view", "ckpt"))
+    _write_chunks(readings_rows, src, n_chunks=40)
+    assert len(os.listdir(src)) == 40
+    first_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    q = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
+    await_replay(q, 300)
+    data = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert [p["numInputRows"] for p in data] == [len(readings_rows)]
+    jobs = _job_descriptions(spark, first_job)
+    assert jobs, "the replay launched no job"
+    assert [d for d in jobs if d.startswith("Listing leaf files")] == []
+
+
+def test_state_partitions_default_to_one_per_core(
+    spark, readings_rows, tmp_path
+):
+    """Without ``state_partitions`` the stateful aggregate runs one
+    state partition per core; an explicit count wins."""
+    cores = spark.sparkContext.defaultParallelism
+    explicit = 2 * cores + 1  # odd, so never the session's 8 either
+    got = {}
+    for given in (None, explicit):
+        base = tmp_path / f"parts-{given}"
+        src = str(base / "src")
+        _write_chunks(readings_rows[:200], src, n_chunks=1)
+        q = start_file_stream_pipeline(
+            spark, src, str(base / "view"), str(base / "ckpt"),
+            available_now=True, state_partitions=given,
+        )
+        await_replay(q, 300)
+        got[given] = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+    assert got == {None: cores, explicit: explicit}
 
 
 def test_streaming_acf_short_series_rows_match_batch(spark, tmp_path):
@@ -1081,30 +1119,6 @@ def test_streaming_acf_short_series_rows_match_batch(spark, tmp_path):
     assert [(t[1], t[2], t[3]) for t in tiny] == [
         (1, 1, -500_000), (2, 0, None), (3, 0, None),
     ]
-
-
-def test_resolve_state_partitions_hint(tmp_path):
-    """ADVICE r14: the derived state-partition count must honor a
-    per-call standing-keys hint (the bare view-topology default
-    pinned 8 into every caller's checkpoint regardless of its real
-    key cardinality); an explicit count always wins."""
-    from kafka_streams_pipeline_spark.streaming.pipeline import (
-        _resolve_state_partitions,
-        default_state_partitions,
-    )
-
-    ckpt = str(tmp_path / "ckpt-not-yet")
-    # explicit wins
-    assert _resolve_state_partitions(64, 1_000_000, ckpt) == 64
-    # hint drives the derivation: 40k keys / 400 per partition = 100
-    assert _resolve_state_partitions(None, 40_000, ckpt) == 100
-    # huge hint caps at 200, tiny floors at 8
-    assert _resolve_state_partitions(None, 10_000_000, ckpt) == 200
-    assert _resolve_state_partitions(None, 100, ckpt) == 8
-    # no hint: the view topology default (~2,880 keys -> 8)
-    assert _resolve_state_partitions(None, None, ckpt) == (
-        default_state_partitions()
-    )
 
 
 def _kspipeline_dirs() -> set:

@@ -56,6 +56,7 @@ def _replay(spark, op, rows, rocksdb: bool):
     emission per user."""
     from kafka_streams_pipeline_spark.streaming.pipeline import (
         ROCKSDB_PROVIDER,
+        await_replay,
     )
 
     base = tempfile.mkdtemp(prefix="kspipeline-tws-")
@@ -92,7 +93,7 @@ def _replay(spark, op, rows, rocksdb: bool):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300), "replay timed out"
+        await_replay(q, 300)
     finally:
         if saved is None:
             spark.conf.unset(key)
