@@ -1056,25 +1056,34 @@ def test_many_file_batch_lists_on_the_driver(spark, readings_rows, tmp_path):
     assert [d for d in jobs if d.startswith("Listing leaf files")] == []
 
 
-def test_state_partitions_default_to_one_per_core(
-    spark, readings_rows, tmp_path
-):
+def _state_partitions_used(spark, rows, base, given):
+    """Replay ``rows`` as one availableNow batch and return the state
+    operator's partition count from the stream's last progress."""
+    src = str(base / "src")
+    _write_chunks(rows, src, n_chunks=1)
+    q = start_file_stream_pipeline(
+        spark, src, str(base / "view"), str(base / "ckpt"),
+        available_now=True, state_partitions=given,
+    )
+    await_replay(q, 300)
+    return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+
+def test_default_state_partitions_derivation(spark, readings_rows, tmp_path):
     """Without ``state_partitions`` the stateful aggregate runs one
-    state partition per core; an explicit count wins."""
+    state partition per core."""
     cores = spark.sparkContext.defaultParallelism
-    explicit = 2 * cores + 1  # odd, so never the session's 8 either
-    got = {}
-    for given in (None, explicit):
-        base = tmp_path / f"parts-{given}"
-        src = str(base / "src")
-        _write_chunks(readings_rows[:200], src, n_chunks=1)
-        q = start_file_stream_pipeline(
-            spark, src, str(base / "view"), str(base / "ckpt"),
-            available_now=True, state_partitions=given,
-        )
-        await_replay(q, 300)
-        got[given] = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
-    assert got == {None: cores, explicit: explicit}
+    got = _state_partitions_used(spark, readings_rows[:200], tmp_path, None)
+    assert got == cores
+
+
+def test_resolve_state_partitions_hint(spark, readings_rows, tmp_path):
+    """An explicit ``state_partitions`` count wins over the default."""
+    explicit = 2 * spark.sparkContext.defaultParallelism + 1  # odd, never 8
+    got = _state_partitions_used(
+        spark, readings_rows[:200], tmp_path, explicit
+    )
+    assert got == explicit
 
 
 def test_streaming_acf_short_series_rows_match_batch(spark, tmp_path):
