@@ -35,17 +35,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # driver-owned sessions may lack our session defaults;
-            # these are all runtime-settable (session.py holds the
-            # JVM-start-only ones)
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(session.DEFAULT_SHUFFLE_PARTITIONS),
-            )
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+            # driver-owned sessions lack the engine profile
+            for k, v in session.SESSION_CONFS.items():
+                spark.conf.set(k, v)
             return fn(spark, sf_dir)
 
         return run

@@ -257,7 +257,6 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/pipeline.py start_file_stream_pipeline."""
     from kafka_streams_pipeline_spark.streaming.pipeline import (
         await_replay,
-        read_view as _stream_read_view,
         start_file_stream_pipeline,
     )
 
@@ -270,7 +269,7 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True, max_files_per_trigger=1,
             rocksdb_state=True,
         ))
-        out = _stream_read_view(spark, view_dir).select(
+        out = read_view(spark, view_dir).select(
             "gh",
             F.unix_millis("window_start").alias("ws_ms"),
             F.col("count").alias("cnt"),
@@ -1462,10 +1461,8 @@ def q_corpus_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the consolidation (same data, fewer batches) and that
     checkpointing never disturbs a pinned old version.
     See sources/versioned.checkpoint_corpus."""
-    import json as _json
-
     from kafka_streams_pipeline_spark.sources.versioned import (
-        _manifest_path,
+        batch_dirs,
         checkpoint_corpus,
         commit_corpus,
         read_corpus,
@@ -1480,8 +1477,7 @@ def q_corpus_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit_corpus(docs.where(F.col("doc_id") % 3 == 2), store, "third 2")
         out_rows = []
         for v in (1, 2, 3, 4):
-            with open(_manifest_path(store, v)) as f:
-                n_batches = len(_json.load(f)["batches"])
+            n_batches = len(batch_dirs(store, v))
             snap = read_corpus(spark, store, v).agg(
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
                 F.sum("doc_id").cast("long").alias("id_checksum"),

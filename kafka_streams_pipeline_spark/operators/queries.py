@@ -18,9 +18,9 @@ All merges recompute avg from merged sums — sum(sum)/sum(count) —
 never average the averages (Aggregator.java:20).
 
 Scale posture: every query filters the view on (gh, window_start)
-BEFORE aggregating, so with the view written partitioned by
-window_start date (see streaming/pipeline.py) the scan partition-
-prunes on time and min/max-skips on gh. The scan and the partial
+BEFORE aggregating, so with the view stored partitioned by
+window_start date (the ws_date layout of sources/sinks.py) the scan
+partition-prunes on time and min/max-skips on gh. The scan and the partial
 aggregation run at full parallelism; the one exchange per query is
 the shuffle into the final aggregate. The merged result is ordered on
 one partition instead of by a global sort (which would add a
@@ -200,6 +200,7 @@ def history_interval(
     wall-clock: the reference uses System.currentTimeMillis
     (querying/QueryingController.java:65), which is non-reproducible;
     data-derived "now" is the deterministic stand-in (SURVEY.md §7.1.3).
+    An empty view has no max event time, and its answer is empty.
     """
     validate_aggregate_op(op)
     validate_interval(interval)
@@ -209,7 +210,7 @@ def history_interval(
         # derive "now" as tz-free epoch millis (collecting a
         # timestamp would round-trip through the OS timezone)
         ms = view.agg(F.max(F.unix_millis("window_start")).alias("m")).collect()[0]["m"]
-        to_ts = dt.datetime(1970, 1, 1) + dt.timedelta(milliseconds=ms)
+        to_ts = dt.datetime(1970, 1, 1) + dt.timedelta(milliseconds=ms or 0)
     to_col = _utc_lit(to_ts)
     from_col = to_col - F.expr(_INTERVAL_EXPR[interval])
     # partition lower bound: a safe over-approximation of to-interval

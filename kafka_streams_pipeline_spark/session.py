@@ -46,6 +46,31 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
+#: The engine profile's runtime-settable confs: ``get_spark`` builds
+#: its session with them, and the driver adapter (``__spark_entry__``)
+#: applies them to a session it did not build. The JVM-start-only
+#: ones (driver memory, UI, call-site capture) live in ``get_spark``.
+SESSION_CONFS: dict[str, str] = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
+    # driver fixtures use parquet TIMESTAMP(NANOS) (events.ts);
+    # Spark 4 rejects it unless read as long (normalized in
+    # sources/tables.py back to TimestampType at µs precision,
+    # matching DuckDB's µs truncation)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+}
+
 
 def get_spark(
     app_name: str = "kafka-streams-pipeline-spark",
@@ -64,34 +89,16 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(256 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                str(2**31 - 1))
-        # driver fixtures use parquet TIMESTAMP(NANOS) (events.ts);
-        # Spark 4 rejects it unless read as long (normalized in
-        # sources/tables.py back to TimestampType at µs precision,
-        # matching DuckDB's µs truncation)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    confs = dict(SESSION_CONFS)
+    if shuffle_partitions:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    confs.update(extra_conf or {})
+    for k, v in confs.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

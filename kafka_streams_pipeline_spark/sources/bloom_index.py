@@ -37,9 +37,10 @@ from kafka_streams_pipeline_spark.operators.sketches import (
     _bloom_pos_spark,
 )
 from kafka_streams_pipeline_spark.sources.versioned import (
-    _DATA,
-    _manifest_path,
+    _publish_json,
+    batch_dirs,
     latest_version,
+    read_corpus,
 )
 
 # 65536 bits (8 KiB of positions at worst): batch-sized blooms must
@@ -53,6 +54,54 @@ INDEX_MBITS = 65536
 
 def _index_dir(store_dir: str, key: str) -> str:
     return os.path.join(store_dir, "_indexes", f"bloom_{key}")
+
+
+def _minmax_dir(store_dir: str, col: str) -> str:
+    return os.path.join(store_dir, "_indexes", f"minmax_{col}")
+
+
+def _build_index(store_dir: str, version: int | None, idir: str, record) -> int:
+    """Publish ``record(batch_dir)`` as ``idir/<batch>.json`` for each
+    batch of ``version`` that has no index file yet; return how many
+    were written."""
+    os.makedirs(idir, exist_ok=True)
+    built = 0
+    for d in batch_dirs(store_dir, version):
+        out = os.path.join(idir, f"{os.path.basename(d)}.json")
+        if not os.path.exists(out):
+            _publish_json(out, record(d))  # refuses to clobber
+            built += 1
+    return built
+
+
+def _indexed_batches(
+    store_dir: str, version: int | None, idir: str
+) -> list[tuple[str, dict | None]]:
+    """(batch dir, its index record or None) for each batch of
+    ``version``."""
+    out = []
+    for d in batch_dirs(store_dir, version):
+        path = os.path.join(idir, f"{os.path.basename(d)}.json")
+        record = None
+        if os.path.exists(path):
+            with open(path) as f:
+                record = json.load(f)
+        out.append((d, record))
+    return out
+
+
+def _scan(
+    spark: SparkSession,
+    store_dir: str,
+    version: int | None,
+    dirs: list[str],
+    pred,
+) -> DataFrame:
+    """``pred`` over the batch directories ``dirs``; an empty frame
+    with the version's schema when none is left."""
+    if not dirs:
+        return read_corpus(spark, store_dir, version).where(F.lit(False))
+    return spark.read.parquet(*dirs).where(pred)
 
 
 def _probe_positions(value) -> list[int]:
@@ -81,13 +130,6 @@ def build_bloom_index(
     path. Each batch's positions come from one distinct-key scan
     (the per-batch set is collected — bounded by ``INDEX_MBITS``
     positions, i.e. kilobytes, never data-sized)."""
-    if version is None:
-        version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
-    idir = _index_dir(store_dir, key)
-    os.makedirs(idir, exist_ok=True)
-    built = 0
     pos_arr = (
         "array("
         + ", ".join(
@@ -95,12 +137,10 @@ def build_bloom_index(
         )
         + ")"
     )
-    for b in batches:
-        out = os.path.join(idir, f"{b}.json")
-        if os.path.exists(out):
-            continue
+
+    def record(d: str) -> dict:
         bits = (
-            spark.read.parquet(os.path.join(store_dir, _DATA, b))
+            spark.read.parquet(d)
             .where(F.col(key).isNotNull())
             .select(F.col(key).alias("k"))
             .distinct()
@@ -108,19 +148,14 @@ def build_bloom_index(
             .distinct()
             .collect()
         )
-        record = {
-            "batch": b,
+        return {
+            "batch": os.path.basename(d),
             "key": key,
             "mbits": INDEX_MBITS,
             "bits": sorted(r["p"] for r in bits),
         }
-        tmp = out + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.link(tmp, out)  # atomic publish, refuses to clobber
-        os.unlink(tmp)
-        built += 1
-    return built
+
+    return _build_index(store_dir, version, _index_dir(store_dir, key), record)
 
 
 def candidate_batches(
@@ -135,29 +170,30 @@ def candidate_batches(
     unindexed batch must be scanned, mirroring how engines treat
     files without stats); a batch indexed under a different modulus
     fails loudly instead of mis-pruning."""
-    if version is None:
-        version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
+    dirs, total = _candidate_dirs(store_dir, key, values, version)
+    return [os.path.basename(d) for d in dirs], total
+
+
+def _candidate_dirs(
+    store_dir: str, key: str, values, version: int | None
+) -> tuple[list[str], int]:
     probe_pos = [_probe_positions(v) for v in values]
+    indexed = _indexed_batches(store_dir, version, _index_dir(store_dir, key))
     keep: list[str] = []
-    for b in batches:
-        path = os.path.join(_index_dir(store_dir, key), f"{b}.json")
-        if not os.path.exists(path):
-            keep.append(b)
+    for d, record in indexed:
+        if record is None:
+            keep.append(d)
             continue
-        with open(path) as f:
-            record = json.load(f)
         if record["mbits"] != INDEX_MBITS:
             raise ValueError(
-                f"index for batch {b!r} built with mbits="
+                f"index for batch {os.path.basename(d)!r} built with mbits="
                 f"{record['mbits']}, expected {INDEX_MBITS}; rebuild "
                 "the index directory"
             )
         bits = set(record["bits"])
         if any(all(p in bits for p in pp) for pp in probe_pos):
-            keep.append(b)
-    return keep, len(batches)
+            keep.append(d)
+    return keep, len(indexed)
 
 
 def lookup_corpus(
@@ -176,19 +212,9 @@ def lookup_corpus(
     values = list(values)
     if version is None:
         version = latest_version(store_dir)
-    cands, total = candidate_batches(store_dir, key, values, version)
+    cands, total = _candidate_dirs(store_dir, key, values, version)
     stats = {"batches_scanned": len(cands), "batches_total": total}
-    if not cands:
-        from kafka_streams_pipeline_spark.sources.versioned import (
-            read_corpus,
-        )
-
-        empty = read_corpus(spark, store_dir, version).where(F.lit(False))
-        return empty, stats
-    df = spark.read.parquet(
-        *[os.path.join(store_dir, _DATA, b) for b in cands]
-    ).where(F.col(key).isin(values))
-    return df, stats
+    return _scan(spark, store_dir, version, cands, F.col(key).isin(values)), stats
 
 
 def build_minmax_index(
@@ -205,35 +231,21 @@ def build_minmax_index(
     index-once, O(delta) maintenance. Stats come from one min/max
     aggregate per new batch; an all-NULL batch records nulls and is
     never pruned (conservative)."""
-    if version is None:
-        version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
-    idir = os.path.join(store_dir, "_indexes", f"minmax_{col}")
-    os.makedirs(idir, exist_ok=True)
-    built = 0
-    for b in batches:
-        out = os.path.join(idir, f"{b}.json")
-        if os.path.exists(out):
-            continue
+
+    def record(d: str) -> dict:
         row = (
-            spark.read.parquet(os.path.join(store_dir, _DATA, b))
+            spark.read.parquet(d)
             .agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
             .collect()[0]
         )
-        record = {
-            "batch": b,
+        return {
+            "batch": os.path.basename(d),
             "col": col,
             "lo": row["lo"],
             "hi": row["hi"],
         }
-        tmp = out + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.link(tmp, out)
-        os.unlink(tmp)
-        built += 1
-    return built
+
+    return _build_index(store_dir, version, _minmax_dir(store_dir, col), record)
 
 
 def range_scan_corpus(
@@ -251,31 +263,14 @@ def range_scan_corpus(
     the surviving scans. Returns (rows frame, pruning stats)."""
     if version is None:
         version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
-    idir = os.path.join(store_dir, "_indexes", f"minmax_{col}")
-    keep: list[str] = []
-    for b in batches:
-        path = os.path.join(idir, f"{b}.json")
-        if not os.path.exists(path):
-            keep.append(b)
-            continue
-        with open(path) as f:
-            rec = json.load(f)
-        if rec["lo"] is None or rec["hi"] is None:
-            keep.append(b)
-            continue
-        if rec["lo"] <= hi and lo <= rec["hi"]:
-            keep.append(b)
-    stats = {"batches_scanned": len(keep), "batches_total": len(batches)}
-    if not keep:
-        from kafka_streams_pipeline_spark.sources.versioned import (
-            read_corpus,
-        )
-
-        empty = read_corpus(spark, store_dir, version).where(F.lit(False))
-        return empty, stats
-    df = spark.read.parquet(
-        *[os.path.join(store_dir, _DATA, b) for b in keep]
-    ).where(F.col(col).between(lo, hi))
-    return df, stats
+    indexed = _indexed_batches(store_dir, version, _minmax_dir(store_dir, col))
+    keep = [
+        d
+        for d, rec in indexed
+        if rec is None
+        or rec["lo"] is None
+        or rec["hi"] is None
+        or (rec["lo"] <= hi and lo <= rec["hi"])
+    ]
+    stats = {"batches_scanned": len(keep), "batches_total": len(indexed)}
+    return _scan(spark, store_dir, version, keep, F.col(col).between(lo, hi)), stats

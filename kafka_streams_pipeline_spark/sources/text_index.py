@@ -29,22 +29,96 @@ mandate needs.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_streams_pipeline_spark.sources.versioned import (
-    _DATA,
-    _manifest_path,
-    latest_version,
-)
+from kafka_streams_pipeline_spark.sources.versioned import batch_dirs
 
 
 def _tindex_dir(store_dir: str, text_col: str) -> str:
     return os.path.join(store_dir, "_indexes", f"text_{text_col}")
+
+
+def _build_postings(
+    spark: SparkSession,
+    store_dir: str,
+    version: int | None,
+    idir: str,
+    postings,
+    index_partitions: int,
+) -> int:
+    """Write ``postings(batch rows)`` as ``idir/<batch>/`` for each
+    batch of ``version`` that has no index directory yet (temp dir,
+    then rename); return how many were written."""
+    os.makedirs(idir, exist_ok=True)
+    built = 0
+    for d in batch_dirs(store_dir, version):
+        b = os.path.basename(d)
+        out = os.path.join(idir, b)
+        if os.path.exists(out):
+            continue
+        tmp = os.path.join(idir, f".tmp_{b}")
+        shutil.rmtree(tmp, ignore_errors=True)
+        (
+            postings(spark.read.parquet(d))
+            .repartitionByRange(index_partitions, "token")
+            .sortWithinPartitions("token")
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+        os.rename(tmp, out)
+        built += 1
+    return built
+
+
+def _term_candidates(
+    spark: SparkSession,
+    store_dir: str,
+    version: int | None,
+    idir: str,
+    terms: list[str],
+    kind: str,
+) -> tuple[DataFrame, dict[str, str], list[str]]:
+    """Stage 1 of a term search: (postings of ``terms`` tagged with
+    their batch name ``_b``, {batch name: data dir} of every batch
+    whose index holds ALL ``terms``, every batch dir of the
+    version). Raises if a batch has no ``kind`` index: a partial
+    index would return partial results."""
+    dirs = batch_dirs(store_dir, version)
+    names = [os.path.basename(d) for d in dirs]
+    missing = [b for b in names if not os.path.isdir(os.path.join(idir, b))]
+    if missing:
+        raise ValueError(
+            f"{kind} index missing for batches {missing}; run "
+            f"build_{kind}_index first (a partial index would return "
+            "partial results)"
+        )
+    idx = (
+        spark.read.parquet(*[os.path.join(idir, b) for b in names])
+        .where(F.col("token").isin(terms))
+        .withColumn(
+            "_b",
+            F.regexp_extract(
+                F.col("_metadata.file_path"), r"/(b\d{6})/[^/]+$", 1
+            ),
+        )
+    )
+    per_batch = (
+        idx.groupBy("_b")
+        .agg(F.countDistinct("token").alias("nt"))
+        .where(F.col("nt") == len(terms))
+        .collect()
+    )
+    by_name = dict(zip(names, dirs))
+    cand = {b: by_name[b] for b in sorted(r["_b"] for r in per_batch)}
+    return idx, cand, dirs
+
+
+def _payload(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    return spark.read.option("mergeSchema", "true").parquet(*dirs)
 
 
 def build_text_index(
@@ -65,41 +139,21 @@ def build_text_index(
     ``index_partitions`` sizes the per-batch posting files — scale
     it with batch size (it bounds write parallelism and file count,
     never correctness)."""
-    if version is None:
-        version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
-    idir = _tindex_dir(store_dir, text_col)
-    os.makedirs(idir, exist_ok=True)
-    built = 0
-    for b in batches:
-        out = os.path.join(idir, b)
-        if os.path.exists(out):
-            continue
-        src = spark.read.parquet(os.path.join(store_dir, _DATA, b))
-        postings = (
-            src.where(F.col(text_col).isNotNull())
-            .select(
-                F.col(key),
-                F.explode(
-                    F.array_distinct(
-                        F.split(F.lower(F.col(text_col)), " ")
-                    )
-                ).alias("token"),
-            )
-            .select("token", key)
+    return _build_postings(
+        spark,
+        store_dir,
+        version,
+        _tindex_dir(store_dir, text_col),
+        lambda src: src.where(F.col(text_col).isNotNull())
+        .select(
+            F.col(key),
+            F.explode(
+                F.array_distinct(F.split(F.lower(F.col(text_col)), " "))
+            ).alias("token"),
         )
-        tmp = os.path.join(idir, f".tmp_{b}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            postings.repartitionByRange(index_partitions, "token")
-            .sortWithinPartitions("token")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        os.rename(tmp, out)
-        built += 1
-    return built
+        .select("token", key),
+        index_partitions,
+    )
 
 
 def search_text_index(
@@ -131,60 +185,24 @@ def search_text_index(
     if not terms:
         raise ValueError("empty term list")
     terms_lc = sorted({t.lower() for t in terms})
-    if version is None:
-        version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
-    idir = _tindex_dir(store_dir, text_col)
-    missing = [
-        b for b in batches if not os.path.isdir(os.path.join(idir, b))
-    ]
-    if missing:
-        raise ValueError(
-            f"text index missing for batches {missing}; run "
-            "build_text_index first (a partial index would return "
-            "partial results)"
-        )
-    idx = (
-        spark.read.parquet(*[os.path.join(idir, b) for b in batches])
-        .where(F.col("token").isin(terms_lc))
-        .withColumn(
-            "_b",
-            F.regexp_extract(
-                F.col("_metadata.file_path"), r"/(b\d{6})/[^/]+$", 1
-            ),
-        )
+    idx, cand, dirs = _term_candidates(
+        spark, store_dir, version, _tindex_dir(store_dir, text_col),
+        terms_lc, "text",
     )
-    per_batch = (
-        idx.groupBy("_b")
-        .agg(F.countDistinct("token").alias("nt"))
-        .where(F.col("nt") == len(terms_lc))
-        .collect()
-    )
-    cand = sorted(r["_b"] for r in per_batch)
     stats = {
-        "batches_total": len(batches),
+        "batches_total": len(dirs),
         "batches_scanned": len(cand),
     }
     if not cand:
-        empty = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(store_dir, _DATA, b) for b in batches])
-            .limit(0)
-        )
-        return empty, stats
+        return _payload(spark, dirs).limit(0), stats
     matched = (
-        idx.where(F.col("_b").isin(cand))
+        idx.where(F.col("_b").isin(list(cand)))
         .groupBy(key)
         .agg(F.countDistinct("token").alias("nt"))
         .where(F.col("nt") == len(terms_lc))
         .select(key)
     )
-    payload = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[os.path.join(store_dir, _DATA, b) for b in cand])
-        .join(matched, key, "left_semi")
-    )
+    payload = _payload(spark, list(cand.values())).join(matched, key, "left_semi")
     return payload, stats
 
 
@@ -210,39 +228,21 @@ def build_positional_index(
     as build_text_index: immutable per-batch directories, atomic
     rename, incremental (new batches only), token-sorted for row-
     group pruning."""
-    if version is None:
-        version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
-    idir = _pindex_dir(store_dir, text_col)
-    os.makedirs(idir, exist_ok=True)
-    built = 0
-    for b in batches:
-        out = os.path.join(idir, b)
-        if os.path.exists(out):
-            continue
-        src = spark.read.parquet(os.path.join(store_dir, _DATA, b))
-        postings = (
-            src.where(F.col(text_col).isNotNull())
-            .select(
-                F.col(key),
-                F.posexplode(
-                    F.split(F.lower(F.col(text_col)), " ")
-                ).alias("pos", "token"),
-            )
-            .select("token", key, F.col("pos").cast("long").alias("pos"))
+    return _build_postings(
+        spark,
+        store_dir,
+        version,
+        _pindex_dir(store_dir, text_col),
+        lambda src: src.where(F.col(text_col).isNotNull())
+        .select(
+            F.col(key),
+            F.posexplode(F.split(F.lower(F.col(text_col)), " ")).alias(
+                "pos", "token"
+            ),
         )
-        tmp = os.path.join(idir, f".tmp_{b}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            postings.repartitionByRange(index_partitions, "token")
-            .sortWithinPartitions("token")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        os.rename(tmp, out)
-        built += 1
-    return built
+        .select("token", key, F.col("pos").cast("long").alias("pos")),
+        index_partitions,
+    )
 
 
 def search_phrase(
@@ -274,50 +274,19 @@ def search_phrase(
         raise ValueError("empty phrase or empty term")
     terms_lc = [t.lower() for t in phrase]
     uniq = sorted(set(terms_lc))
-    if version is None:
-        version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        batches = json.load(f)["batches"]
-    idir = _pindex_dir(store_dir, text_col)
-    missing = [
-        b for b in batches if not os.path.isdir(os.path.join(idir, b))
-    ]
-    if missing:
-        raise ValueError(
-            f"positional index missing for batches {missing}; run "
-            "build_positional_index first"
-        )
-    idx = (
-        spark.read.parquet(*[os.path.join(idir, b) for b in batches])
-        .where(F.col("token").isin(uniq))
-        .withColumn(
-            "_b",
-            F.regexp_extract(
-                F.col("_metadata.file_path"), r"/(b\d{6})/[^/]+$", 1
-            ),
-        )
+    idx, cand, dirs = _term_candidates(
+        spark, store_dir, version, _pindex_dir(store_dir, text_col),
+        uniq, "positional",
     )
-    per_batch = (
-        idx.groupBy("_b")
-        .agg(F.countDistinct("token").alias("nt"))
-        .where(F.col("nt") == len(uniq))
-        .collect()
-    )
-    cand = sorted(r["_b"] for r in per_batch)
     stats = {
-        "batches_total": len(batches),
+        "batches_total": len(dirs),
         "batches_scanned": len(cand),
         "candidate_docs": 0,
         "matched_docs": 0,
     }
     if not cand:
-        empty = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(store_dir, _DATA, b) for b in batches])
-            .limit(0)
-        )
-        return empty, stats
-    cidx = idx.where(F.col("_b").isin(cand))
+        return _payload(spark, dirs).limit(0), stats
+    cidx = idx.where(F.col("_b").isin(list(cand)))
     stats["candidate_docs"] = (
         cidx.groupBy(key)
         .agg(F.countDistinct("token").alias("nt"))
@@ -334,9 +303,5 @@ def search_phrase(
         anchors = anchors.join(nxt, ["k", "p"], "left_semi")
     matched = anchors.select(F.col("k").alias(key)).distinct()
     stats["matched_docs"] = matched.count()
-    payload = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[os.path.join(store_dir, _DATA, b) for b in cand])
-        .join(matched, key, "left_semi")
-    )
+    payload = _payload(spark, list(cand.values())).join(matched, key, "left_semi")
     return payload, stats

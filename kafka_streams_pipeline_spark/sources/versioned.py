@@ -17,6 +17,9 @@ Layout:
       _manifests/v000001.json         {"version":1,"batches":[...],"note":...}
       _manifests/v000002.json
 
+This module alone reads and writes that layout; other modules locate a
+version's data through ``batch_dirs``.
+
 Scale posture: manifests list DIRECTORIES (O(versions) metadata, not
 O(files)); data files are immutable, so a version is reproducible
 forever and concurrent readers never see partial state (the manifest
@@ -30,7 +33,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import socket
+import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -123,21 +129,76 @@ def _acquire_lock(store_dir: str, tag: str) -> str:
         os.close(gfd)  # releases the flock
 
 
+@contextmanager
+def _commit_lock(store_dir: str, tag: str):
+    """Hold the store's exclusive commit lock for the ``with`` body."""
+    lock = _acquire_lock(store_dir, tag)
+    try:
+        yield
+    finally:
+        try:
+            os.unlink(lock)
+        except OSError:
+            pass
+
+
 def _manifest_path(store_dir: str, version: int) -> str:
     return os.path.join(store_dir, _MANIFESTS, f"v{version:06d}.json")
 
 
-def latest_version(store_dir: str) -> int:
-    """Highest committed version, 0 if the store is empty/new."""
+def _versions(store_dir: str) -> list[int]:
+    """Every version whose manifest exists (vacuumed ones do not),
+    ascending."""
     mdir = os.path.join(store_dir, _MANIFESTS)
     if not os.path.isdir(mdir):
-        return 0
-    versions = [
+        return []
+    return sorted(
         int(f[1:7])
         for f in os.listdir(mdir)
         if f.startswith("v") and f.endswith(".json")
-    ]
-    return max(versions, default=0)
+    )
+
+
+def _manifest(store_dir: str, version: int) -> dict:
+    with open(_manifest_path(store_dir, version)) as f:
+        return json.load(f)
+
+
+def _batches(store_dir: str, version: int | None = None) -> list[str]:
+    """Names of the batches ``version`` (default latest) pins, in
+    commit order."""
+    if version is None:
+        version = latest_version(store_dir)
+    if version < 1:
+        raise ValueError(f"no committed version in {store_dir!r}")
+    return _manifest(store_dir, version)["batches"]
+
+
+def batch_dirs(store_dir: str, version: int | None = None) -> list[str]:
+    """The data directories of the batches ``version`` (default
+    latest) pins, in commit order. Each directory's name is its batch
+    name (``b000001``…). Modules that index or scan a version's
+    batches locate them here, never from the manifest files."""
+    return [os.path.join(store_dir, _DATA, b) for b in _batches(store_dir, version)]
+
+
+def _publish_json(path: str, record: dict, replace: bool = False) -> None:
+    """Write ``record`` to ``path`` atomically: a temp write, then
+    ``os.link`` (which fails if ``path`` exists, where a rename would
+    silently clobber it) or, with ``replace``, a rename over it."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(record, f)
+    if replace:
+        os.replace(tmp, path)
+    else:
+        os.link(tmp, path)
+        os.unlink(tmp)
+
+
+def latest_version(store_dir: str) -> int:
+    """Highest committed version, 0 if the store is empty/new."""
+    return max(_versions(store_dir), default=0)
 
 
 def version_at(store_dir: str, ts: float) -> int:
@@ -154,20 +215,8 @@ def version_at(store_dir: str, ts: float) -> int:
     retained version falls through to the documented ValueError
     instead of surfacing a FileNotFoundError from a pruned
     manifest."""
-    mdir = os.path.join(store_dir, _MANIFESTS)
-    versions: list[int] = []
-    if os.path.isdir(mdir):
-        versions = sorted(
-            (
-                int(f[1:7])
-                for f in os.listdir(mdir)
-                if f.startswith("v") and f.endswith(".json")
-            ),
-            reverse=True,
-        )
-    for v in versions:
-        with open(_manifest_path(store_dir, v)) as f:
-            committed = json.load(f).get("ts")
+    for v in reversed(_versions(store_dir)):
+        committed = _manifest(store_dir, v).get("ts")
         if committed is None or committed <= ts:
             return v
     raise ValueError(
@@ -218,10 +267,30 @@ def commit_corpus(
     commit advanced the store past it before this commit took the
     lock, raise ``ConcurrentCommitError`` instead of publishing a
     lineage that silently omits the peer's batch."""
-    import shutil
+    return _commit(
+        df.write.mode("errorifexists").parquet,
+        store_dir,
+        note,
+        replace_history=replace_history,
+        expect_latest=expect_latest,
+    )
 
-    lock = _acquire_lock(store_dir, "commit")
-    try:
+
+def _commit(
+    write,
+    store_dir: str,
+    note: str,
+    replace_history: bool = False,
+    expect_latest: int | None = None,
+    spec: list[str] | None = None,
+) -> int:
+    """The one commit sequence behind ``commit_corpus`` and
+    ``commit_corpus_partitioned`` (contract on ``commit_corpus``):
+    lock → debris clear → ``write(temp batch dir)`` → rename into
+    place → link-publish the manifest. ``spec`` records the batch's
+    partition columns; the specs of the batches a version keeps carry
+    forward."""
+    with _commit_lock(store_dir, "commit"):
         current = latest_version(store_dir)
         if expect_latest is not None and current != expect_latest:
             raise ConcurrentCommitError(
@@ -236,35 +305,27 @@ def commit_corpus(
         for debris in (tmp_batch_dir, batch_dir):
             if os.path.exists(debris):
                 shutil.rmtree(debris)
-        df.write.mode("errorifexists").parquet(tmp_batch_dir)
+        write(tmp_batch_dir)
         os.rename(tmp_batch_dir, batch_dir)
-        prior: list[str] = []
-        if version > 1 and not replace_history:
-            with open(_manifest_path(store_dir, version - 1)) as f:
-                prior = json.load(f)["batches"]
-        import time
-
+        prior = {}
+        if current and not replace_history:
+            prior = _manifest(store_dir, current)
+        specs = dict(prior.get("specs", {}))
+        if spec:
+            specs[batch] = list(spec)
         manifest = {
-            "version": version, "batches": prior + [batch], "note": note,
+            "version": version,
+            "batches": [*prior.get("batches", []), batch],
+            "note": note,
             # wall-clock commit time: powers TIMESTAMP-AS-OF time
             # travel (version_at). Informational only — ordering
             # authority is always the version number
             "ts": time.time(),
         }
-        tmp = _manifest_path(store_dir, version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        # exclusive publish: link fails if the manifest already
-        # exists (a writer that somehow bypassed the lock), where
-        # rename would silently clobber it
-        os.link(tmp, _manifest_path(store_dir, version))
-        os.unlink(tmp)
+        if specs:
+            manifest["specs"] = specs
+        _publish_json(_manifest_path(store_dir, version), manifest)
         return version
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
 
 
 def read_corpus(
@@ -289,19 +350,10 @@ def read_corpus(
     homogeneous store skips the footer-merge job, and an accidental
     schema drift fails loudly instead of being silently null-padded
     — turn it on deliberately."""
-    if version is None:
-        version = latest_version(store_dir)
-    if version < 1:
-        raise ValueError(f"no committed version in {store_dir!r}")
-    with open(_manifest_path(store_dir, version)) as f:
-        manifest = json.load(f)
-    dirs = [
-        os.path.join(store_dir, _DATA, b) for b in manifest["batches"]
-    ]
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*dirs)
+    return reader.parquet(*batch_dirs(store_dir, version))
 
 
 def checkpoint_corpus(
@@ -366,10 +418,7 @@ def vacuum_corpus(store_dir: str, keep_from_version: int) -> dict:
     the failure mode is loud, never silent partial data.
 
     Returns {"batches_removed": n, "manifests_removed": m}."""
-    import shutil
-
-    lock = _acquire_lock(store_dir, "vacuum")
-    try:
+    with _commit_lock(store_dir, "vacuum"):
         latest = latest_version(store_dir)
         if not 1 <= keep_from_version <= latest:
             raise ValueError(
@@ -394,8 +443,7 @@ def vacuum_corpus(store_dir: str, keep_from_version: int) -> dict:
             )
         keep: set[str] = set()
         for v in range(keep_from_version, latest + 1):
-            with open(_manifest_path(store_dir, v)) as f:
-                keep.update(json.load(f)["batches"])
+            keep.update(_batches(store_dir, v))
         manifests_removed = 0
         for v in range(1, keep_from_version):
             path = _manifest_path(store_dir, v)
@@ -412,11 +460,6 @@ def vacuum_corpus(store_dir: str, keep_from_version: int) -> dict:
             "batches_removed": batches_removed,
             "manifests_removed": manifests_removed,
         }
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
 
 
 TOMBSTONE = "_deleted"
@@ -430,6 +473,18 @@ class CommitRejectedError(RuntimeError):
     def __init__(self, msg: str, violations: dict[str, int] | None = None):
         super().__init__(msg)
         self.violations = violations or {}
+
+
+def _failed_checks(df: DataFrame, checks: list) -> dict[str, int]:
+    """Check name → violation count of every failing
+    ``operators.quality`` check, from one aggregate pass over ``df``."""
+    from kafka_streams_pipeline_spark.operators.quality import run_checks
+
+    return {
+        r["check_name"]: r["violations"]
+        for r in run_checks(df, checks).collect()
+        if not r["passed"]
+    }
 
 
 def commit_corpus_checked(
@@ -458,17 +513,11 @@ def commit_corpus_checked(
     costs one O(delta) scan; caught downstream it costs a
     time-travel rollback and a re-derivation of everything built on
     the corrupted version."""
-    from kafka_streams_pipeline_spark.operators.quality import run_checks
-
     current = latest_version(store_dir)
     if current >= 1:
-        with open(_manifest_path(store_dir, current)) as f:
-            first_batch = json.load(f)["batches"][0]
-        store_schema = (
-            df.sparkSession.read.parquet(
-                os.path.join(store_dir, _DATA, first_batch)
-            ).schema
-        )
+        store_schema = df.sparkSession.read.parquet(
+            batch_dirs(store_dir, current)[0]
+        ).schema
         have = {f.name: f.dataType for f in df.schema.fields}
         want = {f.name: f.dataType for f in store_schema.fields}
         missing = [c for c in want if c not in have]
@@ -483,11 +532,7 @@ def commit_corpus_checked(
                 f"extra={extra} (extra columns need evolve=True)"
             )
     if checks:
-        failed = {
-            r["check_name"]: r["violations"]
-            for r in run_checks(df, checks).collect()
-            if not r["passed"]
-        }
+        failed = _failed_checks(df, checks)
         if failed:
             raise CommitRejectedError(
                 f"quality gate failed for {len(failed)} check(s): "
@@ -550,13 +595,7 @@ def read_corpus_log(
 
     from pyspark.sql import functions as F
 
-    if version is None:
-        version = latest_version(store_dir)
-    if version < 1:
-        raise ValueError(f"no committed version in {store_dir!r}")
-    with open(_manifest_path(store_dir, version)) as f:
-        manifest = json.load(f)
-    batches = manifest["batches"]
+    batches = _batches(store_dir, version)
     seq_map = F.create_map(
         *chain.from_iterable(
             (F.lit(b), F.lit(i)) for i, b in enumerate(batches)
@@ -622,9 +661,7 @@ def read_corpus_latest(
     log = read_corpus_log(spark, store_dir, version)
     if key not in log.columns:
         raise ValueError(f"store batches have no key column {key!r}")
-    with open(_manifest_path(store_dir, version)) as f:
-        n_batches = len(json.load(f)["batches"])
-    if n_batches == 1:
+    if len(_batches(store_dir, version)) == 1:
         # MoR → CoW degeneration (the docstring's promise, now the
         # plan's shape): a single-batch lineage — fresh store, or
         # anything after compact/checkpoint — has exactly one row
@@ -671,10 +708,8 @@ def read_corpus_changes(
 
     if to_version is None:
         to_version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, from_version)) as f:
-        from_batches = json.load(f)["batches"]
-    with open(_manifest_path(store_dir, to_version)) as f:
-        to_batches = json.load(f)["batches"]
+    from_batches = _batches(store_dir, from_version)
+    to_batches = _batches(store_dir, to_version)
     if not set(from_batches) <= set(to_batches):
         raise ValueError(
             f"lineage of v{to_version} does not contain v{from_version} "
@@ -831,17 +866,10 @@ def store_history_rows(store_dir: str) -> list[tuple]:
     Spark job. Callers that only need a history FACT (an assertion on
     the head row, a lineage-length probe) should use this and skip
     the DataFrame round-trip entirely."""
-    mdir = os.path.join(store_dir, _MANIFESTS)
-    versions = sorted(
-        int(f[1:7])
-        for f in (os.listdir(mdir) if os.path.isdir(mdir) else [])
-        if f.startswith("v") and f.endswith(".json")
-    )
     batches_by_version: dict[int, list[str]] = {}
     rows = []
-    for v in versions:
-        with open(_manifest_path(store_dir, v)) as f:
-            manifest = json.load(f)
+    for v in _versions(store_dir):
+        manifest = _manifest(store_dir, v)
         batches = list(manifest["batches"])
         batches_by_version[v] = batches
         prev = batches_by_version.get(v - 1)
@@ -907,8 +935,7 @@ def tag_corpus(
     the tag landing (vacuum checks tags inside the same lock)."""
     if not _TAG_NAME.match(name):
         raise ValueError(f"invalid tag name {name!r}")
-    lock = _acquire_lock(store_dir, f"tag:{name}")
-    try:
+    with _commit_lock(store_dir, f"tag:{name}"):
         latest = latest_version(store_dir)
         v = latest if version is None else version
         if not 1 <= v <= latest or not os.path.exists(
@@ -924,18 +951,10 @@ def tag_corpus(
                 f"tag {name!r} already exists (at version "
                 f"{list_tags(store_dir)[name]}); pass force=True to move it"
             )
-        import time
-
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "version": v, "ts": time.time()}, f)
-        os.replace(tmp, path)
+        _publish_json(
+            path, {"name": name, "version": v, "ts": time.time()}, replace=force
+        )
         return v
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
 
 
 def list_tags(store_dir: str) -> dict[str, int]:
@@ -1059,55 +1078,16 @@ def commit_corpus_partitioned(
     manifest — Iceberg-style partition-spec EVOLUTION: each batch
     carries its own spec, old batches are never rewritten, and the
     read path prunes each batch by whatever spec it was written
-    under. Same locking/atomicity contract as commit_corpus (the
-    batch dir renames into place before the manifest publishes)."""
-    import shutil
-    import time
-
+    under. Same commit sequence as commit_corpus."""
     if not partition_by:
         raise ValueError("partition_by must be non-empty; use "
                          "commit_corpus for unpartitioned batches")
-    lock = _acquire_lock(store_dir, "commit")
-    try:
-        current = latest_version(store_dir)
-        version = current + 1
-        batch = f"b{version:06d}"
-        batch_dir = os.path.join(store_dir, _DATA, batch)
-        tmp_batch_dir = os.path.join(store_dir, _DATA, f".tmp-{batch}")
-        for debris in (tmp_batch_dir, batch_dir):
-            if os.path.exists(debris):
-                shutil.rmtree(debris)
-        (
-            df.write.mode("errorifexists")
-            .partitionBy(*partition_by)
-            .parquet(tmp_batch_dir)
-        )
-        os.rename(tmp_batch_dir, batch_dir)
-        prior: list[str] = []
-        prior_specs: dict[str, list[str]] = {}
-        if version > 1:
-            with open(_manifest_path(store_dir, version - 1)) as f:
-                pm = json.load(f)
-            prior = pm["batches"]
-            prior_specs = pm.get("specs", {})
-        manifest = {
-            "version": version,
-            "batches": prior + [batch],
-            "specs": {**prior_specs, batch: list(partition_by)},
-            "note": note,
-            "ts": time.time(),
-        }
-        tmp = _manifest_path(store_dir, version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.link(tmp, _manifest_path(store_dir, version))
-        os.unlink(tmp)
-        return version
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
+    return _commit(
+        df.write.mode("errorifexists").partitionBy(*partition_by).parquet,
+        store_dir,
+        note,
+        spec=partition_by,
+    )
 
 
 def read_corpus_pruned(
@@ -1134,8 +1114,7 @@ def read_corpus_pruned(
 
     if version is None:
         version = latest_version(store_dir)
-    with open(_manifest_path(store_dir, version)) as f:
-        manifest = json.load(f)
+    manifest = _manifest(store_dir, version)
     batches = manifest["batches"]
     specs: dict[str, list[str]] = manifest.get("specs", {})
 

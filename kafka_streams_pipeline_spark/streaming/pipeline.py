@@ -9,8 +9,9 @@ consume → deserialize → event-time extract → re-key to geohash cell →
 Spark shape: ``readStream`` (kafka or files) → ``from_json``/typed
 readings → ``withWatermark('ts', grace)`` →
 ``groupBy(window('ts','1 hour'), gh).agg(...)`` in **update** mode →
-``foreachBatch`` upsert into an external parquet view table
-partitioned by window date.
+``foreachBatch`` upsert into the parquet view store, whose
+ws_date-partitioned layout sources/sinks.py owns (writes, merges,
+compaction and reads).
 
 Semantics mapping (SURVEY.md §2.8):
 - T3 late data: watermark 24 h ≈ Kafka Streams 2.3's default window
@@ -19,14 +20,8 @@ Semantics mapping (SURVEY.md §2.8):
 - T4 cadence: trigger(processingTime='10 seconds') mirrors the commit
   interval; tests use availableNow for determinism.
 - T5 queryability: Spark state is not interactively queryable, so the
-  queryable copy is this external view table — written per
+  queryable copy is this external view store — written per
   micro-batch, readable by the batch query family (operators/queries).
-
-Scale: the upsert rewrites only the window-date partitions touched by
-the micro-batch (late data bounded by the watermark bounds how many),
-merging surviving rows with updated keys — at 1000 executors the
-rewrite cost tracks update volume, not view size. Delta/Iceberg MERGE
-is the drop-in upgrade when available.
 """
 
 from __future__ import annotations
@@ -35,8 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_streams_pipeline_spark.operators.view import DEFAULT_PRECISION, DEFAULT_WINDOW
+from kafka_streams_pipeline_spark.operators.view import (
+    DEFAULT_PRECISION,
+    DEFAULT_WINDOW,
+    build_view,
+)
 from kafka_streams_pipeline_spark.schema import READING_SCHEMA
+from kafka_streams_pipeline_spark.sources.sinks import upsert_view
 
 DEFAULT_GRACE = "24 hours"  # Kafka Streams 2.3 default retention (T3)
 
@@ -48,89 +48,20 @@ def streaming_view_aggregate(
     grace: str = DEFAULT_GRACE,
 ) -> DataFrame:
     """The standing windowed aggregate over a *streaming* readings
-    frame: identical expression to operators/view.build_view plus the
-    watermark (same plan shape → streaming/batch parity by
-    construction)."""
-    agg = (
-        readings.withWatermark("ts", grace)
-        .withColumn("gh", F.substring(F.col("geohash"), 1, precision))
-        .groupBy(F.window(F.col("ts"), window).alias("w"), F.col("gh"))
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            F.sum(F.round(F.col("tempVal") * 1000000).cast("long")).alias("sum_u"),
-        )
+    frame: operators/view.build_view behind the watermark (one plan
+    shape → streaming/batch parity by construction)."""
+    return build_view(
+        readings.withWatermark("ts", grace), precision=precision, window=window
     )
-    return agg.select(
-        F.col("gh"),
-        F.col("w.start").alias("window_start"),
-        F.col("count"),
-        (F.col("sum_u") / F.lit(1000000.0)).alias("sum"),
-        (F.col("sum_u") / F.lit(1000000.0) / F.col("count")).alias("avg"),
-    )
-
-
-def _existing_partition_paths(
-    spark: SparkSession, view_dir: str, dates: list
-) -> list[str]:
-    """Which ws_date=<d> partition directories already exist, probed
-    through the Hadoop FileSystem API — works on any Spark-supported
-    store (local FS, HDFS, s3a://, gs://, abfss://), unlike driver-
-    local os.listdir which only sees the driver's disk."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(view_dir)
-    fs = base.getFileSystem(hconf)
-    if not fs.exists(base):
-        return []
-    out = []
-    for d in dates:
-        part = f"{view_dir}/ws_date={d}"
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(part)):
-            out.append(part)
-    return out
 
 
 def upsert_view_batch(view_dir: str):
-    """foreachBatch upsert: merge a micro-batch of updated
-    (gh, window_start) aggregates into the parquet view table.
-
-    Update-mode batches carry the COMPLETE re-aggregated value for
-    every changed key (the streaming state holds the running
-    aggregate), so the merge is delete-matching-keys ∪ insert-batch —
-    confined to the window-date partitions present in the batch.
-    """
+    """foreachBatch function that merges each micro-batch of updated
+    (gh, window_start) aggregates into the view store
+    (sources/sinks.upsert_view)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.withColumn(
-            "ws_date", F.to_date("window_start")
-        ).cache()
-        dates = [r["ws_date"] for r in batch_df.select("ws_date").distinct().collect()]
-        if not dates:
-            batch_df.unpersist()
-            return
-        merged = batch_df
-        existing_parts = _existing_partition_paths(spark, view_dir, dates)
-        if existing_parts:
-            existing = (
-                spark.read.schema(batch_df.schema)
-                .option("basePath", view_dir)
-                .parquet(*existing_parts)
-            )
-            survivors = existing.join(
-                batch_df.select("gh", "window_start"),
-                ["gh", "window_start"],
-                "left_anti",
-            ).select(*batch_df.columns)
-            merged = batch_df.unionByName(survivors)
-        (
-            merged.repartition("ws_date")
-            .write.mode("overwrite")
-            .partitionBy("ws_date")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(view_dir)
-        )
-        batch_df.unpersist()
+        upsert_view(batch_df, view_dir)
 
     return apply
 
@@ -238,13 +169,6 @@ def streaming_dedup(
     dedup of an unbounded stream needs unbounded memory). Emits each
     surviving row exactly once in append mode."""
     return readings.withWatermark("ts", grace).dropDuplicates([*keys, "ts"])
-
-
-def read_view(spark: SparkSession, view_dir: str) -> DataFrame:
-    """The queryable view table (drop the physical partition column)."""
-    return spark.read.parquet(view_dir).select(
-        "gh", "window_start", "count", "sum", "avg"
-    )
 
 
 def await_replay(q: StreamingQuery, timeout_secs: int = 300) -> None:

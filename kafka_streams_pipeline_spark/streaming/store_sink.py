@@ -21,29 +21,23 @@ import json
 import os
 
 from kafka_streams_pipeline_spark.sources.versioned import (
-    _MANIFESTS,
+    _failed_checks,
     commit_corpus,
+    store_history_rows,
     upsert_corpus,
 )
 
 
 def committed_stream_notes(store_dir: str, note_prefix: str) -> set[str]:
     """Notes of every committed version matching the sink's prefix —
-    one manifest-directory listing + one small JSON read per version
-    (O(versions) metadata, never data). The idempotence ledger IS
-    the store's own commit log: no side state to desync."""
-    mdir = os.path.join(store_dir, _MANIFESTS)
-    notes: set[str] = set()
-    if not os.path.isdir(mdir):
-        return notes
-    for f in sorted(os.listdir(mdir)):
-        if not (f.startswith("v") and f.endswith(".json")):
-            continue
-        with open(os.path.join(mdir, f)) as fh:
-            note = json.load(fh).get("note", "")
-        if note.startswith(note_prefix):
-            notes.add(note)
-    return notes
+    read from the manifests (O(versions) metadata, never data). The
+    idempotence ledger IS the store's own commit log: no side state
+    to desync."""
+    return {
+        note
+        for _, _, _, note in store_history_rows(store_dir)
+        if note.startswith(note_prefix)
+    }
 
 
 def _ledger_note(df, note_prefix: str, batch_id: int) -> str:
@@ -68,6 +62,27 @@ def _ledger_note(df, note_prefix: str, batch_id: int) -> str:
     return f"{note_prefix}{ns}-batch-{batch_id:06d}"
 
 
+def _exactly_once(store_dir: str, note_prefix: str, stats: dict, commit):
+    """The ``foreachBatch`` body both store sinks share: skip empty
+    micro-batches (availableNow bookkeeping triggers), skip a batch
+    whose ledger note the store already holds (a checkpoint replay),
+    otherwise ``commit(df, batch_id, note)``, which returns whether
+    it committed. ``stats`` counts ``committed`` and ``skipped``."""
+    stats.setdefault("committed", 0)
+    stats.setdefault("skipped", 0)
+
+    def sink(df, batch_id: int) -> None:
+        if not df.take(1):
+            return
+        note = _ledger_note(df, note_prefix, batch_id)
+        if note in committed_stream_notes(store_dir, note_prefix):
+            stats["skipped"] += 1
+        elif commit(df, batch_id, note):
+            stats["committed"] += 1
+
+    return sink
+
+
 def make_store_upsert_sink(
     store_dir: str,
     key: str,
@@ -82,22 +97,14 @@ def make_store_upsert_sink(
     ``compact_corpus`` folds the accumulated deltas on whatever
     cadence the read tax warrants. Contract inherited from
     ``upsert_corpus``: ``key`` unique within each micro-batch."""
-    if stats is None:
-        stats = {}
-    stats.setdefault("committed", 0)
-    stats.setdefault("skipped", 0)
-
-    def sink(df, batch_id: int) -> None:
-        if not df.take(1):
-            return
-        note = _ledger_note(df, note_prefix, batch_id)
-        if note in committed_stream_notes(store_dir, note_prefix):
-            stats["skipped"] += 1
-            return
-        upsert_corpus(df, store_dir, key, note=note)
-        stats["committed"] += 1
-
-    return sink
+    return _exactly_once(
+        store_dir,
+        note_prefix,
+        {} if stats is None else stats,
+        lambda df, _batch_id, note: (
+            upsert_corpus(df, store_dir, key, note=note) >= 1
+        ),
+    )
 
 
 def make_store_commit_sink(
@@ -136,41 +143,18 @@ def make_store_commit_sink(
         )
     if stats is None:
         stats = {}
-    stats.setdefault("committed", 0)
-    stats.setdefault("skipped", 0)
     stats.setdefault("quarantined", 0)
 
-    def sink(df, batch_id: int) -> None:
-        if not df.take(1):
-            return
-        note = _ledger_note(df, note_prefix, batch_id)
-        if note in committed_stream_notes(store_dir, note_prefix):
-            stats["skipped"] += 1
-            return
-        if checks:
-            from kafka_streams_pipeline_spark.operators.quality import (
-                run_checks,
-            )
-
-            failed = {
-                r["check_name"]: r["violations"]
-                for r in run_checks(df, checks).collect()
-                if not r["passed"]
-            }
-            if failed:
-                qdir = os.path.join(
-                    quarantine_dir, f"batch-{batch_id:06d}"
-                )
-                df.write.mode("overwrite").parquet(
-                    os.path.join(qdir, "rows")
-                )
-                with open(
-                    os.path.join(qdir, "violations.json"), "w"
-                ) as f:
-                    json.dump({"batch_id": batch_id, "failed": failed}, f)
-                stats["quarantined"] += 1
-                return
+    def commit(df, batch_id: int, note: str) -> bool:
+        failed = _failed_checks(df, checks) if checks else {}
+        if failed:
+            qdir = os.path.join(quarantine_dir, f"batch-{batch_id:06d}")
+            df.write.mode("overwrite").parquet(os.path.join(qdir, "rows"))
+            with open(os.path.join(qdir, "violations.json"), "w") as f:
+                json.dump({"batch_id": batch_id, "failed": failed}, f)
+            stats["quarantined"] += 1
+            return False
         commit_corpus(df, store_dir, note=note)
-        stats["committed"] += 1
+        return True
 
-    return sink
+    return _exactly_once(store_dir, note_prefix, stats, commit)

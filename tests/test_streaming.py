@@ -14,10 +14,10 @@ from pyspark.sql import functions as F
 
 from kafka_streams_pipeline_spark.operators import build_view
 from kafka_streams_pipeline_spark.sources.readings import readings_from_events
+from kafka_streams_pipeline_spark.sources.sinks import read_view
 from kafka_streams_pipeline_spark.sources.tables import load_table
 from kafka_streams_pipeline_spark.streaming.pipeline import (
     await_replay,
-    read_view,
     start_file_stream_pipeline,
 )
 
@@ -267,6 +267,43 @@ def test_compact_view_reduces_files_preserves_data(
     assert n_files(view) == n_parts  # one file per partition
     after_rows = sorted(tuple(r) for r in read_view(spark, view).collect())
     assert after_rows == before_rows
+
+
+def test_compact_view_over_a_streamed_store(spark, sf_dir, tmp_path_factory):
+    """A store the stream wrote (three upsert micro-batches) plus an
+    appended slice on disjoint keys compacts in place: one parquet
+    file per ws_date, rows equal to build_view over all the readings,
+    no directory left beside the store, and reading it back launches
+    no Spark job."""
+    from kafka_streams_pipeline_spark.sources.sinks import compact_view, write_view
+
+    base = tmp_path_factory.mktemp("compact-stream")
+    src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
+    readings = readings_from_events(load_table(spark, sf_dir, "events"))
+    streamed = F.crc32(F.substring("geohash", 1, 6)) % 2 == 0
+    _write_chunks(readings.where(streamed).collect(), src, n_chunks=3)
+    q = start_file_stream_pipeline(
+        spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
+    )
+    await_replay(q, 300)
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 3
+    write_view(build_view(readings.where(~streamed)), view, mode="append")
+
+    beside = sorted(os.listdir(base))
+    assert compact_view(spark, view) > 0
+    assert sorted(os.listdir(base)) == beside
+    parts = [e for e in os.listdir(view) if os.path.isdir(os.path.join(view, e))]
+    assert parts and all(p.startswith("ws_date=") for p in parts), parts
+    for p in parts:
+        files = [f for f in os.listdir(os.path.join(view, p)) if f.endswith(".parquet")]
+        assert len(files) == 1, (p, files)
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = scheduler.nextJobId()
+    stored = read_view(spark, view)
+    assert scheduler.nextJobId() == first_job
+    got = sorted(tuple(r) for r in stored.drop("ws_date").collect())
+    assert got == sorted(tuple(r) for r in build_view(readings).collect())
 
 
 def test_streaming_session_window(spark, sf_dir, readings_rows, tmp_path_factory):
@@ -1035,6 +1072,26 @@ def _job_descriptions(spark, first_job: int) -> list[str]:
         desc = store.job(job_id).description()
         out.append(desc.get() if desc.isDefined() else "")
     return out
+
+
+def test_entry_wrap_applies_the_session_profile(spark, sf_dir):
+    """The driver builds its own session, without the engine profile.
+    A wrapped builder must set every runtime conf ``get_spark`` builds
+    with (the driver-side listing threshold among them) on a session
+    where each one was unset."""
+    import __spark_entry__ as entrymod
+    from kafka_streams_pipeline_spark.session import SESSION_CONFS
+
+    saved = {k: spark.conf.get(k) for k in SESSION_CONFS}
+    try:
+        for k in SESSION_CONFS:
+            spark.conf.unset(k)
+        assert all(spark.conf.get(k, None) is None for k in SESSION_CONFS)
+        entrymod.queries()["q_hourly_view"](spark, sf_dir)
+        assert {k: spark.conf.get(k) for k in SESSION_CONFS} == SESSION_CONFS
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_many_file_batch_lists_on_the_driver(spark, readings_rows, tmp_path):

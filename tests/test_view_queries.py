@@ -133,6 +133,20 @@ def test_history_prefix_generalization(view):
     }
 
 
+def test_history_interval_over_an_empty_store(spark, tmp_path):
+    """A store with no partition directory, as a reader sees the live
+    store while an upsert has deleted its only partition and not yet
+    renamed the rewritten one in: the read has no rows and no max
+    event time, and the default-``to`` history is empty, not an
+    error."""
+    from kafka_streams_pipeline_spark.sources.sinks import read_view
+
+    store = tmp_path / "view"
+    store.mkdir()
+    empty = read_view(spark, str(store))
+    assert history_interval(empty, "avg", ["u155"], "1week").collect() == []
+
+
 def test_history_interval_defaults_to_max_ts(view, duck):
     got = history_interval(view, "sum", ["u155"], "1week").collect()
     exp = duck.execute(
