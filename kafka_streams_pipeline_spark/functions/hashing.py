@@ -31,12 +31,3 @@ def md5_long(col: Column | str) -> Column:
 def md5_long_sql(expr: str) -> str:
     """DuckDB twin of :func:`md5_long`."""
     return f"('0x' || substr(md5({expr}), 1, {HEX_WIDTH}))::BIGINT"
-
-
-def seeded_md5_long(seed: int, col: Column) -> Column:
-    """Family of independent hash functions: md5('<seed>:' || x)."""
-    return md5_long(F.concat(F.lit(f"{seed}:"), col))
-
-
-def seeded_md5_long_sql(seed: int, expr: str) -> str:
-    return md5_long_sql(f"'{seed}:' || {expr}")

@@ -1982,8 +1982,8 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes plus the at-risk flag at k=8 (chosen so the sf0.01 gate
     exercises BOTH flag branches: class sizes there span 5..21).
     One counter-only aggregate shuffle; the k_anonymize enforcement
-    twin (QI suppression via a broadcast class-size join, row count
-    preserved) is pytest-certified. See operators/quality.k_anonymity.
+    twin (QI suppression via a class-size join whose strategy AQE
+    picks at runtime, row count preserved) is pytest-certified. See operators/quality.k_anonymity.
     """
     from kafka_streams_pipeline_spark.operators.quality import k_anonymity
 

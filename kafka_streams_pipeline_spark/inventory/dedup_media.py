@@ -77,8 +77,9 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: duplicate-group clustering — connected components over the
-    MinHash pair graph by iterative min-label propagation; the oracle
-    is a recursive-CTE transitive closure, certifying the fixpoint."""
+    MinHash pair graph (driver union-find under the edge cap, else
+    large-star/small-star); the oracle is a recursive-CTE transitive
+    closure, certifying the fixpoint."""
     return _dedup.dedup_components(_t(spark, sf_dir, "documents"), threshold=0.8)
 
 

@@ -31,6 +31,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -399,17 +401,20 @@ def _minhash_pairs_and_sig(
 
 
 # Edge-count ceiling for the driver-side union-find shortcut in
-# dedup_components(algorithm="auto"). 1M verified edges is ~16 MB
-# collected and <1 s of driver CPU — far below the cost of even one
-# distributed iteration's job-scheduling overhead. Above this, the
-# O(log n) alternating algorithm runs distributed.
+# _closure(algorithm="auto"). 1M verified edges is ~16 MB collected
+# and <1 s of driver CPU — far below the cost of even one distributed
+# iteration's job-scheduling overhead. Above this, the O(log n)
+# alternating algorithm runs distributed.
 SMALL_COMPONENTS_MAX_EDGES = 1_000_000
+
+# Component solvers dedup_components and entity_golden accept.
+COMPONENT_ALGORITHMS = ("auto", "alternating")
 
 
 def _union_find_labels(edge_rows: list) -> list:
     """Driver-side union-find with path compression over a collected
     edge list. Returns (node, comp) tuples with comp = min id of the
-    component — the same fixpoint as the distributed algorithms and
+    component — the same fixpoint as the distributed algorithm and
     the recursive-CTE oracle."""
     parent: dict = {}
 
@@ -434,6 +439,61 @@ def _union_find_labels(edge_rows: list) -> list:
     return [(n, find(n)) for n in sorted(nodes)]
 
 
+def _check_algorithm(algorithm: str) -> None:
+    if algorithm not in COMPONENT_ALGORITHMS:
+        raise ValueError(
+            f"unknown algorithm {algorithm!r}; expected one of "
+            f"{COMPONENT_ALGORITHMS}"
+        )
+
+
+def _closure(
+    pairs: DataFrame,
+    base: DataFrame,
+    key: str,
+    algorithm: str,
+    max_iter: int = 25,
+    release: Callable[[], object] = lambda: None,
+) -> DataFrame:
+    """Transitive closure of the undirected (id_a, id_b) edge set
+    ``pairs``, joined back onto ``base``: ``base`` left-joined on
+    ``key`` to ``comp``, the minimum id of the row's component (null
+    for a row incident to no edge).
+
+    ``"auto"`` probes with limit(cap + 1): ONE job that short-circuits
+    as soon as enough rows arrive. Either the whole (small) edge set
+    lands on the driver for union-find, broadcast back (the dominant
+    cost of a distributed round at small edge counts is job
+    scheduling, not compute — observed 5-7 s for a 256-edge graph vs
+    <0.5 s for collect + union-find + broadcast join-back), or the
+    cap + 1'th row proves the graph is big and the distributed path
+    runs without ever collecting it. ``"alternating"`` skips the probe.
+    The distributed path is large-star/small-star over the edges,
+    checkpointed first so that ``release`` (called once the edges are
+    on the driver or checkpointed) can free the caches the edge plan
+    reads before the rounds start. Both paths reach the min-id
+    fixpoint the recursive-CTE oracles compute."""
+    if algorithm == "auto":
+        probe = pairs.limit(SMALL_COMPONENTS_MAX_EDGES + 1).collect()
+        if len(probe) <= SMALL_COMPONENTS_MAX_EDGES:
+            release()
+            from kafka_streams_pipeline_spark.session import local_rows_df
+
+            id_type = pairs.schema["id_a"].dataType.simpleString()
+            labels = local_rows_df(
+                base.sparkSession,
+                _union_find_labels(probe),
+                f"{key} {id_type}, comp {id_type}",
+            )
+            return base.join(F.broadcast(labels), key, "left")
+    pairs = pairs.localCheckpoint(eager=True)
+    release()
+    labels = connected_components_alternating(pairs, max_iter)
+    return base.join(
+        labels.select(F.col("node").alias(key), "comp"), key, "left"
+    )
+
+
 def dedup_components(
     df: DataFrame,
     text_col: str = "text",
@@ -448,164 +508,34 @@ def dedup_components(
     themselves). The stage after pair generation in a real dedup
     pipeline: keep one representative per component.
 
-    ``algorithm`` picks the component solver over the VERIFIED edge
-    set (which is orders smaller than the corpus by LSH + exact
-    verification — the corpus never iterates):
+    The component solver runs over the VERIFIED edge set (which is
+    orders smaller than the corpus by LSH + exact verification — the
+    corpus never iterates). ``algorithm`` is ``"auto"`` (default:
+    driver union-find when the edge count is at most
+    SMALL_COMPONENTS_MAX_EDGES, in the spirit of AQE's runtime
+    broadcast conversion, else distributed) or ``"alternating"``
+    (always the distributed large-star/small-star solver, O(log n)
+    rounds independent of diameter — the 100 TB path); see
+    :func:`_closure`. Any other value raises ValueError before any
+    Spark job.
 
-    - ``"auto"`` (default): adaptive, in the spirit of AQE's runtime
-      broadcast conversion. The edge count is materialized anyway;
-      when it is at most SMALL_COMPONENTS_MAX_EDGES the edges are
-      collected and solved with driver-side union-find (the dominant
-      cost of a distributed round at small edge counts is job
-      scheduling, not compute — observed 5-7 s for a 256-edge graph
-      vs <0.5 s for collect + union-find + broadcast join-back).
-      Larger graphs fall through to ``"alternating"``.
-    - ``"label"``: iterative min-label propagation (converges within
-      the graph diameter), with automatic fail-over to the
-      alternating algorithm if max_iter is exhausted.
-    - ``"alternating"``: large-star/small-star, O(log n) rounds
-      independent of diameter — the 100 TB path.
-
-    All three reach the same fixpoint; the DuckDB oracle certifies it
+    Both reach the same fixpoint; the DuckDB oracle certifies it
     with a recursive CTE (components_oracle) — connected components
     are not expressible as one SQL query without recursion."""
+    _check_algorithm(algorithm)
     pairs, sig = _minhash_pairs_and_sig(
         df, text_col, threshold, DEFAULT_BUCKET_CAP
     )
-    pairs = pairs.select("id_a", "id_b")
-    if algorithm == "auto":
-        # Probe with limit(cap + 1): ONE job that short-circuits as
-        # soon as enough rows arrive. Either the whole (small) edge
-        # set lands on the driver, or the cap + 1'th row proves the
-        # graph is big and we fall through to the distributed path
-        # without ever collecting it.
-        probe = pairs.limit(SMALL_COMPONENTS_MAX_EDGES + 1).collect()
-        if len(probe) <= SMALL_COMPONENTS_MAX_EDGES:
-            sig.unpersist()
-            rows = _union_find_labels([(r[0], r[1]) for r in probe])
-            id_type = next(
-                f for f in pairs.schema.fields if f.name == "id_a"
-            ).dataType.simpleString()
-            from kafka_streams_pipeline_spark.session import local_rows_df
-
-            connected = local_rows_df(
-                df.sparkSession,
-                rows,
-                f"{id_col} {id_type}, component {id_type}",
-            )
-            return df.select(id_col).join(
-                F.broadcast(connected), id_col, "left"
-            ).select(
-                id_col,
-                F.coalesce(F.col("component"), F.col(id_col)).alias(
-                    "component"
-                ),
-            )
-        pairs = pairs.localCheckpoint(eager=True)
-        sig.unpersist()
-        labels = connected_components_alternating(pairs, max_iter)
-        connected = labels.select(
-            F.col("node").alias(id_col), F.col("comp").alias("component")
-        )
-        return df.select(id_col).join(connected, id_col, "left").select(
-            id_col,
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-        )
-    if algorithm == "alternating":
-        # Diameter-independent path: go straight to large-star/
-        # small-star (O(log n) rounds). Same fixpoint as label
-        # propagation — both are certified by the same recursive-CTE
-        # oracle.
-        labels = connected_components_alternating(pairs, max_iter)
-        sig.unpersist()
-        connected = labels.select(
-            F.col("node").alias(id_col), F.col("comp").alias("component")
-        )
-        return df.select(id_col).join(connected, id_col, "left").select(
-            id_col,
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-        )
-    edges = (
-        pairs.union(pairs.select(F.col("id_b"), F.col("id_a")))
-        .toDF("src", "dst")
-        .persist()
-    )
-    # Iterate ONLY over nodes that appear in an edge — isolated docs
-    # can never change label and join back at the end. Per-round work
-    # therefore tracks the candidate-pair graph, not the corpus.
-    # Initialize each node at min(self, min(neighbors)) — exactly what
-    # the first propagation round would compute, for the cost of one
-    # aggregate over the edge set. Most near-dup components are
-    # single pairs/triangles, so this converges the common case one
-    # full round (join + checkpoint + convergence job) earlier.
-    labels = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.min("dst").alias("nmin"))
-        .select(
-            "node", F.least(F.col("node"), F.col("nmin")).alias("comp")
-        )
-        .localCheckpoint()
-    )
-    n_edges = edges.count()  # materialize once; reused every round
-    # Pairs (hence edges) are materialized now — the signature cache
-    # behind them is dead weight; release it before iterating.
-    sig.unpersist()
-    # Label/neighbor frames are bounded by the candidate-pair graph —
-    # orders smaller than the corpus by LSH construction. Under a few
-    # million edges, broadcast them so each round is map-side (join
-    # stats on cached/iterated frames are too poor for auto-broadcast);
-    # past that, fall back to shuffle joins.
-    hint = F.broadcast if n_edges < 5_000_000 else (lambda d: d)
-    changed = 0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(hint(labels), edges.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("comp").alias("nmin"))
-        )
-        # localCheckpoint: truncates the per-round lineage (plans
-        # otherwise grow linearly and Catalyst re-analysis dominates)
-        # and releases the previous round's blocks instead of
-        # accumulating cached copies across rounds.
-        stepped = (
-            labels.withColumnRenamed("comp", "old_comp")
-            .join(hint(neighbor_min), "node", "left")
-            .select(
-                "node",
-                "old_comp",
-                F.least(
-                    F.col("old_comp"), F.coalesce(F.col("nmin"), F.col("old_comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            stepped.where(F.col("comp") != F.col("old_comp")).limit(1).count()
-        )
-        labels = stepped.select("node", "comp")
-        if changed == 0:
-            break
-    if changed != 0:
-        # Label propagation needs diameter-many rounds, so a deep
-        # near-dup chain can exhaust max_iter. An unconverged labeling
-        # is WRONG (it would disagree with the transitive closure) —
-        # fail over to the alternating large-star/small-star
-        # algorithm, whose round count is O(log n) regardless of
-        # diameter. Same fixpoint, so the answer is unchanged. Feed it
-        # from the persisted edge set — the pairs plan behind it (the
-        # LSH verify join) is no longer cached.
-        labels = connected_components_alternating(
-            edges.where(F.col("src") < F.col("dst")).select(
-                F.col("src").alias("id_a"), F.col("dst").alias("id_b")
-            )
-        )
-    edges.unpersist()
-    connected = labels.select(
-        F.col("node").alias(id_col), F.col("comp").alias("component")
-    )
-    return df.select(id_col).join(connected, id_col, "left").select(
+    return _closure(
+        pairs.select("id_a", "id_b"),
+        df.select(id_col),
         id_col,
-        F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
+        algorithm,
+        max_iter,
+        release=sig.unpersist,
+    ).select(
+        id_col,
+        F.coalesce(F.col("comp"), F.col(id_col)).alias("component"),
     )
 
 
@@ -810,7 +740,6 @@ def simhash_hamming_pairs(
     df: DataFrame,
     text_col: str = "text",
     radius: int = HAMMING_RADIUS,
-    materialize: bool = True,
 ) -> DataFrame:
     """X2: SimHash near-dup JOIN — all pairs within Hamming distance
     ``radius`` over the 64-bit signature, via the multi-index
@@ -838,19 +767,16 @@ def simhash_hamming_pairs(
     matched group pairs ⋈ each side's members (the group-pair hamming
     IS the member-pair hamming, since members share the signature
     exactly). Output is bit-identical to the brute-force scan."""
-    # Materialize only the SMALL shared frame: materialize=False is
-    # the plan-inspection form (no caching there — VERDICT r11
-    # item 5, the cached-frame leak). On the materializing path the
-    # signature+window frame (one row per doc, four longs) is
-    # localCheckpoint-ed once and every downstream leg reads those
-    # blocks; the OUTPUT (pair-sized, ~78× the doc count here) is
-    # returned LAZY so the caller's action computes it straight from
-    # the checkpoint instead of paying a second pair-sized
-    # materialization first (r16 optimization: the old
-    # out.localCheckpoint doubled the output write — 0.8 s of the
-    # 5.4 s total at sf0.1 — purely to own an unpersist; checkpoint
-    # blocks are reaped by the ContextCleaner on GC, no owner
-    # needed).
+    # Materialize only the SMALL shared frame: the signature+window
+    # frame (one row per doc, four longs) is localCheckpoint-ed once
+    # and every downstream leg reads those blocks; the OUTPUT
+    # (pair-sized, ~78× the doc count here) is returned LAZY so the
+    # caller's action computes it straight from the checkpoint instead
+    # of paying a second pair-sized materialization first (r16
+    # optimization: the old out.localCheckpoint doubled the output
+    # write — 0.8 s of the 5.4 s total at sf0.1 — purely to own an
+    # unpersist; checkpoint blocks are reaped by the ContextCleaner on
+    # GC, no owner needed).
     sig = simhash64_signatures(df, text_col)
     grp_w = Window.partitionBy("sim_lo", "sim_hi")
     mem = sig.select(
@@ -858,9 +784,7 @@ def simhash_hamming_pairs(
         "sim_lo",
         "sim_hi",
         F.min("doc_id").over(grp_w).alias("gid"),
-    )
-    if materialize:
-        mem = mem.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     groups = mem.where(F.col("doc_id") == F.col("gid")).select(
         "gid", "sim_lo", "sim_hi"
     )
@@ -1007,7 +931,6 @@ def containment_pairs(
     text_col: str = "text",
     threshold_ppm: int = CONTAIN_THRESHOLD_PPM,
     prefix_ext: int = CONTAIN_PREFIX_EXT,
-    materialize: bool = True,
 ) -> DataFrame:
     """ONE-SIDED near-dup: pairs where the smaller document's shingle
     set is ≥ threshold contained in the other's —
@@ -1049,12 +972,8 @@ def containment_pairs(
     All arithmetic is integer ppm: overlap ≥ ⌈t·n⌉ for integer
     overlap is exactly overlap·10⁶ ≥ t_ppm·n — no float anywhere."""
     sig, _cand, out = _containment_parts(
-        df, text_col, threshold_ppm, prefix_ext, persist=materialize
+        df, text_col, threshold_ppm, prefix_ext
     )
-    if not materialize:
-        # No persist was taken on this path, so nothing to release
-        # (VERDICT r11 item 5 — the cached-frame leak).
-        return out
     out = out.localCheckpoint(eager=True)
     sig.unpersist()
     return out
@@ -1065,21 +984,19 @@ def _containment_parts(
     text_col: str,
     threshold_ppm: int,
     prefix_ext: int = CONTAIN_PREFIX_EXT,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """containment_pairs body, returning (signature frame — persisted
-    iff ``persist``, in which case the CALLER owns the unpersist —
-    distinct candidate pairs pre-verify, verified lazy output) so the
-    sweep can count candidates separately from true pairs — the same
-    diagnostic split as :func:`_prefix_join_parts`."""
+    """containment_pairs body, returning (persisted signature frame —
+    the CALLER owns the unpersist — distinct candidate pairs
+    pre-verify, verified lazy output) so the sweep can count
+    candidates separately from true pairs — the same diagnostic split
+    as :func:`_prefix_join_parts`."""
     sig = (
         df.withColumn("toks", F.split(F.col(text_col), " "))
         .where(F.expr("size(toks)") >= SHINGLE_N)
         .withColumn("shh", F.expr(spark_hashed_shingles_expr("toks")))
         .select("doc_id", "shh")
+        .persist()
     )
-    if persist:
-        sig = sig.persist()
     inv = sig.select("doc_id", F.explode("shh").alias("shingle"))
     freq = inv.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("dfreq")
@@ -1550,7 +1467,7 @@ def edit_distance_pairs_oracle(
 
 def prefix_jaccard_join(
     df: DataFrame, text_col: str = "text", threshold_num: int = 4,
-    threshold_den: int = 5, materialize: bool = True,
+    threshold_den: int = 5,
 ) -> DataFrame:
     """X2 exact-at-scale alternative to LSH: the prefix-filter
     similarity join (Chaudhuri et al. 2006 SSJoin / Xiao et al. 2008
@@ -1578,15 +1495,10 @@ def prefix_jaccard_join(
     rarest-first order). Frequent-shingle skew therefore prunes
     itself — the opposite of the LSH bucket-cap trade."""
     sig, _cand, out = _prefix_join_parts(
-        df, text_col, threshold_num, threshold_den, persist=materialize,
+        df, text_col, threshold_num, threshold_den
     )
     # Materialize the (candidate-bounded) result so the signature
     # cache is released on return rather than pinned for the session.
-    # materialize=False returns the lazy plan (plan-contract tests
-    # inspect the candidate join shape, which a checkpoint would hide)
-    # and takes no persist, so there is nothing to release.
-    if not materialize:
-        return out
     out = out.localCheckpoint(eager=True)
     sig.unpersist()
     return out
@@ -1597,11 +1509,9 @@ def _prefix_join_parts(
     text_col: str,
     threshold_num: int,
     threshold_den: int,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """prefix_jaccard_join body, returning (signature frame — persisted
-    iff ``persist``, in which case the CALLER owns the unpersist —
-    candidate pairs pre-verify, verified lazy output) so the sweep's
+    """prefix_jaccard_join body, returning (persisted signature frame —
+    the CALLER owns the unpersist — candidate pairs pre-verify, verified lazy output) so the sweep's
     scaling diagnostics can count candidates separately from true
     pairs (VERDICT r6 item 6) without duplicating the construction."""
     # The signature subplan feeds FOUR consumers (document-frequency
@@ -1623,9 +1533,8 @@ def _prefix_join_parts(
         .where(F.expr("size(toks)") >= SHINGLE_N)
         .withColumn("shh", F.expr(spark_xxh_shingles_expr("toks")))
         .select("doc_id", "shh")
+        .persist()
     )
-    if persist:
-        sig = sig.persist()
     inv = sig.select("doc_id", F.explode("shh").alias("shingle"))
     freq = inv.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("dfreq")
@@ -1655,19 +1564,16 @@ def _prefix_join_parts(
             "pos", "shingle"
         ),
     )
-    if persist:
-        # Both sides of the candidate self-join (and, through it,
-        # the verify stage) consume `prefixes`; left lazy, the
-        # executed plan re-derives the explode→dfreq→collect_list
-        # chain once per consumer — measured 12 InMemoryTableScans
-        # of the signature cache for one q_dedup_prefix_join run at
-        # sf0.1, because the sf-small broadcast joins replicate the
-        # subtree instead of reusing an exchange. One eager
-        # localCheckpoint of this narrow (doc_id, n_sh, pos,
-        # shingle) frame caps the chain at a single computation at
-        # every scale; persist=False keeps the fully lazy plan the
-        # plan-contract tests inspect.
-        prefixes = prefixes.localCheckpoint(eager=True)
+    # Both sides of the candidate self-join (and, through it, the
+    # verify stage) consume `prefixes`; left lazy, the executed plan
+    # re-derives the explode→dfreq→collect_list chain once per
+    # consumer — measured 12 InMemoryTableScans of the signature
+    # cache for one q_dedup_prefix_join run at sf0.1, because the
+    # sf-small broadcast joins replicate the subtree instead of
+    # reusing an exchange. One eager localCheckpoint of this narrow
+    # (doc_id, n_sh, pos, shingle) frame caps the chain at a single
+    # computation at every scale.
+    prefixes = prefixes.localCheckpoint(eager=True)
     a, b = prefixes.alias("a"), prefixes.alias("b")
     num, den = threshold_num, threshold_den
     # Candidate pruning (PPJoin, Xiao et al. 2008 — both filters only
@@ -1827,7 +1733,6 @@ def duplicated_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = SPAN_N,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Span-level EXACT substring dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"):
@@ -1848,11 +1753,9 @@ def duplicated_spans(
     [s..e] of gram starts covers tokens [s, e+n-1], i.e.
     span_len = e-s+n. All arithmetic is integer positions and the
     gram equality is string-exact, so the DuckDB twin hash-matches
-    bit-for-bit. ``skew_safe=True`` switches to the map-side-partial
-    + AQE-splittable join form for corpora with degenerate
-    boilerplate grams (the window form strands each gram's
-    occurrences on one task; equality of both forms is pinned by
-    pytest).
+    bit-for-bit. The window form strands each gram's occurrences on
+    one task, so a corpus with genuinely degenerate hot grams
+    (10^9-occurrence boilerplate) makes that task the straggler.
 
     100 TB posture: the gram shuffles dominate and ship
     (doc_id, pos, gram); the standard refinement at scale shuffles
@@ -1867,30 +1770,13 @@ def duplicated_spans(
     ingestion/KafkaStreamsAggregator.java keys state by record,
     never by region)."""
     grams = positional_grams(df, text_col, id_col, n)
-    if skew_safe:
-        # groupBy + join-back: map-side partial counts collapse a
-        # boilerplate gram's occurrences before the shuffle and the
-        # verify join is AQE-skew-splittable — but the gram stream
-        # is computed AND shuffled twice, measured 3-7× slower than
-        # the window form at every sweep multiplier on this corpus.
-        # The knob exists for corpora with genuinely degenerate hot
-        # grams (10^9-occurrence boilerplate), where the window
-        # form's one-task-per-gram grouping becomes the straggler.
-        dup_grams = (
-            grams.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") > 1)
-            .select("gram")
+    dup = (
+        grams.withColumn(
+            "cnt", F.count(F.lit(1)).over(Window.partitionBy("gram"))
         )
-        dup = grams.join(dup_grams, "gram").select("doc_id", "pos")
-    else:
-        dup = (
-            grams.withColumn(
-                "cnt", F.count(F.lit(1)).over(Window.partitionBy("gram"))
-            )
-            .where(F.col("cnt") > 1)
-            .select("doc_id", "pos")
-        )
+        .where(F.col("cnt") > 1)
+        .select("doc_id", "pos")
+    )
     return positions_to_spans(dup, n)
 
 
@@ -2089,48 +1975,20 @@ def entity_golden(
 
     Scale shape: the pair graph lives INSIDE blocks (record linkage's
     blocking guarantee bounds both edge count and component
-    diameter), so closure uses the same adaptive small-graph path as
+    diameter), so closure is the same :func:`_closure` as
     dedup_components — collected union-find with the min-id fixpoint,
-    broadcast back; at edge counts beyond the driver cap the
-    alternating large-star/small-star solver substitutes with the
-    identical fixpoint (certified against the same recursive-CTE
-    oracle shape)."""
-    if algorithm not in ("auto", "alternating"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
+    broadcast back; at edge counts beyond the driver cap, or with
+    ``algorithm="alternating"``, the large-star/small-star solver
+    substitutes with the identical fixpoint (certified against the
+    same recursive-CTE oracle shape). Any other ``algorithm`` raises
+    ValueError before any Spark job."""
+    _check_algorithm(algorithm)
     pairs = record_linkage_pairs(
         df, id_col, name_col, block_col,
         prefix_len=prefix_len, max_edit=max_edit,
     ).select("id_a", "id_b")
-    spark = df.sparkSession
     base = df.select(F.col(id_col).cast("long").alias("id"))
-    # same adaptive probe as dedup_components: one short-circuiting
-    # limit() job either lands the whole (small) edge set on the
-    # driver for union-find, or proves the graph is big and the
-    # alternating large-star/small-star solver runs distributed —
-    # both converge to the identical min-id fixpoint the oracle CTE
-    # computes. algorithm="alternating" skips the probe entirely and
-    # forces the distributed branch (its own driver row, VERDICT r13
-    # item 7, mirroring q_dedup_components_alt).
-    small_graph = False
-    probe: list = []
-    if algorithm != "alternating":
-        probe = pairs.limit(SMALL_COMPONENTS_MAX_EDGES + 1).collect()
-        small_graph = len(probe) <= SMALL_COMPONENTS_MAX_EDGES
-    if small_graph:
-        labels = _union_find_labels([(r[0], r[1]) for r in probe])
-        if labels:
-            from kafka_streams_pipeline_spark.session import local_rows_df
-
-            lab = local_rows_df(spark, labels, "id long, comp long")
-            out = base.join(F.broadcast(lab), "id", "left")
-        else:
-            out = base.withColumn("comp", F.lit(None).cast("long"))
-    else:
-        lab = connected_components_alternating(
-            pairs.localCheckpoint(eager=True)
-        ).select(F.col("node").alias("id"), F.col("comp"))
-        out = base.join(lab, "id", "left")
-    return out.select(
+    return _closure(pairs, base, "id", algorithm).select(
         "id",
         F.coalesce(F.col("comp"), F.col("id")).alias("entity_id"),
     ).withColumn(

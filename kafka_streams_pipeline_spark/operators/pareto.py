@@ -66,35 +66,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_streams_pipeline_spark.session import CacheHandoff
+
 N_BUCKETS = 256
 
-# Frames persisted by the PREVIOUS skyline_2d call, released at the
-# next call's entry (r14 review): the returned frame is lazy, so the
-# bucketized cache cannot be unpersisted before the caller executes
-# it — this self-cleaning handoff bounds the session to ONE call's
-# cached frames instead of accumulating one per build (the round-2
+# The bucketized frame the LAST skyline_2d call persisted; without
+# the handoff every build would pin one more copy (the round-2
 # eviction-thrash failure mode bench.py documents).
-_PREV_CACHED: list = []
-
-
-def _release_previous() -> None:
-    while _PREV_CACHED:
-        try:
-            _PREV_CACHED.pop().unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-
-
-def release() -> None:
-    """Release the caches pinned by the LAST skyline_2d call.
-
-    The next-call handoff alone leaks the final call's pins for the
-    session's lifetime (VERDICT r14 item 5) — a long-lived session
-    that builds one skyline holds its bucketized frame's blocks
-    forever. Call after the returned frame has been materialized;
-    the frame stays valid (Spark recomputes from lineage if read
-    again), only the pinned blocks are freed."""
-    _release_previous()
+_CACHED = CacheHandoff()
+#: Release the caches pinned by the last skyline_2d call.
+release = _CACHED.release
 
 
 def _band_edges(base: DataFrame, n_buckets: int) -> list[int]:
@@ -152,7 +133,7 @@ def skyline_2d(
     already non-member/non-dominating implicitly via the NULL-
     propagating score filter and the NULL-skipping window max, the
     explicit filter makes it one rule, mirrored in the oracle)."""
-    _release_previous()
+    release()
     base = df.select(
         F.col(key_col).cast("long").alias("key"),
         F.col(x_col).cast("long").alias("x"),
@@ -177,8 +158,7 @@ def skyline_2d(
     # persist the BUCKETIZED frame: the O(n_buckets)-per-row edge
     # fold would otherwise run again in the scoring pass; released
     # at the NEXT call (the returned frame reads it lazily)
-    b = _bucketize(base, edges).persist()
-    _PREV_CACHED.append(b)
+    b = _CACHED.keep(_bucketize(base, edges).persist())
 
     # cross-band carry: for bucket k, the max y over all buckets < k
     # (every row there has strictly smaller x by construction)

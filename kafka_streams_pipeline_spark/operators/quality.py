@@ -416,7 +416,6 @@ def k_anonymize(
     df: DataFrame,
     quasi_cols: list[str],
     k: int = K_ANON_DEFAULT,
-    force_broadcast: bool = False,
 ) -> DataFrame:
     """ENFORCE k-anonymity by suppression: rows whose QI class has
     fewer than ``k`` members get every quasi-identifier column
@@ -427,16 +426,14 @@ def k_anonymize(
     dropping rare classes would bias the survivors).
 
     Plan: the class-size aggregate joins back onto the rows; each QI
-    column becomes CASE WHEN size < k THEN NULL. By default NO
-    broadcast hint is planted: the size frame is class-count-sized,
-    which for a near-unique QI combination is row-count-sized, and
-    an unconditional broadcast there is an executor OOM at 100 TB.
+    column becomes CASE WHEN size < k THEN NULL. NO broadcast hint
+    is planted: the size frame is class-count-sized, which for a
+    near-unique QI combination is row-count-sized, and an
+    unconditional broadcast there is an executor OOM at 100 TB.
     AQE decides at runtime from the aggregate's actual output size —
     broadcast when classes are few (the common audit case), shuffle
     join when the QI is near-unique — with zero extra scan, which a
-    driver-side size probe would cost. ``force_broadcast=True``
-    plants the hint for a KNOWN-low-cardinality QI where skipping
-    AQE's stats round-trip matters."""
+    driver-side size probe would cost."""
     # the size frame derives from df itself — rename its QI columns
     # so the join condition can never be ambiguous (self-join
     # column-lineage hazard)
@@ -448,8 +445,6 @@ def k_anonymize(
             "__class_size",
         )
     )
-    if force_broadcast:
-        sizes = F.broadcast(sizes)
     joined = df.join(
         sizes,
         on=[

@@ -43,16 +43,13 @@ from pyspark.sql import functions as F
 
 from kafka_streams_pipeline_spark import geo
 from kafka_streams_pipeline_spark.plans.validation import (
+    AGGREGATE_OPS,
     validate_aggregate_op,
     validate_geohashes,
     validate_interval,
     validate_precision,
     validate_time_range,
 )
-
-# querying/util/AppConfig.java:7-8
-AGGREGATE_OPS = ("count", "sum", "avg")
-INTERVALS = ("1day", "1week", "1month", "all")
 
 # Calendar arithmetic of querying/QueryingController.java:220-238:
 # 1day → -1 DAY, 1week → -7 DAY, 1month → -1 MONTH, all → -30 YEAR.

@@ -22,6 +22,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_pipeline_spark.session import CacheHandoff
+
 NUM_PLANES = 4  # 2^4 = 16 buckets
 
 
@@ -1881,7 +1883,6 @@ def rrf_fusion(
     k_each: int = 50,
     k: int = 10,
     rrf_k: int = 60,
-    materialize: bool = True,
 ) -> DataFrame:
     """Hybrid lexical+dense retrieval via reciprocal-rank fusion
     (Cormack, Clarke & Buettcher, SIGIR'09 — public literature): fuse
@@ -1906,7 +1907,7 @@ def rrf_fusion(
 
     from kafka_streams_pipeline_spark.operators.text import bm25_topk
 
-    b = bm25_topk(docs, k=k_each, materialize=materialize).select(
+    b = bm25_topk(docs, k=k_each).select(
         F.col("doc_id").alias("b_id"), F.col("rank").alias("b_rank")
     )
     cw = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
@@ -2092,34 +2093,14 @@ COSINE_PAIRS_DF_CAP = 100_000
 COSINE_PAIRS_TAU = (1, 2)
 COSINE_SHINGLE_W = 3
 
-# Frames persisted by the PREVIOUS cosine_pairs call, released at the
-# next call's entry (r14 review): the returned frame is lazy, so the
-# postings caches cannot be unpersisted before the caller executes it
-# — this self-cleaning handoff bounds the session to ONE call's
-# cached frames instead of pinning another corpus-postings copy per
-# build (q_cosine_pairs is NOT gated by MATERIALIZING, so the REST
-# registry surface may build it repeatedly).
-_PREV_CACHED: list = []
-
-
-def _release_previous() -> None:
-    while _PREV_CACHED:
-        try:
-            _PREV_CACHED.pop().unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-
-
-def release() -> None:
-    """Release the caches pinned by the LAST cosine_pairs call.
-
-    The next-call handoff alone leaks the final call's pins for the
-    session's lifetime (VERDICT r14 item 5) — a long-lived session
-    that builds one pair set holds the tf/postings blocks forever.
-    Call after the returned frame has been materialized; the frame
-    stays valid (Spark recomputes from lineage if read again), only
-    the pinned blocks are freed."""
-    _release_previous()
+# Frames the LAST cosine_pairs / tfidf_pairs_from_postings call persisted:
+# the postings caches behind its lazy result. q_cosine_pairs is NOT
+# gated by MATERIALIZING, so the REST registry surface may build it
+# repeatedly; without the handoff every build pins another
+# corpus-postings copy.
+_CACHED = CacheHandoff()
+#: Release the caches pinned by the last cosine_pairs call.
+release = _CACHED.release
 
 
 def _max_n2(tau: tuple[int, int]) -> int:
@@ -2283,15 +2264,14 @@ def cosine_pairs(
     — dot fits BIGINT.
     """
     p, q = tau
-    _release_previous()
+    release()
     docs = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
     )
     if collapse_identical:
         grouped = docs.withColumn("g", F.md5(F.lower(F.col("_text"))))
-        members = grouped.select("doc_id", "g").persist()
-        _PREV_CACHED.append(members)
-        reps = (
+        members = _CACHED.keep(grouped.select("doc_id", "g").persist())
+        reps = _CACHED.keep(
             members.groupBy("g")
             .agg(
                 F.min("doc_id").alias("rep"),
@@ -2299,7 +2279,6 @@ def cosine_pairs(
             )
             .persist()
         )
-        _PREV_CACHED.append(reps)
         base = (
             grouped.join(reps, "g")
             .where(F.col("doc_id") == F.col("rep"))
@@ -2308,8 +2287,7 @@ def cosine_pairs(
     else:
         base = docs.withColumn("n_members", F.lit(1).cast("long"))
 
-    tf = _shingle_tf(base, "_text", "doc_id").persist()
-    _PREV_CACHED.append(tf)
+    tf = _CACHED.keep(_shingle_tf(base, "_text", "doc_id").persist())
     # df counts every MEMBER document containing the shingle (exact
     # copies contain exactly their rep's shingles), so weights match
     # the direct form bit-for-bit
@@ -2318,8 +2296,7 @@ def cosine_pairs(
         .groupBy("term")
         .agg(F.sum("n_members").cast("long").alias("df"))
     )
-    w_all = _rarity_weights(tf, dfx, df_cap).persist()
-    _PREV_CACHED.append(w_all)
+    w_all = _CACHED.keep(_rarity_weights(tf, dfx, df_cap).persist())
     # overlong-doc guard + inverted-index join + integer gate: the
     # shared spine (_gated_pairs_and_norms) — identical for the
     # epoch-refresh path and mirrored in the DuckDB oracle
@@ -2486,12 +2463,11 @@ def tfidf_pairs_from_postings(
     tf·10⁶ div df, the overlong-norm guard, the pure-integer
     DECIMAL(38,0) gate), so a final-epoch refresh hash-matches the
     SAME DuckDB oracle as the batch row."""
-    _release_previous()
+    release()
     dfx = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df")
     )
-    w_all = _rarity_weights(tf, dfx, df_cap).persist()
-    _PREV_CACHED.append(w_all)
+    w_all = _CACHED.keep(_rarity_weights(tf, dfx, df_cap).persist())
     survivors, _norms = _gated_pairs_and_norms(w_all, tau)
     return survivors.select("doc_a", "doc_b", "dot")
 

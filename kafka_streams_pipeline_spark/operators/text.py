@@ -1316,7 +1316,6 @@ def bm25_topk(
     terms: tuple[str, ...] = BM25_TERMS,
     k: int = 25,
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """X5 (retrieval scoring): Okapi BM25 top-k over the corpus for a
     fixed query term set (Robertson & Spärck Jones, public
@@ -1362,11 +1361,7 @@ def bm25_topk(
     # projection; left lazy it runs twice per query. Materialize the
     # narrow (doc_id, dl, tf_*) frame once — ~50 bytes/doc vs
     # re-splitting every document's text a second time.
-    # ``materialize=False`` keeps the whole plan lazy (no Spark jobs
-    # launched during DataFrame construction) for plan inspection and
-    # composition without execution.
-    if materialize:
-        base = base.localCheckpoint(eager=True)
+    base = base.localCheckpoint(eager=True)
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("total"),

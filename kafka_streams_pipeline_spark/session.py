@@ -132,3 +132,29 @@ def local_rows_df(spark: SparkSession, rows, schema):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, slices), schema
     )
+
+
+class CacheHandoff:
+    """Frames an operator persisted for the lazy frame it returned.
+
+    The returned frame reads these caches when the caller executes
+    it, so the operator cannot unpersist them before returning.
+    Instead it ``keep``s each one and calls ``release`` at its next
+    call's entry, which bounds the session to ONE call's cached
+    frames. The caller may also ``release`` once it has materialized
+    the result: the frame stays valid (Spark recomputes from lineage
+    if it is read again), only the pinned blocks are freed."""
+
+    def __init__(self) -> None:
+        self._frames: list = []
+
+    def keep(self, frame):
+        self._frames.append(frame)
+        return frame
+
+    def release(self) -> None:
+        while self._frames:
+            try:
+                self._frames.pop().unpersist()
+            except Exception:  # session already stopped — nothing to free
+                pass

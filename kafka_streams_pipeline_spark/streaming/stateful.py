@@ -850,106 +850,3 @@ def gap_user_state(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-# --- transformWithState port of the gap census (round 15) ---------------
-#
-# Spark 4's transformWithStateInPandas (SPARK-49564) is the successor
-# API to applyInPandasWithState: named state variables on a
-# StatefulProcessorHandle instead of one opaque tuple, timers, and a
-# RocksDB-only state store. VERDICT r14 item 6 asks for one certified
-# row on it; this box's Python environment lacks the `protobuf`
-# package the TWS Python driver worker requires (probe recorded in
-# NOTES_r15: TransformWithStateInPySpark init dies with
-# "ImportError: cannot import name 'descriptor' from
-# 'google.protobuf'", installs prohibited), so the port ships
-# environment-gated exactly like the S1 live-broker leg: the
-# processor and wiring are complete, `tws_available()` probes the
-# missing dependency, and tests/test_tws_parity.py asserts bit-exact
-# parity with gap_user_state whenever the environment can run it.
-
-
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can actually run here:
-    its driver worker imports google.protobuf before any user code
-    (pyspark/sql/streaming/transform_with_state_driver_worker.py)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def gap_user_state_tws(
-    events: DataFrame, threshold_us: int = 36 * 3_600_000_000
-) -> DataFrame:
-    """The gap census of gap_user_state, ported to
-    transformWithStateInPandas — identical fold, identical
-    emissions, so the two APIs are interchangeable row-for-row (the
-    opt-in parity test pins it). Requires the RocksDB state-store
-    provider (a hard transformWithState requirement, cf.
-    streaming/pipeline.ROCKSDB_PROVIDER) and a protobuf-capable
-    Python environment (tws_available)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    threshold = int(threshold_us)
-
-    class GapCensusProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # one named ValueState holding the same 7-field census
-            # tuple applyInPandasWithState kept as its opaque state
-            self._census = handle.getValueState("census", GAPS_STATE)
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            st = self._census.get() if self._census.exists() else None
-            if st is not None:
-                last_us, last_id, n, n_gaps, max_gap, gap_total, opens = (
-                    int(v) if v is not None else None for v in st
-                )
-            else:
-                last_us = last_id = opens = None
-                n = n_gaps = max_gap = gap_total = 0
-            for pdf in rows:
-                srt = pdf.sort_values(["us", "event_id"])
-                for us, eid in zip(srt["us"], srt["event_id"]):
-                    us, eid = int(us), int(eid)
-                    if last_us is not None:
-                        gap = us - last_us
-                        if gap > threshold:
-                            n_gaps += 1
-                            gap_total += gap
-                            if gap > max_gap:
-                                max_gap, opens = gap, last_id
-                            elif gap == max_gap and last_id < opens:
-                                opens = last_id
-                    last_us, last_id = us, eid
-                    n += 1
-            self._census.update(
-                (last_us, last_id, n, n_gaps, max_gap, gap_total, opens)
-            )
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])],
-                    "n_samples": [n],
-                    "n_gaps": [n_gaps],
-                    "max_gap_us": [max_gap if n_gaps else None],
-                    "gap_us_total": [gap_total],
-                    "longest_gap_opens_id": [opens],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        GapCensusProcessor(),
-        GAPS_OUTPUT,
-        "update",
-        "none",
-    )

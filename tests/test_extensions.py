@@ -443,24 +443,10 @@ def test_alternating_components_mixed_graph(spark):
                    50: 50, 51: 50, 52: 50, 7: 7, 99: 7, 3: 3, 5: 3}
 
 
-def test_dedup_components_fails_over_to_alternating(docs):
-    """With max_iter too small for label propagation to converge, the
-    operator must fail over to the alternating algorithm and still
-    return the exact transitive-closure labels."""
-    sample = docs.limit(120)
-    want = {r.doc_id: r.component
-            for r in dedup.dedup_components(
-                sample, max_iter=25, algorithm="label").collect()}
-    got = {r.doc_id: r.component
-           for r in dedup.dedup_components(
-               sample, max_iter=1, algorithm="label").collect()}
-    assert got == want
-
-
 def test_dedup_components_algorithms_agree(docs):
-    """auto (driver union-find shortcut), label propagation, and
-    alternating large-star/small-star must reach the identical
-    fixpoint on the same corpus."""
+    """auto (driver union-find shortcut) and alternating
+    large-star/small-star must reach the identical fixpoint on the
+    same corpus."""
     sample = docs.limit(200)
     results = {
         algo: {
@@ -469,9 +455,26 @@ def test_dedup_components_algorithms_agree(docs):
                 sample, algorithm=algo
             ).collect()
         }
-        for algo in ("auto", "label", "alternating")
+        for algo in ("auto", "alternating")
     }
-    assert results["auto"] == results["label"] == results["alternating"]
+    assert results["auto"] == results["alternating"]
+
+
+def test_component_solvers_reject_unknown_algorithm(spark, docs):
+    """dedup_components and entity_golden accept exactly "auto" and
+    "alternating"; any other solver name raises ValueError before a
+    Spark job runs."""
+    customers = spark.createDataFrame(
+        [(10, "Customer#000000011", 7, "AUTO")],
+        "c_custkey long, c_name string, c_nationkey int, c_mktsegment string",
+    )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = scheduler.nextJobId()
+    with pytest.raises(ValueError, match="label"):
+        dedup.dedup_components(docs, algorithm="label")
+    with pytest.raises(ValueError, match="'x'"):
+        dedup.entity_golden(customers, algorithm="x")
+    assert scheduler.nextJobId() == first_job
 
 
 def test_union_find_labels_min_root():
@@ -2773,28 +2776,6 @@ def test_token_cooccurrence_window_and_normalization(spark):
     # pairs at window 2 over [a,b,c,a]: (1,2)=a b, (1,3)=a c,
     # (2,3)=b c, (2,4)=a b (normalized), (3,4)=a c; plus doc 2's x y
     assert got == {"a b": 2, "a c": 2, "b c": 1, "x y": 1}
-
-
-def test_duplicated_spans_skew_safe_form_identical(spark):
-    """skew_safe=True (map-side-partial + AQE-splittable join) must
-    produce the identical span set as the default window form — the
-    knob trades plan shape for hot-gram robustness, never results."""
-    from kafka_streams_pipeline_spark.operators.dedup import (
-        duplicated_spans,
-    )
-
-    shared = " ".join(f"s{i}" for i in range(10))
-    docs = spark.createDataFrame(
-        [
-            (1, "a1 a2 a3 " + shared + " a4 a5"),
-            (2, shared + " b1 b2 b3 b4 b5 b6"),
-            (3, " ".join(["h1 h2 h3 h4 h5 h6 h7 h8"] * 4)),  # hot gram
-        ],
-        "doc_id long, text string",
-    )
-    fast = sorted(map(tuple, duplicated_spans(docs).collect()))
-    safe = sorted(map(tuple, duplicated_spans(docs, skew_safe=True).collect()))
-    assert fast == safe and len(fast) >= 3
 
 
 def test_skyline_degenerate_single_price(spark):

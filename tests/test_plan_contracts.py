@@ -89,14 +89,15 @@ def test_prefix_join_candidates_are_equijoin_not_cartesian(spark, sf_dir):
     from kafka_streams_pipeline_spark.operators import dedup
     from kafka_streams_pipeline_spark.sources.tables import load_table
 
-    df = dedup.prefix_jaccard_join(
-        load_table(spark, sf_dir, "documents"), materialize=False
+    sig, cand, _out = dedup._prefix_join_parts(
+        load_table(spark, sf_dir, "documents"), "text", 4, 5
     )
-    je = df._jdf.queryExecution()
+    je = cand._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     plan = je.explainString(mode)
+    sig.unpersist()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the candidate self-join keys on the shingle column (hash join —
@@ -536,7 +537,7 @@ def test_hamming_candidate_join_is_equijoin(spark, sf_dir):
     from kafka_streams_pipeline_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    out = simhash_hamming_pairs(docs, materialize=False)
+    out = simhash_hamming_pairs(docs)
     je = out._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -602,23 +603,23 @@ def test_sensor_scorecard_is_single_pass(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
 
 
-def test_inspection_path_takes_no_persist(spark, sf_dir):
-    """VERDICT r11 item 5: the materialize=False plan-inspection form
-    of the pair-join operators must not persist() anything — with no
-    materializing branch to unpersist, a cache taken there is pinned
-    for the session (a slow bleed if the inspection form runs in a
-    loop). CacheManager registers a persist() at call time, so an
-    empty cache after building AND executing the lazy plans proves
-    no cache was taken."""
+def test_pair_joins_leave_no_cache_behind(spark, sf_dir):
+    """The three public pair joins persist intermediates while they
+    build, and each releases them itself: simhash_hamming_pairs keeps
+    only a localCheckpoint, containment_pairs and prefix_jaccard_join
+    unpersist their signature cache once their checkpointed output is
+    written. A cache left registered would stay pinned for the
+    session, so the CacheManager must be empty after building AND
+    executing all three."""
     from kafka_streams_pipeline_spark.operators import dedup
     from kafka_streams_pipeline_spark.sources.tables import load_table
 
     spark.catalog.clearCache()
     docs = load_table(spark, sf_dir, "documents")
     for frame in (
-        dedup.simhash_hamming_pairs(docs, materialize=False),
-        dedup.containment_pairs(docs, materialize=False),
-        dedup.prefix_jaccard_join(docs, materialize=False),
+        dedup.simhash_hamming_pairs(docs),
+        dedup.containment_pairs(docs),
+        dedup.prefix_jaccard_join(docs),
     ):
         frame.count()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -699,9 +700,9 @@ def test_skyline_windows_stay_band_partitioned(spark, sf_dir):
 
 
 def test_span_dedup_plan_has_no_join(spark, sf_dir):
-    """The default span-dedup form is ONE gram-window shuffle + the
-    island pass — no join anywhere (the skew_safe join-back variant
-    is opt-in precisely because it doubles the gram computation)."""
+    """Span dedup is ONE gram-window shuffle + the island pass — no
+    join anywhere (a count-and-join-back form would compute and
+    shuffle the gram stream twice)."""
     plan = _plan(spark, sf_dir, "q_span_dedup")
     for node in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
                  "CartesianProduct", "BroadcastNestedLoop"):

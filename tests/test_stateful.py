@@ -5,13 +5,12 @@ latch must persist across batches via state.
 
 from __future__ import annotations
 
-import json
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_streams_pipeline_spark.inventory._shared import _write_chunks
 from kafka_streams_pipeline_spark.schema import READING_SCHEMA
 from kafka_streams_pipeline_spark.streaming.pipeline import await_replay
 from kafka_streams_pipeline_spark.sources.readings import readings_from_events
@@ -29,19 +28,7 @@ def reading_stream_dir(spark, sf_dir, tmp_path_factory):
         key=lambda r: r["timestamp"],
     )
     src = str(tmp_path_factory.mktemp("stateful") / "src")
-    os.makedirs(src)
-    # ascending mtimes: file-stream replay order is MODIFICATION-TIME
-    # order and back-to-back writes tie (round-6 learning) — an
-    # arbitrary tie-break replays chunks out of order, which flips
-    # the order-sensitive ops (TWA spans; the r12 "lost name" flake
-    # was exactly this, finally caught by junitxml in r13)
-    mtime0 = time.time() - 86_400
-    for c in range(3):
-        path = os.path.join(src, f"chunk{c}.json")
-        with open(path, "w") as f:
-            for r in rows[c * 334 : (c + 1) * 334]:
-                f.write(json.dumps(r.asDict()) + "\n")
-        os.utime(path, (mtime0 + c, mtime0 + c))
+    _write_chunks(src, [rows[c * 334 : (c + 1) * 334] for c in range(3)])
     return src
 
 
@@ -304,21 +291,7 @@ def test_running_totals_survive_restart(spark, sf_dir, tmp_path):
     )
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
     third = len(rows) // 3
-
-    mtime0 = time.time() - 86_400
-
-    def write_chunk(name, chunk_rows):
-        path = os.path.join(src, name)
-        with open(path, "w") as f:
-            for r in chunk_rows:
-                f.write(json.dumps(r.asDict()) + "\n")
-        # ascending mtimes so the replay order is deterministic even
-        # for back-to-back writes (round-6 learning); totals are
-        # order-insensitive, but the harness shouldn't rely on that
-        off = int(name.removeprefix("chunk").removesuffix(".json"))
-        os.utime(path, (mtime0 + off, mtime0 + off))
 
     batches: list = []
 
@@ -341,10 +314,9 @@ def test_running_totals_survive_restart(spark, sf_dir, tmp_path):
         )
         await_replay(q, 300)
 
-    write_chunk("chunk0.json", rows[:third])
+    _write_chunks(src, [rows[:third]])
     run_once()  # first incarnation: one chunk
-    write_chunk("chunk1.json", rows[third : 2 * third])
-    write_chunk("chunk2.json", rows[2 * third :])
+    _write_chunks(src, [rows[third : 2 * third], rows[2 * third :]])
     run_once()  # restart: resumes from checkpoint, sees only new files
 
     final = _latest_per_key(batches, "sensorId")
@@ -447,14 +419,11 @@ def test_streaming_histogram_matches_batch_sketch(spark, sf_dir):
 
     # applyInPandasWithState does not run in batch mode; replay
     # through a 3-chunk temp stream and take last emission per key
-    import json
     import os
     import tempfile
-    import time
 
     base = tempfile.mkdtemp(prefix="hist-tie-")
     src = os.path.join(base, "src")
-    os.makedirs(src)
     data = sorted(
         (r.asDict() for r in readings.select(
             "timestamp", "sensorId", "geohash", "tempVal", "tempUnit"
@@ -462,13 +431,10 @@ def test_streaming_histogram_matches_batch_sketch(spark, sf_dir):
         key=lambda r: (r["timestamp"], r["sensorId"]),
     )
     third = max(1, len(data) // 3)
-    m0 = time.time() - 86_400
-    for i in range(3):
-        p = os.path.join(src, f"c{i}.json")
-        with open(p, "w") as f:
-            for r in data[i * third : (i + 1) * third if i < 2 else len(data)]:
-                f.write(json.dumps(r) + "\n")
-        os.utime(p, (m0 + i, m0 + i))
+    _write_chunks(src, [
+        data[i * third : (i + 1) * third if i < 2 else len(data)]
+        for i in range(3)
+    ])
     from kafka_streams_pipeline_spark.schema import READING_SCHEMA
 
     stream = (
@@ -622,10 +588,6 @@ def test_funnel_state_matches_batch_across_boundaries(spark, tmp_path):
     micro-batch boundaries (start in chunk 0, middle step in chunk 1,
     completion in chunk 2), plus an over-budget chain and an
     eviction-era start."""
-    import json as _json
-    import os
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from kafka_streams_pipeline_spark.operators.timeseries import (
@@ -655,16 +617,9 @@ def test_funnel_state_matches_batch_across_boundaries(spark, tmp_path):
     ]
     rows.sort(key=lambda r: (r["us"], r["event_id"]))
     src = str(tmp_path / "src")
-    os.makedirs(src)
     n_chunks = 3
     per = (len(rows) + n_chunks - 1) // n_chunks
-    m0 = _time.time() - 86_400
-    for c in range(n_chunks):
-        p = os.path.join(src, f"chunk{c}.json")
-        with open(p, "w") as f:
-            for r in rows[c * per : (c + 1) * per]:
-                f.write(_json.dumps(r) + "\n")
-        os.utime(p, (m0 + c, m0 + c))
+    _write_chunks(src, [rows[c * per : (c + 1) * per] for c in range(n_chunks)])
     batches = []
     stream = (
         spark.readStream.schema(
@@ -711,10 +666,6 @@ def test_gap_state_tiebreak_matches_batch(spark, tmp_path):
     """Two EQUAL max gaps arriving in time order with descending
     opening ids: the streaming census must pick the smallest opening
     id (the batch struct-min convention), not the first-processed."""
-    import json as _json
-    import os
-    import time as _time
-
     from kafka_streams_pipeline_spark.streaming.stateful import (
         gap_user_state,
     )
@@ -729,14 +680,7 @@ def test_gap_state_tiebreak_matches_batch(spark, tmp_path):
         {"user_id": 1, "event_id": 21, "us": 21 * H, "event_type": "x"},
     ]
     src = str(tmp_path / "src")
-    os.makedirs(src)
-    m0 = _time.time() - 86_400
-    for c, chunk in enumerate([rows[:2], rows[2:]]):
-        p = os.path.join(src, f"chunk{c}.json")
-        with open(p, "w") as f:
-            for r in chunk:
-                f.write(_json.dumps(r) + "\n")
-        os.utime(p, (m0 + c, m0 + c))
+    _write_chunks(src, [rows[:2], rows[2:]])
     batches = []
     q = (
         gap_user_state(
@@ -766,10 +710,6 @@ def test_funnel_state_four_step_pattern(spark, tmp_path):
     """Generalized NFA: a 4-step pattern with a repeated type across
     levels (a,b,b,c) matches across chunk boundaries and the repeated
     'b' advances each chain exactly one level per event."""
-    import json as _json
-    import os
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from kafka_streams_pipeline_spark.operators.timeseries import (
@@ -791,15 +731,8 @@ def test_funnel_state_four_step_pattern(spark, tmp_path):
         {"user_id": 2, "event_id": 7, "us": 2 * MIN, "event_type": "c"},
     ]
     src = str(tmp_path / "src")
-    os.makedirs(src)
-    m0 = _time.time() - 86_400
     per = 3
-    for c in range(3):
-        p = os.path.join(src, f"chunk{c}.json")
-        with open(p, "w") as f:
-            for r in rows[c * per : (c + 1) * per]:
-                f.write(_json.dumps(r) + "\n")
-        os.utime(p, (m0 + c, m0 + c))
+    _write_chunks(src, [rows[c * per : (c + 1) * per] for c in range(3)])
     batches = []
     q = (
         funnel_user_state(

@@ -12,6 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_streams_pipeline_spark.inventory._shared import _write_chunks
 from kafka_streams_pipeline_spark.operators import build_view
 from kafka_streams_pipeline_spark.sources.readings import readings_from_events
 from kafka_streams_pipeline_spark.sources.sinks import read_view
@@ -28,34 +29,24 @@ def readings_rows(spark, sf_dir):
     return readings_from_events(events).collect()
 
 
-def _write_chunks(rows, src_dir, n_chunks=3, disorder_block=50):
-    """Write a realistic replay: files in time order (so the watermark
+def _disordered(rows, n_chunks=3, disorder_block=50):
+    """Split a realistic replay: chunks in time order (so the watermark
     advances like a live stream) but with LOCAL disorder — rows
     shuffled within blocks far smaller than the 24 h grace, so every
     micro-batch still carries late rows that update existing windows
     without crossing the watermark."""
-    os.makedirs(src_dir, exist_ok=True)
     ordered = sorted(rows, key=lambda r: r["timestamp"])
     jumbled = []
     for i in range(0, len(ordered), disorder_block):
         jumbled.extend(reversed(ordered[i : i + disorder_block]))
     per = (len(jumbled) + n_chunks - 1) // n_chunks
-    # ascending mtimes: back-to-back writes tie on mtime and the
-    # file-stream tie-break is arbitrary (round-6 learning; the r12
-    # lost-name flake was the stateful fixture missing exactly this)
-    mtime0 = time.time() - 86_400
-    for c in range(n_chunks):
-        path = os.path.join(src_dir, f"chunk{c}.json")
-        with open(path, "w") as f:
-            for r in jumbled[c * per : (c + 1) * per]:
-                f.write(json.dumps(r.asDict()) + "\n")
-        os.utime(path, (mtime0 + c, mtime0 + c))
+    return [jumbled[c * per : (c + 1) * per] for c in range(n_chunks)]
 
 
 def test_stream_matches_batch_view(spark, sf_dir, readings_rows, tmp_path_factory):
     base = tmp_path_factory.mktemp("stream")
     src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
-    _write_chunks(readings_rows, src, n_chunks=3)
+    _write_chunks(src, _disordered(readings_rows, n_chunks=3))
 
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
@@ -97,23 +88,19 @@ def test_late_beyond_watermark_dropped(spark, tmp_path_factory):
 
     base = tmp_path_factory.mktemp("stream-late")
     src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
-    os.makedirs(src)
     # batch 1: 10 rows in hour 0, then 10 rows at hour 60 → watermark
     # advances to 60h − 24h = 36h after the batch
-    with open(os.path.join(src, "a_fresh.json"), "w") as f:
-        for i in range(10):
-            f.write(json.dumps(reading(0, 20.0, i)) + "\n")
-        for i in range(10):
-            f.write(json.dumps(reading(60, 25.0, i)) + "\n")
+    _write_chunks(src, [
+        [reading(0, 20.0, i) for i in range(10)]
+        + [reading(60, 25.0, i) for i in range(10)]
+    ])
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
     await_replay(q, 300)
     # batch 2: 5 more rows for hour 0 — its window end (1 h) is far
     # below the 36 h watermark → dropped
-    with open(os.path.join(src, "b_late.json"), "w") as f:
-        for i in range(5):
-            f.write(json.dumps(reading(0, 99.0, 100 + i)) + "\n")
+    _write_chunks(src, [[reading(0, 99.0, 100 + i) for i in range(5)]])
     q2 = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
@@ -144,13 +131,10 @@ def test_streaming_dedup_across_batches(spark, tmp_path_factory):
 
     base = tmp_path_factory.mktemp("stream-dedup")
     src, out, ckpt = str(base / "src"), str(base / "out"), str(base / "ckpt")
-    os.makedirs(src)
-    with open(os.path.join(src, "a.json"), "w") as f:
-        for i in [0, 1, 0]:  # duplicate within the batch
-            f.write(json.dumps(reading(i, 20.0)) + "\n")
-    with open(os.path.join(src, "b.json"), "w") as f:
-        for i in [1, 2]:  # duplicate across batches + one new
-            f.write(json.dumps(reading(i, 20.0)) + "\n")
+    _write_chunks(src, [
+        [reading(i, 20.0) for i in [0, 1, 0]],  # duplicate within the batch
+        [reading(i, 20.0) for i in [1, 2]],  # duplicate across batches + one new
+    ])
 
     raw = spark.readStream.schema(READING_SCHEMA).option(
         "maxFilesPerTrigger", 1
@@ -178,7 +162,7 @@ def test_stream_restart_resumes_from_checkpoint(
     base = tmp_path_factory.mktemp("stream-restart")
     src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
     half = len(readings_rows) // 2
-    _write_chunks(readings_rows[:half], src, n_chunks=1)
+    _write_chunks(src, _disordered(readings_rows[:half], n_chunks=1))
     q = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
     await_replay(q, 300)
     n1 = read_view(spark, view).agg(F.sum("count")).collect()[0][0]
@@ -186,8 +170,7 @@ def test_stream_restart_resumes_from_checkpoint(
 
     # "restart": a second availableNow run over the same checkpoint
     # picks up only the new file
-    _write_chunks(readings_rows[half:], src + "/more", n_chunks=1)
-    os.rename(src + "/more/chunk0.json", src + "/chunk_late.json")
+    _write_chunks(src, _disordered(readings_rows[half:], n_chunks=1))
     q2 = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
     await_replay(q2, 300)
     n2 = read_view(spark, view).agg(F.sum("count")).collect()[0][0]
@@ -204,7 +187,7 @@ def test_processing_time_trigger(spark, readings_rows, tmp_path_factory):
     base = tmp_path_factory.mktemp("stream-proc")
     src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
     half = len(readings_rows) // 2
-    _write_chunks(readings_rows[:half], src, n_chunks=1)
+    _write_chunks(src, _disordered(readings_rows[:half], n_chunks=1))
 
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=False, processing_time="1 second"
@@ -223,8 +206,8 @@ def test_processing_time_trigger(spark, readings_rows, tmp_path_factory):
         assert total() == half
         # a second file lands mid-stream (atomic rename, like a real
         # ingest drop) → a later tick must pick it up
-        _write_chunks(readings_rows[half:], src + "/more", n_chunks=1)
-        os.rename(src + "/more/chunk0.json", src + "/late.json")
+        _write_chunks(src + "/more", _disordered(readings_rows[half:], n_chunks=1))
+        os.rename(src + "/more/chunk000.json", src + "/late.json")
         while total() < len(readings_rows) and time.time() < deadline:
             time.sleep(1)
         assert total() == len(readings_rows)
@@ -281,7 +264,7 @@ def test_compact_view_over_a_streamed_store(spark, sf_dir, tmp_path_factory):
     src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
     readings = readings_from_events(load_table(spark, sf_dir, "events"))
     streamed = F.crc32(F.substring("geohash", 1, 6)) % 2 == 0
-    _write_chunks(readings.where(streamed).collect(), src, n_chunks=3)
+    _write_chunks(src, _disordered(readings.where(streamed).collect(), n_chunks=3))
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
@@ -314,7 +297,7 @@ def test_streaming_session_window(spark, sf_dir, readings_rows, tmp_path_factory
 
     base = tmp_path_factory.mktemp("stream-session")
     src, ckpt = str(base / "src"), str(base / "ckpt")
-    _write_chunks(readings_rows[:2000], src, n_chunks=1)
+    _write_chunks(src, _disordered(readings_rows[:2000], n_chunks=1))
 
     raw = spark.readStream.schema(READING_SCHEMA).json(src)
     readings = raw.withColumn("ts", F.timestamp_millis("timestamp"))
@@ -531,9 +514,6 @@ def test_streaming_join_crosses_batches(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from kafka_streams_pipeline_spark.inventory._shared import (
-        _write_chunks as write_chunks,
-    )
     from kafka_streams_pipeline_spark.inventory.streaming_rows import (
         _cut_chunks,
     )
@@ -581,7 +561,7 @@ def test_streaming_join_crosses_batches(spark, tmp_path):
     idx = {r["event_id"]: i for i, r in enumerate(rows)}
     cuts = [idx[r["p_id"]] for r in {m["p_id"]: m for m in matches}.values()]
     src = str(tmp_path / "src")
-    write_chunks(src, _cut_chunks(rows, cuts))
+    _write_chunks(src, _cut_chunks(rows, cuts))
 
     # layout property: every match's click chunk < purchase chunk
     bounds = []
@@ -692,7 +672,6 @@ def test_store_ingest_exactly_once_across_replay(spark, tmp_path):
     marker did not is REPLAYED on restart and must be recognized and
     skipped — final store content exactly-once, version count equal
     to the data-batch count, and the skip path provably exercised."""
-    import json
     import os
     import time
 
@@ -710,14 +689,7 @@ def test_store_ingest_exactly_once_across_replay(spark, tmp_path):
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     store = str(tmp_path / "store")
-    os.makedirs(src)
-    m0 = time.time() - 86_400
-    for i in range(4):
-        p = os.path.join(src, f"c{i}.json")
-        with open(p, "w") as f:
-            for j in range(10):
-                f.write(json.dumps({"k": i * 10 + j}) + "\n")
-        os.utime(p, (m0 + i, m0 + i))
+    _write_chunks(src, [[{"k": i * 10 + j} for j in range(10)] for i in range(4)])
 
     stats: dict = {}
     sink = make_store_commit_sink(store, "t", stats)
@@ -760,7 +732,6 @@ def test_store_upsert_sink_applies_cdc_stream(spark, tmp_path):
     tombstones) lands as idempotent upsert batches; the merged read
     serves the corrected view, a replayed micro-batch is skipped,
     and raw history still carries every correction batch."""
-    import json
     import os
     import time
 
@@ -785,19 +756,11 @@ def test_store_upsert_sink_applies_cdc_stream(spark, tmp_path):
     )
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    m0 = time.time() - 86_400
-    chunks = [
+    _write_chunks(src, [
         [{"k": 3, "score": 999, "_deleted": False}],
         [{"k": 7, "score": 0, "_deleted": True}],
         [{"k": 3, "score": 555, "_deleted": False}],
-    ]
-    for i, rows in enumerate(chunks):
-        p = os.path.join(src, f"c{i}.json")
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        os.utime(p, (m0 + i, m0 + i))
+    ])
 
     stats: dict = {}
     sink = make_store_upsert_sink(store, "k", "cdc", stats)
@@ -883,7 +846,6 @@ def test_store_sink_quarantines_poisoned_batches(spark, tmp_path):
     checks without a quarantine_dir refuse up front."""
     import json
     import os
-    import time
 
     from pyspark.sql import functions as F
 
@@ -904,19 +866,11 @@ def test_store_sink_quarantines_poisoned_batches(spark, tmp_path):
     src = str(tmp_path / "src")
     qdir = str(tmp_path / "quarantine")
     store = str(tmp_path / "store")
-    os.makedirs(src)
-    m0 = time.time() - 86_400
-    chunks = [
+    _write_chunks(src, [
         [{"k": 1, "v": 10}, {"k": 2, "v": 20}],          # clean
         [{"k": 3, "v": -7}, {"k": 4, "v": 40}],          # poisoned
         [{"k": 5, "v": 50}],                             # clean
-    ]
-    for i, rows in enumerate(chunks):
-        p = os.path.join(src, f"c{i}.json")
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        os.utime(p, (m0 + i, m0 + i))
+    ])
 
     stats: dict = {}
     sink = make_store_commit_sink(
@@ -970,10 +924,7 @@ def test_store_sink_ledger_namespaced_by_query(spark, tmp_path):
     def run_stream(tag, lo, hi):
         src = str(tmp_path / f"src-{tag}")
         ckpt = str(tmp_path / f"ckpt-{tag}")  # fresh checkpoint
-        os.makedirs(src)
-        with open(os.path.join(src, "a.json"), "w") as f:
-            for k in range(lo, hi):
-                f.write(json.dumps({"k": k}) + "\n")
+        _write_chunks(src, [[{"k": k} for k in range(lo, hi)]])
         stats: dict = {}
         sink = make_store_commit_sink(store, "ingest", stats)
         q = (
@@ -1004,9 +955,6 @@ def test_streaming_semi_join_emits_once_from_state(spark, tmp_path):
     """Left-semi stream-stream join: a purchase matched by TWO
     in-window clicks (both buffered in an earlier micro-batch) emits
     exactly ONCE; an unmatched purchase never emits."""
-    from kafka_streams_pipeline_spark.inventory._shared import (
-        _write_chunks as write_chunks,
-    )
     from kafka_streams_pipeline_spark.streaming.pipeline import await_replay
 
     t0 = 1_700_000_000_000
@@ -1021,7 +969,7 @@ def test_streaming_semi_join_emits_once_from_state(spark, tmp_path):
          "event_type": "purchase"},
     ]
     src = str(tmp_path / "src")
-    write_chunks(src, [rows[:2], rows[2:]])  # clicks | purchases
+    _write_chunks(src, [rows[:2], rows[2:]])  # clicks | purchases
 
     schema = "event_id long, ts_ms long, user_id long, event_type string"
     stream = (
@@ -1101,7 +1049,7 @@ def test_many_file_batch_lists_on_the_driver(spark, readings_rows, tmp_path):
     file. The session keeps listing on the driver, so a 40-file batch
     launches no such job."""
     src, view, ckpt = (str(tmp_path / d) for d in ("src", "view", "ckpt"))
-    _write_chunks(readings_rows, src, n_chunks=40)
+    _write_chunks(src, _disordered(readings_rows, n_chunks=40))
     assert len(os.listdir(src)) == 40
     first_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
     q = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
@@ -1117,7 +1065,7 @@ def _state_partitions_used(spark, rows, base, given):
     """Replay ``rows`` as one availableNow batch and return the state
     operator's partition count from the stream's last progress."""
     src = str(base / "src")
-    _write_chunks(rows, src, n_chunks=1)
+    _write_chunks(src, _disordered(rows, n_chunks=1))
     q = start_file_stream_pipeline(
         spark, src, str(base / "view"), str(base / "ckpt"),
         available_now=True, state_partitions=given,
@@ -1256,12 +1204,11 @@ def test_replay_rejects_batch_count_mismatch(spark):
     from kafka_streams_pipeline_spark.inventory._shared import (
         _replay,
         _scratch,
-        _write_chunks as write_chunks,
     )
 
     seen: list = []
     with _scratch("test-count") as base:
-        write_chunks(os.path.join(base, "src"), [[{"k": 1}]])
+        _write_chunks(os.path.join(base, "src"), [[{"k": 1}]])
         with pytest.raises(RuntimeError, match="2 data micro-batches for 1"):
             _replay(
                 spark, base, [[{"k": 2}]], "k long", lambda s: s,

@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kafka_streams_pipeline_spark.inventory import QUERIES  # noqa: E402
 from kafka_streams_pipeline_spark.session import get_spark  # noqa: E402
 
-spark = get_spark(app_name="ab-repl", cpus=32)
+spark = get_spark(app_name="ab-repl")
 spark.sparkContext.setLogLevel("ERROR")
 SF = "/root/testdata/sf0.1"
 
