@@ -6,6 +6,8 @@ MP4) with exact recurrence oracles.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -847,8 +849,6 @@ def q_media_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     producer and everything from ``binaryFile`` on is this exact
     plan (payloads never shuffle: decode emits typed columns
     partition-locally)."""
-    import os
-
     docs = (
         _t(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 200)
@@ -976,6 +976,58 @@ def q_media_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mm.sample_gif_frames(gif, stride=2)
 
 
+def _doc_member(doc_id: int) -> str:
+    return f"{doc_id:08d}.txt"
+
+
+def _doc_uri(doc_id: int) -> str:
+    return f"https://corpus.example/doc/{doc_id}"
+
+
+def _shard_roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    name_of: Callable[[int], str],
+    build: Callable[[list[tuple[str, bytes]]], bytes],
+    ext: str,
+    explode: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The shard rows' shared round-trip: documents with doc_id < 200,
+    25 per shard (shard_id = doc_id // 25) as (``name_of(doc_id)``,
+    text bytes) members, each shard written by ``build`` to
+    ``shard<id>.<ext>`` in a scratch directory, read back with Spark's
+    binaryFile source (shard_id from the file name), exploded by
+    ``explode`` and collected before the directory goes."""
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 200)
+        .select("doc_id", "text")
+        .collect()
+    )
+    shards: dict[int, list] = {}
+    for r in sorted(docs, key=lambda r: r["doc_id"]):
+        shards.setdefault(r["doc_id"] // 25, []).append(
+            (name_of(r["doc_id"]), r["text"].encode())
+        )
+    with _scratch("shards") as base:
+        for sid, members in shards.items():
+            with open(os.path.join(base, f"shard{sid:05d}.{ext}"), "wb") as f:
+                f.write(build(members))
+        bf = spark.read.format("binaryFile").load(f"{base}/*.{ext}")
+        pattern = r"shard(\d{5})\." + ext.replace(".", r"\.") + "$"
+        out = explode(
+            bf.select(
+                F.regexp_extract(F.col("path"), pattern, 1)
+                .cast("long")
+                .alias("shard_id"),
+                F.col("content").alias("payload"),
+            )
+        )
+        rows = out.collect()
+        schema = out.schema
+    return spark.createDataFrame(rows, schema)
+
+
 @register(
     "q_media_tar_shards",
     oracle="""
@@ -1003,37 +1055,9 @@ def q_media_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     Payloads never shuffle (partition-local codec boundary, as with
     every media decode). See operators/multimodal.py
     build_tar_shard/parse_tar_members/untar_members."""
-    import os
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-        .collect()
+    return _shard_roundtrip(
+        spark, sf_dir, _doc_member, _mm.build_tar_shard, "tar", _mm.untar_members
     )
-    shards: dict[int, list] = {}
-    for r in sorted(docs, key=lambda r: r["doc_id"]):
-        shards.setdefault(r["doc_id"] // 25, []).append(
-            (f"{r['doc_id']:08d}.txt", r["text"].encode())
-        )
-    with _scratch("tarshard") as base:
-        for sid, members in shards.items():
-            with open(
-                os.path.join(base, f"shard{sid:05d}.tar"), "wb"
-            ) as f:
-                f.write(_mm.build_tar_shard(members))
-        bf = spark.read.format("binaryFile").load(base + "/*.tar")
-        out = _mm.untar_members(
-            bf.select(
-                F.regexp_extract(F.col("path"), r"shard(\d{5})\.tar$", 1)
-                .cast("long")
-                .alias("shard_id"),
-                F.col("content").alias("payload"),
-            )
-        )
-        rows = out.collect()
-        schema = out.schema
-    return spark.createDataFrame(rows, schema)
 
 
 @register("q_ivf_pq_topk", oracle=_sim.ivf_pq_topk_oracle(0, 10))
@@ -1139,40 +1163,9 @@ def q_media_warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     type filter too. Payloads never shuffle (partition-local codec
     boundary). See operators/multimodal.py build_warc_shard/
     parse_warc_records/unwarc_records."""
-    import os
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-        .collect()
+    return _shard_roundtrip(
+        spark, sf_dir, _doc_uri, _mm.build_warc_shard, "warc", _mm.unwarc_records
     )
-    shards: dict[int, list] = {}
-    for r in sorted(docs, key=lambda r: r["doc_id"]):
-        shards.setdefault(r["doc_id"] // 25, []).append(
-            (
-                f"https://corpus.example/doc/{r['doc_id']}",
-                r["text"].encode(),
-            )
-        )
-    with _scratch("warcshard") as base:
-        for sid, records in shards.items():
-            with open(
-                os.path.join(base, f"shard{sid:05d}.warc"), "wb"
-            ) as f:
-                f.write(_mm.build_warc_shard(records))
-        bf = spark.read.format("binaryFile").load(base + "/*.warc")
-        out = _mm.unwarc_records(
-            bf.select(
-                F.regexp_extract(F.col("path"), r"shard(\d{5})\.warc$", 1)
-                .cast("long")
-                .alias("shard_id"),
-                F.col("content").alias("payload"),
-            )
-        )
-        rows = out.collect()
-        schema = out.schema
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -1205,42 +1198,10 @@ def q_media_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-trip + gunzip-concatenation-equivalence + corruption
     pytests in test_extensions. See operators/multimodal.py
     build_warc_gz_shard/parse_warc_gz_records/unwarc_gz_records."""
-    import os
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-        .collect()
+    return _shard_roundtrip(
+        spark, sf_dir, _doc_uri, _mm.build_warc_gz_shard, "warc.gz",
+        _mm.unwarc_gz_records,
     )
-    shards: dict[int, list] = {}
-    for r in sorted(docs, key=lambda r: r["doc_id"]):
-        shards.setdefault(r["doc_id"] // 25, []).append(
-            (
-                f"https://corpus.example/doc/{r['doc_id']}",
-                r["text"].encode(),
-            )
-        )
-    with _scratch("warcgz") as base:
-        for sid, records in shards.items():
-            with open(
-                os.path.join(base, f"shard{sid:05d}.warc.gz"), "wb"
-            ) as f:
-                f.write(_mm.build_warc_gz_shard(records))
-        bf = spark.read.format("binaryFile").load(base + "/*.warc.gz")
-        out = _mm.unwarc_gz_records(
-            bf.select(
-                F.regexp_extract(
-                    F.col("path"), r"shard(\d{5})\.warc\.gz$", 1
-                )
-                .cast("long")
-                .alias("shard_id"),
-                F.col("content").alias("payload"),
-            )
-        )
-        rows = out.collect()
-        schema = out.schema
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -1270,42 +1231,10 @@ def q_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     gzip), so the round-trip proof is in the row where a wrong byte
     range flips the pinned-TRUE bit. See operators/multimodal.py
     warc_gz_cdx/_warc_gz_members."""
-    import os
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-        .collect()
+    return _shard_roundtrip(
+        spark, sf_dir, _doc_uri, _mm.build_warc_gz_shard, "warc.gz",
+        _mm.warc_gz_cdx,
     )
-    shards: dict[int, list] = {}
-    for r in sorted(docs, key=lambda r: r["doc_id"]):
-        shards.setdefault(r["doc_id"] // 25, []).append(
-            (
-                f"https://corpus.example/doc/{r['doc_id']}",
-                r["text"].encode(),
-            )
-        )
-    with _scratch("warccdx") as base:
-        for sid, records in shards.items():
-            with open(
-                os.path.join(base, f"shard{sid:05d}.warc.gz"), "wb"
-            ) as f:
-                f.write(_mm.build_warc_gz_shard(records))
-        bf = spark.read.format("binaryFile").load(base + "/*.warc.gz")
-        out = _mm.warc_gz_cdx(
-            bf.select(
-                F.regexp_extract(
-                    F.col("path"), r"shard(\d{5})\.warc\.gz$", 1
-                )
-                .cast("long")
-                .alias("shard_id"),
-                F.col("content").alias("payload"),
-            )
-        )
-        rows = out.collect()
-        schema = out.schema
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -1331,37 +1260,9 @@ def q_media_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     against Python's stdlib zipfile in pytest, including DEFLATE.
     Payloads never shuffle. See operators/multimodal.py
     build_zip_shard/parse_zip_members/unzip_members."""
-    import os
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-        .collect()
+    return _shard_roundtrip(
+        spark, sf_dir, _doc_member, _mm.build_zip_shard, "zip", _mm.unzip_members
     )
-    shards: dict[int, list] = {}
-    for r in sorted(docs, key=lambda r: r["doc_id"]):
-        shards.setdefault(r["doc_id"] // 25, []).append(
-            (f"{r['doc_id']:08d}.txt", r["text"].encode())
-        )
-    with _scratch("zipshard") as base:
-        for sid, members in shards.items():
-            with open(
-                os.path.join(base, f"shard{sid:05d}.zip"), "wb"
-            ) as f:
-                f.write(_mm.build_zip_shard(members))
-        bf = spark.read.format("binaryFile").load(base + "/*.zip")
-        out = _mm.unzip_members(
-            bf.select(
-                F.regexp_extract(F.col("path"), r"shard(\d{5})\.zip$", 1)
-                .cast("long")
-                .alias("shard_id"),
-                F.col("content").alias("payload"),
-            )
-        )
-        rows = out.collect()
-        schema = out.schema
-    return spark.createDataFrame(rows, schema)
 
 
 @register("q_cosine_pairs", oracle=_sim.cosine_pairs_oracle())

@@ -470,16 +470,7 @@ KCORE_K = 3
 KCORE_ROUNDS = 8
 
 
-KCORE_MAX_ROUNDS = 1024
-
-
-def kcore(
-    edges: DataFrame,
-    k: int = KCORE_K,
-    rounds: int = KCORE_ROUNDS,
-    until_converged: bool = False,
-    max_rounds: int = KCORE_MAX_ROUNDS,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
     """k-core decomposition by bounded iterative peeling (Seidman
     1983, public literature): repeatedly delete nodes whose degree in
     the SURVIVING subgraph is < k; the fixpoint is the maximal
@@ -494,18 +485,10 @@ def kcore(
     emits ``converged`` = (last round removed nothing). Once the
     fixpoint is reached earlier, the remaining rounds are no-ops, so
     fixed-rounds ≡ run-to-fixpoint whenever converged is TRUE —
-    which the certified row pins at the gate SFs.
-
-    ``until_converged=True`` (VERDICT r12 item 7) instead peels to
-    the FIXPOINT: at 100× a long peel cascade (a path feeding a
-    core sheds one node per round) outruns any fixed count, and a
-    fixed-round run would silently return converged=FALSE rows.
-    The loop keeps the same per-round localCheckpoint shape, stops
-    the first round that removes nothing, and fails LOUDLY past
-    ``max_rounds`` (each round removes ≥1 node when not converged,
-    so rounds are bounded by the node count — a cap hit means the
-    bound was set below the graph's peel depth, not an infinite
-    loop). The fixed-round form remains the oracle row.
+    which the certified row pins at the gate SFs. A peel cascade
+    deeper than ``rounds`` (a path feeding a core sheds one node per
+    round) returns converged=FALSE rows, never a silent fixpoint
+    claim.
 
     Scale shape: each round is one degree aggregate + two semi-join
     prunes over the surviving edge set, localCheckpoint-ed so the
@@ -521,8 +504,7 @@ def kcore(
         .localCheckpoint(eager=True)
     )
     counts = [sym.count()]
-    n_rounds = max_rounds if until_converged else rounds
-    for i in range(n_rounds):
+    for _ in range(rounds):
         good = (
             sym.groupBy("s")
             .agg(F.count(F.lit(1)).alias("deg"))
@@ -536,17 +518,6 @@ def kcore(
             .localCheckpoint(eager=True)
         )
         counts.append(sym.count())
-        if until_converged and counts[-1] == counts[-2]:
-            break
-    else:
-        if until_converged:
-            raise RuntimeError(
-                f"kcore(until_converged=True): no fixpoint after "
-                f"max_rounds={max_rounds} peel rounds (edge count "
-                f"still shrinking: {counts[-2]} -> {counts[-1]}); "
-                "the graph's peel depth exceeds the cap — raise "
-                "max_rounds explicitly"
-            )
     converged = counts[-1] == counts[-2]
     return (
         sym.groupBy("s")

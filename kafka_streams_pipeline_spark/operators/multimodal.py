@@ -40,8 +40,9 @@ tested. Decode status:
 
 Design for 100 TB: payloads never shuffle — metadata extraction is a
 narrow mapInPandas; anything aggregate-shaped first projects payload
-OUT, so only small typed columns move. ``maxRecordsPerBatch`` bounds
-Arrow batch memory when payloads are large.
+OUT, so only small typed columns move. Every operator here crosses
+the same codec boundary, ``_explode``: a per-row function over the
+input columns that yields typed output tuples.
 """
 
 from __future__ import annotations
@@ -51,7 +52,7 @@ import gzip
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -98,6 +99,77 @@ def _foreign_payload_guard(fn):
             ) from e
 
     return wrapped
+
+
+def _explode(
+    df: DataFrame,
+    cols: list[str],
+    schema: StructType,
+    rows_of: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """The module's codec boundary: one narrow ``mapInPandas`` that
+    passes each input row's ``cols`` values to ``rows_of`` and emits
+    every tuple it yields (zero or more per input row, in ``schema``
+    field order). Payloads stay in their partition; only the typed
+    rows leave."""
+    names = schema.fieldNames()
+
+    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    row
+                    for vals in zip(*(pdf[c] for c in cols))
+                    for row in rows_of(*vals)
+                ],
+                columns=names,
+            )
+
+    return df.mapInPandas(per_batch, schema)
+
+
+_ASSET_PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+_MEDIA_PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType()),
+        StructField("media_type", StringType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
+def _synthesize(
+    docs: DataFrame, media_type: str | None, payload_of: Callable[[int], bytes]
+) -> DataFrame:
+    """One payload per document: ``payload_of(doc_id)`` as
+    (asset_id, media_type, payload), or (asset_id, payload) when
+    ``media_type`` is None."""
+    tag = () if media_type is None else (media_type,)
+    schema = _MEDIA_PAYLOAD_SCHEMA if tag else _ASSET_PAYLOAD_SCHEMA
+    return _explode(
+        docs.select("doc_id"),
+        ["doc_id"],
+        schema,
+        lambda did: [(int(did), *tag, payload_of(int(did)))],
+    )
+
+
+def _pixel_stats(px: np.ndarray) -> tuple[int, int, int]:
+    """(sum, index-weighted sum, peak) over ``px`` in its logical
+    C-order layout, exact in int64. Each component is weighted by its
+    linear index, so a decoder that misplaces rows, blocks, planes or
+    frames changes the weighted sum even when plain sums collide."""
+    flat = px.reshape(-1).astype(np.int64)
+    return (
+        int(flat.sum()),
+        int((flat * np.arange(flat.size, dtype=np.int64)).sum()),
+        int(flat.max()) if flat.size else 0,
+    )
 
 
 MEDIA_FEATURE_SCHEMA = StructType(
@@ -167,11 +239,7 @@ def _real_features(mtype: str, payload: bytes) -> list[float]:
     raise ValueError(f"unsupported media_type: {mtype!r}")
 
 
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    max_records_per_batch: int = 64,
-) -> DataFrame:
+def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL mapInPandas feature extraction over media payloads: each
     row dispatches on ``media_type`` to the stdlib codec parser for
     its modality — audio → ``parse_wav``, image → ``parse_bmp``,
@@ -179,34 +247,18 @@ def extract_features(
     vector, the decode → featurize hop an embedding pipeline runs
     before the model. An unknown media_type raises the documented
     ValueError (no silent skip). Payloads stay partition-local; only
-    the small typed rows leave the operator, and
-    ``maxRecordsPerBatch`` bounds Arrow batch memory when payloads
-    are large."""
-    spark = df.sparkSession
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(max_records_per_batch)
+    the small typed rows leave the operator."""
+
+    def rows_of(aid, mtype, payload):
+        b = bytes(payload)
+        yield (
+            aid, mtype, len(b), hashlib.md5(b).hexdigest(),
+            _real_features(mtype, b), FEAT_DIM,
+        )
+
+    return _explode(
+        df, ["asset_id", "media_type", payload_col], MEDIA_FEATURE_SCHEMA, rows_of
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col].map(bytes)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "payload_md5": payloads.map(
-                        lambda b: hashlib.md5(b).hexdigest()
-                    ),
-                    "features": [
-                        _real_features(m, b)
-                        for m, b in zip(pdf["media_type"], payloads)
-                    ],
-                    "feat_dim": FEAT_DIM,
-                }
-            )
-
-    return df.mapInPandas(run, MEDIA_FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(
@@ -293,25 +345,16 @@ def decode_wav(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     downstream derivation (mean, dBFS) is order-independent and
     oracle-exact; payloads never leave their partition."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in WAV_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                channels, rate, bits, samples = parse_wav(bytes(payload))
-                s64 = samples.astype(np.int64)
-                rows["asset_id"].append(aid)
-                rows["n_channels"].append(channels)
-                rows["sample_rate"].append(rate)
-                rows["bits_per_sample"].append(bits)
-                rows["n_samples"].append(len(samples))
-                rows["duration_ms"].append(len(samples) * 1000 // rate)
-                rows["peak_abs"].append(
-                    int(np.abs(s64).max()) if len(samples) else 0
-                )
-                rows["sum_samples"].append(int(s64.sum()))
-            yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        channels, rate, bits, samples = parse_wav(bytes(payload))
+        s64 = samples.astype(np.int64)
+        n = len(s64)
+        yield (
+            aid, channels, rate, bits, n, n * 1000 // rate,
+            int(np.abs(s64).max()) if n else 0, int(s64.sum()),
+        )
 
-    return df.mapInPandas(run, WAV_STATS_SCHEMA)
+    return _explode(df, ["asset_id", payload_col], WAV_STATS_SCHEMA, rows_of)
 
 
 def wav_from_documents(docs: DataFrame) -> DataFrame:
@@ -321,30 +364,13 @@ def wav_from_documents(docs: DataFrame) -> DataFrame:
     payloads are standard WAV files (every 4th carries a LIST chunk so
     chunk-walking is exercised); the recurrence makes the decoded
     stats recomputable exactly in the DuckDB oracle."""
+    return _synthesize(docs, None, _wav_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = did % 50 + 10
-                i = np.arange(n, dtype=np.int64)
-                samples = (did * 31 + i * 7) % 65536 - 32768
-                out["asset_id"].append(did)
-                out["payload"].append(
-                    _wav_bytes(samples, WAV_SAMPLE_RATE, with_list_chunk=did % 4 == 0)
-                )
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def _wav_payload(did: int) -> bytes:
+    i = np.arange(did % 50 + 10, dtype=np.int64)
+    samples = (did * 31 + i * 7) % 65536 - 32768
+    return _wav_bytes(samples, WAV_SAMPLE_RATE, with_list_chunk=did % 4 == 0)
 
 
 def typed_media_from_documents(docs: DataFrame) -> DataFrame:
@@ -449,27 +475,23 @@ def decode_bmp(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     number even when the plain channel sums collide. All stats stay
     integral — order-independent and oracle-exact; payloads never
     leave their partition."""
+    return _explode(
+        df, ["asset_id", payload_col], BMP_STATS_SCHEMA, _image_rows(parse_bmp, 1)
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in BMP_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                w, h, bpp, px = parse_bmp(bytes(payload))
-                flat = px.reshape(-1).astype(np.int64)
-                rows["asset_id"].append(aid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bits_per_pixel"].append(bpp)
-                rows["n_pixels"].append(w * h)
-                for c in range(3):
-                    rows[f"sum_c{c}"].append(int(flat[c::3].sum()))
-                rows["weighted_sum"].append(
-                    int((flat * np.arange(len(flat), dtype=np.int64)).sum())
-                )
-                rows["peak"].append(int(flat.max()) if len(flat) else 0)
-            yield pd.DataFrame(rows)
 
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
+def _image_rows(parse, bpp_factor: int):
+    """BMP_STATS_SCHEMA row function over a 3-component image parser
+    returning (w, h, bits, (h, w, 3) pixels); bits_per_pixel is
+    bits × ``bpp_factor`` (BMP reports per pixel, PNG per sample)."""
+
+    def rows_of(aid, payload):
+        w, h, bits, px = parse(bytes(payload))
+        _, weighted, peak = _pixel_stats(px)
+        c0, c1, c2 = px.reshape(-1, 3).astype(np.int64).sum(axis=0).tolist()
+        yield aid, w, h, bits * bpp_factor, w * h, c0, c1, c2, weighted, peak
+
+    return rows_of
 
 
 def resize_bmp(
@@ -484,23 +506,15 @@ def resize_bmp(
     re-encode as BMP. Pure stdlib+numpy; 1 row → 1 row; payloads stay
     partition-local."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "width": [], "height": [], "resized": []}
-            for aid, mtype, payload in zip(
-                pdf["asset_id"], pdf["media_type"], pdf[payload_col]
-            ):
-                w, h, _, px = parse_bmp(bytes(payload))
-                xs = (np.arange(width) * w) // width
-                ys = (np.arange(height) * h) // height
-                out["asset_id"].append(aid)
-                out["media_type"].append(mtype)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["resized"].append(_bmp_bytes(px[np.ix_(ys, xs)]))
-            yield pd.DataFrame(out)
+    def rows_of(aid, mtype, payload):
+        w, h, _, px = parse_bmp(bytes(payload))
+        xs = (np.arange(width) * w) // width
+        ys = (np.arange(height) * h) // height
+        yield aid, mtype, width, height, _bmp_bytes(px[np.ix_(ys, xs)])
 
-    return df.mapInPandas(run, RESIZED_SCHEMA)
+    return _explode(
+        df, ["asset_id", "media_type", payload_col], RESIZED_SCHEMA, rows_of
+    )
 
 
 def bmp_from_documents(docs: DataFrame) -> DataFrame:
@@ -511,30 +525,13 @@ def bmp_from_documents(docs: DataFrame) -> DataFrame:
     padded rows) makes the parser walk real structure; the recurrence
     makes every decoded stat recomputable exactly in the DuckDB
     oracle via generate_series."""
+    return _synthesize(docs, "image", _bmp_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = did % 5 + 2, did % 7 + 2
-                k = np.arange(h * w * 3, dtype=np.int64)
-                px = ((did * 17 + k * 29) % 256).astype(np.uint8).reshape(h, w, 3)
-                out["asset_id"].append(did)
-                out["media_type"].append("image")
-                out["payload"].append(_bmp_bytes(px))
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("media_type", StringType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def _bmp_payload(did: int) -> bytes:
+    w, h = did % 5 + 2, did % 7 + 2
+    k = np.arange(h * w * 3, dtype=np.int64)
+    return _bmp_bytes(((did * 17 + k * 29) % 256).astype(np.uint8).reshape(h, w, 3))
 
 # --- Real video frame-sampling: stdlib uncompressed AVI (RIFF) parser -------
 
@@ -656,26 +653,14 @@ def sample_avi_frames(
     makes frame-order or row-flip mistakes observable. Payloads stay
     partition-local; only small typed rows leave the operator."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in VIDEO_FRAME_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                w, h, us, frames = parse_avi(bytes(payload))
-                for idx in range(0, len(frames), stride):
-                    flat = frames[idx].reshape(-1).astype(np.int64)
-                    rows["asset_id"].append(aid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_ts_ms"].append(idx * us // 1000)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_px"].append(int(flat.sum()))
-                    rows["weighted_sum"].append(
-                        int((flat * np.arange(len(flat), dtype=np.int64)).sum())
-                    )
-                    rows["peak"].append(int(flat.max()))
-            yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        w, h, us, frames = parse_avi(bytes(payload))
+        for idx in range(0, len(frames), stride):
+            yield aid, idx, idx * us // 1000, w, h, *_pixel_stats(frames[idx])
 
-    return df.mapInPandas(run, VIDEO_FRAME_STATS_SCHEMA)
+    return _explode(
+        df, ["asset_id", payload_col], VIDEO_FRAME_STATS_SCHEMA, rows_of
+    )
 
 
 def avi_from_documents(docs: DataFrame) -> DataFrame:
@@ -686,36 +671,19 @@ def avi_from_documents(docs: DataFrame) -> DataFrame:
     encoding makes the parser walk real nested-LIST structure; the
     recurrence makes every sampled-frame stat recomputable exactly in
     the DuckDB oracle."""
+    return _synthesize(docs, "video", _avi_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                nf, w, h = did % 4 + 2, did % 3 + 2, did % 5 + 2
-                k = np.arange(h * w * 3, dtype=np.int64)
-                frames = np.stack(
-                    [
-                        ((did * 23 + f * 101 + k * 29) % 256)
-                        .astype(np.uint8)
-                        .reshape(h, w, 3)
-                        for f in range(nf)
-                    ]
-                )
-                out["asset_id"].append(did)
-                out["media_type"].append("video")
-                out["payload"].append(_avi_bytes(frames))
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
+def _avi_payload(did: int) -> bytes:
+    nf, w, h = did % 4 + 2, did % 3 + 2, did % 5 + 2
+    k = np.arange(h * w * 3, dtype=np.int64)
+    return _avi_bytes(
+        np.stack(
             [
-                StructField("asset_id", LongType()),
-                StructField("media_type", StringType()),
-                StructField("payload", BinaryType()),
+                ((did * 23 + f * 101 + k * 29) % 256).astype(np.uint8).reshape(h, w, 3)
+                for f in range(nf)
             ]
-        ),
+        )
     )
 
 ENERGY_FRAME = 20  # samples per energy frame
@@ -738,22 +706,16 @@ def audio_frame_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in schema.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                _, _, _, samples = parse_wav(bytes(payload))
-                s64 = samples.astype(np.int64)
-                for f in range(0, len(s64), ENERGY_FRAME):
-                    chunk = s64[f : f + ENERGY_FRAME]
-                    rows["asset_id"].append(aid)
-                    rows["frame_idx"].append(f // ENERGY_FRAME)
-                    rows["n_samples"].append(len(chunk))
-                    rows["energy"].append(int((chunk * chunk).sum()))
-                    rows["peak_abs"].append(int(np.abs(chunk).max()))
-            yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        s64 = parse_wav(bytes(payload))[3].astype(np.int64)
+        for f in range(0, len(s64), ENERGY_FRAME):
+            chunk = s64[f : f + ENERGY_FRAME]
+            yield (
+                aid, f // ENERGY_FRAME, len(chunk),
+                int((chunk * chunk).sum()), int(np.abs(chunk).max()),
+            )
 
-    return df.mapInPandas(run, schema)
+    return _explode(df, ["asset_id", payload_col], schema, rows_of)
 
 
 # --- Real compressed-image decode: stdlib baseline JPEG codec ---------------
@@ -1143,38 +1105,21 @@ def jpeg_from_documents(docs: DataFrame) -> DataFrame:
     q=8 table the encode→decode round-trip is exact for such content
     (see codec header note), so the DuckDB oracle can recompute every
     decoded-pixel stat from the recurrence."""
+    return _synthesize(docs, "image", _jpeg_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 8 * (did % 3 + 1), 8 * (did % 2 + 1)
-                nbx, nby = w // 8, h // 8
-                nb = nbx * nby
-                planes = np.zeros((3, h, w), dtype=np.uint8)
-                for c in range(3):
-                    for b in range(nb):
-                        v = (did * 31 + (c * nb + b) * 17) % 256
-                        by, bx = divmod(b, nbx)
-                        planes[
-                            c, by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8
-                        ] = v
-                out["asset_id"].append(did)
-                out["media_type"].append("image")
-                out["payload"].append(_jpeg_bytes(planes, q=8))
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("media_type", StringType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def _jpeg_payload(did: int) -> bytes:
+    w, h = 8 * (did % 3 + 1), 8 * (did % 2 + 1)
+    nbx, nby = w // 8, h // 8
+    nb = nbx * nby
+    planes = np.zeros((3, h, w), dtype=np.uint8)
+    for c in range(3):
+        for b in range(nb):
+            by, bx = divmod(b, nbx)
+            planes[c, by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                did * 31 + (c * nb + b) * 17
+            ) % 256
+    return _jpeg_bytes(planes, q=8)
 
 
 JPEG_STATS_SCHEMA = StructType(
@@ -1200,27 +1145,16 @@ def decode_jpeg(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     planes, or mis-walks the zigzag produces a different number even
     when plane sums collide. Payloads never leave their partition."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in JPEG_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                w, h, ncomp, planes = parse_jpeg(bytes(payload))
-                p64 = planes.astype(np.int64)
-                idx = np.arange(ncomp * h * w, dtype=np.int64)
-                rows["asset_id"].append(aid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_components"].append(ncomp)
-                rows["n_pixels"].append(w * h)
-                for c in range(3):
-                    rows[f"sum_c{c}"].append(
-                        int(p64[c].sum()) if c < ncomp else 0
-                    )
-                rows["spatial_sum"].append(int((p64.reshape(-1) * idx).sum()))
-                rows["peak"].append(int(p64.max()))
-            yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        w, h, ncomp, planes = parse_jpeg(bytes(payload))
+        sums = (
+            int(planes[c].astype(np.int64).sum()) if c < ncomp else 0
+            for c in range(3)
+        )
+        _, spatial, peak = _pixel_stats(planes)
+        yield aid, w, h, ncomp, w * h, *sums, spatial, peak
 
-    return df.mapInPandas(run, JPEG_STATS_SCHEMA)
+    return _explode(df, ["asset_id", payload_col], JPEG_STATS_SCHEMA, rows_of)
 
 
 # --- Real compressed-video decode: MJPEG-in-AVI ----------------------------
@@ -1335,35 +1269,27 @@ def mjpeg_from_documents(docs: DataFrame) -> DataFrame:
     block-constant planes; block (f, c, b) holds
     (doc_id·37 + f·113 + (c·nb + b)·17) mod 256 — exact through the
     JPEG layer at flat q=8, so the oracle recomputes decoded stats."""
+    return _synthesize(docs, "video", _mjpeg_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                nf, h, w = did % 3 + 1, 8, 8 * (did % 2 + 1)
-                nb = w // 8
-                frames = np.zeros((nf, 3, h, w), dtype=np.uint8)
-                for f in range(nf):
-                    for c in range(3):
-                        for b in range(nb):
-                            v = (did * 37 + f * 113 + (c * nb + b) * 17) % 256
-                            frames[f, c, :, b * 8 : b * 8 + 8] = v
-                out["asset_id"].append(did)
-                out["media_type"].append("video")
-                out["payload"].append(_mjpeg_avi_bytes(frames))
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("media_type", StringType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def _mjpeg_payload(did: int) -> bytes:
+    return _mjpeg_avi_bytes(_block_frames(did, 37, 113, 17))
+
+
+def _block_frames(did: int, k_doc: int, k_frame: int, k_block: int) -> np.ndarray:
+    """nf = did % 3 + 1 block-constant frames of 3 × 8 × (8·(did % 2 + 1))
+    planes, block (f, c, b) holding
+    (did·k_doc + f·k_frame + (c·nb + b)·k_block) mod 256 — the shape of
+    the MJPEG and MP4 fixtures' recurrences."""
+    nf, h, w = did % 3 + 1, 8, 8 * (did % 2 + 1)
+    nb = w // 8
+    frames = np.zeros((nf, 3, h, w), dtype=np.uint8)
+    for f in range(nf):
+        for c in range(3):
+            for b in range(nb):
+                v = (did * k_doc + f * k_frame + (c * nb + b) * k_block) % 256
+                frames[f, c, :, b * 8 : b * 8 + 8] = v
+    return frames
 
 
 MJPEG_FRAME_STATS_SCHEMA = StructType(
@@ -1388,27 +1314,14 @@ def decode_mjpeg_frames(df: DataFrame, payload_col: str = "payload") -> DataFram
     misplacement, or frame reordering are all observable. Payloads
     stay partition-local."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in MJPEG_FRAME_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                w, h, us, frames = parse_mjpeg_avi(bytes(payload))
-                for idx, planes in enumerate(frames):
-                    p64 = planes.astype(np.int64)
-                    k = np.arange(p64.size, dtype=np.int64)
-                    rows["asset_id"].append(aid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_ts_ms"].append(idx * us // 1000)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_px"].append(int(p64.sum()))
-                    rows["spatial_sum"].append(
-                        int((p64.reshape(-1) * k).sum())
-                    )
-                    rows["peak"].append(int(p64.max()))
-            yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        w, h, us, frames = parse_mjpeg_avi(bytes(payload))
+        for idx, planes in enumerate(frames):
+            yield aid, idx, idx * us // 1000, w, h, *_pixel_stats(planes)
 
-    return df.mapInPandas(run, MJPEG_FRAME_STATS_SCHEMA)
+    return _explode(
+        df, ["asset_id", payload_col], MJPEG_FRAME_STATS_SCHEMA, rows_of
+    )
 
 
 # --- Real compressed-image decode #2: stdlib PNG codec ---------------------
@@ -1573,59 +1486,23 @@ def png_from_documents(docs: DataFrame) -> DataFrame:
     five predictors. PNG is lossless, so every decoded stat is
     recomputable exactly in the DuckDB oracle — and a decoder that
     botches any filter inverse cannot hash-match."""
+    return _synthesize(docs, "image", _png_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = did % 6 + 2, did % 4 + 2
-                k = np.arange(h * w * 3, dtype=np.int64)
-                px = ((did * 19 + k * 41) % 256).astype(np.uint8).reshape(
-                    h, w, 3
-                )
-                out["asset_id"].append(did)
-                out["media_type"].append("image")
-                out["payload"].append(_png_bytes(px, filter_mode="cycle"))
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("media_type", StringType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def _png_payload(did: int) -> bytes:
+    w, h = did % 6 + 2, did % 4 + 2
+    k = np.arange(h * w * 3, dtype=np.int64)
+    px = ((did * 19 + k * 41) % 256).astype(np.uint8).reshape(h, w, 3)
+    return _png_bytes(px, filter_mode="cycle")
 
 
 def decode_png(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """mapInPandas PNG decode: header fields + exact integer pixel
     stats (same contract as decode_bmp — the index-weighted checksum
     makes filter-inverse or row-order mistakes observable)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in BMP_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                w, h, depth, px = parse_png(bytes(payload))
-                flat = px.reshape(-1).astype(np.int64)
-                rows["asset_id"].append(aid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bits_per_pixel"].append(depth * 3)
-                rows["n_pixels"].append(w * h)
-                for c in range(3):
-                    rows[f"sum_c{c}"].append(int(flat[c::3].sum()))
-                rows["weighted_sum"].append(
-                    int((flat * np.arange(len(flat), dtype=np.int64)).sum())
-                )
-                rows["peak"].append(int(flat.max()) if len(flat) else 0)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
+    return _explode(
+        df, ["asset_id", payload_col], BMP_STATS_SCHEMA, _image_rows(parse_png, 3)
+    )
 
 
 # --- Real compressed-video decode #2: MJPEG-in-MP4 (ISO-BMFF) --------------
@@ -1902,35 +1779,11 @@ def mp4_from_documents(docs: DataFrame) -> DataFrame:
     block-constant planes; block (f, c, b) holds
     (doc_id·41 + f·131 + (c·nb + b)·19) mod 256 — exact through the
     JPEG layer at flat q=8, so the oracle recomputes decoded stats."""
+    return _synthesize(docs, "video", _mp4_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                nf, h, w = did % 3 + 1, 8, 8 * (did % 2 + 1)
-                nb = w // 8
-                frames = np.zeros((nf, 3, h, w), dtype=np.uint8)
-                for f in range(nf):
-                    for c in range(3):
-                        for b in range(nb):
-                            v = (did * 41 + f * 131 + (c * nb + b) * 19) % 256
-                            frames[f, c, :, b * 8 : b * 8 + 8] = v
-                out["asset_id"].append(did)
-                out["media_type"].append("video")
-                out["payload"].append(_mp4_bytes(frames))
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("media_type", StringType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def _mp4_payload(did: int) -> bytes:
+    return _mp4_bytes(_block_frames(did, 41, 131, 19))
 
 
 def decode_mp4_frames(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -1941,27 +1794,14 @@ def decode_mp4_frames(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     stts deltas scaled by the mdhd timescale. Payloads stay
     partition-local."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in MJPEG_FRAME_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                w, h, timescale, frames = parse_mp4(bytes(payload))
-                for idx, (ticks, planes) in enumerate(frames):
-                    p64 = planes.astype(np.int64)
-                    k = np.arange(p64.size, dtype=np.int64)
-                    rows["asset_id"].append(aid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_ts_ms"].append(ticks * 1000 // timescale)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_px"].append(int(p64.sum()))
-                    rows["spatial_sum"].append(
-                        int((p64.reshape(-1) * k).sum())
-                    )
-                    rows["peak"].append(int(p64.max()))
-            yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        w, h, timescale, frames = parse_mp4(bytes(payload))
+        for idx, (ticks, planes) in enumerate(frames):
+            yield aid, idx, ticks * 1000 // timescale, w, h, *_pixel_stats(planes)
 
-    return df.mapInPandas(run, MJPEG_FRAME_STATS_SCHEMA)
+    return _explode(
+        df, ["asset_id", payload_col], MJPEG_FRAME_STATS_SCHEMA, rows_of
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2195,26 +2035,14 @@ def sample_gif_frames(
     sampled frame. frame_ts_ms comes from the GCE delay (real timing
     metadata, centiseconds). Payloads stay partition-local."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in VIDEO_FRAME_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf[payload_col]):
-                w, h, delay_cs, frames = parse_gif(bytes(payload))
-                for idx in range(0, len(frames), stride):
-                    flat = frames[idx].reshape(-1).astype(np.int64)
-                    rows["asset_id"].append(aid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_ts_ms"].append(idx * delay_cs * 10)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_px"].append(int(flat.sum()))
-                    rows["weighted_sum"].append(
-                        int((flat * np.arange(len(flat), dtype=np.int64)).sum())
-                    )
-                    rows["peak"].append(int(flat.max()))
-            yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        w, h, delay_cs, frames = parse_gif(bytes(payload))
+        for idx in range(0, len(frames), stride):
+            yield aid, idx, idx * delay_cs * 10, w, h, *_pixel_stats(frames[idx])
 
-    return df.mapInPandas(run, VIDEO_FRAME_STATS_SCHEMA)
+    return _explode(
+        df, ["asset_id", payload_col], VIDEO_FRAME_STATS_SCHEMA, rows_of
+    )
 
 
 def gif_from_documents(docs: DataFrame) -> DataFrame:
@@ -2225,36 +2053,19 @@ def gif_from_documents(docs: DataFrame) -> DataFrame:
     (doc_id·37 + f·59 + k·13) mod 256. GIF-LZW is lossless, so every
     sampled-frame stat is recomputable exactly in the DuckDB
     oracle."""
+    return _synthesize(docs, "image_anim", _gif_payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "media_type": [], "payload": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                nf, w, h = did % 3 + 2, did % 5 + 2, did % 4 + 2
-                k = np.arange(h * w, dtype=np.int64)
-                frames = np.stack(
-                    [
-                        ((did * 37 + f * 59 + k * 13) % 256)
-                        .astype(np.uint8)
-                        .reshape(h, w)
-                        for f in range(nf)
-                    ]
-                )
-                out["asset_id"].append(did)
-                out["media_type"].append("image_anim")
-                out["payload"].append(_gif_bytes(frames))
-            yield pd.DataFrame(out)
 
-    return docs.select("doc_id").mapInPandas(
-        run,
-        StructType(
+def _gif_payload(did: int) -> bytes:
+    nf, w, h = did % 3 + 2, did % 5 + 2, did % 4 + 2
+    k = np.arange(h * w, dtype=np.int64)
+    return _gif_bytes(
+        np.stack(
             [
-                StructField("asset_id", LongType()),
-                StructField("media_type", StringType()),
-                StructField("payload", BinaryType()),
+                ((did * 37 + f * 59 + k * 13) % 256).astype(np.uint8).reshape(h, w)
+                for f in range(nf)
             ]
-        ),
+        )
     )
 
 
@@ -2311,16 +2122,24 @@ def build_tar_shard(members: list[tuple[str, bytes]]) -> bytes:
     return bytes(out)
 
 
+@_foreign_payload_guard
 def parse_tar_members(blob: bytes) -> list[tuple[str, bytes]]:
     """Walk a tar archive's 512-byte headers: NUL-terminated name,
     octal size, end-of-archive at the first all-zero block. The
     header CHECKSUM is verified (unsigned-byte sum with the checksum
     field treated as spaces — the POSIX rule); a mismatch raises
-    instead of yielding garbage members. Non-file typeflags are
-    skipped but their payload blocks are consumed."""
+    instead of yielding garbage members. So does truncation: a member
+    whose payload runs past the end of the blob, or a blob that ends
+    before the end-of-archive block. Non-file typeflags are skipped
+    but their payload blocks are consumed."""
     members: list[tuple[str, bytes]] = []
     off = 0
-    while off + _TAR_BLOCK <= len(blob):
+    while True:
+        if off + _TAR_BLOCK > len(blob):
+            raise ValueError(
+                f"tar archive truncated at offset {off}: "
+                "no end-of-archive block"
+            )
         hdr = blob[off : off + _TAR_BLOCK]
         if hdr == b"\x00" * _TAR_BLOCK:
             break
@@ -2335,6 +2154,11 @@ def parse_tar_members(blob: bytes) -> list[tuple[str, bytes]]:
         size = int(hdr[124:136].split(b"\x00")[0].strip() or b"0", 8)
         typeflag = chr(hdr[156])
         payload = blob[off + _TAR_BLOCK : off + _TAR_BLOCK + size]
+        if len(payload) != size:
+            raise ValueError(
+                f"tar member {name!r} truncated: {len(payload)} of "
+                f"{size} bytes"
+            )
         if typeflag in ("0", "\x00"):
             members.append((name, payload))
         off += _TAR_BLOCK + size + ((-size) % _TAR_BLOCK)
@@ -2348,25 +2172,20 @@ def untar_members(df: DataFrame) -> DataFrame:
     never shuffle: parsing is partition-local and only typed summary
     columns leave the codec boundary — the same contract as every
     media decode in this module."""
+    return _explode(
+        df, ["shard_id", "payload"], TAR_MEMBER_SCHEMA, _member_rows(parse_tar_members)
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for name, data in parse_tar_members(bytes(payload)):
-                    rows.append(
-                        (
-                            int(shard_id),
-                            name,
-                            len(data),
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["shard_id", "name", "n_bytes", "payload_md5"]
-            )
 
-    return df.mapInPandas(run, TAR_MEMBER_SCHEMA)
+def _member_rows(parse):
+    """TAR_MEMBER_SCHEMA row function over a (name, bytes) member
+    parser: one (shard_id, name, n_bytes, payload_md5) per member."""
+
+    def rows_of(shard_id, payload):
+        for name, data in parse(bytes(payload)):
+            yield int(shard_id), name, len(data), hashlib.md5(data).hexdigest()
+
+    return rows_of
 
 
 # --- Avro Object Container Files -------------------------------------------
@@ -2492,6 +2311,7 @@ def avro_ocf_bytes(
     return bytes(out)
 
 
+@_foreign_payload_guard
 def parse_avro_ocf(blob: bytes) -> tuple[str, list[tuple]]:
     """Walk an OCF: validate magic, read the metadata map, require
     the null codec, then decode every block and VERIFY each block's
@@ -2558,19 +2378,12 @@ def decode_avro_events(df: DataFrame) -> DataFrame:
     """mapInPandas OCF explosion for the events record shape:
     (payload) → one row per record. Partition-local; payloads never
     shuffle — the same contract as every codec in this module."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for payload in pdf["payload"]:
-                _schema, recs = parse_avro_ocf(bytes(payload))
-                rows.extend(recs)
-            yield pd.DataFrame(
-                rows,
-                columns=["event_id", "user_id", "event_type", "value"],
-            )
-
-    return df.mapInPandas(run, AVRO_EVENT_SCHEMA)
+    return _explode(
+        df,
+        ["payload"],
+        AVRO_EVENT_SCHEMA,
+        lambda payload: parse_avro_ocf(bytes(payload))[1],
+    )
 
 
 # --- WARC shards (round 11) -------------------------------------------------
@@ -2680,6 +2493,7 @@ def build_warc_gz_shard(records: list[tuple[str, bytes]]) -> bytes:
     )
 
 
+@_foreign_payload_guard
 def parse_warc_records(blob: bytes) -> list[tuple[str, str, bytes]]:
     """Strict WARC walk → [(warc_type, target_uri, block)]. Each
     record must open with the exact version line, carry a parseable
@@ -2763,6 +2577,7 @@ def _warc_gz_members(
         member_idx += 1
 
 
+@_foreign_payload_guard
 def parse_warc_gz_records(
     blob: bytes,
 ) -> list[tuple[int, str, str, bytes]]:
@@ -2806,36 +2621,15 @@ def unwarc_gz_records(df: DataFrame) -> DataFrame:
     member chain, what a CDX index would address). Payloads never
     shuffle — partition-local codec boundary."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for midx, wtype, uri, block in parse_warc_gz_records(
-                    bytes(payload)
-                ):
-                    if wtype != "response":
-                        continue
-                    rows.append(
-                        (
-                            int(shard_id),
-                            midx,
-                            uri,
-                            len(block),
-                            hashlib.md5(block).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard_id",
-                    "member_idx",
-                    "uri",
-                    "n_bytes",
-                    "payload_md5",
-                ],
-            )
+    def rows_of(shard_id, payload):
+        for midx, wtype, uri, block in parse_warc_gz_records(bytes(payload)):
+            if wtype == "response":
+                yield (
+                    int(shard_id), midx, uri, len(block),
+                    hashlib.md5(block).hexdigest(),
+                )
 
-    return df.mapInPandas(run, WARC_GZ_RECORD_SCHEMA)
+    return _explode(df, ["shard_id", "payload"], WARC_GZ_RECORD_SCHEMA, rows_of)
 
 
 WARC_CDX_SCHEMA = StructType(
@@ -2864,53 +2658,30 @@ def warc_gz_cdx(df: DataFrame) -> DataFrame:
     (DuckDB cannot gzip), which is exactly why the round-trip proof
     is part of the certified row. Payloads never shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, payload in zip(pdf["shard_id"], pdf["payload"]):
-                blob = bytes(payload)
-                for midx, off, length, inflated in _warc_gz_members(blob):
-                    recs = parse_warc_records(inflated)
-                    if len(recs) != 1:
-                        raise ValueError(
-                            f"member {midx}: {len(recs)} records"
-                        )
-                    wtype, uri, block = recs[0]
-                    if wtype != "response":
-                        continue
-                    # the seek: inflate ONLY the indexed byte range
-                    sliced = blob[off : off + length]
-                    d = zlib.decompressobj(wbits=31)
-                    seek_block = parse_warc_records(d.decompress(sliced))
-                    seek_ok = (
-                        d.eof
-                        and not d.unused_data
-                        and len(seek_block) == 1
-                        and seek_block[0][2] == block
-                    )
-                    rows.append(
-                        (
-                            int(shard_id),
-                            midx,
-                            uri,
-                            len(block),
-                            hashlib.md5(block).hexdigest(),
-                            bool(seek_ok),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard_id",
-                    "member_idx",
-                    "uri",
-                    "n_bytes",
-                    "payload_md5",
-                    "seek_ok",
-                ],
+    def rows_of(shard_id, payload):
+        blob = bytes(payload)
+        for midx, off, length, inflated in _warc_gz_members(blob):
+            recs = parse_warc_records(inflated)
+            if len(recs) != 1:
+                raise ValueError(f"member {midx}: {len(recs)} records")
+            wtype, uri, block = recs[0]
+            if wtype != "response":
+                continue
+            # the seek: inflate ONLY the indexed byte range
+            d = zlib.decompressobj(wbits=31)
+            seek_block = parse_warc_records(d.decompress(blob[off : off + length]))
+            seek_ok = (
+                d.eof
+                and not d.unused_data
+                and len(seek_block) == 1
+                and seek_block[0][2] == block
+            )
+            yield (
+                int(shard_id), midx, uri, len(block),
+                hashlib.md5(block).hexdigest(), bool(seek_ok),
             )
 
-    return df.mapInPandas(run, WARC_CDX_SCHEMA)
+    return _explode(df, ["shard_id", "payload"], WARC_CDX_SCHEMA, rows_of)
 
 
 def unwarc_records(df: DataFrame) -> DataFrame:
@@ -2919,26 +2690,12 @@ def unwarc_records(df: DataFrame) -> DataFrame:
     block md5 (warcinfo records are consumed and skipped). Payloads
     never shuffle — partition-local codec boundary."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for wtype, uri, block in parse_warc_records(bytes(payload)):
-                    if wtype != "response":
-                        continue
-                    rows.append(
-                        (
-                            int(shard_id),
-                            uri,
-                            len(block),
-                            hashlib.md5(block).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["shard_id", "uri", "n_bytes", "payload_md5"]
-            )
+    def rows_of(shard_id, payload):
+        for wtype, uri, block in parse_warc_records(bytes(payload)):
+            if wtype == "response":
+                yield int(shard_id), uri, len(block), hashlib.md5(block).hexdigest()
 
-    return df.mapInPandas(run, WARC_RECORD_SCHEMA)
+    return _explode(df, ["shard_id", "payload"], WARC_RECORD_SCHEMA, rows_of)
 
 
 # --- ZIP shards (round 11) ---------------------------------------------------
@@ -3029,6 +2786,7 @@ def build_zip_shard(members: list[tuple[str, bytes]]) -> bytes:
     return bytes(out)
 
 
+@_foreign_payload_guard
 def parse_zip_members(blob: bytes) -> list[tuple[str, bytes]]:
     """Central-directory walk (the spec's authoritative index) →
     [(name, payload)]. STORED and DEFLATE entries supported; every
@@ -3077,22 +2835,6 @@ def unzip_members(df: DataFrame) -> DataFrame:
     """mapInPandas shard explosion: (shard_id, payload) → one row per
     member with name, byte length, payload md5 — the same summary
     contract as untar_members; payloads never shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for shard_id, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for name, data in parse_zip_members(bytes(payload)):
-                    rows.append(
-                        (
-                            int(shard_id),
-                            name,
-                            len(data),
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["shard_id", "name", "n_bytes", "payload_md5"]
-            )
-
-    return df.mapInPandas(run, TAR_MEMBER_SCHEMA)
+    return _explode(
+        df, ["shard_id", "payload"], TAR_MEMBER_SCHEMA, _member_rows(parse_zip_members)
+    )

@@ -9,7 +9,7 @@ oracles. Per-row only: zero shuffles at any scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_streams_pipeline_spark.functions.hashing import (
@@ -2565,10 +2565,7 @@ def boilerplate_scrub(
     lists, one doc-keyed shuffle) and the final join puts lists, not
     text, on the wire. The rewrite itself is one codegen'd
     higher-order filter over (position, token) pairs."""
-    from kafka_streams_pipeline_spark.operators.dedup import (
-        _safe_offsets,
-        _spark_hash,
-    )
+    from kafka_streams_pipeline_spark.operators.dedup import _safe_offsets
 
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -237,6 +237,24 @@ def test_extract_features_rejects_unknown_media_type(spark):
         multimodal.extract_features(df).collect()
 
 
+def test_extract_features_leaves_session_conf_alone(spark):
+    """Building the feature frame sets no session conf: the Arrow
+    batch size stays whatever the session had (here: unset)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        multimodal.extract_features(
+            multimodal.typed_media_from_documents(
+                spark.createDataFrame([(1,)], "doc_id long")
+            )
+        )
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is not None:
+            spark.conf.set(key, before)
+
+
 def test_wav_parser_reads_stdlib_wave_files(tmp_path):
     """parse_wav decodes files written by Python's own `wave` module —
     a genuinely independent RIFF writer — byte-exact."""
@@ -1701,13 +1719,30 @@ def test_tar_shard_roundtrip_and_external_anchor():
         assert "checksum" in str(e)
 
 
+def test_tar_truncation_raises():
+    """A member whose payload runs past the end of the blob, or a blob
+    that ends before the end-of-archive block, raises ValueError
+    instead of yielding a short member."""
+    from kafka_streams_pipeline_spark.operators.multimodal import (
+        build_tar_shard,
+        parse_tar_members,
+    )
+
+    blob = build_tar_shard([("a.txt", b"hello" * 50), ("b.txt", b"x" * 700)])
+    with pytest.raises(ValueError, match="truncated"):
+        parse_tar_members(blob[:700])  # inside a.txt's payload
+    with pytest.raises(ValueError, match="end-of-archive"):
+        parse_tar_members(blob[:1024])  # a.txt whole, padding and all
+    with pytest.raises(ValueError, match="end-of-archive"):
+        parse_tar_members(b"")
+    assert [n for n, _ in parse_tar_members(blob)] == ["a.txt", "b.txt"]
+
+
 def test_cdc_chunks_resynchronize_after_insertion(spark):
     """The CDC property fixed-width chunking lacks: a one-word
     insertion near the top of a near-copy shifts every fixed chunk
     (zero boilerplate found) but content-defined boundaries
     re-synchronize, so the shared tail still dedups."""
-    from pyspark.sql import functions as F
-
     from kafka_streams_pipeline_spark.operators.corpus import (
         cdc_chunk_dedup,
         chunk_dedup,
@@ -1791,8 +1826,6 @@ def test_avro_ocf_spec_vectors_and_corruption():
     round-trip with negative longs / unicode strings / doubles,
     loud failure on sync-marker corruption and truncated blocks,
     and loud rejection of complex types and non-null codecs."""
-    import struct
-
     from kafka_streams_pipeline_spark.operators.multimodal import (
         _avro_zigzag,
         avro_ocf_bytes,
@@ -1829,12 +1862,9 @@ def test_avro_ocf_spec_vectors_and_corruption():
     except ValueError as e:
         assert "sync" in str(e)
 
-    # truncated mid-block -> loud (index error or size mismatch)
-    try:
+    # truncated mid-block -> loud
+    with pytest.raises(ValueError):
         parse_avro_ocf(blob[: len(blob) - 20])
-        raise AssertionError("truncated container accepted")
-    except (ValueError, IndexError, struct.error):
-        pass
 
     # complex type / wrong codec rejected
     try:

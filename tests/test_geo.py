@@ -6,8 +6,6 @@ own README reading (README.md:12-16: geohash u155mz82dv33).
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st

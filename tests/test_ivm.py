@@ -3,8 +3,6 @@ aggregate maintenance rule, including the group-death (count reaches
 zero → view-row tombstone) and rebirth paths the fixture-backed
 registry rows cannot reach."""
 
-from pyspark.sql import functions as F
-
 from kafka_streams_pipeline_spark.operators.ivm import agg_view_apply
 from kafka_streams_pipeline_spark.sources.versioned import TOMBSTONE
 

@@ -441,6 +441,35 @@ def test_junk_payload_never_crashes(codec, junk):
     _must_parse_or_valueerror(parser, junk, f"{codec} junk[{len(junk)}]")
 
 
+def test_container_prefixes_parse_or_raise_valueerror():
+    """Every prefix of one small shard per container format either
+    parses cleanly or raises ValueError — a truncated download must
+    never surface as IndexError / struct.error from the walkers."""
+    members = [("a.txt", b"hello" * 50), ("b.txt", b"x" * 700)]
+    records = [("https://corpus.example/doc/1", b"hello" * 50)]
+    schema = (
+        '{"type":"record","name":"T","fields":['
+        '{"name":"i","type":"long"},{"name":"s","type":"string"},'
+        '{"name":"d","type":"double"},{"name":"b","type":"boolean"}]}'
+    )
+    shards = {
+        "tar": (mm.parse_tar_members, mm.build_tar_shard(members)),
+        "zip": (mm.parse_zip_members, mm.build_zip_shard(members)),
+        "warc": (mm.parse_warc_records, mm.build_warc_shard(records)),
+        "warc.gz": (mm.parse_warc_gz_records, mm.build_warc_gz_shard(records)),
+        "avro": (
+            mm.parse_avro_ocf,
+            mm.avro_ocf_bytes(
+                schema, [(1, "x", 0.5, True), (-300, "yz", -2.0, False)],
+                rows_per_block=1,
+            ),
+        ),
+    }
+    for fmt, (parser, blob) in shards.items():
+        for cut in range(len(blob)):
+            _must_parse_or_valueerror(parser, blob[:cut], f"{fmt}[:{cut}]")
+
+
 # --- union-find vs BFS reference (round-5 components fast path) -----------
 
 

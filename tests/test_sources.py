@@ -972,7 +972,6 @@ def test_version_at_vacuumed_store_raises_valueerror(spark, tmp_path):
     version — not surface a FileNotFoundError from a pruned
     manifest."""
     import json
-    import os
 
     import pytest
 
@@ -1136,10 +1135,6 @@ def test_retention_rollup_aligned_idempotent_and_conserving(spark, tmp_path):
     bucket starting before it), measure conservation (sum of n /
     sum_cents invariant), exact idempotence, and the replace-history
     commit enabling vacuum of the raw batches."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
         read_corpus,

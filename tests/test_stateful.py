@@ -279,8 +279,6 @@ def test_running_totals_survive_restart(spark, sf_dir, tmp_path):
     same checkpoint — the final per-sensor totals must equal the
     batch aggregate over everything (state carried, nothing
     reprocessed or lost)."""
-    import shutil
-
     from kafka_streams_pipeline_spark.streaming.stateful import (
         running_sensor_totals,
     )

@@ -675,8 +675,6 @@ def test_store_ingest_exactly_once_across_replay(spark, tmp_path):
     import os
     import time
 
-    from pyspark.sql import functions as F
-
     from kafka_streams_pipeline_spark.sources.versioned import (
         latest_version,
         read_corpus,
@@ -734,8 +732,6 @@ def test_store_upsert_sink_applies_cdc_stream(spark, tmp_path):
     and raw history still carries every correction batch."""
     import os
     import time
-
-    from pyspark.sql import functions as F
 
     from kafka_streams_pipeline_spark.sources.versioned import (
         commit_corpus,
@@ -846,8 +842,6 @@ def test_store_sink_quarantines_poisoned_batches(spark, tmp_path):
     checks without a quarantine_dir refuse up front."""
     import json
     import os
-
-    from pyspark.sql import functions as F
 
     from kafka_streams_pipeline_spark.operators.quality import Check
     from kafka_streams_pipeline_spark.sources.versioned import (

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from kafka_streams_pipeline_spark.operators.text import keyword_extract
 from kafka_streams_pipeline_spark.operators.similarity import rrf_fusion
 from kafka_streams_pipeline_spark.operators.timeseries import (

@@ -18,7 +18,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_streams_pipeline_spark import inventory  # noqa: E402
 from kafka_streams_pipeline_spark.inventory._registry import (  # noqa: E402
     BENCH_QUERIES,
     MATERIALIZING,
