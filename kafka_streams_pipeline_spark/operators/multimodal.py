@@ -2341,6 +2341,8 @@ def parse_avro_ocf(blob: bytes) -> tuple[str, list[tuple]]:
     schema_json = meta["avro.schema"].decode()
     fields = _avro_fields(schema_json)
     sync = blob[pos : pos + 16]
+    if len(sync) != 16:
+        raise ValueError("avro header sync marker truncated")
     pos += 16
     rows: list[tuple] = []
     while pos < len(blob):

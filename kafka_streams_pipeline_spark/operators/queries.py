@@ -12,7 +12,8 @@ Reference endpoints (SURVEY.md §3.2/§3.3):
 The reference's scatter-gather over HTTP + TreeMap merge
 (querying/QueryingController.java:98-167, querying/util/Aggregator.java:17-30)
 collapses into a single groupBy here: Spark's partial/final hash
-aggregation over the shuffle IS the distributed merge (§2.3 A7).
+aggregation IS the merge (§2.3 A7) — over a shuffle in merge_views
+and reaggregate_precision, inside one task for a served query.
 
 All merges recompute avg from merged sums — sum(sum)/sum(count) —
 never average the averages (Aggregator.java:20).
@@ -20,15 +21,33 @@ never average the averages (Aggregator.java:20).
 Scale posture: every query filters the view on (gh, window_start)
 BEFORE aggregating, so with the view stored partitioned by
 window_start date (the ws_date layout of sources/sinks.py) the scan
-partition-prunes on time and min/max-skips on gh. The scan and the partial
-aggregation run at full parallelism; the one exchange per query is
-the shuffle into the final aggregate. The merged result is ordered on
-one partition instead of by a global sort (which would add a
-range-partition sampling job and a second exchange). That is bounded
-by construction: a history result holds at most one row per window in
-the requested range, a snapshot result at most one row per stored
-cell under a cover of ≤64 prefixes (geo.cover_bbox_adaptive), and the
-serving layer collects the result to the driver anyway.
+partition-prunes on time and min/max-skips on gh. A history, history
+interval or snapshot request then runs as one job of one task (plus
+history_interval's max job when ``to`` is not given): the
+pruned scan is coalesced to one partition, and the partial and final
+aggregates and the ordering run in that task, with no exchange.
+Spark's per-job and per-stage coordination, not the scan, is what
+dominates a request, so that is where the plan saves. The price is
+that the pruned scan is not parallel within a request; serving
+parallelism comes from concurrent requests (the reference's
+per-instance WindowStore fetch, querying/QueryingService.java:38-203,
+is single-threaded too). The files one request reads are the ws_date
+partitions its range prunes to:
+
+- snapshot: 1;
+- history_interval ``1day`` / ``1week`` / ``1month``: at most
+  2 / 8 / 32;
+- history with from/to: the days the range touches;
+- history with no from/to, and history_interval ``all``: the whole
+  store, in one task.
+
+Measured on 4 vCPU (in-process, one caller, median of 5 warm runs), a
+whole-store history over 20 cells with no from/to took 360 ms on an
+87k-row, 21-file store (439 ms with the scan parallel and a shuffle
+into the final aggregate) and 399 ms on a 795k-row, 21-file store
+(479 ms parallel). The one-task scan's cost grows with the rows the
+range reaches: an unbounded request over a much larger store pays
+its whole scan on one core.
 """
 
 from __future__ import annotations
@@ -138,15 +157,19 @@ def _rollup(
     aggregate triple (by reflection there; a first-class column
     reference here, §2.7 F9) — ascending by ``name`` (O1/O2).
 
-    The merged result is small (see "Scale posture"), so it is ordered
-    on one partition: no range-partition sampling job, no second
-    exchange, and ``limit(n)`` still takes the first n keys."""
+    The filtered scan is coalesced to one partition BEFORE the
+    aggregate, so the whole request is one stage of one task: the
+    aggregate's clustering is already satisfied, no exchange or
+    range-partition sampling job runs, and ``limit(n)`` still takes
+    the first n keys. Partition pruning and the pushed gh/window_start
+    filters are unaffected (they sit below the coalesce); the bound is
+    that the pruned scan runs in that one task (see "Scale posture")."""
     return (
         view.where(functools.reduce(operator.and_, conds))
+        .coalesce(1)
         .groupBy(by)
         .agg(_merged(op).alias(op))
         .select(key.alias(name), op)
-        .coalesce(1)
         .sortWithinPartitions(name)
     )
 

@@ -100,12 +100,17 @@ def start_file_stream_pipeline(
     cost. Pinned by the checkpoint at the stream's first start;
     results do not depend on it.
 
-    ``rocksdb_state``: use the RocksDB state-store provider with
-    changelog checkpointing (per-batch delta uploads instead of full
-    HDFS-backed snapshots). Also pinned at first start via the
-    checkpoint. Both knobs are applied through the streaming query's
-    cloned session conf, so they never leak into the caller's
-    session."""
+    ``rocksdb_state``: select the RocksDB state-store provider and
+    turn on its changelog checkpointing (each commit uploads the
+    batch's changelog instead of a RocksDB checkpoint of the store).
+    Under ``get_spark`` the provider is already RocksDB
+    (``session.SESSION_CONFS``), so there the flag only adds changelog
+    checkpointing, and ``False`` means RocksDB without changelog, not
+    the HDFS-backed provider; on a session that selects no provider,
+    ``False`` leaves Spark's default HDFS-backed store. Pinned at first
+    start via the checkpoint. Both knobs are applied through the
+    streaming query's cloned session conf, so they never leak into the
+    caller's session."""
     reader = spark.readStream.schema(READING_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

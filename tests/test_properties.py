@@ -11,6 +11,7 @@ import datetime as dt
 import math
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -303,8 +304,6 @@ def test_jpeg_fill_bytes_between_segments():
 def test_jpeg_trailing_fill_truncation_is_valueerror():
     """All-0xFF tail (truncated mid-fill) must raise the decoder's
     ValueError, not IndexError."""
-    import pytest
-
     with pytest.raises(ValueError):
         mm.parse_jpeg(b"\xff\xd8" + b"\xff" * 6)
 
@@ -313,8 +312,6 @@ def test_png_truncated_chunk_is_valueerror():
     """A chunk whose declared length overruns the payload must raise
     ValueError (clean rejection of foreign/corrupt input), never
     struct.error from the CRC unpack."""
-    import pytest
-
     px = np.zeros((4, 4, 3), dtype=np.uint8)
     raw = mm._png_bytes(px, "none")
     with pytest.raises(ValueError, match="truncated PNG chunk"):
@@ -357,8 +354,6 @@ def test_mp4_block_constant_exact():
 
 
 def test_mp4_rejects_foreign_and_truncated():
-    import pytest
-
     frames = np.full((1, 3, 8, 8), 7, dtype=np.uint8)
     raw = mm._mp4_bytes(frames)
     # non-jpeg codec entry rejected by name
@@ -444,7 +439,9 @@ def test_junk_payload_never_crashes(codec, junk):
 def test_container_prefixes_parse_or_raise_valueerror():
     """Every prefix of one small shard per container format either
     parses cleanly or raises ValueError — a truncated download must
-    never surface as IndexError / struct.error from the walkers."""
+    never surface as IndexError / struct.error from the walkers. An
+    Avro blob cut inside its 16-byte header sync marker must raise,
+    not parse as a clean zero-row file."""
     members = [("a.txt", b"hello" * 50), ("b.txt", b"x" * 700)]
     records = [("https://corpus.example/doc/1", b"hello" * 50)]
     schema = (
@@ -452,22 +449,26 @@ def test_container_prefixes_parse_or_raise_valueerror():
         '{"name":"i","type":"long"},{"name":"s","type":"string"},'
         '{"name":"d","type":"double"},{"name":"b","type":"boolean"}]}'
     )
+    avro = mm.avro_ocf_bytes(
+        schema, [(1, "x", 0.5, True), (-300, "yz", -2.0, False)],
+        rows_per_block=1,
+    )
     shards = {
         "tar": (mm.parse_tar_members, mm.build_tar_shard(members)),
         "zip": (mm.parse_zip_members, mm.build_zip_shard(members)),
         "warc": (mm.parse_warc_records, mm.build_warc_shard(records)),
         "warc.gz": (mm.parse_warc_gz_records, mm.build_warc_gz_shard(records)),
-        "avro": (
-            mm.parse_avro_ocf,
-            mm.avro_ocf_bytes(
-                schema, [(1, "x", 0.5, True), (-300, "yz", -2.0, False)],
-                rows_per_block=1,
-            ),
-        ),
+        "avro": (mm.parse_avro_ocf, avro),
     }
     for fmt, (parser, blob) in shards.items():
         for cut in range(len(blob)):
             _must_parse_or_valueerror(parser, blob[:cut], f"{fmt}[:{cut}]")
+    # every block ends with a copy of the header sync marker, so the
+    # blob's last 16 bytes locate the header's
+    sync_at = avro.index(avro[-16:])
+    for cut in range(sync_at, sync_at + 16):
+        with pytest.raises(ValueError):
+            mm.parse_avro_ocf(avro[:cut])
 
 
 # --- union-find vs BFS reference (round-5 components fast path) -----------

@@ -191,10 +191,13 @@ def test_envelope_shape(view):
 
 
 def test_stored_view_queries_run_in_two_jobs(spark, view, tmp_path):
-    """A history/snapshot request over a ws_date store is one shuffle
-    into the final aggregate plus the result stage: the merged result
-    is ordered on one partition, so no range-partition sampling job
-    or second exchange runs."""
+    """A history/snapshot request over a ws_date store is one job of
+    one stage: the pruned scan is coalesced to one partition before
+    the aggregate, so the merge needs no shuffle, and the result is
+    ordered on that partition — no Exchange in the executed plan, no
+    range-partition sampling job. A whole-store history (no from/to,
+    every file in one task) still answers exactly as the in-memory
+    view does."""
     from kafka_streams_pipeline_spark.sources.sinks import read_view, write_view
 
     write_view(view, str(tmp_path / "view"))
@@ -216,10 +219,16 @@ def test_stored_view_queries_run_in_two_jobs(spark, view, tmp_path):
         start = scheduler.nextJobId()
         msg = to_message(df)
         jobs = scheduler.nextJobId() - start
-        assert jobs <= 2, (kind, jobs)
+        assert jobs == 1, (kind, jobs)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (kind, plan)
         keys = [row[0] for row in msg["data"]]  # timestamp or geohash
         assert keys, kind
         assert keys == sorted(keys), kind
+
+    whole = history(stored, "avg", cells).collect()
+    assert len(whole) > 1
+    assert whole == history(view, "avg", cells).collect()
 
 
 def test_validation_errors(view):
