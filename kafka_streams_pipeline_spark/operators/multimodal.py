@@ -2131,7 +2131,13 @@ def parse_tar_members(blob: bytes) -> list[tuple[str, bytes]]:
     instead of yielding garbage members. So does truncation: a member
     whose payload runs past the end of the blob, or a blob that ends
     before the end-of-archive block. Non-file typeflags are skipped
-    but their payload blocks are consumed."""
+    but their payload blocks are consumed.
+
+    Carry-over contract: the walk stops at the FIRST zero block, so a
+    blob cut anywhere after it (inside or before the second zero
+    block) parses clean with every member. Such a blob cannot be told
+    from a complete archive whose writer wrote one zero block. Every
+    shorter cut raises."""
     members: list[tuple[str, bytes]] = []
     off = 0
     while True:
@@ -2316,7 +2322,13 @@ def parse_avro_ocf(blob: bytes) -> tuple[str, list[tuple]]:
     """Walk an OCF: validate magic, read the metadata map, require
     the null codec, then decode every block and VERIFY each block's
     trailing sync marker — a truncated or spliced block fails loudly,
-    never yields silent partial rows."""
+    never yields silent partial rows.
+
+    Carry-over contract: a blob cut exactly at a block boundary (right
+    after the header's sync marker, or right after a block's) parses
+    clean with the rows of the blocks before the cut. Such a blob
+    cannot be told from a shorter file, which is a valid OCF. Every
+    other cut raises."""
     if blob[:4] != _AVRO_MAGIC:
         raise ValueError("not an Avro object container file")
     pos = 4
@@ -2502,7 +2514,12 @@ def parse_warc_records(blob: bytes) -> list[tuple[str, str, bytes]]:
     Content-Length, and terminate with CRLFCRLF after exactly that
     many block bytes — any violation raises instead of yielding a
     silently truncated corpus (the same fail-loud contract as the
-    tar checksum)."""
+    tar checksum).
+
+    Carry-over contract: a blob cut exactly at a record boundary
+    (right after a record's CRLFCRLF) parses clean with the records
+    before the cut. Such a blob cannot be told from a shorter shard,
+    which is a valid WARC file. Every other cut raises."""
     records: list[tuple[str, str, bytes]] = []
     off = 0
     n = len(blob)

@@ -22,9 +22,9 @@ Scale posture: every query filters the view on (gh, window_start)
 BEFORE aggregating, so with the view stored partitioned by
 window_start date (the ws_date layout of sources/sinks.py) the scan
 partition-prunes on time and min/max-skips on gh. A history, history
-interval or snapshot request then runs as one job of one task (plus
-history_interval's max job when ``to`` is not given): the
-pruned scan is coalesced to one partition, and the partial and final
+interval or snapshot request then runs as one job of one task (plus,
+for history_interval with no ``to``, a one-task max job over the
+newest partition): the pruned scan is coalesced to one partition, and the partial and final
 aggregates and the ordering run in that task, with no exchange.
 Spark's per-job and per-stage coordination, not the scan, is what
 dominates a request, so that is where the plan saves. The price is
@@ -41,21 +41,25 @@ partitions its range prunes to:
 - history with no from/to, and history_interval ``all``: the whole
   store, in one task.
 
-Measured on 4 vCPU (in-process, one caller, median of 5 warm runs), a
-whole-store history over 20 cells with no from/to took 360 ms on an
-87k-row, 21-file store (439 ms with the scan parallel and a shuffle
-into the final aggregate) and 399 ms on a 795k-row, 21-file store
-(479 ms parallel). The one-task scan's cost grows with the rows the
-range reaches: an unbounded request over a much larger store pays
-its whole scan on one core.
+A served request (``serving.serve``) also runs without generated
+code, in interpreted evaluation, which costs more per row. Measured
+on 4 vCPU (in-process, one caller, median of 5 warm runs, two passes),
+a whole-store history over 20 cells with no from/to took 178-266 ms
+in the serving session against 194-212 ms in a session with codegen
+(its classes already compiled) on the 87k-row, 21-file perfbench
+serve store, and 442-474 ms against 239-251 ms on a 795k-row, 21-file
+store. The one-task scan's cost grows with the rows the range
+reaches, and at 10x codegen runs it about 1.8x faster: an unbounded
+request over a much larger store pays its whole scan on one core,
+interpreted. A typical request reads a few thousand rows, and there
+the ~2 Janino compiles (~19 ms each) that a request with new literals
+paid under codegen cost more than interpretation does.
 """
 
 from __future__ import annotations
 
 import calendar
 import datetime as dt
-import functools
-import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -69,6 +73,7 @@ from kafka_streams_pipeline_spark.plans.validation import (
     validate_precision,
     validate_time_range,
 )
+from kafka_streams_pipeline_spark.sources.sinks import newest_ws_date
 
 # Calendar arithmetic of querying/QueryingController.java:220-238:
 # 1day → -1 DAY, 1week → -7 DAY, 1month → -1 MONTH, all → -30 YEAR.
@@ -80,6 +85,13 @@ _INTERVAL_EXPR = {
 }
 
 
+def _epoch_ms(t: dt.datetime) -> int:
+    """Epoch millis of a datetime, naive values read as UTC."""
+    if t.tzinfo is not None:
+        return int(t.timestamp() * 1000)
+    return calendar.timegm(t.timetuple()) * 1000 + t.microsecond // 1000
+
+
 def _utc_lit(t: dt.datetime) -> Column:
     """Timestamp literal from a datetime, naive values read as UTC.
 
@@ -88,18 +100,75 @@ def _utc_lit(t: dt.datetime) -> Column:
     different windows on a non-UTC host. Epoch-millis literals are
     timezone-free.
     """
-    if t.tzinfo is not None:
-        ms = int(t.timestamp() * 1000)
-    else:
-        ms = calendar.timegm(t.timetuple()) * 1000 + t.microsecond // 1000
-    return F.timestamp_millis(F.lit(ms))
+    return F.timestamp_millis(F.lit(_epoch_ms(t)))
+
+
+#: Algebraic merge of partial aggregates (Aggregator.java:17-30), as
+#: SQL: the served statements inline it and ``_merged`` wraps it.
+#: View sums are exact micros multiples (operators/view.build_view),
+#: so the merge recovers each group's micros-integer and re-sums as
+#: exact longs — order-independent like the view build itself; the
+#: divide back to double happens once, after the merge.
+_MERGE_SQL = {
+    "count": "sum(`count`)",
+    "sum": "sum(CAST(round(`sum` * 1000000) AS BIGINT)) / 1000000D",
+    "avg": "sum(CAST(round(`sum` * 1000000) AS BIGINT)) / 1000000D / sum(`count`)",
+}
+
+
+def _merged(op: str) -> Column:
+    """The merge of ``op`` as a Column, for re-keyed views."""
+    return F.expr(_MERGE_SQL[op])
+
+
+def _merged_aggs() -> list[Column]:
+    """All three merged aggregates, for re-keyed views."""
+    return [_merged(op).alias(op) for op in AGGREGATE_OPS]
+
+
+def _served(
+    view: DataFrame,
+    conds: list[str],
+    args: dict,
+    by: str,
+    key: str,
+    name: str,
+    op: str,
+) -> DataFrame:
+    """The query family as ONE SQL statement over ``view``: the filter
+    ``conds`` (SQL with named parameter markers bound from ``args``),
+    the merge of the requested aggregate per ``by`` group, and the
+    response projection (name, <op>) — QueryingService.java:205-229
+    picks one field of the aggregate triple (by reflection there; a
+    first-class column reference here, §2.7 F9) — ascending by
+    ``name`` (O1/O2).
+
+    The filtered scan is coalesced to one partition BEFORE the
+    aggregate (the ``COALESCE(1)`` hint on the subquery), so the whole
+    request is one stage of one task: the aggregate's clustering is
+    already satisfied, no exchange or range-partition sampling job
+    runs, and ``limit(n)`` still takes the first n keys (``SORT BY``
+    orders within that one partition). Partition pruning and the
+    pushed gh/window_start filters are unaffected (they sit below the
+    coalesce); the bound is that the pruned scan runs in that one task
+    (see "Scale posture"). One statement is analysed once, where five
+    DataFrame steps were analysed one by one; the time bounds are
+    parameter markers, the cells literals (``_cell_predicate``)."""
+    sql = (
+        f"SELECT {key} AS `{name}`, {_MERGE_SQL[op]} AS `{op}` "
+        "FROM (SELECT /*+ COALESCE(1) */ * FROM {view} "
+        f"WHERE {' AND '.join(conds)}) "
+        f"GROUP BY {by} SORT BY `{name}`"
+    )
+    return view.sparkSession.sql(sql, args, view=view)
 
 
 def _partition_bounds(
     view: DataFrame,
     from_ts: dt.datetime | None,
     to_ts: dt.datetime | None,
-) -> list[Column]:
+    args: dict,
+) -> list[str]:
     """Materialized views carry a ws_date partition column
     (sources/sinks.write_view). Spark cannot infer ws_date bounds from
     window_start predicates, so derive them here — this is what turns
@@ -109,68 +178,42 @@ def _partition_bounds(
         return []
     conds = []
     if from_ts is not None:
-        conds.append(F.col("ws_date") >= F.lit(from_ts.date().isoformat()))
+        args["lo_date"] = from_ts.date().isoformat()
+        conds.append("ws_date >= :lo_date")
     if to_ts is not None:
-        conds.append(F.col("ws_date") <= F.lit(to_ts.date().isoformat()))
+        args["hi_date"] = to_ts.date().isoformat()
+        conds.append("ws_date <= :hi_date")
     return conds
 
 
-def _cell_predicate(cells: list[str], precision: int) -> Column:
+def _cell_predicate(cells: list[str], precision: int) -> str:
     """Cell predicate: cells at least ``precision`` long are truncated
-    to it and matched exactly (one ``isin``, like the store-key lookups
+    to it and matched exactly (one ``IN``, like the store-key lookups
     at querying/QueryingController.java:48-50); shorter ones are
     prefixes matching all their stored completions via ``startswith``
     (the documented generalization of SURVEY.md §2.2 P4). Both push
-    down to the parquet scan."""
-    gh = F.col("gh")
+    down to the parquet scan.
+
+    The cells are SQL string literals, not parameter markers: each
+    marker costs PySpark two py4j round trips (about 0.8 ms on 4
+    vCPU), and a request carries up to 20 cells or 64 cover prefixes.
+    A geohash is base-32 text (validated, or made by ``geo``), so it
+    needs no escaping."""
+    terms = []
     exact = sorted({c[:precision] for c in cells if len(c) >= precision})
-    cond = gh.isin(exact) if exact else F.lit(False)
+    if exact:
+        terms.append("gh IN (" + ", ".join(f"'{c}'" for c in exact) + ")")
     for p in sorted({c for c in cells if len(c) < precision}):
-        cond = cond | gh.startswith(p)
-    return cond
+        terms.append(f"startswith(gh, '{p}')")
+    return f"({' OR '.join(terms)})"
 
 
-def _merged(op: str) -> Column:
-    """Algebraic merge of partial aggregates (Aggregator.java:17-30).
-
-    View sums are exact micros multiples (operators/view.build_view),
-    so the merge recovers each group's micros-integer and re-sums as
-    exact longs — order-independent like the view build itself; the
-    divide back to double happens once, after the merge."""
-    if op == "count":
-        return F.sum("count")
-    su = F.sum(F.round(F.col("sum") * 1000000).cast("long")) / F.lit(1000000.0)
-    return su if op == "sum" else su / F.sum("count")
-
-
-def _merged_aggs() -> list[Column]:
-    """All three merged aggregates, for re-keyed views."""
-    return [_merged(op).alias(op) for op in AGGREGATE_OPS]
-
-
-def _rollup(
-    view: DataFrame, conds: list[Column], by: str, key: Column, name: str, op: str
+def _history(
+    view: DataFrame, op: str, conds: list[str], args: dict
 ) -> DataFrame:
-    """Shared tail of the query family: one filter, the merge of the
-    requested aggregate per ``by`` group, and the response projection
-    (name, <op>) — QueryingService.java:205-229 picks one field of the
-    aggregate triple (by reflection there; a first-class column
-    reference here, §2.7 F9) — ascending by ``name`` (O1/O2).
-
-    The filtered scan is coalesced to one partition BEFORE the
-    aggregate, so the whole request is one stage of one task: the
-    aggregate's clustering is already satisfied, no exchange or
-    range-partition sampling job runs, and ``limit(n)`` still takes
-    the first n keys. Partition pruning and the pushed gh/window_start
-    filters are unaffected (they sit below the coalesce); the bound is
-    that the pruned scan runs in that one task (see "Scale posture")."""
-    return (
-        view.where(functools.reduce(operator.and_, conds))
-        .coalesce(1)
-        .groupBy(by)
-        .agg(_merged(op).alias(op))
-        .select(key.alias(name), op)
-        .sortWithinPartitions(name)
+    return _served(
+        view, conds, args, "window_start", "unix_millis(window_start)",
+        "timestamp", op,
     )
 
 
@@ -195,15 +238,38 @@ def history(
     validate_precision(precision)
     cells = validate_geohashes(geohashes)
     validate_time_range(from_ts, to_ts)
-    conds = _partition_bounds(view, from_ts, to_ts)
+    args: dict = {}
+    conds = _partition_bounds(view, from_ts, to_ts, args)
     conds.append(_cell_predicate(cells, precision))
     if from_ts is not None:
-        conds.append(F.col("window_start") >= _utc_lit(from_ts))
+        args["lo_ms"] = _epoch_ms(from_ts)
+        conds.append("window_start >= timestamp_millis(:lo_ms)")
     if to_ts is not None:
-        conds.append(F.col("window_start") <= _utc_lit(to_ts))
-    return _rollup(
-        view, conds, "window_start", F.unix_millis("window_start"), "timestamp", op
-    )
+        args["hi_ms"] = _epoch_ms(to_ts)
+        conds.append("window_start <= timestamp_millis(:hi_ms)")
+    return _history(view, op, conds, args)
+
+
+def _max_ms(view: DataFrame) -> int | None:
+    """The view's newest event time, max(window_start), as tz-free
+    epoch millis (collecting a timestamp would round-trip through the
+    OS timezone); None for an empty view.
+
+    Over a ws_date store the newest row sits in the newest partition,
+    so only that partition is scanned, in one task: its date comes
+    from the listing the view already holds (``newest_ws_date``, no
+    job). When that partition holds none of the view's rows (a view
+    filtered after the read), and for in-memory views, the whole view
+    is scanned."""
+
+    def newest(df: DataFrame) -> int | None:
+        return df.agg(F.max(F.unix_millis("window_start"))).collect()[0][0]
+
+    date = newest_ws_date(view) if "ws_date" in view.columns else None
+    ms = None
+    if date is not None:
+        ms = newest(view.where(F.col("ws_date") == F.lit(date)).coalesce(1))
+    return newest(view) if ms is None else ms
 
 
 def history_interval(
@@ -216,8 +282,8 @@ def history_interval(
 ) -> DataFrame:
     """Spatio-temporal history (A5): range = [to − interval, to].
 
-    ``to`` defaults to the max event time in the view — NOT
-    wall-clock: the reference uses System.currentTimeMillis
+    ``to`` defaults to the max event time in the view (``_max_ms``) —
+    NOT wall-clock: the reference uses System.currentTimeMillis
     (querying/QueryingController.java:65), which is non-reproducible;
     data-derived "now" is the deterministic stand-in (SURVEY.md §7.1.3).
     An empty view has no max event time, and its answer is empty.
@@ -227,12 +293,8 @@ def history_interval(
     validate_precision(precision)
     cells = validate_geohashes(geohashes)
     if to_ts is None:
-        # derive "now" as tz-free epoch millis (collecting a
-        # timestamp would round-trip through the OS timezone)
-        ms = view.agg(F.max(F.unix_millis("window_start")).alias("m")).collect()[0]["m"]
+        ms = _max_ms(view)
         to_ts = dt.datetime(1970, 1, 1) + dt.timedelta(milliseconds=ms or 0)
-    to_col = _utc_lit(to_ts)
-    from_col = to_col - F.expr(_INTERVAL_EXPR[interval])
     # partition lower bound: a safe over-approximation of to-interval
     _lower = {
         "1day": dt.timedelta(days=1),
@@ -244,14 +306,13 @@ def history_interval(
         lower_ts = to_ts - _lower
     except OverflowError:  # "all" near the epoch — clamp, don't crash
         lower_ts = dt.datetime(1, 1, 1)
-    conds = _partition_bounds(view, lower_ts, to_ts) + [
-        F.col("window_start") >= from_col,
-        F.col("window_start") <= to_col,
+    args: dict = {"to_ms": _epoch_ms(to_ts)}
+    conds = _partition_bounds(view, lower_ts, to_ts, args) + [
+        f"window_start >= timestamp_millis(:to_ms) - {_INTERVAL_EXPR[interval]}",
+        "window_start <= timestamp_millis(:to_ms)",
         _cell_predicate(cells, precision),
     ]
-    return _rollup(
-        view, conds, "window_start", F.unix_millis("window_start"), "timestamp", op
-    )
+    return _history(view, op, conds, args)
 
 
 def snapshot(
@@ -281,13 +342,12 @@ def snapshot(
     north, west, south, east = bbox
     hour = ts.replace(minute=0, second=0, microsecond=0)
     cover = geo.cover_bbox_adaptive(north, west, south, east, max_precision=precision)
-    conds = _partition_bounds(view, hour, hour) + [
-        F.col("window_start") == _utc_lit(hour),
+    args: dict = {"hour_ms": _epoch_ms(hour)}
+    conds = _partition_bounds(view, hour, hour, args) + [
+        "window_start = timestamp_millis(:hour_ms)",
         _cell_predicate(cover, precision),
     ]
-    return _rollup(view, conds, "gh", F.col("gh"), "geohash", op)
-
-
+    return _served(view, conds, args, "gh", "gh", "geohash", op)
 def reaggregate_precision(view: DataFrame, precision: int) -> DataFrame:
     """Query-time precision re-aggregation: the precision-6 view
     re-keyed to a coarser geohash grid by prefix truncation + the A3

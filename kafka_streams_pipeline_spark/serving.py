@@ -19,6 +19,19 @@ The reference's cross-host scatter-gather (`local=true` fan-out) has
 no equivalent because a single Spark query already aggregates the
 distributed view (SURVEY.md §2.3 A7) — the parameter is accepted and
 ignored for API compatibility.
+
+The reference endpoints run in a Spark session of their own: a
+``newSession()`` of the view's session with the caller's SQL confs,
+whole-stage codegen off and ``spark.sql.codegen.factoryMode`` at
+``NO_CODEGEN``, so a request compiles no Java class. A request reads
+a few thousand rows in one task, and Spark's generated code pays off
+only over many more: each request's literals made new classes, about
+two Janino compiles of ~19 ms each per request (4 vCPU, perfbench
+serve_read store), while interpreted evaluation costs a request less
+than that. ``factoryMode`` is an internal Spark conf (checked on
+Spark 4.1.2); ``tests/test_serving.py`` counts the compiles, so an
+upgrade that drops it fails there. The caller's session keeps
+codegen, and so does the ``/api/queries`` route, which runs on it.
 """
 
 from __future__ import annotations
@@ -26,6 +39,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import threading
+import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -177,6 +191,44 @@ class QueryHandler(BaseHTTPRequestHandler):
             self._reply(500, {"errorMessage": str(e), "errorCode": 500})
 
 
+#: What the serving session sets on top of the caller's SQL confs
+#: (see the module docstring).
+_NO_CODEGEN = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+
+
+class _Server(ThreadingHTTPServer):
+    """The API server; shutdown also drops the global temp view that
+    shares the served view with the serving session."""
+
+    served_view = ""
+
+    def shutdown(self) -> None:
+        super().shutdown()
+        session = self.RequestHandlerClass.view.sparkSession
+        session.catalog.dropGlobalTempView(self.served_view)
+
+
+def _serving_view(view: DataFrame) -> tuple[DataFrame, str]:
+    """``view`` in a session of its own, which has the caller's SQL
+    confs plus ``_NO_CODEGEN``, and the name of the global temp view
+    that shares it there."""
+    caller = view.sparkSession
+    session = caller.newSession()
+    fresh = session.conf.getAll
+    for k, v in caller.conf.getAll.items():
+        if fresh.get(k) != v:
+            session.conf.set(k, v)
+    for k, v in _NO_CODEGEN.items():
+        session.conf.set(k, v)
+    name = f"served_{uuid.uuid4().hex}"
+    view.createGlobalTempView(name)
+    db = session.conf.get("spark.sql.globalTempDatabase")
+    return session.table(f"{db}.{name}"), name
+
+
 def serve(
     view: DataFrame,
     host: str = "0.0.0.0",
@@ -188,21 +240,22 @@ def serve(
     reference's Docker default, Dockerfile:26-27). Returns the server;
     call .shutdown() to stop. Runs in a daemon thread.
 
+    The reference endpoints answer from a session of their own (see
+    the module docstring), so the caller's session and its confs are
+    left as they were.
+
     Pass ``spark`` + ``sf_dir`` to additionally expose the declared
     query registry at ``/api/queries[/{name}?limit=N]`` — the
-    beyond-reference serving surface. Every request EXECUTES the
-    query server-side (limit=N truncates the result, not the
-    compute). Queries registered with ``materializes=True``
-    (``inventory.MATERIALIZING``: builders that launch Spark jobs,
-    such as streaming replays, temp-store writes and iterative
-    trainers) are neither listed nor served, and their ``/explain``
-    returns 404."""
+    beyond-reference serving surface, run on ``spark`` itself. Every
+    request EXECUTES the query server-side (limit=N truncates the
+    result, not the compute). Queries registered with
+    ``materializes=True`` (``inventory.MATERIALIZING``: builders that
+    launch Spark jobs, such as streaming replays, temp-store writes
+    and iterative trainers) are neither listed nor served, and their
+    ``/explain`` returns 404."""
     ctx = (spark, sf_dir) if spark is not None and sf_dir else None
-    handler = type(
-        "BoundHandler",
-        (QueryHandler,),
-        {"view": view, "registry_ctx": ctx},
-    )
-    server = ThreadingHTTPServer((host, port), handler)
+    handler = type("BoundHandler", (QueryHandler,), {"registry_ctx": ctx})
+    server = _Server((host, port), handler)
+    handler.view, server.served_view = _serving_view(view)
     threading.Thread(target=server.serve_forever, daemon=True).start()
     return server

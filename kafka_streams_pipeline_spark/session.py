@@ -3,15 +3,19 @@
 Single place where execution-relevant configuration lives, so tests,
 bench.py and the driver entry all run the same engine profile.
 
-Design notes (100 TB posture, tested on local[32]):
+Design notes (100 TB posture; first tuned on a 32-vCPU host, the
+figures below measured on 4 vCPU):
 
 - UTC session timezone: the reference truncates timestamps in the
   JVM system zone (querying/QueryingController.java:240-249); we
   standardize on UTC (documented deviation, SURVEY.md §2.7 F3).
 - AQE on: runtime coalescing of small shuffle partitions and skew
   join splitting — the knobs that let one plan survive sf0.001 → 100 TB.
-- shuffle.partitions: 32 locally (matches core count); on a real
-  cluster this is overridden (or left to AQE's initialPartitionNum).
+- shuffle.partitions: 32 unless $SPARK_GRAFT_SHUFFLE_PARTITIONS says
+  otherwise, whatever the core count (the value once matched a
+  32-core host; AQE coalesces the small partitions on smaller ones).
+  On a real cluster this is overridden (or left to AQE's
+  initialPartitionNum).
 - Arrow enabled: any pandas interchange (mapInPandas stubs,
   toPandas in tests) is batched, not per-row pickled.
 - DataFrame call-site capture off
@@ -105,7 +109,7 @@ def get_spark(
 # Rows-per-slice for driver-built frames: small enough that genuinely
 # large label lists still pickle in parallel, large enough that a
 # metadata frame is ONE task instead of defaultParallelism near-empty
-# tasks (local[32] today; thousands on a real cluster).
+# tasks (one per core locally; thousands on a real cluster).
 _LOCAL_ROWS_PER_SLICE = 65_536
 
 

@@ -63,6 +63,17 @@ def _partitions(spark: SparkSession, view_dir: str) -> list[str]:
     return _glob(spark, f"{view_dir}/ws_date=*")
 
 
+def newest_ws_date(view: DataFrame) -> str | None:
+    """The newest ``ws_date`` (yyyy-mm-dd) among the store files in the
+    listing ``view`` holds, or None when it holds none. Reads the
+    listing the view's scan already made: no job, no new listing."""
+    parents = (path.rsplit("/", 2)[-2] for path in view.inputFiles())
+    return max(
+        (d[len("ws_date="):] for d in parents if d.startswith("ws_date=")),
+        default=None,
+    )
+
+
 def _read_store(
     spark: SparkSession, view_dir: str, parts: list[str] | None = None
 ) -> DataFrame:

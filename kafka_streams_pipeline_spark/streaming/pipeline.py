@@ -93,6 +93,14 @@ def start_file_stream_pipeline(
     sources/readings.kafka_reading_stream — every later stage is
     identical.
 
+    ``spark`` is expected to carry ``session.SESSION_CONFS`` (as
+    ``get_spark`` sessions and the ``__spark_entry__`` wrapper do).
+    The file source lists each micro-batch's files through it, and on
+    a bare session a batch of more than 32 files lists them in a
+    Spark job with one task per file
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``; see
+    the session module's design notes).
+
     ``state_partitions``: number of shuffle/state-store partitions
     for the stateful aggregate; default one per core
     (``defaultParallelism``). Every micro-batch commits every state

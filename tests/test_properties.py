@@ -441,7 +441,8 @@ def test_container_prefixes_parse_or_raise_valueerror():
     parses cleanly or raises ValueError — a truncated download must
     never surface as IndexError / struct.error from the walkers. An
     Avro blob cut inside its 16-byte header sync marker must raise,
-    not parse as a clean zero-row file."""
+    not parse as a clean zero-row file. The cuts that do parse clean
+    (the parsers' carry-over contract) are pinned as explicit cases."""
     members = [("a.txt", b"hello" * 50), ("b.txt", b"x" * 700)]
     records = [("https://corpus.example/doc/1", b"hello" * 50)]
     schema = (
@@ -469,6 +470,28 @@ def test_container_prefixes_parse_or_raise_valueerror():
     for cut in range(sync_at, sync_at + 16):
         with pytest.raises(ValueError):
             mm.parse_avro_ocf(avro[:cut])
+    # The cuts that parse clean by contract, because a shorter file
+    # looks the same. A tar cut after its first zero end block keeps
+    # every member; one byte shorter raises.
+    tar = shards["tar"][1]
+    for cut in range(len(tar) - 512, len(tar)):
+        assert mm.parse_tar_members(tar[:cut]) == members
+    with pytest.raises(ValueError):
+        mm.parse_tar_members(tar[: len(tar) - 513])
+    # A WARC cut at a record boundary (after the warcinfo record)
+    # parses as the shard of the records before it.
+    warc = shards["warc"][1]
+    info = mm.build_warc_shard([])
+    assert warc.startswith(info) and len(info) < len(warc)
+    assert mm.parse_warc_records(warc[: len(info)]) == mm.parse_warc_records(info)
+    assert [t for t, _, _ in mm.parse_warc_records(info)] == ["warcinfo"]
+    # An Avro cut at a block boundary (after the header, or after a
+    # block) parses as the file of the rows before it.
+    rows = mm.parse_avro_ocf(avro)[1]
+    for k in range(len(rows)):
+        shorter = mm.avro_ocf_bytes(schema, rows[:k], rows_per_block=1)
+        assert avro.startswith(shorter) and len(shorter) < len(avro)
+        assert mm.parse_avro_ocf(avro[: len(shorter)])[1] == rows[:k]
 
 
 # --- union-find vs BFS reference (round-5 components fast path) -----------

@@ -260,3 +260,101 @@ def test_every_buildtime_job_launcher_is_flagged(declared_builds):
         f"not registered with materializes=True (name: jobs): {unflagged}; "
         f"registered with materializes=True but launch no job: {stale}"
     )
+
+
+def test_reference_requests_compile_nothing(spark, sf_dir, tmp_path):
+    """``serve`` answers the reference endpoints from a session of its
+    own with codegen off, so a request compiles no Java class, even
+    when its timestamps were never sent before and its cells and
+    prefixes vary (generated code inlines them). Compiles are Spark's
+    own count, after a warm-up, over 24 requests of the three kinds. Each response equals
+    the same query on the caller's session; the caller's codegen
+    confs are left as they were, and the view ``serve`` registers is
+    gone after shutdown. ``spark.sql.codegen.factoryMode`` is internal
+    to Spark: an upgrade that drops it fails here."""
+    from pyspark.sql import functions as F
+
+    from kafka_streams_pipeline_spark import geo
+    from kafka_streams_pipeline_spark.operators import (
+        history,
+        history_interval,
+        snapshot,
+    )
+    from kafka_streams_pipeline_spark.plans import to_message
+    from kafka_streams_pipeline_spark.serving import _ms_to_dt
+    from kafka_streams_pipeline_spark.sources.sinks import read_view, write_view
+
+    view = build_view(readings_from_events(load_table(spark, sf_dir, "events")))
+    write_view(view, str(tmp_path / "view"))
+    stored = read_view(spark, str(tmp_path / "view"))
+    rows = sorted(
+        (r["ms"], r["gh"])
+        for r in stored.select(
+            "gh", F.unix_millis("window_start").alias("ms")
+        ).collect()
+    )
+    cells = sorted({gh for _, gh in rows})
+    hour, day = 3_600_000, 86_400_000
+    codegen_keys = (
+        "spark.sql.codegen.wholeStage",
+        "spark.sql.codegen.factoryMode",
+    )
+    confs = {k: spark.conf.get(k, None) for k in codegen_keys}
+    db = spark.conf.get("spark.sql.globalTempDatabase")
+    views = {t.name for t in spark.catalog.listTables(db)}
+
+    def requests(i):
+        """Request i of each kind: (path, the same query as a call)."""
+        ms, gh = rows[(37 * i) % len(rows)]
+        pick = [
+            cells[(i + j) % len(cells)][: 4 + (i + j) % 3]
+            for j in range(1 + i % len(cells))
+        ]
+        lo, hi, to = ms - i * 1_001, ms + (1 + i % 9) * day + i, ms + 7 * i + 3
+        interval = ("1day", "1week")[i % 2]
+        ts = ms + (i * 61_000) % hour
+        s, w, n, e = geo.decode_bbox(gh[: 4 + i % 3])
+        base = "/api/temperature/aggregate"
+        return [
+            (
+                f"{base}/avg/history?geohashes={','.join(pick)}&from={lo}&to={hi}",
+                lambda: history(stored, "avg", pick, _ms_to_dt(lo), _ms_to_dt(hi)),
+            ),
+            (
+                f"{base}/sum/history?geohashes={','.join(pick)}"
+                f"&interval={interval}&from={to}",
+                lambda: history_interval(
+                    stored, "sum", pick, interval, to_ts=_ms_to_dt(to)
+                ),
+            ),
+            (
+                f"{base}/count/snapshot?ts={ts}&bbox={n},{w},{s},{e}",
+                lambda: snapshot(stored, "count", _ms_to_dt(ts), (n, w, s, e)),
+            ),
+        ]
+
+    server = serve(stored, host="127.0.0.1", port=0)
+    url = f"http://127.0.0.1:{server.server_address[1]}"
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    try:
+        for i in range(3):
+            for path, _ in requests(i):
+                assert _get(url + path)[0] == 200
+        assert _get(f"{url}/api/temperature/aggregate/avg/history"
+                    f"?geohashes={cells[0]}&interval=1week")[0] == 200
+        sent = [r for i in range(3, 11) for r in requests(i)]
+        compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+        got = [_get(url + path) for path, _ in sent]
+        compiled = metrics.METRIC_COMPILATION_TIME().getCount() - compiled
+    finally:
+        server.shutdown()
+    assert len(sent) >= 20
+    assert compiled / len(sent) <= 0.1, (compiled, len(sent))
+    answered = 0
+    for (path, query), (code, msg) in zip(sent, got):
+        assert code == 200, (path, msg)
+        assert msg == json.loads(json.dumps(to_message(query()))), path
+        answered += bool(msg["data"])
+    assert answered >= len(sent) // 2
+    assert {k: spark.conf.get(k, None) for k in codegen_keys} == confs
+    assert {t.name for t in spark.catalog.listTables(db)} == views

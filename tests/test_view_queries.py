@@ -147,8 +147,9 @@ def test_history_interval_over_an_empty_store(spark, tmp_path):
     assert history_interval(empty, "avg", ["u155"], "1week").collect() == []
 
 
-def test_history_interval_defaults_to_max_ts(view, duck):
-    got = history_interval(view, "sum", ["u155"], "1week").collect()
+def _assert_week_to_max_ts(got, duck):
+    """``got`` is history_interval(..., "sum", ["u155"], "1week") with
+    no ``to``: the week up to the view's max event time."""
     exp = duck.execute(
         """WITH mx AS (SELECT max(window_start) AS m FROM v)
            SELECT epoch_ms(window_start) AS t, sum(s) AS total
@@ -160,6 +161,55 @@ def test_history_interval_defaults_to_max_ts(view, duck):
     assert [r["timestamp"] for r in got] == [e[0] for e in exp]
     for r, e in zip(got, exp):
         assert r["sum"] == pytest.approx(e[1], rel=1e-12)
+
+
+def test_history_interval_defaults_to_max_ts(view, duck):
+    _assert_week_to_max_ts(
+        history_interval(view, "sum", ["u155"], "1week").collect(), duck
+    )
+
+
+def test_history_interval_default_to_scans_the_newest_partition(
+    spark, view, duck, tmp_path, monkeypatch
+):
+    """Over a ws_date store, the max event time that stands in for a
+    missing ``to`` is read from the newest partition of the listing
+    the view holds: the build runs one job, whose scan reads one
+    partition and one file, and the answer is the in-memory view's."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from kafka_streams_pipeline_spark.sources.sinks import read_view, write_view
+    from tests.test_plan_contracts import _walk_executed
+
+    write_view(view, str(tmp_path / "view"))
+    stored = read_view(spark, str(tmp_path / "view"))
+    collected = []
+    collect = DataFrame.collect
+
+    def recording_collect(df):
+        collected.append(df)
+        return collect(df)
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    start = scheduler.nextJobId()
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrame, "collect", recording_collect)
+        df = history_interval(stored, "sum", ["u155"], "1week")
+    assert scheduler.nextJobId() - start == 1
+    (max_frame,) = collected
+    scans = [
+        n
+        for n in _walk_executed(max_frame._jdf.queryExecution().executedPlan(), [])
+        if "FileSourceScan" in n.getClass().getName()
+    ]
+    assert len(scans) == 1
+    metrics = scans[0].metrics()
+    assert metrics.apply("numPartitions").value() == 1
+    assert metrics.apply("numFiles").value() == 1
+    assert stored.select("ws_date").distinct().count() > 1
+    got = df.collect()
+    _assert_week_to_max_ts(got, duck)
+    assert got == history_interval(view, "sum", ["u155"], "1week").collect()
 
 
 def test_snapshot_bbox(view, duck):
