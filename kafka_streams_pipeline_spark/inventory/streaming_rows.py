@@ -252,8 +252,8 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the driver certify it). Duplicate injection is OFF — the
     view counts every physical reading. The row runs the deployed
     micro-batch configuration — the default state-partition count
-    (one per core) and the RocksDB provider with changelog
-    checkpointing — so the driver oracle certifies that path. See
+    (one) and the RocksDB provider with changelog checkpointing — so
+    the driver oracle certifies that path. See
     streaming/pipeline.py start_file_stream_pipeline."""
     from kafka_streams_pipeline_spark.streaming.pipeline import (
         await_replay,

@@ -102,11 +102,25 @@ def start_file_stream_pipeline(
     the session module's design notes).
 
     ``state_partitions``: number of shuffle/state-store partitions
-    for the stateful aggregate; default one per core
-    (``defaultParallelism``). Every micro-batch commits every state
-    partition, data or not, so this count is the per-batch commit
-    cost. Pinned by the checkpoint at the stream's first start;
-    results do not depend on it.
+    for the stateful aggregate; default 1. Every micro-batch commits
+    every state-store instance, data or not, and each commit is a
+    fixed cost whatever the rows: with RocksDB changelog
+    checkpointing, about 12 ms for one instance against 120-130 ms
+    for four (4 vCPU; replaying ``ingest_mixed``'s steady batches of
+    ~900 readings, a batch took 253 ms at one partition and 287 ms at
+    four). More partitions pay off only once a batch has enough rows
+    to keep the cores busy. In availableNow replays of the sf0.1
+    readings (three batches; shifted copies for the larger sizes;
+    4 vCPU), one partition took 1.24 s against 1.33 s at 33k rows
+    per batch, was even at 67k, and lost from 100k (1.60 s against
+    1.38 s; 3.39 s against 2.36 s at 333k). So the break-even is
+    about 60k rows per micro-batch: pass ``defaultParallelism`` for
+    streams whose batches are larger (backfills, long triggers). The
+    count also sets the width of the upsert's own shuffles (the
+    distinct-dates collect and the ``ws_date`` write), which run on
+    the stream's session. Pinned by the checkpoint at the stream's
+    first start, so an existing checkpoint keeps the count it started
+    with; results do not depend on it.
 
     ``rocksdb_state``: select the RocksDB state-store provider and
     turn on its changelog checkpointing (each commit uploads the
@@ -144,9 +158,7 @@ def start_file_stream_pipeline(
     # confs below into the query; restoring afterwards keeps the
     # caller's session untouched.
     overrides: dict[str, str | None] = {
-        "spark.sql.shuffle.partitions": str(
-            state_partitions or spark.sparkContext.defaultParallelism
-        )
+        "spark.sql.shuffle.partitions": str(state_partitions or 1)
     }
     if rocksdb_state:
         overrides["spark.sql.streaming.stateStore.providerClass"] = (

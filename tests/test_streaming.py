@@ -30,11 +30,17 @@ def readings_rows(spark, sf_dir):
 
 
 def _disordered(rows, n_chunks=3, disorder_block=50):
-    """Split a realistic replay: chunks in time order (so the watermark
-    advances like a live stream) but with LOCAL disorder — rows
-    shuffled within blocks far smaller than the 24 h grace, so every
-    micro-batch still carries late rows that update existing windows
-    without crossing the watermark."""
+    """Split a replay into chunks in time order (so the watermark
+    advances like a live stream) with LOCAL disorder: rows are reversed
+    within blocks of ``disorder_block``, so every micro-batch carries
+    rows that update windows an earlier batch opened.
+
+    The blocks are not small against the 24 h grace on sparse
+    fixtures. On sf0.001 (1,000 events over ~800 h) chunk 1 starts
+    about 34 h before chunk 0's maximum. ``test_stream_matches_batch_view``
+    still sees every row only because Spark judges batch N's rows
+    against the watermark batch N-1 ran under, which lags the max event
+    time by one batch (``test_late_rows_judged_one_batch_behind``)."""
     ordered = sorted(rows, key=lambda r: r["timestamp"])
     jumbled = []
     for i in range(0, len(ordered), disorder_block):
@@ -69,30 +75,37 @@ def test_stream_matches_batch_view(spark, sf_dir, readings_rows, tmp_path_factor
         assert got[k][2] == pytest.approx(exp[k][2], rel=1e-9)
 
 
+def _hour_reading(hour, val, i):
+    """Reading ``i`` at ``hour`` hours past the epoch, in one cell."""
+    return {
+        "timestamp": hour * 3_600_000 + i,
+        "sensorId": f"s{i:06d}",
+        "geohash": "u155mz82dv33",
+        "tempVal": float(val),
+        "tempUnit": "c",
+    }
+
+
 def test_late_beyond_watermark_dropped(spark, tmp_path_factory):
     """T3 semantics (SURVEY.md §2.8): a row arriving later than the
     24 h grace does NOT update its window — the documented deviation
     from Kafka Streams (which silently stops *retaining* the window
     instead). Watermark advances at batch boundaries, so the late row
     arrives in a second micro-batch after fresher data has moved the
-    watermark past its window."""
+    watermark past its window.
 
-    def reading(hour, val, i):
-        return {
-            "timestamp": hour * 3_600_000 + i,
-            "sensorId": f"s{i:06d}",
-            "geohash": "u155mz82dv33",
-            "tempVal": float(val),
-            "tempUnit": "c",
-        }
-
+    The late rows come after a restart. The first run ends with a
+    no-data batch that runs under the moved watermark (36 h) and evicts
+    the hour-0 window, so the restart's batch judges the rows against
+    36 h and drops them. In a single run the same rows would land
+    (``test_late_rows_judged_one_batch_behind``)."""
     base = tmp_path_factory.mktemp("stream-late")
     src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
     # batch 1: 10 rows in hour 0, then 10 rows at hour 60 → watermark
     # advances to 60h − 24h = 36h after the batch
     _write_chunks(src, [
-        [reading(0, 20.0, i) for i in range(10)]
-        + [reading(60, 25.0, i) for i in range(10)]
+        [_hour_reading(0, 20.0, i) for i in range(10)]
+        + [_hour_reading(60, 25.0, i) for i in range(10)]
     ])
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
@@ -100,7 +113,7 @@ def test_late_beyond_watermark_dropped(spark, tmp_path_factory):
     await_replay(q, 300)
     # batch 2: 5 more rows for hour 0 — its window end (1 h) is far
     # below the 36 h watermark → dropped
-    _write_chunks(src, [[reading(0, 99.0, 100 + i) for i in range(5)]])
+    _write_chunks(src, [[_hour_reading(0, 99.0, 100 + i) for i in range(5)]])
     q2 = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
@@ -109,6 +122,32 @@ def test_late_beyond_watermark_dropped(spark, tmp_path_factory):
     rows = {r["window_start"].hour: r for r in read_view(spark, view).collect()}
     assert rows[0]["count"] == 10  # late rows did NOT land
     assert rows[0]["avg"] == pytest.approx(20.0)
+
+
+def test_late_rows_judged_one_batch_behind(spark, tmp_path_factory):
+    """Spark drops a late row in batch N against the watermark that
+    batch N-1 ran under, not against the max event time the batches
+    before N reached. Batch 0 holds 10 hour-0 rows and 10 hour-60 rows
+    and moves the watermark to 36 h; batch 1, in the same run, holds 5
+    more hour-0 rows. Batch 1 still judges them against batch 0's
+    watermark (none), so they land and the hour-0 count is 15. Contrast
+    ``test_late_beyond_watermark_dropped``, where a restart puts a
+    no-data batch between the two and the rows are dropped. A sink that
+    applied the watermark itself would have to reproduce this lag."""
+    base = tmp_path_factory.mktemp("stream-late-lag")
+    src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
+    _write_chunks(src, [
+        [_hour_reading(0, 20.0, i) for i in range(10)]
+        + [_hour_reading(60, 25.0, i) for i in range(10)],
+        [_hour_reading(0, 99.0, 100 + i) for i in range(5)],
+    ])
+    q = start_file_stream_pipeline(
+        spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
+    )
+    await_replay(q, 300)
+
+    rows = {r["window_start"].hour: r for r in read_view(spark, view).collect()}
+    assert rows[0]["count"] == 15
 
 
 def test_streaming_dedup_across_batches(spark, tmp_path_factory):
@@ -1055,9 +1094,9 @@ def test_many_file_batch_lists_on_the_driver(spark, readings_rows, tmp_path):
     assert [d for d in jobs if d.startswith("Listing leaf files")] == []
 
 
-def _state_partitions_used(spark, rows, base, given):
+def _state_operator(spark, rows, base, given):
     """Replay ``rows`` as one availableNow batch and return the state
-    operator's partition count from the stream's last progress."""
+    operator's entry of the stream's last progress."""
     src = str(base / "src")
     _write_chunks(src, _disordered(rows, n_chunks=1))
     q = start_file_stream_pipeline(
@@ -1065,15 +1104,21 @@ def _state_partitions_used(spark, rows, base, given):
         available_now=True, state_partitions=given,
     )
     await_replay(q, 300)
-    return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+    return q.lastProgress["stateOperators"][0]
+
+
+def _state_partitions_used(spark, rows, base, given):
+    """The state operator's partition count after replaying ``rows``."""
+    return _state_operator(spark, rows, base, given)["numShufflePartitions"]
 
 
 def test_default_state_partitions_derivation(spark, readings_rows, tmp_path):
     """Without ``state_partitions`` the stateful aggregate runs one
-    state partition per core."""
-    cores = spark.sparkContext.defaultParallelism
-    got = _state_partitions_used(spark, readings_rows[:200], tmp_path, None)
-    assert got == cores
+    state partition whatever the core count, so each micro-batch
+    commits one state-store instance."""
+    op = _state_operator(spark, readings_rows[:200], tmp_path, None)
+    assert op["numShufflePartitions"] == 1
+    assert op["numStateStoreInstances"] == 1
 
 
 def test_resolve_state_partitions_hint(spark, readings_rows, tmp_path):

@@ -12,12 +12,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_streams_pipeline_spark.schema import FIXTURE_TABLES
 from kafka_streams_pipeline_spark.session import get_spark
