@@ -9,9 +9,9 @@ Each query is executed with a result-materializing action (collect on
 the final, already-aggregated frame — the driver does the same). A
 warmup pass on sf0.001 triggers JVM/codegen warm paths so steady-state
 throughput is measured, not JIT. Per-query numbers are the MEDIAN of
-three timed runs. First runs, max-min spreads and a fixed-compute
-calibration stamp go to ``.bench_out/bench_detail.json``; cross-run
-comparison (host stamps, A/B) is the job of ``perfbench/``.
+three timed runs. First runs and max-min spreads go to
+``.bench_out/bench_detail.json``; cross-run comparison (host stamps,
+A/B) is the job of ``perfbench/``.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from kafka_streams_pipeline_spark.inventory import BENCH_QUERIES, QUERIES
 from kafka_streams_pipeline_spark.session import get_spark
 
-CALIB_PROBE_ROWS = 1_000_000_000
 DETAIL_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), ".bench_out", "bench_detail.json"
 )
@@ -60,18 +59,6 @@ def main() -> None:
         if os.path.isdir(warm_dir):
             QUERIES[name](spark, warm_dir).collect()
     release_blocks()
-
-    def calibrate() -> float:
-        """Fixed pure-JVM compute (no IO, no shuffle): the box's
-        effective speed at this moment, which guest loadavg does not
-        see. Sized so one run is well above timer granularity."""
-        t0 = time.time()
-        spark.range(CALIB_PROBE_ROWS).selectExpr(
-            "sum(xxhash64(id) & 1023) AS h"  # masked: ANSI-safe sum
-        ).collect()
-        return round(time.time() - t0, 3)
-
-    calib = sorted(calibrate() for _ in range(5))[2]
 
     timings: dict[str, float] = {}
     first_runs: dict[str, float] = {}
@@ -107,7 +94,6 @@ def main() -> None:
         "queries": timings,
         "runs_per_query": 3,
         "aggregation": "median",
-        "calibration_sec": calib,
         "total_sec": total,
         "sf": sf_val,
     }

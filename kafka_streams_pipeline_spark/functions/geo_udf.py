@@ -78,20 +78,13 @@ def geohash_col(lat: Column | str, lon: Column | str, precision: int = 6) -> Col
     return F.substring(full, 1, precision)
 
 
-def readings_from_latlon(
-    df: DataFrame,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    ts_col: str = "timestamp",
-    val_col: str = "tempVal",
-    sensor_col: str = "sensorId",
-) -> DataFrame:
+def readings_from_latlon(df: DataFrame) -> DataFrame:
     """Reading-shaped frame from a raw lat/lon source: the general
     ingest adapter (geohash computed once, here; never again)."""
     return df.select(
-        F.col(ts_col).alias("timestamp"),
-        F.col(sensor_col).cast("string").alias("sensorId"),
-        geohash_col(lat_col, lon_col, geo.MAX_PRECISION).alias("geohash"),
-        F.col(val_col).cast("double").alias("tempVal"),
+        F.col("timestamp"),
+        F.col("sensorId").cast("string").alias("sensorId"),
+        geohash_col("lat", "lon", geo.MAX_PRECISION).alias("geohash"),
+        F.col("tempVal").cast("double").alias("tempVal"),
         F.lit("c").alias("tempUnit"),
     )

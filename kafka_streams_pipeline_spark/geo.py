@@ -20,6 +20,9 @@ BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 _DECODE = {c: i for i, c in enumerate(BASE32)}
 
 MAX_PRECISION = 12
+# Most prefixes a snapshot's bbox cover may produce: the bound that
+# keeps a REST bbox from becoming an unbounded ``startswith`` disjunction.
+MAX_COVER_CELLS = 64
 
 
 def encode(lat: float, lon: float, precision: int = MAX_PRECISION) -> str:
@@ -162,10 +165,9 @@ def cover_bbox_adaptive(
     south: float,
     east: float,
     max_precision: int,
-    max_cells: int = 64,
 ) -> list[str]:
     """Cover at the finest precision ≤ ``max_precision`` that needs at
-    most ``max_cells`` cells.
+    most ``MAX_COVER_CELLS`` cells.
 
     Used by snapshot queries: the resulting (short) prefixes become
     ``startswith`` predicates over the stored cells, replacing the
@@ -177,10 +179,10 @@ def cover_bbox_adaptive(
     for p in range(2, max_precision + 1):
         height, width = cell_dims(p)
         approx = ((north - south) / height + 2) * ((east - west) % 360.0 / width + 2)
-        if approx > max_cells * 4:
+        if approx > MAX_COVER_CELLS * 4:
             break
-        cells = cover_bbox(north, west, south, east, p, max_cells=max_cells * 4)
-        if len(cells) > max_cells:
+        cells = cover_bbox(north, west, south, east, p, max_cells=MAX_COVER_CELLS * 4)
+        if len(cells) > MAX_COVER_CELLS:
             break
         best = cells
     return best

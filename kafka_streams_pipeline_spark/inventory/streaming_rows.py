@@ -882,13 +882,13 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EVENT_SCHEMA = "event_id long, ts_ms long, user_id long, event_type string"
 
 
-def _cut_chunks(rows: list, cuts: list[int], max_chunks: int = 24) -> list:
-    """Split time-ordered rows at the given row indexes (the first
-    ``max_chunks`` − 1 of them, sorted) — the caller picks ``cuts`` so
+def _cut_chunks(rows: list, cuts: list[int]) -> list:
+    """Split time-ordered rows at the given row indexes (the first 23
+    of them, sorted: at most 24 chunks) — the caller picks ``cuts`` so
     the property under test (e.g. a join match spanning two
     micro-batches) actually occurs instead of depending on where an
     even split lands."""
-    bounds = [0] + sorted(set(cuts))[: max_chunks - 1] + [len(rows)]
+    bounds = [0] + sorted(set(cuts))[:23] + [len(rows)]
     return [rows[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
 
 

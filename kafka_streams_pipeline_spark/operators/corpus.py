@@ -34,7 +34,7 @@ SHINGLE_W = 12
 STRATUM_N = 20
 
 
-def chunk_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
+def chunk_dedup(df: DataFrame) -> DataFrame:
     """Boilerplate removal by corpus-wide chunk dedup (CCNet-style:
     Wenzek et al. 2020 dedup paragraphs by hash; here the unit is a
     fixed 8-word chunk because the fixture has no newlines).
@@ -52,7 +52,7 @@ def chunk_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     side is a classic heavy-hitter aggregate: partial (map-side)
     count_distinct collapses repeated chunks inside each partition
     before the exchange."""
-    d = df.select("doc_id", F.split(F.col(text_col), " ").alias("ws"))
+    d = df.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
     chunked = d.select(
         "doc_id",
         F.expr(
@@ -131,7 +131,7 @@ def _split_bucket_sql() -> str:
     return f"{inner} % 100"
 
 
-def contamination(df: DataFrame, text_col: str = "text") -> DataFrame:
+def contamination(df: DataFrame) -> DataFrame:
     """Train/eval contamination check: which held-out documents share
     a 12-word shingle with the training split (the overlap test run
     before trusting any benchmark number — e.g. GPT-3 appendix C /
@@ -158,10 +158,10 @@ def contamination(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.expr(
                 f"""
                 array_distinct(transform(
-                    sequence(0, greatest(size(split({text_col}, ' '))
+                    sequence(0, greatest(size(split(text, ' '))
                                          - {SHINGLE_W}, 0)),
                     i -> md5(array_join(
-                        slice(split({text_col}, ' '), i + 1, {SHINGLE_W}),
+                        slice(split(text, ' '), i + 1, {SHINGLE_W}),
                         ' '))))
                 """
             )
@@ -261,14 +261,12 @@ def stratified_sample_oracle() -> str:
 EPOCH_SHARDS = 8
 
 
-def epoch_shuffle(
-    df: DataFrame, epoch: int = 1, n_shards: int = EPOCH_SHARDS
-) -> DataFrame:
+def epoch_shuffle(df: DataFrame, epoch: int = 1) -> DataFrame:
     """Deterministic per-epoch training order: assign every document
     a (shard, pos) for epoch ``epoch`` as a pure function of
     (epoch, doc_id) — the reproducible global reshuffle a distributed
     training run performs between epochs. shard = salted-hash mod
-    ``n_shards`` (each epoch re-shards, the standard full-reshuffle
+    ``EPOCH_SHARDS`` (each epoch re-shards, the standard full-reshuffle
     semantics); pos = dense rank of the salted hash within the shard,
     tie-broken on doc_id. Because the permutation is a pure function
     of the ids, a preempted or re-run job resumes with bit-identical
@@ -292,16 +290,14 @@ def epoch_shuffle(
     )
     return (
         df.select("doc_id", h.alias("ekey"))
-        .withColumn("shard", (F.col("ekey") % n_shards).cast("long"))
+        .withColumn("shard", (F.col("ekey") % EPOCH_SHARDS).cast("long"))
         .withColumn("pos", F.row_number().over(w).cast("long"))
         .select("doc_id", "shard", "pos")
     )
 
 
-def epoch_shuffle_oracle(
-    epoch: int = 1, n_shards: int = EPOCH_SHARDS
-) -> str:
-    key = md5_long_sql(f"'epoch:{epoch}:' || CAST(doc_id AS VARCHAR)")
+def epoch_shuffle_oracle() -> str:
+    key = md5_long_sql("'epoch:1:' || CAST(doc_id AS VARCHAR)")
     return f"""
         SELECT doc_id, shard,
                CAST(row_number() OVER (
@@ -309,18 +305,13 @@ def epoch_shuffle_oracle(
                    ORDER BY ekey ASC, doc_id ASC) AS BIGINT) AS pos
         FROM (
             SELECT doc_id, {key} AS ekey,
-                   CAST(({key}) % {n_shards} AS BIGINT) AS shard
+                   CAST(({key}) % {EPOCH_SHARDS} AS BIGINT) AS shard
             FROM documents
         )
     """
 
 
-def systematic_weighted_sample(
-    df: DataFrame,
-    n: int,
-    weight_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def systematic_weighted_sample(df: DataFrame, n: int) -> DataFrame:
     """Deterministic weighted sampling with EXACT total multiplicity:
     systematic (grid) resampling over integer weights — the particle-
     filter resampler, used here to draw training-mixture quotas where
@@ -352,22 +343,22 @@ def systematic_weighted_sample(
     silently dropped."""
     if n < 1:
         raise ValueError(f"sample size must be >= 1, got {n}")
-    h = md5_long(F.concat(F.lit("swsamp:"), F.col(id_col).cast("string")))
+    h = md5_long(F.concat(F.lit("swsamp:"), F.col("doc_id").cast("string")))
     w_guarded = F.when(
-        F.col(weight_col).cast("long") <= 0,
+        F.col("n_chars").cast("long") <= 0,
         F.raise_error(
             F.concat(
                 F.lit("systematic_weighted_sample: non-positive weight "),
-                F.col(weight_col).cast("string"),
-                F.lit(f" in {weight_col!r} at {id_col}="),
-                F.col(id_col).cast("string"),
+                F.col("n_chars").cast("string"),
+                F.lit(" in 'n_chars' at doc_id="),
+                F.col("doc_id").cast("string"),
             )
         ).cast("long"),
-    ).otherwise(F.col(weight_col).cast("long"))
-    w_ord = Window.orderBy(F.col("h").asc(), F.col(id_col).asc())
+    ).otherwise(F.col("n_chars").cast("long"))
+    w_ord = Window.orderBy(F.col("h").asc(), F.col("doc_id").asc())
     lined = (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             w_guarded.alias("w"),
             h.alias("h"),
         )
@@ -386,7 +377,7 @@ def systematic_weighted_sample(
     # copies in [a,b): f(2n·b) − f(2n·a) with f(y) = (y+W) div 2W =
     # |{k ≥ 0 : (2k+1)·W ≤ y}| — gridpoints at odd multiples of W/2n
     counted = lined.crossJoin(F.broadcast(total)).select(
-        id_col,
+        "doc_id",
         F.col("w"),
         (
             F.expr(f"({2 * n}L * b + wtot) div (2 * wtot)")
@@ -398,14 +389,12 @@ def systematic_weighted_sample(
     return counted.where(F.col("copies") >= 1)
 
 
-def systematic_weighted_sample_oracle(
-    n: int, weight_col: str = "n_chars", table: str = "documents"
-) -> str:
+def systematic_weighted_sample_oracle(n: int) -> str:
     h = md5_long_sql("'swsamp:' || CAST(doc_id AS VARCHAR)")
     guarded = (
-        f"CASE WHEN CAST({weight_col} AS BIGINT) <= 0 THEN "
+        "CASE WHEN CAST(n_chars AS BIGINT) <= 0 THEN "
         f"CAST(error('systematic_weighted_sample: non-positive weight at '"
-        f" || doc_id) AS BIGINT) ELSE CAST({weight_col} AS BIGINT) END"
+        " || doc_id) AS BIGINT) ELSE CAST(n_chars AS BIGINT) END"
     )
     return f"""
         WITH lined AS (
@@ -414,7 +403,7 @@ def systematic_weighted_sample_oracle(
                        ORDER BY {h} ASC, doc_id ASC
                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
                    ), 0) AS BIGINT) AS a
-            FROM {table}
+            FROM documents
         ),
         tot AS (SELECT CAST(sum(w) AS BIGINT) AS wtot FROM lined)
         SELECT doc_id, w,
@@ -432,7 +421,7 @@ def systematic_weighted_sample_oracle(
 CDC_DIVISOR = 8
 
 
-def cdc_chunk_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
+def cdc_chunk_dedup(df: DataFrame) -> DataFrame:
     """CONTENT-DEFINED chunk dedup — the shift-robust complement to
     :func:`chunk_dedup`: chunk boundaries are declared by token
     CONTENT (tokens whose salted hash ≡ 0 mod ``CDC_DIVISOR`` start
@@ -454,7 +443,7 @@ def cdc_chunk_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).cast("long")
     toks = df.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w"),
     ).withColumn("flag", flag)
     w_doc = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
         Window.unboundedPreceding, 0
@@ -537,14 +526,7 @@ def cdc_chunk_dedup_oracle() -> str:
 MANIFEST_MAX_COPIES = 64
 
 
-def epoch_manifest(
-    df: DataFrame,
-    n_draws: int,
-    epoch: int = 1,
-    n_shards: int = EPOCH_SHARDS,
-    weight_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def epoch_manifest(df: DataFrame, n_draws: int, epoch: int = 1) -> DataFrame:
     """The SELECTION flagship composing the round's sampling pieces
     into the artifact a training run actually consumes: an EPOCH
     MANIFEST — exactly ``n_draws`` (document, copy) slots, drawn by
@@ -562,11 +544,11 @@ def epoch_manifest(
     Copies beyond ``MANIFEST_MAX_COPIES`` fail loudly rather than
     silently truncating the draw (a weight so dominant it exceeds
     the bound deserves a mixture-design review, not a quiet cap)."""
-    sample = systematic_weighted_sample(df, n_draws, weight_col, id_col)
+    sample = systematic_weighted_sample(df, n_draws)
     expanded = (
         sample.where(F.col("copies") >= 1)
         .select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.when(
                     F.col("copies") <= MANIFEST_MAX_COPIES,
@@ -585,36 +567,30 @@ def epoch_manifest(
     k = md5_long(
         F.concat(
             F.lit(f"em:{epoch}:"),
-            F.col(id_col).cast("string"),
+            F.col("doc_id").cast("string"),
             F.lit(":"),
             F.col("copy").cast("string"),
         )
     )
     w_shard = Window.partitionBy("shard").orderBy(
-        F.col("k").asc(), F.col(id_col).asc(), F.col("copy").asc()
+        F.col("k").asc(), F.col("doc_id").asc(), F.col("copy").asc()
     )
     return (
         expanded.withColumn("k", k)
-        .withColumn("shard", (F.col("k") % n_shards).cast("long"))
+        .withColumn("shard", (F.col("k") % EPOCH_SHARDS).cast("long"))
         .withColumn("pos", F.row_number().over(w_shard).cast("long"))
-        .select(id_col, "copy", "shard", "pos")
+        .select("doc_id", "copy", "shard", "pos")
     )
 
 
-def epoch_manifest_oracle(
-    n_draws: int,
-    epoch: int = 1,
-    n_shards: int = EPOCH_SHARDS,
-    weight_col: str = "n_chars",
-    table: str = "documents",
-) -> str:
+def epoch_manifest_oracle(n_draws: int) -> str:
     key = md5_long_sql(
-        f"'em:{epoch}:' || CAST(doc_id AS VARCHAR) || ':' "
+        "'em:1:' || CAST(doc_id AS VARCHAR) || ':' "
         "|| CAST(copy AS VARCHAR)"
     )
     return f"""
         WITH sam AS (
-            {systematic_weighted_sample_oracle(n_draws, weight_col, table)}
+            {systematic_weighted_sample_oracle(n_draws)}
         ),
         expanded AS (
             SELECT doc_id, c AS copy
@@ -627,9 +603,9 @@ def epoch_manifest_oracle(
             SELECT doc_id, copy, {key} AS k FROM expanded
         )
         SELECT doc_id, copy,
-               CAST(k % {n_shards} AS BIGINT) AS shard,
+               CAST(k % {EPOCH_SHARDS} AS BIGINT) AS shard,
                CAST(row_number() OVER (
-                   PARTITION BY k % {n_shards}
+                   PARTITION BY k % {EPOCH_SHARDS}
                    ORDER BY k ASC, doc_id ASC, copy ASC) AS BIGINT) AS pos
         FROM keyed
     """
@@ -640,16 +616,12 @@ def epoch_manifest_oracle(
 NEG_K = 4
 
 
-def negative_samples(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    k: int = NEG_K,
-    salt: str = "neg",
-) -> DataFrame:
+def negative_samples(df: DataFrame) -> DataFrame:
     """K pseudo-random NEGATIVES per anchor for contrastive training
     (in-batch negatives' distributed cousin): draw j ∈ [0, k) maps
     anchor ``a`` to the document at dense index
-    ``md5(salt:a:j) mod N`` — a pure function of (salt, a, j), so
+    ``md5(neg:a:j) mod N`` — a pure function of (a, j), with
+    k = ``NEG_K``, so
     every engine, retry, and re-run draws the identical negatives
     (the property ``rand()`` sampling loses on re-partitioning).
     Returns (anchor_id, j, negative_id), ascending; a draw that hits
@@ -671,7 +643,7 @@ def negative_samples(
     spark = df.sparkSession
     n_total = df.count()  # 1-row scalar; also the mod base
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ids = df.select(F.col(id_col).alias("nid"))
+    ids = df.select(F.col("doc_id").alias("nid"))
     sliced = ids.repartitionByRange(
         n_parts, F.col("nid").asc()
     ).withColumn("_pid", F.spark_partition_id())
@@ -700,11 +672,11 @@ def negative_samples(
         .alias("idx"),
     )
     draws = (
-        df.select(F.col(id_col).alias("anchor_id"))
+        df.select(F.col("doc_id").alias("anchor_id"))
         .select(
             "anchor_id",
             F.explode(
-                F.sequence(F.lit(0), F.lit(k - 1))
+                F.sequence(F.lit(0), F.lit(NEG_K - 1))
             ).alias("j"),
         )
         .select(
@@ -713,7 +685,7 @@ def negative_samples(
             (
                 md5_long(
                     F.concat(
-                        F.lit(f"{salt}:"),
+                        F.lit("neg:"),
                         F.col("anchor_id").cast("string"),
                         F.lit(":"),
                         F.col("j").cast("string"),
@@ -735,28 +707,23 @@ def negative_samples(
     )
 
 
-def negative_samples_oracle(
-    id_col: str = "doc_id",
-    k: int = NEG_K,
-    salt: str = "neg",
-    table: str = "documents",
-) -> str:
+def negative_samples_oracle() -> str:
     h = md5_long_sql(
-        f"'{salt}:' || CAST(anchor_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)"
+        "'neg:' || CAST(anchor_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)"
     )
     return f"""
-        WITH n AS (SELECT count(*) AS n_total FROM {table}),
+        WITH n AS (SELECT count(*) AS n_total FROM documents),
         indexed AS (
-            SELECT {id_col} AS nid,
-                   CAST(row_number() OVER (ORDER BY {id_col} ASC) - 1
+            SELECT doc_id AS nid,
+                   CAST(row_number() OVER (ORDER BY doc_id ASC) - 1
                         AS BIGINT) AS idx
-            FROM {table}
+            FROM documents
         ),
         draws AS (
             SELECT anchor_id, CAST(j AS BIGINT) AS j,
                    {h} % n_total AS idx
-            FROM (SELECT {id_col} AS anchor_id FROM {table}),
-                 unnest(range(0, {k})) AS t(j), n
+            FROM (SELECT doc_id AS anchor_id FROM documents),
+                 unnest(range(0, {NEG_K})) AS t(j), n
         )
         SELECT anchor_id, j, nid AS negative_id
         FROM draws JOIN indexed USING (idx)
@@ -767,12 +734,7 @@ def negative_samples_oracle(
 SHARD_K = 8  # output shards for the certified balanced-write row
 
 
-def shard_balance(
-    df: DataFrame,
-    size_col: str = "n_chars",
-    id_col: str = "doc_id",
-    k: int = SHARD_K,
-) -> DataFrame:
+def shard_balance(df: DataFrame, k: int = SHARD_K) -> DataFrame:
     """X5 balanced training-shard assignment: distribute documents
     over ``k`` output shards with near-equal TOTAL SIZE (not just
     count), the write-side step that decides whether 1000 downstream
@@ -798,8 +760,8 @@ def shard_balance(
     spark = df.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(size_col).cast("long").alias("sz"),
+        F.col("doc_id").alias("id"),
+        F.col("n_chars").cast("long").alias("sz"),
     )
     sliced = base.repartitionByRange(
         n_parts, F.col("sz").desc(), F.col("id").asc()
@@ -842,22 +804,17 @@ def shard_balance(
     )
 
 
-def shard_balance_oracle(
-    table: str = "documents",
-    size_col: str = "n_chars",
-    id_col: str = "doc_id",
-    k: int = SHARD_K,
-) -> str:
+def shard_balance_oracle() -> str:
     return f"""
         WITH ranked AS (
-            SELECT {id_col} AS id,
-                   CAST({size_col} AS BIGINT) AS sz,
+            SELECT doc_id AS id,
+                   CAST(n_chars AS BIGINT) AS sz,
                    row_number() OVER (
-                       ORDER BY {size_col} DESC, {id_col} ASC
+                       ORDER BY n_chars DESC, doc_id ASC
                    ) AS rn
-            FROM {table}
+            FROM documents
         )
-        SELECT CAST((rn - 1) % {k} AS BIGINT) AS shard,
+        SELECT CAST((rn - 1) % {SHARD_K} AS BIGINT) AS shard,
                CAST(count(*) AS BIGINT) AS n_docs,
                CAST(sum(sz) AS BIGINT) AS total_chars,
                CAST(sum(id) AS BIGINT) AS id_checksum
@@ -870,12 +827,7 @@ def shard_balance_oracle(
 BUDGET_TOKENS = 10_000
 
 
-def budget_select(
-    df: DataFrame,
-    budget_tokens: int = BUDGET_TOKENS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def budget_select(df: DataFrame, budget_tokens: int = BUDGET_TOKENS) -> DataFrame:
     """X5 token-budget data selection: keep the highest
     quality-density documents until a global token budget is
     exhausted — the "best N billion tokens" cut every curriculum /
@@ -903,21 +855,21 @@ def budget_select(
     spark = df.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.expr(
-            f"""
-            (cast(size(split({text_col}, ' ')) as bigint) *
-                    least(size(split({text_col}, ' ')), 100)
-                  + 60L * size(array_distinct(split({text_col}, ' ')))
-                  + 4L * least(length({text_col})
-                               - size(split({text_col}, ' ')) + 1,
-                               10 * size(split({text_col}, ' '))))
+            """
+            (cast(size(split(text, ' ')) as bigint) *
+                    least(size(split(text, ' ')), 100)
+                  + 60L * size(array_distinct(split(text, ' ')))
+                  + 4L * least(length(text)
+                               - size(split(text, ' ')) + 1,
+                               10 * size(split(text, ' '))))
                  * 1000000L
-            div (200L * size(split({text_col}, ' '))
-                 * size(split({text_col}, ' ')))
+            div (200L * size(split(text, ' '))
+                 * size(split(text, ' ')))
             """
         ).alias("score_ppm"),
-        F.expr(f"cast(size(split({text_col}, ' ')) as bigint)").alias(
+        F.expr("cast(size(split(text, ' ')) as bigint)").alias(
             "n_tokens"
         ),
     )
@@ -961,9 +913,7 @@ def budget_select(
     )
 
 
-def budget_select_oracle(
-    budget_tokens: int = BUDGET_TOKENS, table: str = "documents"
-) -> str:
+def budget_select_oracle() -> str:
     return f"""
         WITH base AS (
             SELECT doc_id,
@@ -974,7 +924,7 @@ def budget_select_oracle(
                        // (200 * len(toks) * len(toks)) AS score_ppm,
                    CAST(len(toks) AS BIGINT) AS n_tokens
             FROM (SELECT doc_id, text, string_split(text, ' ') AS toks
-                  FROM {table})
+                  FROM documents)
         ),
         ranked AS (
             SELECT doc_id, n_tokens, score_ppm,
@@ -985,6 +935,6 @@ def budget_select_oracle(
             FROM base
         )
         SELECT doc_id, n_tokens, score_ppm, cum_tokens
-        FROM ranked WHERE cum_tokens <= {budget_tokens}
+        FROM ranked WHERE cum_tokens <= {BUDGET_TOKENS}
         ORDER BY doc_id
     """

@@ -127,7 +127,7 @@ def spark_hashed_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
     )
 
 
-def spark_xxh_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
+def spark_xxh_shingles_expr(tokens: str = "toks") -> str:
     """Distinct xxhash64-hashed n-token shingles (BIGINT array) — the
     cheap engine-native twin of :func:`spark_hashed_shingles_expr`
     for operators whose OUTPUT is hash-representation-independent
@@ -135,18 +135,18 @@ def spark_xxh_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
     same verified pairs and jaccards). Never use it where hash
     values shape the result (minhash signatures, KMV sketches) —
     those stay md5 for oracle parity."""
-    parts = ", ".join(f"{tokens}[i + {j}]" for j in range(n))
+    parts = ", ".join(f"{tokens}[i + {j}]" for j in range(SHINGLE_N))
     return (
-        f"array_distinct(transform({_safe_offsets(tokens, n)}, "
+        f"array_distinct(transform({_safe_offsets(tokens, SHINGLE_N)}, "
         f"i -> xxhash64(concat_ws(' ', {parts}))))"
     )
 
 
-def duck_hashed_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
-    h = _duck_hash(f"array_to_string({tokens}[i:i + {n - 1}], ' ')")
+def duck_hashed_shingles_expr(tokens: str = "toks") -> str:
+    h = _duck_hash(f"array_to_string({tokens}[i:i + {SHINGLE_N - 1}], ' ')")
     return (
         f"list_distinct([{h} "
-        f"FOR i IN range(1, len({tokens}) - {n - 2})])"
+        f"FOR i IN range(1, len({tokens}) - {SHINGLE_N - 2})])"
     )
 
 
@@ -231,31 +231,29 @@ def duck_simhash_expr(token_hashes: str = "th") -> str:
 # --- Spark operators -------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """X1: one keeper row per distinct text value (lowest id wins).
 
     Plain hash-groupBy — Spark plans partial+final aggregation, so at
     scale each input partition first collapses locally. Output keys by
     md5(text) so wide text never travels in the result."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("text_md5"))
+        df.groupBy(F.md5(F.col("text")).alias("text_md5"))
         .agg(
-            F.min(F.col(id_col)).alias("keeper"),
+            F.min(F.col("doc_id")).alias("keeper"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def normalized_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def normalized_dedup(df: DataFrame) -> DataFrame:
     """X2 (normalized-exact): canonicalize then exact-dedup."""
-    norm = F.expr(SPARK_NORMALIZE.format(c=text_col))
+    norm = F.expr(SPARK_NORMALIZE.format(c="text"))
     return (
         df.withColumn("_norm", norm)
         .groupBy(F.md5(F.col("_norm")).alias("norm_md5"))
         .agg(
-            F.min(F.col(id_col)).alias("keeper"),
+            F.min(F.col("doc_id")).alias("keeper"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -322,7 +320,6 @@ def band_candidates(
 
 def minhash_near_dup_pairs(
     df: DataFrame,
-    text_col: str = "text",
     threshold: float = 0.8,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
@@ -345,7 +342,7 @@ def minhash_near_dup_pairs(
     clusters are better served by exact/normalized dedup upstream.
     The DuckDB oracle applies the identical cap, so parity holds at
     any setting; pass ``bucket_cap=None`` to disable."""
-    pairs, sig = _minhash_pairs_and_sig(df, text_col, threshold, bucket_cap)
+    pairs, sig = _minhash_pairs_and_sig(df, "text", threshold, bucket_cap)
     # Materialize the verified pairs (bounded by LSH candidates, not
     # the corpus) so the signature cache is released on return rather
     # than pinned for the session; dedup_components does the same.
@@ -452,7 +449,6 @@ def _closure(
     base: DataFrame,
     key: str,
     algorithm: str,
-    max_iter: int = 25,
     release: Callable[[], object] = lambda: None,
 ) -> DataFrame:
     """Transitive closure of the undirected (id_a, id_b) edge set
@@ -488,7 +484,7 @@ def _closure(
             return base.join(F.broadcast(labels), key, "left")
     pairs = pairs.localCheckpoint(eager=True)
     release()
-    labels = connected_components_alternating(pairs, max_iter)
+    labels = connected_components_alternating(pairs)
     return base.join(
         labels.select(F.col("node").alias(key), "comp"), key, "left"
     )
@@ -496,10 +492,7 @@ def _closure(
 
 def dedup_components(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.8,
-    max_iter: int = 25,
     algorithm: str = "auto",
 ) -> DataFrame:
     """X2 (duplicate-group clustering): connected components over the
@@ -523,19 +516,16 @@ def dedup_components(
     with a recursive CTE (components_oracle) — connected components
     are not expressible as one SQL query without recursion."""
     _check_algorithm(algorithm)
-    pairs, sig = _minhash_pairs_and_sig(
-        df, text_col, threshold, DEFAULT_BUCKET_CAP
-    )
+    pairs, sig = _minhash_pairs_and_sig(df, "text", threshold, DEFAULT_BUCKET_CAP)
     return _closure(
         pairs.select("id_a", "id_b"),
-        df.select(id_col),
-        id_col,
+        df.select("doc_id"),
+        "doc_id",
         algorithm,
-        max_iter,
         release=sig.unpersist,
     ).select(
-        id_col,
-        F.coalesce(F.col("comp"), F.col(id_col)).alias("component"),
+        "doc_id",
+        F.coalesce(F.col("comp"), F.col("doc_id")).alias("component"),
     )
 
 
@@ -660,14 +650,14 @@ def components_oracle(threshold: float = 0.8) -> str:
     """
 
 
-def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """X2 (SimHash): (doc_id, simhash) 32-bit bitwise-majority
     signature over distinct-token hashes. Per-row, shuffle-free."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
     return (
-        df.withColumn("toks", F.expr(f"array_distinct(split({text_col}, ' '))"))
+        df.withColumn("toks", F.expr("array_distinct(split(text, ' '))"))
         .withColumn("th", F.expr(f"transform(toks, x -> {_spark_hash('x')})"))
         .select("doc_id", F.expr(spark_simhash_expr("th")).alias("simhash"))
     )
@@ -676,7 +666,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
 HAMMING_RADIUS = 3
 
 
-def simhash64_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash64_signatures(df: DataFrame) -> DataFrame:
     """(doc_id, sim_lo, sim_hi): a 64-bit SimHash as TWO seeded
     32-bit halves. Token hashes are 32-bit (HEX_WIDTH=8), so a
     single 64-bit fold would leave bits 32-63 degenerate; two
@@ -705,7 +695,7 @@ def simhash64_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     ex = df.select(
         "doc_id",
         F.explode_outer(
-            F.expr(f"array_distinct(split({text_col}, ' '))")
+            F.expr("array_distinct(split(text, ' '))")
         ).alias("tok"),
     ).select(
         "doc_id",
@@ -736,13 +726,9 @@ def simhash64_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def simhash_hamming_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    radius: int = HAMMING_RADIUS,
-) -> DataFrame:
+def simhash_hamming_pairs(df: DataFrame) -> DataFrame:
     """X2: SimHash near-dup JOIN — all pairs within Hamming distance
-    ``radius`` over the 64-bit signature, via the multi-index
+    radius = ``HAMMING_RADIUS`` over the 64-bit signature, via the multi-index
     pigeonhole scheme (Manku, Jain & Sarma, WWW 2007 — the Google
     simhash dedup paper): split 64 bits into radius+1 = 4 blocks of
     16 bits; any pair with ≤ radius differing bits must agree EXACTLY
@@ -777,7 +763,7 @@ def simhash_hamming_pairs(
     # write — 0.8 s of the 5.4 s total at sf0.1 — purely to own an
     # unpersist; checkpoint blocks are reaped by the ContextCleaner on
     # GC, no owner needed).
-    sig = simhash64_signatures(df, text_col)
+    sig = simhash64_signatures(df)
     grp_w = Window.partitionBy("sim_lo", "sim_hi")
     mem = sig.select(
         "doc_id",
@@ -829,7 +815,7 @@ def simhash_hamming_pairs(
             .cast("long")
             .alias("hamming"),
         )
-        .where(F.col("hamming") <= radius)
+        .where(F.col("hamming") <= HAMMING_RADIUS)
     )
     # cross-group expansion: each matched group pair × its two member
     # sets; member ids interleave across groups, so re-normalize the
@@ -859,7 +845,7 @@ def simhash_hamming_pairs(
     return within.unionByName(cross)
 
 
-def simhash_hamming_oracle(radius: int = HAMMING_RADIUS) -> str:
+def simhash_hamming_oracle() -> str:
     """Brute-force all-pairs Hamming scan over the same two seeded
     32-bit signatures — certifies the pigeonhole candidate scheme
     loses nothing."""
@@ -883,17 +869,15 @@ def simhash_hamming_oracle(radius: int = HAMMING_RADIUS) -> str:
                    AS hamming
         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
         WHERE bit_count(xor(a.sim_lo, b.sim_lo))
-              + bit_count(xor(a.sim_hi, b.sim_hi)) <= {radius}
+              + bit_count(xor(a.sim_hi, b.sim_hi)) <= {HAMMING_RADIUS}
     """
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str = "text", threshold: float = 0.8
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """X2 (exact n-gram Jaccard): all pairs ≥ threshold via an
     inverted shingle index — the exact baseline that certifies the
     MinHash pipeline (candidate superset) at test scale."""
-    sig = minhash_signatures(df, text_col).select("doc_id", "shh")
+    sig = minhash_signatures(df).select("doc_id", "shh")
     inv = sig.select("doc_id", F.explode("shh").alias("shingle"))
     a, b = inv.alias("a"), inv.alias("b")
     common = (
@@ -926,12 +910,7 @@ CONTAIN_THRESHOLD_PPM = 800_000  # 80% of the smaller doc's shingles
 CONTAIN_PREFIX_EXT = 2
 
 
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    threshold_ppm: int = CONTAIN_THRESHOLD_PPM,
-    prefix_ext: int = CONTAIN_PREFIX_EXT,
-) -> DataFrame:
+def containment_pairs(df: DataFrame) -> DataFrame:
     """ONE-SIDED near-dup: pairs where the smaller document's shingle
     set is ≥ threshold contained in the other's —
     C(A,B) = |S(A) ∩ S(B)| / min(|S(A)|, |S(B)|). Catches what
@@ -971,9 +950,7 @@ def containment_pairs(
 
     All arithmetic is integer ppm: overlap ≥ ⌈t·n⌉ for integer
     overlap is exactly overlap·10⁶ ≥ t_ppm·n — no float anywhere."""
-    sig, _cand, out = _containment_parts(
-        df, text_col, threshold_ppm, prefix_ext
-    )
+    sig, _cand, out = _containment_parts(df, "text", CONTAIN_THRESHOLD_PPM)
     out = out.localCheckpoint(eager=True)
     sig.unpersist()
     return out
@@ -983,7 +960,6 @@ def _containment_parts(
     df: DataFrame,
     text_col: str,
     threshold_ppm: int,
-    prefix_ext: int = CONTAIN_PREFIX_EXT,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """containment_pairs body, returning (persisted signature frame —
     the CALLER owns the unpersist — distinct candidate pairs
@@ -1014,7 +990,7 @@ def _containment_parts(
     # the aggregate filter below correctly demands c ≥ α).
     p_expr = (
         f"cast(n_sh - (({threshold_ppm} * n_sh + 999999) div 1000000) "
-        f"+ 1 + {prefix_ext} as int)"
+        f"+ 1 + {CONTAIN_PREFIX_EXT} as int)"
     )
     probe = ordered.select(
         "doc_id",
@@ -1089,7 +1065,7 @@ def _containment_parts(
         .withColumn(
             "allowance",
             F.greatest(
-                F.col("alpha") - F.lit(1 + prefix_ext), F.lit(0)
+                F.col("alpha") - F.lit(1 + CONTAIN_PREFIX_EXT), F.lit(0)
             ).cast("long"),
         )
         .where(
@@ -1137,16 +1113,12 @@ def _containment_parts(
     return sig, cand, out
 
 
-def containment_pairs_bruteforce(
-    df: DataFrame,
-    text_col: str = "text",
-    threshold_ppm: int = CONTAIN_THRESHOLD_PPM,
-) -> DataFrame:
+def containment_pairs_bruteforce(df: DataFrame) -> DataFrame:
     """The naive shared-shingle self-join baseline the prefix path
     replaced: a shingle appearing in m docs yields m² candidate rows
     before the threshold filter. Kept for the sweep's candidate-count
     comparison and as the differential twin of the DuckDB oracle."""
-    sig = minhash_signatures(df, text_col).select("doc_id", "shh")
+    sig = minhash_signatures(df).select("doc_id", "shh")
     inv = sig.select("doc_id", F.explode("shh").alias("shingle"))
     a, b = inv.alias("a"), inv.alias("b")
     common = (
@@ -1178,22 +1150,18 @@ def containment_pairs_bruteforce(
             "containment_ppm",
             F.expr("(n_common * 1000000) div least(n_a, n_b)").cast("long"),
         )
-        .where(F.col("containment_ppm") >= threshold_ppm)
+        .where(F.col("containment_ppm") >= CONTAIN_THRESHOLD_PPM)
         .select("id_a", "id_b", "n_common", "containment_ppm")
     )
 
 
-def containment_scaling_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    threshold_ppm: int = CONTAIN_THRESHOLD_PPM,
-) -> dict:
+def containment_scaling_stats(df: DataFrame) -> dict:
     """Sweep diagnostic: the prefix path's DISTINCT candidate count
     (what the exact verify pays for) next to the brute-force
     self-join's pre-aggregate candidate ROW count (what the old path
     paid), plus true pairs — quantifies the hot-shingle m² → ~0·m
     reduction on boilerplate-heavy corpora."""
-    sig, cand, out = _containment_parts(df, text_col, threshold_ppm)
+    sig, cand, out = _containment_parts(df, "text", CONTAIN_THRESHOLD_PPM)
     inv = sig.select("doc_id", F.explode("shh").alias("shingle"))
     brute_rows = (
         inv.groupBy("shingle")
@@ -1210,14 +1178,12 @@ def containment_scaling_stats(
     return stats
 
 
-def containment_pairs_oracle(
-    threshold_ppm: int = CONTAIN_THRESHOLD_PPM, table: str = "documents"
-) -> str:
+def containment_pairs_oracle() -> str:
     return f"""
         WITH sig AS (
             SELECT doc_id, {duck_hashed_shingles_expr('toks')} AS shh
             FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                  FROM {table})
+                  FROM documents)
             WHERE len(toks) >= {SHINGLE_N}
         ),
         inv AS (SELECT doc_id, unnest(shh) AS shingle FROM sig),
@@ -1236,26 +1202,22 @@ def containment_pairs_oracle(
         JOIN sig sa ON common.id_a = sa.doc_id
         JOIN sig sb ON common.id_b = sb.doc_id
         WHERE (n_common * 1000000) // least(len(sa.shh), len(sb.shh))
-              >= {threshold_ppm}
+              >= {CONTAIN_THRESHOLD_PPM}
     """
 
 
 # --- DuckDB oracle builders ------------------------------------------------
 
-
-def minhash_pairs_oracle(
-    threshold: float = 0.8, bucket_cap: int | None = DEFAULT_BUCKET_CAP
-) -> str:
-    mh_list = "[" + ", ".join(duck_minhash_exprs("shh")) + "]"
-    cap_filter = (
-        f"""bands_ok AS (
+# The band buckets the Spark side keeps: ``band_candidates``'s cap.
+_DUCK_BANDS_OK = f"""bands_ok AS (
             SELECT bands.* FROM bands
             JOIN (SELECT bk FROM bands GROUP BY bk
-                  HAVING count(*) <= {bucket_cap}) ok USING (bk)
+                  HAVING count(*) <= {DEFAULT_BUCKET_CAP}) ok USING (bk)
         ),"""
-        if bucket_cap is not None
-        else "bands_ok AS (SELECT * FROM bands),"
-    )
+
+
+def minhash_pairs_oracle(threshold: float = 0.8) -> str:
+    mh_list = "[" + ", ".join(duck_minhash_exprs()) + "]"
     return f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -1269,7 +1231,7 @@ def minhash_pairs_oracle(
         bands AS (
             SELECT doc_id, unnest({duck_band_keys_expr('mhs')}) AS bk FROM sig
         ),
-        {cap_filter}
+        {_DUCK_BANDS_OK}
         cand AS (
             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
             FROM bands_ok a JOIN bands_ok b ON a.bk = b.bk AND a.doc_id < b.doc_id
@@ -1326,12 +1288,7 @@ def simhash_oracle() -> str:
     """
 
 
-def incremental_dedup(
-    df: DataFrame,
-    batch_source: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup(df: DataFrame, batch_source: str) -> DataFrame:
     """X2 / incremental corpus dedup: admit only new-batch documents
     whose normalized text is absent from the existing corpus, then
     dedup within the batch (keeper = lowest id). This is the standing
@@ -1342,7 +1299,7 @@ def incremental_dedup(
     before the join, so at 100 TB the anti-join ships hashes, never
     text; with a bounded fingerprint set Spark broadcasts it, else AQE
     picks a shuffled hash anti-join on the same key."""
-    norm = F.expr(SPARK_NORMALIZE.format(c=text_col))
+    norm = F.expr(SPARK_NORMALIZE.format(c="text"))
     hashed = df.withColumn("norm_md5", F.md5(norm))
     corpus = (
         hashed.where(F.col("source") != batch_source)
@@ -1354,7 +1311,7 @@ def incremental_dedup(
         batch.join(corpus, on="norm_md5", how="left_anti")
         .groupBy("norm_md5")
         .agg(
-            F.min(F.col(id_col)).alias("keeper"),
+            F.min(F.col("doc_id")).alias("keeper"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -1378,17 +1335,12 @@ def incremental_dedup_oracle(batch_source: str) -> str:
     """
 
 
-def edit_distance_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    max_rel_pct: int = 20,
-    bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-) -> DataFrame:
+def edit_distance_pairs(df: DataFrame) -> DataFrame:
     """X2 (edit-distance near-dup): the MinHash band candidates
     verified with levenshtein instead of jaccard — the character-level
     notion of "almost the same document" (catches small in-place
     edits that shingle Jaccard underweights). Keeps a pair when
-    edit_dist · 100 ≤ max_rel_pct · max(len_a, len_b) — pure integer
+    edit_dist · 100 ≤ 20 · max(len_a, len_b) — pure integer
     predicate, no float threshold.
 
     Parity note: Spark's levenshtein counts characters and DuckDB's
@@ -1397,13 +1349,13 @@ def edit_distance_pairs(
 
     Scale: candidates come from the single-shuffle band plan; the
     verify join ships only candidate-pair texts."""
-    sig = minhash_signatures(df, text_col)
+    sig = minhash_signatures(df)
     bands = sig.select(
         "doc_id", F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk")
     )
-    cand = band_candidates(bands, bucket_cap)
-    ta = df.select(F.col("doc_id").alias("id_a"), F.col(text_col).alias("t_a"))
-    tb = df.select(F.col("doc_id").alias("id_b"), F.col(text_col).alias("t_b"))
+    cand = band_candidates(bands)
+    ta = df.select(F.col("doc_id").alias("id_a"), F.col("text").alias("t_a"))
+    tb = df.select(F.col("doc_id").alias("id_b"), F.col("text").alias("t_b"))
     return (
         cand.join(ta, "id_a")
         .join(tb, "id_b")
@@ -1415,23 +1367,12 @@ def edit_distance_pairs(
             .cast("long")
             .alias("max_len"),
         )
-        .where(F.col("edit_dist") * 100 <= max_rel_pct * F.col("max_len"))
+        .where(F.col("edit_dist") * 100 <= 20 * F.col("max_len"))
     )
 
 
-def edit_distance_pairs_oracle(
-    max_rel_pct: int = 20, bucket_cap: int | None = DEFAULT_BUCKET_CAP
-) -> str:
+def edit_distance_pairs_oracle(max_rel_pct: int = 20) -> str:
     mh_list = "[" + ", ".join(duck_minhash_exprs("shh")) + "]"
-    cap_filter = (
-        f"""bands_ok AS (
-            SELECT bands.* FROM bands
-            JOIN (SELECT bk FROM bands GROUP BY bk
-                  HAVING count(*) <= {bucket_cap}) ok USING (bk)
-        ),"""
-        if bucket_cap is not None
-        else "bands_ok AS (SELECT * FROM bands),"
-    )
     return f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -1445,7 +1386,7 @@ def edit_distance_pairs_oracle(
         bands AS (
             SELECT doc_id, unnest({duck_band_keys_expr('mhs')}) AS bk FROM sig
         ),
-        {cap_filter}
+        {_DUCK_BANDS_OK}
         cand AS (
             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
             FROM bands_ok a JOIN bands_ok b ON a.bk = b.bk AND a.doc_id < b.doc_id
@@ -1465,10 +1406,7 @@ def edit_distance_pairs_oracle(
 # --- Prefix-filtered EXACT similarity join (PPJoin-lite) -------------------
 
 
-def prefix_jaccard_join(
-    df: DataFrame, text_col: str = "text", threshold_num: int = 4,
-    threshold_den: int = 5,
-) -> DataFrame:
+def prefix_jaccard_join(df: DataFrame) -> DataFrame:
     """X2 exact-at-scale alternative to LSH: the prefix-filter
     similarity join (Chaudhuri et al. 2006 SSJoin / Xiao et al. 2008
     PPJoin, public literature). Two shingle sets with Jaccard ≥ t
@@ -1482,7 +1420,7 @@ def prefix_jaccard_join(
     plumbing).
 
     Engine-exact arithmetic: the threshold is the rational
-    threshold_num/threshold_den (default 4/5 = 0.8), so the prefix
+    num/den = 4/5 = 0.8, so the prefix
     length (n − ⌈t·n⌉ + 1 with ⌈t·n⌉ = (num·n + den − 1) div den)
     and the verify predicate (den·common ≥ num·union) are pure
     integers — no float enters until the reported jaccard.
@@ -1494,9 +1432,7 @@ def prefix_jaccard_join(
     excluded from prefixes automatically (they sort LAST in the
     rarest-first order). Frequent-shingle skew therefore prunes
     itself — the opposite of the LSH bucket-cap trade."""
-    sig, _cand, out = _prefix_join_parts(
-        df, text_col, threshold_num, threshold_den
-    )
+    sig, _cand, out = _prefix_join_parts(df, "text", 4, 5)
     # Materialize the (candidate-bounded) result so the signature
     # cache is released on return rather than pinned for the session.
     out = out.localCheckpoint(eager=True)
@@ -1641,18 +1577,13 @@ def _prefix_join_parts(
     return sig, cand, out
 
 
-def prefix_join_scaling_stats(
-    df: DataFrame, text_col: str = "text", threshold_num: int = 4,
-    threshold_den: int = 5,
-) -> dict:
+def prefix_join_scaling_stats(df: DataFrame) -> dict:
     """Sweep diagnostic (VERDICT r6 item 6): DISTINCT candidate-pair
     count (post length+positional filters and the candidate dedup,
     pre exact-verify — exactly the rows the verify join pays for)
     next to the true-pair count, so a super-linear sweep point can be
     attributed to output growth vs prefix-filter decay."""
-    sig, cand, out = _prefix_join_parts(
-        df, text_col, threshold_num, threshold_den
-    )
+    sig, cand, out = _prefix_join_parts(df, "text", 4, 5)
     stats = {
         "n_candidates": cand.count(),
         "n_true_pairs": out.count(),
@@ -1661,17 +1592,14 @@ def prefix_join_scaling_stats(
     return stats
 
 
-def minhash_scaling_stats(
-    df: DataFrame, text_col: str = "text", threshold: float = 0.8,
-    bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-) -> dict:
+def minhash_scaling_stats(df: DataFrame) -> dict:
     """Sweep diagnostic twin for the LSH path: distinct band-bucket
     candidate pairs vs verified pairs."""
-    sig = minhash_signatures(df, text_col).persist()
+    sig = minhash_signatures(df).persist()
     bands = sig.select(
         "doc_id", F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk")
     )
-    cand = band_candidates(bands, bucket_cap).persist()
+    cand = band_candidates(bands).persist()
     n_cand = cand.count()
     sa = sig.select(F.col("doc_id").alias("id_a"), F.col("shh").alias("sh_a"))
     sb = sig.select(F.col("doc_id").alias("id_b"), F.col("shh").alias("sh_b"))
@@ -1683,7 +1611,7 @@ def minhash_scaling_stats(
                 "round(size(array_intersect(sh_a, sh_b)) / "
                 "(size(sh_a) + size(sh_b) - size(array_intersect(sh_a, sh_b))), 6)"
             )
-            >= threshold
+            >= 0.8
         )
         .count()
     )
@@ -1692,9 +1620,7 @@ def minhash_scaling_stats(
     return {"n_candidates": n_cand, "n_true_pairs": n_true}
 
 
-def prefix_jaccard_join_oracle(
-    threshold_num: int = 4, threshold_den: int = 5
-) -> str:
+def prefix_jaccard_join_oracle() -> str:
     """Brute-force quadratic twin — NO prefix filter, so a green row
     proves the pruned plan is exact, not approximately right."""
     return f"""
@@ -1718,8 +1644,8 @@ def prefix_jaccard_join_oracle(
         FROM common
         JOIN sig sa ON id_a = sa.doc_id
         JOIN sig sb ON id_b = sb.doc_id
-        WHERE n_common * {threshold_den}
-              >= (len(sa.shh) + len(sb.shh) - n_common) * {threshold_num}
+        WHERE n_common * 5
+              >= (len(sa.shh) + len(sb.shh) - n_common) * 4
     """
 
 
@@ -1728,12 +1654,7 @@ def prefix_jaccard_join_oracle(
 SPAN_N = 8  # duplicated-span gram width, in whitespace tokens
 
 
-def duplicated_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = SPAN_N,
-) -> DataFrame:
+def duplicated_spans(df: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Span-level EXACT substring dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"):
     instead of dropping whole near-duplicate documents, find the
@@ -1769,7 +1690,7 @@ def duplicated_spans(
     dedup extends hash dedup (reference semantics anchor:
     ingestion/KafkaStreamsAggregator.java keys state by record,
     never by region)."""
-    grams = positional_grams(df, text_col, id_col, n)
+    grams = positional_grams(df, "text", "doc_id", n)
     dup = (
         grams.withColumn(
             "cnt", F.count(F.lit(1)).over(Window.partitionBy("gram"))
@@ -1823,7 +1744,7 @@ def positions_to_spans(dup_positions: DataFrame, n: int = SPAN_N) -> DataFrame:
     ).select("doc_id", "span_start", "span_len")
 
 
-def duplicated_spans_oracle(n: int = SPAN_N) -> str:
+def duplicated_spans_oracle() -> str:
     """Same gram/window/island pipeline in DuckDB; integer positions
     and string grams make the hash comparison exact."""
     return f"""
@@ -1832,8 +1753,8 @@ def duplicated_spans_oracle(n: int = SPAN_N) -> str:
         ),
         g AS (
             SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                   array_to_string(ws[i:i + {n - 1}], ' ') AS gram
-            FROM w, UNNEST(range(1, greatest(len(ws) - {n - 1}, 0) + 1))
+                   array_to_string(ws[i:i + {SPAN_N - 1}], ' ') AS gram
+            FROM w, UNNEST(range(1, greatest(len(ws) - {SPAN_N - 1}, 0) + 1))
                      AS t(i)
         ),
         d AS (
@@ -1850,7 +1771,7 @@ def duplicated_spans_oracle(n: int = SPAN_N) -> str:
             FROM d
         )
         SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-               CAST(max(pos) - min(pos) + {n} AS BIGINT) AS span_len
+               CAST(max(pos) - min(pos) + {SPAN_N} AS BIGINT) AS span_len
         FROM isl GROUP BY doc_id, grp
     """
 
@@ -1863,12 +1784,7 @@ ER_MAX_EDIT = 1  # match rule: name edit distance ceiling
 
 def record_linkage_pairs(
     df: DataFrame,
-    id_col: str = "c_custkey",
-    name_col: str = "c_name",
-    block_col: str = "c_nationkey",
     field_cols: tuple[str, ...] = ("c_mktsegment",),
-    prefix_len: int = ER_PREFIX_LEN,
-    max_edit: int = ER_MAX_EDIT,
     other: DataFrame | None = None,
 ) -> DataFrame:
     """Blocked record linkage (Fellegi-Sunter 1969 deterministic
@@ -1876,7 +1792,7 @@ def record_linkage_pairs(
     counterpart of the document near-dup family above: candidate
     pairs come from an equality *blocking key* (here
     (nation, name-prefix)), matches are decided by a field-level
-    agreement vector (name edit distance ≤ max_edit), and the
+    agreement vector (name edit distance ≤ ``ER_MAX_EDIT``), and the
     agreement evidence ships in the output so a downstream survivor
     rule can pick golden records. Differs from edit_distance_pairs:
     blocking is deterministic multi-field equality (no probabilistic
@@ -1885,17 +1801,17 @@ def record_linkage_pairs(
 
     Plan: ONE shuffle on the composite blocking key; the self-join
     explodes only within blocks, whose size is bounded by the key
-    design (≤ 10^(18-prefix_len) names per nation here) — the
+    design (≤ 10^(18-``ER_PREFIX_LEN``) names per nation here) — the
     classic blocking guarantee that makes pairwise linkage feasible
     at 100 TB where the unblocked cross product is n². Levenshtein
     runs JVM-side (codegen) on candidate pairs only. Integer
     distances and agreement counts keep the oracle hash exact."""
     def _sel(frame: DataFrame) -> DataFrame:
         return frame.select(
-            F.col(id_col).alias("id"),
-            F.col(name_col).alias("name"),
-            F.col(block_col).cast("long").alias("blk"),
-            F.substring(F.col(name_col), 1, prefix_len).alias("pfx"),
+            F.col("c_custkey").alias("id"),
+            F.col("c_name").alias("name"),
+            F.col("c_nationkey").cast("long").alias("blk"),
+            F.substring(F.col("c_name"), 1, ER_PREFIX_LEN).alias("pfx"),
             *[F.col(c) for c in field_cols],
         )
 
@@ -1920,7 +1836,7 @@ def record_linkage_pairs(
         term = (F.col(f"a.{c}") == F.col(f"b.{c}")).cast("long")
         n_agree = term if n_agree is None else n_agree + term
     return (
-        pairs.where(dist <= max_edit)
+        pairs.where(dist <= ER_MAX_EDIT)
         .select(
             F.least(F.col("a.id"), F.col("b.id"))
             .cast("long")
@@ -1936,9 +1852,7 @@ def record_linkage_pairs(
     )
 
 
-def record_linkage_oracle(
-    prefix_len: int = ER_PREFIX_LEN, max_edit: int = ER_MAX_EDIT
-) -> str:
+def record_linkage_oracle() -> str:
     return f"""
         SELECT CAST(a.c_custkey AS BIGINT) AS id_a,
                CAST(b.c_custkey AS BIGINT) AS id_b,
@@ -1948,22 +1862,14 @@ def record_linkage_oracle(
                          THEN 1 ELSE 0 END AS BIGINT) AS fields_agree
         FROM customer a JOIN customer b
           ON a.c_nationkey = b.c_nationkey
-         AND substring(a.c_name, 1, {prefix_len})
-             = substring(b.c_name, 1, {prefix_len})
+         AND substring(a.c_name, 1, {ER_PREFIX_LEN})
+             = substring(b.c_name, 1, {ER_PREFIX_LEN})
          AND a.c_custkey < b.c_custkey
-        WHERE levenshtein(a.c_name, b.c_name) <= {max_edit}
+        WHERE levenshtein(a.c_name, b.c_name) <= {ER_MAX_EDIT}
     """
 
 
-def entity_golden(
-    df: DataFrame,
-    id_col: str = "c_custkey",
-    name_col: str = "c_name",
-    block_col: str = "c_nationkey",
-    prefix_len: int = ER_PREFIX_LEN,
-    max_edit: int = ER_MAX_EDIT,
-    algorithm: str = "auto",
-) -> DataFrame:
+def entity_golden(df: DataFrame, algorithm: str = "auto") -> DataFrame:
     """End-to-end MDM resolution on top of record_linkage_pairs:
     matched pairs → transitive closure → one entity_id per cluster
     (the component minimum) → golden-record SURVIVORSHIP (the
@@ -1984,10 +1890,9 @@ def entity_golden(
     ValueError before any Spark job."""
     _check_algorithm(algorithm)
     pairs = record_linkage_pairs(
-        df, id_col, name_col, block_col,
-        prefix_len=prefix_len, max_edit=max_edit,
+        df,
     ).select("id_a", "id_b")
-    base = df.select(F.col(id_col).cast("long").alias("id"))
+    base = df.select(F.col("c_custkey").cast("long").alias("id"))
     return _closure(pairs, base, "id", algorithm).select(
         "id",
         F.coalesce(F.col("comp"), F.col("id")).alias("entity_id"),
@@ -1996,13 +1901,11 @@ def entity_golden(
     )
 
 
-def entity_golden_oracle(
-    prefix_len: int = ER_PREFIX_LEN, max_edit: int = ER_MAX_EDIT
-) -> str:
+def entity_golden_oracle() -> str:
     """Min-reachable-id transitive closure over the SAME blocked
     linkage pairs, as a recursive CTE."""
     return f"""
-        WITH RECURSIVE pairs AS ({record_linkage_oracle(prefix_len, max_edit)}),
+        WITH RECURSIVE pairs AS ({record_linkage_oracle()}),
         edges AS (
             SELECT id_a AS u, id_b AS v FROM pairs
             UNION
@@ -2027,12 +1930,7 @@ def entity_golden_oracle(
 SPLIT_BUCKETS = (8, 9)  # train < 8 ≤ val < 9 ≤ test, of 10
 
 
-def leakage_safe_split(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-) -> DataFrame:
+def leakage_safe_split(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Train/val/test split that cannot leak near-duplicates across
     splits: the split is a deterministic function of the NEAR-DUP
     COMPONENT (md5 of the component label, 8/1/1 buckets), so every
@@ -2063,7 +1961,7 @@ def leakage_safe_split(
     from kafka_streams_pipeline_spark.functions.hashing import md5_long
 
     comp = dedup_components(
-        df, text_col=text_col, id_col=id_col, threshold=threshold
+        df, threshold=threshold
     )
 
     def bucket(col: Column) -> Column:
@@ -2079,10 +1977,10 @@ def leakage_safe_split(
         )
 
     base = comp.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "component",
         to_split(bucket(F.col("component"))).alias("split"),
-        to_split(bucket(F.col(id_col))).alias("naive_split"),
+        to_split(bucket(F.col("doc_id"))).alias("naive_split"),
     )
     per_comp = base.groupBy("component").agg(
         F.countDistinct("split").alias("n_splits"),
@@ -2097,7 +1995,7 @@ def leakage_safe_split(
     per_split = base.groupBy("split").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.countDistinct("component").cast("long").alias("n_components"),
-        F.sum(id_col).cast("long").alias("doc_checksum"),
+        F.sum("doc_id").cast("long").alias("doc_checksum"),
     )
     return (
         per_split.crossJoin(F.broadcast(diag))

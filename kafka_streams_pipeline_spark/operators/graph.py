@@ -50,25 +50,21 @@ DEFAULT_SCALE = 10**9
 DEFAULT_MIN_COUNT = 5
 
 
-def weighted_pagerank(
-    edges: DataFrame,
-    damping_pct: int = DEFAULT_DAMPING_PCT,
-    iters: int = DEFAULT_ITERS,
-    scale: int = DEFAULT_SCALE,
-) -> DataFrame:
+def weighted_pagerank(edges: DataFrame, iters: int = DEFAULT_ITERS) -> DataFrame:
     """Weighted PageRank over a directed edge frame
     ``(src, dst, weight)`` (symmetric graphs list each edge in both
-    directions). Returns ``(node, pr)`` with ``pr`` in ``scale``
-    fixed-point units after ``iters`` rounds of
+    directions). Returns ``(node, pr)`` with ``pr`` in scale =
+    ``DEFAULT_SCALE`` fixed-point units after ``iters`` rounds of
 
         pr'(v) = (100−d)·scale/100
                  + d · Σ_u floor(pr(u)·w(u,v) / W(u)) / 100
 
     (all floor divisions), starting from ``pr = scale`` everywhere —
     the unnormalized TextRank form whose fixed point averages
-    ``scale`` per node. Nodes are defined by edge endpoints; a node
-    with no in-edges settles at the base term, as in the paper."""
-    base = (100 - damping_pct) * scale // 100
+    ``scale`` per node, with d = ``DEFAULT_DAMPING_PCT``. Nodes are
+    defined by edge endpoints; a node with no in-edges settles at the
+    base term, as in the paper."""
+    base = (100 - DEFAULT_DAMPING_PCT) * DEFAULT_SCALE // 100
     e = (
         edges.select("src", "dst", F.col("weight").cast("long").alias("w"))
         .join(
@@ -82,7 +78,7 @@ def weighted_pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("pr"))
+    ranks = nodes.select("node", F.lit(DEFAULT_SCALE).cast("long").alias("pr"))
     for it in range(iters):
         contrib = (
             e.join(ranks, e.src == ranks.node)
@@ -94,7 +90,7 @@ def weighted_pagerank(
             "node",
             (
                 F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+                + F.expr(f"({DEFAULT_DAMPING_PCT} * coalesce(s, 0L)) div 100")
             )
             .cast("long")
             .alias("pr"),
@@ -113,7 +109,6 @@ def weighted_pagerank(
 
 def token_cooccurrence_edges(
     df: DataFrame,
-    text_col: str = "text",
     min_count: int = DEFAULT_MIN_COUNT,
 ) -> DataFrame:
     """TextRank's graph: symmetric adjacent-token co-occurrence
@@ -128,7 +123,7 @@ def token_cooccurrence_edges(
     the frequency filter joins against the vocabulary-sized
     qualifying-token frame."""
     ws = df.select(
-        F.split(F.lower(F.col(text_col)), " ").alias("ws")
+        F.split(F.lower(F.col("text")), " ").alias("ws")
     ).where(F.expr("size(ws) >= 2"))
     vocab = (
         ws.select(F.explode("ws").alias("w"))
@@ -166,45 +161,28 @@ def token_cooccurrence_edges(
     )
 
 
-def textrank(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = DEFAULT_MIN_COUNT,
-    damping_pct: int = DEFAULT_DAMPING_PCT,
-    iters: int = DEFAULT_ITERS,
-    scale: int = DEFAULT_SCALE,
-) -> DataFrame:
+def textrank(df: DataFrame) -> DataFrame:
     """TextRank keyword salience: weighted PageRank over the token
     co-occurrence graph. Returns ``(token, pr)``, ``pr`` in
-    ``scale`` fixed-point units — exact across engines."""
-    ranks = weighted_pagerank(
-        token_cooccurrence_edges(df, text_col, min_count),
-        damping_pct=damping_pct,
-        iters=iters,
-        scale=scale,
-    )
+    ``DEFAULT_SCALE`` fixed-point units — exact across engines."""
+    ranks = weighted_pagerank(token_cooccurrence_edges(df))
     return ranks.select(F.col("node").alias("token"), "pr")
 
 
-def textrank_oracle(
-    min_count: int = DEFAULT_MIN_COUNT,
-    damping_pct: int = DEFAULT_DAMPING_PCT,
-    iters: int = DEFAULT_ITERS,
-    scale: int = DEFAULT_SCALE,
-) -> str:
+def textrank_oracle() -> str:
     """DuckDB twin of :func:`textrank` on the ``documents`` view,
     with the fixed iteration count UNROLLED (recursive CTEs restrict
     aggregation in the recursive term; a fixed-K unroll is exact and
     engine-portable). Bit-identical to the Spark plan by the
     scaled-integer argument in the module docstring."""
-    base = (100 - damping_pct) * scale // 100
+    base = (100 - DEFAULT_DAMPING_PCT) * DEFAULT_SCALE // 100
     rounds = []
     prev = "r0"
-    for k in range(1, iters + 1):
+    for k in range(1, DEFAULT_ITERS + 1):
         rounds.append(
             f"""r{k} AS (
             SELECT n.node,
-                   CAST({base} + ({damping_pct} * COALESCE(c.s, 0)) // 100
+                   CAST({base} + ({DEFAULT_DAMPING_PCT} * COALESCE(c.s, 0)) // 100
                         AS BIGINT) AS pr
             FROM nodes n
             LEFT JOIN (
@@ -224,7 +202,7 @@ def textrank_oracle(
         ),
         toks AS (SELECT unnest(ws) AS w FROM ws WHERE len(ws) >= 2),
         vocab AS (
-            SELECT w FROM toks GROUP BY w HAVING count(*) >= {min_count}
+            SELECT w FROM toks GROUP BY w HAVING count(*) >= {DEFAULT_MIN_COUNT}
         ),
         dpairs AS (
             SELECT p['src'] AS src, p['dst'] AS dst
@@ -261,7 +239,7 @@ def textrank_oracle(
             SELECT dst AS node FROM edges
         ),
         r0 AS (
-            SELECT node, CAST({scale} AS BIGINT) AS pr FROM nodes
+            SELECT node, CAST({DEFAULT_SCALE} AS BIGINT) AS pr FROM nodes
         ),
         {unrolled}
         SELECT node AS token, pr FROM {prev}
@@ -470,7 +448,7 @@ KCORE_K = 3
 KCORE_ROUNDS = 8
 
 
-def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
+def kcore(edges: DataFrame, k: int = KCORE_K) -> DataFrame:
     """k-core decomposition by bounded iterative peeling (Seidman
     1983, public literature): repeatedly delete nodes whose degree in
     the SURVIVING subgraph is < k; the fixpoint is the maximal
@@ -479,14 +457,14 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     the duplicate graph is template farming; a tree-ish component is
     organic drift).
 
-    Runs EXACTLY ``rounds`` peel rounds (a fixed constant, so the
+    Runs EXACTLY ``KCORE_ROUNDS`` peel rounds (a fixed constant, so the
     DuckDB oracle can unroll the identical iterations as chained
     CTEs — the bounded-recursion move of textrank/bpe/funnel) and
     emits ``converged`` = (last round removed nothing). Once the
     fixpoint is reached earlier, the remaining rounds are no-ops, so
     fixed-rounds ≡ run-to-fixpoint whenever converged is TRUE —
     which the certified row pins at the gate SFs. A peel cascade
-    deeper than ``rounds`` (a path feeding a core sheds one node per
+    deeper than ``KCORE_ROUNDS`` (a path feeding a core sheds one node per
     round) returns converged=FALSE rows, never a silent fixpoint
     claim.
 
@@ -504,7 +482,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
         .localCheckpoint(eager=True)
     )
     counts = [sym.count()]
-    for _ in range(rounds):
+    for _ in range(KCORE_ROUNDS):
         good = (
             sym.groupBy("s")
             .agg(F.count(F.lit(1)).alias("deg"))
@@ -530,9 +508,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     )
 
 
-def kcore_oracle_tail(
-    k: int = KCORE_K, rounds: int = KCORE_ROUNDS
-) -> str:
+def kcore_oracle_tail() -> str:
     """The unrolled peel as SQL, expecting a CTE named ``pairs`` with
     (id_a, id_b) in scope; returns the full statement TAIL (to be
     appended after `WITH pairs AS (...)`)."""
@@ -542,10 +518,10 @@ def kcore_oracle_tail(
             UNION ALL
             SELECT id_b AS s, id_a AS d FROM pairs
         )"""]
-    for r in range(1, rounds + 1):
+    for r in range(1, KCORE_ROUNDS + 1):
         ctes.append(f"""
         n{r} AS MATERIALIZED (
-            SELECT s FROM e{r - 1} GROUP BY s HAVING count(*) >= {k}
+            SELECT s FROM e{r - 1} GROUP BY s HAVING count(*) >= {KCORE_K}
         ),
         e{r} AS MATERIALIZED (
             SELECT e.s, e.d FROM e{r - 1} e
@@ -556,8 +532,8 @@ def kcore_oracle_tail(
         {", ".join(ctes)}
         SELECT s AS node,
                CAST(count(*) AS BIGINT) AS core_degree,
-               (SELECT count(*) FROM e{rounds})
-                   = (SELECT count(*) FROM e{rounds - 1}) AS converged
-        FROM e{rounds}
+               (SELECT count(*) FROM e{KCORE_ROUNDS})
+                   = (SELECT count(*) FROM e{KCORE_ROUNDS - 1}) AS converged
+        FROM e{KCORE_ROUNDS}
         GROUP BY s
     """

@@ -56,16 +56,16 @@ def morton_key(x: Column, y: Column, bits: int = DEFAULT_BITS) -> Column:
     return reduce(lambda a, b: a + b, parts).cast("long")
 
 
-def morton_key_sql(x_expr: str, y_expr: str, bits: int = DEFAULT_BITS) -> str:
+def morton_key_sql(x_expr: str, y_expr: str) -> str:
     """The same Morton key as ``morton_key``, as portable SQL text
     (DuckDB and Spark SQL both parse it) — the oracle twin. Bit-for-
     bit identical by construction: the same mask + per-bit
     shift/AND/shift terms, summed over disjoint bit positions."""
-    mask = (1 << bits) - 1
+    mask = (1 << DEFAULT_BITS) - 1
     xs = f"(CAST({x_expr} AS BIGINT) & {mask})"
     ys = f"(CAST({y_expr} AS BIGINT) & {mask})"
     terms = []
-    for i in range(bits):
+    for i in range(DEFAULT_BITS):
         terms.append(f"((({xs} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({ys} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"

@@ -185,14 +185,14 @@ MEDIA_FEATURE_SCHEMA = StructType(
 FEAT_DIM = 8
 
 
-def binary_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def binary_meta(df: DataFrame) -> DataFrame:
     """Pure-JVM metadata over opaque binary: byte length + md5.
     No Python, no decode — the cheap 'what is this blob' pass."""
     return df.select(
         "asset_id",
         "media_type",
-        F.octet_length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        F.md5(F.col(payload_col)).alias("payload_md5"),
+        F.octet_length(F.col("payload")).cast("long").alias("n_bytes"),
+        F.md5(F.col("payload")).alias("payload_md5"),
     )
 
 
@@ -239,7 +239,7 @@ def _real_features(mtype: str, payload: bytes) -> list[float]:
     raise ValueError(f"unsupported media_type: {mtype!r}")
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """REAL mapInPandas feature extraction over media payloads: each
     row dispatches on ``media_type`` to the stdlib codec parser for
     its modality — audio → ``parse_wav``, image → ``parse_bmp``,
@@ -257,7 +257,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         )
 
     return _explode(
-        df, ["asset_id", "media_type", payload_col], MEDIA_FEATURE_SCHEMA, rows_of
+        df, ["asset_id", "media_type", "payload"], MEDIA_FEATURE_SCHEMA, rows_of
     )
 
 
@@ -339,7 +339,7 @@ WAV_STATS_SCHEMA = StructType(
 )
 
 
-def decode_wav(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_wav(df: DataFrame) -> DataFrame:
     """mapInPandas audio decode: RIFF header fields + exact integer
     PCM stats per asset. Stats stay integral (peak, sum) so every
     downstream derivation (mean, dBFS) is order-independent and
@@ -354,7 +354,7 @@ def decode_wav(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             int(np.abs(s64).max()) if n else 0, int(s64.sum()),
         )
 
-    return _explode(df, ["asset_id", payload_col], WAV_STATS_SCHEMA, rows_of)
+    return _explode(df, ["asset_id", "payload"], WAV_STATS_SCHEMA, rows_of)
 
 
 def wav_from_documents(docs: DataFrame) -> DataFrame:
@@ -494,12 +494,7 @@ def _image_rows(parse, bpp_factor: int):
     return rows_of
 
 
-def resize_bmp(
-    df: DataFrame,
-    width: int = 4,
-    height: int = 4,
-    payload_col: str = "payload",
-) -> DataFrame:
+def resize_bmp(df: DataFrame, width: int = 4, height: int = 4) -> DataFrame:
     """REAL image resize: parse the BMP, nearest-neighbor sample the
     pixel grid (out pixel (X, Y) ← in pixel (X*w // W, Y*h // H) —
     the floor-index convention an oracle can replicate exactly),
@@ -513,7 +508,7 @@ def resize_bmp(
         yield aid, mtype, width, height, _bmp_bytes(px[np.ix_(ys, xs)])
 
     return _explode(
-        df, ["asset_id", "media_type", payload_col], RESIZED_SCHEMA, rows_of
+        df, ["asset_id", "media_type", "payload"], RESIZED_SCHEMA, rows_of
     )
 
 
@@ -538,7 +533,7 @@ def _bmp_payload(did: int) -> bytes:
 AVI_US_PER_FRAME = 40_000  # 25 fps
 
 
-def _avi_bytes(frames: np.ndarray, us_per_frame: int = AVI_US_PER_FRAME) -> bytes:
+def _avi_bytes(frames: np.ndarray) -> bytes:
     """Serialize an (nf, h, w, 3) uint8 array as a standard
     uncompressed AVI: RIFF 'AVI ' → LIST hdrl (avih + LIST strl with
     'vids'/'DIB ' headers) → LIST movi with one '00db' DIB chunk per
@@ -561,12 +556,12 @@ def _avi_bytes(frames: np.ndarray, us_per_frame: int = AVI_US_PER_FRAME) -> byte
 
     avih = struct.pack(
         "<IIIIIIIIII4I",
-        us_per_frame, frame_size * 1_000_000 // us_per_frame, 0, 0,
+        AVI_US_PER_FRAME, frame_size * 1_000_000 // AVI_US_PER_FRAME, 0, 0,
         nf, 0, 1, frame_size, w, h, 0, 0, 0, 0,
     )
     strh = struct.pack(
         "<4s4sIHHIIIIIIIi4H",
-        b"vids", b"DIB ", 0, 0, 0, 0, us_per_frame, 1_000_000, 0, nf,
+        b"vids", b"DIB ", 0, 0, 0, 0, AVI_US_PER_FRAME, 1_000_000, 0, nf,
         frame_size, 0xFFFFFFFF, 0, 0, 0, w, h,
     )
     strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, frame_size, 2835, 2835, 0, 0)
@@ -642,9 +637,7 @@ VIDEO_FRAME_STATS_SCHEMA = StructType(
 )
 
 
-def sample_avi_frames(
-    df: DataFrame, stride: int = 2, payload_col: str = "payload"
-) -> DataFrame:
+def sample_avi_frames(df: DataFrame, stride: int = 2) -> DataFrame:
     """REAL video frame sampling: parse the AVI container, keep every
     ``stride``-th frame, emit exact integer pixel stats per sampled
     frame (1 video row → ceil(nf/stride) frame rows). frame_ts_ms
@@ -659,7 +652,7 @@ def sample_avi_frames(
             yield aid, idx, idx * us // 1000, w, h, *_pixel_stats(frames[idx])
 
     return _explode(
-        df, ["asset_id", payload_col], VIDEO_FRAME_STATS_SCHEMA, rows_of
+        df, ["asset_id", "payload"], VIDEO_FRAME_STATS_SCHEMA, rows_of
     )
 
 
@@ -689,7 +682,7 @@ def _avi_payload(did: int) -> bytes:
 ENERGY_FRAME = 20  # samples per energy frame
 
 
-def audio_frame_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def audio_frame_energy(df: DataFrame) -> DataFrame:
     """Windowed audio analysis: decode the WAV, split PCM into fixed
     ENERGY_FRAME-sample frames, emit per-frame exact integer energy
     (Σ s²) and peak — the decode→window→feature chain a speech
@@ -715,7 +708,7 @@ def audio_frame_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame
                 int((chunk * chunk).sum()), int(np.abs(chunk).max()),
             )
 
-    return _explode(df, ["asset_id", payload_col], schema, rows_of)
+    return _explode(df, ["asset_id", "payload"], schema, rows_of)
 
 
 # --- Real compressed-image decode: stdlib baseline JPEG codec ---------------
@@ -1138,7 +1131,7 @@ JPEG_STATS_SCHEMA = StructType(
 )
 
 
-def decode_jpeg(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_jpeg(df: DataFrame) -> DataFrame:
     """mapInPandas JPEG decode: frame header fields + exact integer
     stats over the DECODED pixels. ``spatial_sum`` weights each pixel
     by (c·h·w + y·w + x), so a decoder that misplaces blocks, swaps
@@ -1154,7 +1147,7 @@ def decode_jpeg(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         _, spatial, peak = _pixel_stats(planes)
         yield aid, w, h, ncomp, w * h, *sums, spatial, peak
 
-    return _explode(df, ["asset_id", payload_col], JPEG_STATS_SCHEMA, rows_of)
+    return _explode(df, ["asset_id", "payload"], JPEG_STATS_SCHEMA, rows_of)
 
 
 # --- Real compressed-video decode: MJPEG-in-AVI ----------------------------
@@ -1169,9 +1162,7 @@ def decode_jpeg(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 _MJPG_FOURCC = struct.unpack("<I", b"MJPG")[0]
 
 
-def _mjpeg_avi_bytes(
-    frames: np.ndarray, us_per_frame: int = AVI_US_PER_FRAME, q: int = 8
-) -> bytes:
+def _mjpeg_avi_bytes(frames: np.ndarray, q: int = 8) -> bytes:
     """Serialize (nf, 3, h, w) uint8 component planes as an MJPEG AVI:
     standard RIFF hdrl/movi structure, 'MJPG' stream fourcc, one
     complete baseline JPEG per '00dc' chunk."""
@@ -1191,12 +1182,12 @@ def _mjpeg_avi_bytes(
 
     avih = struct.pack(
         "<IIIIIIIIII4I",
-        us_per_frame, max_size * 1_000_000 // us_per_frame, 0, 0,
+        AVI_US_PER_FRAME, max_size * 1_000_000 // AVI_US_PER_FRAME, 0, 0,
         nf, 0, 1, max_size, w, h, 0, 0, 0, 0,
     )
     strh = struct.pack(
         "<4s4sIHHIIIIIIIi4H",
-        b"vids", b"MJPG", 0, 0, 0, 0, us_per_frame, 1_000_000, 0, nf,
+        b"vids", b"MJPG", 0, 0, 0, 0, AVI_US_PER_FRAME, 1_000_000, 0, nf,
         max_size, 0xFFFFFFFF, 0, 0, 0, w, h,
     )
     strf = struct.pack(
@@ -1306,7 +1297,7 @@ MJPEG_FRAME_STATS_SCHEMA = StructType(
 )
 
 
-def decode_mjpeg_frames(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_mjpeg_frames(df: DataFrame) -> DataFrame:
     """REAL compressed-video decode: walk the AVI, entropy-decode
     every embedded JPEG frame, emit exact integer stats per frame
     (1 video row → nf frame rows). ``spatial_sum`` weights each pixel
@@ -1320,7 +1311,7 @@ def decode_mjpeg_frames(df: DataFrame, payload_col: str = "payload") -> DataFram
             yield aid, idx, idx * us // 1000, w, h, *_pixel_stats(planes)
 
     return _explode(
-        df, ["asset_id", payload_col], MJPEG_FRAME_STATS_SCHEMA, rows_of
+        df, ["asset_id", "payload"], MJPEG_FRAME_STATS_SCHEMA, rows_of
     )
 
 
@@ -1496,12 +1487,12 @@ def _png_payload(did: int) -> bytes:
     return _png_bytes(px, filter_mode="cycle")
 
 
-def decode_png(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_png(df: DataFrame) -> DataFrame:
     """mapInPandas PNG decode: header fields + exact integer pixel
     stats (same contract as decode_bmp — the index-weighted checksum
     makes filter-inverse or row-order mistakes observable)."""
     return _explode(
-        df, ["asset_id", payload_col], BMP_STATS_SCHEMA, _image_rows(parse_png, 3)
+        df, ["asset_id", "payload"], BMP_STATS_SCHEMA, _image_rows(parse_png, 3)
     )
 
 
@@ -1526,16 +1517,11 @@ def _box(btype: bytes, body: bytes) -> bytes:
     return struct.pack(">I4s", 8 + len(body), btype) + body
 
 
-def _fullbox(btype: bytes, body: bytes, version: int = 0, flags: int = 0) -> bytes:
-    return _box(btype, struct.pack(">B3s", version, flags.to_bytes(3, "big")) + body)
+def _fullbox(btype: bytes, body: bytes, flags: int = 0) -> bytes:
+    return _box(btype, struct.pack(">B3s", 0, flags.to_bytes(3, "big")) + body)
 
 
-def _mp4_bytes(
-    frames: np.ndarray,
-    q: int = 8,
-    timescale: int = MP4_TIMESCALE,
-    delta: int = MP4_SAMPLE_DELTA,
-) -> bytes:
+def _mp4_bytes(frames: np.ndarray, q: int = 8) -> bytes:
     """Serialize (nf, 3, h, w) uint8 planes as an MJPEG-in-MP4:
     ftyp + mdat (one complete baseline JPEG per sample) + moov with
     real sample tables. Samples are packed two per chunk (last chunk
@@ -1557,7 +1543,7 @@ def _mp4_bytes(
         chunk_sizes.append(take)
         pos += sum(len(j) for j in jpegs[i : i + take])
         i += take
-    duration = nf * delta
+    duration = nf * MP4_SAMPLE_DELTA
 
     visual_entry = (
         struct.pack(">I4s", 86, b"jpeg")
@@ -1572,7 +1558,7 @@ def _mp4_bytes(
         + struct.pack(">Hh", 24, -1)  # depth, pre_defined
     )
     stsd = _fullbox(b"stsd", struct.pack(">I", 1) + visual_entry)
-    stts = _fullbox(b"stts", struct.pack(">III", 1, nf, delta))
+    stts = _fullbox(b"stts", struct.pack(">III", 1, nf, MP4_SAMPLE_DELTA))
     # stsc runs compress consecutive equal samples-per-chunk values
     stsc_runs: list[tuple[int, int]] = []
     for idx, n in enumerate(chunk_sizes, start=1):
@@ -1604,7 +1590,7 @@ def _mp4_bytes(
     )
     mdhd = _fullbox(
         b"mdhd",
-        struct.pack(">IIIIHH", 0, 0, timescale, duration, 0x55C4, 0),
+        struct.pack(">IIIIHH", 0, 0, MP4_TIMESCALE, duration, 0x55C4, 0),
     )
     mdia = _box(b"mdia", mdhd + hdlr + minf)
     tkhd = _fullbox(
@@ -1618,7 +1604,7 @@ def _mp4_bytes(
     )
     mvhd = _fullbox(
         b"mvhd",
-        struct.pack(">IIII", 0, 0, timescale, duration)
+        struct.pack(">IIII", 0, 0, MP4_TIMESCALE, duration)
         + struct.pack(">Ihh", 0x00010000, 0x0100, 0)
         + b"\x00" * 8
         + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
@@ -1786,7 +1772,7 @@ def _mp4_payload(did: int) -> bytes:
     return _mp4_bytes(_block_frames(did, 41, 131, 19))
 
 
-def decode_mp4_frames(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_mp4_frames(df: DataFrame) -> DataFrame:
     """REAL MP4 video decode: walk the ISO-BMFF sample tables,
     entropy-decode every Photo-JPEG sample, emit exact integer stats
     per frame (1 video row → nf frame rows; same contract as
@@ -1800,7 +1786,7 @@ def decode_mp4_frames(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             yield aid, idx, ticks * 1000 // timescale, w, h, *_pixel_stats(planes)
 
     return _explode(
-        df, ["asset_id", payload_col], MJPEG_FRAME_STATS_SCHEMA, rows_of
+        df, ["asset_id", "payload"], MJPEG_FRAME_STATS_SCHEMA, rows_of
     )
 
 
@@ -1938,7 +1924,7 @@ def _lzw_decode(data: bytes, n_expected: int, mcs: int = 8) -> np.ndarray:
     return np.frombuffer(bytes(out), dtype=np.uint8)
 
 
-def _gif_bytes(frames: np.ndarray, delay_cs: int = GIF_DELAY_CS) -> bytes:
+def _gif_bytes(frames: np.ndarray) -> bytes:
     """Serialize an (nf, h, w) uint8 palette-index array as an
     animated GIF89a: logical screen descriptor, 256-entry grayscale
     global color table (index i → (i,i,i)), and per frame a Graphic
@@ -1949,7 +1935,7 @@ def _gif_bytes(frames: np.ndarray, delay_cs: int = GIF_DELAY_CS) -> bytes:
     parts.append(bytes(v for i in range(256) for v in (i, i, i)))
     for f in frames:
         parts.append(
-            struct.pack("<BBBBHBB", 0x21, 0xF9, 4, 0, delay_cs, 0, 0)
+            struct.pack("<BBBBHBB", 0x21, 0xF9, 4, 0, GIF_DELAY_CS, 0, 0)
         )
         parts.append(struct.pack("<BHHHHB", 0x2C, 0, 0, w, h, 0))
         parts.append(bytes([8]))  # LZW minimum code size
@@ -2026,9 +2012,7 @@ def parse_gif(payload: bytes) -> tuple[int, int, int, list[np.ndarray]]:
     return w, h, delay_cs, frames
 
 
-def sample_gif_frames(
-    df: DataFrame, stride: int = 2, payload_col: str = "payload"
-) -> DataFrame:
+def sample_gif_frames(df: DataFrame, stride: int = 2) -> DataFrame:
     """REAL animated-GIF frame sampling (the GIF twin of
     sample_avi_frames): parse the container, LZW-decode every
     ``stride``-th frame, emit exact integer palette-index stats per
@@ -2041,7 +2025,7 @@ def sample_gif_frames(
             yield aid, idx, idx * delay_cs * 10, w, h, *_pixel_stats(frames[idx])
 
     return _explode(
-        df, ["asset_id", payload_col], VIDEO_FRAME_STATS_SCHEMA, rows_of
+        df, ["asset_id", "payload"], VIDEO_FRAME_STATS_SCHEMA, rows_of
     )
 
 

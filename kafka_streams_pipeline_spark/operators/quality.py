@@ -147,8 +147,6 @@ PROFILE_HLL_TOL_PCT = 5
 
 def table_profile_approx_certified(
     df: DataFrame,
-    columns: list[str] | None = None,
-    rsd: float = PROFILE_HLL_RSD,
     tol_pct: int = PROFILE_HLL_TOL_PCT,
 ) -> DataFrame:
     """Certification form of the ``approx=True`` 100 TB profile path:
@@ -161,10 +159,10 @@ def table_profile_approx_certified(
     hash-mismatches. At 100 TB you run only the approx aggregate —
     one pass, no (col_name, value) dedupe shuffle; the plan-contract
     test pins that branch Expand-free."""
-    cols = columns or df.columns
+    cols = df.columns
     exact = table_profile(df, cols)
     apx_aggs = [
-        F.approx_count_distinct(c, rsd).cast("long").alias(f"__nd_{c}")
+        F.approx_count_distinct(c, PROFILE_HLL_RSD).cast("long").alias(f"__nd_{c}")
         for c in cols
     ]
     stack_args = ", ".join(f"'{c}', __nd_{c}" for c in cols)
@@ -316,11 +314,7 @@ def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
 DRIFT_DEFAULT_PPM = 50_000  # 5% — the alerting convention
 
 
-def profile_drift(
-    old_profile: DataFrame,
-    new_profile: DataFrame,
-    threshold_ppm: int = DRIFT_DEFAULT_PPM,
-) -> DataFrame:
+def profile_drift(old_profile: DataFrame, new_profile: DataFrame) -> DataFrame:
     """Cross-snapshot DRIFT detection: join two ``table_profile``
     outputs per column and flag columns whose health metrics moved —
     the Deequ/whylogs anomaly-check pattern for continuously
@@ -335,7 +329,7 @@ def profile_drift(
     non-null FRACTION drift and the relative distinct drift in ppm
     (integer divisions, engine-exact); whether min/max moved; and
     ``drifted`` = any of (non-null fraction drift, distinct drift)
-    ≥ ``threshold_ppm`` OR a min/max change. Ascending col_name."""
+    ≥ ``DRIFT_DEFAULT_PPM`` OR a min/max change. Ascending col_name."""
     o = old_profile.select(
         "col_name",
         F.col("n_rows").alias("rows_old"),
@@ -381,8 +375,8 @@ def profile_drift(
         )
         .withColumn(
             "drifted",
-            (F.col("nonnull_drift_ppm") >= threshold_ppm)
-            | (F.col("distinct_drift_ppm") >= threshold_ppm)
+            (F.col("nonnull_drift_ppm") >= DRIFT_DEFAULT_PPM)
+            | (F.col("distinct_drift_ppm") >= DRIFT_DEFAULT_PPM)
             | F.col("minmax_changed"),
         )
         .orderBy("col_name")
@@ -467,16 +461,11 @@ QUANTILE_NUM = 1  # keep the top num/den fraction per group (1/4)
 QUANTILE_DEN = 4
 
 
-def group_quantile_filter(
-    df: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    num: int = QUANTILE_NUM,
-    den: int = QUANTILE_DEN,
-) -> DataFrame:
+def group_quantile_filter(df: DataFrame) -> DataFrame:
     """Per-group quality-quantile gate (the Gopher/MassiveText
     per-language filtering convention): within each group, keep the
-    top num/den fraction of documents by quality — a GLOBAL cutoff
+    top num/den = ``QUANTILE_NUM``/``QUANTILE_DEN`` fraction of
+    documents by quality — a GLOBAL cutoff
     would let a high-resource language's distribution set the bar
     and wipe out low-resource groups entirely.
 
@@ -498,18 +487,18 @@ def group_quantile_filter(
     from pyspark.sql.window import Window as _W
 
     base = df.select(
-        F.col(group_col).alias("grp"),
+        F.col("lang").alias("grp"),
         F.col("doc_id"),
         F.expr(
-            f"""
-            (cast(size(split({text_col}, ' ')) as bigint) *
-                    least(size(split({text_col}, ' ')), 100)
-                  + 60L * size(array_distinct(split({text_col}, ' ')))
-                  + 4L * least(length({text_col})
-                               - size(split({text_col}, ' ')) + 1,
-                               10 * size(split({text_col}, ' '))))
+            """
+            (cast(size(split(text, ' ')) as bigint) *
+                    least(size(split(text, ' ')), 100)
+                  + 60L * size(array_distinct(split(text, ' ')))
+                  + 4L * least(length(text)
+                               - size(split(text, ' ')) + 1,
+                               10 * size(split(text, ' '))))
                  * 1000000L
-            div (200L * size(split({text_col}, ' ')))
+            div (200L * size(split(text, ' ')))
             """
         ).alias("quality_ppm"),
     )
@@ -522,37 +511,32 @@ def group_quantile_filter(
         ),
     ).withColumn("n_docs", F.count(F.lit(1)).over(_W.partitionBy("grp")))
     kept = ranked.where(
-        F.col("rnk") * den <= F.col("n_docs") * num
+        F.col("rnk") * QUANTILE_DEN <= F.col("n_docs") * QUANTILE_NUM
     )
     return (
-        kept.groupBy(F.col("grp").alias(group_col))
+        kept.groupBy(F.col("grp").alias("lang"))
         .agg(
             F.max("n_docs").cast("long").alias("n_docs"),
             F.count(F.lit(1)).cast("long").alias("n_kept"),
             F.sum("doc_id").cast("long").alias("kept_checksum"),
             F.min("quality_ppm").cast("long").alias("cutoff_quality_ppm"),
         )
-        .orderBy(group_col)
+        .orderBy("lang")
     )
 
 
-def group_quantile_filter_oracle(
-    table: str = "documents",
-    group_col: str = "lang",
-    num: int = QUANTILE_NUM,
-    den: int = QUANTILE_DEN,
-) -> str:
+def group_quantile_filter_oracle() -> str:
     return f"""
         WITH base AS (
-            SELECT {group_col} AS grp, doc_id,
+            SELECT lang AS grp, doc_id,
                    (CAST(len(toks) AS BIGINT) * least(len(toks), 100)
                     + 60 * len(list_distinct(toks))
                     + 4 * least(length(text) - len(toks) + 1,
                                 10 * len(toks))) * 1000000
                    // (200 * len(toks)) AS quality_ppm
-            FROM (SELECT {group_col}, doc_id, text,
+            FROM (SELECT lang, doc_id, text,
                          string_split(text, ' ') AS toks
-                  FROM {table})
+                  FROM documents)
         ),
         ranked AS (
             SELECT grp, doc_id, quality_ppm,
@@ -562,12 +546,12 @@ def group_quantile_filter_oracle(
                    count(*) OVER (PARTITION BY grp) AS n_docs
             FROM base
         )
-        SELECT grp AS {group_col},
+        SELECT grp AS lang,
                CAST(max(n_docs) AS BIGINT) AS n_docs,
                CAST(count(*) AS BIGINT) AS n_kept,
                CAST(sum(doc_id) AS BIGINT) AS kept_checksum,
                CAST(min(quality_ppm) AS BIGINT) AS cutoff_quality_ppm
-        FROM ranked WHERE rnk * {den} <= n_docs * {num}
+        FROM ranked WHERE rnk * {QUANTILE_DEN} <= n_docs * {QUANTILE_NUM}
         GROUP BY grp ORDER BY grp
     """
 
@@ -622,14 +606,11 @@ def ref_integrity(
 
 
 def ref_integrity_oracle(
-    left_table: str = "documents",
-    right_table: str = "embeddings",
-    left_key: str = "doc_id",
-    right_key: str = "vec_id",
+    left_table: str = "documents", right_table: str = "embeddings"
 ) -> str:
     return f"""
-        WITH lk AS (SELECT DISTINCT {left_key} AS k FROM {left_table}),
-        rk AS (SELECT DISTINCT {right_key} AS k2 FROM {right_table}),
+        WITH lk AS (SELECT DISTINCT doc_id AS k FROM {left_table}),
+        rk AS (SELECT DISTINCT vec_id AS k2 FROM {right_table}),
         j AS (
             SELECT lk.k, rk.k2 FROM lk
             FULL OUTER JOIN rk ON lk.k IS NOT DISTINCT FROM rk.k2
@@ -688,13 +669,7 @@ def l_diversity(
 T_CLOSENESS_NUM, T_CLOSENESS_DEN = 1, 12  # t = 1/12
 
 
-def t_closeness(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str,
-    t_num: int = T_CLOSENESS_NUM,
-    t_den: int = T_CLOSENESS_DEN,
-) -> DataFrame:
+def t_closeness(df: DataFrame, quasi_cols: list[str], sensitive_col: str) -> DataFrame:
     """t-closeness audit over an ORDERED sensitive attribute (Li,
     Li & Venkatasubramanian, ICDE 2007 — the third rung of the
     governance ladder after k-anonymity and l-diversity): a class
@@ -702,7 +677,8 @@ def t_closeness(
     distribution leaks information even when it is diverse
     (skewness attack). Distance is the ordered-domain Earth Mover's
     Distance, EMD = (1/(m−1))·Σ_i |CumP_i − CumQ_i| over the global
-    domain's m distinct values; a class is AT RISK when EMD > t.
+    domain's m distinct values; a class is AT RISK when EMD > t,
+    t = t_num/t_den = ``T_CLOSENESS_NUM``/``T_CLOSENESS_DEN``.
 
     Float-free: with class cumulative counts cpc, global cumulative
     counts gqc, class size n_c and total N, the per-step term is
@@ -729,15 +705,10 @@ def t_closeness(
     cell = base.groupBy(*quasi_cols, "s").agg(
         F.count(F.lit(1)).cast("long").alias("cp")
     )
-    return t_closeness_from_cells(cell, quasi_cols, t_num, t_den)
+    return t_closeness_from_cells(cell, quasi_cols)
 
 
-def t_closeness_from_cells(
-    cell: DataFrame,
-    quasi_cols: list[str],
-    t_num: int = T_CLOSENESS_NUM,
-    t_den: int = T_CLOSENESS_DEN,
-) -> DataFrame:
+def t_closeness_from_cells(cell: DataFrame, quasi_cols: list[str]) -> DataFrame:
     """The t-closeness audit computed from (quasi…, s, cp) CELL
     COUNTS — the joint distribution itself — rather than row-level
     data. This is the ONE shared EMD/threshold path: the batch
@@ -790,8 +761,8 @@ def t_closeness_from_cells(
         F.col("m").alias("domain_size"),
         F.col("emd_raw").cast("long").alias("emd_num"),
         (
-            F.col("emd_raw") * t_den
-            > F.lit(t_num)
+            F.col("emd_raw") * T_CLOSENESS_DEN
+            > F.lit(T_CLOSENESS_NUM)
             * (F.col("m") - 1).cast("decimal(38,0)")
             * F.col("n_c")
             * F.col("N")

@@ -154,14 +154,12 @@ def topk_cosine_oracle(query_vec_id: int = 0, k: int = 10) -> str:
     """
 
 
-def topk_cosine_lsh(
-    df: DataFrame, query_vec_id: int = 0, k: int = 10, dim: int = 64
-) -> DataFrame:
+def topk_cosine_lsh(df: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """X3 scale path: ANN — restrict candidates to the query's
     hyperplane-LSH bucket, then exact cosine top-k inside it.
     Approximate by construction (may return < k or miss true
     neighbors); deterministic, so exactly oracle-checkable."""
-    sig = df.withColumn("sig", F.expr(_spark_signature("embedding", dim)))
+    sig = df.withColumn("sig", F.expr(_spark_signature("embedding", 64)))
     q = (
         sig.where(F.col("vec_id") == query_vec_id)
         .select(
@@ -186,11 +184,11 @@ def topk_cosine_lsh(
     )
 
 
-def topk_cosine_lsh_oracle(query_vec_id: int = 0, k: int = 10, dim: int = 64) -> str:
+def topk_cosine_lsh_oracle(query_vec_id: int = 0, k: int = 10) -> str:
     return f"""
         WITH sig AS (
             SELECT vec_id, embedding,
-                   {_duck_signature('embedding', dim)} AS sig
+                   {_duck_signature('embedding', 64)} AS sig
             FROM embeddings
         ),
         q AS (
@@ -212,13 +210,11 @@ N_CLUSTERS = 8  # IVF coarse-quantizer cells
 NPROBE = 2  # cells probed per query
 
 
-def _centroid_filter(id_col: str = "vec_id") -> str:
-    return f"{id_col} < {N_CLUSTERS}"
+def _centroid_filter() -> str:
+    return f"vec_id < {N_CLUSTERS}"
 
 
-def topk_cosine_ivf(
-    df: DataFrame, query_vec_id: int = 0, k: int = 10, nprobe: int = NPROBE
-) -> DataFrame:
+def topk_cosine_ivf(df: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """X3 scale path #2: IVF-style ANN.
 
     Coarse quantizer: the vectors with vec_id < N_CLUSTERS serve as
@@ -226,9 +222,9 @@ def topk_cosine_ivf(
     ``ml.clustering.KMeans`` fit, broadcast the same way). Every
     vector is assigned to its best centroid by a broadcast join +
     map-side argmax aggregation (partial/final — no window shuffle);
-    the query probes its ``nprobe`` nearest cells and exact cosine
+    the query probes its ``NPROBE`` nearest cells and exact cosine
     re-ranks only those candidates. Candidate set shrinks ~
-    nprobe/N_CLUSTERS; assignment cost is one broadcast pass.
+    NPROBE/N_CLUSTERS; assignment cost is one broadcast pass.
 
     Assignment scores are rounded to 6 dp with centroid-id tiebreak so
     the cell boundaries are bit-identical across engines (oracle
@@ -263,7 +259,7 @@ def topk_cosine_ivf(
     q_cells = (
         scored.where(F.col("vec_id") == query_vec_id)
         .orderBy(F.col("score").desc(), "cent_id")
-        .limit(nprobe)
+        .limit(NPROBE)
         .select(F.col("cent_id").alias("cell"))
     )
     cand = (
@@ -289,9 +285,7 @@ def topk_cosine_ivf(
     )
 
 
-def topk_cosine_ivf_oracle(
-    query_vec_id: int = 0, k: int = 10, nprobe: int = NPROBE
-) -> str:
+def topk_cosine_ivf_oracle(query_vec_id: int = 0, k: int = 10) -> str:
     return f"""
         WITH cent AS (
             SELECT vec_id AS cent_id, embedding AS c_emb,
@@ -312,7 +306,7 @@ def topk_cosine_ivf_oracle(
         q_cells AS (
             SELECT cent_id AS cell FROM scored
             WHERE vec_id = {query_vec_id}
-            ORDER BY score DESC, cent_id LIMIT {nprobe}
+            ORDER BY score DESC, cent_id LIMIT {NPROBE}
         ),
         q AS (
             SELECT embedding AS q_emb, {_duck_norm('embedding')} AS q_norm
@@ -446,6 +440,7 @@ def quantize_embeddings_oracle() -> str:
 # deterministic md5 plane t*PAIR_PLANES+p, so both engines agree).
 # For near-dup angles (~8°) candidate recall is 1-(1-0.955^8)^4 ≈ .99.
 PAIR_TABLES = 4
+PAIR_BUCKET_CAP = 1024  # members per hyperplane bucket; larger buckets are dropped
 PAIR_PLANES = 8
 
 
@@ -467,9 +462,7 @@ def _duck_table_sig(vec: str, table: int, dim: int) -> str:
     return f"({bits})"
 
 
-def nearest_pairs_lsh(
-    df: DataFrame, top_n: int = 20, dim: int = 64, bucket_cap: int = 1024
-) -> DataFrame:
+def nearest_pairs_lsh(df: DataFrame, top_n: int = 20) -> DataFrame:
     """X2 scale path (embedding near-dup): top-N closest pairs with
     the pair space pruned by banded hyperplane-LSH instead of the
     all-pairs join — the same single-shuffle groupBy(bucket) +
@@ -477,10 +470,10 @@ def nearest_pairs_lsh(
     (table, signature) keys. Exact cosine verifies candidates only.
     Approximate by construction (a pair is missed iff it collides in
     NO table) but fully deterministic, so the DuckDB twin matches
-    exactly. bucket_cap drops degenerate hot buckets (cap²/2 bound),
+    exactly. ``PAIR_BUCKET_CAP`` drops degenerate hot buckets (cap²/2 bound),
     same trade-off as the MinHash band cap."""
     keys = ", ".join(
-        f"concat('{t}:', {_spark_table_sig('embedding', t, dim)})"
+        f"concat('{t}:', {_spark_table_sig('embedding', t, 64)})"
         for t in range(PAIR_TABLES)
     )
     # FUSED single-consumer plan: (vec_id, embedding, norm) structs
@@ -508,7 +501,7 @@ def nearest_pairs_lsh(
         # sort_array orders structs by leading field = vec_id, so
         # in-group pairs come out with id_a < id_b deterministically
         .agg(F.sort_array(F.collect_list("m")).alias("ms"))
-        .where(F.size("ms").between(2, bucket_cap))
+        .where(F.size("ms").between(2, PAIR_BUCKET_CAP))
     )
     pairs = grouped.select(
         F.explode(
@@ -529,11 +522,9 @@ def nearest_pairs_lsh(
     )
 
 
-def nearest_pairs_lsh_oracle(
-    top_n: int = 20, dim: int = 64, bucket_cap: int = 1024
-) -> str:
+def nearest_pairs_lsh_oracle(top_n: int = 20) -> str:
     key_rows = " UNION ALL ".join(
-        f"SELECT vec_id, '{t}:' || CAST({_duck_table_sig('embedding', t, dim)} AS VARCHAR) AS bk "
+        f"SELECT vec_id, '{t}:' || CAST({_duck_table_sig('embedding', t, 64)} AS VARCHAR) AS bk "
         f"FROM embeddings"
         for t in range(PAIR_TABLES)
     )
@@ -541,7 +532,7 @@ def nearest_pairs_lsh_oracle(
         WITH keys AS ({key_rows}),
         ok AS (
             SELECT bk FROM keys GROUP BY bk
-            HAVING count(*) BETWEEN 2 AND {bucket_cap}
+            HAVING count(*) BETWEEN 2 AND {PAIR_BUCKET_CAP}
         ),
         cand AS (
             SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -656,7 +647,7 @@ def ivf_train(df: DataFrame, iters: int = 2) -> DataFrame:
     return local_rows_df(df.sparkSession, rows, out.schema)
 
 
-def ivf_train_oracle(iters: int = 2, dim: int = 64) -> str:
+def ivf_train_oracle(iters: int = 2) -> str:
     if iters != 2:
         raise ValueError(
             f"oracle unrolls exactly 2 Lloyd iterations, got iters={iters}"
@@ -667,7 +658,7 @@ def ivf_train_oracle(iters: int = 2, dim: int = 64) -> str:
                    CAST(round(CAST(embedding[d] AS DOUBLE) * {KM_FP}) AS BIGINT)
                        AS x
             FROM embeddings,
-                 generate_series(1, {dim}) AS t(d)
+                 generate_series(1, 64) AS t(d)
         ),
         c1 AS (
             SELECT vec_id AS cent_id, d, x AS c FROM xf
@@ -775,14 +766,13 @@ SEMDEDUP_TARGET_CELL = 512
 
 def semantic_dedup(
     df: DataFrame,
-    threshold: float = SEMDEDUP_THRESHOLD,
     n_clusters: int | None = N_CLUSTERS,
     vectorized_assign: bool = True,
 ) -> DataFrame:
     """X2/X3 semantic (embedding-space) dedup, SemDeDup-shaped:
     cluster the corpus with the coarse quantizer, then WITHIN each
     cluster drop every vector that has a lower-id neighbor at cosine
-    ≥ threshold — one representative (the minimum id) survives per
+    ≥ ``SEMDEDUP_THRESHOLD`` — one representative (the minimum id) survives per
     semantic near-dup chain.
 
     Output: (vec_id, cell, n_dup_partners, is_kept) for EVERY vector
@@ -934,7 +924,7 @@ def semantic_dedup(
                 (-F.col("m.negc")).alias("cell"), "vec_id", "embedding", "nm"
             )
         )
-    thr = float(threshold)
+    thr = float(SEMDEDUP_THRESHOLD)
 
     def per_cell(pdf):
         import numpy as np
@@ -977,7 +967,7 @@ def semantic_dedup(
     )
 
 
-def semantic_dedup_oracle(threshold: float = SEMDEDUP_THRESHOLD) -> str:
+def semantic_dedup_oracle() -> str:
     return f"""
         WITH cent AS (
             SELECT vec_id AS cent_id, embedding AS c_emb,
@@ -1005,7 +995,7 @@ def semantic_dedup_oracle(threshold: float = SEMDEDUP_THRESHOLD) -> str:
             FROM v a JOIN v b
               ON a.cell = b.cell AND b.vec_id < a.vec_id
             WHERE round({_duck_dot('a.embedding', 'b.embedding')} /
-                        (a.nm * b.nm), 6) >= {threshold}
+                        (a.nm * b.nm), 6) >= {SEMDEDUP_THRESHOLD}
             GROUP BY a.vec_id
         )
         SELECT a.vec_id, a.cell,
@@ -1101,14 +1091,14 @@ def pq_encode(df: DataFrame) -> DataFrame:
     )
 
 
-def _pq_oracle_prelude(dim: int = 64) -> str:
+def _pq_oracle_prelude() -> str:
     return f"""
         xf AS (
             SELECT vec_id, d,
                    CAST(round(CAST(embedding[d] AS DOUBLE) * {KM_FP}) AS BIGINT)
                        AS x
             FROM embeddings,
-                 generate_series(1, {dim}) AS t(d)
+                 generate_series(1, 64) AS t(d)
         ),
         subs AS (
             SELECT vec_id, (d - 1) // {PQ_DSUB} AS m,
@@ -1135,9 +1125,9 @@ def _pq_oracle_prelude(dim: int = 64) -> str:
         )"""
 
 
-def pq_encode_oracle(dim: int = 64) -> str:
+def pq_encode_oracle() -> str:
     return f"""
-        WITH {_pq_oracle_prelude(dim)}
+        WITH {_pq_oracle_prelude()}
         SELECT vec_id,
                CAST(sum(code * (1::BIGINT << (4 * m))) AS BIGINT) AS pq_code,
                CAST(sum(sub_err) AS BIGINT) AS q_err
@@ -1210,11 +1200,9 @@ def pq_adc_topk(
     )
 
 
-def pq_adc_topk_oracle(
-    query_vec_id: int = 0, k: int = 10, dim: int = 64
-) -> str:
+def pq_adc_topk_oracle(query_vec_id: int = 0, k: int = 10) -> str:
     return f"""
-        WITH {_pq_oracle_prelude(dim)},
+        WITH {_pq_oracle_prelude()},
         tbl AS (
             SELECT cb.m, cb.cid,
                    sum((q.x - cb.c) * (q.x - cb.c)) AS tdist
@@ -1311,11 +1299,9 @@ def knn_join_oracle(n_queries: int = 8, k: int = 5) -> str:
 RP_OUT_DIM = 16
 
 
-def rp_reduce(
-    df: DataFrame, out_dim: int = RP_OUT_DIM, dim: int = 64
-) -> DataFrame:
+def rp_reduce(df: DataFrame) -> DataFrame:
     """X3/X4 embedding prep: Johnson–Lindenstrauss random-projection
-    reduction — project each embedding onto `out_dim` deterministic
+    reduction — project each embedding onto ``RP_OUT_DIM`` deterministic
     ±1 hyperplanes (the same md5-parity plane family as the LSH
     signatures, so the 'random' matrix is reproducible in any
     engine). The standard cheap pre-step before clustering or
@@ -1323,7 +1309,7 @@ def rp_reduce(
     JL preserves pairwise distances within (1±ε) with high
     probability, and a ±1 matrix needs no float weights.
 
-    Output: (vec_id, r0..r{out_dim-1}), each component the exact
+    Output: (vec_id, r0..r{RP_OUT_DIM-1}), each component the exact
     left-to-right dot-product fold rounded to 6 dp (the repo's float
     discipline — both engines fold sequentially, so values are
     bit-comparable after the round).
@@ -1333,38 +1319,37 @@ def rp_reduce(
     whole-stage-codegen map over the scan."""
     cols = [
         F.expr(
-            f"round({_spark_dot('embedding', _spark_plane_lit(p, dim))}, 6)"
+            f"round({_spark_dot('embedding', _spark_plane_lit(p, 64))}, 6)"
         ).alias(f"r{p}")
-        for p in range(out_dim)
+        for p in range(RP_OUT_DIM)
     ]
     return df.select("vec_id", *cols)
 
 
-def rp_reduce_oracle(out_dim: int = RP_OUT_DIM, dim: int = 64) -> str:
+def rp_reduce_oracle() -> str:
     cols = ", ".join(
-        f"round({_duck_dot('embedding', _duck_plane_lit(p, dim))}, 6)"
+        f"round({_duck_dot('embedding', _duck_plane_lit(p, 64))}, 6)"
         f" AS r{p}"
-        for p in range(out_dim)
+        for p in range(RP_OUT_DIM)
     )
     return f"SELECT vec_id, {cols} FROM embeddings"
 
 
-def ivf_pq_topk(
-    df: DataFrame, query_vec_id: int = 0, k: int = 10, nprobe: int = NPROBE
-) -> DataFrame:
+def ivf_pq_topk(df: DataFrame) -> DataFrame:
     """X3 composed production ANN: IVF coarse restriction + PQ
     asymmetric-distance scoring — the FAISS ``IVFPQ`` shape that
     actually serves billion-vector indexes. The query probes its
-    ``nprobe`` nearest cells (broadcast centroid pass, argmax as a
+    ``NPROBE`` nearest cells (broadcast centroid pass, argmax as a
     partial/final aggregate); ONLY the member codes of those cells
     are ADC-scored against the query's broadcast M·K distance table;
     full-precision corpus vectors are touched exactly once (code
     assignment) and never move afterwards. Cost per query at scale:
-    |corpus|·nprobe/N_CLUSTERS code lookups against a 128-long
+    |corpus|·NPROBE/N_CLUSTERS code lookups against a 128-long
     table, no full-precision distance anywhere on the corpus side.
     Exact integers end-to-end (the same fixed-point discipline as
     the component operators), so the composed approximation is
     oracle-certified, not just its parts."""
+    query_vec_id = 0
     cent = df.where(F.expr(_centroid_filter())).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("c_emb"),
@@ -1390,7 +1375,7 @@ def ivf_pq_topk(
     q_cells = (
         scored.where(F.col("vec_id") == query_vec_id)
         .orderBy(F.col("score").desc(), "cent_id")
-        .limit(nprobe)
+        .limit(NPROBE)
         .select(F.col("cent_id").alias("cell"))
     )
     fp = df.select(
@@ -1447,13 +1432,11 @@ def ivf_pq_topk(
         .groupBy("vec_id")
         .agg(F.sum("tdist").cast("long").alias("adc_dist"))
         .orderBy("adc_dist", "vec_id")
-        .limit(k)
+        .limit(10)
     )
 
 
-def ivf_pq_topk_oracle(
-    query_vec_id: int = 0, k: int = 10, nprobe: int = NPROBE, dim: int = 64
-) -> str:
+def ivf_pq_topk_oracle(query_vec_id: int = 0, k: int = 10) -> str:
     return f"""
         WITH cent AS (
             SELECT vec_id AS cent_id, embedding AS c_emb,
@@ -1474,9 +1457,9 @@ def ivf_pq_topk_oracle(
         q_cells AS (
             SELECT cent_id AS cell FROM cscored
             WHERE vec_id = {query_vec_id}
-            ORDER BY score DESC, cent_id LIMIT {nprobe}
+            ORDER BY score DESC, cent_id LIMIT {NPROBE}
         ),
-        {_pq_oracle_prelude(dim)},
+        {_pq_oracle_prelude()},
         tbl AS (
             SELECT cb.m, cb.cid,
                    sum((q.x - cb.c) * (q.x - cb.c)) AS tdist
@@ -1659,9 +1642,7 @@ def ivf_knn_join(
     )
 
 
-def ivf_knn_join_oracle(
-    n_queries: int = 8, k: int = 5, nprobe: int = NPROBE
-) -> str:
+def ivf_knn_join_oracle(n_queries: int = 8, k: int = 5) -> str:
     return f"""
         WITH cent AS (
             SELECT vec_id AS cent_id, embedding AS c_emb,
@@ -1685,7 +1666,7 @@ def ivf_knn_join_oracle(
             WHERE vec_id < {n_queries}
             QUALIFY row_number() OVER (
                 PARTITION BY vec_id
-                ORDER BY score DESC, cent_id) <= {nprobe}
+                ORDER BY score DESC, cent_id) <= {NPROBE}
         ),
         q AS (
             SELECT vec_id AS qid, embedding AS q_emb,
@@ -1712,20 +1693,18 @@ def ivf_knn_join_oracle(
     """
 
 
-def ivf_recall(
-    df: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    nprobe: int = NPROBE,
-) -> DataFrame:
-    """X3 quality certification: per-query recall@k of the IVF
-    search against the exact kNN join at the same k — the number an
+def ivf_recall(df: DataFrame, nprobe: int = NPROBE) -> DataFrame:
+    """X3 quality certification: per-query recall@k (k = 5, for the
+    8 lowest vec_ids as queries) of the IVF search against the exact
+    kNN join at the same k — the number an
     ANN deployment must report before trusting nprobe at scale
     (probing fewer cells trades recall for cost; this row pins the
     trade). Per query: exact k, IVF hits among the exact top-k, and
     recall as an exact ppm integer (no float division). A centroid,
     assignment, or probing drift anywhere moves some query's hit
     count and flips the hash."""
+    k = 5
+    n_queries = 8
     exact = knn_join(df, n_queries, k).select("qid", "vec_id")
     approx = ivf_knn_join(df, n_queries, k, nprobe).select(
         "qid", "vec_id"
@@ -1752,16 +1731,16 @@ def ivf_recall(
     )
 
 
-def ivf_recall_oracle(
-    n_queries: int = 8, k: int = 5, nprobe: int = NPROBE
-) -> str:
+def ivf_recall_oracle() -> str:
+    k = 5
+    n_queries = 8
     return f"""
         WITH exact AS (
             SELECT qid, vec_id FROM ({knn_join_oracle(n_queries, k)})
         ),
         approx AS (
             SELECT qid, vec_id
-            FROM ({ivf_knn_join_oracle(n_queries, k, nprobe)})
+            FROM ({ivf_knn_join_oracle(n_queries, k)})
         ),
         h AS (
             SELECT exact.qid, CAST(count(*) AS BIGINT) AS n_hits
@@ -1785,16 +1764,11 @@ HARD_NEG_LO = 0.15   # easy-negative floor (below: uninformative)
 HARD_NEG_HI = 0.93   # near-dup ceiling (at/above: positive leakage)
 
 
-def hard_negatives(
-    df: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    lo: float = HARD_NEG_LO,
-    hi: float = HARD_NEG_HI,
-) -> DataFrame:
+def hard_negatives(df: DataFrame) -> DataFrame:
     """X3/X5 hard-negative mining for contrastive training: for each
-    anchor in a bounded query block, the top-k most similar corpus
-    vectors whose cosine lies in the BAND [lo, hi) — similar enough
+    anchor in a bounded query block (the 8 lowest vec_ids), the top-5
+    most similar corpus vectors whose cosine lies in the BAND
+    [``HARD_NEG_LO``, ``HARD_NEG_HI``) — similar enough
     to be informative (above the easy-negative floor), but below the
     near-dup ceiling that would make them false negatives (the
     standard retrieval-training mining step, e.g. DPR/ANCE-style;
@@ -1805,13 +1779,13 @@ def hard_negatives(
     Scale shape: identical to knn_join — the anchor block broadcasts,
     the corpus streams through ONE broadcast scoring pass (never
     self-joined), the band filter prunes before the only shuffle (the
-    per-anchor top-k window over (qid, vec_id, sim) triples). At
+    per-anchor top-5 window over (qid, vec_id, sim) triples). At
     production scale the scoring pass composes with the IVF cell
     restriction exactly as ivf_knn_join does; rank is bound into the
     output so the driver hash certifies ordering."""
     from pyspark.sql.window import Window
 
-    q = df.where(F.col("vec_id") < n_queries).select(
+    q = df.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("q_emb"),
         F.expr(_spark_norm("embedding")).alias("q_norm"),
@@ -1827,28 +1801,23 @@ def hard_negatives(
                 f"({_spark_norm('embedding')} * q_norm), 6)"
             ).alias("cos_sim"),
         )
-        .where((F.col("cos_sim") >= lo) & (F.col("cos_sim") < hi))
+        .where((F.col("cos_sim") >= HARD_NEG_LO) & (F.col("cos_sim") < HARD_NEG_HI))
     )
     w = Window.partitionBy("qid").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 5)
     )
 
 
-def hard_negatives_oracle(
-    n_queries: int = 8,
-    k: int = 5,
-    lo: float = HARD_NEG_LO,
-    hi: float = HARD_NEG_HI,
-) -> str:
+def hard_negatives_oracle() -> str:
     return f"""
         WITH q AS (
             SELECT vec_id AS qid, embedding AS q_emb,
                    {_duck_norm('embedding')} AS q_norm
-            FROM embeddings WHERE vec_id < {n_queries}
+            FROM embeddings WHERE vec_id < 8
         ),
         scored AS (
             SELECT q.qid, e.vec_id,
@@ -1860,7 +1829,7 @@ def hard_negatives_oracle(
         ),
         banded AS (
             SELECT * FROM scored
-            WHERE cos_sim >= {lo} AND cos_sim < {hi}
+            WHERE cos_sim >= {HARD_NEG_LO} AND cos_sim < {HARD_NEG_HI}
         ),
         ranked AS (
             SELECT qid, vec_id, cos_sim,
@@ -1869,26 +1838,21 @@ def hard_negatives_oracle(
                        ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
             FROM banded
         )
-        SELECT qid, vec_id, cos_sim, rank FROM ranked WHERE rank <= {k}
+        SELECT qid, vec_id, cos_sim, rank FROM ranked WHERE rank <= 5
     """
 
 
 # --- Hybrid retrieval: reciprocal-rank fusion (round 11) --------------------
 
 
-def rrf_fusion(
-    docs: DataFrame,
-    vecs: DataFrame,
-    query_vec_id: int = 0,
-    k_each: int = 50,
-    k: int = 10,
-    rrf_k: int = 60,
-) -> DataFrame:
+def rrf_fusion(docs: DataFrame, vecs: DataFrame, k: int = 10) -> DataFrame:
     """Hybrid lexical+dense retrieval via reciprocal-rank fusion
     (Cormack, Clarke & Buettcher, SIGIR'09 — public literature): fuse
     the BM25 top-``k_each`` list over ``documents`` with the cosine
-    top-``k_each`` list over ``embeddings`` (doc_id ≡ vec_id where
-    both exist) by RRF(d) = Σ_lists 1/(rrf_k + rank_list(d)).
+    top-``k_each`` list (neighbors of vec_id 0) over ``embeddings``
+    (doc_id ≡ vec_id where both exist) by
+    RRF(d) = Σ_lists 1/(rrf_k + rank_list(d)), with k_each = 50 and
+    rrf_k = 60.
 
     Engine-exact: each reciprocal is the integer fixed-point
     ``1000000 div (rrf_k + rank)``, so the fused score is a BIGINT
@@ -1907,12 +1871,14 @@ def rrf_fusion(
 
     from kafka_streams_pipeline_spark.operators.text import bm25_topk
 
+    rrf_k = 60
+    k_each = 50
     b = bm25_topk(docs, k=k_each).select(
         F.col("doc_id").alias("b_id"), F.col("rank").alias("b_rank")
     )
     cw = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
     c = (
-        topk_cosine(vecs, query_vec_id=query_vec_id, k=k_each)
+        topk_cosine(vecs, k=k_each)
         .withColumn("c_rank", F.row_number().over(cw).cast("long"))
         .select(F.col("vec_id").alias("c_id"), "c_rank")
     )
@@ -1962,14 +1928,14 @@ def rrf_fusion(
     return fused.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def rrf_fusion_oracle(
-    query_vec_id: int = 0, k_each: int = 50, k: int = 10, rrf_k: int = 60
-) -> str:
+def rrf_fusion_oracle() -> str:
     from kafka_streams_pipeline_spark.operators.text import bm25_topk_oracle
 
+    rrf_k = 60
+    k_each = 50
     return f"""
         WITH b AS ({bm25_topk_oracle(k=k_each)}),
-        c0 AS ({topk_cosine_oracle(query_vec_id=query_vec_id, k=k_each)}),
+        c0 AS ({topk_cosine_oracle(k=k_each)}),
         c AS (
             SELECT vec_id AS c_id,
                    CAST(row_number() OVER (ORDER BY cos_sim DESC, vec_id)
@@ -1986,7 +1952,7 @@ def rrf_fusion_oracle(
             FROM b FULL OUTER JOIN c ON b.doc_id = c.c_id
         ),
         top AS (
-            SELECT * FROM fused ORDER BY score_fp DESC, id LIMIT {k}
+            SELECT * FROM fused ORDER BY score_fp DESC, id LIMIT 10
         )
         SELECT id, bm25_rank, cos_rank, CAST(score_fp AS BIGINT) AS score_fp,
                CAST(row_number() OVER (ORDER BY score_fp DESC, id)
@@ -1998,13 +1964,11 @@ def rrf_fusion_oracle(
 # --- Metadata-filtered ANN (round 11) ---------------------------------------
 
 
-def filtered_topk_cosine(
-    df: DataFrame, query_vec_id: int = 0, label: int = 2, k: int = 10
-) -> DataFrame:
-    """PRE-FILTERED exact vector search: top-k cosine neighbors of a
-    stored query among corpus vectors with a metadata constraint
-    (label equality) — the vector-DB staple where filtering BEFORE
-    ranking guarantees k results from the allowed set, where
+def filtered_topk_cosine(df: DataFrame) -> DataFrame:
+    """PRE-FILTERED exact vector search: the top-10 cosine neighbors
+    of stored query vec_id 0 among corpus vectors with a metadata
+    constraint (label = 2) — the vector-DB staple where filtering
+    BEFORE ranking guarantees k results from the allowed set, where
     post-filtering a global top-k can return fewer than k (or none).
     The filter is a plain pushdown-able predicate on the scan; the
     query row broadcasts; ordering on the rounded similarity with
@@ -2016,13 +1980,14 @@ def filtered_topk_cosine(
     intersecting the cell candidate list with the label partition."""
     from pyspark.sql.window import Window
 
+    query_vec_id = 0
     q = df.where(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb"),
         F.expr(_spark_norm("embedding")).alias("q_norm"),
     )
     out = (
         df.where(
-            (F.col("label") == label) & (F.col("vec_id") != query_vec_id)
+            (F.col("label") == 2) & (F.col("vec_id") != query_vec_id)
         )
         .crossJoin(F.broadcast(q))
         .select(
@@ -2034,15 +1999,14 @@ def filtered_topk_cosine(
             ).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
+        .limit(10)
     )
     w = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
     return out.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def filtered_topk_cosine_oracle(
-    query_vec_id: int = 0, label: int = 2, k: int = 10
-) -> str:
+def filtered_topk_cosine_oracle() -> str:
+    query_vec_id = 0
     return f"""
         WITH q AS (
             SELECT embedding AS q_emb, {_duck_norm('embedding')} AS q_norm
@@ -2053,9 +2017,9 @@ def filtered_topk_cosine_oracle(
                    round({_duck_dot('embedding', 'q_emb')} /
                          ({_duck_norm('embedding')} * q_norm), 6) AS cos_sim
             FROM embeddings, q
-            WHERE label = {label} AND vec_id != {query_vec_id}
+            WHERE label = 2 AND vec_id != {query_vec_id}
             ORDER BY cos_sim DESC, vec_id
-            LIMIT {k}
+            LIMIT 10
         )
         SELECT vec_id, label, cos_sim,
                CAST(row_number() OVER (ORDER BY cos_sim DESC, vec_id)
@@ -2214,15 +2178,9 @@ def _gated_pairs_and_norms(
     return survivors, norms
 
 
-def cosine_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    df_cap: int = COSINE_PAIRS_DF_CAP,
-    tau: tuple[int, int] = COSINE_PAIRS_TAU,
-    collapse_identical: bool = True,
-) -> DataFrame:
-    """All document pairs with shingle-TF-IDF-weighted cosine ≥ tau.
+def cosine_pairs(df: DataFrame, collapse_identical: bool = True) -> DataFrame:
+    """All document pairs with shingle-TF-IDF-weighted cosine ≥ tau
+    (``COSINE_PAIRS_TAU``).
 
     Weights are the repo's integer rarity convention
     (keyword_extract): w(d,s) = tf(d,s)·10⁶ div df(s) — no float log,
@@ -2263,11 +2221,9 @@ def cosine_pairs(
     tokenization re-ran 8× (measured). Output: (doc_a, doc_b, dot)
     — dot fits BIGINT.
     """
-    p, q = tau
+    p, q = COSINE_PAIRS_TAU
     release()
-    docs = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
-    )
+    docs = df.select("doc_id", F.col("text").alias("_text"))
     if collapse_identical:
         grouped = docs.withColumn("g", F.md5(F.lower(F.col("_text"))))
         members = _CACHED.keep(grouped.select("doc_id", "g").persist())
@@ -2296,11 +2252,11 @@ def cosine_pairs(
         .groupBy("term")
         .agg(F.sum("n_members").cast("long").alias("df"))
     )
-    w_all = _CACHED.keep(_rarity_weights(tf, dfx, df_cap).persist())
+    w_all = _CACHED.keep(_rarity_weights(tf, dfx, COSINE_PAIRS_DF_CAP).persist())
     # overlong-doc guard + inverted-index join + integer gate: the
     # shared spine (_gated_pairs_and_norms) — identical for the
     # epoch-refresh path and mirrored in the DuckDB oracle
-    survivors, norms = _gated_pairs_and_norms(w_all, tau)
+    survivors, norms = _gated_pairs_and_norms(w_all, COSINE_PAIRS_TAU)
     if not collapse_identical:
         return survivors.select("doc_a", "doc_b", "dot")
 
@@ -2356,11 +2312,8 @@ def cosine_pairs(
     return cross.unionByName(within)
 
 
-def cosine_pairs_oracle(
-    df_cap: int = COSINE_PAIRS_DF_CAP,
-    tau: tuple[int, int] = COSINE_PAIRS_TAU,
-) -> str:
-    p, q = tau
+def cosine_pairs_oracle() -> str:
+    p, q = COSINE_PAIRS_TAU
     w_sh = COSINE_SHINGLE_W
     concat = " || ' ' || ".join(f"ts[i + {j}]" for j in range(w_sh))
     # norms_dec/norms/w_ok mirror the operator's overlong-doc guard
@@ -2388,7 +2341,7 @@ def cosine_pairs_oracle(
                    CAST(CAST(t.tf AS HUGEINT) * 1000000 // d.df
                         AS BIGINT) AS w
             FROM tf t JOIN dfx d USING (term)
-            WHERE d.df <= {df_cap}
+            WHERE d.df <= {COSINE_PAIRS_DF_CAP}
               AND CAST(t.tf AS HUGEINT) * 1000000 // d.df > 0
         ),
         norms_dec AS (
@@ -2397,7 +2350,7 @@ def cosine_pairs_oracle(
         ),
         norms AS (
             SELECT doc_id, CAST(n2dec AS BIGINT) AS n2
-            FROM norms_dec WHERE n2dec <= {_max_n2(tau)}
+            FROM norms_dec WHERE n2dec <= {_max_n2(COSINE_PAIRS_TAU)}
         ),
         w_ok AS (
             SELECT w.* FROM w JOIN norms USING (doc_id)
@@ -2420,13 +2373,7 @@ def cosine_pairs_oracle(
     """
 
 
-def cosine_pairs_overlong(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    df_cap: int = COSINE_PAIRS_DF_CAP,
-    tau: tuple[int, int] = COSINE_PAIRS_TAU,
-) -> DataFrame:
+def cosine_pairs_overlong(df: DataFrame) -> DataFrame:
     """(doc_id, n2dec) of every document the overlong-doc guard
     excludes from cosine_pairs — the loud-truncation report for the
     norm bound (the no-silent-caps rule; the scale sweep records
@@ -2434,20 +2381,14 @@ def cosine_pairs_overlong(
     form: identical-text group members share their rep's norm, so
     rep-level exclusion inside cosine_pairs and the member-level
     report here name the same documents."""
-    base = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
-    )
+    base = df.select("doc_id", F.col("text").alias("_text"))
     tf = _shingle_tf(base, "_text", "doc_id")
     dfx = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    w = _rarity_weights(tf, dfx, df_cap)
-    return _norms_dec(w).where(F.col("n2dec") > F.lit(_max_n2(tau)))
+    w = _rarity_weights(tf, dfx, COSINE_PAIRS_DF_CAP)
+    return _norms_dec(w).where(F.col("n2dec") > F.lit(_max_n2(COSINE_PAIRS_TAU)))
 
 
-def tfidf_pairs_from_postings(
-    tf: DataFrame,
-    df_cap: int = COSINE_PAIRS_DF_CAP,
-    tau: tuple[int, int] = COSINE_PAIRS_TAU,
-) -> DataFrame:
+def tfidf_pairs_from_postings(tf: DataFrame) -> DataFrame:
     """Epoch-boundary TF-IDF refresh over ACCUMULATED POSTINGS state
     (VERDICT r14 item 7): the exact direct-form all-pairs set,
     recomputed from a (doc_id, term, tf) frame in O(postings) — the
@@ -2467,28 +2408,20 @@ def tfidf_pairs_from_postings(
     dfx = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df")
     )
-    w_all = _CACHED.keep(_rarity_weights(tf, dfx, df_cap).persist())
-    survivors, _norms = _gated_pairs_and_norms(w_all, tau)
+    w_all = _CACHED.keep(_rarity_weights(tf, dfx, COSINE_PAIRS_DF_CAP).persist())
+    survivors, _norms = _gated_pairs_and_norms(w_all, COSINE_PAIRS_TAU)
     return survivors.select("doc_a", "doc_b", "dot")
 
 
-def cosine_pairs_scaling_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    df_cap: int = COSINE_PAIRS_DF_CAP,
-    tau: tuple[int, int] = COSINE_PAIRS_TAU,
-) -> dict:
+def cosine_pairs_scaling_stats(df: DataFrame) -> dict:
     """Sweep diagnostic (VERDICT r14 item 4 — the no-silent-caps
     rule): what the inverted-index join actually pays and what the
     caps drop, per sweep step. Mirrors cosine_pairs' rep-collapsed
     pipeline: candidate POSTING pairs Σ c·(c−1)/2 over rep-level
-    postings (post df_cap + overlong exclusion — exactly the rows
+    postings (post ``COSINE_PAIRS_DF_CAP`` + overlong exclusion — exactly the rows
     the term equi-join generates), terms dropped by the df cap,
     identical-text group stats, and overlong-doc exclusions."""
-    docs = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
-    )
+    docs = df.select("doc_id", F.col("text").alias("_text"))
     grouped = docs.withColumn("g", F.md5(F.lower(F.col("_text"))))
     reps = (
         grouped.groupBy("g")
@@ -2516,10 +2449,10 @@ def cosine_pairs_scaling_stats(
         .persist()
     )
     n_terms_total = dfx.count()
-    n_terms_df_capped = dfx.where(F.col("df") > df_cap).count()
-    w = _rarity_weights(tf, dfx, df_cap).persist()
+    n_terms_df_capped = dfx.where(F.col("df") > COSINE_PAIRS_DF_CAP).count()
+    w = _rarity_weights(tf, dfx, COSINE_PAIRS_DF_CAP).persist()
     overlong = _norms_dec(w).where(
-        F.col("n2dec") > F.lit(_max_n2(tau))
+        F.col("n2dec") > F.lit(_max_n2(COSINE_PAIRS_TAU))
     ).select("doc_id").persist()
     n_overlong = overlong.count()
     cand = (
@@ -2572,15 +2505,10 @@ def _shingle_tf(
     )
 
 
-def tf_cosine_pairs(
-    df: DataFrame,
-    other: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tau: tuple[int, int] = COSINE_PAIRS_TAU,
-) -> DataFrame:
-    """Document pairs with PURE-TF trigram-shingle cosine ≥ tau —
-    the df-FREE weighting whose pair scores are static once both
+def tf_cosine_pairs(df: DataFrame, other: DataFrame | None = None) -> DataFrame:
+    """Document pairs with PURE-TF trigram-shingle cosine ≥ tau
+    (``COSINE_PAIRS_TAU``) — the df-FREE weighting whose pair scores
+    are static once both
     documents exist, which is exactly what makes the streaming twin
     an exact append-only IVM: TF-IDF's global df re-weights every
     existing pair when the corpus grows (a retroactive-update
@@ -2591,9 +2519,9 @@ def tf_cosine_pairs(
     doc_a < doc_b) — together the two legs are the standard
     incremental rule pairs(S∪Δ) − pairs(S) = within-Δ ∪ Δ×S.
     Same inverted-index exactness and integer gate as cosine_pairs."""
-    p, q = tau
-    wa = _shingle_tf(df, text_col, id_col)
-    wb = _shingle_tf(other, text_col, id_col) if other is not None else wa
+    p, q = COSINE_PAIRS_TAU
+    wa = _shingle_tf(df)
+    wb = _shingle_tf(other) if other is not None else wa
     na = wa.groupBy("doc_id").agg(
         F.expr(
             "CAST(sum(CAST(tf AS DECIMAL(38,0)) * tf) AS BIGINT)"
@@ -2647,10 +2575,8 @@ def tf_cosine_pairs(
     )
 
 
-def tf_cosine_pairs_oracle(
-    tau: tuple[int, int] = COSINE_PAIRS_TAU,
-) -> str:
-    p, q = tau
+def tf_cosine_pairs_oracle() -> str:
+    p, q = COSINE_PAIRS_TAU
     w_sh = COSINE_SHINGLE_W
     concat = " || ' ' || ".join(f"ts[i + {j}]" for j in range(w_sh))
     return f"""

@@ -438,13 +438,11 @@ def kmv_distinct(
     )
 
 
-def kmv_distinct_oracle(
-    table: str = "events", col: str = "user_id", k: int = KMV_K
-) -> str:
+def kmv_distinct_oracle(table: str = "events", col: str = "user_id") -> str:
     h = f"({md5_long_sql(f'CAST({col} AS VARCHAR)')} & {(1 << 32) - 1})"
     est = (
-        f"CASE WHEN n_used < {k} THEN CAST(n_used AS DOUBLE) "
-        f"ELSE ({k} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
+        f"CASE WHEN n_used < {KMV_K} THEN CAST(n_used AS DOUBLE) "
+        f"ELSE ({KMV_K} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
     )
     return f"""
         WITH kept AS (
@@ -452,7 +450,7 @@ def kmv_distinct_oracle(
             FROM {table}
             WHERE {col} IS NOT NULL
             ORDER BY h32
-            LIMIT {k}
+            LIMIT {KMV_K}
         ),
         agg AS (
             SELECT CAST(count(*) AS BIGINT) AS n_used,
@@ -713,15 +711,11 @@ def hll_distinct_by_oracle(
     """
 
 
-def kmv_set_ops(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col: str = "doc_id",
-    k: int = KMV_K,
-) -> DataFrame:
+def kmv_set_ops(df_a: DataFrame, df_b: DataFrame, col: str = "doc_id") -> DataFrame:
     """KMV set algebra (the theta-sketch move, public literature:
     Bar-Yossef et al. 2002; Dasgupta et al. 2016): estimate
-    |A ∪ B| and |A ∩ B| from two k-minimum-value sketches WITHOUT
+    |A ∪ B| and |A ∩ B| from two k-minimum-value sketches
+    (k = ``KMV_K``) WITHOUT
     touching the full domains again — the reason KMV complements HLL
     in the suite (HLL unions trivially but cannot intersect).
 
@@ -754,11 +748,11 @@ def kmv_set_ops(
             .select(hx.alias("h32"))
             .distinct()
             .orderBy("h32")
-            .limit(k)
+            .limit(KMV_K)
         )
 
     sa, sb = sketch(df_a), sketch(df_b)
-    union_kept = sa.union(sb).distinct().orderBy("h32").limit(k)
+    union_kept = sa.union(sb).distinct().orderBy("h32").limit(KMV_K)
     u = union_kept.agg(
         F.count(F.lit(1)).cast("long").alias("n_union_used"),
         F.max("h32").cast("long").alias("theta"),
@@ -812,16 +806,16 @@ def kmv_set_ops(
         )
     )
     est_u = (
-        f"CASE WHEN n_union_used < {k} THEN CAST(n_union_used AS DOUBLE) "
-        f"ELSE ({k} - 1) * CAST(4294967296 AS DOUBLE) / theta END"
+        f"CASE WHEN n_union_used < {KMV_K} THEN CAST(n_union_used AS DOUBLE) "
+        f"ELSE ({KMV_K} - 1) * CAST(4294967296 AS DOUBLE) / theta END"
     )
     est_i = (
-        f"CASE WHEN n_union_used < {k} THEN CAST(n_match AS DOUBLE) "
-        f"ELSE ({est_u}) * n_match / {k} END"
+        f"CASE WHEN n_union_used < {KMV_K} THEN CAST(n_match AS DOUBLE) "
+        f"ELSE ({est_u}) * n_match / {KMV_K} END"
     )
     est_d = (
-        f"CASE WHEN n_union_used < {k} THEN CAST(n_anotb AS DOUBLE) "
-        f"ELSE ({est_u}) * n_anotb / {k} END"
+        f"CASE WHEN n_union_used < {KMV_K} THEN CAST(n_anotb AS DOUBLE) "
+        f"ELSE ({est_u}) * n_anotb / {KMV_K} END"
     )
     return counts.crossJoin(exact).select(
         "n_a_used",
@@ -839,43 +833,37 @@ def kmv_set_ops(
     )
 
 
-def kmv_set_ops_oracle(
-    table: str,
-    col: str,
-    pred_a: str,
-    pred_b: str,
-    k: int = KMV_K,
-) -> str:
+def kmv_set_ops_oracle(table: str, col: str, pred_a: str, pred_b: str) -> str:
     """DuckDB twin of :func:`kmv_set_ops` for A = rows of ``table``
     matching ``pred_a``, B = matching ``pred_b``."""
     h = f"({md5_long_sql(f'CAST({col} AS VARCHAR)')} & {(1 << 32) - 1})"
     est_u = (
-        f"CASE WHEN n_union_used < {k} THEN CAST(n_union_used AS DOUBLE) "
-        f"ELSE ({k} - 1) * CAST(4294967296 AS DOUBLE) / theta END"
+        f"CASE WHEN n_union_used < {KMV_K} THEN CAST(n_union_used AS DOUBLE) "
+        f"ELSE ({KMV_K} - 1) * CAST(4294967296 AS DOUBLE) / theta END"
     )
     est_i = (
-        f"CASE WHEN n_union_used < {k} THEN CAST(n_match AS DOUBLE) "
-        f"ELSE ({est_u}) * n_match / {k} END"
+        f"CASE WHEN n_union_used < {KMV_K} THEN CAST(n_match AS DOUBLE) "
+        f"ELSE ({est_u}) * n_match / {KMV_K} END"
     )
     est_d = (
-        f"CASE WHEN n_union_used < {k} THEN CAST(n_anotb AS DOUBLE) "
-        f"ELSE ({est_u}) * n_anotb / {k} END"
+        f"CASE WHEN n_union_used < {KMV_K} THEN CAST(n_anotb AS DOUBLE) "
+        f"ELSE ({est_u}) * n_anotb / {KMV_K} END"
     )
     return f"""
         WITH sa AS (
             SELECT DISTINCT {h} AS h32 FROM {table}
             WHERE {col} IS NOT NULL AND ({pred_a})
-            ORDER BY h32 LIMIT {k}
+            ORDER BY h32 LIMIT {KMV_K}
         ),
         sb AS (
             SELECT DISTINCT {h} AS h32 FROM {table}
             WHERE {col} IS NOT NULL AND ({pred_b})
-            ORDER BY h32 LIMIT {k}
+            ORDER BY h32 LIMIT {KMV_K}
         ),
         uk AS (
             SELECT DISTINCT h32 FROM (
                 SELECT h32 FROM sa UNION ALL SELECT h32 FROM sb
-            ) ORDER BY h32 LIMIT {k}
+            ) ORDER BY h32 LIMIT {KMV_K}
         ),
         u AS (
             SELECT CAST(count(*) AS BIGINT) AS n_union_used,
@@ -968,11 +956,9 @@ def histogram_merge(*states: DataFrame) -> DataFrame:
     )
 
 
-def histogram_quantile_bins(
-    state: DataFrame, qs: list[int], denom: int = 100
-) -> DataFrame:
-    """For each requested percentile q/denom: the bin containing the
-    percentile_disc rank (1-based ceil(q·N/denom)), from the bin
+def histogram_quantile_bins(state: DataFrame, qs: list[int]) -> DataFrame:
+    """For each requested percentile q/100: the bin containing the
+    percentile_disc rank (1-based ceil(q·N/100)), from the bin
     cumulative counts — one sort of ≤ nbins+2 summary rows, never
     data. All integers (bin ids and ranks), so the estimate is
     engine-exact; the VALUE-level error is the bin width, by
@@ -993,7 +979,7 @@ def histogram_quantile_bins(
     # cum >= ceil(q*n/denom)  <=>  cum*denom >= q*n  (positive ints
     # only — keeps the rank comparison float-free on both engines)
     ranked = qdf.crossJoin(cum).where(
-        F.col("cum") * denom >= F.col("q") * F.col("n")
+        F.col("cum") * 100 >= F.col("q") * F.col("n")
     )
     return (
         ranked.groupBy("q")
@@ -1202,11 +1188,9 @@ def join_size_estimate_oracle(
 HH_K = 200
 
 
-def heavy_hitters_twopass(
-    df: DataFrame, col: str, k: int = HH_K
-) -> DataFrame:
-    """X7 family, deterministic leg: EXACT frequent items (freq·k > n)
-    by the classic two-pass candidate scheme — Misra-Gries (1982,
+def heavy_hitters_twopass(df: DataFrame, col: str) -> DataFrame:
+    """X7 family, deterministic leg: EXACT frequent items (freq·k > n,
+    k = ``HH_K``) by the classic two-pass candidate scheme — Misra-Gries (1982,
     public literature) summaries per partition generate a candidate
     superset, an exact counting pass over candidates only verifies.
 
@@ -1241,7 +1225,7 @@ def heavy_hitters_twopass(
                 c = counters.get(v)
                 if c is not None:
                     counters[v] = c + 1
-                elif len(counters) < k - 1:
+                elif len(counters) < HH_K - 1:
                     counters[v] = 1
                 else:
                     # decrement-all: drops ≤ 1 from every item's
@@ -1265,11 +1249,11 @@ def heavy_hitters_twopass(
         toks.join(F.broadcast(cands), "tok")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        .where(F.col("freq") * k > F.lit(n_total))
+        .where(F.col("freq") * HH_K > F.lit(n_total))
     )
 
 
-def heavy_hitters_twopass_oracle(k: int = HH_K) -> str:
+def heavy_hitters_twopass_oracle() -> str:
     """Exact GROUP BY/HAVING recompute over the same token stream."""
     return f"""
         WITH toks AS (
@@ -1279,7 +1263,7 @@ def heavy_hitters_twopass_oracle(k: int = HH_K) -> str:
         SELECT tok, CAST(count(*) AS BIGINT) AS freq
         FROM toks, tot
         GROUP BY tok, n
-        HAVING count(*) * {k} > n
+        HAVING count(*) * {HH_K} > n
     """
 
 
@@ -1370,11 +1354,9 @@ def _kll_parity(event_type: str, level: int, n_prior: int) -> int:
     return int(h[:8], 16) & 1
 
 
-def kll_compact(
-    state: DataFrame, counts: dict, k: int = KLL_K
-) -> DataFrame:
+def kll_compact(state: DataFrame, counts: dict) -> DataFrame:
     """Compact a (event_type, level, v) item frame until every
-    (series, level) cell holds ≤ k items, updating `counts`
+    (series, level) cell holds ≤ k = ``KLL_K`` items, updating `counts`
     ((event_type, level) → compactions performed) in place.
 
     One compaction takes a whole over-capacity level, sorts it by
@@ -1403,7 +1385,7 @@ def kll_compact(
         over = (
             state.groupBy("event_type", "level")
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") > k)
+            .where(F.col("cnt") > KLL_K)
             .collect()
         )
         if not over:
@@ -1452,9 +1434,7 @@ def kll_compact(
         state = rest.unionByName(promoted).unionByName(leftover)
 
 
-def kll_build(
-    values: DataFrame, k: int = KLL_K
-) -> tuple[DataFrame, dict]:
+def kll_build(values: DataFrame) -> tuple[DataFrame, dict]:
     """Batch-insert a (event_type, c) frame at level 0 and compact to
     capacity. Returns (sketch item frame, compaction counts)."""
     counts: dict = {}
@@ -1463,7 +1443,7 @@ def kll_build(
         F.lit(0).cast("int").alias("level"),
         F.col("c").cast("long").alias("v"),
     )
-    return kll_compact(state, counts, k), counts
+    return kll_compact(state, counts), counts
 
 
 def kll_error_bounds(counts: dict) -> dict:
@@ -1481,7 +1461,6 @@ def kll_quantile_census(
     values: DataFrame,
     sketch: DataFrame,
     counts: dict,
-    k: int = KLL_K,
     qs: tuple = KLL_QS,
 ) -> DataFrame:
     """Certification form (the X12n pattern): exact columns the
@@ -1497,7 +1476,7 @@ def kll_quantile_census(
     - ``weight_ok``: the sketch's total weight equals n exactly
       (compaction conserves weight) — a broken promotion weight
       flips it.
-    - ``bound_ok``: B·k ≤ (max_level + 1)·n — the theorem bound
+    - ``bound_ok``: B·k ≤ (max_level + 1)·n, k = ``KLL_K`` — the theorem bound
       (m_l ≤ inflow_l / k, inflow halves per level), so a
       miscounted m_l or over-eager compaction flips it.
 
@@ -1585,7 +1564,7 @@ def kll_quantile_census(
         F.col("med2"),
         (F.col("W") == F.col("n")).alias("weight_ok"),
         (
-            F.col("B") * k <= (F.col("maxlev") + 1) * F.col("n")
+            F.col("B") * KLL_K <= (F.col("maxlev") + 1) * F.col("n")
         ).alias("bound_ok"),
     ]
     for q in qs:
@@ -1598,7 +1577,7 @@ def kll_quantile_census(
     return g.select(*cols)
 
 
-def kll_quantiles(events: DataFrame, k: int = KLL_K) -> DataFrame:
+def kll_quantiles(events: DataFrame) -> DataFrame:
     """Batch KLL row: build the sketch over per-event integer cents
     per event_type (closed-form single-pass build — pytest-pinned
     identical to the kll_compact loop), then emit the certification
@@ -1606,15 +1585,13 @@ def kll_quantiles(events: DataFrame, k: int = KLL_K) -> DataFrame:
     values = events.select(
         "event_type", F.expr(_KLL_CENTS).alias("c")
     )
-    sketch, counts = kll_build_closed(values, k)
-    return kll_quantile_census(
-        events.sparkSession, values, sketch, counts, k
-    )
+    sketch, counts = kll_build_closed(values)
+    return kll_quantile_census(events.sparkSession, values, sketch, counts)
 
 
-def kll_quantiles_oracle(qs: tuple = KLL_QS) -> str:
+def kll_quantiles_oracle() -> str:
     bits = ",\n               ".join(
-        f"TRUE AS q{q}_ok" for q in qs
+        f"TRUE AS q{q}_ok" for q in KLL_QS
     )
     return f"""
         SELECT event_type,
@@ -1661,9 +1638,7 @@ def _kll_batch_plan(n: int, et: str, k: int) -> tuple:
     return lvl, c_acc, leftovers, counts
 
 
-def kll_build_closed(
-    values: DataFrame, k: int = KLL_K
-) -> tuple[DataFrame, dict]:
+def kll_build_closed(values: DataFrame) -> tuple[DataFrame, dict]:
     """Single-pass batch KLL build: produces the IDENTICAL sketch
     and compaction log as :func:`kll_build`'s level-by-level loop
     (pytest-pinned equality), but as ONE series-partitioned window +
@@ -1674,7 +1649,7 @@ def kll_build_closed(
     H sit at sorted positions ≡ C (mod 2^H) and each odd-count
     round parks one leftover at its level. At 100 TB this is one
     shuffle on the series key — the plan the loop form approximates
-    with log(n/k) passes; streaming/merge still use kll_compact
+    with log(n/``KLL_K``) passes; streaming/merge still use kll_compact
     (state is not single-level there)."""
     spark = values.sparkSession
     per = {
@@ -1686,7 +1661,7 @@ def kll_build_closed(
     counts: dict = {}
     conds: list = []  # ordered (condition, level) — one flat chain
     for et, n in per.items():
-        h, c_acc, leftovers, chain = _kll_batch_plan(int(n), et, k)
+        h, c_acc, leftovers, chain = _kll_batch_plan(int(n), et, KLL_K)
         for lvl, cnt in enumerate(chain):
             counts[(et, lvl)] = 1
         et_col = F.col("event_type") == et

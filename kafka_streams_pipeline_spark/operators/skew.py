@@ -48,9 +48,7 @@ def salted_aggregate(
     return partial.groupBy(*keys).agg(*merged)
 
 
-def skew_report(
-    df: DataFrame, key_col: str, top_n: int = 5
-) -> DataFrame:
+def skew_report(df: DataFrame, key_col: str) -> DataFrame:
     """Join/groupBy-key skew diagnostic: the measurement that decides
     whether a key needs salting or an AQE skew-join split BEFORE the
     shuffle runs at 100 TB. One aggregate keyed by ``key_col`` (the
@@ -74,7 +72,7 @@ def skew_report(
 
     top = (
         counts.orderBy(F.col("cnt").desc(), F.col(key_col))
-        .limit(top_n)
+        .limit(5)
         .crossJoin(F.broadcast(stats))
     )
     w = Window.orderBy(F.col("cnt").desc(), F.col(key_col))
@@ -91,9 +89,7 @@ def skew_report(
     )
 
 
-def skew_report_oracle(
-    table: str, key_col: str, top_n: int = 5
-) -> str:
+def skew_report_oracle(table: str, key_col: str) -> str:
     return f"""
         WITH counts AS (
             SELECT {key_col}, CAST(count(*) AS BIGINT) AS cnt
@@ -107,7 +103,7 @@ def skew_report_oracle(
         ),
         top AS (
             SELECT {key_col}, cnt FROM counts
-            ORDER BY cnt DESC, {key_col} LIMIT {top_n}
+            ORDER BY cnt DESC, {key_col} LIMIT 5
         )
         SELECT CAST(row_number() OVER (ORDER BY cnt DESC, {key_col})
                     AS BIGINT) AS rank,

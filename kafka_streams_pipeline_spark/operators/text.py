@@ -45,7 +45,7 @@ def _lang_score_duck(toks: str, lang: str) -> str:
     return f"len(list_filter({toks}, x -> list_contains([{lits}], x)))"
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """X5: stopword-vote language ID heuristic.
 
     Score per language = count of tokens in that language's stopword
@@ -55,7 +55,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     keeps expressions regex-escape-portable, so the hook lives in
     tests/fixture code rather than the operator.)
     Returns (doc_id, lang_pred, lang_score)."""
-    toks = f"split(lower({text_col}), ' ')"
+    toks = "split(lower(text), ' ')"
     scores = {lang: _lang_score(toks, lang) for lang in STOPWORDS}
     greatest = "greatest(" + ", ".join(scores.values()) + ")"
     chain = " ".join(
@@ -88,10 +88,10 @@ def lang_id_oracle() -> str:
     """
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """X5: per-document token statistics (whitespace tokenization)."""
     return (
-        df.withColumn("toks", F.split(F.col(text_col), " "))
+        df.withColumn("toks", F.split(F.col("text"), " "))
         .select(
             "doc_id",
             F.expr("size(toks)").cast("long").alias("n_tokens"),
@@ -118,14 +118,14 @@ def token_stats_oracle() -> str:
     """
 
 
-def wordpiece_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def wordpiece_counts(df: DataFrame) -> DataFrame:
     """X5: BPE-ish regex token counting — global term frequencies
     (explode → groupBy). The one text op with a shuffle; cardinality
     is vocabulary size, with map-side partial counts first."""
     return (
         df.select(
             F.explode(
-                F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}', 0)")
+                F.expr(f"regexp_extract_all(lower(text), '{TOKEN_PATTERN}', 0)")
             ).alias("token")
         )
         .groupBy("token")
@@ -144,7 +144,7 @@ def wordpiece_counts_oracle() -> str:
     """
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """X5: heuristic document quality in [0,1]:
     0.5·min(n_tokens,100)/100 + 0.3·type-token-ratio +
     0.2·min(avg_token_len,10)/10 — length, diversity, and word-shape
@@ -157,7 +157,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     round(·,6) boundary at sf0.1 (doc 7: …62 vs …63) — a single IEEE
     division of identical integers cannot."""
     return (
-        df.withColumn("toks", F.split(F.col(text_col), " "))
+        df.withColumn("toks", F.split(F.col("text"), " "))
         .select(
             "doc_id",
             F.expr(
@@ -189,7 +189,7 @@ def quality_score_oracle() -> str:
     """
 
 
-def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """X5: two document fingerprints —
     content_md5 (16-hex prefix of md5 of normalized text) and
     roll_hash (left-fold polynomial rolling hash over token hashes,
@@ -198,10 +198,10 @@ def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     tok_hash = (
         "transform(split({c}, ' '), "
         "x -> cast(conv(substring(md5(x), 1, 8), 16, 10) as bigint))"
-    ).format(c=text_col)
+    ).format(c="text")
     return df.select(
         "doc_id",
-        F.expr(f"substring(md5({text_col}), 1, 16)").alias("content_md5"),
+        F.expr("substring(md5(text), 1, 16)").alias("content_md5"),
         F.expr(
             f"aggregate({tok_hash}, 0L, (acc, h) -> (acc * {ROLL_BASE} + h) % {ROLL_MOD})"
         ).alias("roll_hash"),
@@ -250,7 +250,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """X5 / training-data hygiene: redact emails/URLs/phones/long
     numbers; per-doc redaction counts by type plus the scrubbed text's
     md5 (the full scrubbed text stays available by dropping the final
@@ -261,7 +261,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
-    scrubbed = F.col(text_col)
+    scrubbed = F.col("text")
     counts = []
     for name, pat, repl in PII_PATTERNS:
         counts.append(
@@ -287,26 +287,28 @@ def pii_scrub_oracle() -> str:
     """
 
 
-def doc_length_hist(df: DataFrame, text_col: str = "text", bucket: int = 100) -> DataFrame:
+def doc_length_hist(df: DataFrame) -> DataFrame:
     """X5 / corpus profiling: document-length histogram — docs and
-    token mass per `bucket`-char bucket. One partial+final aggregate;
+    token mass per 100-char bucket. One partial+final aggregate;
     bucket count is bounded, so the shuffle is tiny at any scale."""
+    bucket = 100
     return (
         df.groupBy(
-            (F.floor(F.length(text_col) / bucket) * bucket)
+            (F.floor(F.length("text") / bucket) * bucket)
             .cast("long")
             .alias("len_bucket")
         )
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.expr(f"size(split({text_col}, ' '))")).cast("long").alias(
+            F.sum(F.expr("size(split(text, ' '))")).cast("long").alias(
                 "total_tokens"
             ),
         )
     )
 
 
-def doc_length_hist_oracle(bucket: int = 100) -> str:
+def doc_length_hist_oracle() -> str:
+    bucket = 100
     return f"""
         SELECT CAST(floor(length(text) / {bucket}) * {bucket} AS BIGINT)
                    AS len_bucket,
@@ -317,7 +319,7 @@ def doc_length_hist_oracle(bucket: int = 100) -> str:
     """
 
 
-def word_bigrams(df: DataFrame, text_col: str = "text", top_n: int = 100) -> DataFrame:
+def word_bigrams(df: DataFrame, top_n: int = 100) -> DataFrame:
     """X5 / n-gram generation: corpus-wide word-bigram frequencies,
     top `top_n` tie-broken by bigram text so the selected rowset is
     unique. The bigram list is built per-row with higher-order array
@@ -325,7 +327,7 @@ def word_bigrams(df: DataFrame, text_col: str = "text", top_n: int = 100) -> Dat
     at scale the groupBy gets map-side partial counts and the top-N is
     a TakeOrdered — no global sort materialization."""
     return (
-        df.withColumn("ws", F.split(F.lower(F.col(text_col)), " "))
+        df.withColumn("ws", F.split(F.lower(F.col("text")), " "))
         .where(F.expr("size(ws) >= 2"))
         .select(
             F.explode(
@@ -357,7 +359,7 @@ def word_bigrams_oracle(top_n: int = 100) -> str:
     """
 
 
-def term_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def term_stats(df: DataFrame) -> DataFrame:
     """X5 / TF-DF term statistics (the exact core of TF-IDF scoring):
     per-term total frequency, document frequency, and a fixed-point
     tf/df ratio. Integer `div` keeps the score hash-stable across
@@ -371,7 +373,7 @@ def term_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     return (
         df.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
+            F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
         )
         .groupBy("term")
         .agg(
@@ -405,7 +407,7 @@ def term_stats_oracle() -> str:
     """
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """X5 (Gopher-style repetition signals): per-doc fraction of mass
     in the most frequent token and fraction of duplicated bigrams —
     the two classic boilerplate/low-quality indicators from the
@@ -414,7 +416,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     top-token scan is O(distinct·n) on a bounded document — CPU-bound
     map work that scales embarrassingly."""
     return (
-        df.withColumn("toks", F.split(F.col(text_col), " "))
+        df.withColumn("toks", F.split(F.col("text"), " "))
         .withColumn(
             "bg",
             F.expr(
@@ -475,13 +477,13 @@ FILTER_MAX_MEAN_LEN = 12.0
 FILTER_MAX_SYMBOL_RATIO = 0.1
 
 
-def heuristic_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
+def heuristic_filter(df: DataFrame) -> DataFrame:
     """X5 (C4/Gopher-style quality gate): word-count bounds, mean
     token length bounds, and symbol-to-char ratio, combined into a
     keep flag plus the first failed rule (the debuggable form every
     corpus pipeline wants). One pass of per-row JVM expressions."""
     t = (
-        df.withColumn("toks", F.split(F.col(text_col), " "))
+        df.withColumn("toks", F.split(F.col("text"), " "))
         .withColumn("wc", F.expr("size(toks)"))
         .withColumn(
             "mean_len",
@@ -490,8 +492,8 @@ def heuristic_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn(
             "sym_ratio",
             F.expr(
-                f"length(regexp_replace(lower({text_col}), '[a-z0-9 ]', ''))"
-                f" / length({text_col})"
+                "length(regexp_replace(lower(text), '[a-z0-9 ]', ''))"
+                " / length(text)"
             ),
         )
     )
@@ -550,9 +552,7 @@ def heuristic_filter_oracle() -> str:
 PACK_CAPACITY = 256  # tokens per packed sequence
 
 
-def pack_sequences(
-    df: DataFrame, text_col: str = "text", capacity: int = PACK_CAPACITY
-) -> DataFrame:
+def pack_sequences(df: DataFrame, capacity: int = PACK_CAPACITY) -> DataFrame:
     """North-star (sequence packing): concat-then-chunk assignment of
     documents to fixed-token-budget training sequences — the
     GPT-style packing rule. Documents are laid out in doc_id order
@@ -565,7 +565,7 @@ def pack_sequences(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("lang").orderBy("doc_id")
-    toks = F.expr(f"size(split({text_col}, ' '))").cast("long")
+    toks = F.expr("size(split(text, ' '))").cast("long")
     return (
         df.withColumn("n_tokens", toks)
         .withColumn("cum", F.sum("n_tokens").over(w))
@@ -582,7 +582,7 @@ def pack_sequences(
     )
 
 
-def pack_sequences_oracle(capacity: int = PACK_CAPACITY) -> str:
+def pack_sequences_oracle() -> str:
     return f"""
         WITH t AS (
             SELECT doc_id, lang,
@@ -596,7 +596,7 @@ def pack_sequences_oracle(capacity: int = PACK_CAPACITY) -> str:
             FROM t
         )
         SELECT lang,
-               CAST(floor((cum - n_tokens) / {capacity}) AS BIGINT) AS bin,
+               CAST(floor((cum - n_tokens) / {PACK_CAPACITY}) AS BIGINT) AS bin,
                count(*)            AS n_docs,
                CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
                min(doc_id)         AS first_doc,
@@ -612,7 +612,7 @@ def _mixture_rate_sql(src: str) -> str:
     return f"CASE WHEN CAST(substring({src}, 4) AS INT) % 2 = 0 THEN 800 ELSE 300 END"
 
 
-def mixture_sample(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def mixture_sample(df: DataFrame) -> DataFrame:
     """North-star (mixture weighting): deterministic per-source
     downsampling — accept a document iff salted_hash(id) mod 1000 <
     rate(source). The reproducible way to hit target mixture
@@ -623,7 +623,7 @@ def mixture_sample(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     from kafka_streams_pipeline_spark.functions.hashing import md5_long
 
     rate = F.expr(_mixture_rate_sql("source"))
-    bucket = md5_long(F.concat(F.lit("mix:"), F.col(id_col).cast("string"))) % 1000
+    bucket = md5_long(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))) % 1000
     return (
         df.withColumn("admit", bucket < rate)
         .groupBy("source")
@@ -659,11 +659,7 @@ def mixture_sample_oracle() -> str:
     """
 
 
-def write_split_corpus(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-) -> None:
+def write_split_corpus(df: DataFrame, path: str) -> None:
     """Materialize the training corpus as the partitioned store a
     downstream trainer reads: hash-split assignment (same salted
     bucket as q_hash_split) → parquet partitioned by (split, lang),
@@ -675,14 +671,14 @@ def write_split_corpus(
     file per task instead of a small-files explosion."""
     from kafka_streams_pipeline_spark.functions.hashing import md5_long
 
-    bucket = md5_long(F.concat(F.lit("split:"), F.col(id_col).cast("string"))) % 100
+    bucket = md5_long(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
     out = df.withColumn(
         "split",
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"),
     )
     (
         out.repartition("split", "lang")
-        .sortWithinPartitions(id_col)
+        .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .partitionBy("split", "lang")
         .parquet(path)
@@ -711,9 +707,7 @@ def _duck_bitlen(x: str) -> str:
     )
 
 
-def vocab_build(
-    df: DataFrame, text_col: str = "text", min_count: int = 2
-) -> DataFrame:
+def vocab_build(df: DataFrame) -> DataFrame:
     """X5 vocabulary construction: corpus token counts, a min-count
     floor, and dense frequency-ranked ids (count DESC, token ASC — the
     deterministic tie-break every tokenizer build needs so two runs
@@ -744,11 +738,11 @@ def vocab_build(
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     counts = (
         df.select(
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token")
+            F.explode(F.split(F.lower(F.col("text")), " ")).alias("token")
         )
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") >= min_count)
+        .where(F.col("cnt") >= 2)
     )
     # Phase 1: contiguous global slices, ranked locally in parallel.
     # RangePartitioner's boundary sampling uses a deterministic seed,
@@ -789,8 +783,8 @@ def vocab_build(
     )
 
 
-def vocab_build_oracle(min_count: int = 2) -> str:
-    return f"""
+def vocab_build_oracle() -> str:
+    return """
         SELECT token, cnt,
                CAST(row_number() OVER (ORDER BY cnt DESC, token) AS BIGINT)
                    AS token_id
@@ -802,7 +796,7 @@ def vocab_build_oracle(min_count: int = 2) -> str:
             )
             GROUP BY token
         )
-        WHERE cnt >= {min_count}
+        WHERE cnt >= 2
     """
 
 
@@ -812,12 +806,7 @@ def vocab_build_oracle(min_count: int = 2) -> str:
 ENCODE_CHECKSUM_MOD = 1_000_000_007
 
 
-def encode_documents(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-    vocab: DataFrame | None = None,
-) -> DataFrame:
+def encode_documents(df: DataFrame, vocab: DataFrame | None = None) -> DataFrame:
     """X5 tokenizer APPLICATION — the step between
     :func:`vocab_build` and :func:`pack_sequences`: map every
     document to its id sequence under the corpus vocabulary
@@ -845,12 +834,12 @@ def encode_documents(
     pipeline that ALSO reports on the vocabulary reuses one subtree
     instead of re-deriving it; default None builds it from ``df``."""
     if vocab is None:
-        vocab = vocab_build(df, text_col, min_count)
+        vocab = vocab_build(df)
     vocab = vocab.select("token", "token_id")
     toks = df.select(
         "doc_id",
         F.posexplode(
-            F.split(F.lower(F.col(text_col)), " ")
+            F.split(F.lower(F.col("text")), " ")
         ).alias("pos0", "token"),
     )
     enc = toks.join(vocab, "token", "left").select(
@@ -871,9 +860,9 @@ def encode_documents(
     )
 
 
-def encode_documents_oracle(min_count: int = 2) -> str:
+def encode_documents_oracle() -> str:
     return f"""
-        WITH vocab AS ({vocab_build_oracle(min_count)}),
+        WITH vocab AS ({vocab_build_oracle()}),
         tok AS (
             SELECT doc_id,
                    unnest([{{'pos1': i, 'token': ws[i]}}
@@ -899,12 +888,7 @@ def encode_documents_oracle(min_count: int = 2) -> str:
     """
 
 
-def tokenizer_pipeline(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-    capacity: int = PACK_CAPACITY,
-) -> DataFrame:
+def tokenizer_pipeline(df: DataFrame) -> DataFrame:
     """North-star (round 9): the full tokenizer-prep chain —
     :func:`vocab_build` → :func:`encode_documents` →
     :func:`pack_sequences`' bin assignment — as ONE declarative
@@ -930,8 +914,8 @@ def tokenizer_pipeline(
     # scalar; left lazy, the corpus-wide tokenize + count aggregate
     # behind it runs twice. The vocabulary is min-count-pruned and
     # corpus-bounded (tens of MB at worst), so materialize it once.
-    vocab = vocab_build(df, text_col, min_count).localCheckpoint(eager=True)
-    enc = encode_documents(df, text_col, min_count, vocab=vocab)
+    vocab = vocab_build(df).localCheckpoint(eager=True)
+    enc = encode_documents(df, vocab=vocab)
     vsize = vocab.agg(F.count(F.lit(1)).cast("long").alias("vocab_size"))
     w = Window.partitionBy("lang").orderBy("doc_id")
     packed = (
@@ -939,7 +923,7 @@ def tokenizer_pipeline(
         .withColumn("cum", F.sum("n_tokens").over(w))
         .withColumn(
             "bin",
-            ((F.col("cum") - F.col("n_tokens")) / capacity).cast("long"),
+            ((F.col("cum") - F.col("n_tokens")) / PACK_CAPACITY).cast("long"),
         )
     )
     return (
@@ -960,11 +944,9 @@ def tokenizer_pipeline(
     )
 
 
-def tokenizer_pipeline_oracle(
-    min_count: int = 2, capacity: int = PACK_CAPACITY
-) -> str:
+def tokenizer_pipeline_oracle() -> str:
     return f"""
-        WITH vocab AS ({vocab_build_oracle(min_count)}),
+        WITH vocab AS ({vocab_build_oracle()}),
         tok AS (
             SELECT doc_id,
                    unnest([{{'pos1': i, 'token': ws[i]}}
@@ -1002,7 +984,7 @@ def tokenizer_pipeline_oracle(
                CAST(sum(ids_checksum % {ENCODE_CHECKSUM_MOD})
                     % {ENCODE_CHECKSUM_MOD} AS BIGINT) AS checksum_mod,
                CAST(count(DISTINCT CAST(floor((cum - n_tokens)
-                                              / {capacity}) AS BIGINT))
+                                              / {PACK_CAPACITY}) AS BIGINT))
                     AS BIGINT) AS n_bins,
                (SELECT CAST(count(*) AS BIGINT) FROM vocab) AS vocab_size
         FROM packed
@@ -1010,7 +992,7 @@ def tokenizer_pipeline_oracle(
     """
 
 
-def unigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """X5 CCNet-shaped LM quality signal, integer-exact: score each
     EVAL-split document by mean unigram surprisal under the
     TRAIN-split unigram model (CCNet buckets documents by LM
@@ -1034,7 +1016,7 @@ def unigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
     toks = df.select(
         "doc_id",
         _split_bucket_spark().alias("bucket"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token"),
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("token"),
     )
     train_counts = (
         toks.where(F.col("bucket") < 80)
@@ -1074,9 +1056,7 @@ BIGRAM_BACKOFF_BITS = 2  # penalty when an unseen bigram backs off
 # every score a pure integer)
 
 
-def bigram_surprisal(
-    df: DataFrame, text_col: str = "text", hash_keys: bool = False
-) -> DataFrame:
+def bigram_surprisal(df: DataFrame, hash_keys: bool = False) -> DataFrame:
     """X5 LM quality signal, one order up from
     :func:`unigram_surprisal`: score each EVAL-split document by mean
     BIGRAM surprisal with stupid backoff (Brants et al. 2007, "Large
@@ -1120,7 +1100,7 @@ def bigram_surprisal(
     toks = df.select(
         "doc_id",
         _split_bucket_spark().alias("bucket"),
-        F.split(F.lower(F.col(text_col)), " ").alias("ws"),
+        F.split(F.lower(F.col("text")), " ").alias("ws"),
     ).select(
         "doc_id",
         "bucket",
@@ -1311,12 +1291,7 @@ def unigram_surprisal_oracle() -> str:
 BM25_TERMS = ("spark", "vector", "stream", "join")
 
 
-def bm25_topk(
-    df: DataFrame,
-    terms: tuple[str, ...] = BM25_TERMS,
-    k: int = 25,
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_topk(df: DataFrame, k: int = 25) -> DataFrame:
     """X5 (retrieval scoring): Okapi BM25 top-k over the corpus for a
     fixed query term set (Robertson & Spärck Jones, public
     literature) — the relevance primitive behind retrieval-based data
@@ -1330,7 +1305,7 @@ def bm25_topk(
     uses the pure-integer bit-length surrogate
     bitlen((2N+1) div (2·df+1)) ~ floor(log2((N+.5)/(df+.5)))+1 — no
     float log (Math.log boundary rounding differs between engines).
-    The per-document score sums ≤|terms| doubles inside ONE row
+    The per-document score sums ≤|BM25_TERMS| doubles inside ONE row
     expression in fixed textual order — no cross-row float
     aggregation anywhere. Top-k orders on the rounded score with
     doc_id tiebreak and binds rank into the output so the
@@ -1345,7 +1320,7 @@ def bm25_topk(
     from pyspark.sql.window import Window
 
     base = df.select(
-        "doc_id", F.split(F.col(text_col), " ").alias("toks")
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
     ).select(
         "doc_id",
         F.expr("size(toks)").cast("long").alias("dl"),
@@ -1353,7 +1328,7 @@ def bm25_topk(
             F.expr(f"cast(size(filter(toks, x -> x = '{t}')) as long)").alias(
                 f"tf_{i}"
             )
-            for i, t in enumerate(terms)
+            for i, t in enumerate(BM25_TERMS)
         ],
     )
     # `base` (tokenize + per-term tf counts — the expensive pass over
@@ -1367,12 +1342,12 @@ def bm25_topk(
         F.sum("dl").cast("long").alias("total"),
     ] + [
         F.sum((F.col(f"tf_{i}") > 0).cast("long")).cast("long").alias(f"df_{i}")
-        for i in range(len(terms))
+        for i in range(len(BM25_TERMS))
     ]
     stats = base.agg(*aggs)
     scored = base.crossJoin(F.broadcast(stats))
     term_exprs = []
-    for i in range(len(terms)):
+    for i in range(len(BM25_TERMS)):
         idf = _spark_bitlen(f"((2 * n_docs + 1) div (2 * df_{i} + 1))")
         term_exprs.append(
             f"(CASE WHEN tf_{i} = 0 THEN cast(0 as double) ELSE "
@@ -1393,20 +1368,18 @@ def bm25_topk(
     return out.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def bm25_topk_oracle(
-    terms: tuple[str, ...] = BM25_TERMS, k: int = 25
-) -> str:
+def bm25_topk_oracle(k: int = 25) -> str:
     tf_cols = ",\n                   ".join(
         f"CAST(len(list_filter(toks, x -> x = '{t}')) AS BIGINT) AS tf_{i}"
-        for i, t in enumerate(terms)
+        for i, t in enumerate(BM25_TERMS)
     )
     df_cols = ",\n                   ".join(
         f"CAST(sum(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS BIGINT) "
         f"AS df_{i}"
-        for i in range(len(terms))
+        for i in range(len(BM25_TERMS))
     )
     term_sqls = []
-    for i in range(len(terms)):
+    for i in range(len(BM25_TERMS)):
         idf = _duck_bitlen(f"((2 * n_docs + 1) // (2 * df_{i} + 1))")
         term_sqls.append(
             f"(CASE WHEN tf_{i} = 0 THEN CAST(0 AS DOUBLE) ELSE "
@@ -1452,7 +1425,6 @@ CHUNK_STRIDE = 48  # chunk_size - overlap (16-token overlap)
 
 def rag_chunks(
     df: DataFrame,
-    text_col: str = "text",
     chunk_size: int = CHUNK_SIZE,
     stride: int = CHUNK_STRIDE,
 ) -> DataFrame:
@@ -1470,7 +1442,7 @@ def rag_chunks(
     no shuffle at all — chunking is embarrassingly parallel, and
     payload text never moves between executors."""
     return (
-        df.withColumn("ws", F.split(F.col(text_col), " "))
+        df.withColumn("ws", F.split(F.col("text"), " "))
         .withColumn("n", F.expr("size(ws)"))
         .where(F.col("n") >= 1)
         .select(
@@ -1497,9 +1469,7 @@ def rag_chunks(
     )
 
 
-def rag_chunks_oracle(
-    chunk_size: int = CHUNK_SIZE, stride: int = CHUNK_STRIDE
-) -> str:
+def rag_chunks_oracle() -> str:
     return f"""
         WITH t AS (
             SELECT doc_id, string_split(text, ' ') AS ws,
@@ -1508,9 +1478,9 @@ def rag_chunks_oracle(
         ),
         starts AS (
             SELECT doc_id, ws, n,
-                   unnest(generate_series(0, n - 1, {stride})) AS start_tok,
+                   unnest(generate_series(0, n - 1, {CHUNK_STRIDE})) AS start_tok,
                    generate_subscripts(
-                       generate_series(0, n - 1, {stride}), 1
+                       generate_series(0, n - 1, {CHUNK_STRIDE}), 1
                    ) - 1 AS chunk_idx
             FROM t WHERE n >= 1
         )
@@ -1518,10 +1488,10 @@ def rag_chunks_oracle(
                CAST(chunk_idx AS BIGINT) AS chunk_idx,
                CAST(start_tok AS BIGINT) AS start_tok,
                CAST(len(list_slice(ws, start_tok + 1,
-                                   start_tok + {chunk_size})) AS BIGINT)
+                                   start_tok + {CHUNK_SIZE})) AS BIGINT)
                    AS n_tok,
                md5(list_aggregate(
-                   list_slice(ws, start_tok + 1, start_tok + {chunk_size}),
+                   list_slice(ws, start_tok + 1, start_tok + {CHUNK_SIZE}),
                    'string_agg', ' ')) AS chunk_md5
         FROM starts
     """
@@ -1573,9 +1543,7 @@ def _repeated_window_agg(
     )
 
 
-def repeated_window_scaling_stats(
-    df: DataFrame, text_col: str = "text", w: int = REPEAT_W
-) -> dict:
+def repeated_window_scaling_stats(df: DataFrame) -> dict:
     """Sweep diagnostic (VERDICT r8 item 4): the window-multiset
     cardinalities behind :func:`repeated_window_stats`, so a
     super-linear sweep point can be attributed to DATA growth (the
@@ -1592,7 +1560,7 @@ def repeated_window_scaling_stats(
       cross-document groups and their instance mass — the rows the
       profile's second aggregate actually processes."""
     grouped = _repeated_window_agg(
-        df, text_col, w, hash_windows=True, min_docs=1
+        df, "text", REPEAT_W, hash_windows=True, min_docs=1
     )
     row = grouped.agg(
         F.count(F.lit(1)).cast("long").alias("distinct_windows"),
@@ -1607,23 +1575,18 @@ def repeated_window_scaling_stats(
     return {k: int(v) for k, v in row.asDict().items()}
 
 
-def repeated_window_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    w: int = REPEAT_W,
-    hash_windows: bool = True,
-) -> DataFrame:
+def repeated_window_stats(df: DataFrame) -> DataFrame:
     """Corpus-level repeated-passage profile: the multiset of
     (n_occur, n_docs) over EVERY cross-document repeated W-token
     window, as (n_occur, n_docs, n_windows) rows. Unlike
     :func:`repeated_ngrams` there is no TopN and no rank — two plain
     aggregates, both with map-side partials, no sort anywhere — so
-    this is the form to run corpus-wide at 100 TB (default
-    ``hash_windows=True``: the first aggregate shuffles 8-byte keys).
+    this is the form to run corpus-wide at 100 TB (windows are
+    hashed, so the first aggregate shuffles 8-byte keys).
     The stats are key-representation-independent, which is what lets
     the driver certify the hashed plan against an exact text-form
     SQL oracle (q_repeated_ngrams_hashed)."""
-    agg = _repeated_window_agg(df, text_col, w, hash_windows)
+    agg = _repeated_window_agg(df, "text", REPEAT_W, hash_windows=True)
     return agg.groupBy("n_occur", "n_docs").agg(
         F.count(F.lit(1)).cast("long").alias("n_windows")
     )
@@ -1631,7 +1594,6 @@ def repeated_window_stats(
 
 def repeated_ngrams(
     df: DataFrame,
-    text_col: str = "text",
     w: int = REPEAT_W,
     top_n: int = REPEAT_TOP,
     hash_windows: bool = False,
@@ -1663,7 +1625,7 @@ def repeated_ngrams(
     directly inspectable; ``tests/test_extensions.py`` (the
     hashed-twin multiset test) proves both forms aggregate the
     identical window multiset."""
-    agg = _repeated_window_agg(df, text_col, w, hash_windows)
+    agg = _repeated_window_agg(df, "text", w, hash_windows)
     top = agg.orderBy(F.desc("n_occur"), F.asc("win")).limit(top_n)
     from pyspark.sql.window import Window
 
@@ -1680,18 +1642,16 @@ def repeated_ngrams(
     )
 
 
-def repeated_ngrams_oracle(
-    w: int = REPEAT_W, top_n: int = REPEAT_TOP
-) -> str:
+def repeated_ngrams_oracle() -> str:
     return f"""
         WITH wins AS (
             SELECT doc_id,
-                   unnest([list_aggregate(list_slice(ws, i, i + {w} - 1),
+                   unnest([list_aggregate(list_slice(ws, i, i + {REPEAT_W} - 1),
                                           'string_agg', ' ')
-                           FOR i IN range(1, len(ws) - {w} + 2)]) AS win
+                           FOR i IN range(1, len(ws) - {REPEAT_W} + 2)]) AS win
             FROM (SELECT doc_id, string_split(text, ' ') AS ws
                   FROM documents)
-            WHERE len(ws) >= {w}
+            WHERE len(ws) >= {REPEAT_W}
         ),
         agg AS (
             SELECT win,
@@ -1705,14 +1665,14 @@ def repeated_ngrams_oracle(
                CAST(row_number() OVER (ORDER BY n_occur DESC, win ASC)
                     AS BIGINT) AS rank
         FROM agg
-        QUALIFY rank <= {top_n}
+        QUALIFY rank <= {REPEAT_TOP}
     """
 
 
-def temperature_mixture(df: DataFrame, alpha_denom: int = 2) -> DataFrame:
+def temperature_mixture(df: DataFrame) -> DataFrame:
     """X5 multilingual rebalancing: temperature sampling over
     language shares (the mT5/XLM-R p_l^α rule, public literature) at
-    α = 1/alpha_denom (default 1/2 — square root), computed
+    α = 1/2 (square root), computed
     DETERMINISTICALLY: weight_l = floor(sqrt(n_l · 10¹²)) uses IEEE
     correctly-rounded sqrt over a double product (both engines round
     the identical true value to nearest-even, so the floor matches
@@ -1789,17 +1749,12 @@ VOCAB_TOP_K = 24  # coverage vocabulary size (fixture-sized; a real
 # tokenizer build uses 32k-256k — the plan shape is identical)
 
 
-def vocab_coverage(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-    top_k: int = VOCAB_TOP_K,
-) -> DataFrame:
+def vocab_coverage(df: DataFrame) -> DataFrame:
     """X5 tokenizer health: per-document OOV rate against the top-K
     built vocabulary — the coverage metric that decides whether a
     vocabulary (or its normalization rules) fits a corpus before a
     training run burns on it. Composes vocab_build: tokens ranked by
-    (count DESC, token ASC), vocabulary = ids ≤ top_k, per-doc OOV =
+    (count DESC, token ASC), vocabulary = ids ≤ ``VOCAB_TOP_K``, per-doc OOV =
     tokens outside it.
 
     Output: (doc_id, n_tokens, n_oov, oov_rate[round 6]).
@@ -1808,14 +1763,10 @@ def vocab_coverage(
     count table — broadcast-joined against the exploded token stream
     (the stream never shuffles for membership), then one doc-keyed
     aggregate."""
-    vocab = (
-        vocab_build(df, text_col, min_count)
-        .where(F.col("token_id") <= top_k)
-        .select("token")
-    )
+    vocab = vocab_build(df).where(F.col("token_id") <= VOCAB_TOP_K).select("token")
     toks = df.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token"),
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("token"),
     )
     flagged = toks.join(
         F.broadcast(vocab.withColumn("_in", F.lit(1))), "token", "left"
@@ -1837,9 +1788,7 @@ def vocab_coverage(
     )
 
 
-def vocab_coverage_oracle(
-    min_count: int = 2, top_k: int = VOCAB_TOP_K
-) -> str:
+def vocab_coverage_oracle() -> str:
     return f"""
         WITH vocab AS (
             SELECT token FROM (
@@ -1853,9 +1802,9 @@ def vocab_coverage_oracle(
                           FROM documents)
                     GROUP BY token
                 )
-                WHERE cnt >= {min_count}
+                WHERE cnt >= 2
             )
-            WHERE token_id <= {top_k}
+            WHERE token_id <= {VOCAB_TOP_K}
         ),
         toks AS (
             SELECT doc_id,
@@ -1887,9 +1836,7 @@ def vocab_coverage_oracle(
 BPE_NUM_MERGES = 8
 
 
-def bpe_train(
-    df: DataFrame, text_col: str = "text", num_merges: int = BPE_NUM_MERGES
-) -> DataFrame:
+def bpe_train(df: DataFrame, num_merges: int = BPE_NUM_MERGES) -> DataFrame:
     """Learn ``num_merges`` BPE merge rules from the corpus and
     return one row per round:
     ``(merge_idx, left_sym, right_sym, pair_freq,
@@ -1928,7 +1875,7 @@ def bpe_train(
 
     words = (
         df.select(
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word")
+            F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
         )
         .where(F.length("word") > 0)
         .groupBy("word")
@@ -2012,7 +1959,7 @@ def bpe_train(
     )
 
 
-def bpe_train_oracle(num_merges: int = BPE_NUM_MERGES) -> str:
+def bpe_train_oracle() -> str:
     """DuckDB twin of :func:`bpe_train` on the ``documents`` view,
     rounds UNROLLED (one CTE chain per merge — the same fixed-K
     unroll as graph.textrank_oracle). Identical window semantics and
@@ -2034,7 +1981,7 @@ def bpe_train_oracle(num_merges: int = BPE_NUM_MERGES) -> str:
                  LATERAL (SELECT unnest(range(1, len(word) + 1)) AS i)
         )"""
     ]
-    for k in range(1, num_merges + 1):
+    for k in range(1, BPE_NUM_MERGES + 1):
         p = k - 1
         parts.append(
             f"""nx{k} AS MATERIALIZED (
@@ -2091,16 +2038,12 @@ def bpe_train_oracle(num_merges: int = BPE_NUM_MERGES) -> str:
         )"""
         )
     union = "\n        UNION ALL\n        ".join(
-        f"SELECT * FROM stat{k}" for k in range(1, num_merges + 1)
+        f"SELECT * FROM stat{k}" for k in range(1, BPE_NUM_MERGES + 1)
     )
     return ",\n        ".join(parts) + f"\n        {union}"
 
 
-def decode_documents(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
+def decode_documents(df: DataFrame) -> DataFrame:
     """X5 tokenizer round-trip — the DECODE leg closing
     vocab_build → encode → decode: every document's token stream is
     mapped to ids (OOV → 0, the UNK convention) and back through the
@@ -2118,12 +2061,12 @@ def decode_documents(
     one per-document aggregate; the only array materialization is
     per-document inside collect_list — bounded by document length,
     never corpus-sized."""
-    vocab = vocab_build(df, text_col, min_count).select(
+    vocab = vocab_build(df).select(
         "token", "token_id"
     )
     toks = df.select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.col(text_col)), " ")).alias(
+        F.posexplode(F.split(F.lower(F.col("text")), " ")).alias(
             "pos0", "token"
         ),
     )
@@ -2154,9 +2097,9 @@ def decode_documents(
     )
 
 
-def decode_documents_oracle(min_count: int = 2) -> str:
+def decode_documents_oracle() -> str:
     return f"""
-        WITH vocab AS ({vocab_build_oracle(min_count)}),
+        WITH vocab AS ({vocab_build_oracle()}),
         tok AS (
             SELECT doc_id,
                    unnest([{{'pos1': i, 'token': ws[i]}}
@@ -2190,16 +2133,11 @@ def decode_documents_oracle(min_count: int = 2) -> str:
 DECON_N = 8  # n-gram length (the scaled-down 13-gram convention)
 
 
-def decontaminate(
-    df: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    n: int = DECON_N,
-) -> DataFrame:
+def decontaminate(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Per contaminated training doc: how many of its distinct
-    n-grams appear anywhere in the benchmark set, how many distinct
-    benchmark docs it collides with, and the contamination fraction
-    as parts-per-million integer (engine-exact; no floats).
+    n-grams (n = ``DECON_N``) appear anywhere in the benchmark set,
+    how many distinct benchmark docs it collides with, and the
+    contamination fraction as parts-per-million integer (engine-exact; no floats).
 
     Scale shape: the benchmark n-gram set is BROADCAST (eval suites
     are thousands of examples vs a 100 TB corpus), so the corpus side
@@ -2227,7 +2165,7 @@ def decontaminate(
     # the md5 runs once per exploded row in a codegen'd projection.
     # array_distinct on strings ≡ distinct on hashes (md5 is a
     # function), so matched/total semantics are unchanged.
-    sh = spark_shingles_expr("toks", n)
+    sh = spark_shingles_expr("toks", DECON_N)
     h = _spark_hash("ng_str")
     # n-gram hashing is CPU-bound per row; a small single-file
     # parquet arrives as ONE partition, which would serialize the
@@ -2247,7 +2185,7 @@ def decontaminate(
     if bench_src.rdd.getNumPartitions() < target:
         bench_src = bench_src.repartition(target)
     corpus = (
-        df.withColumn("toks", F.split(F.col(text_col), " "))
+        df.withColumn("toks", F.split(F.col("text"), " "))
         .withColumn("ngs", F.expr(sh))
         .select(
             "doc_id",
@@ -2258,7 +2196,7 @@ def decontaminate(
         .select("doc_id", "total_ngrams", F.expr(h).alias("ng"))
     )
     bench = (
-        bench_src.withColumn("toks", F.split(F.col(text_col), " "))
+        bench_src.withColumn("toks", F.split(F.col("text"), " "))
         .select(
             F.col("doc_id").alias("eval_id"),
             F.explode_outer(F.expr(sh)).alias("ng_str"),
@@ -2288,24 +2226,22 @@ def decontaminate(
     )
 
 
-def decontaminate_oracle(
-    bench_pred: str, table: str = "documents", n: int = DECON_N
-) -> str:
+def decontaminate_oracle(bench_pred: str) -> str:
     """DuckDB twin; ``bench_pred`` is the SQL predicate selecting the
-    benchmark slice out of ``table`` (the registered query derives
+    benchmark slice out of ``documents`` (the registered query derives
     the benchmark deterministically from the same corpus)."""
     from kafka_streams_pipeline_spark.operators.dedup import (
         _duck_hash,
         duck_shingles_expr,
     )
 
-    sh = duck_shingles_expr("toks", n)
+    sh = duck_shingles_expr("toks", DECON_N)
     h = _duck_hash("ng_str")
     return f"""
         WITH corpus AS (
             SELECT doc_id, {sh} AS ngs
             FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                  FROM {table})
+                  FROM documents)
         ),
         cng AS (
             SELECT doc_id, CAST(len(ngs) AS BIGINT) AS total_ngrams,
@@ -2317,7 +2253,7 @@ def decontaminate_oracle(
                 SELECT doc_id AS eval_id,
                        unnest({sh}) AS ng_str
                 FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                      FROM {table} WHERE {bench_pred})
+                      FROM documents WHERE {bench_pred})
             )
         )
         SELECT c.doc_id,
@@ -2337,13 +2273,7 @@ DSIR_BUCKETS = 512  # hashed bigram feature space (paper uses 10k;
 DSIR_TOPK = 50
 
 
-def dsir_select(
-    df: DataFrame,
-    text_col: str = "text",
-    target_lang: str = "en",
-    n_buckets: int = DSIR_BUCKETS,
-    k: int = DSIR_TOPK,
-) -> DataFrame:
+def dsir_select(df: DataFrame, k: int = DSIR_TOPK) -> DataFrame:
     """X5 data selection via importance resampling (DSIR — Xie et
     al. 2023, "Data Selection for Language Models via Importance
     Resampling", public literature), integer-exact: score each
@@ -2379,7 +2309,7 @@ def dsir_select(
     toks = df.select(
         "doc_id",
         "lang",
-        F.split(F.lower(F.col(text_col)), " ").alias("ws"),
+        F.split(F.lower(F.col("text")), " ").alias("ws"),
     ).select(
         "doc_id",
         "lang",
@@ -2400,12 +2330,12 @@ def dsir_select(
                     F.col("cur"),
                 )
             )
-            % n_buckets
+            % DSIR_BUCKETS
         ).alias("bucket"),
     )
     raw = feats.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
     tgt = (
-        feats.where(F.col("lang") == target_lang)
+        feats.where(F.col("lang") == "en")
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("ct"))
     )
@@ -2415,8 +2345,8 @@ def dsir_select(
             tgt.agg(F.sum("ct").cast("long").alias("sum_t"))
         )
         .select(
-            (F.col("sum_r") + n_buckets).alias("nr"),
-            (F.col("sum_t") + n_buckets).alias("nt"),
+            (F.col("sum_r") + DSIR_BUCKETS).alias("nr"),
+            (F.col("sum_t") + DSIR_BUCKETS).alias("nt"),
         )
     )
     scores = (
@@ -2434,7 +2364,7 @@ def dsir_select(
             .alias("score"),
         )
     )
-    cand = feats.where(F.col("lang") != target_lang)
+    cand = feats.where(F.col("lang") != "en")
     weighted = (
         cand.join(F.broadcast(scores), "bucket")
         .groupBy("doc_id", "lang")
@@ -2451,23 +2381,18 @@ def dsir_select(
     ).limit(k)
 
 
-def dsir_select_oracle(
-    table: str = "documents",
-    target_lang: str = "en",
-    n_buckets: int = DSIR_BUCKETS,
-    k: int = DSIR_TOPK,
-) -> str:
+def dsir_select_oracle() -> str:
     from kafka_streams_pipeline_spark.functions.hashing import (
         md5_long_sql,
     )
 
     bucket = (
-        md5_long_sql("'dsir:' || prev || ' ' || cur") + f" % {n_buckets}"
+        md5_long_sql("'dsir:' || prev || ' ' || cur") + f" % {DSIR_BUCKETS}"
     )
     return f"""
         WITH t AS (
             SELECT doc_id, lang, string_split(lower(text), ' ') AS ws
-            FROM {table}
+            FROM documents
         ),
         tok AS (
             SELECT doc_id, lang,
@@ -2490,13 +2415,13 @@ def dsir_select_oracle(
         ),
         tgt AS (
             SELECT bucket, count(*) AS ct FROM feats
-            WHERE lang = '{target_lang}' GROUP BY bucket
+            WHERE lang = 'en' GROUP BY bucket
         ),
         totals AS (
             SELECT (SELECT CAST(sum(cr) AS BIGINT) FROM raw)
-                       + {n_buckets} AS nr,
+                       + {DSIR_BUCKETS} AS nr,
                    (SELECT CAST(sum(ct) AS BIGINT) FROM tgt)
-                       + {n_buckets} AS nt
+                       + {DSIR_BUCKETS} AS nt
         ),
         scores AS (
             SELECT raw.bucket,
@@ -2513,13 +2438,13 @@ def dsir_select_oracle(
                    CAST((sum(score) * 1000000) // count(*) AS BIGINT)
                        AS mean_fp
             FROM feats f JOIN scores s ON f.bucket = s.bucket
-            WHERE f.lang != '{target_lang}'
+            WHERE f.lang != 'en'
             GROUP BY f.doc_id, f.lang
         )
         SELECT doc_id, lang, n_bigrams, weight_bits, mean_fp
         FROM weighted
         ORDER BY mean_fp DESC, doc_id ASC
-        LIMIT {k}
+        LIMIT {DSIR_TOPK}
     """
 
 
@@ -2531,7 +2456,6 @@ SCRUB_MIN_DOCS = 3
 
 def boilerplate_scrub(
     df: DataFrame,
-    text_col: str = "text",
     n: int = SCRUB_N,
     min_docs: int = SCRUB_MIN_DOCS,
 ) -> DataFrame:
@@ -2570,7 +2494,7 @@ def boilerplate_scrub(
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
-    toks = df.withColumn("toks", F.split(F.col(text_col), " "))
+    toks = df.withColumn("toks", F.split(F.col("text"), " "))
     parts = ", ".join(f"toks[i + {j}]" for j in range(n))
     grams = (
         toks.select(
@@ -2631,20 +2555,18 @@ def boilerplate_scrub(
     return out
 
 
-def boilerplate_scrub_oracle(
-    table: str = "documents", n: int = SCRUB_N, min_docs: int = SCRUB_MIN_DOCS
-) -> str:
+def boilerplate_scrub_oracle() -> str:
     from kafka_streams_pipeline_spark.operators.dedup import _duck_hash
 
-    gram = f"array_to_string(toks[i + 1:i + {n}], ' ')"
+    gram = f"array_to_string(toks[i + 1:i + {SCRUB_N}], ' ')"
     return f"""
         WITH t AS (
-            SELECT doc_id, string_split(text, ' ') AS toks FROM {table}
+            SELECT doc_id, string_split(text, ' ') AS toks FROM documents
         ),
         grams AS (
             SELECT doc_id, i AS pos, {_duck_hash(gram)} AS ng
             FROM (SELECT doc_id, toks,
-                         unnest([x FOR x IN range(0, greatest(len(toks) - {n - 1}, 0))])
+                         unnest([x FOR x IN range(0, greatest(len(toks) - {SCRUB_N - 1}, 0))])
                              AS i
                   FROM t)
         ),
@@ -2652,7 +2574,7 @@ def boilerplate_scrub_oracle(
             SELECT ng FROM (
                 SELECT ng, count(DISTINCT doc_id) AS dfreq
                 FROM grams GROUP BY ng
-            ) WHERE dfreq >= {min_docs}
+            ) WHERE dfreq >= {SCRUB_MIN_DOCS}
         ),
         starts AS (
             SELECT doc_id, list(DISTINCT pos) AS starts
@@ -2663,12 +2585,12 @@ def boilerplate_scrub_oracle(
                coalesce(array_to_string(
                    [toks[p + 1] FOR p IN range(0, len(toks))
                     IF len(list_filter(coalesce(starts, []),
-                           st -> st <= p AND p <= st + {n - 1})) = 0],
+                           st -> st <= p AND p <= st + {SCRUB_N - 1})) = 0],
                    ' '), '') AS clean_text,
                CAST(len(toks) AS BIGINT) AS n_tokens,
                CAST(len([p FOR p IN range(0, len(toks))
                     IF len(list_filter(coalesce(starts, []),
-                           st -> st <= p AND p <= st + {n - 1})) > 0])
+                           st -> st <= p AND p <= st + {SCRUB_N - 1})) > 0])
                    AS BIGINT) AS n_removed
         FROM t LEFT JOIN starts ON t.doc_id = starts.doc_id
         ORDER BY t.doc_id
@@ -2679,23 +2601,18 @@ DIVERSITY_N = 2   # bigram diversity (type-token ratio at n-gram level)
 DIVERSITY_K = 64  # KMV sketch size per group
 
 
-def ngram_diversity(
-    df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-    n: int = DIVERSITY_N,
-    k: int = DIVERSITY_K,
-) -> DataFrame:
+def ngram_diversity(df: DataFrame) -> DataFrame:
     """X5 corpus diversity audit: per group (source/domain), the
-    n-gram type-token ratio — distinct n-grams over total n-gram
-    occurrences, in integer ppm — the self-repetition measure that
-    flags template farms, crawler traps, and mode-collapsed
-    synthetic data before they enter a training mix. Each row also
+    n-gram (n = ``DIVERSITY_N``) type-token ratio — distinct n-grams
+    over total n-gram occurrences, in integer ppm — the
+    self-repetition measure that flags template farms, crawler traps,
+    and mode-collapsed synthetic data before they enter a training
+    mix. Each row also
     carries the KMV distinct ESTIMATE next to the exact count: at
     100 TB the exact distinct is the one expensive shuffle (that
     column is this row's certification twin), while the KMV column
-    is the production path — k smallest hashes per group merge
-    map-side and the estimate is one division.
+    is the production path — ``DIVERSITY_K`` smallest hashes per
+    group merge map-side and the estimate is one division.
 
     Output: (group, total_ngrams, distinct_exact, distinct_kmv,
     diversity_ppm), ascending group. All counting integer; the KMV
@@ -2711,14 +2628,14 @@ def ngram_diversity(
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
-    parts = ", ".join(f"toks[i + {j}]" for j in range(n))
+    parts = ", ".join(f"toks[i + {j}]" for j in range(DIVERSITY_N))
     grams = (
-        df.withColumn("toks", F.split(F.col(text_col), " "))
+        df.withColumn("toks", F.split(F.col("text"), " "))
         .select(
-            F.col(group_col).alias("grp"),
+            F.col("source").alias("grp"),
             F.explode_outer(
                 F.expr(
-                    f"transform({_safe_offsets('toks', n)}, "
+                    f"transform({_safe_offsets('toks', DIVERSITY_N)}, "
                     f"i -> concat_ws(' ', {parts}))"
                 )
             ).alias("g"),
@@ -2743,7 +2660,7 @@ def ngram_diversity(
             "rn",
             F.row_number().over(_W.partitionBy("grp").orderBy("h32")),
         )
-        .where(F.col("rn") <= k)
+        .where(F.col("rn") <= DIVERSITY_K)
         .groupBy("grp")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_used"),
@@ -2751,13 +2668,13 @@ def ngram_diversity(
         )
     )
     est = (
-        f"CASE WHEN n_used < {k} THEN CAST(n_used AS DOUBLE) "
-        f"ELSE ({k} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
+        f"CASE WHEN n_used < {DIVERSITY_K} THEN CAST(n_used AS DOUBLE) "
+        f"ELSE ({DIVERSITY_K} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
     )
     out = (
         totals.join(kept, "grp")
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             "total_ngrams",
             "distinct_exact",
             F.expr(f"round({est}, 6)").alias("distinct_kmv"),
@@ -2765,36 +2682,31 @@ def ngram_diversity(
             .cast("long")
             .alias("diversity_ppm"),
         )
-        .orderBy(group_col)
+        .orderBy("source")
     )
     out = out.localCheckpoint(eager=True)
     grams.unpersist()
     return out
 
 
-def ngram_diversity_oracle(
-    table: str = "documents",
-    group_col: str = "source",
-    n: int = DIVERSITY_N,
-    k: int = DIVERSITY_K,
-) -> str:
+def ngram_diversity_oracle() -> str:
     from kafka_streams_pipeline_spark.operators.dedup import _duck_hash
 
-    gram = f"array_to_string(toks[i + 1:i + {n}], ' ')"
+    gram = f"array_to_string(toks[i + 1:i + {DIVERSITY_N}], ' ')"
     est = (
-        f"CASE WHEN n_used < {k} THEN CAST(n_used AS DOUBLE) "
-        f"ELSE ({k} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
+        f"CASE WHEN n_used < {DIVERSITY_K} THEN CAST(n_used AS DOUBLE) "
+        f"ELSE ({DIVERSITY_K} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
     )
     return f"""
         WITH grams AS (
-            SELECT {group_col} AS grp,
+            SELECT source AS grp,
                    ({_duck_hash(gram)} & {(1 << 32) - 1}) AS h32
-            FROM (SELECT {group_col}, toks,
+            FROM (SELECT source, toks,
                          unnest([x FOR x IN
-                                 range(0, greatest(len(toks) - {n - 1}, 0))])
+                                 range(0, greatest(len(toks) - {DIVERSITY_N - 1}, 0))])
                              AS i
-                  FROM (SELECT {group_col}, string_split(text, ' ') AS toks
-                        FROM {table}))
+                  FROM (SELECT source, string_split(text, ' ') AS toks
+                        FROM documents))
         ),
         totals AS (
             SELECT grp, CAST(count(*) AS BIGINT) AS total_ngrams,
@@ -2809,10 +2721,10 @@ def ngram_diversity_oracle(
                        row_number() OVER (
                            PARTITION BY grp ORDER BY h32) AS rn
                 FROM (SELECT DISTINCT grp, h32 FROM grams)
-            ) WHERE rn <= {k}
+            ) WHERE rn <= {DIVERSITY_K}
             GROUP BY grp
         )
-        SELECT grp AS {group_col}, total_ngrams, distinct_exact,
+        SELECT grp AS source, total_ngrams, distinct_exact,
                round({est}, 6) AS distinct_kmv,
                CAST((distinct_exact * 1000000) // total_ngrams AS BIGINT)
                    AS diversity_ppm
@@ -2824,12 +2736,7 @@ def ngram_diversity_oracle(
 # --- Per-document keyword extraction (round 11) -----------------------------
 
 
-def keyword_extract(
-    df: DataFrame,
-    k: int = 3,
-    doc_mod: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def keyword_extract(df: DataFrame, k: int = 3, doc_mod: int = 20) -> DataFrame:
     """Per-document top-``k`` keyword terms by a tf-idf-style rarity
     weight — the per-doc companion of bm25_topk's corpus-level
     scoring, used for tagging / routing / topic bucketing in curation
@@ -2854,7 +2761,7 @@ def keyword_extract(
 
     toks = df.select(
         "doc_id",
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+        F.explode(F.split(F.col("text"), " ")).alias("term"),
     ).where(F.col("term") != "")
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")
@@ -2880,8 +2787,8 @@ def keyword_extract(
     )
 
 
-def keyword_extract_oracle(k: int = 3, doc_mod: int = 20) -> str:
-    return f"""
+def keyword_extract_oracle() -> str:
+    return """
         WITH toks AS (
             SELECT doc_id, unnest(string_split(text, ' ')) AS term
             FROM documents
@@ -2899,7 +2806,7 @@ def keyword_extract_oracle(k: int = 3, doc_mod: int = 20) -> str:
             SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
                    CAST(tf.tf * 1000000 // dfreq.df AS BIGINT) AS score_ppm
             FROM tf JOIN dfreq ON tf.term = dfreq.term
-            WHERE tf.doc_id % {doc_mod} = 0
+            WHERE tf.doc_id % 20 = 0
         ),
         ranked AS (
             SELECT doc_id, term, tf, df, score_ppm,
@@ -2909,16 +2816,11 @@ def keyword_extract_oracle(k: int = 3, doc_mod: int = 20) -> str:
             FROM scored
         )
         SELECT doc_id, term, tf, df, score_ppm, rank
-        FROM ranked WHERE rank <= {k}
+        FROM ranked WHERE rank <= 3
     """
 
 
-def token_cooccurrence(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 3,
-    top_n: int = 150,
-) -> DataFrame:
+def token_cooccurrence(df: DataFrame, window: int = 3, top_n: int = 150) -> DataFrame:
     """X5 skip-gram co-occurrence counts (the word2vec/GloVe corpus
     statistic; Mikolov et al. 2013 use exactly this ±window pair
     stream): unordered token pairs within `window` positions,
@@ -2938,7 +2840,7 @@ def token_cooccurrence(
         "greatest(element_at(ws, i), element_at(ws, j))))"
     )
     return (
-        df.withColumn("ws", F.split(F.lower(F.col(text_col)), " "))
+        df.withColumn("ws", F.split(F.lower(F.col("text")), " "))
         .where(F.expr("size(ws) >= 2"))
         .select(
             F.explode(
@@ -2954,13 +2856,13 @@ def token_cooccurrence(
     )
 
 
-def token_cooccurrence_oracle(window: int = 3, top_n: int = 150) -> str:
-    return f"""
+def token_cooccurrence_oracle() -> str:
+    return """
         SELECT pair, CAST(count(*) AS BIGINT) AS freq
         FROM (
             SELECT unnest(flatten(
                 [[least(ws[i], ws[j]) || ' ' || greatest(ws[i], ws[j])
-                  FOR j IN range(i + 1, least(i + {window}, len(ws)) + 1)]
+                  FOR j IN range(i + 1, least(i + 3, len(ws)) + 1)]
                  FOR i IN range(1, len(ws))])) AS pair
             FROM (SELECT string_split(lower(text), ' ') AS ws
                   FROM documents)
@@ -2968,5 +2870,5 @@ def token_cooccurrence_oracle(window: int = 3, top_n: int = 150) -> str:
         )
         GROUP BY pair
         ORDER BY freq DESC, pair ASC
-        LIMIT {top_n}
+        LIMIT 150
     """

@@ -349,9 +349,7 @@ MAD_APPROX_ACCURACY = 10_000
 MAD_CENSUS_MARGIN_PPM = 2_000
 
 
-def mad_outliers_approx(
-    events: DataFrame, accuracy: int = MAD_APPROX_ACCURACY
-) -> DataFrame:
+def mad_outliers_approx(events: DataFrame) -> DataFrame:
     """The 100 TB branch of :func:`mad_outliers`, certification form:
     runs the documented ``approx_percentile`` path NEXT TO the exact
     twin in the same scan and emits (a) the exact census columns —
@@ -381,7 +379,7 @@ def mad_outliers_approx(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.expr("cast(round(percentile(2 * c, 0.5)) as long)").alias("med2"),
         F.expr(
-            f"approx_percentile(2 * c, 0.5, {accuracy})"
+            f"approx_percentile(2 * c, 0.5, {MAD_APPROX_ACCURACY})"
         ).cast("long").alias("med2_apx"),
     )
     dev = c.join(F.broadcast(g1), "event_type").select(
@@ -398,7 +396,7 @@ def mad_outliers_approx(
             "mad4"
         ),
         F.expr(
-            f"approx_percentile(2 * dev2_apx, 0.5, {accuracy})"
+            f"approx_percentile(2 * dev2_apx, 0.5, {MAD_APPROX_ACCURACY})"
         ).cast("long").alias("mad4_apx"),
         F.sum((F.col("c2") < F.col("med2_apx")).cast("long")).alias(
             "med_rank_lt"
@@ -413,7 +411,7 @@ def mad_outliers_approx(
         )),
         "event_type",
     )
-    acc = accuracy
+    acc = MAD_APPROX_ACCURACY
     out = j.groupBy("event_type").agg(
         F.max("n").alias("n"),
         F.max("med2").alias("med2"),
@@ -565,13 +563,11 @@ def cusum_alarms(
     )
 
 
-def cusum_alarms_oracle(
-    k_cents: int = CUSUM_K_CENTS, h_cents: int = CUSUM_H_CENTS
-) -> str:
+def cusum_alarms_oracle() -> str:
     return f"""
         WITH d AS (
             SELECT user_id, ts, event_id,
-                   {_CENTS_DUCK} - {k_cents} AS d
+                   {_CENTS_DUCK} - {CUSUM_K_CENTS} AS d
             FROM events
         ),
         p AS (
@@ -593,11 +589,11 @@ def cusum_alarms_oracle(
         )
         SELECT user_id,
                CAST(count(*) AS BIGINT) AS n_samples,
-               CAST(sum(CASE WHEN cusum > {h_cents} THEN 1 ELSE 0 END)
+               CAST(sum(CASE WHEN cusum > {CUSUM_H_CENTS} THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_alarms,
                CAST(max(cusum) AS BIGINT) AS max_cusum,
                CAST(max(CASE WHEN rn = n
-                             THEN CASE WHEN cusum > {h_cents}
+                             THEN CASE WHEN cusum > {CUSUM_H_CENTS}
                                        THEN 1 ELSE 0 END
                         END) AS BIGINT) AS ends_in_alarm
         FROM s
@@ -608,11 +604,7 @@ def cusum_alarms_oracle(
 # --- Fused per-series scorecard (round 11) ----------------------------------
 
 
-def sensor_scorecard(
-    events: DataFrame,
-    k_cents: int = CUSUM_K_CENTS,
-    h_cents: int = CUSUM_H_CENTS,
-) -> DataFrame:
+def sensor_scorecard(events: DataFrame) -> DataFrame:
     """The serving-dashboard form: counter increase, LOCF
     time-weighted average, and CUSUM alarm census for every series in
     ONE pass. Composing the three standalone operators would scan and
@@ -644,7 +636,7 @@ def sensor_scorecard(
         )
         .withColumn("prev", F.lag("counter").over(w))
         .withColumn("dur_us", F.lead("us").over(w) - F.col("us"))
-        .withColumn("P", F.sum(F.col("c") - k_cents).over(frame))
+        .withColumn("P", F.sum(F.col("c") - CUSUM_K_CENTS).over(frame))
         .withColumn(
             "cusum", F.col("P") - F.least(F.lit(0), F.min("P").over(frame))
         )
@@ -667,7 +659,7 @@ def sensor_scorecard(
         ).alias("increase_cents"),
         F.sum("dur_us").alias("span_us"),
         F.sum(F.col("c") * F.col("dur_us")).alias("_wsum"),
-        F.sum((F.col("cusum") > h_cents).cast("long")).alias("n_alarms"),
+        F.sum((F.col("cusum") > CUSUM_H_CENTS).cast("long")).alias("n_alarms"),
         F.max("cusum").alias("max_cusum"),
     )
     return agg.where(F.col("span_us") > 0).select(
@@ -703,9 +695,7 @@ def sensor_scorecard_oracle() -> str:
 # --- Winsorized robust stats (round 11) -------------------------------------
 
 
-def winsorized_stats(
-    events: DataFrame, lo_q: float = 0.05, hi_q: float = 0.95
-) -> DataFrame:
+def winsorized_stats(events: DataFrame) -> DataFrame:
     """Winsorized per-series statistics: clip values to the
     [p_lo, p_hi] DISCRETE percentiles (inverted-CDF — both engines
     pick the smallest actual value whose cumulative fraction ≥ q, so
@@ -722,11 +712,11 @@ def winsorized_stats(
     c = events.select("event_type", F.expr(_CENTS).alias("c"))
     cuts = c.groupBy("event_type").agg(
         F.expr(
-            f"cast(percentile_disc({lo_q}) within group (order by c) "
+            "cast(percentile_disc(0.05) within group (order by c) "
             "as long)"
         ).alias("p_lo"),
         F.expr(
-            f"cast(percentile_disc({hi_q}) within group (order by c) "
+            "cast(percentile_disc(0.95) within group (order by c) "
             "as long)"
         ).alias("p_hi"),
     )
@@ -764,15 +754,15 @@ def winsorized_stats(
     )
 
 
-def winsorized_stats_oracle(lo_q: float = 0.05, hi_q: float = 0.95) -> str:
+def winsorized_stats_oracle() -> str:
     return f"""
         WITH c AS (
             SELECT event_type, {_CENTS_DUCK} AS c FROM events
         ),
         cuts AS (
             SELECT event_type,
-                   CAST(quantile_disc(c, {lo_q}) AS BIGINT) AS p_lo,
-                   CAST(quantile_disc(c, {hi_q}) AS BIGINT) AS p_hi
+                   CAST(quantile_disc(c, 0.05) AS BIGINT) AS p_lo,
+                   CAST(quantile_disc(c, 0.95) AS BIGINT) AS p_hi
             FROM c GROUP BY event_type
         ),
         clipped AS (
@@ -804,22 +794,19 @@ def winsorized_stats_oracle(lo_q: float = 0.05, hi_q: float = 0.95) -> str:
 # production default for clickstream cadence, matches zero rows
 # here and would certify nothing).
 PATTERN_WINDOW_MIN = 14_400
+PATTERN = ("click", "click", "purchase")
 
 
-def event_pattern_matches(
-    events: DataFrame,
-    pattern: tuple[str, ...] = ("click", "click", "purchase"),
-    within_minutes: int = PATTERN_WINDOW_MIN,
-) -> DataFrame:
+def event_pattern_matches(events: DataFrame) -> DataFrame:
     """CEP-style sequence detection (the MATCH_RECOGNIZE shape): per
-    user, find every CONSECUTIVE run of events matching ``pattern``
-    whose span fits ``within_minutes`` — "two clicks then a purchase
-    within the budget", the canonical conversion-pattern query.
+    user, find every CONSECUTIVE run of events matching ``PATTERN``
+    whose span fits ``PATTERN_WINDOW_MIN`` minutes — "two clicks then
+    a purchase within the budget", the canonical conversion-pattern query.
     Consecutive means adjacent in the user's event sequence (no
     events in between), the strict MATCH_RECOGNIZE default.
 
     Window-native plan: the per-user sort materializes each event's
-    next ``len(pattern)−1`` types and the span to the last of them
+    next ``len(PATTERN)−1`` types and the span to the last of them
     via lead() — the pattern test is then a per-row predicate, and
     matches aggregate per user. ONE hash partition + ONE sort, the
     same single-shuffle contract as the rest of this module; at
@@ -828,7 +815,7 @@ def event_pattern_matches(
     match count and the first match's start event id.
 
     Engine-exact: types are strings, spans integer µs."""
-    m = len(pattern)
+    m = len(PATTERN)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cols = events.select(
         "user_id",
@@ -844,10 +831,10 @@ def event_pattern_matches(
     cols = cols.withColumn(
         "span_us", F.lead("us", m - 1).over(w) - F.col("us")
     )
-    cond = F.col("event_type") == pattern[0]
+    cond = F.col("event_type") == PATTERN[0]
     for i in range(1, m):
-        cond = cond & (F.col(f"t{i}") == pattern[i])
-    cond = cond & (F.col("span_us") <= within_minutes * 60_000_000)
+        cond = cond & (F.col(f"t{i}") == PATTERN[i])
+    cond = cond & (F.col("span_us") <= PATTERN_WINDOW_MIN * 60_000_000)
     matches = cols.where(cond)
     return matches.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_matches"),
@@ -855,18 +842,15 @@ def event_pattern_matches(
     )
 
 
-def event_pattern_matches_oracle(
-    pattern: tuple[str, ...] = ("click", "click", "purchase"),
-    within_minutes: int = PATTERN_WINDOW_MIN,
-) -> str:
-    m = len(pattern)
+def event_pattern_matches_oracle() -> str:
+    m = len(PATTERN)
     lead_cols = ",\n                   ".join(
         f"lead(event_type, {i}) OVER w AS t{i}" for i in range(1, m)
     )
     conds = " AND ".join(
-        [f"event_type = '{pattern[0]}'"]
-        + [f"t{i} = '{pattern[i]}'" for i in range(1, m)]
-        + [f"span_us <= {within_minutes * 60_000_000}"]
+        [f"event_type = '{PATTERN[0]}'"]
+        + [f"t{i} = '{PATTERN[i]}'" for i in range(1, m)]
+        + [f"span_us <= {PATTERN_WINDOW_MIN * 60_000_000}"]
     )
     return f"""
         WITH seq AS (
@@ -894,7 +878,7 @@ def event_pattern_matches_oracle(
 
 def event_pattern_funnel(
     events: DataFrame,
-    pattern: tuple[str, ...] = ("click", "click", "purchase"),
+    pattern: tuple[str, ...] = PATTERN,
     within_minutes: int = PATTERN_WINDOW_MIN,
 ) -> DataFrame:
     """Skip-gap CEP: per user, count the start events from which the
@@ -960,19 +944,16 @@ def event_pattern_funnel(
     )
 
 
-def event_pattern_funnel_oracle(
-    pattern: tuple[str, ...] = ("click", "click", "purchase"),
-    within_minutes: int = PATTERN_WINDOW_MIN,
-) -> str:
+def event_pattern_funnel_oracle() -> str:
     """The identical right-to-left reverse-window recursion in DuckDB
     (chained CTEs — one per pattern step, same window text)."""
-    m = len(pattern)
+    m = len(PATTERN)
     ctes = [
         f"""
         s{m - 1} AS (
             SELECT user_id, event_id, ts, event_type,
                    epoch_us(ts) AS us,
-                   CASE WHEN event_type = '{pattern[m - 1]}'
+                   CASE WHEN event_type = '{PATTERN[m - 1]}'
                         THEN epoch_us(ts) END AS comp{m - 1}
             FROM events
         )"""
@@ -981,7 +962,7 @@ def event_pattern_funnel_oracle(
         ctes.append(f"""
         s{k} AS (
             SELECT user_id, event_id, ts, event_type, us,
-                   CASE WHEN event_type = '{pattern[k]}'
+                   CASE WHEN event_type = '{PATTERN[k]}'
                         THEN min(comp{k + 1}) OVER (
                             PARTITION BY user_id
                             ORDER BY ts DESC, event_id DESC
@@ -997,7 +978,7 @@ def event_pattern_funnel_oracle(
                CAST(min(event_id) AS BIGINT) AS first_match_event_id
         FROM s0
         WHERE comp0 IS NOT NULL
-          AND comp0 - us <= {within_minutes * 60_000_000}
+          AND comp0 - us <= {PATTERN_WINDOW_MIN * 60_000_000}
         GROUP BY user_id
     """
 
@@ -1072,7 +1053,7 @@ def sensor_gaps(
     )
 
 
-def sensor_gaps_oracle(threshold_us: int = GAP_THRESHOLD_US) -> str:
+def sensor_gaps_oracle() -> str:
     return f"""
         WITH g AS (
             SELECT user_id,
@@ -1084,11 +1065,11 @@ def sensor_gaps_oracle(threshold_us: int = GAP_THRESHOLD_US) -> str:
         a AS (
             SELECT user_id,
                    CAST(count(*) AS BIGINT) AS n_samples,
-                   CAST(sum(CASE WHEN gap_us > {threshold_us}
+                   CAST(sum(CASE WHEN gap_us > {GAP_THRESHOLD_US}
                                  THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps,
-                   CAST(max(CASE WHEN gap_us > {threshold_us}
+                   CAST(max(CASE WHEN gap_us > {GAP_THRESHOLD_US}
                                  THEN gap_us END) AS BIGINT) AS max_gap_us,
-                   CAST(sum(CASE WHEN gap_us > {threshold_us}
+                   CAST(sum(CASE WHEN gap_us > {GAP_THRESHOLD_US}
                                  THEN gap_us ELSE 0 END) AS BIGINT)
                        AS gap_us_total
             FROM g GROUP BY user_id
@@ -1107,9 +1088,7 @@ def sensor_gaps_oracle(threshold_us: int = GAP_THRESHOLD_US) -> str:
 PCTL_BIN_CENTS = 50
 
 
-def binned_percentiles(
-    events: DataFrame, bin_cents: int = PCTL_BIN_CENTS
-) -> DataFrame:
+def binned_percentiles(events: DataFrame) -> DataFrame:
     """The MIRRORABLE approximate-percentile path: fixed-width
     histogram binning with a float-free cumulative rank read — the
     production pattern when the approx path itself must be
@@ -1131,7 +1110,7 @@ def binned_percentiles(
     percentile needs the values; this needs the histogram."""
     b = events.select(
         "event_type",
-        F.expr(f"({_CENTS} div {bin_cents}) * {bin_cents}").alias("bin"),
+        F.expr(f"({_CENTS} div {PCTL_BIN_CENTS}) * {PCTL_BIN_CENTS}").alias("bin"),
     )
     hist = b.groupBy("event_type", "bin").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -1166,11 +1145,11 @@ def binned_percentiles(
     )
 
 
-def binned_percentiles_oracle(bin_cents: int = PCTL_BIN_CENTS) -> str:
+def binned_percentiles_oracle() -> str:
     return f"""
         WITH b AS (
             SELECT event_type,
-                   ({_CENTS_DUCK} // {bin_cents}) * {bin_cents} AS bin
+                   ({_CENTS_DUCK} // {PCTL_BIN_CENTS}) * {PCTL_BIN_CENTS} AS bin
             FROM events
         ),
         hist AS (
@@ -1436,7 +1415,6 @@ def lttb_downsample_prereduced(
     events: DataFrame,
     n_out: int = LTTB_BUCKETS,
     chunk_size: int = 65_536,
-    max_points_per_series: int = LTTB_MAX_POINTS_PER_SERIES,
 ) -> DataFrame:
     """LTTB with per-bucket convex-hull pre-reduction (VERDICT r12
     item 5's scale path): output BIT-IDENTICAL to lttb_downsample,
@@ -1520,10 +1498,10 @@ def lttb_downsample_prereduced(
         F.coalesce(
             F.assert_true(
                 F.count(F.lit(1)).over(w_series)
-                <= F.lit(max_points_per_series),
+                <= F.lit(LTTB_MAX_POINTS_PER_SERIES),
                 F.lit(
                     "lttb_downsample_prereduced: hull candidates exceed "
-                    f"max_points_per_series={max_points_per_series} — "
+                    f"max_points_per_series={LTTB_MAX_POINTS_PER_SERIES} — "
                     "the series is hull-degenerate (convex arc); raise "
                     "the ceiling or coarsen upstream"
                 ),
@@ -1583,13 +1561,13 @@ def lttb_downsample_prereduced(
     return small.unionByName(folded)
 
 
-def lttb_downsample_oracle(n_out: int = LTTB_BUCKETS) -> str:
+def lttb_downsample_oracle() -> str:
     """The identical selection unrolled as chained CTEs (one per
-    middle bucket — n_out is a constant, so the sequential recursion
+    middle bucket — ``LTTB_BUCKETS`` is a constant, so the sequential recursion
     needs no WITH RECURSIVE): each step picks argmax area against
     the previous selection via QUALIFY row_number, HUGEINT casts
     keep the cross-multiply exact."""
-    B = n_out - 2
+    B = LTTB_BUCKETS - 2
     ctes = [f"""
         pts AS (
             SELECT user_id, epoch_us(ts) AS us0,
@@ -1606,14 +1584,14 @@ def lttb_downsample_oracle(n_out: int = LTTB_BUCKETS) -> str:
         small AS (
             SELECT user_id, CAST(idx - 1 AS BIGINT) AS sel_order,
                    us0, y
-            FROM p WHERE n <= {n_out}
+            FROM p WHERE n <= {LTTB_BUCKETS}
         ),
         big AS (
             SELECT *, CASE WHEN idx = 1 THEN 0
                            WHEN idx = n THEN {B + 1}
                            ELSE ((idx - 2) * {B}) // (n - 2) + 1
                       END AS b
-            FROM p WHERE n > {n_out}
+            FROM p WHERE n > {LTTB_BUCKETS}
         ),
         agg AS (
             SELECT user_id, b, count(*) AS cnt,
@@ -1732,10 +1710,8 @@ def linear_attribution(
     )
 
 
-def linear_attribution_oracle(
-    within_minutes: int = ATTRIB_WINDOW_MIN,
-) -> str:
-    budget_us = within_minutes * 60_000_000
+def linear_attribution_oracle() -> str:
+    budget_us = ATTRIB_WINDOW_MIN * 60_000_000
     return f"""
         WITH e AS (
             SELECT user_id, event_id, event_type, epoch_us(ts) AS us
@@ -1887,16 +1863,16 @@ def acf_by_series(events: DataFrame, max_lag: int = ACF_MAX_LAG) -> DataFrame:
     )
 
 
-def acf_by_series_oracle(max_lag: int = ACF_MAX_LAG) -> str:
+def acf_by_series_oracle() -> str:
     lag_exprs = ", ".join(
         f"lag(d, {k}) OVER (PARTITION BY event_type ORDER BY h_ms)"
         f" AS d_lag{k}"
-        for k in range(1, max_lag + 1)
+        for k in range(1, ACF_MAX_LAG + 1)
     )
     unions = " UNION ALL ".join(
         f"SELECT event_type, den, CAST({k} AS BIGINT) AS lag,"
         f" d * d_lag{k} AS prod FROM lagged"
-        for k in range(1, max_lag + 1)
+        for k in range(1, ACF_MAX_LAG + 1)
     )
     return f"""
         WITH hourly AS (
@@ -1937,9 +1913,9 @@ CCF_MAX_LAG = 3
 HOUR_MS = 3_600_000
 
 
-def ccf_by_series(events: DataFrame, max_lag: int = CCF_MAX_LAG) -> DataFrame:
+def ccf_by_series(events: DataFrame) -> DataFrame:
     """Sample cross-correlation between every ordered pair of
-    event_type hourly series at lags −max_lag..max_lag — the
+    event_type hourly series at lags −``CCF_MAX_LAG``..``CCF_MAX_LAG`` — the
     lead/lag detector completing the ACF family (X12x measures a
     series against itself; this measures series against each other:
     "does type A's spend move 2 hours ahead of type B's?").
@@ -1965,13 +1941,13 @@ def ccf_by_series(events: DataFrame, max_lag: int = CCF_MAX_LAG) -> DataFrame:
 
     Plan: the shared hourly pre-aggregate (map-side partials) bounds
     each series to its HOUR count regardless of event volume; the x
-    side explodes ×(2·max_lag+1) shifted hours (array transform, no
+    side explodes ×(2·CCF_MAX_LAG+1) shifted hours (array transform, no
     shuffle), then ONE equi-join on the shifted hour key against the
     y side (hour keys are dense and bounded — never skewed), and one
     (et_x, et_y, lag) aggregate. No per-lag join, no window over a
     global sort."""
     hourly = hourly_cents_series(events)
-    lags = list(range(-max_lag, max_lag + 1))
+    lags = list(range(-CCF_MAX_LAG, CCF_MAX_LAG + 1))
     x = hourly.select(
         F.col("event_type").alias("et_x"),
         F.col("c").alias("cx"),
@@ -2024,7 +2000,7 @@ def ccf_by_series(events: DataFrame, max_lag: int = CCF_MAX_LAG) -> DataFrame:
     )
 
 
-def ccf_by_series_oracle(max_lag: int = CCF_MAX_LAG) -> str:
+def ccf_by_series_oracle() -> str:
     return f"""
         WITH hourly AS (
             SELECT event_type,
@@ -2034,7 +2010,7 @@ def ccf_by_series_oracle(max_lag: int = CCF_MAX_LAG) -> str:
         ),
         lags AS (
             SELECT CAST(k AS BIGINT) AS lag
-            FROM UNNEST(range(-{max_lag}, {max_lag + 1})) AS t(k)
+            FROM UNNEST(range(-{CCF_MAX_LAG}, {CCF_MAX_LAG + 1})) AS t(k)
         ),
         x AS (
             SELECT event_type AS et_x, c AS cx, lag,
@@ -2235,9 +2211,7 @@ def theil_sen_trend_windowed(
     return theil_sen_median(pairs)
 
 
-def theil_sen_trend_windowed_oracle(
-    window_hours: int = TS_WINDOW_HOURS,
-) -> str:
+def theil_sen_trend_windowed_oracle() -> str:
     return f"""
         WITH hourly AS (
             SELECT event_type,
@@ -2253,7 +2227,7 @@ def theil_sen_trend_windowed_oracle(
             FROM hourly a JOIN hourly b
               ON a.event_type = b.event_type
              AND b.h_ms > a.h_ms
-             AND b.h_ms <= a.h_ms + {int(window_hours)} * {HOUR_MS}
+             AND b.h_ms <= a.h_ms + {int(TS_WINDOW_HOURS)} * {HOUR_MS}
         ),
         ranked AS (
             SELECT event_type, slope,
@@ -2272,9 +2246,7 @@ def theil_sen_trend_windowed_oracle(
     """
 
 
-def theil_sen_windowed_scaling_stats(
-    events: DataFrame, window_hours: int = TS_WINDOW_HOURS
-) -> dict:
+def theil_sen_windowed_scaling_stats(events: DataFrame) -> dict:
     """Pair-count evidence for the windowed-vs-full claim (VERDICT
     r15 item 3's sweep row): per run, the hour-bucket count, the
     FULL estimator's pair count (Σ n_h·(n_h−1)/2 per series) and the
@@ -2289,13 +2261,12 @@ def theil_sen_windowed_scaling_stats(
             (F.col("n_hours") * (F.col("n_hours") - 1) / 2).cast("long")
         ).alias("p")
     ).collect()[0]["p"]
-    windowed_pairs = theil_sen_trend_windowed(
-        events, window_hours
-    )  # n_pairs per series is already in the result
+    # n_pairs per series is already in the result
+    windowed_pairs = theil_sen_trend_windowed(events)
     w = windowed_pairs.agg(F.sum("n_pairs").alias("p")).collect()[0]["p"]
     n_hours = hourly.count()
     return {
-        "window_hours": int(window_hours),
+        "window_hours": int(TS_WINDOW_HOURS),
         "n_hour_buckets": int(n_hours),
         "full_pairs": int(full_pairs or 0),
         "windowed_pairs": int(w or 0),
@@ -2309,9 +2280,7 @@ def theil_sen_windowed_scaling_stats(
 SEASONAL_PERIOD = 24
 
 
-def seasonal_decompose(
-    events: DataFrame, period: int = SEASONAL_PERIOD
-) -> DataFrame:
+def seasonal_decompose(events: DataFrame) -> DataFrame:
     """Classical additive decomposition of each event_type's hourly
     cents series (Box-Jenkins "classical decomposition", period 24):
     trend via the standard 2x24 centered moving average, seasonal
@@ -2353,8 +2322,8 @@ def seasonal_decompose(
     on 24 keys per series. No self-join, no global sort; the d
     products run in DECIMAL(38,0) (dt ~ 48*c ~ 1e10 at sf0.1,
     dt^2*rows ~ 1e23 << 1e38)."""
-    half = period // 2  # 12
-    full = period + 1  # 25-row full window
+    half = SEASONAL_PERIOD // 2  # 12
+    full = SEASONAL_PERIOD + 1  # 25-row full window
     hourly = hourly_cents_series(events)
     wo = Window.partitionBy("event_type").orderBy("h_ms")
     w_inner = wo.rowsBetween(-(half - 1), half - 1)
@@ -2374,14 +2343,14 @@ def seasonal_decompose(
         F.expr(
             "CAST((h_ms div 3600000) % 24 AS BIGINT)"
         ).alias("hod"),
-        (F.lit(2 * period) * F.col("c") - F.col("trend48")).alias("dt"),
+        (F.lit(2 * SEASONAL_PERIOD) * F.col("c") - F.col("trend48")).alias("dt"),
     )
     agg = dt.groupBy("event_type", "hod").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("dt").alias("s1"),
         F.sum(F.col("dt") * F.col("dt")).alias("s2"),
     )
-    scale = 2 * period  # 48
+    scale = 2 * SEASONAL_PERIOD  # 48
     sq = scale * scale  # 2304
     return agg.select(
         "event_type",
@@ -2398,10 +2367,10 @@ def seasonal_decompose(
     )
 
 
-def seasonal_decompose_oracle(period: int = SEASONAL_PERIOD) -> str:
-    half = period // 2
-    full = period + 1
-    scale = 2 * period
+def seasonal_decompose_oracle() -> str:
+    half = SEASONAL_PERIOD // 2
+    full = SEASONAL_PERIOD + 1
+    scale = 2 * SEASONAL_PERIOD
     sq = scale * scale
     return f"""
         WITH hourly AS (
@@ -2562,7 +2531,7 @@ def changepoint_amoc_oracle() -> str:
 EWMA_W = 16
 
 
-def ewma_by_series(events: DataFrame, w: int = EWMA_W) -> DataFrame:
+def ewma_by_series(events: DataFrame) -> DataFrame:
     """Exponentially weighted moving average of each event_type's
     hourly cents series — alpha = 1/2, truncated at W = 16 dyadic
     terms and renormalized over the terms PRESENT, so the smoother
@@ -2589,20 +2558,20 @@ def ewma_by_series(events: DataFrame, w: int = EWMA_W) -> DataFrame:
     hourly = hourly_cents_series(events)
     wo = Window.partitionBy("event_type").orderBy("h_ms")
     lagged = hourly.withColumn("j", F.row_number().over(wo))
-    num = F.col("c").cast("decimal(38,0)") * F.lit(1 << (w - 1))
-    for k in range(1, w):
+    num = F.col("c").cast("decimal(38,0)") * F.lit(1 << (EWMA_W - 1))
+    for k in range(1, EWMA_W):
         lagged = lagged.withColumn(
             f"l{k}", F.lag("c", k).over(wo)
         )
         num = num + F.coalesce(
             F.col(f"l{k}").cast("decimal(38,0)"), F.lit(0)
-        ) * F.lit(1 << (w - 1 - k))
+        ) * F.lit(1 << (EWMA_W - 1 - k))
     out = (
         lagged.withColumn("num", num)
         .withColumn(
             "den",
             F.expr(
-                f"{1 << w} - shiftleft(1L, {w} - least(j, {w}))"
+                f"{1 << EWMA_W} - shiftleft(1L, {EWMA_W} - least(j, {EWMA_W}))"
             ),
         )
         .select(
@@ -2617,11 +2586,11 @@ def ewma_by_series(events: DataFrame, w: int = EWMA_W) -> DataFrame:
     return out
 
 
-def ewma_by_series_oracle(w: int = EWMA_W) -> str:
-    terms = [f"c * {1 << (w - 1)}"]
-    for k in range(1, w):
+def ewma_by_series_oracle() -> str:
+    terms = [f"c * {1 << (EWMA_W - 1)}"]
+    for k in range(1, EWMA_W):
         terms.append(
-            f"COALESCE(lag(c, {k}) OVER wo, 0) * {1 << (w - 1 - k)}"
+            f"COALESCE(lag(c, {k}) OVER wo, 0) * {1 << (EWMA_W - 1 - k)}"
         )
     num = " + ".join(terms)
     return f"""
@@ -2634,8 +2603,8 @@ def ewma_by_series_oracle(w: int = EWMA_W) -> str:
         lagged AS (
             SELECT event_type, h_ms,
                    {num} AS num,
-                   {1 << w} - (1 << ({w} - least(
-                       row_number() OVER wo, {w}))) AS den
+                   {1 << EWMA_W} - (1 << ({EWMA_W} - least(
+                       row_number() OVER wo, {EWMA_W}))) AS den
             FROM hourly
             WINDOW wo AS (PARTITION BY event_type ORDER BY h_ms)
         )
@@ -2647,13 +2616,11 @@ def ewma_by_series_oracle(w: int = EWMA_W) -> str:
     """
 
 
-def seasonal_naive_backtest(
-    events: DataFrame, period: int = SEASONAL_PERIOD
-) -> DataFrame:
+def seasonal_naive_backtest(events: DataFrame) -> DataFrame:
     """Forecast backtest per event_type hourly series: the
     seasonal-naive forecaster (ŷ_t = y_{t−24}) evaluated against the
     one-step naive baseline (ŷ_t = y_{t−1}) over every row where
-    BOTH lags exist (row position > period, observed-sequence
+    BOTH lags exist (row position > ``SEASONAL_PERIOD``, observed-sequence
     convention), reported as exact integer MAEs and their
     MASE-style ratio (Hyndman & Koehler 2006 — the scale-free "is
     the daily cycle worth exploiting?" answer; ratio < 1000 milli
@@ -2679,7 +2646,7 @@ def seasonal_naive_backtest(
     wo = Window.partitionBy("event_type").orderBy("h_ms")
     lagged = (
         hourly.withColumn("l1", F.lag("c", 1).over(wo))
-        .withColumn("lp", F.lag("c", period).over(wo))
+        .withColumn("lp", F.lag("c", SEASONAL_PERIOD).over(wo))
         .where(F.col("lp").isNotNull())
     )
     agg = lagged.groupBy("event_type").agg(
@@ -2699,7 +2666,7 @@ def seasonal_naive_backtest(
     )
 
 
-def seasonal_naive_backtest_oracle(period: int = SEASONAL_PERIOD) -> str:
+def seasonal_naive_backtest_oracle() -> str:
     return f"""
         WITH hourly AS (
             SELECT event_type,
@@ -2710,7 +2677,7 @@ def seasonal_naive_backtest_oracle(period: int = SEASONAL_PERIOD) -> str:
         lagged AS (
             SELECT event_type, c,
                    lag(c, 1) OVER wo AS l1,
-                   lag(c, {period}) OVER wo AS lp
+                   lag(c, {SEASONAL_PERIOD}) OVER wo AS lp
             FROM hourly
             WINDOW wo AS (PARTITION BY event_type ORDER BY h_ms)
         )

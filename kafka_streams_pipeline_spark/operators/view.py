@@ -28,18 +28,11 @@ DEFAULT_PRECISION = 6  # ingestion/KafkaStreamsAggregator.java:39
 DEFAULT_WINDOW = "1 hour"  # ingestion/KafkaStreamsAggregator.java:99
 
 
-def build_view(
-    readings: DataFrame,
-    precision: int = DEFAULT_PRECISION,
-    window: str = DEFAULT_WINDOW,
-    ts_col: str = "ts",
-    gh_col: str = "geohash",
-    val_col: str = "tempVal",
-) -> DataFrame:
+def build_view(readings: DataFrame, precision: int = DEFAULT_PRECISION) -> DataFrame:
     """readings → view (gh, window_start, count, sum, avg).
 
     Accepts either a frame that already has an event-time column
-    ``ts_col`` or the raw reading shape with epoch-millis
+    ``ts`` or the raw reading shape with epoch-millis
     ``timestamp`` (then event time is derived, with the validity
     guard of querying/util/TSExtractor.java:11-22).
 
@@ -56,15 +49,14 @@ def build_view(
     a long holds ±9.2e18 micros ≈ ±9.2e12 in value units per
     (cell, hour) group — far above any physical sensor sum.
     """
-    if ts_col not in readings.columns:
+    if "ts" not in readings.columns:
         readings = with_event_time(readings)
-        ts_col = "ts"
     agg = (
-        readings.withColumn("gh", F.substring(F.col(gh_col), 1, precision))
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("gh"))
+        readings.withColumn("gh", F.substring(F.col("geohash"), 1, precision))
+        .groupBy(F.window(F.col("ts"), DEFAULT_WINDOW).alias("w"), F.col("gh"))
         .agg(
             F.count(F.lit(1)).alias("count"),
-            F.sum(F.round(F.col(val_col) * 1000000).cast("long")).alias("sum_u"),
+            F.sum(F.round(F.col("tempVal") * 1000000).cast("long")).alias("sum_u"),
         )
     )
     return agg.select(
@@ -76,12 +68,12 @@ def build_view(
     )
 
 
-def view_oracle_sql(readings_sql: str, precision: int = DEFAULT_PRECISION) -> str:
+def view_oracle_sql(readings_sql: str) -> str:
     """DuckDB twin of :func:`build_view` over a readings relation that
     exposes columns (ts TIMESTAMP, geohash VARCHAR, tempVal DOUBLE)."""
     return f"""
         SELECT
-            substring(geohash, 1, {precision})      AS gh,
+            substring(geohash, 1, {DEFAULT_PRECISION}) AS gh,
             date_trunc('hour', ts)                  AS window_start,
             count(*)                                AS count,
             sum(CAST(round(tempVal * 1000000) AS BIGINT)) / 1000000.0

@@ -11,7 +11,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 
-def to_message(df: DataFrame, metadata: dict[str, Any] | None = None) -> dict[str, Any]:
+def to_message(df: DataFrame) -> dict[str, Any]:
     """Collect a (small, final) query result into the envelope.
 
     Only for query RESULTS (already aggregated/limited) — never call
@@ -22,5 +22,5 @@ def to_message(df: DataFrame, metadata: dict[str, Any] | None = None) -> dict[st
     return {
         "columns": list(df.columns),
         "data": [list(r) for r in rows],
-        "metadata": dict(metadata or {"metric": "temperature"}),
+        "metadata": {"metric": "temperature"},
     }

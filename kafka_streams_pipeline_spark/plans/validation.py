@@ -49,15 +49,13 @@ def validate_geohashes(geohashes: list[str] | str) -> list[str]:
     return cells
 
 
-def validate_time_range(
-    from_ts: dt.datetime | None,
-    to_ts: dt.datetime | None,
-    now: dt.datetime | None = None,
-) -> None:
-    """from must not be in the future and must precede to
-    (QueryingService.java:64-91)."""
-    if from_ts is not None and now is not None and from_ts > now:
-        raise QueryValidationError("`from` timestamp lies in the future")
+def validate_time_range(from_ts: dt.datetime | None, to_ts: dt.datetime | None) -> None:
+    """from must precede to (QueryingService.java:64-91).
+
+    Deviation: the reference also rejects a ``from`` in the future.
+    The engine does not, since that check needs a wall clock per
+    request (SURVEY.md §7.2(d)); a future ``from`` selects no window,
+    so the request answers with empty ``data``."""
     if from_ts is not None and to_ts is not None and from_ts >= to_ts:
         raise QueryValidationError("`from` must be strictly before `to`")
 

@@ -11,9 +11,9 @@ figures below measured on 4 vCPU):
   standardize on UTC (documented deviation, SURVEY.md §2.7 F3).
 - AQE on: runtime coalescing of small shuffle partitions and skew
   join splitting — the knobs that let one plan survive sf0.001 → 100 TB.
-- shuffle.partitions: 32 unless $SPARK_GRAFT_SHUFFLE_PARTITIONS says
-  otherwise, whatever the core count (the value once matched a
-  32-core host; AQE coalesces the small partitions on smaller ones).
+- shuffle.partitions: 32, whatever the core count (the value once
+  matched a 32-core host; AQE coalesces the small partitions on
+  smaller ones).
   On a real cluster this is overridden (or left to AQE's
   initialPartitionNum).
 - Arrow enabled: any pandas interchange (mapInPandas stubs,
@@ -48,15 +48,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
 #: The engine profile's runtime-settable confs: ``get_spark`` builds
 #: its session with them, and the driver adapter (``__spark_entry__``)
 #: applies them to a session it did not build. The JVM-start-only
 #: ones (driver memory, UI, call-site capture) live in ``get_spark``.
 SESSION_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

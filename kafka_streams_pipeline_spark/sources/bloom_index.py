@@ -60,13 +60,13 @@ def _minmax_dir(store_dir: str, col: str) -> str:
     return os.path.join(store_dir, "_indexes", f"minmax_{col}")
 
 
-def _build_index(store_dir: str, version: int | None, idir: str, record) -> int:
+def _build_index(store_dir: str, idir: str, record) -> int:
     """Publish ``record(batch_dir)`` as ``idir/<batch>.json`` for each
-    batch of ``version`` that has no index file yet; return how many
-    were written."""
+    batch of the latest version that has no index file yet; return how
+    many were written."""
     os.makedirs(idir, exist_ok=True)
     built = 0
-    for d in batch_dirs(store_dir, version):
+    for d in batch_dirs(store_dir):
         out = os.path.join(idir, f"{os.path.basename(d)}.json")
         if not os.path.exists(out):
             _publish_json(out, record(d))  # refuses to clobber
@@ -75,7 +75,7 @@ def _build_index(store_dir: str, version: int | None, idir: str, record) -> int:
 
 
 def _indexed_batches(
-    store_dir: str, version: int | None, idir: str
+    store_dir: str, version: int, idir: str
 ) -> list[tuple[str, dict | None]]:
     """(batch dir, its index record or None) for each batch of
     ``version``."""
@@ -116,14 +116,9 @@ def _probe_positions(value) -> list[int]:
     ]
 
 
-def build_bloom_index(
-    spark: SparkSession,
-    store_dir: str,
-    key: str,
-    version: int | None = None,
-) -> int:
-    """Index every batch of ``version`` (default latest) that lacks
-    one; returns how many batches were newly indexed. INCREMENTAL by
+def build_bloom_index(spark: SparkSession, store_dir: str, key: str) -> int:
+    """Index every batch of the latest version that lacks one;
+    returns how many batches were newly indexed. INCREMENTAL by
     construction: batches are immutable, so an existing index file is
     forever valid and each maintenance call costs one scan of the NEW
     batches only — the same O(delta) posture as the store's upsert
@@ -155,27 +150,22 @@ def build_bloom_index(
             "bits": sorted(r["p"] for r in bits),
         }
 
-    return _build_index(store_dir, version, _index_dir(store_dir, key), record)
+    return _build_index(store_dir, _index_dir(store_dir, key), record)
 
 
-def candidate_batches(
-    store_dir: str,
-    key: str,
-    values,
-    version: int | None = None,
-) -> tuple[list[str], int]:
+def candidate_batches(store_dir: str, key: str, values) -> tuple[list[str], int]:
     """(batches that may contain ANY probe value, total batches) for
-    the version — the pruning decision. A batch WITHOUT an index
+    the latest version — the pruning decision. A batch WITHOUT an index
     file is always a candidate (correctness over pruning: an
     unindexed batch must be scanned, mirroring how engines treat
     files without stats); a batch indexed under a different modulus
     fails loudly instead of mis-pruning."""
-    dirs, total = _candidate_dirs(store_dir, key, values, version)
+    dirs, total = _candidate_dirs(store_dir, key, values, latest_version(store_dir))
     return [os.path.basename(d) for d in dirs], total
 
 
 def _candidate_dirs(
-    store_dir: str, key: str, values, version: int | None
+    store_dir: str, key: str, values, version: int
 ) -> tuple[list[str], int]:
     probe_pos = [_probe_positions(v) for v in values]
     indexed = _indexed_batches(store_dir, version, _index_dir(store_dir, key))
@@ -201,28 +191,21 @@ def lookup_corpus(
     store_dir: str,
     key: str,
     values,
-    version: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Point lookup through the Bloom index: scan ONLY the candidate
-    batches, with the IN-list predicate pushed into those scans.
+    batches of the latest version, with the IN-list predicate pushed into those scans.
     Returns (rows frame, stats) where stats records the pruning —
     ``batches_scanned`` / ``batches_total`` — so callers (and the
     certified row) can hold the index to its claim. No false
     negatives: a key's own batch always passes its own positions."""
     values = list(values)
-    if version is None:
-        version = latest_version(store_dir)
+    version = latest_version(store_dir)
     cands, total = _candidate_dirs(store_dir, key, values, version)
     stats = {"batches_scanned": len(cands), "batches_total": total}
     return _scan(spark, store_dir, version, cands, F.col(key).isin(values)), stats
 
 
-def build_minmax_index(
-    spark: SparkSession,
-    store_dir: str,
-    col: str,
-    version: int | None = None,
-) -> int:
+def build_minmax_index(spark: SparkSession, store_dir: str, col: str) -> int:
     """Per-batch min/max column stats — the RANGE-pruning complement
     to the Bloom point index (Iceberg keeps exactly this in its
     manifest entries; parquet keeps it per row group — this level
@@ -245,7 +228,7 @@ def build_minmax_index(
             "hi": row["hi"],
         }
 
-    return _build_index(store_dir, version, _minmax_dir(store_dir, col), record)
+    return _build_index(store_dir, _minmax_dir(store_dir, col), record)
 
 
 def range_scan_corpus(
@@ -254,15 +237,13 @@ def range_scan_corpus(
     col: str,
     lo,
     hi,
-    version: int | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Range query ``lo <= col <= hi`` through the min/max index:
-    scan only batches whose recorded [lo, hi] interval intersects
+    """Range query ``lo <= col <= hi`` over the latest version through
+    the min/max index: scan only batches whose recorded [lo, hi] interval intersects
     the predicate (un-indexed or all-NULL batches always scanned —
     correctness over pruning), with the range predicate pushed into
     the surviving scans. Returns (rows frame, pruning stats)."""
-    if version is None:
-        version = latest_version(store_dir)
+    version = latest_version(store_dir)
     indexed = _indexed_batches(store_dir, version, _minmax_dir(store_dir, col))
     keep = [
         d

@@ -34,7 +34,7 @@ EVENT_TYPE_GEOHASH = {
 }
 
 
-def decode_json_readings(raw: DataFrame, value_col: str = "value") -> DataFrame:
+def decode_json_readings(raw: DataFrame) -> DataFrame:
     """bytes/string JSON → typed reading columns (S2).
 
     PERMISSIVE parse: malformed JSON or missing fields → nulls, like
@@ -43,7 +43,7 @@ def decode_json_readings(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """
     return (
         raw.select(
-            F.from_json(F.col(value_col).cast("string"), READING_SCHEMA).alias("r")
+            F.from_json(F.col("value").cast("string"), READING_SCHEMA).alias("r")
         )
         .select("r.*")
     )
@@ -71,7 +71,6 @@ def kafka_reading_stream(
     spark: SparkSession,
     topic: str = "temperature-readings",
     bootstrap_servers: str = "localhost:9092",
-    starting_offsets: str = "earliest",
 ) -> DataFrame:
     """Streaming reading source (S1). Mirrors the reference's consumer
     config: subscribe + earliest reset
@@ -90,7 +89,7 @@ def kafka_reading_stream(
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "earliest")
         .load()
     )
     return decode_kafka_records(raw)

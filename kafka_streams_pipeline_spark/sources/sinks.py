@@ -36,15 +36,13 @@ _STORE_SCHEMA = StructType([*VIEW_SCHEMA.fields, StructField("ws_date", DateType
 _KEY = ["gh", "window_start"]
 
 
-def to_kafka_records(
-    readings: DataFrame, key_col: str = "sensorId"
-) -> DataFrame:
+def to_kafka_records(readings: DataFrame) -> DataFrame:
     """Encode reading rows to the Kafka wire shape (key, value) —
     value is the reference's JSON record format (README.md:11-17).
     Feed to ``df.write.format('kafka')`` / ``writeStream`` when a
     broker is configured."""
     return readings.select(
-        F.col(key_col).cast("string").alias("key"),
+        F.col("sensorId").cast("string").alias("key"),
         F.to_json(
             F.struct("timestamp", "sensorId", "geohash", "tempVal", "tempUnit")
         ).alias("value"),

@@ -52,50 +52,44 @@ def pushed_ts_range(
     df: DataFrame,
     lo: dt.datetime | None = None,
     hi: dt.datetime | None = None,
-    ts_col: str = "ts",
-    lo_inclusive: bool = True,
-    hi_inclusive: bool = False,
 ) -> DataFrame:
-    """Time-range filter that actually reaches the parquet scan.
+    """Time-range filter ``lo <= ts < hi`` that actually reaches the
+    parquet scan.
 
     Applies the predicate on the raw nanos column when present (that
     one pushes down → row-group min/max skipping), alongside the
     timestamp-typed condition for frames without a raw twin. Bounds
     are naive datetimes interpreted as UTC."""
-    raw = f"_{ts_col}_ns"
+    raw = "_ts_ns"
     conds: list[Column] = []
     if lo is not None:
         ts_lit = F.lit(lo.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
-        conds.append(F.col(ts_col) >= ts_lit if lo_inclusive else F.col(ts_col) > ts_lit)
+        conds.append(F.col("ts") >= ts_lit)
         if raw in df.columns:
-            conds.append(
-                F.col(raw) >= _utc_ns(lo) if lo_inclusive else F.col(raw) > _utc_ns(lo)
-            )
+            conds.append(F.col(raw) >= _utc_ns(lo))
     if hi is not None:
         ts_lit = F.lit(hi.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
-        conds.append(F.col(ts_col) <= ts_lit if hi_inclusive else F.col(ts_col) < ts_lit)
+        conds.append(F.col("ts") < ts_lit)
         if raw in df.columns:
-            conds.append(
-                F.col(raw) <= _utc_ns(hi) if hi_inclusive else F.col(raw) < _utc_ns(hi)
-            )
+            conds.append(F.col(raw) < _utc_ns(hi))
     for c in conds:
         df = df.where(c)
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every fixture table present under ``sf_dir``."""
+def load_tables(spark: SparkSession) -> dict[str, DataFrame]:
+    """Load every fixture table present under ``DEFAULT_SF_DIR``."""
     out: dict[str, DataFrame] = {}
     for name in FIXTURE_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
+        path = os.path.join(DEFAULT_SF_DIR, f"{name}.parquet")
         if os.path.exists(path):
-            out[name] = load_table(spark, sf_dir, name)
+            out[name] = load_table(spark, DEFAULT_SF_DIR, name)
     return out
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
+def register_views(spark: SparkSession) -> dict[str, DataFrame]:
     """Load fixture tables and register them as temp views (SQL access)."""
-    tables = load_tables(spark, sf_dir)
+    tables = load_tables(spark)
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables

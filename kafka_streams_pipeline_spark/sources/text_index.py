@@ -37,25 +37,22 @@ from pyspark.sql import functions as F
 
 from kafka_streams_pipeline_spark.sources.versioned import batch_dirs
 
+# Files per batch's posting directory: bounds write parallelism and
+# file count, never correctness — scale it with batch size.
+INDEX_PARTITIONS = 2
+
 
 def _tindex_dir(store_dir: str, text_col: str) -> str:
     return os.path.join(store_dir, "_indexes", f"text_{text_col}")
 
 
-def _build_postings(
-    spark: SparkSession,
-    store_dir: str,
-    version: int | None,
-    idir: str,
-    postings,
-    index_partitions: int,
-) -> int:
+def _build_postings(spark: SparkSession, store_dir: str, idir: str, postings) -> int:
     """Write ``postings(batch rows)`` as ``idir/<batch>/`` for each
-    batch of ``version`` that has no index directory yet (temp dir,
-    then rename); return how many were written."""
+    batch of the latest version that has no index directory yet (temp
+    dir, then rename); return how many were written."""
     os.makedirs(idir, exist_ok=True)
     built = 0
-    for d in batch_dirs(store_dir, version):
+    for d in batch_dirs(store_dir):
         b = os.path.basename(d)
         out = os.path.join(idir, b)
         if os.path.exists(out):
@@ -64,7 +61,7 @@ def _build_postings(
         shutil.rmtree(tmp, ignore_errors=True)
         (
             postings(spark.read.parquet(d))
-            .repartitionByRange(index_partitions, "token")
+            .repartitionByRange(INDEX_PARTITIONS, "token")
             .sortWithinPartitions("token")
             .write.mode("overwrite")
             .parquet(tmp)
@@ -77,17 +74,16 @@ def _build_postings(
 def _term_candidates(
     spark: SparkSession,
     store_dir: str,
-    version: int | None,
     idir: str,
     terms: list[str],
     kind: str,
 ) -> tuple[DataFrame, dict[str, str], list[str]]:
     """Stage 1 of a term search: (postings of ``terms`` tagged with
     their batch name ``_b``, {batch name: data dir} of every batch
-    whose index holds ALL ``terms``, every batch dir of the
+    whose index holds ALL ``terms``, every batch dir of the latest
     version). Raises if a batch has no ``kind`` index: a partial
     index would return partial results."""
-    dirs = batch_dirs(store_dir, version)
+    dirs = batch_dirs(store_dir)
     names = [os.path.basename(d) for d in dirs]
     missing = [b for b in names if not os.path.isdir(os.path.join(idir, b))]
     if missing:
@@ -125,34 +121,27 @@ def build_text_index(
     spark: SparkSession,
     store_dir: str,
     text_col: str = "text",
-    key: str = "doc_id",
-    version: int | None = None,
-    index_partitions: int = 2,
 ) -> int:
-    """Index every batch of ``version`` (default latest) that lacks
-    an index; returns how many batches were newly indexed. Each
+    """Index every batch of the latest version that lacks an index;
+    returns how many batches were newly indexed. Each
     batch's postings are one scan of THAT batch: lowercase
     whitespace tokens, distinct per document (`array_distinct`
     before the explode — the index answers membership, not term
     frequency), range-partitioned and sorted by token so a term
-    predicate reads only the row groups that can contain it.
-    ``index_partitions`` sizes the per-batch posting files — scale
-    it with batch size (it bounds write parallelism and file count,
-    never correctness)."""
+    predicate reads only the row groups that can contain it;
+    ``INDEX_PARTITIONS`` sizes the per-batch posting files."""
     return _build_postings(
         spark,
         store_dir,
-        version,
         _tindex_dir(store_dir, text_col),
         lambda src: src.where(F.col(text_col).isNotNull())
         .select(
-            F.col(key),
+            F.col("doc_id"),
             F.explode(
                 F.array_distinct(F.split(F.lower(F.col(text_col)), " "))
             ).alias("token"),
         )
-        .select("token", key),
-        index_partitions,
+        .select("token", "doc_id"),
     )
 
 
@@ -161,10 +150,9 @@ def search_text_index(
     store_dir: str,
     terms: list[str],
     text_col: str = "text",
-    key: str = "doc_id",
-    version: int | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Conjunctive (AND) term search through the index: returns
+    """Conjunctive (AND) term search through the latest version's
+    index: returns
     (matched payload rows, stats). Three stages, none of which
     touches text:
 
@@ -175,7 +163,7 @@ def search_text_index(
        where partition pruning is: on the driver).
     2. **Key resolution**: within candidate batches, a document
        matches when its distinct-token postings cover all terms —
-       group by key, countDistinct(token) == len(terms). Postings
+       group by doc_id, countDistinct(token) == len(terms). Postings
        only; no false positives to verify away.
     3. **Payload fetch**: scan ONLY the candidate batches' data
        directories, semi-joined to the matched keys.
@@ -186,7 +174,7 @@ def search_text_index(
         raise ValueError("empty term list")
     terms_lc = sorted({t.lower() for t in terms})
     idx, cand, dirs = _term_candidates(
-        spark, store_dir, version, _tindex_dir(store_dir, text_col),
+        spark, store_dir, _tindex_dir(store_dir, text_col),
         terms_lc, "text",
     )
     stats = {
@@ -197,12 +185,12 @@ def search_text_index(
         return _payload(spark, dirs).limit(0), stats
     matched = (
         idx.where(F.col("_b").isin(list(cand)))
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(F.countDistinct("token").alias("nt"))
         .where(F.col("nt") == len(terms_lc))
-        .select(key)
+        .select("doc_id")
     )
-    payload = _payload(spark, list(cand.values())).join(matched, key, "left_semi")
+    payload = _payload(spark, list(cand.values())).join(matched, "doc_id", "left_semi")
     return payload, stats
 
 
@@ -217,11 +205,8 @@ def build_positional_index(
     spark: SparkSession,
     store_dir: str,
     text_col: str = "text",
-    key: str = "doc_id",
-    version: int | None = None,
-    index_partitions: int = 2,
 ) -> int:
-    """Positional postings (token, key, pos) per batch — the phrase-
+    """Positional postings (token, doc_id, pos) per batch — the phrase-
     search upgrade of the membership index: token positions from ONE
     posexplode at build time mean phrase adjacency is decided from
     postings alone, text never re-tokenized. Same lifecycle contract
@@ -231,17 +216,15 @@ def build_positional_index(
     return _build_postings(
         spark,
         store_dir,
-        version,
         _pindex_dir(store_dir, text_col),
         lambda src: src.where(F.col(text_col).isNotNull())
         .select(
-            F.col(key),
+            F.col("doc_id"),
             F.posexplode(F.split(F.lower(F.col(text_col)), " ")).alias(
                 "pos", "token"
             ),
         )
-        .select("token", key, F.col("pos").cast("long").alias("pos")),
-        index_partitions,
+        .select("token", "doc_id", F.col("pos").cast("long").alias("pos")),
     )
 
 
@@ -250,10 +233,9 @@ def search_phrase(
     store_dir: str,
     phrase: list[str],
     text_col: str = "text",
-    key: str = "doc_id",
-    version: int | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Exact phrase search through the positional index: documents
+    """Exact phrase search through the latest version's positional
+    index: documents
     where the phrase tokens occur CONSECUTIVELY. Four stages, text
     touched only for the final payload fetch:
 
@@ -264,7 +246,7 @@ def search_phrase(
        adjacency filter's effect is measurable).
     3. **Adjacency verify from postings alone** — anchors = positions
        of the first term; each subsequent term i semi-joins anchors
-       on (key, anchor_pos + i = pos). Hash equi-joins only; a
+       on (doc_id, anchor_pos + i = pos). Hash equi-joins only; a
        surviving anchor IS a phrase occurrence.
     4. **Payload fetch** from candidate batches, semi-joined to the
        matched keys.
@@ -275,7 +257,7 @@ def search_phrase(
     terms_lc = [t.lower() for t in phrase]
     uniq = sorted(set(terms_lc))
     idx, cand, dirs = _term_candidates(
-        spark, store_dir, version, _pindex_dir(store_dir, text_col),
+        spark, store_dir, _pindex_dir(store_dir, text_col),
         uniq, "positional",
     )
     stats = {
@@ -288,20 +270,20 @@ def search_phrase(
         return _payload(spark, dirs).limit(0), stats
     cidx = idx.where(F.col("_b").isin(list(cand)))
     stats["candidate_docs"] = (
-        cidx.groupBy(key)
+        cidx.groupBy("doc_id")
         .agg(F.countDistinct("token").alias("nt"))
         .where(F.col("nt") == len(uniq))
         .count()
     )
     anchors = cidx.where(F.col("token") == terms_lc[0]).select(
-        F.col(key).alias("k"), F.col("pos").alias("p")
+        F.col("doc_id").alias("k"), F.col("pos").alias("p")
     )
     for i, t in enumerate(terms_lc[1:], start=1):
         nxt = cidx.where(F.col("token") == t).select(
-            F.col(key).alias("k"), (F.col("pos") - i).alias("p")
+            F.col("doc_id").alias("k"), (F.col("pos") - i).alias("p")
         )
         anchors = anchors.join(nxt, ["k", "p"], "left_semi")
-    matched = anchors.select(F.col("k").alias(key)).distinct()
+    matched = anchors.select(F.col("k").alias("doc_id")).distinct()
     stats["matched_docs"] = matched.count()
-    payload = _payload(spark, list(cand.values())).join(matched, key, "left_semi")
+    payload = _payload(spark, list(cand.values())).join(matched, "doc_id", "left_semi")
     return payload, stats

@@ -356,9 +356,7 @@ def read_corpus(
     return reader.parquet(*batch_dirs(store_dir, version))
 
 
-def checkpoint_corpus(
-    spark: SparkSession, store_dir: str, note: str = "checkpoint"
-) -> int:
+def checkpoint_corpus(spark: SparkSession, store_dir: str) -> int:
     """Consolidate the CURRENT corpus into one batch and commit it as
     the next version whose manifest references ONLY that batch — the
     transaction-log checkpoint move (Delta's checkpoint / Iceberg's
@@ -383,7 +381,7 @@ def checkpoint_corpus(
     Retry by calling checkpoint_corpus again."""
     pinned = latest_version(store_dir)
     return commit_corpus(
-        read_corpus(spark, store_dir, version=pinned), store_dir, note,
+        read_corpus(spark, store_dir, version=pinned), store_dir, "checkpoint",
         replace_history=True, expect_latest=pinned,
     )
 
@@ -723,9 +721,7 @@ def read_corpus_changes(
     return log.where(F.col(_SEQ) >= F.lit(new_from))
 
 
-def compact_corpus(
-    spark: SparkSession, store_dir: str, key: str, note: str = "compact"
-) -> int:
+def compact_corpus(spark: SparkSession, store_dir: str, key: str) -> int:
     """Fold the upsert-delta chain into ONE materialized base batch:
     the merge-on-read → copy-on-write compaction (Hudi's compactor,
     Delta's OPTIMIZE-after-MERGE). Commits the RESOLVED corpus
@@ -741,7 +737,7 @@ def compact_corpus(
     return commit_corpus(
         read_corpus_latest(spark, store_dir, key, version=pinned),
         store_dir,
-        note,
+        "compact",
         replace_history=True,
         expect_latest=pinned,
     )
@@ -757,8 +753,6 @@ def retention_rollup(
     store_dir: str,
     hour_cutoff_us: int,
     day_cutoff_us: int,
-    series_col: str = "user_id",
-    note: str = "retention-rollup",
 ) -> int:
     """TimescaleDB-style retention/downsampling policy as a store
     lifecycle operation (VERDICT r11 item 7) — the move a TSDB makes
@@ -768,7 +762,7 @@ def retention_rollup(
     batches are vacuum's job afterwards.
 
     Schema convention (multi-grain hypertable rows):
-    ``(series_col, bucket_us, grain, n, sum_cents, min_cents,
+    ``(user_id, bucket_us, grain, n, sum_cents, min_cents,
     max_cents)`` with ``grain ∈ {raw, hour, day}`` — raw samples are
     degenerate aggregates (n=1, sum=min=max). All four measures are
     ALGEBRAIC, so hour→day is a re-aggregation of hour rows, never a
@@ -827,7 +821,7 @@ def retention_rollup(
     rolled = (
         df.withColumn("__tgt", tgt)
         .select(
-            series_col,
+            "user_id",
             F.when(F.col("__tgt") == 2, F.lit("day"))
             .when(F.col("__tgt") == 1, F.lit("hour"))
             .otherwise(F.lit("raw"))
@@ -847,7 +841,7 @@ def retention_rollup(
             "min_cents",
             "max_cents",
         )
-        .groupBy(series_col, "grain", "bucket_us")
+        .groupBy("user_id", "grain", "bucket_us")
         .agg(
             F.sum("n").cast("long").alias("n"),
             F.sum("sum_cents").cast("long").alias("sum_cents"),
@@ -856,7 +850,11 @@ def retention_rollup(
         )
     )
     return commit_corpus(
-        rolled, store_dir, note, replace_history=True, expect_latest=pinned
+        rolled,
+        store_dir,
+        "retention-rollup",
+        replace_history=True,
+        expect_latest=pinned,
     )
 
 
@@ -1094,9 +1092,8 @@ def read_corpus_pruned(
     spark: SparkSession,
     store_dir: str,
     filters: dict[str, str],
-    version: int | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Read a pinned version applying EQUALITY filters with per-batch
+    """Read the latest version applying EQUALITY filters with per-batch
     partition pruning under each batch's OWN spec: a batch written
     under (source) prunes by source only (its matching directory
     still holds every lang); a batch written under (source, lang)
@@ -1112,9 +1109,7 @@ def read_corpus_pruned(
     the text/Bloom indexes)."""
     from pyspark.sql import functions as F
 
-    if version is None:
-        version = latest_version(store_dir)
-    manifest = _manifest(store_dir, version)
+    manifest = _manifest(store_dir, latest_version(store_dir))
     batches = manifest["batches"]
     specs: dict[str, list[str]] = manifest.get("specs", {})
 

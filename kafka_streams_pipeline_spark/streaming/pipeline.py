@@ -30,29 +30,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_streams_pipeline_spark.operators.view import (
-    DEFAULT_PRECISION,
-    DEFAULT_WINDOW,
-    build_view,
-)
+from kafka_streams_pipeline_spark.operators.view import build_view
 from kafka_streams_pipeline_spark.schema import READING_SCHEMA
 from kafka_streams_pipeline_spark.sources.sinks import upsert_view
 
 DEFAULT_GRACE = "24 hours"  # Kafka Streams 2.3 default retention (T3)
 
 
-def streaming_view_aggregate(
-    readings: DataFrame,
-    precision: int = DEFAULT_PRECISION,
-    window: str = DEFAULT_WINDOW,
-    grace: str = DEFAULT_GRACE,
-) -> DataFrame:
+def streaming_view_aggregate(readings: DataFrame) -> DataFrame:
     """The standing windowed aggregate over a *streaming* readings
     frame: operators/view.build_view behind the watermark (one plan
     shape → streaming/batch parity by construction)."""
-    return build_view(
-        readings.withWatermark("ts", grace), precision=precision, window=window
-    )
+    return build_view(readings.withWatermark("ts", DEFAULT_GRACE))
 
 
 def upsert_view_batch(view_dir: str):
@@ -80,8 +69,6 @@ def start_file_stream_pipeline(
     source_dir: str,
     view_dir: str,
     checkpoint_dir: str,
-    precision: int = DEFAULT_PRECISION,
-    grace: str = DEFAULT_GRACE,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     processing_time: str = "10 seconds",
@@ -144,7 +131,7 @@ def start_file_stream_pipeline(
             & (F.col("timestamp").isNull() | (F.col("timestamp") >= 0))
         )
     )
-    agg = streaming_view_aggregate(readings, precision=precision, grace=grace)
+    agg = streaming_view_aggregate(readings)
     writer = (
         agg.writeStream.outputMode("update")
         .foreachBatch(upsert_view_batch(view_dir))

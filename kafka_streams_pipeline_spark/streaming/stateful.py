@@ -99,7 +99,7 @@ def _cms_rows(item: str) -> list[int]:
     ]
 
 
-def cms_sensor_counts(readings: DataFrame, gh_col: str = "geohash") -> DataFrame:
+def cms_sensor_counts(readings: DataFrame) -> DataFrame:
     """Count-Min Sketch per geohash cell: approximate per-sensor
     reading counts in O(depth × width) memory per cell, regardless of
     sensor cardinality — the custom-sketch case Spark's built-ins
@@ -137,7 +137,7 @@ def cms_sensor_counts(readings: DataFrame, gh_col: str = "geohash") -> DataFrame
             }
         )
 
-    keyed = readings.withColumn("gh6", F.substring(F.col(gh_col), 1, 6))
+    keyed = readings.withColumn("gh6", F.substring(F.col("geohash"), 1, 6))
     return keyed.groupBy("gh6").applyInPandasWithState(
         fn,
         CMS_OUTPUT,
@@ -150,7 +150,7 @@ def cms_sensor_counts(readings: DataFrame, gh_col: str = "geohash") -> DataFrame
 CMS_CELLS_OUTPUT = "gh string, cells array<bigint>"
 
 
-def cms_cell_state(readings: DataFrame, gh_col: str = "geohash") -> DataFrame:
+def cms_cell_state(readings: DataFrame) -> DataFrame:
     """Deterministic-emission variant of :func:`cms_sensor_counts`
     (VERDICT r5 item 9): emits the FULL d×w cell matrix per touched
     key per micro-batch, so the LAST emission per key IS the final
@@ -181,7 +181,7 @@ def cms_cell_state(readings: DataFrame, gh_col: str = "geohash") -> DataFrame:
         state.update((cells,))
         yield pd.DataFrame({"gh": [key[0]], "cells": [cells]})
 
-    keyed = readings.withColumn("gh6", F.substring(F.col(gh_col), 1, 6))
+    keyed = readings.withColumn("gh6", F.substring(F.col("geohash"), 1, 6))
     return keyed.groupBy("gh6").applyInPandasWithState(
         fn,
         CMS_CELLS_OUTPUT,
@@ -255,7 +255,7 @@ def _hll_bucket_rho(item: str) -> tuple[int, int]:
     return bucket, rho
 
 
-def hll_sensor_distinct(readings: DataFrame, gh_col: str = "geohash") -> DataFrame:
+def hll_sensor_distinct(readings: DataFrame) -> DataFrame:
     """HyperLogLog register state per geohash cell, maintained across
     micro-batches — the STREAMING twin of the batch
     ``operators/sketches.hll_distinct``, sharing its md5 register
@@ -287,7 +287,7 @@ def hll_sensor_distinct(readings: DataFrame, gh_col: str = "geohash") -> DataFra
             }
         )
 
-    keyed = readings.withColumn("gh6", F.substring(F.col(gh_col), 1, 6))
+    keyed = readings.withColumn("gh6", F.substring(F.col("geohash"), 1, 6))
     return keyed.groupBy("gh6").applyInPandasWithState(
         fn,
         HLL_OUTPUT,
@@ -308,9 +308,7 @@ HIST_OUTPUT = "gh string, n_values bigint, chk1 bigint, chk2 bigint"
 HIST_STATE = "bins array<bigint>"
 
 
-def histogram_cell_state(
-    readings: DataFrame, gh_col: str = "geohash"
-) -> DataFrame:
+def histogram_cell_state(readings: DataFrame) -> DataFrame:
     """Per-cell value histogram maintained across micro-batches — the
     STREAMING twin of ``operators/sketches.histogram_sketch``,
     completing the batch/stream symmetry of the mergeable-state trio
@@ -356,7 +354,7 @@ def histogram_cell_state(
         )
 
     keyed = readings.where(F.col("tempVal").isNotNull()).select(
-        F.substring(F.col(gh_col), 1, 6).alias("gh6"),
+        F.substring(F.col("geohash"), 1, 6).alias("gh6"),
         F.round(F.col("tempVal") * 1000000).cast("long").alias("m"),
     )
     return keyed.groupBy("gh6").applyInPandasWithState(

@@ -1,5 +1,6 @@
 """Invariants of the driver-facing contract surface: query order,
-oracle coverage, and the docs derived from the registry."""
+oracle coverage, the docs derived from the registry, and the dead
+code (unused imports, options no call sets) a linter would flag."""
 
 from __future__ import annotations
 
@@ -124,3 +125,87 @@ def test_no_unused_imports():
         for hit in _unused_imports(path)
     ]
     assert not found, "unused imports:\n" + "\n".join(found)
+
+
+def _unset_options(repo: pathlib.Path) -> list[str]:
+    """Optional parameters of package functions that no call in the
+    repo sets. Calls match a function by name (through ``import ...
+    as`` aliases); a keyword argument sets its parameter, a positional
+    one every parameter at or past its index (methods shift by
+    ``self``). Names defined in two modules, and names ever called
+    with ``*``/``**``, are skipped."""
+    pkg = repo / "kafka_streams_pipeline_spark"
+    defs: dict[str, list] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        parent = {
+            child: node
+            for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                method = isinstance(parent[node], ast.ClassDef) and not any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in node.decorator_list
+                )
+                defs.setdefault(node.name, []).append((path, node, int(method)))
+    callers = [
+        p
+        for top in ("kafka_streams_pipeline_spark", "tests", "perfbench", "tools")
+        for p in sorted((repo / top).rglob("*.py"))
+    ] + [repo / "bench.py", repo / "__spark_entry__.py"]
+    keywords: dict[str, set[str]] = {}
+    max_pos: dict[str, int] = {}
+    starred: set[str] = set()
+    for path in callers:
+        tree = ast.parse(path.read_text())
+        aliases = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None)
+            name = aliases.get(name, name) or getattr(node.func, "attr", None)
+            if name is None:
+                continue
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                starred.add(name)
+            keywords.setdefault(name, set()).update(k.arg for k in node.keywords)
+            max_pos[name] = max(max_pos.get(name, 0), len(node.args))
+    found = []
+    for name, sites in defs.items():
+        if name in starred or len({path for path, _, _ in sites}) > 1:
+            continue
+        for path, node, shift in sites:
+            a = node.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            optional = [(i, p.arg) for i, p in enumerate(pos) if i >= first] + [
+                (None, p.arg)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            ]
+            for i, arg in optional:
+                by_position = i is not None and max_pos.get(name, 0) + shift > i
+                if arg not in keywords.get(name, ()) and not by_position:
+                    where = f"{path.relative_to(repo)}:{node.lineno}"
+                    found.append(f"{where} {name}({arg}=)")
+    return found
+
+
+def test_every_option_is_set_by_some_call():
+    """An optional parameter that no call in the repo sets is a knob
+    with one value: it belongs in the function body (or a module
+    constant), not in the signature and its oracle twin. Calls in
+    tests, perfbench, tools, bench.py and the driver entry count as
+    setting it."""
+    found = _unset_options(pathlib.Path(__file__).parent.parent)
+    assert not found, "optional parameters no call sets:\n" + "\n".join(found)

@@ -46,6 +46,23 @@ def test_history_endpoint(api):
     assert ts == sorted(ts)
 
 
+def test_history_future_from_answers_empty(api, spark, sf_dir):
+    """A ``from`` one day past the store's newest window is not
+    rejected (no per-request wall clock, SURVEY.md P7): it selects no
+    window, so the envelope comes back with empty ``data``."""
+    from pyspark.sql import functions as F
+
+    view = build_view(readings_from_events(load_table(spark, sf_dir, "events")))
+    newest = view.agg(F.max(F.unix_millis("window_start"))).first()[0]
+    code, msg = _get(
+        f"{api}/api/temperature/aggregate/avg/history?geohashes=u155"
+        f"&from={newest + 86_400_000}"
+    )
+    assert code == 200
+    assert msg["columns"] == ["timestamp", "avg"]
+    assert msg["data"] == []
+
+
 def test_history_interval_endpoint(api):
     code, msg = _get(
         f"{api}/api/temperature/aggregate/sum/history?geohashes=u155&interval=1week"
