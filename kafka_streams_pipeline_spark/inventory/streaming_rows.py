@@ -241,8 +241,8 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1-T6 as ONE driver row: the reference's full continuous
     topology — file-source replay → PERMISSIVE decode shape →
     event-time + 24 h watermark → 1-hour windowed count/sum/avg in
-    update mode → foreachBatch partition-upsert into the parquet view
-    store — executed as a REAL availableNow streaming job (one file
+    update mode → foreachBatch append of each batch's key versions to
+    the parquet view store — executed as a REAL availableNow streaming job (one file
     per micro-batch, checkpointed), then the standing view is read
     back and hash-compared against q_hourly_view's BATCH oracle. The
     streaming aggregate uses the identical micros-integer sum
@@ -1202,11 +1202,10 @@ def q_view_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 maintenance as a driver row: the fragmented-store →
     compaction lifecycle of the standing view. The full hourly view
     is written as two KEY-DISJOINT slices (overwrite + append — the
-    fragmentation pattern of append-mode writers and
-    high-parallelism backfills; the foreachBatch upsert itself
-    rewrites whole partitions, so its fragmentation is appends too),
+    fragmentation pattern of the foreachBatch sink, which appends one
+    file per touched partition each micro-batch, and of backfills),
     leaving multiple files per ws_date partition; then
-    sinks.compact_view rewrites one sorted file per partition (the
+    sinks.compact_view folds each partition into one sorted file (the
     layout that gives parquet min/max skipping on gh its power). The
     row FAILS LOUDLY if compaction removed no files, and the
     compacted store read back must hash-match the batch hourly-view

@@ -9,9 +9,9 @@ consume → deserialize → event-time extract → re-key to geohash cell →
 Spark shape: ``readStream`` (kafka or files) → ``from_json``/typed
 readings → ``withWatermark('ts', grace)`` →
 ``groupBy(window('ts','1 hour'), gh).agg(...)`` in **update** mode →
-``foreachBatch`` upsert into the parquet view store, whose
-ws_date-partitioned layout sources/sinks.py owns (writes, merges,
-compaction and reads).
+``foreachBatch`` append to the parquet view store, whose
+ws_date-partitioned layout sources/sinks.py owns (writes, compaction
+and the version-resolving reads).
 
 Semantics mapping (SURVEY.md §2.8):
 - T3 late data: watermark 24 h ≈ Kafka Streams 2.3's default window
@@ -32,7 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kafka_streams_pipeline_spark.operators.view import build_view
 from kafka_streams_pipeline_spark.schema import READING_SCHEMA
-from kafka_streams_pipeline_spark.sources.sinks import upsert_view
+from kafka_streams_pipeline_spark.sources.sinks import write_view
 
 DEFAULT_GRACE = "24 hours"  # Kafka Streams 2.3 default retention (T3)
 
@@ -45,12 +45,17 @@ def streaming_view_aggregate(readings: DataFrame) -> DataFrame:
 
 
 def upsert_view_batch(view_dir: str):
-    """foreachBatch function that merges each micro-batch of updated
-    (gh, window_start) aggregates into the view store
-    (sources/sinks.upsert_view)."""
+    """foreachBatch function that appends each micro-batch of updated
+    (gh, window_start) aggregates to the view store, one file per
+    ws_date partition the batch touches, in one Spark job
+    (sources/sinks.write_view). Each row is the complete aggregate of
+    a changed key, so it is that key's newest version, and the store's
+    readers take the largest-count version of each key. A micro-batch
+    re-run after a crash appends copies of rows already written, which
+    resolve away, so the sink is exactly-once without a ledger."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_view(batch_df, view_dir)
+        write_view(batch_df, view_dir, mode="append")
 
     return apply
 
@@ -103,11 +108,13 @@ def start_file_stream_pipeline(
     1.38 s; 3.39 s against 2.36 s at 333k). So the break-even is
     about 60k rows per micro-batch: pass ``defaultParallelism`` for
     streams whose batches are larger (backfills, long triggers). The
-    count also sets the width of the upsert's own shuffles (the
-    distinct-dates collect and the ``ws_date`` write), which run on
-    the stream's session. Pinned by the checkpoint at the stream's
-    first start, so an existing checkpoint keeps the count it started
-    with; results do not depend on it.
+    count also sets the width of the sink's one shuffle (the
+    ``ws_date`` repartition of the append), which runs on the stream's
+    session; the sink appends each batch's rows as new versions of
+    their keys (the largest ``count`` wins on read), so it reads
+    nothing back from the store. Pinned by the checkpoint at the
+    stream's first start, so an existing checkpoint keeps the count it
+    started with; results do not depend on it.
 
     ``rocksdb_state``: select the RocksDB state-store provider and
     turn on its changelog checkpointing (each commit uploads the

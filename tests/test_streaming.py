@@ -258,10 +258,11 @@ def test_processing_time_trigger(spark, readings_rows, tmp_path_factory):
 def test_compact_view_reduces_files_preserves_data(
     spark, sf_dir, readings_rows, tmp_path_factory
 ):
-    """A fragmented store (append-mode writers, high-parallelism
-    upserts) compacts to one sorted file per ws_date partition with
-    identical contents. (The foreachBatch upsert itself already
-    rewrites whole partitions, so fragmentation comes from appends.)"""
+    """A fragmented store (append-mode writers: the foreachBatch sink
+    appends one file per touched partition each micro-batch) compacts
+    to one sorted file per ws_date partition, and reads the same
+    before and after. The two halves here share keys, so both reads
+    resolve them by the store's rule (the largest count wins)."""
     from kafka_streams_pipeline_spark.operators import build_view
     from kafka_streams_pipeline_spark.sources.readings import readings_from_events
     from kafka_streams_pipeline_spark.sources.sinks import compact_view, write_view
@@ -311,6 +312,13 @@ def test_compact_view_over_a_streamed_store(spark, sf_dir, tmp_path_factory):
     assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 3
     write_view(build_view(readings.where(~streamed)), view, mode="append")
 
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = scheduler.nextJobId()
+    fragmented = read_view(spark, view)
+    assert scheduler.nextJobId() == first_job
+    want = sorted(tuple(r) for r in build_view(readings).collect())
+    assert sorted(tuple(r) for r in fragmented.drop("ws_date").collect()) == want
+
     beside = sorted(os.listdir(base))
     assert compact_view(spark, view) > 0
     assert sorted(os.listdir(base)) == beside
@@ -320,12 +328,130 @@ def test_compact_view_over_a_streamed_store(spark, sf_dir, tmp_path_factory):
         files = [f for f in os.listdir(os.path.join(view, p)) if f.endswith(".parquet")]
         assert len(files) == 1, (p, files)
 
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     first_job = scheduler.nextJobId()
     stored = read_view(spark, view)
     assert scheduler.nextJobId() == first_job
     got = sorted(tuple(r) for r in stored.drop("ws_date").collect())
-    assert got == sorted(tuple(r) for r in build_view(readings).collect())
+    assert got == want
+
+
+#: Four cells, one per 6-character view cell.
+_CELLS = ("u155mz82dv33", "u155m0000000", "u4pruydqqvj8", "gcpvj0duq5bq")
+
+
+def _versioned_chunks(n_chunks):
+    """``n_chunks`` chunks of readings, each with one reading per cell
+    in every other hour from 1000 to 1020 h past the epoch (two
+    ws_dates). Every chunk updates every (cell, hour) key, so each
+    micro-batch appends a new version of each key. Chunk 0 holds the
+    latest reading, so the watermark (1020 h − 24 h) moves only in the
+    first batch and drops no row, and no no-data batch follows a
+    replay's last batch."""
+    return [
+        [
+            {
+                "timestamp": (1000 + h) * 3_600_000 + (n_chunks - c) * 1000 + i,
+                "sensorId": f"s{c}{i}",
+                "geohash": cell,
+                "tempVal": 20.0 + c + h / 4 + i,
+                "tempUnit": "c",
+            }
+            for h in range(0, 21, 2)
+            for i, cell in enumerate(_CELLS)
+        ]
+        for c in range(n_chunks)
+    ]
+
+
+def _view_of(spark, chunks):
+    """build_view over the readings of ``chunks``, as sorted tuples with
+    the store's ws_date."""
+    from kafka_streams_pipeline_spark.schema import READING_SCHEMA
+
+    rows = [r for chunk in chunks for r in chunk]
+    view = build_view(spark.createDataFrame(rows, READING_SCHEMA))
+    stored = view.withColumn("ws_date", F.to_date("window_start"))
+    return sorted(tuple(r) for r in stored.collect())
+
+
+def _files_per_partition(view):
+    return {
+        p: len([f for f in os.listdir(os.path.join(view, p)) if f.endswith(".parquet")])
+        for p in os.listdir(view)
+        if p.startswith("ws_date=")
+    }
+
+
+def test_crash_rerun_stays_exactly_once(spark, tmp_path):
+    """A micro-batch that Spark re-runs after a crash appends its rows
+    a second time, and they resolve away. The replay runs three
+    availableNow batches; deleting the last commit-log entry makes the
+    restart re-run batch 2 from the same offsets and state. The store
+    then holds two copies of batch 2's rows in each partition, reads as
+    build_view of every reading, and compacts to one file per ws_date
+    with the same rows."""
+    from kafka_streams_pipeline_spark.sources.sinks import compact_view
+
+    src, view, ckpt = (str(tmp_path / d) for d in ("src", "view", "ckpt"))
+    chunks = _versioned_chunks(3)
+    _write_chunks(src, chunks)
+    q = start_file_stream_pipeline(
+        spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
+    )
+    await_replay(q, 300)
+    assert [p["numInputRows"] for p in q.recentProgress] == [len(c) for c in chunks]
+    assert set(_files_per_partition(view).values()) == {3}
+
+    commits = os.path.join(ckpt, "commits")
+    for name in ("2", ".2.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    q2 = start_file_stream_pipeline(
+        spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
+    )
+    await_replay(q2, 300)
+    assert [(p["batchId"], p["numInputRows"]) for p in q2.recentProgress] == [
+        (2, len(chunks[2]))
+    ]
+    assert set(_files_per_partition(view).values()) == {4}
+
+    want = _view_of(spark, chunks)
+    assert sorted(tuple(r) for r in read_view(spark, view).collect()) == want
+    assert compact_view(spark, view) == 3 * len(_files_per_partition(view))
+    assert set(_files_per_partition(view).values()) == {1}
+    assert sorted(tuple(r) for r in read_view(spark, view).collect()) == want
+
+
+def test_live_reads_survive_ingest(spark, tmp_path):
+    """A read_view frame built before a micro-batch still collects after
+    it, and reads the store as it was when built: the sink only adds
+    files, so every file the frame listed is still there. Each
+    micro-batch is one Spark job, and building the frame over the
+    fragmented store launches none."""
+    src, view, ckpt = (str(tmp_path / d) for d in ("src", "view", "ckpt"))
+    chunks = _versioned_chunks(4)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    for n in range(1, len(chunks) + 1):
+        before = None
+        if n > 1:
+            first_job = scheduler.nextJobId()
+            before = read_view(spark, view)
+            assert scheduler.nextJobId() == first_job
+        _write_chunks(src, chunks[n - 1 : n])
+        first_job = scheduler.nextJobId()
+        q = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
+        await_replay(q, 300)
+        batches = q.recentProgress
+        assert sum(p["numInputRows"] for p in batches) == len(chunks[n - 1])
+        assert scheduler.nextJobId() - first_job == len(batches)
+        if before is not None:
+            assert sorted(tuple(r) for r in before.collect()) == _view_of(
+                spark, chunks[: n - 1]
+            )
+    assert set(_files_per_partition(view).values()) == {len(chunks)}
+    assert sorted(tuple(r) for r in read_view(spark, view).collect()) == _view_of(
+        spark, chunks
+    )
 
 
 def test_streaming_session_window(spark, sf_dir, readings_rows, tmp_path_factory):
