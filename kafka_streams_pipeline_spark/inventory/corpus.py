@@ -35,7 +35,7 @@ from kafka_streams_pipeline_spark.sources.readings import (
 # ---------------------------------------------------------------------------
 
 
-@register("q_text_bigrams", oracle=_text.word_bigrams_oracle(100))
+@register("q_text_bigrams", oracle=_text.word_bigrams_oracle())
 def q_text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 / n-gram generation: top-100 word bigrams corpus-wide
     (higher-order array build, map-side partial counts, TakeOrdered
@@ -50,7 +50,7 @@ def q_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _text.term_stats(_t(spark, sf_dir, "documents"))
 
 
-@register("q_dedup_edit", oracle=_dedup.edit_distance_pairs_oracle(20))
+@register("q_dedup_edit", oracle=_dedup.edit_distance_pairs_oracle())
 def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: edit-distance near-dup — MinHash band candidates verified
     with levenshtein (≤20% of the longer text, integer predicate).
@@ -61,7 +61,7 @@ def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_components_alt",
-    oracle=_dedup.components_oracle(0.8),
+    oracle=_dedup.components_oracle(),
     materializes=True,
 )
 def q_dedup_components_alt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,7 +148,7 @@ def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterative 'ML' workload is still hash-certifiable against a
     fully-unrolled SQL twin. Broadcast argmin + (cell,dim) mean
     aggregate per iteration: the canonical distributed Lloyd step."""
-    return _sim.ivf_train(_t(spark, sf_dir, "embeddings"), iters=2)
+    return _sim.ivf_train(_t(spark, sf_dir, "embeddings"))
 
 
 @register("q_embed_quantize", oracle=_sim.quantize_embeddings_oracle())
@@ -1166,7 +1166,7 @@ def q_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hll_distinct",
-    oracle=_sk.hll_distinct_oracle("events", "user_id"),
+    oracle=_sk.hll_distinct_oracle(),
     bench=True,
 )
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,7 +1177,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing. One pass + a 256-key shuffle + a one-row final agg;
     registers merge associatively, so map-side partials do the work.
     See operators/sketches.py."""
-    return _sk.hll_distinct(_t(spark, sf_dir, "events"), "user_id")
+    return _sk.hll_distinct(_t(spark, sf_dir, "events"))
 
 
 @register(
@@ -1518,8 +1518,9 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized to exact cents and the NTZ order date to epoch days
     BEFORE profiling, per the repo's float-free oracle discipline,
     so min/max render identically across engines. approx=True is
-    the one-pass HLL++ form for 100 TB (differential-tested in
-    pytest and certified by q_table_profile_approx)."""
+    the one-pass HLL++ form for 100 TB (HLL++ at PROFILE_HLL_RSD;
+    differential-tested in pytest, and q_table_profile_approx runs
+    that same branch and certifies it)."""
     from kafka_streams_pipeline_spark.operators.quality import table_profile
 
     return table_profile(_orders_profile_input(spark, sf_dir))
@@ -1533,15 +1534,16 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X10i (VERDICT r11 item 2): certification of q_table_profile's
-    documented 100 TB branch — the one-pass HLL++ distinct sketch
-    (rsd 1%) runs NEXT TO the exact profile over the same normalized
-    orders projection, and the row certifies BOTH the exact columns
-    (value-for-value) and the pinned-TRUE ``hll_within_tol`` bit:
-    every per-column HLL++ estimate within 5% (a 5σ gate on the 1%-σ
-    sketch; approx_count_distinct is deterministic given the data, so
-    the bit is a fixed fact of the fixture, not a flake). The
-    plan-contract test pins the approx aggregate Expand-free /
-    single-scan. See operators/quality.table_profile_approx_certified."""
+    documented 100 TB branch — ``table_profile(approx=True)`` itself
+    (one-pass HLL++, rsd 1%) runs NEXT TO the exact profile over the
+    same normalized orders projection, and the row certifies BOTH the
+    exact columns (value-for-value) and the pinned-TRUE
+    ``hll_within_tol`` bit: every per-column distinct count of the
+    approx branch within 5% (a 5σ gate on the 1%-σ sketch;
+    approx_count_distinct is deterministic given the data, so the bit
+    is a fixed fact of the fixture, not a flake). The plan-contract
+    test pins the approx branch Expand-free / single-scan. See
+    operators/quality.table_profile_approx_certified."""
     from kafka_streams_pipeline_spark.operators.quality import (
         table_profile_approx_certified,
     )

@@ -54,17 +54,17 @@ def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_minhash",
-    oracle=_dedup.minhash_pairs_oracle(0.8),
+    oracle=_dedup.minhash_pairs_oracle(),
     bench=True,
     materializes=True,
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: MinHash+LSH near-dup pairs (shingle→minhash→band→bucket
     join→exact-Jaccard verify, threshold 0.8)."""
-    return _dedup.minhash_near_dup_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
+    return _dedup.minhash_near_dup_pairs(_t(spark, sf_dir, "documents"))
 
 
-@register("q_dedup_ngram", oracle=_dedup.ngram_pairs_oracle(0.8))
+@register("q_dedup_ngram", oracle=_dedup.ngram_pairs_oracle())
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: exact n-gram Jaccard pairs via inverted shingle index —
     the exact baseline certifying the MinHash path."""
@@ -73,7 +73,7 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_components",
-    oracle=_dedup.components_oracle(0.8),
+    oracle=_dedup.components_oracle(),
     bench=True,
     materializes=True,
 )
@@ -87,7 +87,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_leakage_safe_split",
-    oracle=_dedup.leakage_safe_split_oracle(0.8),
+    oracle=_dedup.leakage_safe_split_oracle(),
     materializes=True,
 )
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,7 +105,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection + component-keyed aggregates on top. See
     operators/dedup.leakage_safe_split."""
     return _dedup.leakage_safe_split(
-        _t(spark, sf_dir, "documents"), threshold=0.8
+        _t(spark, sf_dir, "documents")
     )
 
 
@@ -167,7 +167,7 @@ def q_dedup_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTE body)
 ORACLES["q_dedup_best_keeper"] = (
     ORACLES["q_dedup_best_keeper"]
-    .replace("{COMPONENTS}", _dedup.components_oracle(0.8))
+    .replace("{COMPONENTS}", _dedup.components_oracle())
     .replace("{QUALITY}", _text.quality_score_oracle())
 )
 
@@ -197,13 +197,13 @@ def q_dedup_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup.simhash_hamming_pairs(_t(spark, sf_dir, "documents"))
 
 
-@register("q_dedup_embed", oracle=_sim.nearest_pairs_oracle(20))
+@register("q_dedup_embed", oracle=_sim.nearest_pairs_oracle())
 def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: embedding-cosine near-dup — top-20 closest vector pairs."""
-    return _sim.nearest_pairs(_t(spark, sf_dir, "embeddings"), top_n=20)
+    return _sim.nearest_pairs(_t(spark, sf_dir, "embeddings"))
 
 
-@register("q_dedup_embed_lsh", oracle=_sim.nearest_pairs_lsh_oracle(20), bench=True)
+@register("q_dedup_embed_lsh", oracle=_sim.nearest_pairs_lsh_oracle(), bench=True)
 def q_dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 scale path: the same top-20 closest-pair query as
     q_dedup_embed, with the pair space pruned by banded hyperplane
@@ -214,25 +214,25 @@ def q_dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sim.nearest_pairs_lsh(_t(spark, sf_dir, "embeddings"), top_n=20)
 
 
-@register("q_sim_topk", oracle=_sim.topk_cosine_oracle(0, 10), bench=True)
+@register("q_sim_topk", oracle=_sim.topk_cosine_oracle(10), bench=True)
 def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3: exact brute-force cosine top-10 for a stored query vector."""
-    return _sim.topk_cosine(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
+    return _sim.topk_cosine(_t(spark, sf_dir, "embeddings"), k=10)
 
 
-@register("q_sim_ann_lsh", oracle=_sim.topk_cosine_lsh_oracle(0, 10))
+@register("q_sim_ann_lsh", oracle=_sim.topk_cosine_lsh_oracle())
 def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3: hyperplane-LSH ANN top-10 (bucket-restricted; approximate
     by construction, deterministic planes → exact oracle)."""
-    return _sim.topk_cosine_lsh(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
+    return _sim.topk_cosine_lsh(_t(spark, sf_dir, "embeddings"))
 
 
-@register("q_sim_ann_ivf", oracle=_sim.topk_cosine_ivf_oracle(0, 10))
+@register("q_sim_ann_ivf", oracle=_sim.topk_cosine_ivf_oracle())
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3: IVF-style ANN top-10 — deterministic coarse quantizer,
     nprobe=2 cell probing, exact re-rank inside probed cells (the
     second scale path beside hyperplane LSH)."""
-    return _sim.topk_cosine_ivf(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
+    return _sim.topk_cosine_ivf(_t(spark, sf_dir, "embeddings"))
 
 
 @register("q_array_stats", oracle=_sim.array_stats_oracle())
@@ -558,7 +558,7 @@ def q_media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     read. 1 video row → ceil(nf/2) frame rows — the row-expanding
     Arrow batch shape."""
     avi = _mm.avi_from_documents(_t(spark, sf_dir, "documents"))
-    return _mm.sample_avi_frames(avi, stride=2)
+    return _mm.sample_avi_frames(avi)
 
 
 @register(
@@ -973,7 +973,7 @@ def q_media_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless-codec coverage: dictionary coding (LZW) alongside
     DEFLATE (PNG) and raw (BMP/AVI)."""
     gif = _mm.gif_from_documents(_t(spark, sf_dir, "documents"))
-    return _mm.sample_gif_frames(gif, stride=2)
+    return _mm.sample_gif_frames(gif)
 
 
 def _doc_member(doc_id: int) -> str:
@@ -1060,7 +1060,7 @@ def q_media_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_ivf_pq_topk", oracle=_sim.ivf_pq_topk_oracle(0, 10))
+@register("q_ivf_pq_topk", oracle=_sim.ivf_pq_topk_oracle())
 def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed production ANN (round 9): IVF coarse restriction +
     PQ asymmetric-distance scoring — the FAISS IVFPQ serving shape.
@@ -1074,7 +1074,7 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sim.ivf_pq_topk(_t(spark, sf_dir, "embeddings"))
 
 
-@register("q_maxsim_topk", oracle=_sim.maxsim_scores_oracle(0, 5))
+@register("q_maxsim_topk", oracle=_sim.maxsim_scores_oracle())
 def q_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 late-interaction retrieval: ColBERT MaxSim top-5 — the
     label groups of the embeddings table act as multi-vector
@@ -1083,7 +1083,7 @@ def q_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized to integer micro-units before max/sum so the score is
     engine-exact. Query vectors broadcast; the corpus side never
     self-joins. See operators/similarity.maxsim_scores."""
-    return _sim.maxsim_scores(_t(spark, sf_dir, "embeddings"), query_label=0, k=5)
+    return _sim.maxsim_scores(_t(spark, sf_dir, "embeddings"))
 
 
 @register(

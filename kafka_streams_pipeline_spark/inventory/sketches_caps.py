@@ -25,7 +25,7 @@ from kafka_streams_pipeline_spark.operators import sketches as _sk
 
 
 
-@register("q_kmv_distinct", oracle=_sk.kmv_distinct_oracle("events", "user_id"))
+@register("q_kmv_distinct", oracle=_sk.kmv_distinct_oracle())
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 sketch family: KMV (k-minimum-values) distinct estimate
     over events.user_id — the set-operation-friendly complement to
@@ -34,12 +34,12 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     same k hashes; estimate is one exact-integer-backed division.
     Plan: distinct 32-bit hashes (map-side combine), global top-k
     via TakeOrderedAndProject — no full sort at any scale."""
-    return _sk.kmv_distinct(_t(spark, sf_dir, "events"), "user_id")
+    return _sk.kmv_distinct(_t(spark, sf_dir, "events"))
 
 
 @register(
     "q_cms_heavy_hitters",
-    oracle=_sk.cms_heavy_hitters_oracle("events", "event_type"),
+    oracle=_sk.cms_heavy_hitters_oracle(),
     bench=True,
 )
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,7 +510,7 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sim.pq_encode(_t(spark, sf_dir, "embeddings"))
 
 
-@register("q_pq_adc_topk", oracle=_sim.pq_adc_topk_oracle(0, 10), bench=True)
+@register("q_pq_adc_topk", oracle=_sim.pq_adc_topk_oracle(), bench=True)
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 compressed-ANN search: asymmetric distance computation —
     query at full precision against PQ codes via a broadcast

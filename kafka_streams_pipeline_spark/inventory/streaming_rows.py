@@ -90,7 +90,7 @@ def _hour_chunk_split(rows: list) -> list:
 @register(
     "q_streaming_dedup",
     oracle=f"""
-        WITH readings AS ({readings_from_events_sql('events')})
+        WITH readings AS ({readings_from_events_sql()})
         SELECT DISTINCT sensorId AS sensor_id,
                CAST(timestamp AS BIGINT) AS ts_ms
         FROM readings
@@ -116,10 +116,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _replay(
             spark, base, _readings_chunks(spark, sf_dir, inject_dups=True),
             READING_SCHEMA,
-            lambda s: streaming_dedup(
-                _readings_ts(s), keys=("sensorId", "timestamp"),
-                grace="24 hours",
-            ).select(
+            lambda s: streaming_dedup(_readings_ts(s)).select(
                 F.col("sensorId").alias("sensor_id"),
                 F.col("timestamp").alias("ts_ms"),
             ),
@@ -140,7 +137,7 @@ def _streaming_hll_oracle() -> str:
     # result a hair under an integer would flip rho cross-platform).
     _duck_rho_stream = _duck_rho("payload", width=w)
     return f"""
-        WITH readings AS ({readings_from_events_sql('events')}),
+        WITH readings AS ({readings_from_events_sql()}),
         h AS (
             SELECT substr(geohash, 1, 6) AS gh,
                    ('0x' || substr(md5(sensorId), 1, 8))::BIGINT AS h32
@@ -282,7 +279,7 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_totals",
     oracle=f"""
-        WITH readings AS ({readings_from_events_sql('events')})
+        WITH readings AS ({readings_from_events_sql()})
         SELECT sensorId,
                CAST(count(tempVal) AS BIGINT) AS n_readings,
                round(CAST(sum(CAST(round(tempVal * 1000000) AS BIGINT))
@@ -337,7 +334,7 @@ def _sensor_totals(spark: SparkSession, final: dict) -> DataFrame:
 @register(
     "q_streaming_alerts",
     oracle=f"""
-        WITH readings AS ({readings_from_events_sql('events')})
+        WITH readings AS ({readings_from_events_sql()})
         SELECT sensorId,
                CAST(sum(CASE WHEN tempVal > 150.0 THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_alerts,
@@ -637,7 +634,7 @@ def q_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_component_sizes",
     oracle=f"""
-        WITH comps AS ({_dedup.components_oracle(0.8)})
+        WITH comps AS ({_dedup.components_oracle()})
         SELECT CAST(n_members AS BIGINT) AS n_members,
                CAST(count(*) AS BIGINT) AS n_components
         FROM (
@@ -667,7 +664,7 @@ def q_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hll_by_group",
-    oracle=_sk.hll_distinct_by_oracle("events", "event_type", "user_id"),
+    oracle=_sk.hll_distinct_by_oracle(),
 )
 def q_hll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 grouped form: per-event-type HyperLogLog register state —
@@ -677,7 +674,7 @@ def q_hll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference); the float estimate formula is certified by the global
     q_hll_distinct row. See operators/sketches.py hll_distinct_by."""
     return _sk.hll_distinct_by(
-        _t(spark, sf_dir, "events"), "event_type", "user_id"
+        _t(spark, sf_dir, "events"), "event_type"
     )
 
 
@@ -803,7 +800,7 @@ def _streaming_cms_oracle() -> str:
     )
 
     return f"""
-        WITH readings AS ({readings_from_events_sql('events')}),
+        WITH readings AS ({readings_from_events_sql()}),
         h AS (
             SELECT substr(geohash, 1, 6) AS gh, sensorId
             FROM readings WHERE sensorId IS NOT NULL
@@ -1320,7 +1317,7 @@ def _view_replay(spark: SparkSession, prefix: str, chunks: list) -> DataFrame:
     "q_streaming_late_drop",
     oracle="""
         WITH readings AS ("""
-    + readings_from_events_sql("events")
+    + readings_from_events_sql()
     + """),
         cutoff AS (
             SELECT min(ts) + INTERVAL 2 HOUR AS c FROM readings
@@ -2049,7 +2046,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hll_incremental",
-    oracle=_sk.hll_distinct_oracle("events", "user_id"),
+    oracle=_sk.hll_distinct_oracle(),
     materializes=True,
 )
 def q_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2194,7 +2191,7 @@ def q_store_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_streaming_store_ingest",
     oracle=f"""
-        WITH readings AS ({readings_from_events_sql('events')})
+        WITH readings AS ({readings_from_events_sql()})
         SELECT 'sensor' AS phase, sensorId AS k,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(CAST(round(tempVal * 1000000) AS BIGINT))
@@ -2350,7 +2347,7 @@ def q_store_minmax_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_cms_incremental",
-    oracle=_sk.cms_heavy_hitters_oracle("events", "event_type"),
+    oracle=_sk.cms_heavy_hitters_oracle(),
     materializes=True,
 )
 def q_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2630,7 +2627,7 @@ def _streaming_hist_oracle() -> str:
     )
 
     return f"""
-        WITH readings AS ({readings_from_events_sql('events')}),
+        WITH readings AS ({readings_from_events_sql()}),
         b AS (
             SELECT substring(geohash, 1, 6) AS gh,
                    CASE WHEN m < {HIST_LO} THEN -1
@@ -2805,7 +2802,7 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # string shingles + post-explode codegen'd hash — same
     # restructure as batch decontaminate (round 10)
-    sh = spark_shingles_expr("toks", DECON_N)
+    sh = spark_shingles_expr(DECON_N)
     h = _spark_hash("ng_str")
     target = spark.sparkContext.defaultParallelism
     if bench.rdd.getNumPartitions() < target:
@@ -3111,11 +3108,11 @@ def q_store_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             commit_corpus(
                 docs.where(F.col("doc_id") % 8 == i), store, f"residue {i}"
             )
-        n_built = build_text_index(spark, store, "text")
-        if n_built != 8 or build_text_index(spark, store, "text") != 0:
+        n_built = build_text_index(spark, store)
+        if n_built != 8 or build_text_index(spark, store) != 0:
             raise AssertionError("index build not incremental as claimed")
         found, stats = search_text_index(
-            spark, store, ["takedownmark", "window"], "text"
+            spark, store, ["takedownmark", "window"]
         )
         rows = [
             ("row", r["doc_id"], r["n_chars"])
@@ -3255,18 +3252,18 @@ def _neardup_oracle_sql() -> str:
         duck_minhash_exprs,
     )
 
-    mh_list = "[" + ", ".join(duck_minhash_exprs("shh")) + "]"
+    mh_list = "[" + ", ".join(duck_minhash_exprs()) + "]"
     return f"""
         WITH sig AS (
             SELECT doc_id, shh, {mh_list} AS mhs FROM (
-                SELECT doc_id, {duck_hashed_shingles_expr('toks')} AS shh
+                SELECT doc_id, {duck_hashed_shingles_expr()} AS shh
                 FROM (SELECT doc_id, string_split(text, ' ') AS toks
                       FROM documents)
                 WHERE len(toks) >= {SHINGLE_N}
             )
         ),
         bands AS (
-            SELECT doc_id, unnest({duck_band_keys_expr('mhs')}) AS bk
+            SELECT doc_id, unnest({duck_band_keys_expr()}) AS bk
             FROM sig
         ),
         cand AS (
@@ -3338,24 +3335,24 @@ def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures(docs.where(F.col("doc_id") % 2 == 0))
         .select(
             F.col("doc_id").alias("ref_id"),
-            F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk"),
+            F.explode(F.expr(spark_band_keys_expr())).alias("bk"),
         )
         .distinct()
     )
 
     rows = docs.where(F.col("doc_id") % 2 == 1).collect()
     per = (len(rows) + 3) // 4
-    mh_array = "array(" + ", ".join(spark_minhash_exprs("shh")) + ")"
+    mh_array = "array(" + ", ".join(spark_minhash_exprs()) + ")"
 
     def hits(stream: DataFrame) -> DataFrame:
         stream_bands = (
             stream.withColumn("toks", F.split("text", " "))
             .where(F.expr("size(toks)") >= SHINGLE_N)
-            .withColumn("shh", F.expr(spark_hashed_shingles_expr("toks")))
+            .withColumn("shh", F.expr(spark_hashed_shingles_expr()))
             .withColumn("mhs", F.expr(mh_array))
             .select(
                 "doc_id",
-                F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk"),
+                F.explode(F.expr(spark_band_keys_expr())).alias("bk"),
             )
         )
         return stream_bands.join(ref_bands, "bk").select("doc_id", "ref_id")
@@ -4943,7 +4940,7 @@ def q_streaming_cosine_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cross leg which already had this fix).
             delta = batch_df.localCheckpoint(eager=True)
             postings = _sim._shingle_tf(
-                delta, "text", "doc_id"
+                delta, "text"
             ).localCheckpoint(eager=True)
             appended.append(postings.count())
             postings.write.mode("append").parquet(postings_dir)

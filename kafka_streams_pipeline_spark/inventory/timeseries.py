@@ -124,7 +124,7 @@ def _streaming_ohlc_oracle() -> str:
     )
 
     return f"""
-        WITH readings AS ({readings_from_events_sql('events')}),
+        WITH readings AS ({readings_from_events_sql()}),
         b AS (
             SELECT substring(geohash, 1, 6)              AS gh,
                    epoch_ms(date_trunc('hour', ts))      AS hour_ms,
@@ -216,7 +216,7 @@ def _streaming_twa_oracle() -> str:
     )
 
     return f"""
-        WITH readings AS ({readings_from_events_sql('events')}),
+        WITH readings AS ({readings_from_events_sql()}),
         t AS (
             SELECT sensorId,
                    CAST(round(tempVal * 1000000) AS BIGINT) AS v_fp,
@@ -386,7 +386,7 @@ def _streaming_cusum_oracle() -> str:
     )
 
     return f"""
-        WITH readings AS ({readings_from_events_sql('events')}),
+        WITH readings AS ({readings_from_events_sql()}),
         d AS (
             SELECT sensorId, timestamp AS t_ms,
                    CAST(round(tempVal * 1000000) AS BIGINT) - {CUSUM_K_FP}
@@ -569,11 +569,11 @@ def q_store_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             commit_corpus(
                 docs.where(F.col("doc_id") % 8 == i), store, f"residue {i}"
             )
-        n_built = build_positional_index(spark, store, "text")
-        if n_built != 8 or build_positional_index(spark, store, "text") != 0:
+        n_built = build_positional_index(spark, store)
+        if n_built != 8 or build_positional_index(spark, store) != 0:
             raise AssertionError("positional build not incremental")
         found, stats = search_phrase(
-            spark, store, ["retention", "notice"], "text"
+            spark, store, ["retention", "notice"]
         )
         rows = [
             ("row", r["doc_id"], r["n_chars"])
@@ -621,7 +621,7 @@ def _streaming_counter_oracle() -> str:
     )
 
     return f"""
-        WITH readings AS ({readings_from_events_sql('events')}),
+        WITH readings AS ({readings_from_events_sql()}),
         run AS (
             SELECT sensorId, timestamp AS t_ms,
                    sum(CAST(round(tempVal * 1000000) AS BIGINT)) OVER (

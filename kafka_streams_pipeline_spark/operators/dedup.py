@@ -82,8 +82,9 @@ def _safe_offsets(tokens: str, n: int) -> str:
     )
 
 
-def spark_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
+def spark_shingles_expr(n: int = SHINGLE_N) -> str:
     """Distinct n-token shingles from a token array column."""
+    tokens = "toks"
     parts = ", ".join(f"{tokens}[i + {j}]" for j in range(n))
     return (
         f"array_distinct(transform({_safe_offsets(tokens, n)}, "
@@ -91,7 +92,8 @@ def spark_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
     )
 
 
-def duck_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
+def duck_shingles_expr(n: int = SHINGLE_N) -> str:
+    tokens = "toks"
     return (
         f"list_distinct([array_to_string({tokens}[i:i + {n - 1}], ' ') "
         f"FOR i IN range(1, len({tokens}) - {n - 2})])"
@@ -115,19 +117,20 @@ MINHASH_MOD = 1 << 32
 assert len(MINHASH_A) == len(MINHASH_B) == NUM_HASHES
 
 
-def spark_hashed_shingles_expr(tokens: str = "toks", n: int = SHINGLE_N) -> str:
+def spark_hashed_shingles_expr() -> str:
     """Distinct md5-hashed n-token shingles (BIGINT array). Hashing
     before array_distinct keeps the set semantics identical on both
     engines even across md5 collisions."""
-    parts = ", ".join(f"{tokens}[i + {j}]" for j in range(n))
+    tokens = "toks"
+    parts = ", ".join(f"{tokens}[i + {j}]" for j in range(SHINGLE_N))
     h = _spark_hash(f"concat_ws(' ', {parts})")
     return (
-        f"array_distinct(transform({_safe_offsets(tokens, n)}, "
+        f"array_distinct(transform({_safe_offsets(tokens, SHINGLE_N)}, "
         f"i -> {h}))"
     )
 
 
-def spark_xxh_shingles_expr(tokens: str = "toks") -> str:
+def spark_xxh_shingles_expr() -> str:
     """Distinct xxhash64-hashed n-token shingles (BIGINT array) — the
     cheap engine-native twin of :func:`spark_hashed_shingles_expr`
     for operators whose OUTPUT is hash-representation-independent
@@ -135,6 +138,7 @@ def spark_xxh_shingles_expr(tokens: str = "toks") -> str:
     same verified pairs and jaccards). Never use it where hash
     values shape the result (minhash signatures, KMV sketches) —
     those stay md5 for oracle parity."""
+    tokens = "toks"
     parts = ", ".join(f"{tokens}[i + {j}]" for j in range(SHINGLE_N))
     return (
         f"array_distinct(transform({_safe_offsets(tokens, SHINGLE_N)}, "
@@ -142,7 +146,8 @@ def spark_xxh_shingles_expr(tokens: str = "toks") -> str:
     )
 
 
-def duck_hashed_shingles_expr(tokens: str = "toks") -> str:
+def duck_hashed_shingles_expr() -> str:
+    tokens = "toks"
     h = _duck_hash(f"array_to_string({tokens}[i:i + {SHINGLE_N - 1}], ' ')")
     return (
         f"list_distinct([{h} "
@@ -150,44 +155,44 @@ def duck_hashed_shingles_expr(tokens: str = "toks") -> str:
     )
 
 
-def spark_minhash_exprs(shh: str = "shh") -> list[str]:
+def spark_minhash_exprs() -> list[str]:
     """Minhash signature entries over a pre-hashed shingle array."""
     return [
-        f"array_min(transform({shh}, h -> "
+        f"array_min(transform(shh, h -> "
         f"({MINHASH_A[s]} * h + {MINHASH_B[s]}) % {MINHASH_MOD}))"
         for s in range(NUM_HASHES)
     ]
 
 
-def duck_minhash_exprs(shh: str = "shh") -> list[str]:
+def duck_minhash_exprs() -> list[str]:
     return [
         f"list_min([({MINHASH_A[s]} * h + {MINHASH_B[s]}) % {MINHASH_MOD} "
-        f"FOR h IN {shh}])"
+        f"FOR h IN shh])"
         for s in range(NUM_HASHES)
     ]
 
 
-def spark_band_keys_expr(mhs: str = "mhs") -> str:
+def spark_band_keys_expr() -> str:
     """Band keys 'b|h1:h2' — band id embedded so one explode+join
     handles all bands."""
     keys = ", ".join(
         "concat('%d|', %s)"
         % (
             b,
-            ", ':', ".join(f"{mhs}[{b * ROWS_PER_BAND + r}]" for r in range(ROWS_PER_BAND)),
+            ", ':', ".join(f"mhs[{b * ROWS_PER_BAND + r}]" for r in range(ROWS_PER_BAND)),
         )
         for b in range(NUM_BANDS)
     )
     return f"array({keys})"
 
 
-def duck_band_keys_expr(mhs: str = "mhs") -> str:
+def duck_band_keys_expr() -> str:
     keys = ", ".join(
         "concat('%d|', %s)"
         % (
             b,
             ", ':', ".join(
-                f"{mhs}[{b * ROWS_PER_BAND + r + 1}]" for r in range(ROWS_PER_BAND)
+                f"mhs[{b * ROWS_PER_BAND + r + 1}]" for r in range(ROWS_PER_BAND)
             ),
         )
         for b in range(NUM_BANDS)
@@ -207,12 +212,12 @@ DUCK_NORMALIZE = (
 SIMHASH_BITS = 32
 
 
-def spark_simhash_expr(token_hashes: str = "th") -> str:
+def spark_simhash_expr() -> str:
     """Bitwise-majority signature over per-token hashes."""
     bit = (
-        f"case when aggregate({token_hashes}, 0L, "
-        f"(acc, h) -> acc + (case when (h >> i) & 1 = 1 then 1 else -1 end)) > 0 "
-        f"then shiftleft(1L, i) else 0L end"
+        "case when aggregate(th, 0L, "
+        "(acc, h) -> acc + (case when (h >> i) & 1 = 1 then 1 else -1 end)) > 0 "
+        "then shiftleft(1L, i) else 0L end"
     )
     return (
         f"aggregate(transform(sequence(0, {SIMHASH_BITS - 1}), i -> {bit}), "
@@ -269,7 +274,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     (the NUM_HASHES signature entries are integer permutations of the
     same base hash), and every downstream exchange/verify ships
     fixed-width longs instead of shingle strings."""
-    mh_array = "array(" + ", ".join(spark_minhash_exprs("shh")) + ")"
+    mh_array = "array(" + ", ".join(spark_minhash_exprs()) + ")"
     # Signature hashing is CPU-bound per row; a small single-file
     # parquet arrives as ONE partition, which would serialize the md5
     # work on one core. Spread it before the heavy map (no-op when
@@ -280,7 +285,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     return (
         df.withColumn("toks", F.split(F.col(text_col), " "))
         .where(F.expr("size(toks)") >= SHINGLE_N)
-        .withColumn("shh", F.expr(spark_hashed_shingles_expr("toks")))
+        .withColumn("shh", F.expr(spark_hashed_shingles_expr()))
         .withColumn("mhs", F.expr(mh_array))
         .select("doc_id", "shh", "mhs")
     )
@@ -320,7 +325,6 @@ def band_candidates(
 
 def minhash_near_dup_pairs(
     df: DataFrame,
-    threshold: float = 0.8,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """X2 (MinHash+LSH): candidate pairs from banded minhash buckets,
@@ -342,7 +346,7 @@ def minhash_near_dup_pairs(
     clusters are better served by exact/normalized dedup upstream.
     The DuckDB oracle applies the identical cap, so parity holds at
     any setting; pass ``bucket_cap=None`` to disable."""
-    pairs, sig = _minhash_pairs_and_sig(df, "text", threshold, bucket_cap)
+    pairs, sig = _minhash_pairs_and_sig(df, "text", 0.8, bucket_cap)
     # Materialize the verified pairs (bounded by LSH candidates, not
     # the corpus) so the signature cache is released on return rather
     # than pinned for the session; dedup_components does the same.
@@ -367,7 +371,7 @@ def _minhash_pairs_and_sig(
     # thing you'd checkpoint to a table.
     sig = minhash_signatures(df, text_col).persist()
     bands = sig.select(
-        "doc_id", F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk")
+        "doc_id", F.explode(F.expr(spark_band_keys_expr())).alias("bk")
     )
     # ONE shuffle on bk: gather each bucket's doc ids, apply the cap
     # as a post-aggregate filter (free — same aggregate), and emit the
@@ -529,9 +533,7 @@ def dedup_components(
     )
 
 
-def connected_components_alternating(
-    pairs: DataFrame, max_iter: int = 25
-) -> DataFrame:
+def connected_components_alternating(pairs: DataFrame) -> DataFrame:
     """Connected components via the alternating large-star /
     small-star algorithm (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC'14 — public literature): each round
@@ -552,6 +554,7 @@ def connected_components_alternating(
     order-independent edge-set checksum (count + xxhash64 bit_xor;
     edges are distinct, so XOR cancellation cannot occur) —
     no extra join, just one tiny aggregate per round."""
+    max_iter = 25
     # localCheckpoint (not persist): each round's output becomes the
     # next round's input, so the logical plan would otherwise grow
     # linearly with rounds and Catalyst re-analysis would come to
@@ -626,12 +629,12 @@ def connected_components_alternating(
     return nodes.union(roots).groupBy("node").agg(F.min("comp").alias("comp"))
 
 
-def components_oracle(threshold: float = 0.8) -> str:
+def components_oracle() -> str:
     """Transitive-closure twin of dedup_components: min reachable id
     per node via a recursive CTE (exact because near-dup graphs are
     tiny at oracle scale)."""
     return f"""
-        WITH RECURSIVE pairs AS ({minhash_pairs_oracle(threshold)}),
+        WITH RECURSIVE pairs AS ({minhash_pairs_oracle()}),
         edges AS (
             SELECT id_a AS u, id_b AS v FROM pairs
             UNION
@@ -659,7 +662,7 @@ def simhash_signatures(df: DataFrame) -> DataFrame:
     return (
         df.withColumn("toks", F.expr("array_distinct(split(text, ' '))"))
         .withColumn("th", F.expr(f"transform(toks, x -> {_spark_hash('x')})"))
-        .select("doc_id", F.expr(spark_simhash_expr("th")).alias("simhash"))
+        .select("doc_id", F.expr(spark_simhash_expr()).alias("simhash"))
     )
 
 
@@ -969,7 +972,7 @@ def _containment_parts(
     sig = (
         df.withColumn("toks", F.split(F.col(text_col), " "))
         .where(F.expr("size(toks)") >= SHINGLE_N)
-        .withColumn("shh", F.expr(spark_hashed_shingles_expr("toks")))
+        .withColumn("shh", F.expr(spark_hashed_shingles_expr()))
         .select("doc_id", "shh")
         .persist()
     )
@@ -1181,7 +1184,7 @@ def containment_scaling_stats(df: DataFrame) -> dict:
 def containment_pairs_oracle() -> str:
     return f"""
         WITH sig AS (
-            SELECT doc_id, {duck_hashed_shingles_expr('toks')} AS shh
+            SELECT doc_id, {duck_hashed_shingles_expr()} AS shh
             FROM (SELECT doc_id, string_split(text, ' ') AS toks
                   FROM documents)
             WHERE len(toks) >= {SHINGLE_N}
@@ -1216,7 +1219,7 @@ _DUCK_BANDS_OK = f"""bands_ok AS (
         ),"""
 
 
-def minhash_pairs_oracle(threshold: float = 0.8) -> str:
+def minhash_pairs_oracle() -> str:
     mh_list = "[" + ", ".join(duck_minhash_exprs()) + "]"
     return f"""
         WITH toks AS (
@@ -1224,12 +1227,12 @@ def minhash_pairs_oracle(threshold: float = 0.8) -> str:
         ),
         sig AS (
             SELECT doc_id, shh, {mh_list} AS mhs FROM (
-                SELECT doc_id, {duck_hashed_shingles_expr('toks')} AS shh
+                SELECT doc_id, {duck_hashed_shingles_expr()} AS shh
                 FROM toks WHERE len(toks) >= {SHINGLE_N}
             )
         ),
         bands AS (
-            SELECT doc_id, unnest({duck_band_keys_expr('mhs')}) AS bk FROM sig
+            SELECT doc_id, unnest({duck_band_keys_expr()}) AS bk FROM sig
         ),
         {_DUCK_BANDS_OK}
         cand AS (
@@ -1245,17 +1248,17 @@ def minhash_pairs_oracle(threshold: float = 0.8) -> str:
         JOIN sig sb ON cand.id_b = sb.doc_id
         WHERE round(len(list_intersect(sa.shh, sb.shh)) * 1.0 /
                     (len(sa.shh) + len(sb.shh) - len(list_intersect(sa.shh, sb.shh))), 6)
-              >= {threshold}
+              >= 0.8
     """
 
 
-def ngram_pairs_oracle(threshold: float = 0.8) -> str:
+def ngram_pairs_oracle() -> str:
     return f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS toks FROM documents
         ),
         sig AS (
-            SELECT doc_id, {duck_hashed_shingles_expr('toks')} AS shh
+            SELECT doc_id, {duck_hashed_shingles_expr()} AS shh
             FROM toks WHERE len(toks) >= {SHINGLE_N}
         ),
         inv AS (SELECT doc_id, unnest(shh) AS shingle FROM sig),
@@ -1272,7 +1275,7 @@ def ngram_pairs_oracle(threshold: float = 0.8) -> str:
         JOIN sig sa ON id_a = sa.doc_id
         JOIN sig sb ON id_b = sb.doc_id
         WHERE round(n_common * 1.0 / (len(sa.shh) + len(sb.shh) - n_common), 6)
-              >= {threshold}
+              >= 0.8
     """
 
 
@@ -1351,7 +1354,7 @@ def edit_distance_pairs(df: DataFrame) -> DataFrame:
     verify join ships only candidate-pair texts."""
     sig = minhash_signatures(df)
     bands = sig.select(
-        "doc_id", F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk")
+        "doc_id", F.explode(F.expr(spark_band_keys_expr())).alias("bk")
     )
     cand = band_candidates(bands)
     ta = df.select(F.col("doc_id").alias("id_a"), F.col("text").alias("t_a"))
@@ -1371,20 +1374,20 @@ def edit_distance_pairs(df: DataFrame) -> DataFrame:
     )
 
 
-def edit_distance_pairs_oracle(max_rel_pct: int = 20) -> str:
-    mh_list = "[" + ", ".join(duck_minhash_exprs("shh")) + "]"
+def edit_distance_pairs_oracle() -> str:
+    mh_list = "[" + ", ".join(duck_minhash_exprs()) + "]"
     return f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS toks FROM documents
         ),
         sig AS (
             SELECT doc_id, {mh_list} AS mhs FROM (
-                SELECT doc_id, {duck_hashed_shingles_expr('toks')} AS shh
+                SELECT doc_id, {duck_hashed_shingles_expr()} AS shh
                 FROM toks WHERE len(toks) >= {SHINGLE_N}
             )
         ),
         bands AS (
-            SELECT doc_id, unnest({duck_band_keys_expr('mhs')}) AS bk FROM sig
+            SELECT doc_id, unnest({duck_band_keys_expr()}) AS bk FROM sig
         ),
         {_DUCK_BANDS_OK}
         cand AS (
@@ -1399,7 +1402,7 @@ def edit_distance_pairs_oracle(max_rel_pct: int = 20) -> str:
         JOIN documents da ON cand.id_a = da.doc_id
         JOIN documents db ON cand.id_b = db.doc_id
         WHERE levenshtein(da.text, db.text) * 100
-              <= {max_rel_pct} * greatest(length(da.text), length(db.text))
+              <= 20 * greatest(length(da.text), length(db.text))
     """
 
 
@@ -1467,7 +1470,7 @@ def _prefix_join_parts(
     sig = (
         df.withColumn("toks", F.split(F.col(text_col), " "))
         .where(F.expr("size(toks)") >= SHINGLE_N)
-        .withColumn("shh", F.expr(spark_xxh_shingles_expr("toks")))
+        .withColumn("shh", F.expr(spark_xxh_shingles_expr()))
         .select("doc_id", "shh")
         .persist()
     )
@@ -1597,7 +1600,7 @@ def minhash_scaling_stats(df: DataFrame) -> dict:
     candidate pairs vs verified pairs."""
     sig = minhash_signatures(df).persist()
     bands = sig.select(
-        "doc_id", F.explode(F.expr(spark_band_keys_expr("mhs"))).alias("bk")
+        "doc_id", F.explode(F.expr(spark_band_keys_expr())).alias("bk")
     )
     cand = band_candidates(bands).persist()
     n_cand = cand.count()
@@ -1628,7 +1631,7 @@ def prefix_jaccard_join_oracle() -> str:
             SELECT doc_id, string_split(text, ' ') AS toks FROM documents
         ),
         sig AS (
-            SELECT doc_id, {duck_hashed_shingles_expr('toks')} AS shh
+            SELECT doc_id, {duck_hashed_shingles_expr()} AS shh
             FROM toks WHERE len(toks) >= {SHINGLE_N}
         ),
         inv AS (SELECT doc_id, unnest(shh) AS shingle FROM sig),
@@ -1690,7 +1693,7 @@ def duplicated_spans(df: DataFrame, n: int = SPAN_N) -> DataFrame:
     dedup extends hash dedup (reference semantics anchor:
     ingestion/KafkaStreamsAggregator.java keys state by record,
     never by region)."""
-    grams = positional_grams(df, "text", "doc_id", n)
+    grams = positional_grams(df, n)
     dup = (
         grams.withColumn(
             "cnt", F.count(F.lit(1)).over(Window.partitionBy("gram"))
@@ -1701,17 +1704,12 @@ def duplicated_spans(df: DataFrame, n: int = SPAN_N) -> DataFrame:
     return positions_to_spans(dup, n)
 
 
-def positional_grams(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = SPAN_N,
-) -> DataFrame:
+def positional_grams(df: DataFrame, n: int = SPAN_N) -> DataFrame:
     """(doc_id, pos, gram) for every length-n token window; 1-based
     positions; docs shorter than n produce no rows."""
     ws = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("ws"),
+        "doc_id",
+        F.split(F.col("text"), " ").alias("ws"),
     )
     # slice(sequence(1, max(k,1)), 1, max(k,0)) = [1..k] or empty —
     # avoids sequence(1, 0), which Spark evaluates as DESCENDING.
@@ -1930,7 +1928,7 @@ def entity_golden_oracle() -> str:
 SPLIT_BUCKETS = (8, 9)  # train < 8 ≤ val < 9 ≤ test, of 10
 
 
-def leakage_safe_split(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+def leakage_safe_split(df: DataFrame) -> DataFrame:
     """Train/val/test split that cannot leak near-duplicates across
     splits: the split is a deterministic function of the NEAR-DUP
     COMPONENT (md5 of the component label, 8/1/1 buckets), so every
@@ -1958,6 +1956,7 @@ def leakage_safe_split(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     diagnostic, splits derived map-side from md5. At 100 TB the
     split column is a pure projection over the components output;
     no new shuffle shape beyond dedup_components itself."""
+    threshold = 0.8
     from kafka_streams_pipeline_spark.functions.hashing import md5_long
 
     comp = dedup_components(
@@ -2011,7 +2010,7 @@ def leakage_safe_split(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     )
 
 
-def leakage_safe_split_oracle(threshold: float = 0.8) -> str:
+def leakage_safe_split_oracle() -> str:
     from kafka_streams_pipeline_spark.functions.hashing import (
         md5_long_sql,
     )
@@ -2019,7 +2018,7 @@ def leakage_safe_split_oracle(threshold: float = 0.8) -> str:
     b_comp = md5_long_sql("'split:' || CAST(component AS VARCHAR)")
     b_doc = md5_long_sql("'split:' || CAST(doc_id AS VARCHAR)")
     return f"""
-        WITH RECURSIVE pairs AS ({minhash_pairs_oracle(threshold)}),
+        WITH RECURSIVE pairs AS ({minhash_pairs_oracle()}),
         edges AS (
             SELECT id_a AS u, id_b AS v FROM pairs
             UNION

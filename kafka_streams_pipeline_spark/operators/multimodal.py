@@ -637,7 +637,7 @@ VIDEO_FRAME_STATS_SCHEMA = StructType(
 )
 
 
-def sample_avi_frames(df: DataFrame, stride: int = 2) -> DataFrame:
+def sample_avi_frames(df: DataFrame) -> DataFrame:
     """REAL video frame sampling: parse the AVI container, keep every
     ``stride``-th frame, emit exact integer pixel stats per sampled
     frame (1 video row → ceil(nf/stride) frame rows). frame_ts_ms
@@ -648,7 +648,7 @@ def sample_avi_frames(df: DataFrame, stride: int = 2) -> DataFrame:
 
     def rows_of(aid, payload):
         w, h, us, frames = parse_avi(bytes(payload))
-        for idx in range(0, len(frames), stride):
+        for idx in range(0, len(frames), 2):
             yield aid, idx, idx * us // 1000, w, h, *_pixel_stats(frames[idx])
 
     return _explode(
@@ -2012,7 +2012,7 @@ def parse_gif(payload: bytes) -> tuple[int, int, int, list[np.ndarray]]:
     return w, h, delay_cs, frames
 
 
-def sample_gif_frames(df: DataFrame, stride: int = 2) -> DataFrame:
+def sample_gif_frames(df: DataFrame) -> DataFrame:
     """REAL animated-GIF frame sampling (the GIF twin of
     sample_avi_frames): parse the container, LZW-decode every
     ``stride``-th frame, emit exact integer palette-index stats per
@@ -2021,7 +2021,7 @@ def sample_gif_frames(df: DataFrame, stride: int = 2) -> DataFrame:
 
     def rows_of(aid, payload):
         w, h, delay_cs, frames = parse_gif(bytes(payload))
-        for idx in range(0, len(frames), stride):
+        for idx in range(0, len(frames), 2):
             yield aid, idx, idx * delay_cs * 10, w, h, *_pixel_stats(frames[idx])
 
     return _explode(

@@ -35,17 +35,24 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def table_profile(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    approx: bool = False,
-) -> DataFrame:
-    """Per-column profile: row count, non-null count, distinct count
-    (exact, or HLL++ when ``approx=True``), and min/max rendered as
+# HLL++ relative standard deviation of the approx profile: 0.01 gives
+# a 1% σ estimator, so the 5% certification gate of
+# ``table_profile_approx_certified`` sits at 5σ — and
+# approx_count_distinct is DETERMINISTIC given the data (hash-based
+# registers, max-merge, order-independent), so the gate is a fixed
+# fact of the dataset at the certification SFs, not a flake.
+PROFILE_HLL_RSD = 0.01
+PROFILE_HLL_TOL_PCT = 5
+
+
+def table_profile(df: DataFrame, approx: bool = False) -> DataFrame:
+    """Per-column profile of every column of ``df``: row count,
+    non-null count, distinct count (exact, or HLL++ at
+    ``PROFILE_HLL_RSD`` when ``approx=True``), and min/max rendered as
     strings (computed TYPED, cast after — binary string ordering is
     never applied to numeric columns).
 
-    Output: one row per profiled column —
+    Output: one row per column —
     ``(col_name, n_rows, n_nonnull, n_distinct, min_value,
     max_value)``. Row order is not part of the contract.
 
@@ -63,8 +70,9 @@ def table_profile(
     buffers, then a broadcast join of the two column-sized results.
     ``approx=True`` collapses back to a SINGLE pass: HLL++ register
     sketches are partial-merge-safe, so all measures ride one
-    aggregate."""
-    cols = columns or df.columns
+    aggregate. That branch is the one ``table_profile_approx_certified``
+    runs, so the driver row ``q_table_profile_approx`` certifies it."""
+    cols = df.columns
 
     def _stack_cols(expr_fn, out_names: str) -> Column:
         args = ", ".join(expr_fn(c) for c in cols)
@@ -75,7 +83,9 @@ def table_profile(
         for c in cols:
             aggs += [
                 F.count(F.col(c)).alias(f"__nn_{c}"),
-                F.approx_count_distinct(c).cast("long").alias(f"__nd_{c}"),
+                F.approx_count_distinct(c, PROFILE_HLL_RSD)
+                .cast("long")
+                .alias(f"__nd_{c}"),
                 F.min(F.col(c)).cast("string").alias(f"__min_{c}"),
                 F.max(F.col(c)).cast("string").alias(f"__max_{c}"),
             ]
@@ -136,46 +146,24 @@ def table_profile(
     )
 
 
-# HLL++ relative standard deviation for the certified approx profile:
-# 0.01 gives a 1% σ estimator, so the 5% certification gate below sits
-# at 5σ — and approx_count_distinct is DETERMINISTIC given the data
-# (hash-based registers, max-merge, order-independent), so the gate is
-# a fixed fact of the dataset at the certification SFs, not a flake.
-PROFILE_HLL_RSD = 0.01
-PROFILE_HLL_TOL_PCT = 5
-
-
 def table_profile_approx_certified(
     df: DataFrame,
     tol_pct: int = PROFILE_HLL_TOL_PCT,
 ) -> DataFrame:
     """Certification form of the ``approx=True`` 100 TB profile path:
-    runs the one-pass HLL++ distinct sketch NEXT TO the exact profile
+    runs ``table_profile(df, approx=True)`` NEXT TO the exact profile
     and emits the exact columns (oracle-matched value-for-value) plus
-    ``hll_within_tol`` — TRUE iff the HLL++ estimate is within
-    ``tol_pct`` % of the exact distinct count, integer cross-multiply
-    (|nd̂ − nd|·100 ≤ tol·nd). The oracle pins the bit TRUE: a broken
-    sketch (wrong rsd plumbing, a lost register merge) flips it and
-    hash-mismatches. At 100 TB you run only the approx aggregate —
-    one pass, no (col_name, value) dedupe shuffle; the plan-contract
-    test pins that branch Expand-free."""
-    cols = df.columns
-    exact = table_profile(df, cols)
-    apx_aggs = [
-        F.approx_count_distinct(c, PROFILE_HLL_RSD).cast("long").alias(f"__nd_{c}")
-        for c in cols
-    ]
-    stack_args = ", ".join(f"'{c}', __nd_{c}" for c in cols)
-    apx = (
-        df.agg(*apx_aggs)
-        .select(
-            F.expr(
-                f"stack({len(cols)}, {stack_args}) "
-                "AS (col_name, n_distinct_apx)"
-            )
-        )
+    ``hll_within_tol`` — TRUE iff the approx branch's HLL++ distinct
+    count is within ``tol_pct`` % of the exact one, integer
+    cross-multiply (|nd̂ − nd|·100 ≤ tol·nd). The oracle pins the bit
+    TRUE: a broken sketch (wrong rsd plumbing, a lost register merge)
+    flips it and hash-mismatches. At 100 TB you run only the approx
+    branch — one pass, no (col_name, value) dedupe shuffle; the
+    plan-contract test pins it Expand-free."""
+    apx = table_profile(df, approx=True).select(
+        "col_name", F.col("n_distinct").alias("n_distinct_apx")
     )
-    return exact.join(F.broadcast(apx), "col_name").select(
+    return table_profile(df).join(F.broadcast(apx), "col_name").select(
         "col_name",
         "n_rows",
         "n_nonnull",

@@ -108,14 +108,13 @@ def array_stats_oracle() -> str:
     """
 
 
-def topk_cosine(
-    df: DataFrame, query_vec_id: int = 0, k: int = 10
-) -> DataFrame:
+def topk_cosine(df: DataFrame, k: int = 10) -> DataFrame:
     """X3 baseline: exact top-k cosine neighbors of one stored vector.
 
     The 1-row query side is broadcast; ordering is on the ROUNDED
     similarity with vec_id tiebreak so the selected rowset is unique
     across engines."""
+    query_vec_id = 0
     q = (
         df.where(F.col("vec_id") == query_vec_id)
         .select(
@@ -138,7 +137,8 @@ def topk_cosine(
     )
 
 
-def topk_cosine_oracle(query_vec_id: int = 0, k: int = 10) -> str:
+def topk_cosine_oracle(k: int = 10) -> str:
+    query_vec_id = 0
     return f"""
         WITH q AS (
             SELECT embedding AS q_emb, {_duck_norm('embedding')} AS q_norm
@@ -154,11 +154,12 @@ def topk_cosine_oracle(query_vec_id: int = 0, k: int = 10) -> str:
     """
 
 
-def topk_cosine_lsh(df: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
+def topk_cosine_lsh(df: DataFrame) -> DataFrame:
     """X3 scale path: ANN — restrict candidates to the query's
     hyperplane-LSH bucket, then exact cosine top-k inside it.
     Approximate by construction (may return < k or miss true
     neighbors); deterministic, so exactly oracle-checkable."""
+    query_vec_id = 0
     sig = df.withColumn("sig", F.expr(_spark_signature("embedding", 64)))
     q = (
         sig.where(F.col("vec_id") == query_vec_id)
@@ -180,11 +181,12 @@ def topk_cosine_lsh(df: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFr
             ).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
+        .limit(10)
     )
 
 
-def topk_cosine_lsh_oracle(query_vec_id: int = 0, k: int = 10) -> str:
+def topk_cosine_lsh_oracle() -> str:
+    query_vec_id = 0
     return f"""
         WITH sig AS (
             SELECT vec_id, embedding,
@@ -202,7 +204,7 @@ def topk_cosine_lsh_oracle(query_vec_id: int = 0, k: int = 10) -> str:
         FROM sig, q
         WHERE vec_id != {query_vec_id} AND sig = q_sig
         ORDER BY cos_sim DESC, vec_id
-        LIMIT {k}
+        LIMIT 10
     """
 
 
@@ -214,7 +216,7 @@ def _centroid_filter() -> str:
     return f"vec_id < {N_CLUSTERS}"
 
 
-def topk_cosine_ivf(df: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
+def topk_cosine_ivf(df: DataFrame) -> DataFrame:
     """X3 scale path #2: IVF-style ANN.
 
     Coarse quantizer: the vectors with vec_id < N_CLUSTERS serve as
@@ -230,6 +232,7 @@ def topk_cosine_ivf(df: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFr
     the cell boundaries are bit-identical across engines (oracle
     exactness).
     """
+    query_vec_id = 0
     cent = df.where(F.expr(_centroid_filter())).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("c_emb"),
@@ -281,11 +284,12 @@ def topk_cosine_ivf(df: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFr
             ).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
+        .limit(10)
     )
 
 
-def topk_cosine_ivf_oracle(query_vec_id: int = 0, k: int = 10) -> str:
+def topk_cosine_ivf_oracle() -> str:
+    query_vec_id = 0
     return f"""
         WITH cent AS (
             SELECT vec_id AS cent_id, embedding AS c_emb,
@@ -321,11 +325,11 @@ def topk_cosine_ivf_oracle(query_vec_id: int = 0, k: int = 10) -> str:
         CROSS JOIN q
         WHERE e.vec_id != {query_vec_id}
         ORDER BY cos_sim DESC, e.vec_id
-        LIMIT {k}
+        LIMIT 10
     """
 
 
-def nearest_pairs(df: DataFrame, top_n: int = 20) -> DataFrame:
+def nearest_pairs(df: DataFrame) -> DataFrame:
     """X2 (embedding near-dup): the top-N closest vector pairs by
     cosine. Exact all-pairs — correct at test scale; at 100 TB the
     LSH bucket join (same signatures as topk_cosine_lsh) prunes the
@@ -356,11 +360,11 @@ def nearest_pairs(df: DataFrame, top_n: int = 20) -> DataFrame:
             ).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "id_a", "id_b")
-        .limit(top_n)
+        .limit(20)
     )
 
 
-def nearest_pairs_oracle(top_n: int = 20) -> str:
+def nearest_pairs_oracle() -> str:
     return f"""
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                round({_duck_dot('a.embedding', 'b.embedding')} /
@@ -368,7 +372,7 @@ def nearest_pairs_oracle(top_n: int = 20) -> str:
                    AS cos_sim
         FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
         ORDER BY cos_sim DESC, id_a, id_b
-        LIMIT {top_n}
+        LIMIT 20
     """
 
 
@@ -522,7 +526,7 @@ def nearest_pairs_lsh(df: DataFrame, top_n: int = 20) -> DataFrame:
     )
 
 
-def nearest_pairs_lsh_oracle(top_n: int = 20) -> str:
+def nearest_pairs_lsh_oracle() -> str:
     key_rows = " UNION ALL ".join(
         f"SELECT vec_id, '{t}:' || CAST({_duck_table_sig('embedding', t, 64)} AS VARCHAR) AS bk "
         f"FROM embeddings"
@@ -547,7 +551,7 @@ def nearest_pairs_lsh_oracle(top_n: int = 20) -> str:
         JOIN embeddings ea ON ea.vec_id = id_a
         JOIN embeddings eb ON eb.vec_id = id_b
         ORDER BY cos_sim DESC, id_a, id_b
-        LIMIT {top_n}
+        LIMIT 20
     """
 
 
@@ -555,7 +559,7 @@ def nearest_pairs_lsh_oracle(top_n: int = 20) -> str:
 KM_FP = 1_000_000
 
 
-def ivf_train(df: DataFrame, iters: int = 2) -> DataFrame:
+def ivf_train(df: DataFrame) -> DataFrame:
     """X3 (index training): k-means Lloyd iterations for the IVF
     coarse quantizer, in EXACT integer arithmetic so the result is
     engine-portable: components quantize to micro-units (per-element
@@ -570,6 +574,7 @@ def ivf_train(df: DataFrame, iters: int = 2) -> DataFrame:
 
     Returns per-cell stats of the FINAL assignment: member count,
     fixed-point centroid L1 fingerprint, min/max member id."""
+    iters = 2
     fp = df.select(
         "vec_id",
         F.expr(
@@ -1200,14 +1205,14 @@ def pq_adc_topk(
     )
 
 
-def pq_adc_topk_oracle(query_vec_id: int = 0, k: int = 10) -> str:
+def pq_adc_topk_oracle() -> str:
     return f"""
         WITH {_pq_oracle_prelude()},
         tbl AS (
             SELECT cb.m, cb.cid,
                    sum((q.x - cb.c) * (q.x - cb.c)) AS tdist
             FROM subs q JOIN cb ON q.m = cb.m AND q.j = cb.j
-            WHERE q.vec_id = {query_vec_id}
+            WHERE q.vec_id = 0
             GROUP BY cb.m, cb.cid
         )
         SELECT codes.vec_id,
@@ -1215,7 +1220,7 @@ def pq_adc_topk_oracle(query_vec_id: int = 0, k: int = 10) -> str:
         FROM codes JOIN tbl ON codes.m = tbl.m AND codes.code = tbl.cid
         GROUP BY codes.vec_id
         ORDER BY sum(tbl.tdist), codes.vec_id
-        LIMIT {k}
+        LIMIT 10
     """
 
 
@@ -1436,7 +1441,8 @@ def ivf_pq_topk(df: DataFrame) -> DataFrame:
     )
 
 
-def ivf_pq_topk_oracle(query_vec_id: int = 0, k: int = 10) -> str:
+def ivf_pq_topk_oracle() -> str:
+    query_vec_id = 0
     return f"""
         WITH cent AS (
             SELECT vec_id AS cent_id, embedding AS c_emb,
@@ -1476,16 +1482,14 @@ def ivf_pq_topk_oracle(query_vec_id: int = 0, k: int = 10) -> str:
         WHERE codes.vec_id != {query_vec_id}
         GROUP BY codes.vec_id
         ORDER BY sum(tbl.tdist), codes.vec_id
-        LIMIT {k}
+        LIMIT 10
     """
 
 
 # --- MaxSim late interaction (ColBERT) --------------------------------------
 
 
-def maxsim_scores(
-    df: DataFrame, query_label: int = 0, k: int = 5
-) -> DataFrame:
+def maxsim_scores(df: DataFrame) -> DataFrame:
     """ColBERT-style LATE-INTERACTION retrieval over multi-vector
     documents: score(Q, D) = Σ_{q∈Q} max_{d∈D} cos(q, d) (Khattab &
     Zaharia 2020). Documents are the ``label`` groups of the
@@ -1504,6 +1508,7 @@ def maxsim_scores(
     map-side-partials the per-(label, q) max, and only
     register-sized (label, q_id, best) rows reach the two
     aggregation exchanges. The corpus embeddings never self-join."""
+    query_label = 0
     q = df.where(F.col("label") == query_label).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
@@ -1532,11 +1537,12 @@ def maxsim_scores(
             "n_query_vecs",
         )
         .orderBy(F.col("maxsim_micro").desc(), "label")
-        .limit(k)
+        .limit(5)
     )
 
 
-def maxsim_scores_oracle(query_label: int = 0, k: int = 5) -> str:
+def maxsim_scores_oracle() -> str:
+    query_label = 0
     sim_micro = (
         f"CAST(round(({_duck_dot('e.embedding', 'q.embedding')} / "
         f"({_duck_norm('e.embedding')} * {_duck_norm('q.embedding')})) "
@@ -1555,7 +1561,7 @@ def maxsim_scores_oracle(query_label: int = 0, k: int = 5) -> str:
         FROM per_q
         GROUP BY label
         ORDER BY maxsim_micro DESC, label
-        LIMIT {k}
+        LIMIT 5
     """
 
 
@@ -1845,7 +1851,7 @@ def hard_negatives_oracle() -> str:
 # --- Hybrid retrieval: reciprocal-rank fusion (round 11) --------------------
 
 
-def rrf_fusion(docs: DataFrame, vecs: DataFrame, k: int = 10) -> DataFrame:
+def rrf_fusion(docs: DataFrame, vecs: DataFrame) -> DataFrame:
     """Hybrid lexical+dense retrieval via reciprocal-rank fusion
     (Cormack, Clarke & Buettcher, SIGIR'09 — public literature): fuse
     the BM25 top-``k_each`` list over ``documents`` with the cosine
@@ -1860,7 +1866,7 @@ def rrf_fusion(docs: DataFrame, vecs: DataFrame, k: int = 10) -> DataFrame:
     already-certified primitives (text.bm25_topk binds its rank;
     cosine ranks are a window over the rounded similarity with id
     tiebreak). Missing-from-one-list contributes 0, the standard RRF
-    convention. Final top-``k`` orders by (score_fp DESC, id) with
+    convention. Final top-10 orders by (score_fp DESC, id) with
     rank bound into the output.
 
     Scale shape: both input lists are top-k results (≤ k_each rows
@@ -1922,7 +1928,7 @@ def rrf_fusion(docs: DataFrame, vecs: DataFrame, k: int = 10) -> DataFrame:
             ).alias("score_fp"),
         )
         .orderBy(F.col("score_fp").desc(), "id")
-        .limit(k)
+        .limit(10)
     )
     w = Window.orderBy(F.col("score_fp").desc(), "id")
     return fused.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -2178,7 +2184,7 @@ def _gated_pairs_and_norms(
     return survivors, norms
 
 
-def cosine_pairs(df: DataFrame, collapse_identical: bool = True) -> DataFrame:
+def cosine_pairs(df: DataFrame) -> DataFrame:
     """All document pairs with shingle-TF-IDF-weighted cosine ≥ tau
     (``COSINE_PAIRS_TAU``).
 
@@ -2194,20 +2200,21 @@ def cosine_pairs(df: DataFrame, collapse_identical: bool = True) -> DataFrame:
     generation before any product computes; ``cosine_pairs_overlong``
     reports them and the oracle applies the identical filter.
 
-    ``collapse_identical`` (default, round 14 — the same
+    Identical documents collapse (round 14 — the same
     identical-signature collapse that fixed the r12 Hamming
     scale-killer): documents with byte-identical lowercased text
     form a group represented by the min doc_id; the inverted-index
     join runs over REPRESENTATIVE postings only, with per-term df
     re-weighted by group size so the weights are exactly the direct
-    form's. Exact-duplicate cliques are precisely what all-pairs
-    dedup corpora are full of, and they multiply every shared
-    shingle's posting list — the r14 sweep measured 116 s at 20×
-    direct vs the collapse's rep-level join; output is expanded
-    arithmetically (within-group pairs at cos = 1 with dot = ‖v‖²,
-    cross-group member pairs inherit the rep pair's dot) and is
-    BIT-IDENTICAL to the direct form (pytest + the unchanged direct
-    DuckDB oracle certify it).
+    all-documents form's. Exact-duplicate cliques are precisely what
+    all-pairs dedup corpora are full of, and they multiply every
+    shared shingle's posting list — the r14 sweep measured 116 s at
+    20× for the direct join vs the collapse's rep-level join; output
+    is expanded arithmetically (within-group pairs at cos = 1 with
+    dot = ‖v‖², cross-group member pairs inherit the rep pair's dot)
+    and is BIT-IDENTICAL to the direct form, which is what
+    ``cosine_pairs_oracle`` computes (the driver row and pytest
+    certify it against that DuckDB twin).
 
     Plan: tokenize → per-row trigram shingles (array transform, no
     shuffle) → (doc,shingle) tf on reps → shingle df (group-size
@@ -2224,26 +2231,23 @@ def cosine_pairs(df: DataFrame, collapse_identical: bool = True) -> DataFrame:
     p, q = COSINE_PAIRS_TAU
     release()
     docs = df.select("doc_id", F.col("text").alias("_text"))
-    if collapse_identical:
-        grouped = docs.withColumn("g", F.md5(F.lower(F.col("_text"))))
-        members = _CACHED.keep(grouped.select("doc_id", "g").persist())
-        reps = _CACHED.keep(
-            members.groupBy("g")
-            .agg(
-                F.min("doc_id").alias("rep"),
-                F.count(F.lit(1)).cast("long").alias("n_members"),
-            )
-            .persist()
+    grouped = docs.withColumn("g", F.md5(F.lower(F.col("_text"))))
+    members = _CACHED.keep(grouped.select("doc_id", "g").persist())
+    reps = _CACHED.keep(
+        members.groupBy("g")
+        .agg(
+            F.min("doc_id").alias("rep"),
+            F.count(F.lit(1)).cast("long").alias("n_members"),
         )
-        base = (
-            grouped.join(reps, "g")
-            .where(F.col("doc_id") == F.col("rep"))
-            .select("doc_id", "_text", "n_members")
-        )
-    else:
-        base = docs.withColumn("n_members", F.lit(1).cast("long"))
+        .persist()
+    )
+    base = (
+        grouped.join(reps, "g")
+        .where(F.col("doc_id") == F.col("rep"))
+        .select("doc_id", "_text", "n_members")
+    )
 
-    tf = _CACHED.keep(_shingle_tf(base, "_text", "doc_id").persist())
+    tf = _CACHED.keep(_shingle_tf(base, "_text").persist())
     # df counts every MEMBER document containing the shingle (exact
     # copies contain exactly their rep's shingles), so weights match
     # the direct form bit-for-bit
@@ -2257,8 +2261,6 @@ def cosine_pairs(df: DataFrame, collapse_identical: bool = True) -> DataFrame:
     # shared spine (_gated_pairs_and_norms) — identical for the
     # epoch-refresh path and mirrored in the DuckDB oracle
     survivors, norms = _gated_pairs_and_norms(w_all, COSINE_PAIRS_TAU)
-    if not collapse_identical:
-        return survivors.select("doc_a", "doc_b", "dot")
 
     # arithmetic expansion back to member pairs (bit-identical to the
     # direct form):
@@ -2382,7 +2384,7 @@ def cosine_pairs_overlong(df: DataFrame) -> DataFrame:
     rep-level exclusion inside cosine_pairs and the member-level
     report here name the same documents."""
     base = df.select("doc_id", F.col("text").alias("_text"))
-    tf = _shingle_tf(base, "_text", "doc_id")
+    tf = _shingle_tf(base, "_text")
     dfx = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     w = _rarity_weights(tf, dfx, COSINE_PAIRS_DF_CAP)
     return _norms_dec(w).where(F.col("n2dec") > F.lit(_max_n2(COSINE_PAIRS_TAU)))
@@ -2441,7 +2443,7 @@ def cosine_pairs_scaling_stats(df: DataFrame) -> dict:
         .where(F.col("doc_id") == F.col("rep"))
         .select("doc_id", "_text", "n_members")
     )
-    tf = _shingle_tf(base, "_text", "doc_id").persist()
+    tf = _shingle_tf(base, "_text").persist()
     dfx = (
         tf.join(base.select("doc_id", "n_members"), "doc_id")
         .groupBy("term")
@@ -2476,15 +2478,12 @@ def cosine_pairs_scaling_stats(df: DataFrame) -> dict:
     return stats
 
 
-def _shingle_tf(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def _shingle_tf(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, term, tf) postings over word-trigram shingles — the
     shared tokenization of cosine_pairs and tf_cosine_pairs."""
     w_sh = COSINE_SHINGLE_W
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.lower(F.col(text_col)), " ").alias("ts"),
+        "doc_id", F.split(F.lower(F.col(text_col)), " ").alias("ts")
     )
     shingles = toks.select(
         "doc_id",

@@ -77,16 +77,17 @@ def _duck_rho(w: str, width: int = HLL_W) -> str:
     )
 
 
-def hll_distinct(
-    df: DataFrame, col: str = "user_id", exact: bool = True
-) -> DataFrame:
-    """HyperLogLog distinct-count estimate of ``df[col]``.
+def hll_distinct(df: DataFrame) -> DataFrame:
+    """HyperLogLog distinct-count estimate of ``df.user_id``,
+    certified against the exact count.
 
     Output (one row): ``hll_estimate`` (round 6), ``n_registers_used``,
     ``register_checksum`` (Σ (bucket+1)·M_j — any register disagreeing
-    between engines flips it), and ``n_exact`` when ``exact`` (the
-    certified reference value; at production scale drop it — the
-    whole point of the sketch is avoiding that exact shuffle).
+    between engines flips it), and ``n_exact`` (the certified
+    reference value). At production scale run the sketch alone,
+    ``hll_estimate_from_registers(hll_registers(df, col))`` for any
+    column: the whole point of the sketch is avoiding the exact
+    shuffle.
 
     Registers: bucket = top ``HLL_B`` bits of the 32-bit md5 hash,
     rho = first-1-bit position of the remaining bits. The harmonic
@@ -94,13 +95,13 @@ def hll_distinct(
     float math is the single final estimate expression. Small-range
     correction (linear counting) applies below 2.5·m as in the
     paper."""
-    out = hll_estimate_from_registers(hll_registers(df, col))
-    if exact:
-        exact_df = df.agg(
-            F.countDistinct(F.col(col)).cast("long").alias("n_exact")
-        )
-        out = out.crossJoin(F.broadcast(exact_df))
-    return out
+    col = "user_id"
+    exact_df = df.agg(
+        F.countDistinct(F.col(col)).cast("long").alias("n_exact")
+    )
+    return hll_estimate_from_registers(hll_registers(df, col)).crossJoin(
+        F.broadcast(exact_df)
+    )
 
 
 def hll_registers(df: DataFrame, col: str) -> DataFrame:
@@ -185,7 +186,9 @@ def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
     )
 
 
-def hll_distinct_oracle(table: str = "events", col: str = "user_id") -> str:
+def hll_distinct_oracle() -> str:
+    col = "user_id"
+    table = "events"
     h32 = f"({md5_long_sql(f'CAST({col} AS VARCHAR)')} & {(1 << 32) - 1})"
     s_total = (
         f"(s_used + ({HLL_M} - n_registers_used) * "
@@ -381,12 +384,11 @@ def bloom_semijoin_oracle(
 KMV_K = 64
 
 
-def kmv_distinct(
-    df: DataFrame, col: str = "user_id", k: int = KMV_K
-) -> DataFrame:
+def kmv_distinct(df: DataFrame) -> DataFrame:
     """KMV distinct-count estimate (Bar-Yossef et al. 2002, public
-    literature): keep the k smallest distinct 32-bit hashes; the
-    k-th smallest h_k estimates density, n ≈ (k-1) · 2^32 / h_k.
+    literature): keep the k = ``KMV_K`` smallest distinct 32-bit
+    hashes; the k-th smallest h_k estimates density,
+    n ≈ (k-1) · 2^32 / h_k.
     Complements HLL: KMV supports set operations (union = merge-k,
     intersection via inclusion–exclusion on the combined sketch) and
     its estimate is a single exact-integer-backed division, so the
@@ -403,6 +405,7 @@ def kmv_distinct(
     100 TB the distinct pre-shuffle is the dominant cost, same as
     any exact-distinct — the win is that downstream set algebra
     runs on k values instead of the domain."""
+    col = "user_id"
     h = md5_long(F.col(col).cast("string")).bitwiseAND(
         F.lit((1 << 32) - 1)
     )
@@ -411,7 +414,7 @@ def kmv_distinct(
         .select(h.alias("h32"))
         .distinct()
         .orderBy("h32")
-        .limit(k)
+        .limit(KMV_K)
     )
     agg = kept.agg(
         F.count(F.lit(1)).cast("long").alias("n_used"),
@@ -419,8 +422,8 @@ def kmv_distinct(
         F.sum("h32").cast("long").alias("kmv_checksum"),
     )
     est = (
-        f"CASE WHEN n_used < {k} THEN CAST(n_used AS DOUBLE) "
-        f"ELSE ({k} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
+        f"CASE WHEN n_used < {KMV_K} THEN CAST(n_used AS DOUBLE) "
+        f"ELSE ({KMV_K} - 1) * CAST(4294967296 AS DOUBLE) / h_k END"
     )
     exact = df.agg(
         F.countDistinct(F.col(col)).cast("long").alias("n_exact")
@@ -438,7 +441,9 @@ def kmv_distinct(
     )
 
 
-def kmv_distinct_oracle(table: str = "events", col: str = "user_id") -> str:
+def kmv_distinct_oracle() -> str:
+    col = "user_id"
+    table = "events"
     h = f"({md5_long_sql(f'CAST({col} AS VARCHAR)')} & {(1 << 32) - 1})"
     est = (
         f"CASE WHEN n_used < {KMV_K} THEN CAST(n_used AS DOUBLE) "
@@ -587,9 +592,9 @@ def cms_probe_keys(sketch: DataFrame, keys: DataFrame) -> DataFrame:
     )
 
 
-def cms_heavy_hitters_oracle(
-    table: str = "events", col: str = "event_type"
-) -> str:
+def cms_heavy_hitters_oracle() -> str:
+    col = "event_type"
+    table = "events"
     incr_rows = " UNION ALL ".join(
         f"SELECT {i} AS i, {_cms_pos_duck(col, i)} AS pos "
         f"FROM {table} WHERE {col} IS NOT NULL"
@@ -620,9 +625,7 @@ def cms_heavy_hitters_oracle(
     """
 
 
-def hll_distinct_by(
-    df: DataFrame, group_col: str, col: str = "user_id"
-) -> DataFrame:
+def hll_distinct_by(df: DataFrame, group_col: str) -> DataFrame:
     """Grouped HyperLogLog: the mergeable per-group sketch state —
     the realistic production shape (approximate distinct per
     dimension value, registers mergeable across partitions/days by
@@ -636,6 +639,7 @@ def hll_distinct_by(
     per-group float whose ln branch would reintroduce cross-engine
     libm exposure for tiny groups. n_exact rides along as the
     certified reference value."""
+    col = "user_id"
     h = md5_long(F.col(col).cast("string"))
     regs = (
         df.where(F.col(col).isNotNull())
@@ -674,10 +678,10 @@ def hll_distinct_by(
     )
 
 
-def hll_distinct_by_oracle(
-    table: str = "events", group_col: str = "event_type",
-    col: str = "user_id",
-) -> str:
+def hll_distinct_by_oracle() -> str:
+    col = "user_id"
+    group_col = "event_type"
+    table = "events"
     h32 = f"({md5_long_sql(f'CAST({col} AS VARCHAR)')} & {(1 << 32) - 1})"
     return f"""
         WITH hashed AS (

@@ -121,7 +121,6 @@ def salted_join(
     fact: DataFrame,
     dim: DataFrame,
     key: str,
-    salt: int = DEFAULT_SALT,
     spread_col: str | None = None,
 ) -> DataFrame:
     """Skew-resistant equi-join: the join-side twin of
@@ -131,9 +130,10 @@ def salted_join(
     bucketed or storage-partitioned join AQE won't touch).
 
     Construction (classic, public-literature): the FACT side gains a
-    deterministic salt in [0, salt); the DIM side is replicated
-    ``salt`` ways via a posexploded literal range; the join keys on
-    (key, salt), so a hot key's rows spread over ``salt`` reducers
+    deterministic salt in [0, ``DEFAULT_SALT``); the DIM side is
+    replicated ``DEFAULT_SALT`` ways via a posexploded literal range;
+    the join keys on (key, salt), so a hot key's rows spread over
+    ``DEFAULT_SALT`` reducers
     while each reducer still holds the full dim row for that key.
     Row-for-row identical to the plain join (each fact row matches
     exactly the one dim replica carrying its salt).
@@ -159,8 +159,8 @@ def salted_join(
         if spread_col
         else F.xxhash64(*[F.col(c) for c in fact.columns])
     )
-    f = fact.withColumn("_salt", F.pmod(spread, F.lit(salt)))
+    f = fact.withColumn("_salt", F.pmod(spread, F.lit(DEFAULT_SALT)))
     d = dim.withColumn(
-        "_salt", F.explode(F.expr(f"sequence(0, {salt - 1})"))
+        "_salt", F.explode(F.expr(f"sequence(0, {DEFAULT_SALT - 1})"))
     )
     return f.join(d, [key, "_salt"]).drop("_salt")

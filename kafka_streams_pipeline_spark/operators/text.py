@@ -344,7 +344,7 @@ def word_bigrams(df: DataFrame, top_n: int = 100) -> DataFrame:
     )
 
 
-def word_bigrams_oracle(top_n: int = 100) -> str:
+def word_bigrams_oracle() -> str:
     return f"""
         SELECT bigram, count(*) AS freq
         FROM (
@@ -355,7 +355,7 @@ def word_bigrams_oracle(top_n: int = 100) -> str:
         )
         GROUP BY bigram
         ORDER BY freq DESC, bigram ASC
-        LIMIT {top_n}
+        LIMIT 100
     """
 
 
@@ -552,14 +552,14 @@ def heuristic_filter_oracle() -> str:
 PACK_CAPACITY = 256  # tokens per packed sequence
 
 
-def pack_sequences(df: DataFrame, capacity: int = PACK_CAPACITY) -> DataFrame:
+def pack_sequences(df: DataFrame) -> DataFrame:
     """North-star (sequence packing): concat-then-chunk assignment of
     documents to fixed-token-budget training sequences — the
     GPT-style packing rule. Documents are laid out in doc_id order
     within each language stream; a document starts the bin its
     cumulative token offset falls into: bin = floor((cumsum −
-    n_tokens) / capacity). Deterministic and engine-portable (no
-    greedy sequential state), and the window partitions by lang, so
+    n_tokens) / ``PACK_CAPACITY``). Deterministic and engine-portable
+    (no greedy sequential state), and the window partitions by lang, so
     at 100 TB each language stream packs in parallel — no global
     sort, no single-partition window. Returns per-bin stats."""
     from pyspark.sql.window import Window
@@ -570,7 +570,8 @@ def pack_sequences(df: DataFrame, capacity: int = PACK_CAPACITY) -> DataFrame:
         df.withColumn("n_tokens", toks)
         .withColumn("cum", F.sum("n_tokens").over(w))
         .withColumn(
-            "bin", ((F.col("cum") - F.col("n_tokens")) / capacity).cast("long")
+            "bin",
+            ((F.col("cum") - F.col("n_tokens")) / PACK_CAPACITY).cast("long"),
         )
         .groupBy("lang", "bin")
         .agg(
@@ -1080,8 +1081,8 @@ def bigram_surprisal(df: DataFrame, hash_keys: bool = False) -> DataFrame:
     scoring is three equi-joins keyed by token strings (broadcast
     when the model is bounded, shuffled otherwise — Spark picks by
     stats) and one per-doc aggregate. ``hash_keys=True`` is the
-    100 TB production path (VERDICT r7 item 2, mirroring
-    ``repeated_ngrams(hash_windows=True)``): tokens are mapped to
+    100 TB production path (VERDICT r7 item 2, mirroring the hashed
+    windows of ``repeated_window_stats``): tokens are mapped to
     64-bit ``xxhash64`` keys BEFORE the model aggregation and the
     three scoring joins, so the shuffles carry fixed 8-byte keys
     instead of raw strings. NULL history is preserved as NULL (a
@@ -1502,27 +1503,24 @@ REPEAT_TOP = 50
 
 
 def _repeated_window_agg(
-    df: DataFrame,
-    text_col: str,
-    w: int,
-    hash_windows: bool,
-    min_docs: int = 2,
+    df: DataFrame, hash_windows: bool, min_docs: int = 2
 ) -> DataFrame:
-    """Shared core of :func:`repeated_ngrams` and
-    :func:`repeated_window_stats`: explode every W-token window,
-    optionally hash it to a 64-bit key BEFORE the shuffle, and
+    """Shared core of :func:`repeated_ngrams` (text windows) and
+    :func:`repeated_window_stats` (hashed windows): explode every
+    ``REPEAT_W``-token window of ``text``, optionally hash it to a
+    64-bit key BEFORE the shuffle, and
     aggregate (n_occur, n_docs) keeping windows seen in at least
     ``min_docs`` documents (2 = cross-document repeats; 1 = the full
     window-group table, used by the sweep instrumentation)."""
     wins = (
-        df.withColumn("ws", F.split(F.col(text_col), " "))
-        .where(F.expr(f"size(ws) >= {w}"))
+        df.withColumn("ws", F.split(F.col("text"), " "))
+        .where(F.expr(f"size(ws) >= {REPEAT_W}"))
         .select(
             "doc_id",
             F.explode(
                 F.expr(
-                    f"transform(sequence(1, size(ws) - {w} + 1), "
-                    f"i -> array_join(slice(ws, i, {w}), ' '))"
+                    f"transform(sequence(1, size(ws) - {REPEAT_W} + 1), "
+                    f"i -> array_join(slice(ws, i, {REPEAT_W}), ' '))"
                 )
             ).alias("win"),
         )
@@ -1559,9 +1557,7 @@ def repeated_window_scaling_stats(df: DataFrame) -> dict:
     - ``repeated_windows`` / ``repeated_occurrences``: the
       cross-document groups and their instance mass — the rows the
       profile's second aggregate actually processes."""
-    grouped = _repeated_window_agg(
-        df, "text", REPEAT_W, hash_windows=True, min_docs=1
-    )
+    grouped = _repeated_window_agg(df, hash_windows=True, min_docs=1)
     row = grouped.agg(
         F.count(F.lit(1)).cast("long").alias("distinct_windows"),
         F.sum("n_occur").cast("long").alias("total_windows"),
@@ -1586,25 +1582,20 @@ def repeated_window_stats(df: DataFrame) -> DataFrame:
     The stats are key-representation-independent, which is what lets
     the driver certify the hashed plan against an exact text-form
     SQL oracle (q_repeated_ngrams_hashed)."""
-    agg = _repeated_window_agg(df, "text", REPEAT_W, hash_windows=True)
+    agg = _repeated_window_agg(df, hash_windows=True)
     return agg.groupBy("n_occur", "n_docs").agg(
         F.count(F.lit(1)).cast("long").alias("n_windows")
     )
 
 
-def repeated_ngrams(
-    df: DataFrame,
-    w: int = REPEAT_W,
-    top_n: int = REPEAT_TOP,
-    hash_windows: bool = False,
-) -> DataFrame:
+def repeated_ngrams(df: DataFrame, top_n: int = REPEAT_TOP) -> DataFrame:
     """X2 substring-level dedup signal (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better",
-    public literature): fixed-W-token windows repeated across the
-    corpus. Exact-duplicate DOCUMENTS are handled by dedup.*; this
-    finds repeated PASSAGES — boilerplate headers, license blocks,
-    templated sentences — that survive document-level dedup and that
-    substring-dedup pipelines cut before training.
+    public literature): fixed ``REPEAT_W``-token windows repeated
+    across the corpus. Exact-duplicate DOCUMENTS are handled by
+    dedup.*; this finds repeated PASSAGES — boilerplate headers,
+    license blocks, templated sentences — that survive document-level
+    dedup and that substring-dedup pipelines cut before training.
 
     Output: top `top_n` windows by (total occurrences, text) with
     occurrence count, distinct-document count, and rank bound into
@@ -1616,16 +1607,15 @@ def repeated_ngrams(
     task keeps a top_n heap, the driver merges heaps — nothing ever
     globally sorts), THEN ``row_number`` over the ≤ top_n survivors
     (ADVICE r6: the old rank-then-filter form was a one-reducer
-    global sort of every repeated n-gram). At 100 TB the window key
-    space is what shuffles — pass ``hash_windows=True`` to shuffle
-    64-bit ``xxhash64`` keys instead of raw W-token strings (the same
-    move dedup.py makes for shingles; output column ``win`` then
-    holds the hash's decimal string and ties break on it). The
-    certified row keeps text form so the repeated passage is
-    directly inspectable; ``tests/test_extensions.py`` (the
-    hashed-twin multiset test) proves both forms aggregate the
-    identical window multiset."""
-    agg = _repeated_window_agg(df, "text", w, hash_windows)
+    global sort of every repeated n-gram). Windows stay text, so the
+    repeated passage is directly inspectable. At 100 TB the window
+    key space is what shuffles: the corpus-wide form is
+    :func:`repeated_window_stats`, which shuffles 64-bit ``xxhash64``
+    keys instead of raw W-token strings (the same move dedup.py makes
+    for shingles); ``tests/test_extensions.py`` (the hashed-twin
+    multiset test) proves both key forms aggregate the identical
+    window multiset."""
+    agg = _repeated_window_agg(df, hash_windows=False)
     top = agg.orderBy(F.desc("n_occur"), F.asc("win")).limit(top_n)
     from pyspark.sql.window import Window
 
@@ -2165,7 +2155,7 @@ def decontaminate(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     # the md5 runs once per exploded row in a codegen'd projection.
     # array_distinct on strings ≡ distinct on hashes (md5 is a
     # function), so matched/total semantics are unchanged.
-    sh = spark_shingles_expr("toks", DECON_N)
+    sh = spark_shingles_expr(DECON_N)
     h = _spark_hash("ng_str")
     # n-gram hashing is CPU-bound per row; a small single-file
     # parquet arrives as ONE partition, which would serialize the
@@ -2235,7 +2225,7 @@ def decontaminate_oracle(bench_pred: str) -> str:
         duck_shingles_expr,
     )
 
-    sh = duck_shingles_expr("toks", DECON_N)
+    sh = duck_shingles_expr(DECON_N)
     h = _duck_hash("ng_str")
     return f"""
         WITH corpus AS (
@@ -2454,18 +2444,14 @@ SCRUB_N = 3  # span width; production corpora use 8-15-token spans —
 SCRUB_MIN_DOCS = 3
 
 
-def boilerplate_scrub(
-    df: DataFrame,
-    n: int = SCRUB_N,
-    min_docs: int = SCRUB_MIN_DOCS,
-) -> DataFrame:
+def boilerplate_scrub(df: DataFrame) -> DataFrame:
     """X5 boilerplate-span removal (the RefinedWeb/C4 line-dedup
-    step re-expressed for newline-free corpora): any n-token span
-    appearing in ≥ ``min_docs`` DISTINCT documents is boilerplate
-    (license headers, navigation chrome, templated footers); every
-    token covered by at least one such span is REMOVED from every
-    document, and the cleaned text is re-emitted with original token
-    order preserved. Unlike whole-doc dedup this keeps the unique
+    step re-expressed for newline-free corpora): any ``SCRUB_N``-token
+    span appearing in ≥ ``SCRUB_MIN_DOCS`` DISTINCT documents is
+    boilerplate (license headers, navigation chrome, templated
+    footers); every token covered by at least one such span is
+    REMOVED from every document, and the cleaned text is re-emitted
+    with original token order preserved. Unlike whole-doc dedup this keeps the unique
     remainder of each page — the content the dedup family would
     throw away with the wrapper.
 
@@ -2495,13 +2481,13 @@ def boilerplate_scrub(
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
     toks = df.withColumn("toks", F.split(F.col("text"), " "))
-    parts = ", ".join(f"toks[i + {j}]" for j in range(n))
+    parts = ", ".join(f"toks[i + {j}]" for j in range(SCRUB_N))
     grams = (
         toks.select(
             "doc_id",
             F.explode_outer(
                 F.expr(
-                    f"transform({_safe_offsets('toks', n)}, "
+                    f"transform({_safe_offsets('toks', SCRUB_N)}, "
                     f"i -> struct(i as pos, concat_ws(' ', {parts}) as g))"
                 )
             ).alias("pg"),
@@ -2519,7 +2505,7 @@ def boilerplate_scrub(
         .distinct()
         .groupBy("ng")
         .agg(F.count(F.lit(1)).alias("dfreq"))
-        .where(F.col("dfreq") >= min_docs)
+        .where(F.col("dfreq") >= SCRUB_MIN_DOCS)
         .select("ng")
     )
     starts = (
@@ -2538,13 +2524,13 @@ def boilerplate_scrub(
                 "array_join(transform(filter(transform("
                 "sequence(0, size(toks) - 1), "
                 "i -> struct(i as p, toks[i] as t)), "
-                f"s -> NOT exists(starts, st -> st <= s.p AND s.p <= st + {n - 1})"
+                f"s -> NOT exists(starts, st -> st <= s.p AND s.p <= st + {SCRUB_N - 1})"
                 "), s -> s.t), ' ')"
             ).alias("clean_text"),
             F.expr("size(toks)").cast("long").alias("n_tokens"),
             F.expr(
                 "cast(size(filter(sequence(0, size(toks) - 1), "
-                f"p -> exists(starts, st -> st <= p AND p <= st + {n - 1})"
+                f"p -> exists(starts, st -> st <= p AND p <= st + {SCRUB_N - 1})"
                 ")) as long)"
             ).alias("n_removed"),
         )
@@ -2736,8 +2722,8 @@ def ngram_diversity_oracle() -> str:
 # --- Per-document keyword extraction (round 11) -----------------------------
 
 
-def keyword_extract(df: DataFrame, k: int = 3, doc_mod: int = 20) -> DataFrame:
-    """Per-document top-``k`` keyword terms by a tf-idf-style rarity
+def keyword_extract(df: DataFrame) -> DataFrame:
+    """Per-document top-3 keyword terms by a tf-idf-style rarity
     weight — the per-doc companion of bm25_topk's corpus-level
     scoring, used for tagging / routing / topic bucketing in curation
     pipelines (Spärck Jones IDF, public literature).
@@ -2746,9 +2732,9 @@ def keyword_extract(df: DataFrame, k: int = 3, doc_mod: int = 20) -> DataFrame:
     ``tf · 1000000 div df`` — monotone increasing in term frequency,
     decreasing in document frequency, pure BIGINT (both engines
     truncate integral division identically). Ties break (score DESC,
-    term ASC) so the selected rowset is unique. ``doc_mod`` bounds
-    the emitted docs (every ``doc_mod``-th) — the scoring itself runs
-    corpus-wide. Real corpora would also drop head terms by a df cap;
+    term ASC) so the selected rowset is unique. Only every 20th doc
+    is emitted — the scoring itself runs corpus-wide. Real corpora
+    would also drop head terms by a df cap;
     the fixture's closed ~30-word vocabulary would empty under any
     such cap, so the gate is left to callers and documented here.
 
@@ -2769,7 +2755,7 @@ def keyword_extract(df: DataFrame, k: int = 3, doc_mod: int = 20) -> DataFrame:
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(dfreq, "term")
-        .where(F.col("doc_id") % doc_mod == 0)
+        .where(F.col("doc_id") % 20 == 0)
         .select(
             "doc_id",
             "term",
@@ -2783,7 +2769,7 @@ def keyword_extract(df: DataFrame, k: int = 3, doc_mod: int = 20) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
     )
 
 

@@ -77,15 +77,15 @@ SESSION_CONFS: dict[str, str] = {
 def get_spark(
     app_name: str = "kafka-streams-pipeline-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or
-    ``*``. Configs that require a fresh JVM (driver memory) only take
-    effect when no session exists yet; in long-lived test sessions the
-    existing one is reused.
+    ``*``. ``extra_conf`` entries override ``SESSION_CONFS`` (e.g.
+    ``spark.sql.shuffle.partitions``). Configs that require a fresh
+    JVM (driver memory) only take effect when no session exists yet;
+    in long-lived test sessions the existing one is reused.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
@@ -95,11 +95,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    confs = dict(SESSION_CONFS)
-    if shuffle_partitions:
-        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    confs.update(extra_conf or {})
-    for k, v in confs.items():
+    for k, v in {**SESSION_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

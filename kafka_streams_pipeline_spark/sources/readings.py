@@ -162,7 +162,7 @@ def readings_from_events(events: DataFrame) -> DataFrame:
     )
 
 
-def readings_from_events_sql(events_table: str = "events") -> str:
+def readings_from_events_sql() -> str:
     """ANSI-SQL twin of :func:`readings_from_events` for the DuckDB
     oracle (same column names, same CASE mapping)."""
     cases = " ".join(
@@ -177,5 +177,5 @@ def readings_from_events_sql(events_table: str = "events") -> str:
             value                                              AS tempVal,
             'c'                                                AS tempUnit,
             ts
-        FROM {events_table}
+        FROM events
     """

@@ -117,11 +117,7 @@ def _payload(spark: SparkSession, dirs: list[str]) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(*dirs)
 
 
-def build_text_index(
-    spark: SparkSession,
-    store_dir: str,
-    text_col: str = "text",
-) -> int:
+def build_text_index(spark: SparkSession, store_dir: str) -> int:
     """Index every batch of the latest version that lacks an index;
     returns how many batches were newly indexed. Each
     batch's postings are one scan of THAT batch: lowercase
@@ -130,6 +126,7 @@ def build_text_index(
     frequency), range-partitioned and sorted by token so a term
     predicate reads only the row groups that can contain it;
     ``INDEX_PARTITIONS`` sizes the per-batch posting files."""
+    text_col = "text"
     return _build_postings(
         spark,
         store_dir,
@@ -149,7 +146,6 @@ def search_text_index(
     spark: SparkSession,
     store_dir: str,
     terms: list[str],
-    text_col: str = "text",
 ) -> tuple[DataFrame, dict]:
     """Conjunctive (AND) term search through the latest version's
     index: returns
@@ -174,7 +170,7 @@ def search_text_index(
         raise ValueError("empty term list")
     terms_lc = sorted({t.lower() for t in terms})
     idx, cand, dirs = _term_candidates(
-        spark, store_dir, _tindex_dir(store_dir, text_col),
+        spark, store_dir, _tindex_dir(store_dir, "text"),
         terms_lc, "text",
     )
     stats = {
@@ -201,11 +197,7 @@ def _pindex_dir(store_dir: str, text_col: str) -> str:
     return os.path.join(store_dir, "_indexes", f"pos_{text_col}")
 
 
-def build_positional_index(
-    spark: SparkSession,
-    store_dir: str,
-    text_col: str = "text",
-) -> int:
+def build_positional_index(spark: SparkSession, store_dir: str) -> int:
     """Positional postings (token, doc_id, pos) per batch — the phrase-
     search upgrade of the membership index: token positions from ONE
     posexplode at build time mean phrase adjacency is decided from
@@ -213,6 +205,7 @@ def build_positional_index(
     as build_text_index: immutable per-batch directories, atomic
     rename, incremental (new batches only), token-sorted for row-
     group pruning."""
+    text_col = "text"
     return _build_postings(
         spark,
         store_dir,
@@ -232,7 +225,6 @@ def search_phrase(
     spark: SparkSession,
     store_dir: str,
     phrase: list[str],
-    text_col: str = "text",
 ) -> tuple[DataFrame, dict]:
     """Exact phrase search through the latest version's positional
     index: documents
@@ -257,7 +249,7 @@ def search_phrase(
     terms_lc = [t.lower() for t in phrase]
     uniq = sorted(set(terms_lc))
     idx, cand, dirs = _term_candidates(
-        spark, store_dir, _pindex_dir(store_dir, text_col),
+        spark, store_dir, _pindex_dir(store_dir, "text"),
         uniq, "positional",
     )
     stats = {

@@ -77,7 +77,6 @@ def start_file_stream_pipeline(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     processing_time: str = "10 seconds",
-    state_partitions: int | None = None,
     rocksdb_state: bool = False,
 ) -> StreamingQuery:
     """File-source replay of the ingest topology (json files of
@@ -93,21 +92,21 @@ def start_file_stream_pipeline(
     (``spark.sql.sources.parallelPartitionDiscovery.threshold``; see
     the session module's design notes).
 
-    ``state_partitions``: number of shuffle/state-store partitions
-    for the stateful aggregate; default 1. Every micro-batch commits
-    every state-store instance, data or not, and each commit is a
-    fixed cost whatever the rows: with RocksDB changelog
-    checkpointing, about 12 ms for one instance against 120-130 ms
-    for four (4 vCPU; replaying ``ingest_mixed``'s steady batches of
-    ~900 readings, a batch took 253 ms at one partition and 287 ms at
-    four). More partitions pay off only once a batch has enough rows
-    to keep the cores busy. In availableNow replays of the sf0.1
-    readings (three batches; shifted copies for the larger sizes;
-    4 vCPU), one partition took 1.24 s against 1.33 s at 33k rows
-    per batch, was even at 67k, and lost from 100k (1.60 s against
-    1.38 s; 3.39 s against 2.36 s at 333k). So the break-even is
-    about 60k rows per micro-batch: pass ``defaultParallelism`` for
-    streams whose batches are larger (backfills, long triggers). The
+    The stateful aggregate runs ONE shuffle/state-store partition.
+    Every micro-batch commits every state-store instance, data or
+    not, and each commit is a fixed cost whatever the rows: with
+    RocksDB changelog checkpointing, about 12 ms for one instance
+    against 120-130 ms for four (4 vCPU; replaying ``ingest_mixed``'s
+    steady batches of ~900 readings, a batch took 253 ms at one
+    partition and 287 ms at four). More partitions pay off only once
+    a batch has enough rows to keep the cores busy. In availableNow
+    replays of the sf0.1 readings (three batches; shifted copies for
+    the larger sizes; 4 vCPU), one partition took 1.24 s against
+    1.33 s at 33k rows per batch, was even at 67k, and lost from 100k
+    (1.60 s against 1.38 s; 3.39 s against 2.36 s at 333k). So the
+    break-even is about 60k rows per micro-batch, far above the
+    ingest batches this pipeline serves; a stream whose batches are
+    larger (backfills, long triggers) would need its own count. The
     count also sets the width of the sink's one shuffle (the
     ``ws_date`` repartition of the append), which runs on the stream's
     session; the sink appends each batch's rows as new versions of
@@ -124,9 +123,9 @@ def start_file_stream_pipeline(
     checkpointing, and ``False`` means RocksDB without changelog, not
     the HDFS-backed provider; on a session that selects no provider,
     ``False`` leaves Spark's default HDFS-backed store. Pinned at first
-    start via the checkpoint. Both knobs are applied through the
-    streaming query's cloned session conf, so they never leak into the
-    caller's session."""
+    start via the checkpoint. The partition count and the provider are
+    applied through the streaming query's cloned session conf, so they
+    never leak into the caller's session."""
     reader = spark.readStream.schema(READING_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -152,7 +151,7 @@ def start_file_stream_pipeline(
     # confs below into the query; restoring afterwards keeps the
     # caller's session untouched.
     overrides: dict[str, str | None] = {
-        "spark.sql.shuffle.partitions": str(state_partitions or 1)
+        "spark.sql.shuffle.partitions": "1"
     }
     if rocksdb_state:
         overrides["spark.sql.streaming.stateStore.providerClass"] = (
@@ -177,21 +176,21 @@ def start_file_stream_pipeline(
                 spark.conf.set(k, prev)
 
 
-def streaming_dedup(
-    readings: DataFrame,
-    keys: tuple[str, ...] = ("sensorId", "timestamp"),
-    grace: str = DEFAULT_GRACE,
-) -> DataFrame:
-    """Streaming exact dedup: keep the first arrival per key, with
-    dedup state bounded by the watermark (keys older than ``grace``
-    are forgotten — the price of bounded state at 100 TB/day; exact
-    dedup of an unbounded stream needs unbounded memory). Emits each
-    surviving row exactly once in append mode."""
-    return readings.withWatermark("ts", grace).dropDuplicates([*keys, "ts"])
+def streaming_dedup(readings: DataFrame) -> DataFrame:
+    """Streaming exact dedup: keep the first arrival per (sensorId,
+    timestamp, ts), with dedup state bounded by the watermark (keys
+    older than ``DEFAULT_GRACE`` are forgotten — the price of bounded
+    state at 100 TB/day; exact dedup of an unbounded stream needs
+    unbounded memory). Emits each surviving row exactly once in
+    append mode."""
+    return readings.withWatermark("ts", DEFAULT_GRACE).dropDuplicates(
+        ["sensorId", "timestamp", "ts"]
+    )
 
 
-def await_replay(q: StreamingQuery, timeout_secs: int = 300) -> None:
-    """Wait for a bounded (availableNow) replay to finish, LOUDLY.
+def await_replay(q: StreamingQuery) -> None:
+    """Wait up to 300 s for a bounded (availableNow) replay to finish,
+    LOUDLY.
 
     ``StreamingQuery.awaitTermination(timeout)`` returns False on
     timeout and leaves the query RUNNING — a caller that ignores the
@@ -204,6 +203,7 @@ def await_replay(q: StreamingQuery, timeout_secs: int = 300) -> None:
     raises. Also re-raises the query's own exception if it FAILED
     rather than timed out.
     """
+    timeout_secs = 300
     if q.awaitTermination(timeout_secs):
         return
     status, progress = None, None

@@ -16,9 +16,22 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def job_ids(spark):
+    """Start counting Spark jobs: returns a callable giving the ids of
+    the jobs launched since this call, as a range. Read off the DAG
+    scheduler's job-id sequence, so jobs of streaming-query threads
+    count too."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first = scheduler.nextJobId()
+    return lambda: range(first, scheduler.nextJobId())
+
+
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="kspipeline-tests", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="kspipeline-tests",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield spark
 
 
@@ -43,17 +56,16 @@ def declared_builds(
     stores included) go under a pytest-managed directory, not the
     system temp dir."""
     assert not spark.streams.active, "a stream from another test is running"
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     schema_jobs = 0
     read_parquet = DataFrameReader.parquet
 
     def counted_parquet(self, *paths, **options):
         nonlocal schema_jobs
-        start = scheduler.nextJobId()
+        jobs = job_ids(spark)
         try:
             return read_parquet(self, *paths, **options)
         finally:
-            schema_jobs += scheduler.nextJobId() - start
+            schema_jobs += len(jobs())
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -64,10 +76,10 @@ def declared_builds(
         mp.setattr(tempfile, "tempdir", str(tmp_path_factory.mktemp("builds")))
         for name, fn in QUERIES.items():
             mp.setattr(_shared, "_VIEW_STORE", {})
-            start, schema_start = scheduler.nextJobId(), schema_jobs
+            jobs, schema_start = job_ids(spark), schema_jobs
             df = fn(spark, sf_dir)
-            jobs = scheduler.nextJobId() - start - (schema_jobs - schema_start)
-            builds[name] = (df._jdf.queryExecution().explainString(mode), jobs)
+            built = len(jobs()) - (schema_jobs - schema_start)
+            builds[name] = (df._jdf.queryExecution().explainString(mode), built)
     return builds
 
 

@@ -127,17 +127,53 @@ def test_no_unused_imports():
     assert not found, "unused imports:\n" + "\n".join(found)
 
 
+def _literal(node: ast.expr):
+    """``(value,)`` for a literal expression, ``None`` otherwise."""
+    try:
+        return (ast.literal_eval(node),)
+    except (ValueError, TypeError):
+        return None
+
+
+def _passes_default(arg: ast.expr, default: ast.expr, consts: dict) -> bool:
+    """Whether a call argument restates the parameter's default: the
+    same literal, the module constant the default names (bare or as
+    ``module.NAME``), or a literal equal to that constant's value."""
+    if isinstance(default, ast.Name) and (
+        getattr(arg, "id", None) == default.id
+        or getattr(arg, "attr", None) == default.id
+    ):
+        return True
+    want = _literal(consts.get(getattr(default, "id", None), default))
+    got = _literal(arg)
+    return (
+        want is not None
+        and got is not None
+        and type(got[0]) is type(want[0])
+        and got == want
+    )
+
+
 def _unset_options(repo: pathlib.Path) -> list[str]:
     """Optional parameters of package functions that no call in the
-    repo sets. Calls match a function by name (through ``import ...
-    as`` aliases); a keyword argument sets its parameter, a positional
-    one every parameter at or past its index (methods shift by
-    ``self``). Names defined in two modules, and names ever called
-    with ``*``/``**``, are skipped."""
+    repo sets to a value other than their default. Calls match a
+    function by name (through ``import ... as`` aliases); a keyword
+    argument sets its parameter, a positional one the parameter at
+    its index (methods shift by ``self``). An argument that restates
+    the default (see ``_passes_default``) sets nothing. Names defined
+    in two modules, and names ever called with ``*``/``**``, are
+    skipped."""
     pkg = repo / "kafka_streams_pipeline_spark"
     defs: dict[str, list] = {}
     for path in sorted(pkg.rglob("*.py")):
         tree = ast.parse(path.read_text())
+        consts = {
+            t.id: node.value
+            for node in tree.body
+            if isinstance(node, ast.Assign)
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
         parent = {
             child: node
             for node in ast.walk(tree)
@@ -149,14 +185,15 @@ def _unset_options(repo: pathlib.Path) -> list[str]:
                     isinstance(d, ast.Name) and d.id == "staticmethod"
                     for d in node.decorator_list
                 )
-                defs.setdefault(node.name, []).append((path, node, int(method)))
+                defs.setdefault(node.name, []).append(
+                    (path, node, int(method), consts)
+                )
     callers = [
         p
         for top in ("kafka_streams_pipeline_spark", "tests", "perfbench", "tools")
         for p in sorted((repo / top).rglob("*.py"))
     ] + [repo / "bench.py", repo / "__spark_entry__.py"]
-    keywords: dict[str, set[str]] = {}
-    max_pos: dict[str, int] = {}
+    calls: dict[str, list[ast.Call]] = {}
     starred: set[str] = set()
     for path in callers:
         tree = ast.parse(path.read_text())
@@ -178,34 +215,46 @@ def _unset_options(repo: pathlib.Path) -> list[str]:
                 k.arg is None for k in node.keywords
             ):
                 starred.add(name)
-            keywords.setdefault(name, set()).update(k.arg for k in node.keywords)
-            max_pos[name] = max(max_pos.get(name, 0), len(node.args))
+            calls.setdefault(name, []).append(node)
     found = []
     for name, sites in defs.items():
-        if name in starred or len({path for path, _, _ in sites}) > 1:
+        if name in starred or len({path for path, *_ in sites}) > 1:
             continue
-        for path, node, shift in sites:
+        for path, node, shift, consts in sites:
             a = node.args
             pos = a.posonlyargs + a.args
             first = len(pos) - len(a.defaults)
-            optional = [(i, p.arg) for i, p in enumerate(pos) if i >= first] + [
-                (None, p.arg)
+            optional = [
+                (i, p.arg, d)
+                for i, (p, d) in enumerate(zip(pos[first:], a.defaults), first)
+            ] + [
+                (None, p.arg, d)
                 for p, d in zip(a.kwonlyargs, a.kw_defaults)
                 if d is not None
             ]
-            for i, arg in optional:
-                by_position = i is not None and max_pos.get(name, 0) + shift > i
-                if arg not in keywords.get(name, ()) and not by_position:
+            for i, arg, default in optional:
+                passed = [
+                    k.value
+                    for call in calls.get(name, ())
+                    for k in call.keywords
+                    if k.arg == arg
+                ] + [
+                    call.args[i - shift]
+                    for call in calls.get(name, ())
+                    if i is not None and 0 <= i - shift < len(call.args)
+                ]
+                if all(_passes_default(v, default, consts) for v in passed):
                     where = f"{path.relative_to(repo)}:{node.lineno}"
                     found.append(f"{where} {name}({arg}=)")
     return found
 
 
 def test_every_option_is_set_by_some_call():
-    """An optional parameter that no call in the repo sets is a knob
-    with one value: it belongs in the function body (or a module
-    constant), not in the signature and its oracle twin. Calls in
-    tests, perfbench, tools, bench.py and the driver entry count as
-    setting it."""
+    """An optional parameter that no call in the repo sets to another
+    value than its default is a knob with one value: it belongs in
+    the function body (or a module constant), not in the signature
+    and its oracle twin. Calls in tests, perfbench, tools, bench.py
+    and the driver entry count as setting it; a call that passes the
+    default does not."""
     found = _unset_options(pathlib.Path(__file__).parent.parent)
     assert not found, "optional parameters no call sets:\n" + "\n".join(found)

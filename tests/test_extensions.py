@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from kafka_streams_pipeline_spark.operators import dedup, multimodal, similarity, text
 from kafka_streams_pipeline_spark.sources.tables import load_table
 
-from tests.conftest import ORACLE_SF_DIR
+from tests.conftest import ORACLE_SF_DIR, job_ids
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +55,7 @@ def test_minhash_pairs_subset_of_exact_ngram(docs):
     """LSH candidates that survive exact verification must be a subset
     of the exact all-pairs result at the same threshold; on this
     fixture (jaccard gap 0.07 → 0.9) recall is total."""
-    mh = {(r.id_a, r.id_b) for r in dedup.minhash_near_dup_pairs(docs, threshold=0.8).collect()}
+    mh = {(r.id_a, r.id_b) for r in dedup.minhash_near_dup_pairs(docs).collect()}
     ng = {(r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(docs, threshold=0.8).collect()}
     assert mh <= ng
     assert mh == ng  # full recall on the planted pairs
@@ -139,18 +139,18 @@ def test_topk_cosine_matches_numpy(emb):
         if i != 0
     }
     expected = sorted(sims, key=lambda i: (-round(sims[i], 6), i))[:10]
-    got = [r.vec_id for r in similarity.topk_cosine(emb, 0, 10).collect()]
+    got = [r.vec_id for r in similarity.topk_cosine(emb, 10).collect()]
     assert got == expected
 
 
 def test_ann_lsh_subset_of_bucket(emb):
     """ANN results all share the query's signature bucket and cosine
     values equal the exact ones for those ids."""
-    ann = similarity.topk_cosine_lsh(emb, 0, 10).collect()
+    ann = similarity.topk_cosine_lsh(emb).collect()
     assert len(ann) > 0
     exact = {
         r.vec_id: r.cos_sim
-        for r in similarity.topk_cosine(emb, 0, emb.count()).collect()
+        for r in similarity.topk_cosine(emb, emb.count()).collect()
     }
     for r in ann:
         assert r.cos_sim == pytest.approx(exact[r.vec_id], abs=1e-6)
@@ -486,13 +486,12 @@ def test_component_solvers_reject_unknown_algorithm(spark, docs):
         [(10, "Customer#000000011", 7, "AUTO")],
         "c_custkey long, c_name string, c_nationkey int, c_mktsegment string",
     )
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    first_job = scheduler.nextJobId()
+    jobs = job_ids(spark)
     with pytest.raises(ValueError, match="label"):
         dedup.dedup_components(docs, algorithm="label")
     with pytest.raises(ValueError, match="'x'"):
         dedup.entity_golden(customers, algorithm="x")
-    assert scheduler.nextJobId() == first_job
+    assert not jobs()
 
 
 def test_union_find_labels_min_root():
@@ -525,7 +524,7 @@ def test_avi_frame_sampling_pipeline(docs):
     indices, container-derived timestamps, and exact stats match the
     generation recurrence."""
     avi = multimodal.avi_from_documents(docs.limit(20))
-    rows = [r.asDict() for r in multimodal.sample_avi_frames(avi, stride=2).collect()]
+    rows = [r.asDict() for r in multimodal.sample_avi_frames(avi).collect()]
     by_doc: dict[int, list[dict]] = {}
     for r in rows:
         by_doc.setdefault(r["asset_id"], []).append(r)
@@ -599,7 +598,7 @@ def test_pack_sequences_bins_respect_offsets(docs):
     """Each lang's bins tile the cumulative token stream: bin token
     totals sum to the stream total, first bins are (near-)full, and
     bin ids are the prefix-sum offsets divided by capacity."""
-    out = text.pack_sequences(docs, capacity=256).collect()
+    out = text.pack_sequences(docs).collect()
     toks = {
         r.lang: r.total
         for r in docs.selectExpr("lang", "size(split(text, ' ')) AS n")
@@ -661,7 +660,7 @@ def test_ivf_train_partitions_corpus_and_improves_objective(emb):
     the seed assignment's (Lloyd monotonicity)."""
     import numpy as np
 
-    out = similarity.ivf_train(emb, iters=2).collect()
+    out = similarity.ivf_train(emb).collect()
     assert sum(r.n_members for r in out) == emb.count()
     assert all(0 <= r.cell < similarity.N_CLUSTERS for r in out)
 
@@ -1008,12 +1007,12 @@ def test_hll_estimate_accuracy(spark, sf_dir):
     from kafka_streams_pipeline_spark.operators import sketches
 
     ev = load_table(spark, sf_dir, "events")
-    row = sketches.hll_distinct(ev, "user_id").collect()[0]
+    row = sketches.hll_distinct(ev).collect()[0]
     n, est = row["n_exact"], row["hll_estimate"]
     assert abs(est - n) / n < 0.2, (est, n)
 
     tiny = spark.range(0, 12).select(F.col("id").alias("user_id"))
-    trow = sketches.hll_distinct(tiny, "user_id").collect()[0]
+    trow = sketches.hll_distinct(tiny).collect()[0]
     # 12 distinct over 256 registers → linear counting, near-exact
     assert trow["n_exact"] == 12
     assert abs(trow["hll_estimate"] - 12) <= 1.0
@@ -1040,7 +1039,7 @@ def test_hll_empty_input_estimates_zero(spark):
     from kafka_streams_pipeline_spark.operators import sketches
 
     empty = spark.range(0, 0).select(F.col("id").alias("user_id"))
-    row = sketches.hll_distinct(empty, "user_id").collect()[0]
+    row = sketches.hll_distinct(empty).collect()[0]
     assert row["hll_estimate"] == 0.0
     assert row["n_registers_used"] == 0
     assert row["n_exact"] == 0
@@ -1058,8 +1057,8 @@ def test_hll_nulls_match_count_distinct_semantics(spark):
         .alias("user_id")
     )
     clean = base.where(F.col("user_id").isNotNull())
-    r_mixed = sketches.hll_distinct(base, "user_id").collect()[0]
-    r_clean = sketches.hll_distinct(clean, "user_id").collect()[0]
+    r_mixed = sketches.hll_distinct(base).collect()[0]
+    r_clean = sketches.hll_distinct(clean).collect()[0]
     assert r_mixed["hll_estimate"] == r_clean["hll_estimate"]
     assert r_mixed["n_registers_used"] == r_clean["n_registers_used"]
     assert r_mixed["register_checksum"] == r_clean["register_checksum"]
@@ -1098,7 +1097,7 @@ def test_lsh_and_ivf_release_their_caches(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     similarity.nearest_pairs_lsh(emb, top_n=20).collect()
     similarity.ivf_train(emb).collect()
-    dedup.minhash_near_dup_pairs(docs, threshold=0.8).collect()
+    dedup.minhash_near_dup_pairs(docs).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -1108,7 +1107,7 @@ def test_kmv_small_domain_is_exact(spark):
     from kafka_streams_pipeline_spark.operators import sketches
 
     tiny = spark.range(0, 12).select(F.col("id").alias("user_id"))
-    row = sketches.kmv_distinct(tiny, "user_id", k=64).collect()[0]
+    row = sketches.kmv_distinct(tiny).collect()[0]
     assert row["n_used"] == 12
     assert row["kmv_estimate"] == 12.0
     assert row["n_exact"] == 12
@@ -1208,7 +1207,7 @@ def test_knn_join_matches_single_query_topk(emb):
     }
     want = {
         (r["vec_id"], r["cos_sim"])
-        for r in similarity.topk_cosine(emb, query_vec_id=0, k=5).collect()
+        for r in similarity.topk_cosine(emb, k=5).collect()
     }
     assert got == want
 
@@ -1260,7 +1259,7 @@ def test_repeated_ngrams_finds_cross_doc_passage(spark):
     )
     rows = {
         r["win"]: r.asDict()
-        for r in repeated_ngrams(df, w=5, top_n=10).collect()
+        for r in repeated_ngrams(df, top_n=10).collect()
     }
     hit = "rights reserved by the author"
     assert hit in rows
@@ -1270,23 +1269,19 @@ def test_repeated_ngrams_finds_cross_doc_passage(spark):
 
 
 def test_repeated_ngrams_hashed_twin_same_window_multiset(spark):
-    """hash_windows=True (the production path: 8-byte xxhash64 keys
-    shuffle instead of raw W-token strings) must aggregate the IDENTICAL
-    window multiset as the certified text form — same windows, same
+    """The hashed window aggregate (the production path of
+    repeated_window_stats: 8-byte xxhash64 keys shuffle instead of raw
+    W-token strings) must aggregate the IDENTICAL window multiset as
+    the certified text form repeated_ngrams ranks — same windows, same
     n_occur, same n_docs — at real-fixture scale (VERDICT r6 item 5)."""
     docs01 = spark.read.parquet(ORACLE_SF_DIR + "/documents.parquet")
-    # top_n above the total repeated-window count so both forms return
-    # the FULL n_docs>=2 aggregate, not a tie-break-dependent prefix
-    big = 10**6
     text_form = {
         r["win"]: (r["n_occur"], r["n_docs"])
-        for r in text.repeated_ngrams(docs01, top_n=big).collect()
+        for r in text._repeated_window_agg(docs01, False).collect()
     }
     hashed_form = {
         r["win"]: (r["n_occur"], r["n_docs"])
-        for r in text.repeated_ngrams(
-            docs01, top_n=big, hash_windows=True
-        ).collect()
+        for r in text._repeated_window_agg(docs01, True).collect()
     }
     assert len(text_form) == len(hashed_form) > 0
     # re-key the text form by the same hash the production path uses
@@ -1487,7 +1482,7 @@ def test_gif_frame_sampling_pipeline(docs):
     indices, GCE-derived timestamps, and exact stats match the
     generation recurrence."""
     out = multimodal.sample_gif_frames(
-        multimodal.gif_from_documents(docs.limit(12)), stride=2
+        multimodal.gif_from_documents(docs.limit(12))
     ).collect()
     assert out
     for r in out:
@@ -1561,7 +1556,9 @@ def test_hll_register_state_merges_and_persists(spark, tmp_path):
             sk.hll_registers(a, "k"), sk.hll_registers(b, "k")
         )
     ).collect()[0]
-    e2 = sk.hll_distinct(a.unionByName(b), "k", exact=False).collect()[0]
+    e2 = sk.hll_estimate_from_registers(
+        sk.hll_registers(a.unionByName(b), "k")
+    ).collect()[0]
     assert tuple(e1) == tuple(e2)
 
 
@@ -2020,8 +2017,8 @@ def test_shingle_exprs_total_on_short_docs(spark):
         r["doc_id"]: (r["s"], r["h"])
         for r in df.select(
             "doc_id",
-            F.expr(spark_shingles_expr("toks", 3)).alias("s"),
-            F.expr(spark_hashed_shingles_expr("toks", 3)).alias("h"),
+            F.expr(spark_shingles_expr(3)).alias("s"),
+            F.expr(spark_hashed_shingles_expr()).alias("h"),
         ).collect()
     }
     assert rows[1] == ([], [])
@@ -2030,7 +2027,7 @@ def test_shingle_exprs_total_on_short_docs(spark):
     # and the explode-after-filter composition that used to crash
     n = (
         df.where(F.expr("size(toks) >= 3"))
-        .select(F.explode(F.expr(spark_shingles_expr("toks", 3))))
+        .select(F.explode(F.expr(spark_shingles_expr(3))))
         .count()
     )
     assert n == 3
@@ -2068,7 +2065,7 @@ def test_maxsim_hand_vectors(spark):
     )
     got = [
         (r["label"], r["maxsim_micro"], r["n_query_vecs"])
-        for r in maxsim_scores(df, query_label=0, k=5).collect()
+        for r in maxsim_scores(df).collect()
     ]
     assert got == [(1, 2_000_000, 2), (2, 1_000_000, 2), (3, 0, 2)]
 
@@ -2300,7 +2297,7 @@ def test_boilerplate_scrub_removes_shared_spans_only(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
-        for r in boilerplate_scrub(df, n=3, min_docs=3).collect()
+        for r in boilerplate_scrub(df).collect()
     }
     assert got[1] == ("alpha beta gamma", 7, 4)
     assert got[2] == ("delta epsilon", 6, 4)
@@ -2479,20 +2476,20 @@ def test_phrase_search_adjacency_and_duplicates(spark, tmp_path):
         "doc_id long, text string",
     )
     commit_corpus(docs, store, "seed")
-    assert build_positional_index(spark, store, "text") == 1
-    found, stats = search_phrase(spark, store, ["alpha", "beta"], "text")
+    assert build_positional_index(spark, store) == 1
+    found, stats = search_phrase(spark, store, ["alpha", "beta"])
     assert sorted(r["doc_id"] for r in found.collect()) == [1, 5]
     assert stats["candidate_docs"] == 3  # docs 1, 2, 5 hold both words
     assert stats["matched_docs"] == 2
-    found2, _ = search_phrase(spark, store, ["echo", "echo"], "text")
+    found2, _ = search_phrase(spark, store, ["echo", "echo"])
     assert sorted(r["doc_id"] for r in found2.collect()) == [3]
     # absent term → zero candidate batches, empty result, no scan
-    found3, stats3 = search_phrase(spark, store, ["zz", "alpha"], "text")
+    found3, stats3 = search_phrase(spark, store, ["zz", "alpha"])
     assert found3.count() == 0 and stats3["batches_scanned"] == 0
     # partial index fails loudly
     commit_corpus(docs.limit(1), store, "second batch")
     with _pytest.raises(ValueError, match="positional index missing"):
-        search_phrase(spark, store, ["alpha", "beta"], "text")
+        search_phrase(spark, store, ["alpha", "beta"])
 
 
 def test_zip_shard_roundtrip_stdlib_anchor():
@@ -3216,9 +3213,13 @@ def test_cosine_pairs_collapse_is_bit_identical(spark):
     must return EXACTLY the direct form's pairs and dots on a corpus
     with duplicate cliques, singleton near-dups and empty docs —
     including the group-size-weighted df that keeps rarity weights
-    bit-identical."""
+    bit-identical. The direct form is ``cosine_pairs_oracle()``, run
+    by DuckDB over the same rows registered as ``documents``."""
+    import duckdb
+
     from kafka_streams_pipeline_spark.operators.similarity import (
         cosine_pairs,
+        cosine_pairs_oracle,
     )
 
     dup = "alpha beta gamma delta epsilon zeta"
@@ -3229,12 +3230,14 @@ def test_cosine_pairs_collapse_is_bit_identical(spark):
     rows += [(6, "x y")]                           # sub-shingle: no postings
     rows += [(7, "x y")]                           # identical empty-vector twin
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     direct = sorted(
-        map(tuple, cosine_pairs(docs, collapse_identical=False).collect())
+        (int(a), int(b), int(dot))
+        for a, b, dot in con.execute(cosine_pairs_oracle()).fetchall()
     )
-    collapsed = sorted(
-        map(tuple, cosine_pairs(docs, collapse_identical=True).collect())
-    )
+    collapsed = sorted(map(tuple, cosine_pairs(docs).collect()))
     assert direct == collapsed
     got_pairs = [(a, b) for a, b, _ in collapsed]
     # the clique expands to all three pairs; (6,7) must NOT appear

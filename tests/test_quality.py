@@ -60,6 +60,42 @@ def test_table_profile_approx_mode(spark, sf_dir):
         assert est == pytest.approx(exact[name], rel=0.05)
 
 
+def test_certified_profile_gates_the_approx_branch(spark, sf_dir):
+    """q_table_profile_approx's gate reads the distinct counts of
+    table_profile(approx=True) itself, on the same orders projection.
+    The gate is |n_distinct_apx − n_distinct|·100 ≤ tol·n_distinct,
+    so for each column a tolerance just under and just over the one
+    the approx branch's error needs pins that error exactly: the bit
+    must be FALSE at the first and TRUE at the second."""
+    from kafka_streams_pipeline_spark.inventory.corpus import (
+        _orders_profile_input,
+    )
+    from kafka_streams_pipeline_spark.operators.quality import (
+        table_profile_approx_certified,
+    )
+
+    orders = _orders_profile_input(spark, sf_dir)
+    exact = {r["col_name"]: r["n_distinct"] for r in table_profile(orders).collect()}
+    approx = {
+        r["col_name"]: r["n_distinct"]
+        for r in table_profile(orders, approx=True).collect()
+    }
+    assert exact.keys() == approx.keys() and exact
+
+    def gate(tol, col):
+        (row,) = [
+            r
+            for r in table_profile_approx_certified(orders, tol).collect()
+            if r["col_name"] == col
+        ]
+        return row["hll_within_tol"]
+
+    for col, nd in exact.items():
+        err = abs(approx[col] - nd) * 100  # a multiple of 100
+        assert gate((err - 50) / nd, col) is False, col
+        assert gate((err + 50) / nd, col) is True, col
+
+
 def test_run_checks_all_kinds(spark):
     """Every check kind over a frame with known violations; both
     passed branches exercised."""

@@ -93,7 +93,7 @@ def test_salted_join_default_spread_fans_out_hot_key(spark):
         F.lit("hot").alias("k"), F.col("id").alias("v")
     )
     dim = spark.createDataFrame([("hot", "d1")], "k string, dval string")
-    out = salted_join(fact, dim, "k", salt=16)
+    out = salted_join(fact, dim, "k")
     assert out.count() == 2000
     # reconstruct the default salting: deterministic xxhash64 over
     # ALL fact columns — distinct salts actually used

@@ -147,7 +147,7 @@ def test_stream_static_dimension_join(spark, tmp_path_factory):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 300)
+    await_replay(q)
     got = {
         r["region"]: (r["n"], r["total"])
         for r in spark.sql("SELECT * FROM region_agg").collect()

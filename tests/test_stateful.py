@@ -61,7 +61,7 @@ def _run_stream(spark, src, op, ckpt):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 300)
+    await_replay(q)
     assert len(batches) >= 3  # one per file → state crossed batches
     return batches
 
@@ -256,15 +256,18 @@ def test_streaming_hll_equals_batch_hll(spark, sf_dir, reading_stream_dir, tmp_p
                 r["register_checksum"],
             )
 
-    from kafka_streams_pipeline_spark.operators.sketches import hll_distinct
+    from kafka_streams_pipeline_spark.operators.sketches import (
+        hll_estimate_from_registers,
+        hll_registers,
+    )
 
     readings = readings_from_events(load_table(spark, sf_dir, "events")).select(
         F.substring("geohash", 1, 6).alias("gh"), "sensorId"
     )
     batch_final = {}
     for gh in [r["gh"] for r in readings.select("gh").distinct().collect()]:
-        row = hll_distinct(
-            readings.where(F.col("gh") == gh), "sensorId", exact=False
+        row = hll_estimate_from_registers(
+            hll_registers(readings.where(F.col("gh") == gh), "sensorId")
         ).collect()[0]
         batch_final[gh] = (
             row["n_registers_used"],
@@ -310,7 +313,7 @@ def test_running_totals_survive_restart(spark, sf_dir, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        await_replay(q, 300)
+        await_replay(q)
 
     _write_chunks(src, [rows[:third]])
     run_once()  # first incarnation: one chunk
@@ -450,7 +453,7 @@ def test_streaming_histogram_matches_batch_sketch(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 300)
+    await_replay(q)
     import shutil
 
     shutil.rmtree(base, ignore_errors=True)
@@ -636,7 +639,7 @@ def test_funnel_state_matches_batch_across_boundaries(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 120)
+    await_replay(q)
     final = {}
     for b in batches:
         for r in b:
@@ -695,7 +698,7 @@ def test_gap_state_tiebreak_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 120)
+    await_replay(q)
     final = {r["user_id"]: r for b in batches for r in b}
     r = final[1]
     assert r["n_gaps"] == 2
@@ -748,7 +751,7 @@ def test_funnel_state_four_step_pattern(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 120)
+    await_replay(q)
     final = {r["user_id"]: (r["n_matches"], r["first_match_event_id"])
              for b in batches for r in b}
     streaming = {u: v for u, v in final.items() if v[0] > 0}

@@ -21,6 +21,7 @@ from kafka_streams_pipeline_spark.streaming.pipeline import (
     await_replay,
     start_file_stream_pipeline,
 )
+from tests.conftest import job_ids
 
 
 @pytest.fixture(scope="module")
@@ -57,7 +58,7 @@ def test_stream_matches_batch_view(spark, sf_dir, readings_rows, tmp_path_factor
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
-    await_replay(q, 300)
+    await_replay(q)
 
     got = {
         (r["gh"], r["window_start"]): (r["count"], r["sum"], r["avg"])
@@ -110,14 +111,14 @@ def test_late_beyond_watermark_dropped(spark, tmp_path_factory):
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
-    await_replay(q, 300)
+    await_replay(q)
     # batch 2: 5 more rows for hour 0 — its window end (1 h) is far
     # below the 36 h watermark → dropped
     _write_chunks(src, [[_hour_reading(0, 99.0, 100 + i) for i in range(5)]])
     q2 = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
-    await_replay(q2, 300)
+    await_replay(q2)
 
     rows = {r["window_start"].hour: r for r in read_view(spark, view).collect()}
     assert rows[0]["count"] == 10  # late rows did NOT land
@@ -144,7 +145,7 @@ def test_late_rows_judged_one_batch_behind(spark, tmp_path_factory):
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
-    await_replay(q, 300)
+    await_replay(q)
 
     rows = {r["window_start"].hour: r for r in read_view(spark, view).collect()}
     assert rows[0]["count"] == 15
@@ -188,7 +189,7 @@ def test_streaming_dedup_across_batches(spark, tmp_path_factory):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 300)
+    await_replay(q)
     rows = spark.read.parquet(out).select("sensorId").collect()
     assert sorted(r["sensorId"] for r in rows) == ["s000000", "s000001", "s000002"]
 
@@ -203,7 +204,7 @@ def test_stream_restart_resumes_from_checkpoint(
     half = len(readings_rows) // 2
     _write_chunks(src, _disordered(readings_rows[:half], n_chunks=1))
     q = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
-    await_replay(q, 300)
+    await_replay(q)
     n1 = read_view(spark, view).agg(F.sum("count")).collect()[0][0]
     assert n1 == half
 
@@ -211,7 +212,7 @@ def test_stream_restart_resumes_from_checkpoint(
     # picks up only the new file
     _write_chunks(src, _disordered(readings_rows[half:], n_chunks=1))
     q2 = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
-    await_replay(q2, 300)
+    await_replay(q2)
     n2 = read_view(spark, view).agg(F.sum("count")).collect()[0][0]
     assert n2 == len(readings_rows)
 
@@ -308,14 +309,13 @@ def test_compact_view_over_a_streamed_store(spark, sf_dir, tmp_path_factory):
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
-    await_replay(q, 300)
+    await_replay(q)
     assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 3
     write_view(build_view(readings.where(~streamed)), view, mode="append")
 
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    first_job = scheduler.nextJobId()
+    jobs = job_ids(spark)
     fragmented = read_view(spark, view)
-    assert scheduler.nextJobId() == first_job
+    assert not jobs()
     want = sorted(tuple(r) for r in build_view(readings).collect())
     assert sorted(tuple(r) for r in fragmented.drop("ws_date").collect()) == want
 
@@ -328,9 +328,9 @@ def test_compact_view_over_a_streamed_store(spark, sf_dir, tmp_path_factory):
         files = [f for f in os.listdir(os.path.join(view, p)) if f.endswith(".parquet")]
         assert len(files) == 1, (p, files)
 
-    first_job = scheduler.nextJobId()
+    jobs = job_ids(spark)
     stored = read_view(spark, view)
-    assert scheduler.nextJobId() == first_job
+    assert not jobs()
     got = sorted(tuple(r) for r in stored.drop("ws_date").collect())
     assert got == want
 
@@ -398,7 +398,7 @@ def test_crash_rerun_stays_exactly_once(spark, tmp_path):
     q = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
-    await_replay(q, 300)
+    await_replay(q)
     assert [p["numInputRows"] for p in q.recentProgress] == [len(c) for c in chunks]
     assert set(_files_per_partition(view).values()) == {3}
 
@@ -409,7 +409,7 @@ def test_crash_rerun_stays_exactly_once(spark, tmp_path):
     q2 = start_file_stream_pipeline(
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
-    await_replay(q2, 300)
+    await_replay(q2)
     assert [(p["batchId"], p["numInputRows"]) for p in q2.recentProgress] == [
         (2, len(chunks[2]))
     ]
@@ -430,20 +430,19 @@ def test_live_reads_survive_ingest(spark, tmp_path):
     fragmented store launches none."""
     src, view, ckpt = (str(tmp_path / d) for d in ("src", "view", "ckpt"))
     chunks = _versioned_chunks(4)
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     for n in range(1, len(chunks) + 1):
         before = None
         if n > 1:
-            first_job = scheduler.nextJobId()
+            jobs = job_ids(spark)
             before = read_view(spark, view)
-            assert scheduler.nextJobId() == first_job
+            assert not jobs()
         _write_chunks(src, chunks[n - 1 : n])
-        first_job = scheduler.nextJobId()
+        jobs = job_ids(spark)
         q = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
-        await_replay(q, 300)
+        await_replay(q)
         batches = q.recentProgress
         assert sum(p["numInputRows"] for p in batches) == len(chunks[n - 1])
-        assert scheduler.nextJobId() - first_job == len(batches)
+        assert len(jobs()) == len(batches)
         if before is not None:
             assert sorted(tuple(r) for r in before.collect()) == _view_of(
                 spark, chunks[: n - 1]
@@ -485,7 +484,7 @@ def test_streaming_session_window(spark, sf_dir, readings_rows, tmp_path_factory
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 300)
+    await_replay(q)
     got = {(r["sensorId"], r["start"]): r["n"] for r in batches[-1]}
 
     batch_df = (
@@ -528,7 +527,6 @@ def test_corpus_filters_run_under_streaming(spark, sf_dir, tmp_path_factory):
         .option("checkpointLocation", ck)
         .trigger(availableNow=True)
         .start(),
-        120,
     )
     got = {r.doc_id: (r.keep, r.drop_reason) for r in spark.read.parquet(out).collect()}
     want = {
@@ -547,7 +545,6 @@ def test_corpus_filters_run_under_streaming(spark, sf_dir, tmp_path_factory):
         .option("checkpointLocation", ck2)
         .trigger(availableNow=True)
         .start(),
-        120,
     )
     got2 = {r.doc_id: r.top_token_frac for r in spark.read.parquet(out2).collect()}
     want2 = {
@@ -607,7 +604,6 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path_facto
         .option("checkpointLocation", ck)
         .trigger(availableNow=True)
         .start(),
-        180,
     )
     # aggregate the streamed join results to the registered query's
     # grain; left-join semantics (purchases with zero clicks) come
@@ -659,7 +655,6 @@ def test_media_decode_runs_under_streaming(spark, sf_dir, tmp_path_factory):
         .option("checkpointLocation", ck)
         .trigger(availableNow=True)
         .start(),
-        120,
     )
     streamed = {
         r.asset_id: (r.width, r.height, r.sum_c0, r.weighted_sum)
@@ -782,7 +777,7 @@ def test_streaming_join_crosses_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 300)
+    await_replay(q)
     assert len(emitted_in) == len(matches)
     # no match can be emitted in the first micro-batch: its purchase
     # is always the first row of a later chunk
@@ -867,7 +862,7 @@ def test_store_ingest_exactly_once_across_replay(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        await_replay(q, 120)
+        await_replay(q)
         for _ in range(100):
             if all(aq.id != q.id for aq in spark.streams.active):
                 break
@@ -936,7 +931,7 @@ def test_store_upsert_sink_applies_cdc_stream(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        await_replay(q, 120)
+        await_replay(q)
         for _ in range(100):
             if all(aq.id != q.id for aq in spark.streams.active):
                 break
@@ -1048,7 +1043,7 @@ def test_store_sink_quarantines_poisoned_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 120)
+    await_replay(q)
 
     assert stats == {"committed": 2, "skipped": 0, "quarantined": 1}
     assert sorted(r["k"] for r in read_corpus(spark, store).collect()) == [
@@ -1094,7 +1089,7 @@ def test_store_sink_ledger_namespaced_by_query(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        await_replay(q, 120)
+        await_replay(q)
         return stats
 
     s1 = run_stream("first", 0, 10)
@@ -1163,19 +1158,19 @@ def test_streaming_semi_join_emits_once_from_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    await_replay(q, 300)
+    await_replay(q)
     assert [(r["p_id"], r["user_id"]) for r in emitted] == [(3, 1)]
 
 
-def _job_descriptions(spark, first_job: int) -> list[str]:
-    """Descriptions of the Spark jobs launched since job id
-    ``first_job`` (stream threads included), read from the status
-    store once the listener bus has delivered their events."""
+def _job_descriptions(spark, jobs) -> list[str]:
+    """Descriptions of the Spark jobs ``jobs()`` (a ``job_ids``
+    counter) names, read from the status store once the listener bus
+    has delivered their events."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
     store = sc.statusStore()
     out = []
-    for job_id in range(first_job, sc.dagScheduler().nextJobId()):
+    for job_id in jobs():
         desc = store.job(job_id).description()
         out.append(desc.get() if desc.isDefined() else "")
     return out
@@ -1210,50 +1205,36 @@ def test_many_file_batch_lists_on_the_driver(spark, readings_rows, tmp_path):
     src, view, ckpt = (str(tmp_path / d) for d in ("src", "view", "ckpt"))
     _write_chunks(src, _disordered(readings_rows, n_chunks=40))
     assert len(os.listdir(src)) == 40
-    first_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    counted = job_ids(spark)
     q = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
-    await_replay(q, 300)
+    await_replay(q)
     data = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert [p["numInputRows"] for p in data] == [len(readings_rows)]
-    jobs = _job_descriptions(spark, first_job)
+    jobs = _job_descriptions(spark, counted)
     assert jobs, "the replay launched no job"
     assert [d for d in jobs if d.startswith("Listing leaf files")] == []
 
 
-def _state_operator(spark, rows, base, given):
+def _state_operator(spark, rows, base):
     """Replay ``rows`` as one availableNow batch and return the state
     operator's entry of the stream's last progress."""
     src = str(base / "src")
     _write_chunks(src, _disordered(rows, n_chunks=1))
     q = start_file_stream_pipeline(
         spark, src, str(base / "view"), str(base / "ckpt"),
-        available_now=True, state_partitions=given,
+        available_now=True,
     )
-    await_replay(q, 300)
+    await_replay(q)
     return q.lastProgress["stateOperators"][0]
 
 
-def _state_partitions_used(spark, rows, base, given):
-    """The state operator's partition count after replaying ``rows``."""
-    return _state_operator(spark, rows, base, given)["numShufflePartitions"]
-
-
 def test_default_state_partitions_derivation(spark, readings_rows, tmp_path):
-    """Without ``state_partitions`` the stateful aggregate runs one
-    state partition whatever the core count, so each micro-batch
-    commits one state-store instance."""
-    op = _state_operator(spark, readings_rows[:200], tmp_path, None)
+    """The stateful aggregate runs one state partition whatever the
+    core count, so each micro-batch commits one state-store
+    instance."""
+    op = _state_operator(spark, readings_rows[:200], tmp_path)
     assert op["numShufflePartitions"] == 1
     assert op["numStateStoreInstances"] == 1
-
-
-def test_resolve_state_partitions_hint(spark, readings_rows, tmp_path):
-    """An explicit ``state_partitions`` count wins over the default."""
-    explicit = 2 * spark.sparkContext.defaultParallelism + 1  # odd, never 8
-    got = _state_partitions_used(
-        spark, readings_rows[:200], tmp_path, explicit
-    )
-    assert got == explicit
 
 
 def test_streaming_acf_short_series_rows_match_batch(spark, tmp_path):

@@ -155,7 +155,7 @@ def test_rrf_fusion_both_lists_beat_single_list(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     vecs = load_table(spark, sf_dir, "embeddings")
-    out = rrf_fusion(docs, vecs, k=10).collect()
+    out = rrf_fusion(docs, vecs).collect()
     assert len(out) == 10
     # rank is dense 1..10 and score_fp is non-increasing
     assert [r.rank for r in out] == list(range(1, 11))
@@ -192,7 +192,7 @@ def test_keyword_extract_prefers_rare_terms(spark):
     )
     out = {
         (r.doc_id, r.rank): (r.term, r.score_ppm)
-        for r in keyword_extract(docs, k=3, doc_mod=20).collect()
+        for r in keyword_extract(docs).collect()
     }
     assert out[(0, 1)] == ("rare", 2_000_000)
     assert out[(0, 2)] == ("common", 1_000_000)

@@ -27,6 +27,7 @@ from kafka_streams_pipeline_spark.sources.readings import (
     readings_from_events,
     readings_from_events_sql,
 )
+from tests.conftest import job_ids
 
 
 @pytest.fixture(scope="module")
@@ -190,12 +191,11 @@ def test_history_interval_default_to_scans_the_newest_partition(
         collected.append(df)
         return collect(df)
 
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    start = scheduler.nextJobId()
+    jobs = job_ids(spark)
     with monkeypatch.context() as mp:
         mp.setattr(DataFrame, "collect", recording_collect)
         df = history_interval(stored, "sum", ["u155"], "1week")
-    assert scheduler.nextJobId() - start == 1
+    assert len(jobs()) == 1
     (max_frame,) = collected
     scans = [
         n
@@ -264,12 +264,10 @@ def test_stored_view_queries_run_in_two_jobs(spark, view, tmp_path):
             stored, "count", dt.datetime(2024, 1, 7, 10, 30), (n, w, s, e)
         ),
     }
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     for kind, df in requests.items():
-        start = scheduler.nextJobId()
+        jobs = job_ids(spark)
         msg = to_message(df)
-        jobs = scheduler.nextJobId() - start
-        assert jobs == 1, (kind, jobs)
+        assert len(jobs()) == 1, (kind, jobs())
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, (kind, plan)
         keys = [row[0] for row in msg["data"]]  # timestamp or geohash

@@ -445,7 +445,7 @@ def big_graph_check(spark) -> dict:
     n_edges = edges.count()
     assert n_edges > SMALL_COMPONENTS_MAX_EDGES, n_edges
     t0 = time.time()
-    labels = connected_components_alternating(edges, max_iter=25)
+    labels = connected_components_alternating(edges)
     mismatches = (
         labels.where(
             F.col("comp") != F.col("node") - (F.col("node") % block)
